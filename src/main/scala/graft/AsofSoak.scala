@@ -7,15 +7,9 @@ import org.apache.spark.sql.functions._
   * left probes where ONE key holds 90% of all rows (the pathological
   * hot-instrument shape that serializes the plain per-key ASOF window
   * into a single task). Records wall time for both variants plus an
-  * exact row-by-row equality count to asof_soak_1m.json (folded into
-  * bench_summary by [[Bench]]). Run: sbt "runMain graft.AsofSoak". */
+  * exact row-by-row equality count. Run by [[Soak]] as `asof_soak_1m`. */
 object AsofSoak {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  def run(spark: SparkSession): String = {
     val nRight = 1000000L
     val nLeft = 200000L
     val horizon = 50000000L // ~578 days of seconds
@@ -32,10 +26,7 @@ object AsofSoak {
         .otherwise(col("id") % 97 + 1).as("k"),
       ((col("id") * 31415927L + 17L) % horizon).as("ts"))
 
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
+    import Soak.time
     // force the carried column: a bare count() lets Catalyst prune the
     // window away entirely (the filter only needs the origin tag), which
     // would time the scan instead of the asof
@@ -79,12 +70,6 @@ object AsofSoak {
         "rts", Seq("v"), bucketSecs = 86400L))
     }
 
-    val json =
-      f"""{"n_right":$nRight,"n_left":$nLeft,"hot_key_share":0.9,"plain_sec":$sPlain%.1f,"bucketed_sec":$sBucketed%.1f,"rows_with_match":$plainCnt,"bucketed_matches_plain":$matches,"plain_sec_10m":$sPlain10%.1f,"bucketed_sec_10m":$sBucketed10%.1f}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("asof_soak_1m.json"),
-      MachineCanary.withCanary(spark, json, "asof_soak_1m.json"))
-    println(json)
-    spark.stop()
+    f"""{"n_right":$nRight,"n_left":$nLeft,"hot_key_share":0.9,"plain_sec":$sPlain%.1f,"bucketed_sec":$sBucketed%.1f,"rows_with_match":$plainCnt,"bucketed_matches_plain":$matches,"plain_sec_10m":$sPlain10%.1f,"bucketed_sec_10m":$sBucketed10%.1f}"""
   }
 }

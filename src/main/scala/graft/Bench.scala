@@ -12,9 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // identical session to r20 and earlier rounds — the config literals
-    // moved to [[BenchSession]] (shared with QueryBench/PlanDump so the
-    // three tools can never drift apart), values unchanged
+    // the config literals live in [[BenchSession]], shared by every main
     val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("WARN")
     // The checkpoint-release WARN spam (one line per released RDD,
@@ -344,24 +342,17 @@ object Bench {
       .map { case (k, v) => jm.writeValueAsString(k) + ":" + jm.writeValueAsString(v) }
       .mkString("{", ",", "}")
     val errPart = s""","error_count":${errors.size},"errors":$errJson"""
-    // fold in the 10M serving-tier soak evidence ([[Soak10M]] writes
-    // soak_10m.json as a separate one-off run — a 10M pass per bench
-    // would dwarf the bench itself)
-    def foldArtifact(key: String, file: String): String = {
-      val p = java.nio.file.Paths.get(file)
+    // fold in the scale-soak evidence ([[Soak]] writes `<name>.json` as
+    // separate one-off runs — a 10M pass per bench would dwarf the
+    // bench itself)
+    def foldArtifact(name: String): String = {
+      val p = java.nio.file.Paths.get(s"$name.json")
       if (java.nio.file.Files.exists(p))
-        s""","$key":${new String(
+        s""","$name":${new String(
           java.nio.file.Files.readAllBytes(p), "UTF-8").trim}"""
       else ""
     }
-    val soakPart = foldArtifact("soak_10m", "soak_10m.json") +
-      foldArtifact("dedup_soak_1m", "dedup_soak_1m.json") +
-      foldArtifact("graph_soak_1m", "graph_soak_1m.json") +
-      foldArtifact("asof_soak_1m", "asof_soak_1m.json") +
-      foldArtifact("editdist_soak_1m", "editdist_soak_1m.json") +
-      foldArtifact("jw_soak_1m", "jw_soak_1m.json") +
-      foldArtifact("curve_soak_1m", "curve_soak_1m.json") +
-      foldArtifact("fuzzy_soak_10m", "fuzzy_soak_10m.json")
+    val soakPart = Soak.names.map(foldArtifact).mkString
     // canary history: one line per run (committed — the cross-round
     // record that tells "this box is slow" apart from "this build is
     // slow"); appended HERE so error_count includes the phases above

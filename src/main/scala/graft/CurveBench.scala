@@ -32,9 +32,8 @@ import graft.coder.PQ.PQConfig
   * tipped it past the budget and failed the round's bench. The in-bench
   * default is now 250k (each sub-phase ≤ a small fraction of its
   * budget even on a slow machine); the 1M curves are a standalone soak
-  * artifact — `GRAFT_CURVE_VECTORS=1000000 GRAFT_CURVE_SOAK_OUT=
-  * curve_soak_1m.json runMain graft.CurveBench` — folded into
-  * bench_summary.json exactly like [[JwSoak]]'s.
+  * artifact — `GRAFT_CURVE_VECTORS=1000000 runMain graft.Soak
+  * curve_soak_1m` — folded into bench_summary.json like every soak's.
   */
 object CurveBench {
   val NumVectors: Long = sys.env.getOrElse("GRAFT_CURVE_VECTORS", "250000").toLong
@@ -76,47 +75,25 @@ object CurveBench {
     }
   }
 
-  /** Standalone runner for iterating on the curves without the full
-    * Bench: `GRAFT_CURVE_VECTORS=100000 sbt "runMain graft.CurveBench"`.
-    * With `GRAFT_CURVE_SOAK_OUT=<file>` the run also writes the curve
-    * map as a one-line JSON artifact (the [[JwSoak]] pattern) that
-    * [[Bench]] folds into bench_summary.json. */
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.maxResultSize", "2g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** The `curve_soak_1m` body for [[Soak]] (1M vectors via
+    * `GRAFT_CURVE_VECTORS=1000000`): all phases in sequence over one
+    * engine plus the wall time, as one-line JSON. [[Bench]] instead
+    * calls each phase under its own budget. */
+  def soak(spark: SparkSession): String = {
     val t0 = System.nanoTime()
-    val out = run(spark)
+    val out = build(spark).fold(Seq.empty[(String, Double)]) { ctx =>
+      val curves = Seq("curve_vectors" -> NumVectors.toDouble) ++
+        pqCurves(ctx) ++ bitTierCurves(ctx) ++ joinCurves(ctx) ++
+        bqLowRankCurves(spark, ctx.engine) ++
+        maxsimCurves(spark, ctx.engine) ++
+        advisorCurve(ctx)
+      cleanup(ctx)
+      curves
+    }
     val wallSec = (System.nanoTime() - t0) / 1e9
-    out.foreach { case (k, v) => println(f"[curve] $k = $v%.3f") }
-    sys.env.get("GRAFT_CURVE_SOAK_OUT").foreach { path =>
-      val json = MachineCanary.withCanary(spark,
-        (out.map { case (k, v) => f""""$k":$v%.4f""" } :+
-          f""""wall_sec":$wallSec%.1f""").mkString("{", ",", "}"), path)
-      java.nio.file.Files.write(java.nio.file.Paths.get(path),
-        (json + "\n").getBytes("UTF-8"))
-      println(json)
-    }
-    spark.stop()
+    (out.map { case (k, v) => f""""$k":$v%.4f""" } :+
+      f""""wall_sec":$wallSec%.1f""").mkString("{", ",", "}")
   }
-
-  /** All phases in sequence over one engine — the standalone/test entry
-    * point. [[Bench]] instead calls each phase under its own budget. */
-  def run(spark: SparkSession): Seq[(String, Double)] =
-    build(spark) match {
-      case None => Nil
-      case Some(ctx) =>
-        val out = Seq("curve_vectors" -> NumVectors.toDouble) ++
-          pqCurves(ctx) ++ bitTierCurves(ctx) ++ joinCurves(ctx) ++
-          bqLowRankCurves(spark, ctx.engine) ++
-          maxsimCurves(spark, ctx.engine) ++
-          advisorCurve(ctx)
-        cleanup(ctx)
-        out
-    }
 
   /** Standalone/soak-only phase (NOT in the driver bench's budgeted
     * phase list — the advisor's brute ground-truth pass belongs in the
@@ -133,7 +110,7 @@ object CurveBench {
     // OTHER serving knob ([[Engine.recommendCandidates]]); the sq tier
     // typically reaches the target within a k-scale budget while bq
     // needs orders more, which is exactly why it is measured per tier.
-    // At this point in [[run]] the live artifacts are the RECOMMENDED
+    // At this point in [[soak]] the live artifacts are the RECOMMENDED
     // configs: pq = the m=128 scale config ([[pqCurves]] builds it
     // last), bq = per-cell thresholds + asymmetric scoring
     // ([[bitTierCurves]] leaves that one in place) — the advice

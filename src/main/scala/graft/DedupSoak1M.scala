@@ -25,8 +25,7 @@ import graft.ext.Dedup
   * a [[Dedup.duplicateGroups]] pass showing the cluster consolidates to
   * ONE component (star and clique give identical components).
   *
-  * Writes dedup_soak_1m.json in the cwd; Bench folds it into
-  * bench_summary.json the same way it folds soak_10m.json.
+  * Run by [[Soak]] as `dedup_soak_1m`.
   */
 object DedupSoak1M {
   val N = 1000000L
@@ -45,17 +44,8 @@ object DedupSoak1M {
     if (b % 20L == 0L) b + 1L else b
   }
 
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+  def run(spark: SparkSession): String = {
+    import Soak.time
 
     val n = N; val cluster = Cluster
     val gen = udf { (id: Long) =>
@@ -70,7 +60,7 @@ object DedupSoak1M {
       .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("text", gen(col("doc_id")))
 
-    val (pairs, tPairs) = time {
+    val (tPairs, pairs) = time {
       val p = Dedup.nearDupPairsMinhash(docs, "doc_id", "text",
         shingleSize = 3, numHashes = 32, bands = 8, threshold = 0.5).cache()
       p.count()
@@ -94,7 +84,7 @@ object DedupSoak1M {
     val nFound = expected.join(pairs, Seq("id_a", "id_b"), "left_semi").count()
     val recall = nFound.toDouble / nExpected
 
-    val (groups, tGroups) = time {
+    val (tGroups, groups) = time {
       val g = Dedup.duplicateGroups(docs.select("doc_id"), "doc_id",
         pairs, "id_a", "id_b").cache()
       g.count()
@@ -112,7 +102,7 @@ object DedupSoak1M {
     // the English heuristics.
     val bench = spark.range(5).toDF("bench_id")
       .withColumn("text", udf { (id: Long) => text(2 * n + id) }.apply(col("bench_id")))
-    val (nCurated, tCurate) = time {
+    val (tCurate, nCurated) = time {
       graft.ext.Curate.curate(docs, "doc_id", "text", bench,
         "bench_id", "text",
         graft.ext.Curate.Config(jaccardThreshold = 0.5,
@@ -127,7 +117,7 @@ object DedupSoak1M {
     // cascade-rescan blowup the id-set design exists to prevent
     val navDocs0 = docs.withColumn("text",
       concat(lit("nav home products contact\n"), col("text")))
-    val (nFull, tFull) = time {
+    val (tFull, nFull) = time {
       graft.ext.Curate.curate(navDocs0, "doc_id", "text", bench,
         "bench_id", "text",
         graft.ext.Curate.Config(jaccardThreshold = 0.5,
@@ -146,7 +136,7 @@ object DedupSoak1M {
     // anywhere in the plan.
     val navDocs = docs.withColumn("text",
       concat(lit("nav home products contact\n"), col("text")))
-    val (seg, tSeg) = time {
+    val (tSeg, seg) = time {
       val s = Dedup.stripCommonSegments(navDocs, "doc_id", "text",
         minDocs = 1000).cache()
       s.count()
@@ -164,7 +154,7 @@ object DedupSoak1M {
     val benchIds = (0 until 100).map(i => cluster + 1L + i * 9001L)
     val benchSpan = spark.createDataFrame(
         benchIds.map(i => (i, text(i)))).toDF("bench_id", "text")
-    val (spanStats, tSpanDecon) = time {
+    val (tSpanDecon, spanStats) = time {
       val s = Dedup.stripContaminatedSpans(docs, "doc_id", "text",
         benchSpan, "bench_id", "text", k = 8).cache()
       s.count()
@@ -173,8 +163,7 @@ object DedupSoak1M {
     val deconEmptied = spanStats.filter(col("n_kept") === 0L).count()
     val deconTouched = spanStats.filter(col("n_kept") =!= col("n_tokens")).count()
 
-    val json =
-      f"""{"n_docs":$n,"cluster_size":$cluster,""" +
+    f"""{"n_docs":$n,"cluster_size":$cluster,""" +
         f""""pairs_sec":$tPairs%.1f,"n_pairs":$nPairs,""" +
         f""""cluster_pairs":$nClusterPairs,"cluster_star_anchored":$starAnchored,""" +
         f""""injected_expected":$nExpected,"injected_found":$nFound,""" +
@@ -187,10 +176,5 @@ object DedupSoak1M {
         f""""span_decon_sec":$tSpanDecon%.1f,""" +
         f""""span_decon_emptied":$deconEmptied,""" +
         f""""span_decon_touched":$deconTouched}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("dedup_soak_1m.json"),
-      (MachineCanary.withCanary(spark, json, "dedup_soak_1m.json") +
-        "\n").getBytes("UTF-8"))
-    println(json)
-    spark.stop()
   }
 }

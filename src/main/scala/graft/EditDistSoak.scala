@@ -10,17 +10,10 @@ import org.apache.spark.sql.functions._
   * single-insertion copies (the insertion shifts every following
   * character, exercising the ±k probe window, not just same-offset
   * matching). The method is exact, so planted recall must be 100%.
-  * Records wall time, pair counts, and planted recall to
-  * editdist_soak_1m.json (folded into bench_summary by [[Bench]]).
-  * Run: sbt "runMain graft.EditDistSoak". */
+  * Records wall time, pair counts, and planted recall. Run by [[Soak]]
+  * as `editdist_soak_1m`. */
 object EditDistSoak {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.GraftShims.quietCheckpointLogs()
-
+  def run(spark: SparkSession): String = {
     val n = 1000000L
     // 40 hex chars, deterministic per id: two md5 halves → far apart
     // for ANY two distinct ids (an accidental ed≤2 pair needs ≥38
@@ -40,10 +33,7 @@ object EditDistSoak {
         .when(col("id") % 20L === 10L, ins)
         .otherwise(baseStr(col("id"))).as("t"))
 
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
+    import Soak.time
     val (sec, pairs) = time {
       graft.ext.Dedup.editDistancePairsBlocked(rows, "id", "t", maxDist = 2)
         .localCheckpoint(true)
@@ -86,12 +76,6 @@ object EditDistSoak {
     }
     e.remove()
 
-    val json =
-      f"""{"n_strings":$n,"str_len":40,"max_dist":2,"pairs_sec":$sec%.1f,"n_pairs":$nPairs,"planted_expected":$expected,"planted_found":$planted,"planted_recall":${planted.toDouble / expected}%.4f,"index_build_sec":$buildSec%.1f,"sync_100k_sec":$syncSec%.1f,"sync_rows":$synced,"lookup_sec":$lookupSec%.2f,"lookup_rows":$lookupRows,"join_1k_sec":$joinSec%.1f,"join_rows":$joinRows}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("editdist_soak_1m.json"),
-      MachineCanary.withCanary(spark, json, "editdist_soak_1m.json"))
-    println(json)
-    spark.stop()
+    f"""{"n_strings":$n,"str_len":40,"max_dist":2,"pairs_sec":$sec%.1f,"n_pairs":$nPairs,"planted_expected":$expected,"planted_found":$planted,"planted_recall":${planted.toDouble / expected}%.4f,"index_build_sec":$buildSec%.1f,"sync_100k_sec":$syncSec%.1f,"sync_rows":$synced,"lookup_sec":$lookupSec%.2f,"lookup_rows":$lookupRows,"join_1k_sec":$joinSec%.1f,"join_rows":$joinRows}"""
   }
 }

@@ -11,21 +11,13 @@ import org.apache.spark.sql.functions._
   * known corpus strings, so join recall has an exact expected answer
   * (the method is exact: recall must be 1.0, and any accidental extra
   * match would need ≥38 of 40 hex chars to agree — ~impossible).
-  * Records wall times + recall to fuzzy_soak_10m.json (folded into
-  * bench_summary by [[Bench]], the [[JwSoak]]/[[EditDistSoak]]
+  * Records wall times + recall (the [[JwSoak]]/[[EditDistSoak]]
   * pattern). The 1M evidence lives in editdist_soak_1m.json; this
   * pins the 10× tier.
-  * Run: SPARK_DRIVER_MEM=48g sbt "runMain graft.FuzzySoak10M". */
+  * Run: SPARK_DRIVER_MEM=48g sbt "runMain graft.Soak fuzzy_soak_10m". */
 object FuzzySoak10M {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    MachineCanary.markStart(spark)
-    org.apache.spark.sql.GraftShims.quietCheckpointLogs()
-
-    val n = args.headOption.map(_.toLong).getOrElse(10000000L)
+  def run(spark: SparkSession): String = {
+    val n = 10000000L
     // 40 hex chars, deterministic per id — any two distinct ids' strings
     // are far apart (an accidental ed≤2 pair needs ≥38 matching
     // positions of 40), so the only sub-threshold neighbors are planted
@@ -34,10 +26,7 @@ object FuzzySoak10M {
         md5((id + 1000003L).cast("string"))), 1, 40)
     val rows = spark.range(n).select(col("id"), baseStr(col("id")).as("t"))
 
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
+    import Soak.time
 
     val root = java.nio.file.Files
       .createTempDirectory("graft-fzsoak").toString
@@ -91,12 +80,6 @@ object FuzzySoak10M {
     org.apache.spark.sql.GraftShims.releaseCheckpoint(joined)
     e.remove()
 
-    val json =
-      f"""{"n_strings":$n,"str_len":40,"max_dist":2,"buckets":512,"index_build_sec":$buildSec%.1f,"sync_rows":$synced,"sync_sec":$syncSec%.1f,"lookup_sec":$lookupSec%.2f,"lookup_warm_sec":$lookupWarmSec%.2f,"lookup_rows":$lookupRows,"join_1k_sec":$joinSec%.1f,"join_1k_warm_sec":$joinWarmSec%.1f,"join_rows":$joinRows,"join_expected":1000,"join_found":$found,"join_recall":${found / 1000.0}%.4f}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("fuzzy_soak_10m.json"),
-      MachineCanary.withCanary(spark, json, "fuzzy_soak_10m.json"))
-    println(json)
-    spark.stop()
+    f"""{"n_strings":$n,"str_len":40,"max_dist":2,"buckets":512,"index_build_sec":$buildSec%.1f,"sync_rows":$synced,"sync_sec":$syncSec%.1f,"lookup_sec":$lookupSec%.2f,"lookup_warm_sec":$lookupWarmSec%.2f,"lookup_rows":$lookupRows,"join_1k_sec":$joinSec%.1f,"join_1k_warm_sec":$joinWarmSec%.1f,"join_rows":$joinRows,"join_expected":1000,"join_found":$found,"join_recall":${found / 1000.0}%.4f}"""
   }
 }

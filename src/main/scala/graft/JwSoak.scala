@@ -25,8 +25,7 @@ import org.apache.spark.sql.functions._
   * broadcast loop is feasible there: 8·10⁸ pairs) and records the
   * measured candidate volume against n²/2.
   *
-  * Writes jw_soak_1m.json (folded into bench_summary by [[Bench]]).
-  * Run: sbt "runMain graft.JwSoak [n]". */
+  * Run by [[Soak]] as `jw_soak_1m`. */
 object JwSoak {
   private val MinSim = 0.94
 
@@ -81,14 +80,8 @@ object JwSoak {
     s.substring(0, 5) + c + s.substring(6)
   }
 
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 1000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    MachineCanary.markStart(spark)
-    org.apache.spark.sql.GraftShims.quietCheckpointLogs()
+  def run(spark: SparkSession): String = {
+    val n = 1000000L
     import spark.implicits._
 
     val nameUdf = udf { (id: Long) =>
@@ -97,100 +90,90 @@ object JwSoak {
     val rows = spark.range(n).select(col("id"), nameUdf(col("id")).as("t"))
       .localCheckpoint(true) // generation runs once, not per downstream pass
 
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime(); val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
+    import Soak.time
+    // the regime measurement the verdict asked for: candidate volume
+    // vs the n²/2 bound, from the guard's own estimator
+    val (estSec, volume) = time {
+      graft.ext.Dedup.jaroWinklerCandidateVolume(rows, "id", "t", MinSim)
     }
-    try {
-      // the regime measurement the verdict asked for: candidate volume
-      // vs the n²/2 bound, from the guard's own estimator
-      val (estSec, volume) = time {
-        graft.ext.Dedup.jaroWinklerCandidateVolume(rows, "id", "t", MinSim)
-      }
-      val quadratic = n.toDouble * (n - 1).toDouble / 2.0
+    val quadratic = n.toDouble * (n - 1).toDouble / 2.0
 
-      val (blockedSec, pairs) = time {
-        graft.ext.Dedup.jaroWinklerPairsBlocked(rows, "id", "t", MinSim,
-          maxCandidates = math.max(volume * 1.2, 1e8).toLong)
-      }
-      val nPairs = pairs.count()
-      // planted pairs are (id−1, id) with id%10 == 7. Ground truth is
-      // their DIRECTLY EVALUATED jw (one linear self-join on id): a
-      // substitution past the Winkler prefix usually lands ≥ 0.95, but
-      // on a Zipfian alphabet repeated characters near the edit can
-      // force a transposition-heavy greedy matching (m+1 matches, t
-      // up to 3) that dips BELOW the threshold for ~0.3% of plants —
-      // so the honest recall denominator is the evaluated truth, and
-      // against it the sound blocking owes exactly 1.0.
-      val mut = rows.filter(col("id") % 10L === 7L && col("id") > 0L)
-        .select((col("id") - 1L).as("id_a"), col("id").as("id_b"),
-          col("t").as("__tb"))
-      val src = rows.select(col("id").as("id_a"), col("t").as("__ta"))
-      val expected = mut.join(src, Seq("id_a"))
-        .filter(graft.functions.functions
-          .jaro_winkler(col("__ta"), col("__tb")) >= MinSim)
-        .count()
-      val planted = pairs.filter(col("id_b") - col("id_a") === 1L &&
-        col("id_b") % 10L === 7L).count()
+    val (blockedSec, pairs) = time {
+      graft.ext.Dedup.jaroWinklerPairsBlocked(rows, "id", "t", MinSim,
+        maxCandidates = math.max(volume * 1.2, 1e8).toLong)
+    }
+    val nPairs = pairs.count()
+    // planted pairs are (id−1, id) with id%10 == 7. Ground truth is
+    // their DIRECTLY EVALUATED jw (one linear self-join on id): a
+    // substitution past the Winkler prefix usually lands ≥ 0.95, but
+    // on a Zipfian alphabet repeated characters near the edit can
+    // force a transposition-heavy greedy matching (m+1 matches, t
+    // up to 3) that dips BELOW the threshold for ~0.3% of plants —
+    // so the honest recall denominator is the evaluated truth, and
+    // against it the sound blocking owes exactly 1.0.
+    val mut = rows.filter(col("id") % 10L === 7L && col("id") > 0L)
+      .select((col("id") - 1L).as("id_a"), col("id").as("id_b"),
+        col("t").as("__tb"))
+    val src = rows.select(col("id").as("id_a"), col("t").as("__ta"))
+    val expected = mut.join(src, Seq("id_a"))
+      .filter(graft.functions.functions
+        .jaro_winkler(col("__ta"), col("__tb")) >= MinSim)
+      .count()
+    val planted = pairs.filter(col("id_b") - col("id_a") === 1L &&
+      col("id_b") % 10L === 7L).count()
 
-      // blocked == exact parity on a sampled slice where the exact
-      // broadcast nested loop is feasible
-      val parityN = math.min(n, 40000L)
-      val slice = rows.filter(col("id") < parityN).localCheckpoint(true)
-      val (exactSec, exact) = time {
-        graft.ext.Dedup.jaroWinklerPairsExact(slice, "id", "t", MinSim,
-            maxRows = parityN)
-          .localCheckpoint(true)
-      }
-      val (blockedSliceSec, blockedSlice) = time {
-        graft.ext.Dedup.jaroWinklerPairsBlocked(slice, "id", "t", MinSim,
-          maxCandidates = math.max(volume * 1.2, 1e8).toLong)
-      }
-      val exactSet = exact.select("id_a", "id_b").as[(Long, Long)]
-        .collect().toSet
-      val blockedSet = blockedSlice.select("id_a", "id_b").as[(Long, Long)]
-        .collect().toSet
-      val parityEqual = exactSet == blockedSet
-
-      // ——— The LOSING direction of the crossover rule, measured in the
-      // same artifact: realistic mixed-case Latin names with digits and
-      // punctuation offer only E ~ 10² effective tail symbols, so with
-      // prefix length p ≈ 3 the candidate floor ≈ (p·n)²/E lands at or
-      // above n²/2 — blocking must NOT be used there and the default
-      // guard refuses. The volume RATIO is n-independent (both sides
-      // scale n²), so a 200k estimate pins the regime at any scale. ———
-      val latinUdf = udf { (id: Long) =>
-        val rnd = new java.util.Random(id * 0x9E3779B97F4A7C15L + 5L)
-        val lower = "etaoinshrdlcumwfgypbvkjxqz" // frequency-ordered
-        def zc(): Char = { // Zipf-ish pick over the 26 letters
-          val u = rnd.nextDouble()
-          lower.charAt(math.min(25, (u * u * 26).toInt))
-        }
-        val first = (0 until 5 + rnd.nextInt(3)).map(_ => zc()).mkString
-        val last = (0 until 6 + rnd.nextInt(3)).map(_ => zc()).mkString
-        s"${first.capitalize} ${last.capitalize}-${1900 + rnd.nextInt(100)}"
-      }
-      val nLatin = math.min(n, 200000L)
-      val latinRows = spark.range(nLatin)
-        .select(col("id"), latinUdf(col("id")).as("t"))
+    // blocked == exact parity on a sampled slice where the exact
+    // broadcast nested loop is feasible
+    val parityN = math.min(n, 40000L)
+    val slice = rows.filter(col("id") < parityN).localCheckpoint(true)
+    val (exactSec, exact) = time {
+      graft.ext.Dedup.jaroWinklerPairsExact(slice, "id", "t", MinSim,
+          maxRows = parityN)
         .localCheckpoint(true)
-      val (latinEstSec, latinVolume) = time {
-        graft.ext.Dedup.jaroWinklerCandidateVolume(latinRows, "id", "t",
-          MinSim)
-      }
-      val latinQuad = nLatin.toDouble * (nLatin - 1).toDouble / 2.0
-      val latinRatio = latinVolume / latinQuad
+    }
+    val (blockedSliceSec, blockedSlice) = time {
+      graft.ext.Dedup.jaroWinklerPairsBlocked(slice, "id", "t", MinSim,
+        maxCandidates = math.max(volume * 1.2, 1e8).toLong)
+    }
+    val exactSet = exact.select("id_a", "id_b").as[(Long, Long)]
+      .collect().toSet
+    val blockedSet = blockedSlice.select("id_a", "id_b").as[(Long, Long)]
+      .collect().toSet
+    val parityEqual = exactSet == blockedSet
 
-      // a tiny-n run can legitimately plant zero evaluable pairs;
-      // 0/0 would format NaN into the JSON and break the Bench soak fold
-      val plantedRecall = if (expected == 0L) 1.0
-        else planted.toDouble / expected
-      val json =
-        f"""{"n":$n,"min_sim":$MinSim,"alphabet":4210,"name_len":"8-10","estimate_sec":$estSec%.1f,"candidate_volume":$volume%.4g,"n2_over_2":$quadratic%.4g,"volume_ratio":${volume / quadratic}%.6f,"blocked_sec":$blockedSec%.1f,"n_pairs":$nPairs,"planted_expected":$expected,"planted_found":$planted,"planted_recall":$plantedRecall%.4f,"parity_rows":$parityN,"parity_equal":$parityEqual,"exact_slice_sec":$exactSec%.1f,"blocked_slice_sec":$blockedSliceSec%.1f,"latin_n":$nLatin,"latin_estimate_sec":$latinEstSec%.1f,"latin_candidate_volume":$latinVolume%.4g,"latin_volume_ratio":$latinRatio%.4f}"""
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("jw_soak_1m.json"),
-        MachineCanary.withCanary(spark, json, "jw_soak_1m.json"))
-      println(json)
-    } finally spark.stop()
+    // ——— The LOSING direction of the crossover rule, measured in the
+    // same artifact: realistic mixed-case Latin names with digits and
+    // punctuation offer only E ~ 10² effective tail symbols, so with
+    // prefix length p ≈ 3 the candidate floor ≈ (p·n)²/E lands at or
+    // above n²/2 — blocking must NOT be used there and the default
+    // guard refuses. The volume RATIO is n-independent (both sides
+    // scale n²), so a 200k estimate pins the regime at any scale. ———
+    val latinUdf = udf { (id: Long) =>
+      val rnd = new java.util.Random(id * 0x9E3779B97F4A7C15L + 5L)
+      val lower = "etaoinshrdlcumwfgypbvkjxqz" // frequency-ordered
+      def zc(): Char = { // Zipf-ish pick over the 26 letters
+        val u = rnd.nextDouble()
+        lower.charAt(math.min(25, (u * u * 26).toInt))
+      }
+      val first = (0 until 5 + rnd.nextInt(3)).map(_ => zc()).mkString
+      val last = (0 until 6 + rnd.nextInt(3)).map(_ => zc()).mkString
+      s"${first.capitalize} ${last.capitalize}-${1900 + rnd.nextInt(100)}"
+    }
+    val nLatin = math.min(n, 200000L)
+    val latinRows = spark.range(nLatin)
+      .select(col("id"), latinUdf(col("id")).as("t"))
+      .localCheckpoint(true)
+    val (latinEstSec, latinVolume) = time {
+      graft.ext.Dedup.jaroWinklerCandidateVolume(latinRows, "id", "t",
+        MinSim)
+    }
+    val latinQuad = nLatin.toDouble * (nLatin - 1).toDouble / 2.0
+    val latinRatio = latinVolume / latinQuad
+
+    // a tiny-n run can legitimately plant zero evaluable pairs;
+    // 0/0 would format NaN into the JSON and break the Bench soak fold
+    val plantedRecall = if (expected == 0L) 1.0
+      else planted.toDouble / expected
+    f"""{"n":$n,"min_sim":$MinSim,"alphabet":4210,"name_len":"8-10","estimate_sec":$estSec%.1f,"candidate_volume":$volume%.4g,"n2_over_2":$quadratic%.4g,"volume_ratio":${volume / quadratic}%.6f,"blocked_sec":$blockedSec%.1f,"n_pairs":$nPairs,"planted_expected":$expected,"planted_found":$planted,"planted_recall":$plantedRecall%.4f,"parity_rows":$parityN,"parity_equal":$parityEqual,"exact_slice_sec":$exactSec%.1f,"blocked_slice_sec":$blockedSliceSec%.1f,"latin_n":$nLatin,"latin_estimate_sec":$latinEstSec%.1f,"latin_candidate_volume":$latinVolume%.4g,"latin_volume_ratio":$latinRatio%.4f}"""
   }
 }

@@ -24,9 +24,9 @@ object MachineCanary {
   def measureSec(spark: SparkSession): Double = {
     def once(): Double = {
       val t0 = System.nanoTime()
-      // fixed 32 input partitions: comparable numbers from any soak's
-      // session config (local[32] everywhere, but shuffle partitions
-      // and default parallelism vary)
+      // fixed 32 input partitions: comparable numbers from any session
+      // config (core count, shuffle partitions and default parallelism
+      // all vary)
       // double sum: a long sum of the hashes overflows under ANSI mode
       spark.range(0L, 1L << 32, 1L, 32)
         .select(sum(xxhash64(col("id")).cast("double"))).head()
@@ -35,62 +35,29 @@ object MachineCanary {
     (1 to 3).map(_ => once()).min
   }
 
-  /** `"canary_sec":…,"canary_factor":…` — splice into a soak's one-line
-    * JSON artifact (leading comma NOT included). */
-  def jsonFragment(spark: SparkSession): String = {
-    val sec = measureSec(spark)
-    f""""canary_sec":$sec%.3f,"canary_factor":${sec / ReferenceSec}%.3f"""
-  }
-
-  /** A soak's one-line `{…}` JSON with the canary fields spliced in —
-    * every soak artifact records the machine it ran on. When
-    * `artifactPath` names the PRIOR run's artifact (the file this run
-    * is about to overwrite), a `normalized_delta` object is spliced in
-    * too: per-key canary-normalized current/prior ratios for every
-    * shared `*_sec` field plus their median — the soak twin of the
-    * bench gate's canary-normalized comparison, so cross-round soak
-    * deltas are machine-corrected in the artifact itself instead of
-    * eyeballed from raw wall times. */
-  def withCanary(spark: SparkSession, json: String,
-      artifactPath: String = ""): String = {
-    require(json.endsWith("}"), s"not a one-line JSON object: $json")
-    val sec = measureSec(spark)
-    val factor = sec / ReferenceSec
-    val prior =
-      if (artifactPath.isEmpty) ""
-      else try java.nio.file.Files.readString(
-        java.nio.file.Paths.get(artifactPath))
-      catch { case _: Exception => "" }
-    splice(json, sec, factor, preFactor.getAndSet(-1.0), prior)
-  }
-
-  /** Pure assembly of the canary-annotated artifact line (testable
-    * without a session). One end-of-run probe cannot represent a host
-    * that oscillates WITHIN a long soak (observed 0.8↔2.4 swings
-    * inside 15 minutes on the round-20 builder), so when the soak
-    * marked its start the pre-run factor is spliced too — a pre/post
-    * pair that disagrees says "do not trust this run's
-    * normalized_delta" (the normalization assumes ONE machine speed
-    * across the run). */
+  /** Pure assembly of a soak's canary-annotated artifact line (testable
+    * without a session): the [[Soak]] frame probes the machine before
+    * the body (`pre`, a factor) and after it (`sec`/`factor`), because
+    * one end-of-run probe cannot represent a host that oscillates WITHIN
+    * a long soak (observed 0.8↔2.4 swings inside 15 minutes on the
+    * round-20 builder) — a pre/post pair that disagrees says "do not
+    * trust this run's normalized_delta" (the normalization assumes ONE
+    * machine speed across the run). When `prior` is the PRIOR run's
+    * artifact (the file this run is about to overwrite), a
+    * `normalized_delta` object is spliced in too: per-key
+    * canary-normalized current/prior ratios for every shared `*_sec`
+    * field plus their median — the soak twin of the bench gate's
+    * canary-normalized comparison, so cross-round soak deltas are
+    * machine-corrected in the artifact itself instead of eyeballed from
+    * raw wall times. */
   private[graft] def splice(json: String, sec: Double, factor: Double,
       pre: Double, prior: String): String = {
+    require(json.endsWith("}"), s"not a one-line JSON object: $json")
     val delta = if (prior.isEmpty) "" else deltaFragment(json, prior, factor)
-    val preFrag =
-      if (pre > 0.0) f""","canary_factor_pre":$pre%.3f""" else ""
     json.stripSuffix("}") +
       f""","canary_sec":$sec%.3f,"canary_factor":$factor%.3f""" +
-      preFrag + delta + "}"
+      f""","canary_factor_pre":$pre%.3f""" + delta + "}"
   }
-
-  private val preFactor = new java.util.concurrent.atomic.AtomicReference[Double](-1.0)
-
-  /** Call FIRST thing in a long soak's `main`: probes the machine
-    * before any work so [[withCanary]] can splice the pre-run factor
-    * alongside the end-of-run one. A pre/post pair that disagrees says
-    * "do not trust this run's normalized_delta" — the normalization
-    * assumes ONE machine speed across the run. */
-  def markStart(spark: SparkSession): Unit =
-    preFactor.set(measureSec(spark) / ReferenceSec)
 
   /** [[Soak10M]]'s wall-time keys predate the `*_sec` suffix
     * convention and are pinned by cross-round history in

@@ -194,19 +194,4 @@ object NearDupBench {
       "decon_rows" -> bcRows.toDouble,
       "decon_paths_equal" -> (if (equal) 1.0 else 0.0))
   }
-
-  /** Standalone entry point for measuring outside the full Bench run. */
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(run(spark).map { case (k, v) => f"$k=$v%.3f" }.mkString(" "))
-    println(gateRun(spark).map { case (k, v) => f"$k=$v%.3f" }.mkString(" "))
-    println(deconRun(spark).map { case (k, v) => f"$k=$v%.3f" }.mkString(" "))
-    spark.stop()
-  }
 }

@@ -1,32 +1,34 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Targeted per-query timer for optimization work: times a NAMED subset
   * of [[SparkEntry.queries]] under the exact Bench session config and
   * methodology (best-of-N `df.count()` + checkpoint release, knn_l2
   * warmup) so numbers are comparable with bench_summary.json without
-  * paying for the full 230-entry sweep per iteration. Not part of the
+  * paying for the full 230-entry sweep per iteration. Each query's
+  * slowest stages (wall + executor cpu) go to stderr. Not part of the
   * driver contract — the driver runs [[Bench]].
   *
   * Usage: sbt "runMain graft.QueryBench q1_agg graph_triangles"
+  * e.g. the batch-kNN-join A/B:
+  * `SPARK_GRAFT_QB_RUNS=3 sbt "runMain graft.QueryBench knn_join knn_join_ivf knn_join_sq knn_l2"`
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_QB_RUNS. */
 object QueryBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_QB_RUNS", "2").toInt
-    val spark = BenchSession.create() // ONE config for Bench/QB/PlanDump
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("WARN")
     org.apache.spark.sql.GraftShims.quietCheckpointLogs()
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    // opt-in stage profile: wall-clock per stage (submission → completion)
+    // stage profile: wall-clock per stage (submission → completion)
     // plus executor cpu sum, top-N per query — attributes a slow query to
     // its stages without the (disabled) UI
-    val profile = sys.env.contains("SPARK_GRAFT_QB_STAGES")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double, Double)]()
-    if (profile) spark.sparkContext.addSparkListener(
+    spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onStageCompleted(
             sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -50,14 +52,11 @@ object QueryBench {
         }
       }
       System.err.println(f"[qbench] $name: ${secs.map(s => f"$s%.3f").mkString(", ")}")
-      if (profile) {
-        import scala.jdk.CollectionConverters._
-        val all = stages.asScala.toSeq
-        System.err.println(f"[qbench]   stages=${all.size} " +
-          f"wallSum=${all.map(_._2).sum}%.2f cpuSum=${all.map(_._3).sum}%.2f")
-        all.sortBy(-_._2).take(8).foreach { case (n, w, c) =>
-          System.err.println(f"[qbench]   $w%6.2fs wall $c%7.2fs cpu  $n")
-        }
+      val all = stages.asScala.toSeq
+      System.err.println(f"[qbench]   stages=${all.size} " +
+        f"wallSum=${all.map(_._2).sum}%.2f cpuSum=${all.map(_._3).sum}%.2f")
+      all.sortBy(-_._2).take(8).foreach { case (n, w, c) =>
+        System.err.println(f"[qbench]   $w%6.2fs wall $c%7.2fs cpu  $n")
       }
       name -> secs.min
     }

@@ -1,56 +1,71 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
 
-/** Scale soak: runs the reference-shape workload at an arbitrary corpus
-  * size (`GRAFT_REF_VECTORS`, default 100k; tested to 1M × 256-d ≈ 1 GB
-  * raw on local[32]) and reports timings + a warm probed-search rerun.
-  * Observed scaling 100k → 1M is ~linear for ingest/train/index, and
-  * probed search stays ~2 s (partition pruning caps the scan at the
-  * probed fraction regardless of corpus size). */
+import org.apache.spark.sql.SparkSession
+
+/** The one runner for the standalone scale soaks — workloads too large
+  * to run per bench, whose one-line JSON artifacts [[Bench]] folds into
+  * bench_summary.json instead.
+  *
+  * Each soak is a body `SparkSession => String` returning its one-line
+  * JSON; the frame owns everything around it: ONE session
+  * ([[BenchSession]]), the machine canary before AND after the body
+  * ([[MachineCanary.splice]]), the normalized delta against the
+  * artifact it overwrites, and the write to `<name>.json` (cwd). The
+  * name is both the artifact's file stem and its key in
+  * bench_summary.json.
+  *
+  * Usage: sbt "runMain graft.Soak asof_soak_1m graph_soak_1m"
+  * With no names it prints the canary alone — run it a few times on a
+  * new builder box and record the midpoint as
+  * [[MachineCanary.ReferenceSec]]. */
 object Soak {
+  /** (name, body) in bench_summary.json key order. */
+  val soaks: Seq[(String, SparkSession => String)] = Seq(
+    "soak_10m" -> (spark => Soak10M.run(spark)),
+    "dedup_soak_1m" -> (spark => DedupSoak1M.run(spark)),
+    "graph_soak_1m" -> (spark => GraphSoak.run(spark)),
+    "asof_soak_1m" -> (spark => AsofSoak.run(spark)),
+    "editdist_soak_1m" -> (spark => EditDistSoak.run(spark)),
+    "jw_soak_1m" -> (spark => JwSoak.run(spark)),
+    // 1M vectors: GRAFT_CURVE_VECTORS=1000000 (the in-bench default is 250k)
+    "curve_soak_1m" -> (spark => CurveBench.soak(spark)),
+    "fuzzy_soak_10m" -> (spark => FuzzySoak10M.run(spark)))
+
+  def names: Seq[String] = soaks.map(_._1)
+
+  /** (seconds, result) of one evaluation — the soak bodies' timer. */
+  private[graft] def time[A](f: => A): (Double, A) = {
+    val t0 = System.nanoTime(); val a = f
+    ((System.nanoTime() - t0) / 1e9, a)
+  }
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val bodies = soaks.toMap
+    val unknown = args.filterNot(bodies.contains)
+    require(unknown.isEmpty, s"unknown soak(s): ${unknown.mkString(", ")} " +
+      s"(known: ${names.mkString(", ")})")
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("WARN")
-    val (t, r) = RefBench.run(spark)
-    println("[soak] n=" + RefBench.NumVectors + " " +
-      t.map { case (k, v) => f"$k=$v%.2f" }.mkString(" ") + f" recall=$r")
-    val engine = new graft.api.Engine(spark,
-      s"${System.getProperty("java.io.tmpdir")}/graft_refbench")
-    val target = engine.readTable(Seq("vectors")).filter(col("vec_id") === 0)
-      .select(col("vector").cast("array<double>"))
-      .collect()(0).getSeq[Double](0).toArray
-    val t0 = System.nanoTime()
-    engine.search("vectors", "vector", target, coding = Some("c"),
-      probes = Some(16), k = 10).collect()
-    println(f"[soak] probed warm: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    // Rerank budget scales with rows-per-cell: on isotropic within-cell
-    // residuals (this synthetic corpus) ADC ranking is noise-limited, so
-    // recall tracks candidates / cell-size, not candidates alone.
-    val candidates = sys.env.get("GRAFT_PQ_CANDIDATES").map(_.toInt)
-      .getOrElse(math.max(4000, RefBench.NumVectors / 100))
-    val t1 = System.nanoTime()
-    val pqIds = engine.searchPq("vectors", "vector", target, coding = "c", probes = 16,
-      candidates = candidates, idCol = "vec_id", k = 10, tieBreak = Seq("vec_id"))
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    println(f"[soak] ivf+pq warm: ${(System.nanoTime() - t1) / 1e9}%.2f s " +
-      f"(candidates=$candidates)")
-    val brute = engine.search("vectors", "vector", target, metric = Some("l2"),
-      k = 10, tieBreak = Seq("vec_id")).select("vec_id")
-      .collect().map(_.getLong(0)).toSet
-    println(f"[soak] ivf+pq recall@10 at candidates=$candidates: ${brute.count(pqIds.contains) / 10.0}%.2f")
-    // SQ8 ranking is near-exact per element, so its rerank budget does
-    // NOT need to scale with rows-per-cell the way PQ's does.
-    val t2 = System.nanoTime()
-    val sqIds = engine.searchSq("vectors", "vector", target, coding = "c",
-      probes = 16, candidates = 100, idCol = "vec_id", k = 10,
-      metric = Some("l2"), tieBreak = Seq("vec_id"))
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    println(f"[soak] ivf+sq8 warm: ${(System.nanoTime() - t2) / 1e9}%.2f s " +
-      f"(candidates=100) recall@10: ${brute.count(sqIds.contains) / 10.0}%.2f")
-    spark.stop()
+    org.apache.spark.sql.GraftShims.quietCheckpointLogs()
+    try {
+      if (args.isEmpty) {
+        val sec = MachineCanary.measureSec(spark)
+        println(f"[canary] measured=$sec%.3f " +
+          f"(reference=${MachineCanary.ReferenceSec}%.3f)")
+      }
+      args.foreach { name =>
+        val pre = MachineCanary.measureSec(spark) / MachineCanary.ReferenceSec
+        val json = bodies(name)(spark)
+        val sec = MachineCanary.measureSec(spark)
+        val path = Paths.get(s"$name.json")
+        val prior = if (Files.exists(path)) Files.readString(path).trim else ""
+        val line = MachineCanary.splice(json, sec,
+          sec / MachineCanary.ReferenceSec, pre, prior)
+        Files.writeString(path, line + "\n")
+        println(s"[soak] $name: $line")
+      }
+    } finally spark.stop()
   }
 }

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * `candidates = n/100` ⇒ the same candidates/cell-size ratio at every
   * n, so recall is scale-stable by construction).
   *
-  * Writes `soak_10m.json` (cwd); [[Bench]] folds that block into
+  * Run by [[Soak]] as `soak_10m`; [[Bench]] folds that block into
   * `bench_summary.json` so the artifact carries the soak evidence
   * without re-running a 10M pass per bench. Scale via
   * `GRAFT_SOAK_VECTORS` (default 10,000,000).
@@ -26,27 +26,8 @@ object Soak10M {
   val NumVectors: Long =
     sys.env.getOrElse("GRAFT_SOAK_VECTORS", "10000000").toLong
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    MachineCanary.markStart(spark)
-    val out = run(spark)
-    val json = out.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
-      .mkString("{", ",", "}")
-    java.nio.file.Files.write(java.nio.file.Paths.get("soak_10m.json"),
-      (MachineCanary.withCanary(spark, json, "soak_10m.json") +
-        "\n").getBytes("UTF-8"))
-    println("[soak10m] " + json)
-    spark.stop()
-  }
-
-  def run(spark: SparkSession): Seq[(String, Double)] = {
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+  def run(spark: SparkSession): String = {
+    import Soak.time
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_soak10m"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)
@@ -54,39 +35,39 @@ object Soak10M {
     val engine = new graft.api.Engine(spark, root)
     val n = NumVectors
 
-    val (_, tIngest) = time(engine.makeTable("vectors", RefBench.corpus(spark, n)))
+    val (tIngest, _) = time(engine.makeTable("vectors", RefBench.corpus(spark, n)))
     val cfg = graft.coder.CoderConfig(metric = "l2", codebookSize = 8,
       numCodebooks = 2, batchSize = 2560, numEpochs = 5, maxStepsPerEpoch = 5)
-    val (_, tTrain) = time(engine.makeCoder("c", "vectors", "vector", cfg))
-    val (_, tIndex) = time(engine.syncIndex("c", "vectors", "vector"))
-    val (_, tSqBuild) = time(engine.makeSqIndex("c", "vectors", "vector"))
+    val (tTrain, _) = time(engine.makeCoder("c", "vectors", "vector", cfg))
+    val (tIndex, _) = time(engine.syncIndex("c", "vectors", "vector"))
+    val (tSqBuild, _) = time(engine.makeSqIndex("c", "vectors", "vector"))
     // the RECOMMENDED scale config (m=128, 2 bits/dim — CurveBench's
     // headline pq_recall keys), not the legacy m=16: the soak's claim is
     // that the deployable tier holds its 1M recall at 10M
-    val (_, tPqBuild) = time(engine.makePqIndex("c", "vectors", "vector",
+    val (tPqBuild, _) = time(engine.makePqIndex("c", "vectors", "vector",
       graft.coder.PQ.PQConfig(numSubspaces = 128, codebookSize = 256,
         metric = "l2", sampleSize = 8192)))
 
     val target = engine.readTable(Seq("vectors")).filter(col("vec_id") === 0)
       .select(col("vector").cast("array<double>"))
       .collect()(0).getSeq[Double](0).toArray
-    val (brute, tBrute) = time {
+    val (tBrute, brute) = time {
       engine.search("vectors", "vector", target, metric = Some("l2"), k = 10,
         tieBreak = Seq("vec_id")).select("vec_id")
         .collect().map(_.getLong(0)).toSet
     }
-    val (probed, tProbed) = time {
+    val (tProbed, probed) = time {
       engine.search("vectors", "vector", target, coding = Some("c"),
         probes = Some(16), k = 10, tieBreak = Seq("vec_id"))
         .select("vec_id").collect().map(_.getLong(0)).toSet
     }
     val pqCand = math.max(4000L, n / 100L).toInt
-    val (pqIds, tPqSearch) = time {
+    val (tPqSearch, pqIds) = time {
       engine.searchPq("vectors", "vector", target, coding = "c", probes = 16,
         candidates = pqCand, idCol = "vec_id", k = 10, tieBreak = Seq("vec_id"))
         .select("vec_id").collect().map(_.getLong(0)).toSet
     }
-    val (sqIds, tSqSearch) = time {
+    val (tSqSearch, sqIds) = time {
       engine.searchSq("vectors", "vector", target, coding = "c", probes = 16,
         candidates = 100, idCol = "vec_id", k = 10, metric = Some("l2"),
         tieBreak = Seq("vec_id"))
@@ -96,7 +77,7 @@ object Soak10M {
     val queries = engine.readTable(Seq("vectors")).filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"),
         col("vector").cast("array<double>").as("q_emb"))
-    val (joinRows, tJoin) = time {
+    val (tJoin, joinRows) = time {
       engine.knnJoinSq("c", "vectors", "vector", queries, "q_id", "q_emb",
         k = 10, probes = 16, candidates = 100, idCol = "vec_id",
         metric = Some("l2"), tieBreak = Seq("vec_id")).count()
@@ -104,17 +85,17 @@ object Soak10M {
     // cluster organization over the full 10M build: per-cell occupancy +
     // distance-to-anchor stats (broadcast anchors, one scalar shuffle) —
     // the corpus-profiling view a curriculum/domain pass starts from
-    val (cellRows, tCellProfile) = time {
+    val (tCellProfile, cellRows) = time {
       engine.cellProfile("c", "vectors", "vector").count()
     }
     // 1% append, then the incremental delta path on all three tiers
     val extra = RefBench.corpus(spark, n / 100)
       .withColumn("vec_id", col("vec_id") + n)
     extra.write.mode("append").parquet(engine.store.tablePath("vectors"))
-    val (_, tSyncIvf) = time(engine.syncIndex("c", "vectors", "vector"))
-    val (_, tSyncSq) =
+    val (tSyncIvf, _) = time(engine.syncIndex("c", "vectors", "vector"))
+    val (tSyncSq, _) =
       time(engine.syncSqIndex("c", "vectors", "vector", "vec_id"))
-    val (_, tSyncPq) =
+    val (tSyncPq, _) =
       time(engine.syncPqIndex("c", "vectors", "vector", "vec_id"))
 
     fs.delete(new org.apache.hadoop.fs.Path(root), true)
@@ -133,5 +114,7 @@ object Soak10M {
       "cell_profile_cells" -> cellRows.toDouble,
       "sync_append_ivf" -> tSyncIvf, "sync_append_sq" -> tSyncSq,
       "sync_append_pq" -> tSyncPq)
+      .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
+      .mkString("{", ",", "}")
   }
 }

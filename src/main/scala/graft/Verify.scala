@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,13 +12,7 @@ object Verify {
     // optional name filter for fast local iteration on a single oracle;
     // the driver always runs the full dump (2 args)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.create()
     spark.sparkContext.setLogLevel("WARN")
     org.apache.spark.sql.GraftShims.quietCheckpointLogs()
     new java.io.File(outDir).mkdirs()

@@ -709,7 +709,8 @@ class Engine(val spark: SparkSession, val root: String,
     * lists every bucket directory up front no matter what the plan
     * later prunes, and at the 10M/512-bucket tier that discovery was
     * ~0.9s per table × 3 tables ≈ 85% of the measured single-lookup
-    * constant ([[graft.FuzzyLookupProbe]]). Buckets no key ever hashed
+    * constant (NOTES.md, "The 10M fuzzy single-lookup constant"; the
+    * breakdown is in fuzzy_lookup_probe.json). Buckets no key ever hashed
     * into have no directory — one cheap exists() each skips them; all
     * absent degrades to a full read filtered to nothing (rare, and the
     * schema must still come from somewhere). */

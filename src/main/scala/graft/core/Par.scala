@@ -48,7 +48,7 @@ object Par {
     // (~0.1-0.3s fixed planning cost per spread site at fixture scale)
     // and would eagerly execute upstream shuffle stages under AQE; the
     // `.rdd` path survives only as the fallback for exotic
-    // (exchange-free, so double-execution-safe) leaf shapes
+    // (shuffle-free) leaf shapes
     val parts = org.apache.spark.sql.GraftShims.scanPartitions(df)
       .getOrElse(df.rdd.getNumPartitions)
     if (parts < target) df.repartition(target) else df

@@ -15,9 +15,10 @@ import graft.functions.functions.vector_distance
   * the `Seq[JwElem]`-returning blocking UDF ("No applicable
   * constructor/method found … JwElem.r()") and Spark silently fell back
   * to INTERPRETED expression evaluation on every executor for the whole
-  * JW blocking family — the r20 Verify log wart. A public top-level case
-  * class codegen-compiles. */
-case class JwElem(r: Int, c: String, occ: Int)
+  * JW blocking family — the r20 Verify log wart. A top-level case class
+  * codegen-compiles; `private[ext]` keeps it out of the library API while
+  * staying Janino-safe (package-private compiles to a public class). */
+private[ext] case class JwElem(r: Int, c: String, occ: Int)
 
 /** Deduplication operators for training-data pipelines (driver mandate).
   *
@@ -171,16 +172,22 @@ object Dedup {
     * #4): the dup set's post-agg estimate defeats auto-broadcast, so
     * the r20 fix forced `shuffle_hash` unconditionally — but at any
     * scale where the dup set DOES fit, a broadcast wins (the span
-    * occurrences are never shuffled at all). The gate reads the CORPUS
-    * input's scan estimate (file bytes — reliable, unlike the post-agg
-    * stats): the dup set is bounded by the corpus' span hashes, so an
-    * input under `graft.dedup.spanDupBroadcastBytes` (default 32 MB,
-    * settable per session; conservative because the bound is loose)
-    * proves it broadcastable. Anything larger — and any caller with no
+    * occurrences are never shuffled at all). The gate is a HEURISTIC,
+    * not a proof: it reads the CORPUS input's scan estimate (file bytes
+    * — reliable, unlike the post-agg stats) and broadcasts when that is
+    * under `graft.dedup.spanDupBroadcastBytes` (default 32 MB, settable
+    * per session). The dup set grows with the corpus' distinct
+    * duplicated spans (~24 B per row) while the scan estimate counts
+    * COMPRESSED parquet bytes, so a 32 MB input can yield a dup set
+    * several times larger. A larger input — and any caller with no
     * corpus frame to size — keeps the sort-free shuffle_hash: an
     * unbounded dup set must never be collected to the driver. */
   private def spanDupHint(dup: DataFrame, corpus: Option[DataFrame]): DataFrame = {
     val broadcastable = corpus.exists { c =>
+      // driver-memory cost: a broadcast dup set is collected to the
+      // driver and built into a hash map there, and can be several
+      // times this many bytes (worst case ~100-150 MB at the default) —
+      // raise it only with that much driver headroom
       val thresh = c.sparkSession.conf
         .get("graft.dedup.spanDupBroadcastBytes", (32L << 20).toString).toLong
       c.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(thresh)

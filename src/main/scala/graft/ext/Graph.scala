@@ -29,7 +29,14 @@ object Graph {
     * multi-hour job. `durable = true` writes each iteration's frame to
     * the configured `sparkContext.setCheckpointDir` (HDFS/object store)
     * instead — one distributed write per iteration buys executor-loss
-    * survival; same results either way. */
+    * survival; same results either way.
+    *
+    * An `observe` riding the frame (the loops' per-round counts) sees
+    * ONE computation on either branch: on Spark 4.1 an eager reliable
+    * `checkpoint()` reports the same observed metrics as
+    * `localCheckpoint` (measured — a second computation for the file
+    * write would double them). GraphSpec pins it: the durable loop takes
+    * the local loop's round count. */
   private[ext] def cut(df: DataFrame, durable: Boolean): DataFrame =
     if (!durable) df.localCheckpoint(true)
     else {

@@ -1,7 +1,5 @@
 package graft.server
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.Engine
 
 /** CLI launcher for [[GraftServer]] — the `launch.py:12-21` analogue.
@@ -16,13 +14,7 @@ object Serve {
       s"${System.getProperty("java.io.tmpdir")}/graft_root_serve")
     val port = sys.env.getOrElse("GRAFT_PORT", "8265").toInt
     val host = sys.env.getOrElse("GRAFT_HOST", "127.0.0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.BenchSession.create()
     spark.sparkContext.setLogLevel("WARN")
     val server = new GraftServer(new Engine(spark, root), host, port).start()
     println(s"graft server listening on $host:${server.boundPort} (root=$root)")

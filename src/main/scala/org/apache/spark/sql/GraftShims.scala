@@ -73,38 +73,49 @@ object GraftShims {
     * the SAME `queryExecution` the later action will reuse, so its lazy
     * plan work is never paid twice:
     *
-    *  - a plan AQE wrapped (= it contains exchanges/subqueries), or any
-    *    plan with a shuffle exchange, reports `Some(Int.MaxValue)`:
+    *  - a plan with a shuffle exchange reports `Some(Int.MaxValue)`:
     *    post-shuffle partitioning is session-scaled already, so a
     *    parallelism floor is a provable no-op — and this is exactly the
-    *    case where probing via `.rdd` would double-execute;
+    *    case where probing via `.rdd` would double-execute. Under AQE
+    *    the test reads the wrapper's `initialPlan`: AQE also wraps plans
+    *    whose only exchanges are broadcasts (or subqueries), and those
+    *    keep the probe side's scan partitioning — possibly one split;
     *  - exchange-free plans report the max partition count over their
-    *    scan leaves (file splits / checkpointed RDD partitions / local
-    *    relation slices) — the count the executed RDD will have, since
-    *    narrow operators preserve partitioning;
+    *    streamed scan leaves (file splits / checkpointed RDD partitions /
+    *    local relation slices; broadcast build sides excluded) — the
+    *    count the executed RDD will have, since narrow operators and
+    *    broadcast joins preserve the streamed side's partitioning;
     *  - an unrecognized leaf reports None (caller decides; such a plan
-    *    is exchange-free here, so a `.rdd` fallback cannot
-    *    double-execute anything). */
-  def scanPartitions(df: Dataset[_]): Option[Int] =
-    df.queryExecution.executedPlan match {
-      case _: execution.adaptive.AdaptiveSparkPlanExec => Some(Int.MaxValue)
-      case p if p.collect {
-          case s: execution.exchange.ShuffleExchangeLike => s }.nonEmpty =>
-        Some(Int.MaxValue)
-      case p =>
-        val leaves = p.collectLeaves().map {
-          case f: execution.FileSourceScanExec =>
-            Some(f.inputRDD.getNumPartitions)
-          case r: execution.RDDScanExec => Some(r.rdd.getNumPartitions)
-          case l: execution.LocalTableScanExec =>
-            // mirrors LocalTableScanExec's private numParallelism
-            Some(math.min(math.max(l.rows.length, 1),
-              df.sparkSession.sparkContext.defaultParallelism))
-          case _ => None
-        }
-        if (leaves.isEmpty || leaves.contains(None)) None
-        else Some(leaves.flatten.max)
+    *    is shuffle-free here, so a `.rdd` fallback re-runs at most a
+    *    broadcast build side). */
+  def scanPartitions(df: Dataset[_]): Option[Int] = {
+    import execution.{SparkPlan, adaptive, exchange}
+    def streamedLeaves(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: exchange.BroadcastExchangeLike => Nil
+      case leaf if leaf.children.isEmpty => Seq(leaf)
+      case other => other.children.flatMap(streamedLeaves)
     }
+    val plan = df.queryExecution.executedPlan match {
+      case a: adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    if (plan.exists(_.isInstanceOf[exchange.ShuffleExchangeLike]))
+      Some(Int.MaxValue)
+    else {
+      val leaves = streamedLeaves(plan).map {
+        case f: execution.FileSourceScanExec =>
+          Some(f.inputRDD.getNumPartitions)
+        case r: execution.RDDScanExec => Some(r.rdd.getNumPartitions)
+        case l: execution.LocalTableScanExec =>
+          // mirrors LocalTableScanExec's private numParallelism
+          Some(math.min(math.max(l.rows.length, 1),
+            df.sparkSession.sparkContext.defaultParallelism))
+        case _ => None
+      }
+      if (leaves.isEmpty || leaves.contains(None)) None
+      else Some(leaves.flatten.max)
+    }
+  }
 
   /** Serialize a DataFrame to an Arrow IPC **stream** on `out` using
     * Spark's own Arrow writers (`execution.arrow.ArrowWriter` — the

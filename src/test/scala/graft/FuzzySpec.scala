@@ -82,6 +82,44 @@ class FuzzySpec extends SparkSuite {
       s"post-compact bounds ${bounds(e)} != from-scratch ${bounds(e2)}")
   }
 
+  test("combined edit-distance guard refuses a segment-only or " +
+      "probe-only right key") {
+    // the right side's precomputed seg/probe counts join FULL OUTER (a
+    // key one side lacks still meets the other direction's left
+    // frame), and the left counts join them INNER — edPairCounts gives
+    // every left key both counts. An inner right-side join would drop
+    // every key below and let ~800 candidate pairs past maxCandidates
+    val e = freshEngine("fguard")
+    e.makeTable("fg", (0 until 20).map(i => (i.toLong, "abcdefghij"))
+      .toDF("doc_id", "t"))
+    e.buildFuzzyIndex("fg", "doc_id", "t", maxDist = 1, buckets = 8)
+    val left = (0 until 20).map(i => (100L + i, "abcdefghij"))
+      .toDF("qid", "qt")
+    val base = e.store.fuzzyIndexPath("fg", "t")
+    def keys(frame: String) = spark.read.parquet(s"$base/$frame")
+      .select(col("l"), col("i"), col("g"), col("id").as("id_b"))
+    val rb = spark.read.parquet(s"$base/base").select("id", "t", "len")
+    def join(rSegs: DataFrame, rProbes: DataFrame,
+        rSegCounts: Option[DataFrame], rProbeCounts: Option[DataFrame]) =
+      graft.ext.Dedup.editDistanceJoinAgainstFrames(left, "qid", "qt", rb,
+        rSegs, rProbes, maxDist = 1, maxCandidates = 100L,
+        rSegCounts = rSegCounts, rProbeCounts = rProbeCounts)
+    // segment-only: right probes empty, so only left probes x right segs
+    val segOnly = intercept[IllegalArgumentException] {
+      join(keys("segs"), keys("probes").limit(0),
+        Some(graft.ext.Dedup.editDistanceKeyCounts(keys("segs"), "ns")), None)
+    }
+    assert(segOnly.getMessage.contains("maxCandidates=100"), segOnly.getMessage)
+    // probe-only mirror: right segs empty, so only left segs x right probes
+    val probeOnly = intercept[IllegalArgumentException] {
+      join(keys("segs").limit(0), keys("probes"),
+        None, Some(graft.ext.Dedup.editDistanceKeyCounts(keys("probes"), "np")))
+    }
+    assert(probeOnly.getMessage.contains("maxCandidates=100"),
+      probeOnly.getMessage)
+    e.remove()
+  }
+
   test("batch fuzzyJoin through the artifact == inline editDistanceJoin") {
     val all = corpusRows(50).toDF("doc_id", "t")
     val e = freshEngine("fjoin")

@@ -148,6 +148,29 @@ class GraphSpec extends SparkSuite {
     assert(dgDurable == ccLocal.map { case (k, v) => k -> v })
   }
 
+  test("durable checkpoints observe each round once: components take " +
+      "the same rounds as the local path") {
+    // the per-round edge count is an Observation riding the checkpoint;
+    // if the durable (reliable) checkpoint computed its plan twice, the
+    // count would double, an already-converged star would need a second
+    // round, and maxIter = the local round count would throw
+    spark.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft-ckpt-rounds").toString)
+    val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (5L, 4L))
+      .toDF("src", "dst")
+    val rounds = (1 to 5).find { m =>
+      scala.util.Try(Graph.connectedComponents(edges, "src", "dst",
+        maxIter = m)).isSuccess
+    }.get
+    val local = Graph.connectedComponents(edges, "src", "dst",
+        maxIter = rounds)
+      .as[(Long, Long)].collect().toMap
+    val durable = Graph.connectedComponents(edges, "src", "dst",
+        maxIter = rounds, durableCheckpoint = true)
+      .as[(Long, Long)].collect().toMap
+    assert(durable == local)
+  }
+
   test("weighted PageRank: heavier edge carries proportionally more " +
       "mass, and weight-1 edges reduce to plain PageRank") {
     // a → b (w 3), a → c (w 1): b gets 3/4 of a's mass, c gets 1/4

@@ -149,16 +149,12 @@ class RegressionGateSpec extends AnyFunSuite {
     assert(MachineCanary.UnsuffixedTimingKeys.contains("sync_append_pq"))
   }
 
-  test("canary pre/post pair: marked start is spliced, unmarked is not") {
+  test("canary pre/post pair: both factors are spliced") {
     val line = MachineCanary.splice("""{"build_sec":10.0}""",
       sec = 1.64, factor = 2.0, pre = 0.95, prior = "")
     val node = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(line)
     assert(node.get("canary_factor").asDouble() == 2.0)
     assert(node.get("canary_factor_pre").asDouble() == 0.95)
-    // soaks that never call markStart keep the single-probe line
-    val bare = MachineCanary.splice("""{"build_sec":10.0}""",
-      sec = 1.64, factor = 2.0, pre = -1.0, prior = "")
-    assert(!bare.contains("canary_factor_pre"), bare)
   }
 }

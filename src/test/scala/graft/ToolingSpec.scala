@@ -1,0 +1,54 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-tree guards for the runnable tooling: every main shares
+  * [[BenchSession]], and no test-side object shadows a main-side one
+  * (`runMain` would pick whichever comes first on the classpath). */
+class ToolingSpec extends AnyFunSuite {
+  private lazy val root: Path =
+    Iterator.iterate(Paths.get("").toAbsolutePath)(_.getParent)
+      .takeWhile(_ != null).find(p => Files.exists(p.resolve("build.sbt")))
+      .getOrElse(fail("no build.sbt at or above the working directory"))
+
+  private def sources(dir: String): Seq[Path] = {
+    val walk = Files.walk(root.resolve(dir))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.sorted
+    finally walk.close()
+  }
+
+  private val TopLevelDef =
+    """^(?:(?:private\[\w+\]|final|sealed|abstract|case)\s+)*(?:class|trait|object)\s+(\w+).*""".r
+
+  /** Fully qualified names of a file's top-level classes, traits and
+    * objects. */
+  private def topLevelNames(file: Path): Seq[String] = {
+    val lines = Files.readAllLines(file).asScala.toSeq
+    val pkg = lines.filter(_.startsWith("package "))
+      .map(_.stripPrefix("package ").trim).mkString(".")
+    lines.collect { case TopLevelDef(name) => s"$pkg.$name" }
+  }
+
+  private def buildersIn(dir: String): Seq[String] =
+    sources(dir).filter(f => Files.readString(f).contains("SparkSession.builder"))
+      .map(_.getFileName.toString)
+
+  test("no fully qualified name is defined in both src/main and src/test") {
+    val main = sources("src/main/scala").flatMap(topLevelNames).toSet
+    val shadowed = sources("src/test/scala").flatMap(topLevelNames).filter(main)
+    assert(shadowed.isEmpty, s"defined on both sides: $shadowed")
+  }
+
+  test("src/main builds a SparkSession only in BenchSession") {
+    assert(buildersIn("src/main/scala") == Seq("BenchSession.scala"))
+  }
+
+  test("src/test builds a SparkSession only in *Spec.scala fixtures") {
+    val outside = buildersIn("src/test/scala").filterNot(_.endsWith("Spec.scala"))
+    assert(outside.isEmpty, s"session builders outside spec fixtures: $outside")
+  }
+}

@@ -768,6 +768,25 @@ class PlanShapeSpec extends SparkSuite {
     assert(scan.contains("PushedFilters") && scan.contains("label"),
       s"label filter not pushed:\n$scan")
   }
+
+  test("Par.spread spreads a single-file input broadcast-joined upstream") {
+    // AQE wraps any plan with an exchange, broadcasts included, but a
+    // broadcast join keeps the streamed scan's partitioning: one file
+    // split stays one task unless spread repartitions it
+    val dir = java.nio.file.Files.createTempDirectory("spread").toString
+    spark.range(1000).select(col("id"), (col("id") % 3).as("k"))
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val joined = spark.read.parquet(dir)
+      .join(broadcast(Seq((0L, "a"), (1L, "b"), (2L, "c")).toDF("k", "tag")),
+        "k")
+    assert(org.apache.spark.sql.GraftShims.scanPartitions(joined) == Some(1))
+    val spread = graft.core.Par.spread(joined)
+    assert(spread ne joined, "single-split input was not spread")
+    assert(spread.count() == 1000L)
+    // a shuffled plan is session-scaled already: reported as unbounded
+    assert(org.apache.spark.sql.GraftShims.scanPartitions(
+      joined.groupBy("k").count()) == Some(Int.MaxValue))
+  }
 }
 
 class DeterminismSpec extends SparkSuite {
