@@ -1183,21 +1183,6 @@ class Engine(val spark: SparkSession, val root: String,
       idCol: String): Long =
     Index.syncIncrementalSq(store, codingName, source, column, idCol)
 
-  /** Probed IVF+SQ8 search ([[Index.searchSq]]): coarse pass over the
-    * d-byte quantized copy, exact rerank of the survivors.
-    * `candidates = Engine.Advised` serves the PERSISTED candidate
-    * budget for (coding, "sq", probes) — see
-    * [[resolveAdvisedCandidates]] (loud-or-fresh, target-reached only). */
-  def searchSq(source: String, column: String, target: TargetVector,
-      coding: String, probes: Int, candidates: Int, idCol: String,
-      k: Int = 10, metric: Option[String] = None,
-      filter: Option[Column] = None, select: Option[Seq[String]] = None,
-      tieBreak: Seq[String] = Nil): DataFrame =
-    Index.searchSq(store, coding, source, column, target, k, probes,
-      advisedCand(candidates, coding, "sq", probes, source, column, k,
-        metric),
-      idCol, metric, filter, select, tieBreak)
-
   /** Build the IVF+BQ index under an existing coding — 1-bit sign codes
     * (32× smaller than float32; [[Index.buildBq]]); returns the
     * per-dimension mean thresholds. `perCell = true` centers each cell's
@@ -1226,29 +1211,18 @@ class Engine(val spark: SparkSession, val root: String,
       prefixDim, candidates, idCol, k, metric, prefixCol, filter, select,
       tieBreak)
 
-  /** Probed IVF+BQ search ([[Index.searchBq]]): Hamming coarse pass over
-    * the 1-bit codes, exact rerank of the survivors.
-    * `candidates = Engine.Advised` serves the persisted (coding, "bq",
-    * probes) budget ([[resolveAdvisedCandidates]]). */
-  def searchBq(source: String, column: String, target: TargetVector,
-      coding: String, probes: Int, candidates: Int, idCol: String,
-      k: Int = 10, metric: Option[String] = None,
-      filter: Option[Column] = None, select: Option[Seq[String]] = None,
-      tieBreak: Seq[String] = Nil): DataFrame =
-    Index.searchBq(store, coding, source, column, target, k, probes,
-      advisedCand(candidates, coding, "bq", probes, source, column, k,
-        metric),
-      idCol, metric, filter, select, tieBreak)
-
   /** Batch IVF k-NN join ([[Index.ivfKnnJoin]]): per-query top-k over
     * the probed cells — many queries amortized over one pruned corpus
     * pass; only ids/distances cross the per-query shuffle. */
   def knnJoinIvf(coding: String, source: String, column: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, probes: Int, idCol: String, metric: Option[String] = None,
-      tieBreak: Seq[String] = Nil): DataFrame =
+      tieBreak: Seq[String] = Nil): DataFrame = {
+    val (Some(p), _) = servedBudgets(Seq(source), column, Some(coding),
+      "ivf", Some(probes), None, k, metric)
     Index.ivfKnnJoin(store, coding, source, column, queries, queryIdCol,
-      queryVecCol, k, probes, idCol, metric, tieBreak)
+      queryVecCol, k, p, idCol, metric, tieBreak)
+  }
 
   /** Batch k-NN join over the SQ8 copy ([[Index.sqKnnJoin]]): the
     * expensive per-cell stage carries d-byte codes instead of float
@@ -1256,25 +1230,25 @@ class Engine(val spark: SparkSession, val root: String,
   def knnJoinSq(coding: String, source: String, column: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, probes: Int, candidates: Int, idCol: String,
-      metric: Option[String] = None, tieBreak: Seq[String] = Nil): DataFrame =
+      metric: Option[String] = None, tieBreak: Seq[String] = Nil): DataFrame = {
+    val (Some(p), Some(cand)) = servedBudgets(Seq(source), column,
+      Some(coding), "sq", Some(probes), Some(candidates), k, metric)
     Index.sqKnnJoin(store, coding, source, column, queries, queryIdCol,
-      queryVecCol, k, probes,
-      advisedCand(candidates, coding, "sq", probes, source, column, k,
-        metric),
-      idCol, metric, tieBreak)
+      queryVecCol, k, p, cand, idCol, metric, tieBreak)
+  }
 
   /** Batch BQ k-NN join ([[Index.bqKnnJoin]]): the 1-bit tier's batch
-    * join — Hamming popcount coarse pass per cell, scalars-only window,
-    * exact rerank of each query's survivors. */
+    * join — sign-code coarse pass per cell, scalars-only window, exact
+    * rerank of each query's survivors. */
   def knnJoinBq(coding: String, source: String, column: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, probes: Int, candidates: Int, idCol: String,
-      metric: Option[String] = None, tieBreak: Seq[String] = Nil): DataFrame =
+      metric: Option[String] = None, tieBreak: Seq[String] = Nil): DataFrame = {
+    val (Some(p), Some(cand)) = servedBudgets(Seq(source), column,
+      Some(coding), "bq", Some(probes), Some(candidates), k, metric)
     Index.bqKnnJoin(store, coding, source, column, queries, queryIdCol,
-      queryVecCol, k, probes,
-      advisedCand(candidates, coding, "bq", probes, source, column, k,
-        metric),
-      idCol, metric, tieBreak)
+      queryVecCol, k, p, cand, idCol, metric, tieBreak)
+  }
 
   /** Batch k-NN join over the IVF+PQ index ([[Index.pqKnnJoin]]): the
     * per-cell join carries m-byte ADC codes, each query's lookup table
@@ -1282,76 +1256,90 @@ class Engine(val spark: SparkSession, val root: String,
   def knnJoinPq(coding: String, source: String, column: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, probes: Int, candidates: Int, idCol: String,
-      metric: Option[String] = None, tieBreak: Seq[String] = Nil): DataFrame =
+      metric: Option[String] = None, tieBreak: Seq[String] = Nil): DataFrame = {
+    val (Some(p), Some(cand)) = servedBudgets(Seq(source), column,
+      Some(coding), "pq", Some(probes), Some(candidates), k, metric)
     Index.pqKnnJoin(store, coding, source, column, queries, queryIdCol,
-      queryVecCol, k, probes,
-      advisedCand(candidates, coding, "pq", probes, source, column, k,
-        metric),
-      idCol, metric, tieBreak)
+      queryVecCol, k, p, cand, idCol, metric, tieBreak)
+  }
 
   /** Batch retrieve-rerank k-NN join ([[Index.rerankKnnJoin]]): cell-rank
     * coarse stage with no vector math, exact rerank of the survivors. */
   def knnJoinRerank(coding: String, source: String, column: String,
       queries: DataFrame, queryIdCol: String, queryVecCol: String,
       k: Int, probes: Int, candidates: Int, idCol: String,
-      metric: Option[String] = None, tieBreak: Seq[String] = Nil): DataFrame =
+      metric: Option[String] = None, tieBreak: Seq[String] = Nil): DataFrame = {
+    val (Some(p), Some(cand)) = servedBudgets(Seq(source), column,
+      Some(coding), "rerank", Some(probes), Some(candidates), k, metric)
     Index.rerankKnnJoin(store, coding, source, column, queries, queryIdCol,
-      queryVecCol, k, probes,
-      advisedCand(candidates, coding, "rerank", probes, source, column, k,
-        metric),
-      idCol, metric, tieBreak)
-
-  /** Multi-source IVF+PQ search (reference ticket `"a:b:c"`,
-    * `flight.py:47`): each source's PQ index is searched independently —
-    * per-source codebooks make ADC scores incomparable across sources,
-    * but each source's EXACT-reranked top-k is, so the global top-k of
-    * the union equals top-k over the unioned corpus at full budgets.
-    * That only holds when every source's final distances are under ONE
-    * metric, so indexes trained under different metrics are refused up
-    * front (cosine ∈ [0,1] unioned with unbounded l2 would silently
-    * return garbage ordering). */
-  def searchPqMulti(
-      sources: Seq[String],
-      column: String,
-      target: TargetVector,
-      coding: String,
-      probes: Int,
-      candidates: Int,
-      idCol: String,
-      k: Int = 10,
-      metric: Option[String] = None,
-      filter: Option[Column] = None,
-      select: Option[Seq[String]] = None,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    Engine.validCount("candidates", candidates)
-    require(candidates != Engine.Advised,
-      "candidates = Engine.Advised is single-source only: persisted " +
-        "candidate advice is measured against one corpus — pass an " +
-        "explicit candidate count for a multi-source union")
+      queryVecCol, k, p, cand, idCol, metric, tieBreak)
+  }
+  /** The one gate in front of every indexed search and batch join: at
+    * least one source; every count >= 1 or [[Engine.Advised]]; the
+    * sentinel only over exactly one source — persisted advice is
+    * measured against one (coding, source, column) corpus, and a union
+    * is a different corpus with a different recall curve. Resolves an
+    * advised probe count ([[resolveAdvisedProbes]]), then an advised
+    * candidate budget, keyed per (coding, `tier`, served probes)
+    * ([[resolveAdvisedCandidates]]); returns the budgets to serve. */
+  private def servedBudgets(sources: Seq[String], column: String,
+      coding: Option[String], tier: String, probes: Option[Int],
+      candidates: Option[Int], k: Int,
+      metric: Option[String]): (Option[Int], Option[Int]) = {
     require(sources.nonEmpty, "at least one source")
-    val metrics = sources.map(s =>
-      s -> Index.loadPqCodebooks(store, coding, s, column).canonicalMetric)
-    require(metrics.map(_._2).distinct.size == 1,
-      "multi-source PQ search needs every source's codebooks trained under " +
-        s"ONE metric — distances are not comparable across metrics; got " +
-        metrics.map { case (s, m) => s"$s:$m" }.mkString(", "))
-    val m = Some(metric.map(graft.core.Metrics.canonical)
-      .getOrElse(metrics.head._2))
-    unionTopK(sources, k, tieBreak)(s =>
-      Index.searchIvfPq(store, coding, s, column, target, k, probes,
-        candidates, idCol, m, filter, select, tieBreak))
+    for ((name, v) <- Seq("probes" -> probes, "candidates" -> candidates); n <- v) {
+      Engine.validCount(name, n)
+      require(n != Engine.Advised || sources.size == 1,
+        s"$name = Engine.Advised is single-source only: persisted " +
+          s"$name advice is measured against one (coding, source, " +
+          s"column) corpus, and this call unions ${sources.size} " +
+          s"sources — pass an explicit $name count (or advise a " +
+          "dedicated union table)")
+    }
+    lazy val c = coding.getOrElse(throw new IllegalArgumentException(
+      "probes = Engine.Advised needs a coding — the advice is persisted " +
+        "per coding; pass the coding the advice was measured for"))
+    val p = probes.map(n => if (n != Engine.Advised) n
+      else resolveAdvisedProbes(c, sources.head, column, k, metric))
+    (p, candidates.map(n => if (n != Engine.Advised) n
+      else resolveAdvisedCandidates(c, tier, p.getOrElse(
+        throw new IllegalArgumentException(
+          "candidates = Engine.Advised needs an explicit probes value — " +
+            "candidate advice is persisted per (coding, tier, probes)")),
+        sources.head, column, k, metric)))
   }
 
   /** Global top-k over per-source top-k results: exact over the unioned
     * corpus whenever each per-source result carries true (comparable)
     * final distances — the shared merge step of every multi-source
-    * search path. */
-  private def unionTopK(sources: Seq[String], k: Int, tieBreak: Seq[String])(
-      perSource: String => DataFrame): DataFrame =
-    sources.map(perSource)
-      .reduce(_ unionByName _)
-      .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
-      .limit(k)
+    * search path. One source is its own result. The per-source frames
+    * keep the `tieBreak` columns through `select` so the merge can
+    * order on them; the projection is applied after the merge. */
+  private def unionTopK(sources: Seq[String], k: Int,
+      select: Option[Seq[String]], tieBreak: Seq[String])(
+      perSource: (String, Option[Seq[String]]) => DataFrame): DataFrame =
+    if (sources.size == 1) perSource(sources.head, select)
+    else {
+      val wide = select.map(cols => (cols ++ tieBreak).distinct)
+      val top = sources.map(perSource(_, wide))
+        .reduce(_ unionByName _)
+        .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
+        .limit(k)
+      select.fold(top)(cols => top.select((cols :+ Search.DistCol).map(col): _*))
+    }
+
+  /** Probed IVF+SQ8 search ([[Index.searchSq]]): coarse pass over the
+    * d-byte quantized copy, exact rerank of the survivors.
+    * `candidates = Engine.Advised` serves the PERSISTED candidate
+    * budget for (coding, "sq", probes) — see
+    * [[resolveAdvisedCandidates]] (loud-or-fresh, target-reached only). */
+  def searchSq(source: String, column: String, target: TargetVector,
+      coding: String, probes: Int, candidates: Int, idCol: String,
+      k: Int = 10, metric: Option[String] = None,
+      filter: Option[Column] = None, select: Option[Seq[String]] = None,
+      tieBreak: Seq[String] = Nil): DataFrame =
+    searchSqMulti(Seq(source), column, target, coding, probes, candidates,
+      idCol, k, metric, filter, select, tieBreak)
 
   /** Multi-source IVF+SQ8 search. Simpler than [[searchPqMulti]]: each
     * source's affine params differ, but the per-source result distances
@@ -1373,16 +1361,24 @@ class Engine(val spark: SparkSession, val root: String,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
       tieBreak: Seq[String] = Nil): DataFrame = {
-    Engine.validCount("candidates", candidates)
-    require(candidates != Engine.Advised,
-      "candidates = Engine.Advised is single-source only: persisted " +
-        "candidate advice is measured against one corpus — pass an " +
-        "explicit candidate count for a multi-source union")
-    require(sources.nonEmpty, "at least one source")
-    unionTopK(sources, k, tieBreak)(s =>
-      Index.searchSq(store, coding, s, column, target, k, probes,
-        candidates, idCol, metric, filter, select, tieBreak))
+    val (Some(p), Some(cand)) = servedBudgets(sources, column, Some(coding),
+      "sq", Some(probes), Some(candidates), k, metric)
+    unionTopK(sources, k, select, tieBreak)((s, sel) =>
+      Index.searchSq(store, coding, s, column, target, k, p, cand, idCol,
+        metric, filter, sel, tieBreak))
   }
+
+  /** Probed IVF+BQ search ([[Index.searchBq]]): 1-bit coarse pass over
+    * the sign codes, exact rerank of the survivors.
+    * `candidates = Engine.Advised` serves the persisted (coding, "bq",
+    * probes) budget ([[resolveAdvisedCandidates]]). */
+  def searchBq(source: String, column: String, target: TargetVector,
+      coding: String, probes: Int, candidates: Int, idCol: String,
+      k: Int = 10, metric: Option[String] = None,
+      filter: Option[Column] = None, select: Option[Seq[String]] = None,
+      tieBreak: Seq[String] = Nil): DataFrame =
+    searchBqMulti(Seq(source), column, target, coding, probes, candidates,
+      idCol, k, metric, filter, select, tieBreak)
 
   /** Multi-source IVF+BQ search: per-source [[Index.searchBq]] top-k,
     * unioned and re-topped (same shape as [[searchSqMulti]]). */
@@ -1399,21 +1395,75 @@ class Engine(val spark: SparkSession, val root: String,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
       tieBreak: Seq[String] = Nil): DataFrame = {
-    Engine.validCount("candidates", candidates)
-    require(candidates != Engine.Advised,
-      "candidates = Engine.Advised is single-source only: persisted " +
-        "candidate advice is measured against one corpus — pass an " +
-        "explicit candidate count for a multi-source union")
-    require(sources.nonEmpty, "at least one source")
-    unionTopK(sources, k, tieBreak)(s =>
-      Index.searchBq(store, coding, s, column, target, k, probes,
-        candidates, idCol, metric, filter, select, tieBreak))
+    val (Some(p), Some(cand)) = servedBudgets(sources, column, Some(coding),
+      "bq", Some(probes), Some(candidates), k, metric)
+    unionTopK(sources, k, select, tieBreak)((s, sel) =>
+      Index.searchBq(store, coding, s, column, target, k, p, cand, idCol,
+        metric, filter, sel, tieBreak))
+  }
+
+  /** Probed IVF+PQ search: codes-only ADC coarse pass over the probed
+    * cells, exact rerank of `candidates` rows ([[Index.searchIvfPq]]). */
+  def searchPq(
+      source: String,
+      column: String,
+      target: TargetVector,
+      coding: String,
+      probes: Int,
+      candidates: Int,
+      idCol: String,
+      k: Int = 10,
+      metric: Option[String] = None,
+      filter: Option[Column] = None,
+      select: Option[Seq[String]] = None,
+      tieBreak: Seq[String] = Nil): DataFrame =
+    searchPqMulti(Seq(source), column, target, coding, probes, candidates,
+      idCol, k, metric, filter, select, tieBreak)
+
+  /** Multi-source IVF+PQ search (reference ticket `"a:b:c"`,
+    * `flight.py:47`): each source's PQ index is searched independently —
+    * per-source codebooks make ADC scores incomparable across sources,
+    * but each source's EXACT-reranked top-k is, so the global top-k of
+    * the union equals top-k over the unioned corpus at full budgets.
+    * That only holds when every source's final distances are under ONE
+    * metric, so a union over indexes trained under different metrics is
+    * refused up front (cosine ∈ [0,1] unioned with unbounded l2 would
+    * silently return garbage ordering). */
+  def searchPqMulti(
+      sources: Seq[String],
+      column: String,
+      target: TargetVector,
+      coding: String,
+      probes: Int,
+      candidates: Int,
+      idCol: String,
+      k: Int = 10,
+      metric: Option[String] = None,
+      filter: Option[Column] = None,
+      select: Option[Seq[String]] = None,
+      tieBreak: Seq[String] = Nil): DataFrame = {
+    val (Some(p), Some(cand)) = servedBudgets(sources, column, Some(coding),
+      "pq", Some(probes), Some(candidates), k, metric)
+    val m = if (sources.size == 1) metric else {
+      val metrics = sources.map(s =>
+        s -> Index.loadPqCodebooks(store, coding, s, column).canonicalMetric)
+      require(metrics.map(_._2).distinct.size == 1,
+        "multi-source PQ search needs every source's codebooks trained under " +
+          s"ONE metric — distances are not comparable across metrics; got " +
+          metrics.map { case (s, m) => s"$s:$m" }.mkString(", "))
+      Some(metric.map(graft.core.Metrics.canonical).getOrElse(metrics.head._2))
+    }
+    unionTopK(sources, k, select, tieBreak)((s, sel) =>
+      Index.searchIvfPq(store, coding, s, column, target, k, p, cand, idCol,
+        m, filter, sel, tieBreak))
   }
 
   /** Two-stage retrieve-rerank under an IVF coding
     * ([[Index.searchRerank]]): id-only coarse pass ranked by cell score,
     * exact rerank of the `candidates` survivors; optional `probes`
-    * partition pruning. */
+    * partition pruning. The advice key includes the probe budget it was
+    * measured at, so `candidates = Engine.Advised` needs explicit
+    * `probes`. */
   def searchRerank(
       source: String,
       column: String,
@@ -1426,20 +1476,9 @@ class Engine(val spark: SparkSession, val root: String,
       metric: Option[String] = None,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    Engine.validCount("candidates", candidates)
-    // the advice key includes the probe budget it was measured at, so
-    // the probe-free (all-cells) rerank cannot serve an advised budget
-    val cand =
-      if (candidates != Engine.Advised) candidates
-      else resolveAdvisedCandidates(coding, "rerank",
-        probes.getOrElse(throw new IllegalArgumentException(
-          "candidates = Engine.Advised needs an explicit probes value — " +
-            "candidate advice is persisted per (coding, tier, probes)")),
-        source, column, k, metric)
-    Index.searchRerank(store, coding, source, column, target, k, cand,
-      idCol, probes, metric, filter, select, tieBreak)
-  }
+      tieBreak: Seq[String] = Nil): DataFrame =
+    searchRerankMulti(Seq(source), column, target, coding, candidates,
+      idCol, k, probes, metric, filter, select, tieBreak)
 
   /** Multi-source retrieve-rerank: per-source exact-reranked top-k
     * merged by the shared global-top-k step (final distances are exact,
@@ -1458,40 +1497,18 @@ class Engine(val spark: SparkSession, val root: String,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
       tieBreak: Seq[String] = Nil): DataFrame = {
-    Engine.validCount("candidates", candidates)
-    require(candidates != Engine.Advised,
-      "candidates = Engine.Advised is single-source only: persisted " +
-        "candidate advice is measured against one corpus — pass an " +
-        "explicit candidate count for a multi-source union")
-    require(sources.nonEmpty, "at least one source")
-    unionTopK(sources, k, tieBreak)(s =>
-      Index.searchRerank(store, coding, s, column, target, k, candidates,
-        idCol, probes, metric, filter, select, tieBreak))
+    val (p, Some(cand)) = servedBudgets(sources, column, Some(coding),
+      "rerank", probes, Some(candidates), k, metric)
+    unionTopK(sources, k, select, tieBreak)((s, sel) =>
+      Index.searchRerank(store, coding, s, column, target, k, cand, idCol,
+        p, metric, filter, sel, tieBreak))
   }
-
-  /** Probed IVF+PQ search: codes-only ADC coarse pass over the probed
-    * cells, exact rerank of `candidates` rows ([[Index.searchIvfPq]]). */
-  def searchPq(
-      source: String,
-      column: String,
-      target: TargetVector,
-      coding: String,
-      probes: Int,
-      candidates: Int,
-      idCol: String,
-      k: Int = 10,
-      metric: Option[String] = None,
-      filter: Option[Column] = None,
-      select: Option[Seq[String]] = None,
-      tieBreak: Seq[String] = Nil): DataFrame =
-    Index.searchIvfPq(store, coding, source, column, target, k, probes,
-      advisedCand(candidates, coding, "pq", probes, source, column, k,
-        metric),
-      idCol, metric, filter, select, tieBreak)
 
   // ——— search (V8/V9) ———
   /** Multi-source search (reference ticket `"a:b:c"`, `flight.py:47`):
-    * the union of the per-source (indexed) tables searched as one. */
+    * [[search]] over the union of the per-source (indexed) tables —
+    * probed, the per-source top-k unioned and re-topped; brute, one scan
+    * of the unioned tables. */
   def searchMulti(
       sources: Seq[String],
       column: String,
@@ -1503,43 +1520,13 @@ class Engine(val spark: SparkSession, val root: String,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
       tieBreak: Seq[String] = Nil): DataFrame =
-    (coding, probes) match {
-      case (Some(c), Some(p0)) =>
-        // the Advised sentinel applies to the SINGLE-source form only:
-        // persisted advice is measured against one (coding, source,
-        // column) corpus, and a multi-source union is a different
-        // corpus with a different recall curve
-        Engine.validCount("probes", p0)
-        val p =
-          if (p0 != Engine.Advised) p0
-          else {
-            require(sources.size == 1,
-              "probes = Engine.Advised is single-source only: persisted " +
-                "probe advice is measured against one (coding, source, " +
-                s"column) corpus, and this call unions ${sources.size} " +
-                "sources — pass an explicit probe count (or advise a " +
-                "dedicated union table)")
-            resolveAdvisedProbes(c, sources.head, column, k, metric)
-          }
-        val codingObj = store.loadCoding(c)
-        val m = metric.getOrElse(codingObj.config.metric)
-        val cells = codingObj.rankCells(target.doubles, p)
-        val indexed = Index.pruneToCells(
-          sources.map(s => Index.load(store, c, s, column))
-            .reduce(_ unionByName _),
-          cells, codingObj.numCells)
-        val base = filter.fold(indexed)(indexed.filter)
-        val withDist = base.withColumn(Search.DistCol,
-          graft.functions.functions.vector_distance(col(column), target.lit, m))
-        val projected = select.fold(withDist)(cols =>
-          withDist.select((cols :+ Search.DistCol).map(col): _*))
-        projected.orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*).limit(k)
+    (coding, servedBudgets(sources, column, coding, "ivf", probes, None, k,
+        metric)._1) match {
+      case (Some(c), Some(p)) =>
+        unionTopK(sources, k, select, tieBreak)((s, sel) =>
+          Index.searchProbed(store, c, s, column, target, k, p, metric,
+            filter, sel, tieBreak))
       case _ =>
-        probes.foreach(Engine.validCount("probes", _))
-        require(!probes.contains(Engine.Advised),
-          "probes = Engine.Advised needs a coding — the advice is " +
-            "persisted per coding; pass the coding the advice was " +
-            "measured for")
         Search.knn(store.loadTable(sources: _*), column,
           spark.range(1).select(target.lit.as("__target__")),
           requireMetric(metric), k, filter, select, tieBreak)
@@ -1565,23 +1552,8 @@ class Engine(val spark: SparkSession, val root: String,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
       tieBreak: Seq[String] = Nil): DataFrame =
-    (coding, probes) match {
-      case (Some(c), Some(p0)) =>
-        Engine.validCount("probes", p0)
-        val p = if (p0 == Engine.Advised)
-          resolveAdvisedProbes(c, source, column, k, metric) else p0
-        Index.searchProbed(store, c, source, column, target, k, p, metric,
-          filter, select, tieBreak)
-      case _ =>
-        probes.foreach(Engine.validCount("probes", _))
-        require(!probes.contains(Engine.Advised),
-          "probes = Engine.Advised needs a coding — the advice is " +
-            "persisted per coding; pass the coding the advice was " +
-            "measured for")
-        Search.knn(store.loadTable(source), column,
-          spark.range(1).select(target.lit.as("__target__")),
-          requireMetric(metric), k, filter, select, tieBreak)
-    }
+    searchMulti(Seq(source), column, target, metric, coding, probes, k,
+      filter, select, tieBreak)
 
   /** Per-coding (parsed advice, coding metric, verified-at) memo behind
     * [[resolveAdvisedProbes]]: the freshness check is a full source
@@ -1663,18 +1635,6 @@ class Engine(val spark: SparkSession, val root: String,
   @transient private lazy val advisedCandMemo =
     new java.util.concurrent.ConcurrentHashMap[String,
       (Engine.PersistedCandidateAdvice, Option[String], Long)]()
-
-  /** Pass-through unless `candidates` is the [[Engine.Advised]]
-    * sentinel — then the persisted budget for (coding, tier, probes)
-    * via [[resolveAdvisedCandidates]]. */
-  private def advisedCand(candidates: Int, coding: String, tier: String,
-      probes: Int, source: String, column: String, k: Int,
-      metric: Option[String]): Int = {
-    Engine.validCount("candidates", candidates)
-    if (candidates != Engine.Advised) candidates
-    else resolveAdvisedCandidates(coding, tier, probes, source, column,
-      k, metric)
-  }
 
   /** The candidate budget `candidates = Engine.Advised` serves, or a
     * LOUD refusal — [[resolveAdvisedProbes]]' contract for the OTHER

@@ -564,24 +564,44 @@ object Index {
       column: String): Boolean =
     store.sidecarExists(s"${store.indexPath(source, column, codingName)}/_SUCCESS")
 
-  /** Read the indexed copy: source schema ⊕ `__CODED_ID__: long`
-    * (reference V7 `index.py:19-34`, minus the positional join). The
+  /** Read a tier's cell-partitioned copy (ivf | pq | sq | bq): source
+    * schema ⊕ the tier's code column ⊕ `__CODED_ID__: long`. The
     * internal provenance column is stripped — it exists for [[repair]],
     * not for queries. */
-  def load(store: Store, codingName: String, source: String, column: String): DataFrame = {
-    val df = store.spark.read.parquet(store.indexPath(source, column, codingName))
-    // partition-column discovery types the cell id as int; contract says long
-    df.withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol)
-  }
+  private def loadTier(store: Store, codingName: String, source: String,
+      column: String, tier: String): DataFrame =
+    store.spark.read.parquet(tierPath(store, codingName, source, column, tier))
+      // partition-column discovery types the cell id as int; contract says long
+      .withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol)
+
+  /** Read the indexed copy: source schema ⊕ `__CODED_ID__: long`
+    * (reference V7 `index.py:19-34`, minus the positional join). */
+  def load(store: Store, codingName: String, source: String, column: String): DataFrame =
+    loadTier(store, codingName, source, column, "ivf")
 
   /** Partition-prune to the probed cells — skipped entirely at full
     * probes, where the IN-SET predicate prunes nothing and would only
-    * ship a numCells-element filter in every task (searchRerank's
-    * existing behavior, now shared by every probed path). */
+    * ship a numCells-element filter in every task. */
   private[graft] def pruneToCells(df: DataFrame, cells: Array[Long],
       numCells: Long): DataFrame =
     if (cells.length >= numCells) df
     else df.filter(col(CodeCol).isin(cells.toIndexedSeq: _*))
+
+  /** Budgets reaching the index are resolved counts: the
+    * [[graft.api.Engine.Advised]] sentinel is the engine's to resolve,
+    * and 0 or a negative would silently rank no cell and return no
+    * rows. */
+  private def requireCount(name: String, v: Int): Unit =
+    require(v >= 1, s"invalid $name $v: pass a count >= 1")
+
+  /** The shared tail of every single-target search: optional
+    * projection (the distance column always kept), then top-k by
+    * distance and `tieBreak`. */
+  private def topK(scored: DataFrame, k: Int, select: Option[Seq[String]],
+      tieBreak: Seq[String]): DataFrame =
+    select.fold(scored)(cols => scored.select((cols :+ Search.DistCol).map(col): _*))
+      .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
+      .limit(k)
 
   /** Probed top-k search (reference V8 with coding+probes,
     * `index.py:113-126`): rank cells driver-side from the coding, prune to
@@ -600,32 +620,100 @@ object Index {
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
       tieBreak: Seq[String] = Nil): DataFrame = {
+    requireCount("probes", probes)
     val coding = store.loadCoding(codingName)
     val m = metric.getOrElse(coding.config.metric)
     val cells = coding.rankCells(target.doubles, probes)
-    val indexed = load(store, codingName, source, column)
-    val pruned = pruneToCells(indexed, cells, coding.numCells)
+    val pruned = pruneToCells(load(store, codingName, source, column),
+      cells, coding.numCells)
     val base = filter.fold(pruned)(pruned.filter)
-    val withDist = base.withColumn(Search.DistCol,
-      vector_distance(col(column), target.lit, m))
-    val projected = select.fold(withDist)(cols =>
-      withDist.select((cols :+ Search.DistCol).map(col): _*))
-    projected.orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*).limit(k)
+    topK(base.withColumn(Search.DistCol,
+      vector_distance(col(column), target.lit, m)), k, select, tieBreak)
   }
 
-  /** Two-stage retrieve-rerank search (IVF-ADC shape: Jégou et al.'s
-    * asymmetric distance over the coarse codes, then exact rerank).
-    *
-    * Stage 1 scores rows by their CELL's additive score — computed from
-    * `__CODED_ID__` alone via a broadcast k^n lookup — over a projection
-    * of (id, code) ONLY, optionally partition-pruned to the `probes`
-    * nearest cells: at 100 TB the coarse TakeOrdered carries a few bytes
-    * per row, never the float vectors. Stage 2 broadcast-joins the
-    * `candidates` surviving ids back against the (pruned) index and
-    * re-scores them exactly on the raw vectors — the same shape as
-    * [[searchIvfPq]]. With full probes and `candidates` ≥ the corpus this
-    * equals exact search; smaller values trade recall for a bounded
-    * rerank set. `idCol` must be unique per row.
+  // ——— two-pass probed search: one body, four candidate tiers ———
+
+  /** A candidate tier of the two-pass probed search — the IVFADC plan
+    * (Jégou et al., TPAMI 2011): a codes-only coarse pass over the
+    * probed cells keeps the best `candidates` rows, and only those
+    * survivors are read back and scored exactly. [[twoPass]] (one
+    * target) and [[candidateJoin]] (a query batch) run every step; a
+    * tier supplies only what differs:
+    *   - `name`, its cell-partitioned copy (a [[tierPath]] key), and
+    *     `codes`, the column its coarse pass reads besides (id, cell);
+    *   - `metric`, the exact-rerank metric;
+    *   - `score`, the coarse score of a row against one target over
+    *     the probed cells;
+    *   - `querySide`, for a batch: the broadcast (query, cell) rows cut
+    *     from the exploded queries to the columns the score reads, and
+    *     that score over the joined row;
+    *   - `perReplicaExtraBytes`, broadcast bytes per (query, cell) row
+    *     beyond the vector ([[Search.chunkByBroadcastSize]]).
+    * The coarse tie order is the caller's to pick. */
+  private final case class Tier(
+      name: String,
+      codes: Option[String],
+      metric: String,
+      score: (graft.api.TargetVector, Array[Long]) => Column,
+      querySide: (DataFrame, String, String) => (DataFrame, Column),
+      perReplicaExtraBytes: Long = 0L)
+
+  /** Opens a tier of (coding, source, column) under an optional metric
+    * override: loads its sidecar and resolves its metric rule. */
+  private type TierOf =
+    (Store, String, String, String, Coding, Option[String]) => Tier
+
+  private val CellCol = "__cell__"
+  private val CellRankCol = "__cell_rank__"
+  private val CoarseCol = "__coarse__"
+
+  /** The one body of the single-target two-pass searches: load the
+    * coding and rank the cells (`probes = None` ranks all of them);
+    * prune the tier copy to the probed cells; apply the filter — to
+    * BOTH passes, since it is pushed into the coarse scan, so the
+    * candidate budget is spent on qualifying rows only; score the
+    * (id, cell, codes) projection and keep the best `candidates` ids
+    * (TakeOrdered, no full sort), ties broken on `coarseTies`;
+    * broadcast-join those ids back against the same pruned rows; score
+    * them exactly and take the top-k. `idCol` must be unique per row. */
+  private def twoPass(tierOf: TierOf, coarseTies: Seq[String],
+      store: Store, codingName: String, source: String, column: String,
+      target: graft.api.TargetVector, k: Int, probes: Option[Int],
+      candidates: Int, idCol: String, metric: Option[String],
+      filter: Option[Column], select: Option[Seq[String]],
+      tieBreak: Seq[String]): DataFrame = {
+    probes.foreach(requireCount("probes", _))
+    requireCount("candidates", candidates)
+    val coding = store.loadCoding(codingName)
+    val tier = tierOf(store, codingName, source, column, coding, metric)
+    val cells = coding.rankCells(target.doubles,
+      probes.getOrElse(coding.numCells.toInt))
+    val probed = pruneToCells(
+      loadTier(store, codingName, source, column, tier.name),
+      cells, coding.numCells)
+    val pruned = filter.fold(probed)(probed.filter)
+    val coarseIds = pruned
+      .select((Seq(idCol, CodeCol) ++ tier.codes ++ coarseTies).distinct.map(col): _*)
+      .withColumn(CoarseCol, tier.score(target, cells))
+      .orderBy(col(CoarseCol).asc +: coarseTies.map(col(_).asc): _*)
+      .limit(candidates)
+      .select(idCol)
+    val reranked = pruned.join(broadcast(coarseIds), Seq(idCol))
+      .withColumn(Search.DistCol,
+        vector_distance(col(column), target.lit, tier.metric))
+    topK(tier.codes.fold(reranked)(reranked.drop), k, select, tieBreak)
+  }
+
+  /** Two-stage retrieve-rerank search over the plain IVF copy: the
+    * [[twoPass]] plan with each row's coarse score its CELL's rank —
+    * computed from `__CODED_ID__` alone via a broadcast k^n lookup — so
+    * the coarse pass projects (id, code) ONLY, optionally partition-
+    * pruned to the `probes` nearest cells: at 100 TB the coarse
+    * TakeOrdered carries a few bytes per row, never the float vectors.
+    * Coarse ties break on `tieBreak`. With full probes and
+    * `candidates` ≥ the corpus this equals exact search; smaller values
+    * trade recall for a bounded rerank set. `idCol` must be unique per
+    * row.
     */
   def searchRerank(
       store: Store,
@@ -640,42 +728,23 @@ object Index {
       metric: Option[String] = None,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    val coding = store.loadCoding(codingName)
-    val m = metric.getOrElse(coding.config.metric)
-    // driver-side k^n score table (capped by CoderConfig.numCells), shipped
-    // as a map literal so the rank lookup stays inside codegen (no UDF on
-    // the coarse path); cells absent from the coding rank last
-    val cells = coding.rankCells(target.doubles,
-      probes.getOrElse(coding.numCells.toInt))
-    val scoreOfCell: Map[Long, Int] = cells.zipWithIndex.toMap // rank = score order
-    val indexed = load(store, codingName, source, column)
-    val prunedAll =
-      if (cells.length < coding.numCells)
-        indexed.filter(col(CodeCol).isin(cells.toIndexedSeq: _*))
-      else indexed
-    // predicate applies to BOTH passes (pushed into the coarse scan, so
-    // the candidate budget is spent on qualifying rows — same contract
-    // as searchIvfPq)
-    val pruned = filter.fold(prunedAll)(prunedAll.filter)
-    val coarseCols = (Seq(idCol, CodeCol) ++ tieBreak).distinct.map(col)
-    val coarseIds = pruned
-      .select(coarseCols: _*)
-      .withColumn("__cell_rank__",
-        coalesce(try_element_at(typedLit(scoreOfCell), col(CodeCol)),
-          lit(Int.MaxValue)))
-      .orderBy(col("__cell_rank__").asc +: tieBreak.map(col(_).asc): _*)
-      .limit(candidates)
-      .select(idCol)
-    val reranked = pruned.join(broadcast(coarseIds), Seq(idCol))
-      .withColumn(Search.DistCol,
-        vector_distance(col(column), target.lit, m))
-    val projected = select.fold(reranked)(cols =>
-      reranked.select((cols :+ Search.DistCol).map(col): _*))
-    projected
-      .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
-      .limit(k)
-  }
+      tieBreak: Seq[String] = Nil): DataFrame =
+    twoPass(rerankTier, tieBreak, store, codingName, source, column, target,
+      k, probes, candidates, idCol, metric, filter, select, tieBreak)
+
+  /** The retrieve-rerank tier: the rank of a row's cell in the probe
+    * list is its coarse score — single-target as a map literal, so the
+    * lookup stays inside codegen (no UDF on the coarse path; cells
+    * outside the ranking rank last), batch as the `posexplode` position
+    * the broadcast join key carries (no vector math at all). */
+  private def rerankTier(store: Store, codingName: String, source: String,
+      column: String, coding: Coding, metric: Option[String]): Tier =
+    Tier("ivf", None, metric.getOrElse(coding.config.metric),
+      (_, cells) => coalesce(
+        try_element_at(typedLit(cells.zipWithIndex.toMap), col(CodeCol)),
+        lit(Int.MaxValue)),
+      (q, qid, _) => (q.select(col(qid), col(CellRankCol), col(CellCol)),
+        col(CellRankCol)))
 
   // ——— IVF+PQ: cell-partitioned layout + per-row PQ codes ———
 
@@ -887,12 +956,10 @@ object Index {
     graft.coder.PQ.fromJsonBytes(
       store.readSidecar(pqSidecar(store.pqIndexPath(source, column, codingName))))
 
-  def loadPq(store: Store, codingName: String, source: String, column: String): DataFrame = {
-    val df = store.spark.read.parquet(store.pqIndexPath(source, column, codingName))
-    df.withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol)
-  }
+  def loadPq(store: Store, codingName: String, source: String, column: String): DataFrame =
+    loadTier(store, codingName, source, column, "pq")
 
-  /** Probed IVF+PQ search, two distributed passes:
+  /** Probed IVF+PQ search, the [[twoPass]] plan at the ADC tier:
     *   1. coarse: partition-pruned scan of (idCol, code) only — ADC ranks
     *      every surviving row via m byte-indexed table lookups, keeps the
     *      best `candidates` ids (TakeOrdered, no full sort);
@@ -917,42 +984,45 @@ object Index {
       metric: Option[String] = None,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    val coding = store.loadCoding(codingName)
+      tieBreak: Seq[String] = Nil): DataFrame =
+    twoPass(pqTier, Seq(idCol), store, codingName, source, column, target,
+      k, Some(probes), candidates, idCol, metric, filter, select, tieBreak)
+
+  /** The ADC tier. Residual codebooks score against per-cell query
+    * tables (IVFADC), flat codebooks against one table; the fallback
+    * anchor (cells the build never saw) must match what an encode of a
+    * new row in that cell would use — see [[residualFallbackAnchor]].
+    * Single-target the table ships as an expression literal; batch each
+    * (query, probed cell) builds its table ONCE on the broadcast side
+    * ([[graft.coder.PQ.adcLut]]) and rows score with the codegen'd
+    * [[graft.functions.PQAdcScoreLut]] — which charges m·k doubles per
+    * replicated row to the broadcast estimate (at m=64, k=256 ~130 KB
+    * per replica, dwarfing the vector itself). */
+  private def pqTier(store: Store, codingName: String, source: String,
+      column: String, coding: Coding, metric: Option[String]): Tier = {
     val cb = loadPqCodebooks(store, codingName, source, column)
     val m = graft.core.Metrics.canonical(metric.getOrElse(cb.canonicalMetric))
     require(m == cb.canonicalMetric,
       s"metric '$m' does not match the PQ codebooks' training metric " +
         s"'${cb.canonicalMetric}' — rebuild the PQ index under '$m'")
-    val cells = coding.rankCells(target.doubles, probes)
-    val prunedAll = pruneToCells(loadPq(store, codingName, source, column),
-      cells, coding.numCells)
-    // the predicate applies to BOTH passes (pushed into the coarse scan,
-    // so the candidate budget is spent on qualifying rows only)
-    val pruned = filter.fold(prunedAll)(prunedAll.filter)
-    // residual codebooks score against per-cell query tables (IVFADC);
-    // flat codebooks use the single-table ADC. The fallback anchor (cells
-    // the build never saw) must match what an encode of a new row in that
-    // cell would use — see residualFallbackAnchor.
-    val adc =
-      if (cb.residual)
-        graft.coder.PQ.adcScoreCellsExpr(col(PqCol), col(CodeCol), cb,
-          target.doubles, cells, residualFallbackAnchor(cb, coding))
-      else graft.coder.PQ.adcScoreExpr(col(PqCol), cb, target.doubles)
-    val coarseIds = pruned
-      .select(col(idCol), col(PqCol), col(CodeCol))
-      .withColumn("__ADC__", adc)
-      .orderBy(col("__ADC__").asc, col(idCol).asc)
-      .limit(candidates)
-      .select(idCol)
-    val reranked = pruned.join(broadcast(coarseIds), Seq(idCol))
-      .withColumn(Search.DistCol, vector_distance(col(column), target.lit, m))
-      .drop(PqCol)
-    val projected = select.fold(reranked)(cols =>
-      reranked.select((cols :+ Search.DistCol).map(col): _*))
-    projected
-      .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
-      .limit(k)
+    val fallback = residualFallbackAnchor(cb, coding)
+    val lutUdf = udf((v: Seq[Double], cell: Long) =>
+      graft.coder.PQ.adcLut(cb, fallback, v.toArray, cell).toSeq)
+    Tier("pq", Some(PqCol), m,
+      (t, cells) =>
+        if (cb.residual)
+          graft.coder.PQ.adcScoreCellsExpr(col(PqCol), col(CodeCol), cb,
+            t.doubles, cells, fallback)
+        else graft.coder.PQ.adcScoreExpr(col(PqCol), cb, t.doubles),
+      (q, qid, qvec) => (
+        q.select(col(qid), col(CellCol),
+          lutUdf(col(qvec).cast("array<double>"), col(CellCol)).as("__LUT__")),
+        org.apache.spark.sql.GraftShims.column(
+          graft.functions.PQAdcScoreLut(
+            org.apache.spark.sql.GraftShims.expression(col(PqCol)),
+            org.apache.spark.sql.GraftShims.expression(col("__LUT__")),
+            cb.m, cb.k, graft.coder.PQ.adcSqrtFinish(cb)))),
+      perReplicaExtraBytes = cb.m.toLong * cb.k * 8)
   }
 
   // ——— IVF+SQ8: cell-partitioned layout + 8-bit scalar-quantized vectors ———
@@ -1216,16 +1286,16 @@ object Index {
     } finally delta.unpersist(blocking = false)
   }
 
-  /** Probed IVF+SQ8 search — the [[searchIvfPq]] two-pass shape with the
-    * ADC stage replaced by exact distance over the DEQUANTIZED 8-bit
-    * copy: the coarse pass reads (idCol, d-byte codes) over pruned
-    * partitions only, ranks with `vector_distance(dequantize(codes),
-    * target)` (both codegen'd, fused in one projection), then the float
-    * vectors are read back just for the `candidates` survivors and
-    * scored exactly. With probes = numCells and candidates ≥ corpus this
-    * is exact (the oracle contract); at bounded budgets the 8-bit
-    * ranking error (≤ range/510 per element) makes candidate recall far
-    * tighter than PQ's at 4× PQ's footprint. */
+  /** Probed IVF+SQ8 search — the [[twoPass]] plan with the coarse score
+    * an exact distance over the DEQUANTIZED 8-bit copy: the coarse pass
+    * reads (idCol, d-byte codes) over pruned partitions only, ranks with
+    * `vector_distance(dequantize(codes), target)` (both codegen'd, fused
+    * in one projection), then the float vectors are read back just for
+    * the `candidates` survivors and scored exactly. With probes =
+    * numCells and candidates ≥ corpus this is exact (the oracle
+    * contract); at bounded budgets the 8-bit ranking error (≤ range/510
+    * per element) makes candidate recall far tighter than PQ's at 4×
+    * PQ's footprint. */
   def searchSq(
       store: Store,
       codingName: String,
@@ -1239,32 +1309,22 @@ object Index {
       metric: Option[String] = None,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    val coding = store.loadCoding(codingName)
+      tieBreak: Seq[String] = Nil): DataFrame =
+    twoPass(sqTier, Seq(idCol), store, codingName, source, column, target,
+      k, Some(probes), candidates, idCol, metric, filter, select, tieBreak)
+
+  /** The SQ8 tier: distance over the dequantized codes (per-cell param
+    * blocks selected by `__CODED_ID__`), against the target literal or
+    * each query's full-precision vector. */
+  private def sqTier(store: Store, codingName: String, source: String,
+      column: String, coding: Coding, metric: Option[String]): Tier = {
     val params = loadSqParams(store, codingName, source, column)
-    val m = graft.core.Metrics.canonical(
-      metric.getOrElse(coding.config.metric))
-    val cells = coding.rankCells(target.doubles, probes)
-    val prunedAll = pruneToCells(store.spark.read
-      .parquet(store.sqIndexPath(source, column, codingName))
-      .withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol),
-      cells, coding.numCells)
-    val pruned = filter.fold(prunedAll)(prunedAll.filter)
-    val coarseIds = pruned
-      .select(col(idCol), col(SqCol), col(CodeCol))
-      .withColumn("__SQD__", vector_distance(
-        dequantizeSetCol(col(SqCol), col(CodeCol), params), target.lit, m))
-      .orderBy(col("__SQD__").asc, col(idCol).asc)
-      .limit(candidates)
-      .select(idCol)
-    val reranked = pruned.join(broadcast(coarseIds), Seq(idCol))
-      .withColumn(Search.DistCol, vector_distance(col(column), target.lit, m))
-      .drop(SqCol)
-    val projected = select.fold(reranked)(cols =>
-      reranked.select((cols :+ Search.DistCol).map(col): _*))
-    projected
-      .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
-      .limit(k)
+    val m = graft.core.Metrics.canonical(metric.getOrElse(coding.config.metric))
+    val decoded = dequantizeSetCol(col(SqCol), col(CodeCol), params)
+    Tier("sq", Some(SqCol), m,
+      (t, _) => vector_distance(decoded, t.lit, m),
+      (q, qid, qvec) => (q.select(col(qid), col(CellCol), col(qvec)),
+        vector_distance(decoded, col(qvec), m)))
   }
 
   // ——— IVF + BQ (1-bit binary quantization) tier ———
@@ -1544,9 +1604,9 @@ object Index {
     } finally delta.unpersist(blocking = false)
   }
 
-  /** Probed IVF+BQ search — the [[searchSq]] two-pass shape at the 1-bit
-    * tier: the coarse pass reads (idCol, ceil(d/8)-byte codes) over
-    * pruned partitions only and ranks ASYMMETRICALLY —
+  /** Probed IVF+BQ search — the [[twoPass]] plan at the 1-bit tier: the
+    * coarse pass reads (idCol, ceil(d/8)-byte codes) over pruned
+    * partitions only and ranks ASYMMETRICALLY —
     * `vector_distance(dequantize_sign_bits(codes), target, metric)`,
     * the codegen'd conditional-mean reconstruction fused with the
     * distance in one projection — so the full-precision query and
@@ -1572,27 +1632,33 @@ object Index {
       metric: Option[String] = None,
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
-      tieBreak: Seq[String] = Nil): DataFrame = {
-    val coding = store.loadCoding(codingName)
+      tieBreak: Seq[String] = Nil): DataFrame =
+    twoPass(bqTier, Seq(idCol), store, codingName, source, column, target,
+      k, Some(probes), candidates, idCol, metric, filter, select, tieBreak)
+
+  /** The BQ tier: asymmetric distance over the conditional-mean
+    * reconstruction of the sign bits; a legacy thresholds-only sidecar
+    * ranks by symmetric Hamming distance to the query's own code, packed
+    * under the stored thresholds (driver-side for one target, on the
+    * broadcast side for a batch). */
+  private def bqTier(store: Store, codingName: String, source: String,
+      column: String, coding: Coding, metric: Option[String]): Tier = {
     val params = loadBqParams(store, codingName, source, column)
     val thresholds = params.global.thresholds
-    val m = graft.core.Metrics.canonical(
-      metric.getOrElse(coding.config.metric))
-    require(target.length == thresholds.length,
-      s"searchBq: target has ${target.length} dims, index has ${thresholds.length}")
-    val cells = coding.rankCells(target.doubles, probes)
-    val prunedAll = pruneToCells(store.spark.read
-      .parquet(store.bqIndexPath(source, column, codingName))
-      .withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol),
-      cells, coding.numCells)
-    val pruned = filter.fold(prunedAll)(prunedAll.filter)
-    val coarseScore: Column =
-      if (params.perCell || params.global.asymmetric)
-        vector_distance(
-          dequantizeSignBitsSetCol(col(BqCol), col(CodeCol), params),
-          target.lit, m)
-      else {
-        val v = target.doubles
+    val m = graft.core.Metrics.canonical(metric.getOrElse(coding.config.metric))
+    def requireDims(t: graft.api.TargetVector): Unit =
+      require(t.length == thresholds.length,
+        s"searchBq: target has ${t.length} dims, index has ${thresholds.length}")
+    if (params.perCell || params.global.asymmetric) {
+      val decoded = dequantizeSignBitsSetCol(col(BqCol), col(CodeCol), params)
+      Tier("bq", Some(BqCol), m,
+        (t, _) => { requireDims(t); vector_distance(decoded, t.lit, m) },
+        (q, qid, qvec) => (q.select(col(qid), col(CellCol), col(qvec)),
+          vector_distance(decoded, col(qvec), m)))
+    } else Tier("bq", Some(BqCol), m,
+      (t, _) => {
+        requireDims(t)
+        val v = t.doubles
         val code = new Array[Byte]((v.length + 7) / 8)
         var i = 0
         while (i < v.length) {
@@ -1603,21 +1669,15 @@ object Index {
           graft.functions.HammingDistance(
             org.apache.spark.sql.GraftShims.expression(col(BqCol)),
             code.toIndexedSeq)).cast("double")
-      }
-    val coarseIds = pruned
-      .select(col(idCol), col(BqCol), col(CodeCol))
-      .withColumn("__BQD__", coarseScore)
-      .orderBy(col("__BQD__").asc, col(idCol).asc)
-      .limit(candidates)
-      .select(idCol)
-    val reranked = pruned.join(broadcast(coarseIds), Seq(idCol))
-      .withColumn(Search.DistCol, vector_distance(col(column), target.lit, m))
-      .drop(BqCol)
-    val projected = select.fold(reranked)(cols =>
-      reranked.select((cols :+ Search.DistCol).map(col): _*))
-    projected
-      .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
-      .limit(k)
+      },
+      (q, qid, qvec) => (
+        q.select(col(qid), col(CellCol),
+          packSignBitsCol(col(qvec), thresholds).as("__QBQ__")),
+        org.apache.spark.sql.GraftShims.column(
+          graft.functions.HammingDistancePair(
+            org.apache.spark.sql.GraftShims.expression(col(BqCol)),
+            org.apache.spark.sql.GraftShims.expression(col("__QBQ__"))))
+          .cast("double")))
   }
 
   /** A k^n-capped probe union is still a planning hazard as an IN-SET
@@ -1631,7 +1691,7 @@ object Index {
     * covering EVERY cell is exempt: [[pruneToCells]] then skips the
     * IN-SET filter entirely, so there is nothing hazardous to build. */
   private def probedCellUnion(exploded: DataFrame, numCells: Long): Array[Long] = {
-    val cells = exploded.select("__cell__").distinct().collect().map(_.getLong(0))
+    val cells = exploded.select(CellCol).distinct().collect().map(_.getLong(0))
     require(cells.length <= ProbedCellUnionCap || cells.length >= numCells,
       s"the union of probed cells across this query batch (${cells.length}) " +
         s"exceeds $ProbedCellUnionCap — an IN-SET partition filter that " +
@@ -1673,6 +1733,7 @@ object Index {
       metric: Option[String] = None,
       tieBreak: Seq[String] = Nil,
       broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame = {
+    requireCount("probes", probes)
     val qs = queries.select(col(queryIdCol), col(queryVecCol))
     Search.chunkByBroadcastSize(qs, queryIdCol, queryVecCol, probes, broadcastCapBytes)
       .map(ch => ivfKnnJoinChunk(store, codingName, source, column, ch,
@@ -1698,7 +1759,7 @@ object Index {
     val m = metric.getOrElse(coding.config.metric)
     val rankCellsUdf = udf((v: Seq[Double]) => coding.rankCells(v.toArray, probes))
     val exploded = queries
-      .withColumn("__cell__", explode(rankCellsUdf(col(queryVecCol).cast("array<double>"))))
+      .withColumn(CellCol, explode(rankCellsUdf(col(queryVecCol).cast("array<double>"))))
     val cells = probedCellUnion(exploded, coding.numCells)
     val corpus = pruneToCells(load(store, codingName, source, column),
       cells, coding.numCells)
@@ -1707,7 +1768,7 @@ object Index {
     val coarseCols = (idCol +: tieBreak).distinct
     val scored = corpus
       .select((coarseCols :+ column).distinct.map(col) :+ col(CodeCol): _*)
-      .join(broadcast(exploded), col(CodeCol) === col("__cell__"))
+      .join(broadcast(exploded), col(CodeCol) === col(CellCol))
       .withColumn(Search.DistCol, vector_distance(col(column), col(queryVecCol), m))
       .select(col(queryIdCol) +: col(Search.DistCol) +: coarseCols.map(col): _*)
     val w = Window.partitionBy(col(queryIdCol))
@@ -1721,83 +1782,58 @@ object Index {
     broadcast(topk).join(corpus, Seq(idCol))
   }
 
-  /** Batch k-NN join over the SQ8 index: [[ivfKnnJoin]]'s shape with the
-    * expensive stage on the QUANTIZED copy — the per-cell
-    * corpus×queries join carries (id, cell, d-byte codes) instead of 4d
-    * float bytes (4× less data through the join and the per-query
-    * window), then raw vectors are read back only for each query's
-    * `candidates` coarse survivors and scored exactly. With
+  /** The one body of the batch two-pass joins — [[ivfKnnJoin]]'s scale
+    * shape with a coarse pass. Each query explodes to its ranked probe
+    * cells (the position in the probe list rides along as
+    * `__cell_rank__`); the union of probed cells prunes the tier copy
+    * ([[probedCellUnion]]); the per-cell broadcast join scores
+    * (id, cell, codes) against the tier's q-side MAP-SIDE, and the
+    * per-query window keeps each query's best `candidates` ids (coarse
+    * ties on `idCol`, so candidate selection is deterministic) while
+    * exchanging SCALARS only — neither vectors, codes nor tables cross
+    * the shuffle; [[rerankSurvivors]] scores the survivors exactly. With
     * probes = numCells and candidates ≥ corpus size this equals the
-    * exact k-NN join (the oracle contract); bounded budgets inherit
-    * SQ8's near-exact ranking, so small `candidates` already recover
-    * the true top-k. Query batches estimated past `broadcastCapBytes`
-    * are hash-chunked (see [[ivfKnnJoin]]). */
-  def sqKnnJoin(
-      store: Store,
-      codingName: String,
-      source: String,
-      column: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      k: Int,
-      probes: Int,
-      candidates: Int,
-      idCol: String,
-      metric: Option[String] = None,
-      tieBreak: Seq[String] = Nil,
-      broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame = {
+    * exact k-NN join (the oracle contract). Query batches estimated past
+    * `broadcastCapBytes` — vector plus the tier's per-replica bytes — are
+    * hash-chunked and the per-chunk top-k unioned (see [[ivfKnnJoin]]). */
+  private def candidateJoin(tierOf: TierOf, store: Store, codingName: String,
+      source: String, column: String, queries: DataFrame,
+      queryIdCol: String, queryVecCol: String, k: Int, probes: Int,
+      candidates: Int, idCol: String, metric: Option[String],
+      tieBreak: Seq[String], broadcastCapBytes: Long): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    requireCount("probes", probes)
+    requireCount("candidates", candidates)
     require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
+    val coding = store.loadCoding(codingName)
+    val tier = tierOf(store, codingName, source, column, coding, metric)
+    val rankCellsUdf = udf((v: Seq[Double]) => coding.rankCells(v.toArray, probes))
     val qs = queries.select(col(queryIdCol), col(queryVecCol))
-    Search.chunkByBroadcastSize(qs, queryIdCol, queryVecCol, probes, broadcastCapBytes)
-      .map(ch => sqKnnJoinChunk(store, codingName, source, column, ch,
-        queryIdCol, queryVecCol, k, probes, candidates, idCol, metric, tieBreak))
+    Search.chunkByBroadcastSize(qs, queryIdCol, queryVecCol, probes,
+        broadcastCapBytes, tier.perReplicaExtraBytes)
+      .map { chunk =>
+        val exploded = chunk.select(col(queryIdCol), col(queryVecCol),
+          posexplode(rankCellsUdf(col(queryVecCol).cast("array<double>")))
+            .as(Seq(CellRankCol, CellCol)))
+        val corpus = pruneToCells(
+          loadTier(store, codingName, source, column, tier.name),
+          probedCellUnion(exploded, coding.numCells), coding.numCells)
+        val (qSide, score) = tier.querySide(exploded, queryIdCol, queryVecCol)
+        val coarse = corpus.select((Seq(idCol, CodeCol) ++ tier.codes).map(col): _*)
+          .join(broadcast(qSide), col(CodeCol) === col(CellCol))
+          .select(col(queryIdCol), col(idCol), score.as(CoarseCol))
+        val w = Window.partitionBy(col(queryIdCol))
+          .orderBy(col(CoarseCol).asc, col(idCol).asc)
+        val survivors = coarse.withColumn("__crank__", row_number().over(w))
+          .filter(col("__crank__") <= candidates)
+          .select(col(queryIdCol), col(idCol))
+        rerankSurvivors(survivors, corpus, chunk, queryIdCol, queryVecCol,
+          column, idCol, k, tier.metric, tieBreak)
+      }
       .reduce(_.unionByName(_))
   }
 
-  private def sqKnnJoinChunk(
-      store: Store,
-      codingName: String,
-      source: String,
-      column: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      k: Int,
-      probes: Int,
-      candidates: Int,
-      idCol: String,
-      metric: Option[String],
-      tieBreak: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val coding = store.loadCoding(codingName)
-    val params = loadSqParams(store, codingName, source, column)
-    val m = graft.core.Metrics.canonical(
-      metric.getOrElse(coding.config.metric))
-    val rankCellsUdf = udf((v: Seq[Double]) => coding.rankCells(v.toArray, probes))
-    val exploded = queries
-      .withColumn("__cell__",
-        explode(rankCellsUdf(col(queryVecCol).cast("array<double>"))))
-    val cells = probedCellUnion(exploded, coding.numCells)
-    val sqDf = pruneToCells(store.spark.read
-      .parquet(store.sqIndexPath(source, column, codingName))
-      .withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol),
-      cells, coding.numCells)
-    // coarse: only (id, cell, codes) ride the per-cell join and window
-    val coarse = sqDf.select(col(idCol), col(CodeCol), col(SqCol))
-      .join(broadcast(exploded), col(CodeCol) === col("__cell__"))
-      .withColumn("__SQD__", vector_distance(
-        dequantizeSetCol(col(SqCol), col(CodeCol), params), col(queryVecCol), m))
-    val wCoarse = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("__SQD__").asc, col(idCol).asc)
-    val survivors = coarse.withColumn("__crank__", row_number().over(wCoarse))
-      .filter(col("__crank__") <= candidates)
-      .select(col(queryIdCol), col(idCol))
-    rerankSurvivors(survivors, sqDf, queries, queryIdCol, queryVecCol,
-      column, idCol, k, m, tieBreak)
-  }
-
-  /** Shared rerank tail of the sq/bq/pq/rerank batch kNN joins — the
+  /** Shared rerank tail of the batch two-pass joins — the
     * [[ivfKnnJoin]] scale discipline applied to a candidate set: the
     * survivors (≤ queries·candidates scalar id pairs) broadcast back
     * against the pruned corpus so the corpus side NEVER shuffles by id,
@@ -1832,17 +1868,38 @@ object Index {
     broadcast(topk).join(corpus.select(col(idCol), col(column)), Seq(idCol))
   }
 
-  /** Batch k-NN join over the BQ index: [[sqKnnJoin]]'s shape at the
-    * 1-bit tier — the per-cell corpus×queries join carries (id, cell,
-    * ceil(d/8)-byte sign codes) and ranks with the codegen'd
-    * [[graft.functions.HammingDistancePair]] popcount (32× less data
-    * through the join and the per-query window than raw floats; the
-    * query side pre-packs its codes under the stored thresholds), then
-    * raw vectors are read back only for each query's `candidates`
-    * coarse survivors and scored exactly under `metric`. With
-    * probes = numCells and candidates ≥ corpus size this equals the
-    * exact k-NN join (the oracle contract). Query batches estimated
-    * past `broadcastCapBytes` are hash-chunked (see [[ivfKnnJoin]]). */
+  /** Batch k-NN join over the SQ8 index: the [[candidateJoin]] plan with
+    * [[searchSq]]'s coarse score — the per-cell corpus×queries join
+    * carries (id, cell, d-byte codes) instead of 4d float bytes (4× less
+    * data through the join), then raw vectors are read back only for
+    * each query's `candidates` coarse survivors. Bounded budgets inherit
+    * SQ8's near-exact ranking, so small `candidates` already recover the
+    * true top-k. */
+  def sqKnnJoin(
+      store: Store,
+      codingName: String,
+      source: String,
+      column: String,
+      queries: DataFrame,
+      queryIdCol: String,
+      queryVecCol: String,
+      k: Int,
+      probes: Int,
+      candidates: Int,
+      idCol: String,
+      metric: Option[String] = None,
+      tieBreak: Seq[String] = Nil,
+      broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame =
+    candidateJoin(sqTier, store, codingName, source, column, queries,
+      queryIdCol, queryVecCol, k, probes, candidates, idCol, metric,
+      tieBreak, broadcastCapBytes)
+
+  /** Batch k-NN join over the BQ index: the [[candidateJoin]] plan with
+    * [[searchBq]]'s coarse score — the per-cell join carries (id, cell,
+    * ceil(d/8)-byte sign codes), 32× less data than raw floats, and
+    * ranks asymmetrically against each query's full-precision vector
+    * (legacy sidecars: Hamming against the query's code, packed on the
+    * broadcast side under the stored thresholds). */
   def bqKnnJoin(
       store: Store,
       codingName: String,
@@ -1857,97 +1914,17 @@ object Index {
       idCol: String,
       metric: Option[String] = None,
       tieBreak: Seq[String] = Nil,
-      broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame = {
-    require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
-    val qs = queries.select(col(queryIdCol), col(queryVecCol))
-    Search.chunkByBroadcastSize(qs, queryIdCol, queryVecCol, probes, broadcastCapBytes)
-      .map(ch => bqKnnJoinChunk(store, codingName, source, column, ch,
-        queryIdCol, queryVecCol, k, probes, candidates, idCol, metric, tieBreak))
-      .reduce(_.unionByName(_))
-  }
-  private def bqKnnJoinChunk(
-      store: Store,
-      codingName: String,
-      source: String,
-      column: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      k: Int,
-      probes: Int,
-      candidates: Int,
-      idCol: String,
-      metric: Option[String],
-      tieBreak: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val coding = store.loadCoding(codingName)
-    val params = loadBqParams(store, codingName, source, column)
-    val m = graft.core.Metrics.canonical(
-      metric.getOrElse(coding.config.metric))
-    val rankCellsUdf = udf((v: Seq[Double]) => coding.rankCells(v.toArray, probes))
-    val exploded = queries
-      .withColumn("__cell__",
-        explode(rankCellsUdf(col(queryVecCol).cast("array<double>"))))
-    val cells = probedCellUnion(exploded, coding.numCells)
-    val bqDf = pruneToCells(store.spark.read
-      .parquet(store.bqIndexPath(source, column, codingName))
-      .withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol),
-      cells, coding.numCells)
-    // coarse: (id, cell, 1-bit codes) ride the per-cell join; the
-    // asymmetric score — vector_distance over the conditional-mean
-    // reconstruction vs each query's full-precision vector (legacy
-    // sidecars: symmetric hamming vs the query's packed code) — lands in
-    // the join projection, and the per-query window exchange carries
-    // SCALARS only: (queryId, id, score). Neither vectors nor codes
-    // cross the shuffle.
-    val (qSide, score) =
-      if (params.perCell || params.global.asymmetric)
-        (exploded.select(col(queryIdCol), col("__cell__"), col(queryVecCol)),
-          vector_distance(
-            dequantizeSignBitsSetCol(col(BqCol), col(CodeCol), params),
-            col(queryVecCol), m))
-      else {
-        val packed = exploded
-          .withColumn("__QBQ__",
-            packSignBitsCol(col(queryVecCol), params.global.thresholds))
-          .select(col(queryIdCol), col("__cell__"), col("__QBQ__"))
-        (packed, org.apache.spark.sql.GraftShims.column(
-          graft.functions.HammingDistancePair(
-            org.apache.spark.sql.GraftShims.expression(col(BqCol)),
-            org.apache.spark.sql.GraftShims.expression(col("__QBQ__"))))
-          .cast("double"))
-      }
-    val coarse = bqDf.select(col(idCol), col(CodeCol), col(BqCol))
-      .join(broadcast(qSide), col(CodeCol) === col("__cell__"))
-      .withColumn("__BQD__", score)
-      .select(col(queryIdCol), col(idCol), col("__BQD__"))
-    val wCoarse = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("__BQD__").asc, col(idCol).asc)
-    val survivors = coarse.withColumn("__crank__", row_number().over(wCoarse))
-      .filter(col("__crank__") <= candidates)
-      .select(col(queryIdCol), col(idCol))
-    // scale discipline of the rerank tail: see [[rerankSurvivors]]
-    rerankSurvivors(survivors, bqDf, queries, queryIdCol, queryVecCol,
-      column, idCol, k, m, tieBreak)
-  }
+      broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame =
+    candidateJoin(bqTier, store, codingName, source, column, queries,
+      queryIdCol, queryVecCol, k, probes, candidates, idCol, metric,
+      tieBreak, broadcastCapBytes)
 
-  /** Batch k-NN join over the IVF+PQ index: [[sqKnnJoin]]'s shape at the
-    * ADC tier — the per-cell corpus×queries join carries (id, cell,
-    * m-byte PQ codes) and ranks with the codegen'd
-    * [[graft.functions.PQAdcScoreLut]] (each query's per-cell lookup
-    * table is built ONCE on the broadcast side by
-    * [[graft.coder.PQ.adcLut]] — the [[searchIvfPq]] per-target table
-    * shipped as a column instead of an expression literal; residual
-    * codebooks get their per-cell IVFADC tables the same way), then raw
-    * vectors are read back only for each query's `candidates` coarse
-    * survivors and scored exactly under the codebooks' metric. With
-    * probes = numCells and candidates ≥ corpus size this equals the
-    * exact k-NN join (the oracle contract). Query batches estimated
-    * past `broadcastCapBytes` are hash-chunked (see [[ivfKnnJoin]]);
-    * the LUT adds m·k doubles per (query, probed cell) to the
-    * broadcast — at m=64,k=256 that is ~130 KB per replica, dwarfing
-    * the vector itself — so the chunk estimate charges m·k·8 bytes per
-    * replicated row on top of the vector payload. */
+  /** Batch k-NN join over the IVF+PQ index: the [[candidateJoin]] plan
+    * with [[searchIvfPq]]'s ADC score — the per-cell join carries (id,
+    * cell, m-byte PQ codes), and each query's per-cell lookup table is
+    * built once on the broadcast side, so the chunk estimate charges
+    * m·k·8 bytes per replicated row on top of the vector payload.
+    * Survivors rerank under the codebooks' metric. */
   def pqKnnJoin(
       store: Store,
       codingName: String,
@@ -1962,90 +1939,17 @@ object Index {
       idCol: String,
       metric: Option[String] = None,
       tieBreak: Seq[String] = Nil,
-      broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame = {
-    require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
-    val qs = queries.select(col(queryIdCol), col(queryVecCol))
-    // the broadcast q-side carries an m·k-double ADC LUT per (query,
-    // probed cell) — charge it per replica or a batch sized just under
-    // the cap on vectors alone ships a multi-GB broadcast
-    val cb = loadPqCodebooks(store, codingName, source, column)
-    val lutBytes = cb.m.toLong * cb.k * 8
-    Search.chunkByBroadcastSize(qs, queryIdCol, queryVecCol, probes,
-        broadcastCapBytes, perReplicaExtraBytes = lutBytes)
-      .map(ch => pqKnnJoinChunk(store, codingName, source, column, ch,
-        queryIdCol, queryVecCol, k, probes, candidates, idCol, metric, tieBreak))
-      .reduce(_.unionByName(_))
-  }
-
-  private def pqKnnJoinChunk(
-      store: Store,
-      codingName: String,
-      source: String,
-      column: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      k: Int,
-      probes: Int,
-      candidates: Int,
-      idCol: String,
-      metric: Option[String],
-      tieBreak: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val coding = store.loadCoding(codingName)
-    val cb = loadPqCodebooks(store, codingName, source, column)
-    val m = graft.core.Metrics.canonical(metric.getOrElse(cb.canonicalMetric))
-    require(m == cb.canonicalMetric,
-      s"metric '$m' does not match the PQ codebooks' training metric " +
-        s"'${cb.canonicalMetric}' — rebuild the PQ index under '$m'")
-    val rankCellsUdf = udf((v: Seq[Double]) => coding.rankCells(v.toArray, probes))
-    val exploded = queries
-      .withColumn("__cell__",
-        explode(rankCellsUdf(col(queryVecCol).cast("array<double>"))))
-    val cells = probedCellUnion(exploded, coding.numCells)
-    val pqDf = pruneToCells(loadPq(store, codingName, source, column),
-      cells, coding.numCells)
-    val fallback = residualFallbackAnchor(cb, coding)
-    val lutUdf = udf((v: Seq[Double], cell: Long) =>
-      graft.coder.PQ.adcLut(cb, fallback, v.toArray, cell).toSeq)
-    val qSide = exploded
-      .withColumn("__LUT__",
-        lutUdf(col(queryVecCol).cast("array<double>"), col("__cell__")))
-      .select(col(queryIdCol), col("__cell__"), col("__LUT__"))
-    // coarse: (id, cell, m-byte codes) ride the per-cell join, the LUT
-    // lookup lands in the join projection, and the per-query window
-    // exchange carries SCALARS only — neither vectors, codes, nor
-    // tables cross the shuffle
-    val adc = org.apache.spark.sql.GraftShims.column(
-      graft.functions.PQAdcScoreLut(
-        org.apache.spark.sql.GraftShims.expression(col(PqCol)),
-        org.apache.spark.sql.GraftShims.expression(col("__LUT__")),
-        cb.m, cb.k, graft.coder.PQ.adcSqrtFinish(cb)))
-    val coarse = pqDf.select(col(idCol), col(CodeCol), col(PqCol))
-      .join(broadcast(qSide), col(CodeCol) === col("__cell__"))
-      .withColumn("__ADC__", adc)
-      .select(col(queryIdCol), col(idCol), col("__ADC__"))
-    val wCoarse = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("__ADC__").asc, col(idCol).asc)
-    val survivors = coarse.withColumn("__crank__", row_number().over(wCoarse))
-      .filter(col("__crank__") <= candidates)
-      .select(col(queryIdCol), col(idCol))
-    // scale discipline of the rerank tail: see [[rerankSurvivors]]
-    rerankSurvivors(survivors, pqDf, queries, queryIdCol, queryVecCol,
-      column, idCol, k, m, tieBreak)
-  }
+      broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame =
+    candidateJoin(pqTier, store, codingName, source, column, queries,
+      queryIdCol, queryVecCol, k, probes, candidates, idCol, metric,
+      tieBreak, broadcastCapBytes)
 
   /** Batch retrieve-rerank k-NN join: [[searchRerank]]'s two-stage shape
-    * amortized over a query batch — stage 1 ranks rows by their CELL's
-    * position in each query's probe list (the additive coarse score,
-    * carried by the broadcast join key itself via `posexplode`: no
-    * per-query score table, no vector math at all), stage 2 reads raw
-    * vectors only for each query's `candidates` survivors and scores
-    * them exactly. With probes = numCells and candidates ≥ corpus size
-    * this equals the exact k-NN join (the oracle contract). Coarse ties
-    * inside one cell break on `idCol` — deterministic candidate
-    * selection, as [[sqKnnJoin]]. Query batches estimated past
-    * `broadcastCapBytes` are hash-chunked (see [[ivfKnnJoin]]). */
+    * amortized over a query batch by the [[candidateJoin]] plan — the
+    * coarse score is the cell's position in each query's probe list,
+    * carried by the broadcast join key itself (no per-query score table,
+    * no vector math at all). Coarse ties inside one cell break on
+    * `idCol`. */
   def rerankKnnJoin(
       store: Store,
       codingName: String,
@@ -2060,54 +1964,8 @@ object Index {
       idCol: String,
       metric: Option[String] = None,
       tieBreak: Seq[String] = Nil,
-      broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame = {
-    require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
-    val qs = queries.select(col(queryIdCol), col(queryVecCol))
-    Search.chunkByBroadcastSize(qs, queryIdCol, queryVecCol, probes, broadcastCapBytes)
-      .map(ch => rerankKnnJoinChunk(store, codingName, source, column, ch,
-        queryIdCol, queryVecCol, k, probes, candidates, idCol, metric, tieBreak))
-      .reduce(_.unionByName(_))
-  }
-
-  private def rerankKnnJoinChunk(
-      store: Store,
-      codingName: String,
-      source: String,
-      column: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      k: Int,
-      probes: Int,
-      candidates: Int,
-      idCol: String,
-      metric: Option[String],
-      tieBreak: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val coding = store.loadCoding(codingName)
-    val m = metric.getOrElse(coding.config.metric)
-    val rankCellsUdf = udf((v: Seq[Double]) => coding.rankCells(v.toArray, probes))
-    // posexplode: the position in the probe list IS the coarse score
-    val exploded = queries
-      .select(col(queryIdCol),
-        posexplode(rankCellsUdf(col(queryVecCol).cast("array<double>"))))
-      .withColumnRenamed("pos", "__cell_rank__")
-      .withColumnRenamed("col", "__cell__")
-    val cells = probedCellUnion(exploded, coding.numCells)
-    val corpus = pruneToCells(load(store, codingName, source, column),
-      cells, coding.numCells)
-    // coarse: (id, cell) only — at 100 TB the coarse stage never reads
-    // a float vector
-    val coarse = corpus.select(col(idCol), col(CodeCol))
-      .join(broadcast(exploded), col(CodeCol) === col("__cell__"))
-      .select(col(queryIdCol), col(idCol), col("__cell_rank__"))
-    val wCoarse = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("__cell_rank__").asc, col(idCol).asc)
-    val survivors = coarse.withColumn("__crank__", row_number().over(wCoarse))
-      .filter(col("__crank__") <= candidates)
-      .select(col(queryIdCol), col(idCol))
-    // scale discipline of the rerank tail: see [[rerankSurvivors]]
-    rerankSurvivors(survivors, corpus, queries, queryIdCol, queryVecCol,
-      column, idCol, k, m, tieBreak)
-  }
+      broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame =
+    candidateJoin(rerankTier, store, codingName, source, column, queries,
+      queryIdCol, queryVecCol, k, probes, candidates, idCol, metric,
+      tieBreak, broadcastCapBytes)
 }

@@ -24,7 +24,8 @@ import graft.coder.CoderConfig
   * create table / read / make coder / make index / search / drop from a
   * second process — over plain HTTP+JSON using only the JDK's built-in
   * `HttpServer` and Spark's bundled Jackson, so the library API remains
-  * the contract and the wire layer stays ~300 lines.
+  * the contract: each handler parses a request, calls the engine and
+  * renders its rows, with no search or storage logic of its own.
   *
   * Deliberately NOT the bulk-data path: row payloads ride JSON, which is
   * fine for control-plane ops, small ingests and top-k results. At 100 TB
@@ -311,18 +312,12 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     ok(ex, s"""{"index":${jstr(name)}}""")
   }
 
-  /** Search: brute (explicit metric) or probed (coding + probes), same
-    * decision table as [[Engine.search]] / `flight.py:242-288`. A
-    * `targets` array of vectors instead of `target` selects the BATCH
-    * form ([[postSearchBatch]]). */
-  /** Probe-count advisor ([[graft.api.Engine.recommendProbes]]): body =
+  /** Probe-count advisor ([[graft.api.Engine.adviseProbes]]): body =
     * {coding, source, column, idCol, k?, targetRecall?, sampleQueries?};
     * response = the advice plus the measured (probes, recall) curve. A
-    * calibration verb, not a serving verb — run once per (coding,
-    * corpus), persist the answer client-side. */
-  /** Measures AND persists ([[graft.api.Engine.adviseProbes]] — the
-    * advisor's own scaladoc demands "run once and persist"; the POST is
-    * the run-once, the GET below is the serve-many). */
+    * calibration verb, not a serving verb: the POST measures AND
+    * persists (the advisor's own scaladoc demands "run once and
+    * persist"), the GET below serves the cached answer many times. */
   private def postAdviseProbes(ex: HttpExchange): Unit = {
     val body = mapper.readTree(readBody(ex))
     val p = engine.adviseProbes(
@@ -422,142 +417,147 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
       s""""sourceStamp":${jstr(p.sourceStamp)},"cached":$cached}"""
   }
 
-  private def postSearch(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    if (opt(body, "targets").isDefined) { postSearchBatch(ex, body); return }
-    val sources = require(body, "sources").elements().asScala.map(_.asText()).toSeq
-    val column = require(body, "column").asText()
-    val target: TargetVector =
-      require(body, "target").elements().asScala.map(_.asDouble()).toArray[Double]
-    val metric = opt(body, "metric").map(_.asText())
-    val coding = opt(body, "coding").map(_.asText())
-    val k = intOr(body, "k", 10)
-    // "probes":"advised" (the string — an integer -1 is an invalid
-    // count, refused by Engine.validCount) opts into the PERSISTED
-    // advisor budget — resolved here (not inside the engine call) so the
-    // response can carry the serving-visibility marker: a caller must
-    // always be able to tell exact from advised
-    val (probes, advisedProbes) = parseProbes(body) match {
-      case Some(graft.api.Engine.Advised) =>
+  /** The fields both search forms share, parsed once: sources, column,
+    * metric, coding, k (capped at [[maxResponseRows]]), tieBreak, the
+    * `sq`/`bq` tier flags, and the probe and candidate budgets. On
+    * either budget the string `"advised"` (not an integer: -1 is an
+    * invalid count, refused by [[Engine.validCount]]) opts into the
+    * PERSISTED advisor budget — resolved here, not inside the engine
+    * call, so the response can carry the serving-visibility marker
+    * ([[marker]]): a caller must always be able to tell exact from
+    * advised. */
+  private final class SearchRequest(val body: JsonNode) {
+    val sources: Seq[String] =
+      require(body, "sources").elements().asScala.map(_.asText()).toSeq
+    val column: String = require(body, "column").asText()
+    val metric: Option[String] = opt(body, "metric").map(_.asText())
+    val coding: Option[String] = opt(body, "coding").map(_.asText())
+    val k: Int = math.min(intOr(body, "k", 10), maxResponseRows)
+    val tieBreak: Seq[String] = opt(body, "tieBreak")
+      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
+    // "sq": true routes to the IVF+SQ8 index (d-byte quantized coarse
+    // pass), "bq": true to the IVF+BQ index (1-bit coarse pass)
+    val quantizedTier: Option[String] =
+      if (flag("sq")) Some("sq") else if (flag("bq")) Some("bq") else None
+    private var advisedProbes, advisedCandidates: Option[Int] = None
+
+    def flag(name: String): Boolean = opt(body, name).exists(_.asBoolean(false))
+    def idCol: String = require(body, "idCol").asText()
+
+    private def advisedSource(knob: String): String = {
+      if (sources.size != 1) throw new IllegalArgumentException(
+        s""""$knob":"advised" is single-source (advice is measured """ +
+          "against one corpus)")
+      sources.head
+    }
+
+    /** An integer, or "advised" (→ [[Engine.Advised]]); any other
+      * non-integer refuses loudly — Jackson's asInt() would otherwise
+      * silently read a typo'd string as 0. */
+    private def count(knob: String, n: JsonNode): Int =
+      if (n.isTextual && n.asText() == "advised") Engine.Advised
+      else if (n.isIntegralNumber) n.asInt()
+      else throw new IllegalArgumentException(
+        s"""$knob must be an integer or "advised", got ${n.toString}""")
+
+    val probes: Option[Int] = opt(body, "probes").map(count("probes", _)).map {
+      case Engine.Advised =>
         val c = coding.getOrElse(throw new IllegalArgumentException(
           """"probes":"advised" needs a coding"""))
-        if (sources.size != 1) throw new IllegalArgumentException(
-          """"probes":"advised" is single-source (advice is measured """ +
-            "against one corpus)")
-        val p = engine.resolveAdvisedProbes(c, sources.head, column,
-          math.min(k, maxResponseRows), metric)
-        (Some(p), Some(p))
-      case other => (other, None)
+        val p = engine.resolveAdvisedProbes(c, advisedSource("probes"),
+          column, k, metric)
+        advisedProbes = Some(p)
+        p
+      case p => p
     }
+
+    /** `candidates` for (`coding`, `tier`): the advised form serves the
+      * persisted (coding, tier, probes) budget. */
+    def candidates(n: JsonNode, coding: String, tier: String, probes: => Int): Int =
+      count("candidates", n) match {
+        case Engine.Advised =>
+          val r = engine.resolveAdvisedCandidates(coding, tier, probes,
+            advisedSource("candidates"), column, k, metric)
+          advisedCandidates = Some(r)
+          r
+        case c => c
+      }
+
+    /** The `sq`/`bq` route's (tier, coding, probes, candidates) — each
+      * required: an explicit contract, no silent fall-through to
+      * another path. */
+    def quantized: Option[(String, String, Int, Int)] = quantizedTier.map { tier =>
+      def missing(f: String) =
+        new IllegalArgumentException(s"$tier search requires \"$f\"")
+      val c = coding.getOrElse(throw missing("coding"))
+      val p = probes.getOrElse(throw missing("probes"))
+      val n = opt(body, "candidates").getOrElse(throw missing("candidates"))
+      (tier, c, p, candidates(n, c, tier, p))
+    }
+
+    /** The serving-visibility marker: which knobs the persisted advice
+      * supplied, and the values served — empty when nothing was advised. */
+    def marker: String = {
+      val fields = advisedProbes.map(p => s""""probes":$p""").toSeq ++
+        advisedCandidates.map(c => s""""candidates":$c""").toSeq
+      if (fields.isEmpty) ""
+      else fields.mkString(""""advised":true,""", ",", ",")
+    }
+  }
+
+  /** Search: brute (explicit metric) or probed (coding + probes), same
+    * decision table as [[Engine.search]] / `flight.py:242-288`. A
+    * `targets` array of vectors instead of `target` selects the BATCH
+    * form ([[postSearchBatch]]). */
+  private def postSearch(ex: HttpExchange): Unit = {
+    val body = mapper.readTree(readBody(ex))
+    if (opt(body, "targets").isDefined) {
+      postSearchBatch(ex, body)
+      return
+    }
+    val r = new SearchRequest(body)
+    val target: TargetVector =
+      require(body, "target").elements().asScala.map(_.asDouble()).toArray[Double]
     val filter = opt(body, "filter").map(n => expr(n.asText()))
     val select = opt(body, "select").map(_.elements().asScala.map(_.asText()).toSeq)
-    val tieBreak = opt(body, "tieBreak")
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-    // candidates + idCol selects the IVF+PQ path (one index per source;
-    // multi-source unions the per-source exact-reranked top-k);
-    // "rerank": true instead routes to the two-stage retrieve-rerank over
-    // the plain IVF index (id-only coarse pass, no PQ codes needed);
-    // "sq": true routes to the IVF+SQ8 index (d-byte quantized coarse pass)
-    val rerank = opt(body, "rerank").exists(_.asBoolean(false))
-    val sq = opt(body, "sq").exists(_.asBoolean(false))
-    // "bq": true routes to the IVF+BQ index (1-bit Hamming coarse pass)
-    val bq = opt(body, "bq").exists(_.asBoolean(false))
     // "prefixDim": N routes to the index-free Matryoshka prefix search
     // (optional "prefixCol" selects a materialized prefix column)
     opt(body, "prefixDim").foreach { pd =>
       val cand = opt(body, "candidates").getOrElse(throw new IllegalArgumentException(
         "matryoshka search requires \"candidates\"")).asInt()
-      val df = graft.api.Search.matryoshkaSearch(
-        engine.readTable(sources), column, target, pd.asInt(), cand,
-        require(body, "idCol").asText(), math.min(k, maxResponseRows),
-        metric.getOrElse("l2"), opt(body, "prefixCol").map(_.asText()),
-        filter, select, tieBreak)
-      okRows(ex, df)
+      okRows(ex, graft.api.Search.matryoshkaSearch(
+        engine.readTable(r.sources), r.column, target, pd.asInt(), cand,
+        r.idCol, r.k, r.metric.getOrElse("l2"),
+        opt(body, "prefixCol").map(_.asText()), filter, select, r.tieBreak))
       return
     }
-    // "candidates":"advised" serves the persisted (coding, tier,
-    // probes) candidate budget — resolved here so the response carries
-    // the visibility marker, like the probes sentinel above
-    var advisedCandN: Option[Int] = None
-    def candValue(n: com.fasterxml.jackson.databind.JsonNode,
-        c: String, tier: String, p: => Int): Int = {
-      val raw =
-        if (n.isTextual && n.asText() == "advised") graft.api.Engine.Advised
-        else if (n.isIntegralNumber) n.asInt()
-        else throw new IllegalArgumentException(
-          s"""candidates must be an integer or "advised", got ${n.toString}""")
-      if (raw != graft.api.Engine.Advised) raw
-      else {
-        if (sources.size != 1) throw new IllegalArgumentException(
-          """"candidates":"advised" is single-source (advice is """ +
-            "measured against one corpus)")
-        val r = engine.resolveAdvisedCandidates(c, tier, p, sources.head,
-          column, math.min(k, maxResponseRows), metric)
-        advisedCandN = Some(r)
-        r
-      }
-    }
-    val df = (opt(body, "candidates"), coding, probes) match {
-      case _ if sq || bq =>
-        // explicit contract, no silent fall-through to another path
-        val tier = if (sq) "sq" else "bq"
-        val c = coding.getOrElse(throw new IllegalArgumentException(
-          s"$tier search requires \"coding\""))
-        val p = probes.getOrElse(throw new IllegalArgumentException(
-          s"$tier search requires \"probes\""))
-        val cand = opt(body, "candidates").getOrElse(
-          throw new IllegalArgumentException(s"$tier search requires \"candidates\""))
-        if (sq)
-          engine.searchSqMulti(sources, column, target, c, p,
-            candValue(cand, c, tier, p),
-            require(body, "idCol").asText(), math.min(k, maxResponseRows),
-            metric, filter, select, tieBreak)
-        else
-          engine.searchBqMulti(sources, column, target, c, p,
-            candValue(cand, c, tier, p),
-            require(body, "idCol").asText(), math.min(k, maxResponseRows),
-            metric, filter, select, tieBreak)
-      case (Some(cand), Some(c), _) if rerank =>
-        engine.searchRerankMulti(sources, column, target, c,
-          candValue(cand, c, "rerank", probes.getOrElse(
+    // candidates + idCol selects the IVF+PQ path (one index per source;
+    // multi-source unions the per-source exact-reranked top-k);
+    // "rerank": true instead routes to the two-stage retrieve-rerank over
+    // the plain IVF index (id-only coarse pass, no PQ codes needed)
+    val df = (r.quantized, opt(body, "candidates"), r.coding, r.probes) match {
+      case (Some(("sq", c, p, cand)), _, _, _) =>
+        engine.searchSqMulti(r.sources, r.column, target, c, p, cand, r.idCol,
+          r.k, r.metric, filter, select, r.tieBreak)
+      case (Some((_, c, p, cand)), _, _, _) =>
+        engine.searchBqMulti(r.sources, r.column, target, c, p, cand, r.idCol,
+          r.k, r.metric, filter, select, r.tieBreak)
+      case (_, Some(n), Some(c), _) if r.flag("rerank") =>
+        engine.searchRerankMulti(r.sources, r.column, target, c,
+          r.candidates(n, c, "rerank", r.probes.getOrElse(
             throw new IllegalArgumentException(
               """"candidates":"advised" rerank search needs explicit """ +
                 "\"probes\" (advice is keyed per (coding, tier, probes))"))),
-          require(body, "idCol").asText(), math.min(k, maxResponseRows),
-          probes, metric, filter, select, tieBreak)
-      case (Some(cand), Some(c), Some(p)) =>
-        engine.searchPqMulti(sources, column, target, c, p,
-          candValue(cand, c, "pq", p),
-          require(body, "idCol").asText(), math.min(k, maxResponseRows),
-          metric, filter, select, tieBreak)
+          r.idCol, r.k, r.probes, r.metric, filter, select, r.tieBreak)
+      case (_, Some(n), Some(c), Some(p)) =>
+        engine.searchPqMulti(r.sources, r.column, target, c, p,
+          r.candidates(n, c, "pq", p), r.idCol, r.k, r.metric, filter, select,
+          r.tieBreak)
       case _ =>
-        engine.searchMulti(sources, column, target, metric, coding,
-          probes, math.min(k, maxResponseRows), filter, select, tieBreak)
+        engine.searchMulti(r.sources, r.column, target, r.metric, r.coding,
+          r.probes, r.k, filter, select, r.tieBreak)
     }
-    okRows(ex, df, advisedJson(advisedProbes, advisedCandN))
-  }
-
-  /** `probes` from a request body: an integer, or the string "advised"
-    * (→ [[graft.api.Engine.Advised]]). Any other non-integer refuses
-    * loudly — Jackson's asInt() would otherwise silently read a typo'd
-    * string as 0 probes. */
-  private def parseProbes(body: com.fasterxml.jackson.databind.JsonNode): Option[Int] =
-    opt(body, "probes").map { n =>
-      if (n.isTextual && n.asText() == "advised") graft.api.Engine.Advised
-      else if (n.isIntegralNumber) n.asInt()
-      else throw new IllegalArgumentException(
-        s"""probes must be an integer or "advised", got ${n.toString}""")
-    }
-
-  /** The serving-visibility marker: which knobs the persisted advice
-    * supplied, and the values served — empty when nothing was advised
-    * (a caller can always tell exact from advised). */
-  private def advisedJson(probes: Option[Int],
-      candidates: Option[Int]): String = {
-    val fields = probes.map(p => s""""probes":$p""").toSeq ++
-      candidates.map(c => s""""candidates":$c""").toSeq
-    if (fields.isEmpty) ""
-    else fields.mkString(""""advised":true,""", ",", ",")
+    okRows(ex, df, r.marker)
   }
 
   /** Batch-targets search: `targets: [[...], ...]` maps onto the capped
@@ -570,81 +570,38 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * probes → IVF join, otherwise the brute join (explicit metric
     * required). Indexed tiers take exactly one source (per-source joins
     * don't union here — issue per-source requests for multi-source). */
-  private def postSearchBatch(ex: HttpExchange, body: com.fasterxml.jackson.databind.JsonNode): Unit = {
-    val sources = require(body, "sources").elements().asScala.map(_.asText()).toSeq
-    val column = require(body, "column").asText()
+  private def postSearchBatch(ex: HttpExchange, body: JsonNode): Unit = {
     val targets: Seq[Seq[Double]] = require(body, "targets").elements().asScala
       .map(_.elements().asScala.map(_.asDouble()).toSeq).toSeq
     if (targets.isEmpty)
       throw new IllegalArgumentException("targets must be a non-empty array of vectors")
-    val metric = opt(body, "metric").map(_.asText())
-    val coding = opt(body, "coding").map(_.asText())
-    val k = math.min(intOr(body, "k", 10), maxResponseRows)
-    // same "advised" sentinel + visibility contract as the single-target
-    // form; the batch joins take exactly one source, matching the
-    // advice's single-corpus scope
-    val (probes, advisedProbes) = parseProbes(body) match {
-      case Some(graft.api.Engine.Advised) =>
-        val c = coding.getOrElse(throw new IllegalArgumentException(
-          """"probes":"advised" needs a coding"""))
-        if (sources.size != 1) throw new IllegalArgumentException(
-          """"probes":"advised" is single-source (advice is measured """ +
-            "against one corpus)")
-        val p = engine.resolveAdvisedProbes(c, sources.head, column, k, metric)
-        (Some(p), Some(p))
-      case other => (other, None)
-    }
-    var advisedCandN: Option[Int] = None
-    val tieBreak = opt(body, "tieBreak")
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-    val sq = opt(body, "sq").exists(_.asBoolean(false))
-    val bq = opt(body, "bq").exists(_.asBoolean(false))
+    val r = new SearchRequest(body)
     import engine.spark.implicits._
     val queries = targets.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("query_id", "__QV__")
     def oneSource(tier: String): String = {
-      if (sources.size != 1) throw new IllegalArgumentException(
-        s"$tier batch search takes exactly one source, got ${sources.size}")
-      sources.head
+      if (r.sources.size != 1) throw new IllegalArgumentException(
+        s"$tier batch search takes exactly one source, got ${r.sources.size}")
+      r.sources.head
     }
-    val df =
-      if (sq || bq) {
-        val tier = if (sq) "sq" else "bq"
-        val c = coding.getOrElse(throw new IllegalArgumentException(
-          s"$tier batch search requires \"coding\""))
-        val p = probes.getOrElse(throw new IllegalArgumentException(
-          s"$tier batch search requires \"probes\""))
-        val candNode = opt(body, "candidates").getOrElse(
-          throw new IllegalArgumentException(
-            s"$tier batch search requires \"candidates\""))
-        // "candidates":"advised" — same sentinel + marker as postSearch
-        val cand =
-          if (candNode.isTextual && candNode.asText() == "advised") {
-            val r = engine.resolveAdvisedCandidates(c, tier, p,
-              oneSource(tier), column, k, metric)
-            advisedCandN = Some(r)
-            r
-          } else if (candNode.isIntegralNumber) candNode.asInt()
-          else throw new IllegalArgumentException(
-            s"""candidates must be an integer or "advised", got $candNode""")
-        val id = require(body, "idCol").asText()
-        if (sq) engine.knnJoinSq(c, oneSource(tier), column, queries,
-          "query_id", "__QV__", k, p, cand, id, metric, tieBreak)
-        else engine.knnJoinBq(c, oneSource(tier), column, queries,
-          "query_id", "__QV__", k, p, cand, id, metric, tieBreak)
-      } else (coding, probes) match {
-        case (Some(c), Some(p)) =>
-          engine.knnJoinIvf(c, oneSource("ivf"), column, queries,
-            "query_id", "__QV__", k, p, require(body, "idCol").asText(),
-            metric, tieBreak)
-        case _ =>
-          val m = metric.getOrElse(throw new IllegalArgumentException(
-            "brute batch search requires \"metric\""))
-          graft.api.Search.knnJoin(engine.readTable(sources), column,
-            queries, "query_id", "__QV__", m, k, tieBreak,
-            idCol = opt(body, "idCol").map(_.asText()))
-      }
-    okRows(ex, df.drop("__QV__"), advisedJson(advisedProbes, advisedCandN))
+    val df = (r.quantized, r.coding, r.probes) match {
+      case (Some(("sq", c, p, cand)), _, _) =>
+        engine.knnJoinSq(c, oneSource("sq"), r.column, queries, "query_id",
+          "__QV__", r.k, p, cand, r.idCol, r.metric, r.tieBreak)
+      case (Some((tier, c, p, cand)), _, _) =>
+        engine.knnJoinBq(c, oneSource(tier), r.column, queries, "query_id",
+          "__QV__", r.k, p, cand, r.idCol, r.metric, r.tieBreak)
+      case (_, Some(c), Some(p)) =>
+        engine.knnJoinIvf(c, oneSource("ivf"), r.column, queries,
+          "query_id", "__QV__", r.k, p, r.idCol, r.metric, r.tieBreak)
+      case _ =>
+        val m = r.metric.getOrElse(throw new IllegalArgumentException(
+          "brute batch search requires \"metric\""))
+        graft.api.Search.knnJoin(engine.readTable(r.sources), r.column,
+          queries, "query_id", "__QV__", m, r.k, r.tieBreak,
+          idCol = opt(body, "idCol").map(_.asText()))
+    }
+    okRows(ex, df.drop("__QV__"), r.marker)
   }
 
   /** Late-interaction MaxSim retrieval ([[Engine.maxsimSearch]]): body
@@ -726,8 +683,6 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     okRows(ex, engine.bpeTokenCounts(p("source"), p("idCol"), p("column"), model))
   }
 
-  /** Winnowing fingerprints of a stored table's text column
-    * ([[graft.ext.TextAnalysis.winnowFingerprints]]) — (id, fp) rows. */
   /** Per-cell index layout stats ([[Engine.indexStats]]) — the ops view
     * for fragmentation and cell skew — plus the tier's source-freshness
     * verdict ([[graft.index.Index.tierFresh]]). */
@@ -888,15 +843,6 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     })
   }
 
-  /** Cross-document common segments ([[graft.ext.Dedup.commonSegments]]):
-    * boilerplate lines appearing in ≥ minDocs distinct docs. */
-  /** Fixed-point PageRank over an edge table ([[graft.ext.Graph]]).
-    * Body: source, srcCol, dstCol, optional iterations (default 5),
-    * topK (default 100), seeds/seedCol for the personalized variant,
-    * weightCol for the weighted variant (mutually exclusive with
-    * seeds), and durable (default false) to checkpoint each iteration
-    * to the cluster checkpoint dir instead of executor-local storage
-    * (executor-loss-safe on a real cluster). */
   /** `durable: true` without a configured checkpoint dir defaults it to
     * `<store root>/checkpoints` — on a cluster the store root is shared
     * storage, which is exactly where durable checkpoints belong. */
@@ -908,6 +854,13 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     durable
   }
 
+  /** Fixed-point PageRank over an edge table ([[graft.ext.Graph]]).
+    * Body: source, srcCol, dstCol, optional iterations (default 5),
+    * topK (default 100), seeds/seedCol for the personalized variant,
+    * weightCol for the weighted variant (mutually exclusive with
+    * seeds), and durable (default false) to checkpoint each iteration
+    * to the cluster checkpoint dir instead of executor-local storage
+    * (executor-loss-safe on a real cluster). */
   private def postPageRank(ex: HttpExchange): Unit = {
     val body = mapper.readTree(readBody(ex))
     val edges = engine.readTable(Seq(require(body, "source").asText()))
@@ -1157,6 +1110,8 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     ok(ex, s"""{"table":${jstr(require(body, "dest").asText())},"rows":$n}""")
   }
 
+  /** Cross-document common segments ([[graft.ext.Dedup.commonSegments]]):
+    * boilerplate lines appearing in ≥ minDocs distinct docs. */
   private def postDedupSegments(ex: HttpExchange): Unit = {
     val body = mapper.readTree(readBody(ex))
     val df = engine.readTable(Seq(require(body, "source").asText()))
@@ -1177,9 +1132,6 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
       minDocs = intOr(body, "minDocs", 2)))
   }
 
-  /** Incoming-vs-corpus near-dup gate
-    * ([[graft.streaming.Streams.nearDupAgainstCorpus]] on its batch
-    * path): which docs of `source` near-duplicate a doc of `corpus`. */
   /** Build the persisted fuzzy (edit-distance) lookup index
     * ([[graft.api.Engine.buildFuzzyIndex]]). */
   private def postFuzzyBuild(ex: HttpExchange): Unit = {
@@ -1280,6 +1232,9 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     ok(ex, s"""{"bucketsCompacted":$buckets,"flatsCompacted":$flats}""")
   }
 
+  /** Incoming-vs-corpus near-dup gate
+    * ([[graft.streaming.Streams.nearDupAgainstCorpus]] on its batch
+    * path): which docs of `source` near-duplicate a doc of `corpus`. */
   private def postDedupGate(ex: HttpExchange): Unit = {
     val body = mapper.readTree(readBody(ex))
     val arrivals = engine.readTable(Seq(require(body, "source").asText()))
@@ -1356,11 +1311,6 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
           bench, benchIdCol, benchColumn, k))
   }
 
-  /** Full corpus-curation pipeline over stored tables
-    * ([[graft.ext.Curate.curate]]). With `dest`, survivors are persisted
-    * as a named table ([[graft.api.Engine.curateTable]]) and the row
-    * count returned; without it the (response-capped) survivors come
-    * back inline. */
   /** The curation Config fields shared by the curate and curate-drops
     * routes — one parser so the two can never accept different knobs. */
   private def curateCfg(body: JsonNode): graft.ext.Curate.Config = {
@@ -1439,6 +1389,11 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
       curateCfg(body)))
   }
 
+  /** Full corpus-curation pipeline over stored tables
+    * ([[graft.ext.Curate.curate]]). With `dest`, survivors are persisted
+    * as a named table ([[graft.api.Engine.curateTable]]) and the row
+    * count returned; without it the (response-capped) survivors come
+    * back inline. */
   private def postCurate(ex: HttpExchange): Unit = {
     val body = mapper.readTree(readBody(ex))
     val source = require(body, "source").asText()
@@ -1547,13 +1502,6 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
       salt = opt(body, "salt").map(_.asText()).getOrElse("")))
   }
 
-  /** Per-group corpus audit profile
-    * ([[graft.ext.TextAnalysis.corpusProfile]]). */
-  /** Data-quality constraint gate ([[graft.ext.Validate]]): body
-    * `{"source": ..., "checks": [{"type": "not_null"|"unique"|
-    * "in_range"|"in_set"|"matches"|"row_count_at_least"|"foreign_key",
-    * ...}]}` — one report row per check. The whole batch is one
-    * aggregation over one scan of the table. */
   /** Keyed snapshot diff ([[graft.ext.Validate.diffByKey]]): body =
     * {left, right, keyCol}; rows = (key, status added|removed|changed). */
   private def postDiff(ex: HttpExchange): Unit = {
@@ -1564,6 +1512,11 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
       require(body, "keyCol").asText()))
   }
 
+  /** Data-quality constraint gate ([[graft.ext.Validate]]): body
+    * `{"source": ..., "checks": [{"type": "not_null"|"unique"|
+    * "in_range"|"in_set"|"matches"|"row_count_at_least"|"foreign_key",
+    * ...}]}` — one report row per check. The whole batch is one
+    * aggregation over one scan of the table. */
   private def postValidate(ex: HttpExchange): Unit = {
     import graft.ext.Validate
     val body = mapper.readTree(readBody(ex))
@@ -1610,6 +1563,8 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     okRows(ex, out)
   }
 
+  /** Per-group corpus audit profile
+    * ([[graft.ext.TextAnalysis.corpusProfile]]). */
   private def postProfile(ex: HttpExchange): Unit = {
     val body = mapper.readTree(readBody(ex))
     val groupCols = require(body, "groupCols").elements().asScala
@@ -1673,6 +1628,8 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
       model))
   }
 
+  /** Winnowing fingerprints of a stored table's text column
+    * ([[graft.ext.TextAnalysis.winnowFingerprints]]) — (id, fp) rows. */
   private def postFingerprints(ex: HttpExchange): Unit = {
     val body = mapper.readTree(readBody(ex))
     val df = engine.readTable(Seq(require(body, "source").asText()))

@@ -464,12 +464,74 @@ class EngineSpec extends SparkSuite {
           idCol = "vec_id", k = 5, probes = Some(4))
       }
       assert(e3.getMessage.contains("invalid candidates"), e3.getMessage)
+      // every candidate tier validates its probe count too — single,
+      // multi-source and batch forms alike
+      val qs = spark.createDataFrame(Seq((0L, t.toSeq))).toDF("q", "qv")
+      val probed: Seq[(String, () => Any)] = Seq(
+        "searchSq" -> (() => engine.searchSq("emb", "embedding", t, "c1",
+          probes = bad, candidates = 64, idCol = "vec_id", k = 5)),
+        "searchSqMulti" -> (() => engine.searchSqMulti(Seq("emb"),
+          "embedding", t, "c1", probes = bad, candidates = 64,
+          idCol = "vec_id", k = 5)),
+        "searchBq" -> (() => engine.searchBq("emb", "embedding", t, "c1",
+          probes = bad, candidates = 64, idCol = "vec_id", k = 5)),
+        "searchBqMulti" -> (() => engine.searchBqMulti(Seq("emb"),
+          "embedding", t, "c1", probes = bad, candidates = 64,
+          idCol = "vec_id", k = 5)),
+        "searchPq" -> (() => engine.searchPq("emb", "embedding", t, "c1",
+          probes = bad, candidates = 64, idCol = "vec_id", k = 5)),
+        "searchPqMulti" -> (() => engine.searchPqMulti(Seq("emb"),
+          "embedding", t, "c1", probes = bad, candidates = 64,
+          idCol = "vec_id", k = 5)),
+        "searchRerank" -> (() => engine.searchRerank("emb", "embedding", t,
+          "c1", candidates = 64, idCol = "vec_id", k = 5,
+          probes = Some(bad))),
+        "searchRerankMulti" -> (() => engine.searchRerankMulti(Seq("emb"),
+          "embedding", t, "c1", candidates = 64, idCol = "vec_id", k = 5,
+          probes = Some(bad))),
+        "knnJoinIvf" -> (() => engine.knnJoinIvf("c1", "emb", "embedding",
+          qs, "q", "qv", k = 5, probes = bad, idCol = "vec_id")),
+        "knnJoinSq" -> (() => engine.knnJoinSq("c1", "emb", "embedding",
+          qs, "q", "qv", k = 5, probes = bad, candidates = 64,
+          idCol = "vec_id")),
+        "knnJoinBq" -> (() => engine.knnJoinBq("c1", "emb", "embedding",
+          qs, "q", "qv", k = 5, probes = bad, candidates = 64,
+          idCol = "vec_id")),
+        "knnJoinPq" -> (() => engine.knnJoinPq("c1", "emb", "embedding",
+          qs, "q", "qv", k = 5, probes = bad, candidates = 64,
+          idCol = "vec_id")),
+        "knnJoinRerank" -> (() => engine.knnJoinRerank("c1", "emb",
+          "embedding", qs, "q", "qv", k = 5, probes = bad,
+          candidates = 64, idCol = "vec_id")))
+      for ((name, call) <- probed) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains("invalid probes"), s"$name: ${e.getMessage}")
+      }
     }
     // brute path (no coding): a stray negative probe count refuses too
     assert(intercept[IllegalArgumentException] {
       engine.search("emb", "embedding", t, metric = Some("l2"),
         probes = Some(-1), k = 5)
     }.getMessage.contains("invalid probes"))
+    // an empty source list refuses with the same message on every
+    // multi-source form, probed or brute
+    val noSources: Seq[(String, () => Any)] = Seq(
+      "searchMulti probed" -> (() => engine.searchMulti(Nil, "embedding", t,
+        coding = Some("c1"), probes = Some(4), k = 5)),
+      "searchMulti brute" -> (() => engine.searchMulti(Nil, "embedding", t,
+        metric = Some("l2"), k = 5)),
+      "searchSqMulti" -> (() => engine.searchSqMulti(Nil, "embedding", t,
+        "c1", probes = 4, candidates = 64, idCol = "vec_id", k = 5)),
+      "searchBqMulti" -> (() => engine.searchBqMulti(Nil, "embedding", t,
+        "c1", probes = 4, candidates = 64, idCol = "vec_id", k = 5)),
+      "searchPqMulti" -> (() => engine.searchPqMulti(Nil, "embedding", t,
+        "c1", probes = 4, candidates = 64, idCol = "vec_id", k = 5)),
+      "searchRerankMulti" -> (() => engine.searchRerankMulti(Nil,
+        "embedding", t, "c1", candidates = 64, idCol = "vec_id", k = 5)))
+    for ((name, call) <- noSources) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("at least one source"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("admin: list and drop") {

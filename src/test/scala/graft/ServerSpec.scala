@@ -179,6 +179,13 @@ class ServerSpec extends SparkSuite {
       """{"sources":["wire_vecs"],"column":"vec","target":[0,0,0,0],
           "coding":"wire_c1","probes":1,"candidates":"advised",
           "idCol":"id","sq":true,"k":5}""")._1 == 400)
+    // a zero probe count refuses on the candidate tiers too — 400, not
+    // an empty 200
+    val (zc, zBody) = send("POST", "/search",
+      """{"sources":["wire_vecs"],"column":"vec","target":[0,0,0,0],
+          "coding":"wire_c1","probes":0,"candidates":40,
+          "idCol":"id","sq":true,"k":5}""")
+    assert(zc == 400 && zBody.contains("invalid probes"), s"$zc $zBody")
 
     // stale corpus: on a DEDICATED table (appending to wire_vecs would
     // legitimately un-freshen the index-stats assertions further down)
@@ -494,6 +501,28 @@ class ServerSpec extends SparkSuite {
       val got = perQuery(b)
       assert(got(0L) == evens && got(1L) == odds, s"[$extra] batch $got")
     }
+
+    // "probes":"advised" on the batch form serves the persisted probe
+    // advice, equals the explicit call at that budget, and carries the
+    // same visibility marker as the single-target form
+    val (ac, aBody) = send("POST", "/advise/probes",
+      """{"coding":"batch_c1","source":"batch_vecs","column":"vec",
+          "idCol":"id","k":5,"targetRecall":1.0,"sampleQueries":4}""")
+    assert(ac == 200, aBody)
+    val advisedP = mapper.readTree(aBody).get("probes").asInt()
+    def batchIvf(probes: String): (Int, String) = send("POST", "/search",
+      s"""{"sources":["batch_vecs"],"column":"vec",$targets,
+          "coding":"batch_c1","probes":$probes,"idCol":"id",
+          "k":5,"tieBreak":["id"]}""")
+    val (avc, avBody) = batchIvf("\"advised\"")
+    assert(avc == 200, avBody)
+    val avNode = mapper.readTree(avBody)
+    assert(avNode.get("advised").asBoolean() &&
+      avNode.get("probes").asInt() == advisedP, avBody)
+    val (xc, xBody) = batchIvf(advisedP.toString)
+    assert(xc == 200 && !mapper.readTree(xBody).has("advised"), xBody)
+    assert(perQuery(avBody) == perQuery(xBody),
+      "advised batch != explicit batch at the advised budget")
 
     // error contracts: empty targets, brute without metric, indexed
     // tiers take one source

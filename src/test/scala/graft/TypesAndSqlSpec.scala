@@ -540,6 +540,68 @@ class CellAssignSpec extends SparkSuite {
 class MultiSourceSearchSpec extends SparkSuite {
   import spark.implicits._
 
+  test("one-element multi-source call == single-source call: rows and plan, every tier") {
+    val root = java.nio.file.Files.createTempDirectory("multisingle").toString
+    val engine = new graft.api.Engine(spark, root)
+    val emb = sf("sf0.001", "embeddings")
+    engine.makeTable("all", emb)
+    engine.makeCoder("c", "all", "embedding", CoderConfig(metric = "l2",
+      codebookSize = 4, numCodebooks = 2, batchSize = 128, numEpochs = 2))
+    engine.syncIndex("c", "all", "embedding")
+    engine.makeSqIndex("c", "all", "embedding")
+    engine.makeBqIndex("c", "all", "embedding")
+    engine.makePqIndex("c", "all", "embedding", graft.coder.PQ.PQConfig(
+      numSubspaces = 8, codebookSize = 16, metric = "l2"))
+    val t = emb.filter($"vec_id" === 7).select($"embedding".cast("array<double>"))
+      .collect()(0).getSeq[Double](0).toArray
+    // the executed plan's node names in tree order (expression ids and
+    // file paths differ between any two frames; the shape must not)
+    def nodes(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.queryExecution.executedPlan.toString.linesIterator
+        .map(_.replaceAll("^[\\s:+\\-*|()0-9]*", "")
+          .takeWhile(c => c != ' ' && c != '[' && c != '('))
+        .filter(_.nonEmpty).toSeq
+    val tb = Seq("vec_id")
+    val pairs: Seq[(String, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("ivf",
+        engine.search("all", "embedding", t, coding = Some("c"),
+          probes = Some(4), k = 10, tieBreak = tb),
+        engine.searchMulti(Seq("all"), "embedding", t, coding = Some("c"),
+          probes = Some(4), k = 10, tieBreak = tb)),
+      ("sq",
+        engine.searchSq("all", "embedding", t, "c", probes = 4,
+          candidates = 40, idCol = "vec_id", k = 10, tieBreak = tb),
+        engine.searchSqMulti(Seq("all"), "embedding", t, "c", probes = 4,
+          candidates = 40, idCol = "vec_id", k = 10, tieBreak = tb)),
+      ("bq",
+        engine.searchBq("all", "embedding", t, "c", probes = 4,
+          candidates = 40, idCol = "vec_id", k = 10, tieBreak = tb),
+        engine.searchBqMulti(Seq("all"), "embedding", t, "c", probes = 4,
+          candidates = 40, idCol = "vec_id", k = 10, tieBreak = tb)),
+      ("pq",
+        engine.searchPq("all", "embedding", t, "c", probes = 4,
+          candidates = 40, idCol = "vec_id", k = 10, tieBreak = tb),
+        engine.searchPqMulti(Seq("all"), "embedding", t, "c", probes = 4,
+          candidates = 40, idCol = "vec_id", k = 10, tieBreak = tb)),
+      ("rerank",
+        engine.searchRerank("all", "embedding", t, "c", candidates = 40,
+          idCol = "vec_id", k = 10, probes = Some(4), tieBreak = tb),
+        engine.searchRerankMulti(Seq("all"), "embedding", t, "c",
+          candidates = 40, idCol = "vec_id", k = 10, probes = Some(4),
+          tieBreak = tb)))
+    for ((tier, single, multi) <- pairs) {
+      assert(nodes(single).nonEmpty, tier)
+      assert(nodes(single) == nodes(multi),
+        s"$tier plans differ:\n${single.queryExecution.executedPlan}\n" +
+          s"vs\n${multi.queryExecution.executedPlan}")
+      val rows = single.collect().toSeq
+      assert(rows.size == 10, s"$tier: ${rows.size} rows")
+      assert(rows == multi.collect().toSeq, s"$tier rows differ")
+    }
+    engine.remove()
+  }
+
   test("multi-source probed search equals single-source over the union") {
     val root = java.nio.file.Files.createTempDirectory("multisearch").toString
     val engine = new graft.api.Engine(spark, root)
