@@ -68,7 +68,8 @@ object Index {
     warnIfSkewed(store, codingName, source, column)
   }
 
-  private def stampSidecar(path: String) = s"$path/_source_stamp.json"
+  private val StampFile = "_source_stamp.json"
+  private def stampSidecar(path: String) = s"$path/$StampFile"
 
   /** The sidecar records both the MD5 stamp and the full (name:len:mtime)
     * listing it hashes — sync needs the listing to prove growth was
@@ -567,12 +568,22 @@ object Index {
   /** Read a tier's cell-partitioned copy (ivf | pq | sq | bq): source
     * schema ⊕ the tier's code column ⊕ `__CODED_ID__: long`. The
     * internal provenance column is stripped — it exists for [[repair]],
-    * not for queries. */
+    * not for queries.
+    *
+    * The resolved relation is [[Store.memo]]ized under the tier
+    * directory, its `_SUCCESS` and its stamp sidecar: resolving lists
+    * every cell directory and runs one Spark job to infer the schema,
+    * while a reused frame prunes cells on its in-memory file index.
+    * Build, sync, repair and compaction each rewrite `_SUCCESS` or the
+    * stamp, or change the directory's entries. */
   private def loadTier(store: Store, codingName: String, source: String,
-      column: String, tier: String): DataFrame =
-    store.spark.read.parquet(tierPath(store, codingName, source, column, tier))
-      // partition-column discovery types the cell id as int; contract says long
-      .withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol)
+      column: String, tier: String): DataFrame = {
+    val path = tierPath(store, codingName, source, column, tier)
+    store.memo(path, Seq("_SUCCESS", StampFile))(
+      store.spark.read.parquet(path)
+        // partition-column discovery types the cell id as int; contract says long
+        .withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol))
+  }
 
   /** Read the indexed copy: source schema ⊕ `__CODED_ID__: long`
     * (reference V7 `index.py:19-34`, minus the positional join). */
@@ -952,9 +963,10 @@ object Index {
     store.sidecarExists(pqSidecar(store.pqIndexPath(source, column, codingName)))
 
   def loadPqCodebooks(store: Store, codingName: String, source: String,
-      column: String): graft.coder.PQ.PQCodebooks =
-    graft.coder.PQ.fromJsonBytes(
-      store.readSidecar(pqSidecar(store.pqIndexPath(source, column, codingName))))
+      column: String): graft.coder.PQ.PQCodebooks = {
+    val sidecar = pqSidecar(store.pqIndexPath(source, column, codingName))
+    store.memo(sidecar)(graft.coder.PQ.fromJsonBytes(store.readSidecar(sidecar)))
+  }
 
   def loadPq(store: Store, codingName: String, source: String, column: String): DataFrame =
     loadTier(store, codingName, source, column, "pq")
@@ -1220,8 +1232,11 @@ object Index {
 
   private def loadSqParams(store: Store, codingName: String, source: String,
       column: String): SqParamsSet = {
-    val bytes = store.readSidecar(
-      sqSidecar(store.sqIndexPath(source, column, codingName)))
+    val sidecar = sqSidecar(store.sqIndexPath(source, column, codingName))
+    store.memo(sidecar)(parseSqParams(store.readSidecar(sidecar)))
+  }
+
+  private def parseSqParams(bytes: Array[Byte]): SqParamsSet = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val n = mapper.readTree(bytes)
     def arr(node: com.fasterxml.jackson.databind.JsonNode, k: String): Array[Float] = {
@@ -1538,12 +1553,17 @@ object Index {
 
   private def loadBqParams(store: Store, codingName: String,
       source: String, column: String): BqParamsSet = {
-    val path = store.bqIndexPath(source, column, codingName)
-    require(store.sidecarExists(bqSidecar(path)),
-      s"no BQ index for $source.$column under coding '$codingName' — " +
-        "build it first (buildBq)")
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(store.readSidecar(bqSidecar(path)))
+    val sidecar = bqSidecar(store.bqIndexPath(source, column, codingName))
+    store.memo(sidecar) {
+      require(store.sidecarExists(sidecar),
+        s"no BQ index for $source.$column under coding '$codingName' — " +
+          "build it first (buildBq)")
+      parseBqParams(store.readSidecar(sidecar))
+    }
+  }
+
+  private def parseBqParams(bytes: Array[Byte]): BqParamsSet = {
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
     def block(n: com.fasterxml.jackson.databind.JsonNode): BqParams = {
       def dbl(name: String): Array[Double] = Option(n.get(name)).map { a =>
         Array.tabulate(a.size())(i => a.get(i).asDouble())

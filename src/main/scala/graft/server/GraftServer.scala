@@ -73,6 +73,11 @@ import graft.coder.CoderConfig
   */
 class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
   private val mapper = new ObjectMapper()
+  // `send` writes headers, then body: without TCP_NODELAY Nagle holds
+  // the body until the client's delayed ACK, about 40 ms per request.
+  // The JDK reads this once, when the JVM's first HttpServer is made;
+  // a value the JVM already has wins.
+  System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
   private val http = HttpServer.create(new InetSocketAddress(host, port), 0)
   private val pool = Executors.newFixedThreadPool(4)
   /** Cap on rows returned by a single scan/search response. */

@@ -101,6 +101,39 @@ class Store(val spark: SparkSession, val root: String) {
 
   def sidecarExists(path: String): Boolean = fs.exists(new Path(path))
 
+  /** What a search opens — a coding, a tier's resolved relation, a
+    * codec sidecar — opened once per [[Store]] and reused while the
+    * (modification time, length) of `path` and of each file in
+    * `markers` (relative to `path`) still match what was seen BEFORE
+    * the open; a missing file is a value too, so a first write or a
+    * drop reopens. Every writer of those artifacts, through this store
+    * or any other over the same root, rewrites a marker or the
+    * directory's entries. Validation runs on every use: `1 +
+    * markers.size` `getFileStatus` calls, no listing, no Spark job. A
+    * failed open is not kept. One `(path, markers)` names one kind of
+    * value. */
+  private[graft] def memo[A](path: String, markers: Seq[String] = Nil)(
+      open: => A): A = {
+    val key = (path +: markers).mkString("\u0000")
+    val stamp = (path +: markers.map(m => s"$path/$m")).map(statOf)
+    memos.get(key) match {
+      case (`stamp`, v) => v.asInstanceOf[A]
+      case _ =>
+        val v = open
+        memos.put(key, (stamp, v))
+        v
+    }
+  }
+
+  @transient private lazy val memos =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Option[(Long, Long)]], Any)]()
+
+  private def statOf(path: String): Option[(Long, Long)] =
+    try {
+      val s = fs.getFileStatus(new Path(path))
+      Some((s.getModificationTime, s.getLen))
+    } catch { case _: java.io.FileNotFoundException => None }
+
   private def list(dir: String): Seq[String] = {
     val p = new Path(dir)
     if (!fs.exists(p)) Nil
@@ -422,25 +455,14 @@ class Store(val spark: SparkSession, val root: String) {
   def saveNgramModel(name: String, model: graft.ext.NgramLm.NgramLmModel): Unit =
     writeSidecar(ngramModelPath(name), model.toJson.getBytes("UTF-8"))
 
-  /** Content-keyed model cache: repeated loads of an unchanged model file
-    * (the server's per-request perplexity route) return the SAME instance,
-    * so its memoized broadcast is reused instead of accumulating one (or
-    * more) broadcast blocks per request. The md5 check re-reads the small
-    * sidecar each call, so a retrained model is picked up immediately. */
-  @transient private lazy val ngramModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, graft.ext.NgramLm.NgramLmModel)]()
-
+  /** [[memo]]ized under the model file: repeated loads of an unchanged
+    * model (the server's per-request perplexity route) return the SAME
+    * instance, so its memoized broadcast is reused instead of
+    * accumulating one (or more) broadcast blocks per request; a
+    * retrained model is picked up on the next load. */
   def loadNgramModel(name: String): graft.ext.NgramLm.NgramLmModel = {
-    val bytes = readSidecar(ngramModelPath(name))
-    val digest = java.util.Base64.getEncoder.encodeToString(
-      java.security.MessageDigest.getInstance("MD5").digest(bytes))
-    val cached = ngramModelCache.get(name)
-    if (cached != null && cached._1 == digest) cached._2
-    else {
-      val m = graft.ext.NgramLm.fromJson(new String(bytes, "UTF-8"))
-      ngramModelCache.put(name, (digest, m))
-      m
-    }
+    val path = ngramModelPath(name)
+    memo(path)(graft.ext.NgramLm.fromJson(new String(readSidecar(path), "UTF-8")))
   }
 
   def listNgramModels(): Seq[String] = {
@@ -473,10 +495,8 @@ class Store(val spark: SparkSession, val root: String) {
   def dropQualityModel(name: String): Unit =
     fs.delete(new Path(qualityModelPath(name)), false)
 
-  def dropNgramModel(name: String): Unit = {
-    ngramModelCache.remove(name)
+  def dropNgramModel(name: String): Unit =
     fs.delete(new Path(ngramModelPath(name)), false)
-  }
 
   // ——— PCA models (embedding dimensionality reduction) ———
 
@@ -539,7 +559,6 @@ class Store(val spark: SparkSession, val root: String) {
   // ——— Codings (V3, A1) ———
 
   def saveCoding(name: String, coding: Coding): Unit = {
-    codingCache.remove(name)
     import spark.implicits._
     val c = coding.config
     val rows = for {
@@ -556,19 +575,13 @@ class Store(val spark: SparkSession, val root: String) {
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
-  // Driver-side coding cache: codings are tiny (n·k·d doubles) but live
-  // in Parquet, so a probed search would otherwise pay 2 small Spark jobs
-  // per call just to reload unchanged centroids. Invalidated on save/drop.
-  private val codingCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Coding]()
-
-  def loadCoding(name: String): Coding = {
-    val cached = codingCache.get(name)
-    if (cached != null) return cached
-    val fresh = loadCodingUncached(name)
-    codingCache.put(name, fresh)
-    fresh
-  }
+  /** Codings are tiny (n·k·d doubles) but live in Parquet, so a probed
+    * search would otherwise pay 2 small Spark jobs per call to reload
+    * unchanged centroids: [[memo]]ized under the two files every
+    * [[saveCoding]] rewrites. */
+  def loadCoding(name: String): Coding =
+    memo(codingPath(name), Seq("config.json", "centroids/_SUCCESS"))(
+      loadCodingUncached(name))
 
   private def loadCodingUncached(name: String): Coding = {
     val in = fs.open(new Path(s"${codingPath(name)}/config.json"))
@@ -604,7 +617,6 @@ class Store(val spark: SparkSession, val root: String) {
   /** Drop a coding AND every index built from it (fixes the reference's
     * drop-index leak, `flight.py:92-100` / SURVEY A4). */
   def dropCoding(name: String): Unit = {
-    codingCache.remove(name)
     fs.delete(new Path(codingPath(name)), true)
     for {
       source <- list(s"$root/indexes")

@@ -1148,6 +1148,20 @@ class ServerSpec extends SparkSuite {
     assert(send("DELETE", "/tables/conc_t")._1 == 200)
   }
 
+  test("no loopback stall: sequential requests to a cheap route take under 20 ms") {
+    // a response goes out as two writes (headers, body); with Nagle on,
+    // the body waits for the client's delayed ACK, about 40 ms each time
+    assert(send("GET", "/tables")._1 == 200)
+    val ms = (0 until 30).map { _ =>
+      val t0 = System.nanoTime()
+      val (code, body) = send("GET", "/tables")
+      assert(code == 200, body)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(15) < 20.0,
+      s"median ${ms(15)} ms over 30 sequential requests: ${ms.mkString(", ")}")
+  }
+
   test("hostile names: traversal rejected, quotes never break response JSON") {
     // `..` as a table name must be rejected before any filesystem use
     val (tc, tBody) = send("PUT", "/tables/..",
