@@ -962,13 +962,11 @@ class Engine(val spark: SparkSession, val root: String,
   }
 
   /** Cell-scoped index repair after in-place source modifications or
-    * deletions ([[Index.repair]] for the ivf copy, [[Index.repairTier]]
-    * for the quantized tiers) — re-encodes only rows from changed files
-    * and rewrites only affected cells. */
+    * deletions ([[Index.repair]], any tier) — re-encodes only rows from
+    * changed files and rewrites only affected cells. */
   def repairIndex(codingName: String, source: String, column: String,
       tier: String = "ivf"): Index.RepairStats =
-    if (tier == "ivf") Index.repair(store, codingName, source, column)
-    else Index.repairTier(store, codingName, source, column, tier)
+    Index.repair(store, codingName, source, column, tier)
 
   /** Whether a tier's copy was built/synced from the CURRENT source
     * content ([[Index.tierFresh]]) — false after any in-place rewrite
@@ -1161,27 +1159,40 @@ class Engine(val spark: SparkSession, val root: String,
     Index.buildPq(store, codingName, source, column, pqConfig, residual)
 
   /** Encode-only append of new source rows to an existing PQ index under
-    * its stored codebooks ([[Index.syncIncrementalPq]]); returns rows
-    * appended. */
+    * its stored codebooks ([[Index.syncIncremental]]); returns rows
+    * appended. Refuses when `expect` names a different PQ layout than
+    * the stored one. */
   def syncPqIndex(codingName: String, source: String, column: String,
-      idCol: String, expect: Option[graft.coder.PQ.PQConfig] = None): Long =
-    Index.syncIncrementalPq(store, codingName, source, column, idCol, expect)
+      idCol: String, expect: Option[graft.coder.PQ.PQConfig] = None): Long = {
+    // a missing index is the sync's to refuse
+    if (Index.pqIndexExists(store, codingName, source, column)) expect.foreach { e =>
+      val cb = Index.loadPqCodebooks(store, codingName, source, column)
+      require(e.numSubspaces == cb.config.numSubspaces &&
+          graft.core.Metrics.canonical(e.metric) == cb.canonicalMetric &&
+          e.codebookSize >= cb.config.codebookSize,
+        s"PQ config mismatch: stored index has m=${cb.config.numSubspaces} " +
+          s"k=${cb.config.codebookSize} metric=${cb.canonicalMetric}; " +
+          s"requested m=${e.numSubspaces} k=${e.codebookSize} " +
+          s"metric=${graft.core.Metrics.canonical(e.metric)} — rebuild with buildPq")
+    }
+    Index.syncIncremental(store, codingName, source, column, idCol, tier = "pq")
+  }
 
   /** Build the IVF+SQ8 index under an existing coding — 8-bit scalar
     * quantization, the memory tier between raw vectors and PQ
-    * ([[Index.buildSq]]); returns the per-dimension affine params. */
-  /** `perCell = true` fits one affine block per IVF cell (plus a global
-    * fallback) — see [[Index.buildSq]]. */
+    * ([[Index.buildSq]]); returns the shared per-dimension affine
+    * params. `perCell = true` fits one affine block per IVF cell (plus a
+    * global fallback). */
   def makeSqIndex(codingName: String, source: String, column: String,
       perCell: Boolean = false): Index.SqParams =
     Index.buildSq(store, codingName, source, column, perCell)
 
   /** Quantize-only append of new source rows to an existing SQ8 index
-    * under its stored affine params ([[Index.syncIncrementalSq]]);
+    * under its stored affine params ([[Index.syncIncremental]]);
     * returns rows appended. */
   def syncSqIndex(codingName: String, source: String, column: String,
       idCol: String): Long =
-    Index.syncIncrementalSq(store, codingName, source, column, idCol)
+    Index.syncIncremental(store, codingName, source, column, idCol, tier = "sq")
 
   /** Build the IVF+BQ index under an existing coding — 1-bit sign codes
     * (32× smaller than float32; [[Index.buildBq]]); returns the
@@ -1193,10 +1204,10 @@ class Engine(val spark: SparkSession, val root: String,
     Index.buildBq(store, codingName, source, column, perCell)
 
   /** Encode-only append of new source rows to an existing BQ index under
-    * its stored thresholds ([[Index.syncIncrementalBq]]). */
+    * its stored thresholds ([[Index.syncIncremental]]). */
   def syncBqIndex(codingName: String, source: String, column: String,
       idCol: String): Long =
-    Index.syncIncrementalBq(store, codingName, source, column, idCol)
+    Index.syncIncremental(store, codingName, source, column, idCol, tier = "bq")
 
   /** Matryoshka prefix-truncation search over a stored table
     * ([[Search.matryoshkaSearch]]): coarse rank on the first `prefixDim`

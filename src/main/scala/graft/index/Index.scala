@@ -51,21 +51,45 @@ object Index {
     // rather than a wrongly-fresh one
     val listing = store.sourceListing(source)
     val df = store.loadTable(source)
-    // Cluster rows by cell before the partitioned write: without this every
-    // task writes a file into every cell directory (tasks × cells tiny
-    // files); with it each cell is one task's output. Hash-repartition on
-    // the cell id keeps it one shuffle, sized to the cell count.
-    val parts = math.max(1, math.min(coding.numCells,
-      df.sparkSession.sparkContext.defaultParallelism.toLong * 2).toInt)
     val path = store.indexPath(source, column, codingName)
-    df.withColumn(SrcFileCol, col("_metadata.file_name"))
-      .withColumn(CodeCol, assignExpr(col(column), coding))
-      .repartition(parts, col(CodeCol))
+    writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
+      .withColumn(CodeCol, assignExpr(col(column), coding)), coding.numCells, path)
+    recordSourceStamp(store, path, listing)
+    warnIfSkewed(store, codingName, source, column)
+  }
+
+  /** The write every build and [[repair]] ends with: overwrite `path`
+    * with `coded` partitioned by cell. Rows are clustered by cell first:
+    * without this every task writes a file into every cell directory
+    * (tasks × cells tiny files); with it each cell is one task's output.
+    * Hash-repartition on the cell id keeps it one shuffle, sized to the
+    * `cells` written. Callers stamp after it, codec sidecar first, so a
+    * crash in between leaves a stale stamp rather than a wrongly-fresh
+    * one. */
+  private def writeCells(coded: DataFrame, cells: Long, path: String): Unit = {
+    val parts = math.max(1, math.min(cells,
+      coded.sparkSession.sparkContext.defaultParallelism.toLong * 2).toInt)
+    coded.repartition(parts, col(CodeCol))
       .write.mode("overwrite")
       .partitionBy(CodeCol)
       .parquet(path)
-    recordSourceStamp(store, path, listing)
-    warnIfSkewed(store, codingName, source, column)
+  }
+
+  /** Moves each of `cells` from `tmp` over `path`, one directory at a
+    * time (a cell absent from `tmp` ends up deleted), then drops `tmp`.
+    * A crash mid-swap leaves some cells old and some new: callers make
+    * sure the stamp does not read fresh across it. */
+  private def swapCells(store: Store, tmp: String, path: String,
+      cells: Seq[Long], op: String): Unit = {
+    val fs = store.fs
+    cells.foreach { cell =>
+      val dst = new org.apache.hadoop.fs.Path(s"$path/$CodeCol=$cell")
+      val srcP = new org.apache.hadoop.fs.Path(s"$tmp/$CodeCol=$cell")
+      fs.delete(dst, true)
+      if (fs.exists(srcP))
+        require(fs.rename(srcP, dst), s"$op: rename failed for cell $cell")
+    }
+    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
 
   private val StampFile = "_source_stamp.json"
@@ -129,25 +153,99 @@ object Index {
       recordedStamp(store, path).contains(store.sourceStamp(source))
   }
 
-  /** Incremental sync: assign + append only the source rows whose `idCol`
-    * is not yet indexed (the reference's `sync_index` reassigns the whole
-    * table every time, `flight.py:219-233`). One anti-join + one narrow
-    * assignment pass over the delta; appended files land in their cell
-    * partitions. Returns the number of rows appended.
+  /** A tier's stored codec — all that maintenance needs to know of a
+    * tier beyond the shared cell layout. [[syncIncremental]] and
+    * [[repair]] run every step; a tier supplies only:
+    *   - `path`, its cell-partitioned copy (a [[tierPath]]);
+    *   - `encode`, which adds the tier's code column to rows that
+    *     already carry `__CODED_ID__`, under the STORED codec
+    *     (codebooks / affine params / sign thresholds). Maintenance never
+    *     re-fits: a shifted value distribution is a rebuild decision;
+    *   - `rebuild`, a full build under the STORED config (per-cell mode,
+    *     PQ m/k/metric/residual). */
+  private final case class Codec(path: String,
+      encode: DataFrame => DataFrame, rebuild: () => Unit)
+
+  /** The stored codec of `tier` (ivf | pq | sq | bq). The plain IVF copy
+    * has no codes and rebuilds with [[build]]; a quantized tier with no
+    * codec sidecar refuses, since there is no config to encode or
+    * rebuild under. The codec itself is read on first use. */
+  private def storedCodec(store: Store, codingName: String, source: String,
+      column: String, tier: String): Codec = {
+    val path = tierPath(store, codingName, source, column, tier)
+    def requireBuilt(sidecar: String, builder: String): Unit =
+      require(store.sidecarExists(sidecar),
+        s"no ${tier.toUpperCase} index for $source.$column under coding " +
+          s"'$codingName' — build it first ($builder)")
+    tier match {
+      case "ivf" =>
+        Codec(path, identity, () => build(store, codingName, source, column))
+      case "sq" =>
+        requireBuilt(sqSidecar(path), "buildSq")
+        lazy val params = loadSqParams(store, codingName, source, column)
+        Codec(path,
+          // per-cell sets quantize rows in unseen cells under the global
+          // fallback block — the same block the dequantize side selects
+          _.withColumn(SqCol, quantizeSetCol(col(column), col(CodeCol), params)),
+          // a legacy single-affine sidecar does not parse: rebuild shared
+          () => buildSq(store, codingName, source, column,
+            scala.util.Try(params.perCell).getOrElse(false)))
+      case "bq" =>
+        requireBuilt(bqSidecar(path), "buildBq")
+        lazy val params = loadBqParams(store, codingName, source, column)
+        Codec(path,
+          // per-cell sets pack rows in unseen cells under the global
+          // fallback block — the same block the decode side selects
+          _.withColumn(BqCol, packSignBitsSetCol(col(column), col(CodeCol), params)),
+          () => buildBq(store, codingName, source, column, params.perCell))
+      case "pq" =>
+        requireBuilt(pqSidecar(path), "buildPq")
+        lazy val cb = loadPqCodebooks(store, codingName, source, column)
+        Codec(path,
+          assigned =>
+            if (!cb.residual)
+              assigned.withColumn(PqCol, graft.coder.PQ.encodeExpr(col(column), cb))
+            else {
+              // anchors for EVERY possible cell: the build-time empirical
+              // mean, else the deterministic fallback [[searchIvfPq]]
+              // builds its ADC table from, so codes and search tables
+              // always agree (numCells is ≤ the residual cap by build)
+              val coding = store.loadCoding(codingName)
+              val fb = residualFallbackAnchor(cb, coding)
+              val full: Map[Long, Array[Double]] = (0L until coding.numCells)
+                .map(c => c -> cb.anchors.getOrElse(c, fb(c))).toMap
+              withResidualBase(assigned, column, cb.canonicalMetric)
+                .withColumn("__RES__",
+                  graft.coder.PQ.residualExpr(col(ResBase), col(CodeCol), full))
+                .withColumn(PqCol, graft.coder.PQ.encodeExpr(col("__RES__"), cb))
+                .drop("__RES__", ResBase)
+            },
+          () => buildPq(store, codingName, source, column, cb.config, cb.residual))
+    }
+  }
+
+  /** Incremental sync of a `tier` copy (ivf | pq | sq | bq): assign,
+    * encode under the stored codec and append only the source rows whose
+    * `idCol` is not yet indexed (the reference's `sync_index` reassigns
+    * the whole table every time, `flight.py:219-233`). One anti-join +
+    * one narrow pass over the delta; appended files land in their cell
+    * partitions. A missing IVF copy is built; a missing quantized copy
+    * refuses. Returns the number of rows appended.
     *
-    * The stamp is refreshed only when growth is VERIFIABLY append-only:
-    * every file entry recorded at the last build/sync must still be
-    * present, unchanged, in the current listing. A rewrite that modifies
-    * existing rows AND adds new ids appends the new rows but leaves the
-    * stamp stale (the anti-join cannot repair modified rows) — recover
-    * with [[repair]]. */
+    * The listing is taken BEFORE the source is read, and the stamp is
+    * refreshed to THAT listing only when growth is VERIFIABLY
+    * append-only: every file entry recorded at the last build/sync must
+    * still be present, unchanged. A file landing mid-sync is then
+    * missing from the stamp (not fresh) rather than stamped unread; a
+    * rewrite that modifies existing rows AND adds new ids appends the
+    * new rows but leaves the stamp stale (the anti-join cannot repair
+    * modified rows) — recover with [[repair]]. */
   def syncIncremental(store: Store, codingName: String, source: String,
-      column: String, idCol: String): Long = {
-    val path = store.indexPath(source, column, codingName)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) {
-      build(store, codingName, source, column)
+      column: String, idCol: String, tier: String = "ivf"): Long = {
+    val codec = storedCodec(store, codingName, source, column, tier)
+    val path = codec.path
+    if (!store.fs.exists(new org.apache.hadoop.fs.Path(path))) {
+      codec.rebuild()
       return store.spark.read.parquet(path).count()
     }
     val coding = store.loadCoding(codingName)
@@ -156,15 +254,15 @@ object Index {
     val existing = existingDf.select(col(idCol))
     val hasProvenance = existingDf.schema.fieldNames.contains(SrcFileCol)
     val src0 = store.loadTable(source)
-    // legacy indexes (no provenance column) append without it — a mixed
+    // legacy copies (no provenance column) append without it — a mixed
     // schema would make the parquet read schema file-order-dependent
     val src = if (hasProvenance)
       src0.withColumn(SrcFileCol, col("_metadata.file_name"))
     else src0
     val fresh = src.join(existing, Seq(idCol), "left_anti")
-    val delta = fresh.withColumn(CodeCol, assignExpr(col(column), coding))
+    val delta = codec.encode(fresh.withColumn(CodeCol, assignExpr(col(column), coding)))
     // the delta is bounded by the append size, so persist it: count +
-    // write would otherwise run the anti-join + assignment twice
+    // write would otherwise run the anti-join + assignment + encode twice
     delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val appended = delta.count()
@@ -178,7 +276,7 @@ object Index {
         val curSet = listing.toSet
         if (recordedListing(store, path).exists(_.forall(curSet.contains)))
           recordSourceStamp(store, path, listing)
-        warnIfSkewed(store, codingName, source, column)
+        if (tier == "ivf") warnIfSkewed(store, codingName, source, column)
       }
       appended
     } finally delta.unpersist(blocking = false)
@@ -190,29 +288,31 @@ object Index {
   case class RepairStats(filesChanged: Long, cellsRewritten: Long,
       fullRebuild: Boolean)
 
-  /** Cell-scoped repair after in-place source modifications or deletions —
-    * the recovery path [[syncIncremental]] cannot provide (its anti-join
-    * only sees NEW ids). Diffs the recorded per-file listing against the
-    * current one, drops indexed rows originating from changed/removed
-    * files, re-ingests rows from changed/added files, and rewrites ONLY
-    * the affected cell partitions (ghost rows from deleted files are
-    * removed too). At 100 TB a one-file rewrite costs one file's worth of
-    * re-assignment plus a few cell directories — not a full re-index.
+  /** Cell-scoped repair of a `tier` copy (ivf | pq | sq | bq) after
+    * in-place source modifications or deletions — the recovery path
+    * [[syncIncremental]] cannot provide (its anti-join only sees NEW
+    * ids). Diffs the recorded per-file listing against the current one,
+    * drops indexed rows originating from changed/removed files,
+    * re-ingests rows from changed/added files — re-assigned, and
+    * re-ENCODED under the tier's stored codec — and rewrites ONLY the
+    * affected cell partitions (ghost rows from deleted files are removed
+    * too). At 100 TB a one-file rewrite costs one file's worth of
+    * re-encode plus a few cell directories per tier — not a full
+    * re-index. Each tier keeps its own stamp, so each is repaired on its
+    * own.
     *
-    * Indexes built before the provenance column / listing sidecar fall
-    * back to a full [[build]] (flagged in the returned stats). Repairs
-    * only the plain IVF copy; PQ/SQ8 copies of the same source keep their
-    * own stamps and need their own rebuild if stale. */
+    * Copies built before the provenance column / listing sidecar fall
+    * back to a full rebuild under the stored config (flagged in the
+    * returned stats); a quantized tier that was never built refuses. */
   def repair(store: Store, codingName: String, source: String,
-      column: String): RepairStats = {
-    val path = store.indexPath(source, column, codingName)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(store.spark.sparkContext.hadoopConfiguration)
+      column: String, tier: String = "ivf"): RepairStats = {
+    val codec = storedCodec(store, codingName, source, column, tier)
+    val path = codec.path
     def fullRebuild(): RepairStats = {
-      build(store, codingName, source, column)
+      codec.rebuild()
       RepairStats(-1, -1, fullRebuild = true)
     }
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return fullRebuild()
+    if (!store.fs.exists(new org.apache.hadoop.fs.Path(path))) return fullRebuild()
     val recordedOpt = recordedListing(store, path)
     val indexedRaw = store.spark.read.parquet(path)
       .withColumn(CodeCol, col(CodeCol).cast("long"))
@@ -238,10 +338,10 @@ object Index {
     }
     val affectedNames = (staleNames ++ freshNames).distinct
     val coding = store.loadCoding(codingName)
-    val freshRows = store.loadTable(source)
+    val freshRows = codec.encode(store.loadTable(source)
       .withColumn(SrcFileCol, col("_metadata.file_name"))
       .filter(col(SrcFileCol).isin(freshNames: _*))
-      .withColumn(CodeCol, assignExpr(col(column), coding))
+      .withColumn(CodeCol, assignExpr(col(column), coding)))
     // affected cells: wherever a stale file's rows sit, plus wherever a
     // fresh file's rows land — two small distinct-collects, bounded by
     // numCells
@@ -257,7 +357,7 @@ object Index {
       return RepairStats(affectedNames.length.toLong, 0, fullRebuild = false)
     }
     // replacement content for the affected cells: surviving rows from
-    // untouched files + re-assigned rows from changed/added files. It
+    // untouched files + re-encoded rows from changed/added files. It
     // READS the directories about to be deleted, so it must land on disk
     // (a temp sibling) before any delete — a cache could be evicted and
     // recompute over deleted files
@@ -266,142 +366,11 @@ object Index {
       .filter(!col(SrcFileCol).isin(affectedNames: _*))
       .unionByName(freshRows)
     val tmp = s"$path.__repair_tmp__"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val parts = math.max(1, math.min(affected.length.toLong,
-      store.spark.sparkContext.defaultParallelism.toLong * 2).toInt)
-    replacement.repartition(parts, col(CodeCol))
-      .write.mode("overwrite").partitionBy(CodeCol).parquet(tmp)
-    // swap in the rewritten cells one directory at a time; a crash
-    // mid-swap leaves a stale stamp (the sidecar is written LAST), so
+    store.fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    writeCells(replacement, affected.length.toLong, tmp)
+    // the stamp is written LAST: a crash mid-swap leaves it stale, so
     // freshness keeps failing rather than lying
-    affected.foreach { cell =>
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$CodeCol=$cell")
-      val srcP = new org.apache.hadoop.fs.Path(s"$tmp/$CodeCol=$cell")
-      fs.delete(dst, true)
-      if (fs.exists(srcP))
-        require(fs.rename(srcP, dst), s"repair: rename failed for cell $cell")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    recordSourceStamp(store, path, listing)
-    RepairStats(affectedNames.length.toLong, affected.length.toLong,
-      fullRebuild = false)
-  }
-
-  /** [[repair]] for the quantized tiers (pq | sq | bq): same
-    * listing-diff → reassign-changed-files → rewrite-affected-cells
-    * machinery, with the fresh rows re-ENCODED under the tier's stored
-    * codecs (codebooks / affine params / sign thresholds — repair never
-    * re-fits; a shifted value distribution is a rebuild decision, not a
-    * repair). Tier copies predating the provenance column or the
-    * listing stamp fall back to a full rebuild UNDER THE STORED CONFIG
-    * (per-cell mode, PQ m/k/metric/residual — preserved from the
-    * sidecar). At 100 TB a one-file rewrite costs one file's worth of
-    * re-encode plus a few cell directories per tier — not four full
-    * re-indexes. */
-  def repairTier(store: Store, codingName: String, source: String,
-      column: String, tier: String): RepairStats = {
-    require(Set("pq", "sq", "bq")(tier),
-      s"repairTier handles pq | sq | bq (plain ivf goes through repair), got '$tier'")
-    val path = tierPath(store, codingName, source, column, tier)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(store.spark.sparkContext.hadoopConfiguration)
-    val coding = store.loadCoding(codingName)
-    def rebuild(): RepairStats = {
-      tier match {
-        case "sq" =>
-          val perCell = scala.util.Try(
-            loadSqParams(store, codingName, source, column).perCell).getOrElse(false)
-          buildSq(store, codingName, source, column, perCell)
-        case "bq" =>
-          val perCell = scala.util.Try(
-            loadBqParams(store, codingName, source, column).perCell).getOrElse(false)
-          buildBq(store, codingName, source, column, perCell)
-        case "pq" =>
-          val cb = loadPqCodebooks(store, codingName, source, column)
-          buildPq(store, codingName, source, column, cb.config, cb.residual)
-      }
-      RepairStats(-1, -1, fullRebuild = true)
-    }
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) return rebuild()
-    val recordedOpt = recordedListing(store, path)
-    val indexedRaw = store.spark.read.parquet(path)
-      .withColumn(CodeCol, col(CodeCol).cast("long"))
-    if (recordedOpt.isEmpty || !indexedRaw.schema.fieldNames.contains(SrcFileCol))
-      return rebuild()
-
-    def nameOf(e: String): String =
-      e.substring(0, e.lastIndexOf(':', e.lastIndexOf(':') - 1))
-    val recorded = recordedOpt.get
-    val listing = store.sourceListing(source)
-    val curSet = listing.toSet
-    val recSet = recorded.toSet
-    val staleNames = recorded.filterNot(curSet.contains).map(nameOf).distinct
-    val freshNames = listing.filterNot(recSet.contains).map(nameOf).distinct
-    if (staleNames.isEmpty && freshNames.isEmpty) {
-      recordSourceStamp(store, path, listing)
-      return RepairStats(0, 0, fullRebuild = false)
-    }
-    val affectedNames = (staleNames ++ freshNames).distinct
-    val assigned = store.loadTable(source)
-      .withColumn(SrcFileCol, col("_metadata.file_name"))
-      .filter(col(SrcFileCol).isin(freshNames: _*))
-      .withColumn(CodeCol, assignExpr(col(column), coding))
-    // tier-specific re-encode of the fresh rows under STORED codecs
-    val freshRows: DataFrame = tier match {
-      case "sq" =>
-        val params = loadSqParams(store, codingName, source, column)
-        assigned.withColumn(SqCol,
-          quantizeSetCol(col(column), col(CodeCol), params))
-      case "bq" =>
-        val params = loadBqParams(store, codingName, source, column)
-        assigned.withColumn(BqCol,
-          packSignBitsSetCol(col(column), col(CodeCol), params))
-      case "pq" =>
-        val cb = loadPqCodebooks(store, codingName, source, column)
-        if (!cb.residual)
-          assigned.withColumn(PqCol, graft.coder.PQ.encodeExpr(col(column), cb))
-        else {
-          val fb = residualFallbackAnchor(cb, coding)
-          val full: Map[Long, Array[Double]] = (0L until coding.numCells)
-            .map(c => c -> cb.anchors.getOrElse(c, fb(c))).toMap
-          withResidualBase(assigned, column, cb.canonicalMetric)
-            .withColumn("__RES__",
-              graft.coder.PQ.residualExpr(col(ResBase), col(CodeCol), full))
-            .withColumn(PqCol, graft.coder.PQ.encodeExpr(col("__RES__"), cb))
-            .drop("__RES__", ResBase)
-        }
-    }
-    val staleCells =
-      if (staleNames.isEmpty) Array.empty[Long]
-      else indexedRaw.filter(col(SrcFileCol).isin(staleNames: _*))
-        .select(CodeCol).distinct().collect().map(_.getLong(0))
-    val freshCells = freshRows
-      .select(CodeCol).distinct().collect().map(_.getLong(0))
-    val affected = (staleCells ++ freshCells).distinct.sorted
-    if (affected.isEmpty) {
-      recordSourceStamp(store, path, listing)
-      return RepairStats(affectedNames.length.toLong, 0, fullRebuild = false)
-    }
-    // replacement reads the directories about to be deleted → must land
-    // on a temp sibling before any delete (as [[repair]])
-    val replacement = indexedRaw
-      .filter(col(CodeCol).isin(affected.toIndexedSeq: _*))
-      .filter(!col(SrcFileCol).isin(affectedNames: _*))
-      .unionByName(freshRows)
-    val tmp = s"$path.__repair_tmp__"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val parts = math.max(1, math.min(affected.length.toLong,
-      store.spark.sparkContext.defaultParallelism.toLong * 2).toInt)
-    replacement.repartition(parts, col(CodeCol))
-      .write.mode("overwrite").partitionBy(CodeCol).parquet(tmp)
-    affected.foreach { cell =>
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$CodeCol=$cell")
-      val srcP = new org.apache.hadoop.fs.Path(s"$tmp/$CodeCol=$cell")
-      fs.delete(dst, true)
-      if (fs.exists(srcP))
-        require(fs.rename(srcP, dst), s"repairTier: rename failed for cell $cell")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    swapCells(store, tmp, path, affected.toSeq, "repair")
     recordSourceStamp(store, path, listing)
     RepairStats(affectedNames.length.toLong, affected.length.toLong,
       fullRebuild = false)
@@ -418,8 +387,7 @@ object Index {
       column: String, withRows: Boolean = false,
       tier: String = "ivf"): Seq[(Long, Int, Long, Long)] = {
     val path = tierPath(store, codingName, source, column, tier)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(store.spark.sparkContext.hadoopConfiguration)
+    val fs = store.fs
     val prefix = s"$CodeCol="
     val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(path))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
@@ -527,8 +495,7 @@ object Index {
     val path = tierPath(store, codingName, source, column, tier)
     require(store.sidecarExists(s"$path/_SUCCESS"),
       s"compactCells: no $tier index for $source.$column under '$codingName'")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(store.spark.sparkContext.hadoopConfiguration)
+    val fs = store.fs
     val stats = cellStats(store, codingName, source, column, tier = tier)
     val frag = stats.filter(_._2 > maxFilesPerCell)
     if (frag.isEmpty) return CompactStats(0, 0, 0)
@@ -545,14 +512,7 @@ object Index {
       .repartition(parts, col(CodeCol))
       .write.mode("overwrite").partitionBy(CodeCol).parquet(tmp)
     fs.delete(new org.apache.hadoop.fs.Path(stampSidecar(path)), false)
-    cells.foreach { cell =>
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$CodeCol=$cell")
-      val srcP = new org.apache.hadoop.fs.Path(s"$tmp/$CodeCol=$cell")
-      fs.delete(dst, true)
-      if (fs.exists(srcP))
-        require(fs.rename(srcP, dst), s"compactCells: rename failed for cell $cell")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    swapCells(store, tmp, path, cells, "compactCells")
     recorded.foreach(l => recordSourceStamp(store, path, l))
     val after = cellStats(store, codingName, source, column, tier = tier)
       .filter(s => cells.contains(s._1)).map(_._2.toLong).sum
@@ -763,13 +723,6 @@ object Index {
   val PqCol: String = "__PQ__"
   private def pqSidecar(path: String) = s"$path/_pq_codebooks.json"
 
-  /** Build the IVF+PQ index (the Faiss-IVFADC shape, Jégou et al. 2011):
-    * the cell-partitioned copy additionally carries an m-byte PQ code per
-    * row, so probed search can rank candidates from (id, code) alone —
-    * at 100 TB the coarse pass reads ~probes/k^n of the rows AND none of
-    * the float vectors. Codebooks land as an underscore-prefixed sidecar
-    * (ignored by parquet directory listings) next to the data.
-    */
   /** Residual PQ is gated to a bounded cell count (the anchor map literal
     * is numCells·dim doubles, and search ships one ADC table per probed
     * cell). */
@@ -777,6 +730,13 @@ object Index {
 
   @transient private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  /** Build the IVF+PQ index (the Faiss-IVFADC shape, Jégou et al. 2011):
+    * the cell-partitioned copy additionally carries an m-byte PQ code per
+    * row, so probed search can rank candidates from (id, code) alone —
+    * at 100 TB the coarse pass reads ~probes/k^n of the rows AND none of
+    * the float vectors. Codebooks land as an underscore-prefixed sidecar
+    * (ignored by parquet directory listings) next to the data.
+    */
   def buildPq(store: Store, codingName: String, source: String, column: String,
       pqConfig: graft.coder.PQ.PQConfig,
       residual: Boolean = true): graft.coder.PQ.PQCodebooks = {
@@ -848,17 +808,11 @@ object Index {
     log.info(s"buildPq($source.$column under $codingName): " +
       s"variant=${if (useRes) "residual" else "flat"} metric=$metricC " +
       s"cells=${coding.numCells} m=${cb.m} k=${cb.k}")
-    val parts = math.max(1, math.min(coding.numCells,
-      df.sparkSession.sparkContext.defaultParallelism.toLong * 2).toInt)
     val path = store.pqIndexPath(source, column, codingName)
-    encodeInput
+    writeCells(encodeInput
       .withColumn(PqCol, graft.coder.PQ.encodeExpr(
         col(if (useRes) "__RES__" else column), cb))
-      .drop("__RES__", ResBase)
-      .repartition(parts, col(CodeCol))
-      .write.mode("overwrite")
-      .partitionBy(CodeCol)
-      .parquet(path)
+      .drop("__RES__", ResBase), coding.numCells, path)
     store.writeSidecar(pqSidecar(path), graft.coder.PQ.toJsonBytes(cb))
     recordSourceStamp(store, path, listing)
     cb
@@ -885,79 +839,6 @@ object Index {
     if (metricC != "cosine")
       df.withColumn(ResBase, col(column).cast("array<double>"))
     else graft.functions.functions.withUnitNormalized(df, col(column), ResBase)
-
-  /** Incremental PQ sync: encode-only append of the source rows whose
-    * `idCol` is not yet in the PQ index, under the STORED codebooks — no
-    * retraining, mirroring [[syncIncremental]] for the plain IVF copy
-    * (reference `sync_index` re-assigns after new data,
-    * `flight.py:219-233`). Residual indexes encode new rows against the
-    * build-time empirical anchors; rows landing in cells the build never
-    * saw use the deterministic fallback anchor — the SAME one
-    * [[searchIvfPq]] builds its ADC table from, so codes and search
-    * tables always agree. Refuses when the index doesn't exist or when
-    * `expect` names a different PQ layout than the stored one. Returns
-    * the number of rows appended. */
-  def syncIncrementalPq(store: Store, codingName: String, source: String,
-      column: String, idCol: String,
-      expect: Option[graft.coder.PQ.PQConfig] = None): Long = {
-    val path = store.pqIndexPath(source, column, codingName)
-    require(store.sidecarExists(pqSidecar(path)),
-      s"no PQ index for $source.$column under coding '$codingName' — " +
-        "build it first (buildPq)")
-    val cb = loadPqCodebooks(store, codingName, source, column)
-    expect.foreach { e =>
-      require(e.numSubspaces == cb.config.numSubspaces &&
-          graft.core.Metrics.canonical(e.metric) == cb.canonicalMetric &&
-          e.codebookSize >= cb.config.codebookSize,
-        s"PQ config mismatch: stored index has m=${cb.config.numSubspaces} " +
-          s"k=${cb.config.codebookSize} metric=${cb.canonicalMetric}; " +
-          s"requested m=${e.numSubspaces} k=${e.codebookSize} " +
-          s"metric=${graft.core.Metrics.canonical(e.metric)} — rebuild with buildPq")
-    }
-    val coding = store.loadCoding(codingName)
-    val existingDf = store.spark.read.parquet(path)
-    val existing = existingDf.select(col(idCol))
-    // legacy copies (no provenance column) append without it — a mixed
-    // schema would make the parquet read file-order-dependent
-    val src0 = store.loadTable(source)
-    val src = if (existingDf.schema.fieldNames.contains(SrcFileCol))
-      src0.withColumn(SrcFileCol, col("_metadata.file_name"))
-    else src0
-    val fresh = src.join(existing, Seq(idCol), "left_anti")
-    val assigned = fresh.withColumn(CodeCol, assignExpr(col(column), coding))
-    val delta =
-      if (!cb.residual)
-        assigned.withColumn(PqCol,
-          graft.coder.PQ.encodeExpr(col(column), cb))
-      else {
-        // anchors for EVERY possible cell (stored empirical mean, else the
-        // deterministic fallback); numCells is ≤ the residual cap by build
-        val fb = residualFallbackAnchor(cb, coding)
-        val full: Map[Long, Array[Double]] = (0L until coding.numCells)
-          .map(c => c -> cb.anchors.getOrElse(c, fb(c))).toMap
-        withResidualBase(assigned, column, cb.canonicalMetric)
-          .withColumn("__RES__",
-            graft.coder.PQ.residualExpr(col(ResBase), col(CodeCol), full))
-          .withColumn(PqCol, graft.coder.PQ.encodeExpr(col("__RES__"), cb))
-          .drop("__RES__", ResBase)
-      }
-    // persist the (append-sized) delta: count + write would otherwise run
-    // the anti-join + assignment + normalize + residual + encode twice
-    delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val appended = delta.count()
-      if (appended > 0) {
-        delta.write.mode("append").partitionBy(CodeCol).parquet(path)
-        // re-stamp ONLY for verifiably append-only growth (the
-        // [[syncIncremental]] rule): a rewrite that also modified
-        // existing files must keep freshness failing
-        val curSet = store.sourceListing(source).toSet
-        if (recordedListing(store, path).exists(_.forall(curSet.contains)))
-          recordSourceStamp(store, path, store.sourceListing(source))
-      }
-      appended
-    } finally delta.unpersist(blocking = false)
-  }
 
   def pqIndexExists(store: Store, codingName: String, source: String, column: String): Boolean =
     store.sidecarExists(pqSidecar(store.pqIndexPath(source, column, codingName)))
@@ -1187,16 +1068,11 @@ object Index {
         SqParamsSet(fitSqParams(gLo, gHi),
           bounds.map { case (c, (lo, hi)) => c -> fitSqParams(lo, hi) }.toMap)
       }
-    val parts = math.max(1, math.min(coding.numCells,
-      df.sparkSession.sparkContext.defaultParallelism.toLong * 2).toInt)
     val path = store.sqIndexPath(source, column, codingName)
-    df.withColumn(SrcFileCol, col("_metadata.file_name"))
+    writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
       .withColumn(CodeCol, assignExpr(col(column), coding))
-      .withColumn(SqCol, quantizeSetCol(col(column), col(CodeCol), set))
-      .repartition(parts, col(CodeCol))
-      .write.mode("overwrite")
-      .partitionBy(CodeCol)
-      .parquet(path)
+      .withColumn(SqCol, quantizeSetCol(col(column), col(CodeCol), set)),
+      coding.numCells, path)
     store.writeSidecar(sqSidecar(path), sqParamsJson(set).getBytes("UTF-8"))
     recordSourceStamp(store, path, listing)
     set.global
@@ -1255,50 +1131,6 @@ object Index {
       b.result()
     }.getOrElse(Map.empty)
     SqParamsSet(global, cells)
-  }
-
-  /** Incremental SQ8 sync: quantize-only append of source rows whose
-    * `idCol` is not yet in the SQ index, under the STORED affine params
-    * (no re-fit — new values outside the original [lo, hi] clamp to the
-    * range ends, the standard SQ staleness trade; rebuild when the value
-    * distribution shifts). Mirrors [[syncIncrementalPq]]; refuses when
-    * the index doesn't exist. Returns rows appended. */
-  def syncIncrementalSq(store: Store, codingName: String, source: String,
-      column: String, idCol: String): Long = {
-    val path = store.sqIndexPath(source, column, codingName)
-    require(store.sidecarExists(sqSidecar(path)),
-      s"no SQ index for $source.$column under coding '$codingName' — " +
-        "build it first (buildSq)")
-    val params = loadSqParams(store, codingName, source, column)
-    val coding = store.loadCoding(codingName)
-    val existingDf = store.spark.read.parquet(path)
-    val existing = existingDf.select(col(idCol))
-    // legacy copies (no provenance column) append without it — a mixed
-    // schema would make the parquet read file-order-dependent
-    val src0 = store.loadTable(source)
-    val src = if (existingDf.schema.fieldNames.contains(SrcFileCol))
-      src0.withColumn(SrcFileCol, col("_metadata.file_name"))
-    else src0
-    val fresh = src.join(existing, Seq(idCol), "left_anti")
-    val delta = fresh
-      .withColumn(CodeCol, assignExpr(col(column), coding))
-      // per-cell sets quantize rows in unseen cells under the global
-      // fallback block — the same block the dequantize side will select
-      .withColumn(SqCol, quantizeSetCol(col(column), col(CodeCol), params))
-    delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val appended = delta.count()
-      if (appended > 0) {
-        delta.write.mode("append").partitionBy(CodeCol).parquet(path)
-        // re-stamp ONLY for verifiably append-only growth (the
-        // [[syncIncremental]] rule): a rewrite that also modified
-        // existing files must keep freshness failing
-        val curSet = store.sourceListing(source).toSet
-        if (recordedListing(store, path).exists(_.forall(curSet.contains)))
-          recordSourceStamp(store, path, store.sourceListing(source))
-      }
-      appended
-    } finally delta.unpersist(blocking = false)
   }
 
   /** Probed IVF+SQ8 search — the [[twoPass]] plan with the coarse score
@@ -1503,16 +1335,11 @@ object Index {
         BqParamsSet(global, cells)
       }
 
-    val parts = math.max(1, math.min(coding.numCells,
-      df.sparkSession.sparkContext.defaultParallelism.toLong * 2).toInt)
     val path = store.bqIndexPath(source, column, codingName)
-    df.withColumn(SrcFileCol, col("_metadata.file_name"))
+    writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
       .withColumn(CodeCol, assignExpr(col(column), coding))
-      .withColumn(BqCol, packSignBitsSetCol(col(column), col(CodeCol), set))
-      .repartition(parts, col(CodeCol))
-      .write.mode("overwrite")
-      .partitionBy(CodeCol)
-      .parquet(path)
+      .withColumn(BqCol, packSignBitsSetCol(col(column), col(CodeCol), set)),
+      coding.numCells, path)
     store.writeSidecar(bqSidecar(path), bqParamsJson(set).getBytes("UTF-8"))
     recordSourceStamp(store, path, listing)
     thresholds
@@ -1584,45 +1411,6 @@ object Index {
   private def loadBqThresholds(store: Store, codingName: String,
       source: String, column: String): Array[Double] =
     loadBqParams(store, codingName, source, column).global.thresholds
-
-  /** Incremental BQ sync: append-only delta encoded under the STORED
-    * thresholds (no re-fit — a shifted value distribution degrades code
-    * balance, not correctness, since rerank is exact; rebuild when the
-    * distribution moves). Mirrors [[syncIncrementalSq]]. */
-  def syncIncrementalBq(store: Store, codingName: String, source: String,
-      column: String, idCol: String): Long = {
-    val path = store.bqIndexPath(source, column, codingName)
-    val params = loadBqParams(store, codingName, source, column)
-    val coding = store.loadCoding(codingName)
-    val existingDf = store.spark.read.parquet(path)
-    val existing = existingDf.select(col(idCol))
-    // legacy copies (no provenance column) append without it — a mixed
-    // schema would make the parquet read file-order-dependent
-    val src0 = store.loadTable(source)
-    val src = if (existingDf.schema.fieldNames.contains(SrcFileCol))
-      src0.withColumn(SrcFileCol, col("_metadata.file_name"))
-    else src0
-    val fresh = src.join(existing, Seq(idCol), "left_anti")
-    val delta = fresh
-      .withColumn(CodeCol, assignExpr(col(column), coding))
-      // per-cell sets pack rows in unseen cells under the global
-      // fallback block — the same block the decode side will select
-      .withColumn(BqCol, packSignBitsSetCol(col(column), col(CodeCol), params))
-    delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val appended = delta.count()
-      if (appended > 0) {
-        delta.write.mode("append").partitionBy(CodeCol).parquet(path)
-        // re-stamp ONLY for verifiably append-only growth (the
-        // [[syncIncremental]] rule): a rewrite that also modified
-        // existing files must keep freshness failing
-        val curSet = store.sourceListing(source).toSet
-        if (recordedListing(store, path).exists(_.forall(curSet.contains)))
-          recordSourceStamp(store, path, store.sourceListing(source))
-      }
-      appended
-    } finally delta.unpersist(blocking = false)
-  }
 
   /** Probed IVF+BQ search — the [[twoPass]] plan at the 1-bit tier: the
     * coarse pass reads (idCol, ceil(d/8)-byte codes) over pruned

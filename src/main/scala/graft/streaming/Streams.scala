@@ -120,16 +120,8 @@ object Streams {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (_: DataFrame, _: Long) =>
-        tier match {
-          case "ivf" => graft.index.Index.syncIncremental(
-            store, codingName, source, column, idCol)
-          case "pq" => graft.index.Index.syncIncrementalPq(
-            store, codingName, source, column, idCol)
-          case "sq" => graft.index.Index.syncIncrementalSq(
-            store, codingName, source, column, idCol)
-          case "bq" => graft.index.Index.syncIncrementalBq(
-            store, codingName, source, column, idCol)
-        }
+        graft.index.Index.syncIncremental(
+          store, codingName, source, column, idCol, tier)
         val n = batches.incrementAndGet()
         if (compactEveryBatches > 0 && n % compactEveryBatches == 0)
           graft.index.Index.compactCells(store, codingName, source, column,

@@ -162,7 +162,7 @@ class NgramLmSpec extends SparkSuite {
     val a = store.loadNgramModel("lm")
     val b = store.loadNgramModel("lm")
     assert(a eq b, "unchanged model file must return the cached instance")
-    // retrain + save invalidates via the content digest
+    // retrain + save invalidates via the model file's (mtime, length) stamp
     val m2 = NgramLm.train(train, "text", vocabSize = 2)
     store.saveNgramModel("lm", m2)
     val c = store.loadNgramModel("lm")

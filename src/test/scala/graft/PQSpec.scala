@@ -693,7 +693,7 @@ class SqSpec extends SparkSuite {
 
     // sync refuses when no SQ index exists
     intercept[IllegalArgumentException] {
-      Index.syncIncrementalSq(engine.store, "nope", "sqv", "vec", "id")
+      Index.syncIncremental(engine.store, "nope", "sqv", "vec", "id", tier = "sq")
     }
 
     // drop-index also removes the SQ copy (the A4 leak-fix contract)
@@ -866,7 +866,7 @@ class SqSpec extends SparkSuite {
       .toDF("id", "vec")
     extra.coalesce(1).write.mode("append")
       .parquet(engine.store.tablePath("cv"))
-    assert(Index.syncIncrementalSq(engine.store, "cc", "cv", "vec", "id") == 10L)
+    assert(Index.syncIncremental(engine.store, "cc", "cv", "vec", "id", tier = "sq") == 10L)
     val full2 = engine.searchSq("cv", "vec", target, coding = "cc",
         probes = 2, candidates = 1 << 20, idCol = "id", k = 10,
         metric = Some("l2"), tieBreak = Seq("id"))

@@ -222,9 +222,9 @@ class RepairSpec extends SparkSuite {
       assert(!Index.tierFresh(engine.store, "tc", "tf", "vec", t),
         s"tier $t still fresh after un-synced append")
     Index.syncIncremental(engine.store, "tc", "tf", "vec", "id")
-    Index.syncIncrementalPq(engine.store, "tc", "tf", "vec", "id")
-    Index.syncIncrementalSq(engine.store, "tc", "tf", "vec", "id")
-    Index.syncIncrementalBq(engine.store, "tc", "tf", "vec", "id")
+    Index.syncIncremental(engine.store, "tc", "tf", "vec", "id", tier = "pq")
+    Index.syncIncremental(engine.store, "tc", "tf", "vec", "id", tier = "sq")
+    Index.syncIncremental(engine.store, "tc", "tf", "vec", "id", tier = "bq")
     for (t <- Seq("ivf", "pq", "sq", "bq"))
       assert(Index.tierFresh(engine.store, "tc", "tf", "vec", t),
         s"tier $t not fresh after sync")
@@ -239,7 +239,7 @@ class RepairSpec extends SparkSuite {
     for (t <- Seq("ivf", "pq", "sq", "bq"))
       assert(!Index.tierFresh(engine.store, "tc", "tf", "vec", t),
         s"tier $t wrongly fresh after in-place rewrite")
-    Index.syncIncrementalBq(engine.store, "tc", "tf", "vec", "id")
+    Index.syncIncremental(engine.store, "tc", "tf", "vec", "id", tier = "bq")
     assert(!Index.tierFresh(engine.store, "tc", "tf", "vec", "bq"),
       "bq sync must not re-stamp after a rewrite")
     // a rebuild adopts the new content
@@ -298,6 +298,70 @@ class RepairSpec extends SparkSuite {
         metric = Some("l2"), tieBreak = Seq("id"))
       .select("id").as[Long].collect().toSeq
     assert(viaPq == brute, s"pq after repair: $viaPq vs $brute")
+    engine.remove()
+  }
+
+  test("repairing a quantized tier that was never built refuses and writes nothing") {
+    val root = java.nio.file.Files.createTempDirectory("graft-repair-unbuilt").toString
+    val engine = new Engine(spark, root)
+    makeClusteredSource(engine, "nb")
+    engine.makeCoder("rc", "nb", "vec", CoderConfig(metric = "l2",
+      codebookSize = 4, numCodebooks = 1, batchSize = 128, numEpochs = 2))
+    for ((t, path) <- Seq(
+        "sq" -> engine.store.sqIndexPath("nb", "vec", "rc"),
+        "bq" -> engine.store.bqIndexPath("nb", "vec", "rc"),
+        "pq" -> engine.store.pqIndexPath("nb", "vec", "rc"))) {
+      val err = intercept[IllegalArgumentException] {
+        engine.repairIndex("rc", "nb", "vec", t)
+      }
+      assert(err.getMessage.contains("build it first"), s"$t: ${err.getMessage}")
+      assert(!fs.exists(new Path(path)), s"$t repair left a tier directory")
+      assert(!Index.tierFresh(engine.store, "rc", "nb", "vec", t))
+    }
+    engine.remove()
+  }
+
+  test("repairing a legacy quantized copy rebuilds it under the stored config") {
+    val root = java.nio.file.Files.createTempDirectory("graft-repair-legacy").toString
+    val engine = new Engine(spark, root)
+    makeClusteredSource(engine, "lg")
+    engine.makeCoder("rc", "lg", "vec", CoderConfig(metric = "l2",
+      codebookSize = 4, numCodebooks = 1, batchSize = 128, numEpochs = 3))
+    Index.buildSq(engine.store, "rc", "lg", "vec", perCell = true)
+    Index.buildBq(engine.store, "rc", "lg", "vec", perCell = true)
+    Index.buildPq(engine.store, "rc", "lg", "vec",
+      graft.coder.PQ.PQConfig(numSubspaces = 2, codebookSize = 4,
+        metric = "l2", sampleSize = 320), residual = false)
+    val tiers = Seq(
+      ("sq", engine.store.sqIndexPath("lg", "vec", "rc"), "_sq_params.json"),
+      ("bq", engine.store.bqIndexPath("lg", "vec", "rc"), "_bq_thresholds.json"),
+      ("pq", engine.store.pqIndexPath("lg", "vec", "rc"), "_pq_codebooks.json"))
+    def sidecarHasCells(path: String, sidecar: String): Boolean =
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(engine.store.readSidecar(s"$path/$sidecar")).has("cells")
+    for ((t, path, sidecar) <- tiers) {
+      // the copy as a pre-provenance build left it: no __SRC_FILE__
+      // column and no stamp, codec sidecar kept
+      val codec = engine.store.readSidecar(s"$path/$sidecar")
+      val legacy = spark.read.parquet(path).drop(Index.SrcFileCol)
+      spark.createDataFrame(legacy.collectAsList(), legacy.schema)
+        .write.mode("overwrite").partitionBy(Index.CodeCol).parquet(path)
+      engine.store.writeSidecar(s"$path/$sidecar", codec)
+      fs.delete(new Path(s"$path/_source_stamp.json"), false)
+      assert(!Index.tierFresh(engine.store, "rc", "lg", "vec", t))
+
+      val stats = engine.repairIndex("rc", "lg", "vec", t)
+      assert(stats.fullRebuild, s"$t: a legacy copy must rebuild, got $stats")
+      assert(spark.read.parquet(path).columns.contains(Index.SrcFileCol),
+        s"$t: the rebuilt copy lacks the provenance column")
+      assert(Index.tierFresh(engine.store, "rc", "lg", "vec", t))
+    }
+    assert(sidecarHasCells(tiers(0)._2, tiers(0)._3), "sq rebuild lost per-cell params")
+    assert(sidecarHasCells(tiers(1)._2, tiers(1)._3), "bq rebuild lost per-cell params")
+    val cb = Index.loadPqCodebooks(engine.store, "rc", "lg", "vec")
+    assert(cb.config.numSubspaces == 2 && cb.config.codebookSize == 4 && !cb.residual,
+      s"pq rebuild lost its config: m=${cb.config.numSubspaces} " +
+        s"k=${cb.config.codebookSize} residual=${cb.residual}")
     engine.remove()
   }
 
