@@ -745,8 +745,11 @@ object SparkEntry {
     val e = new Engine(s, scratchRoot(dir))
     if (!e.listTables().contains("docsrc"))
       e.makeTable("docsrc", tbl(s, dir, "documents"))
-    if (!e.store.sidecarExists(
-        s"${e.store.lexIndexPath("docsrc", "text")}/meta.json"))
+    // rebuild artifacts predating the freshness stamp too: serving
+    // refuses stamp-less artifacts, and scratch roots outlive runs
+    val base = e.store.lexIndexPath("docsrc", "text")
+    if (!e.store.sidecarExists(s"$base/meta.json") ||
+        !e.store.sidecarExists(s"$base/_source_stamp.json"))
       e.buildLexicalIndex("docsrc", "doc_id", "text", buckets = 64)
     e
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.coder.{CoderConfig, Coding}
 import graft.index.Index
+import graft.api.Engine.{TextMeta, TextTier}
 import graft.store.Store
 
 /** The engine facade — the reference Flight client surface
@@ -83,111 +84,314 @@ class Engine(val spark: SparkSession, val root: String,
   def listCodings(): Seq[String] = store.listCodings()
   def dropIndex(name: String): Unit = store.dropCoding(name)
 
-  // ——— lexical (BM25) inverted index ———
+  // ——— text index tiers: lexical (BM25) and fuzzy (edit-distance) ———
+  //
+  // Both tiers run one lifecycle — one build, sync, recovery sweep,
+  // compaction and meta.json reader/writer — and a tier supplies only
+  // its frames ([[Engine.TextTier]]).
 
-  /** Materialize the BM25 inverted index of a stored table's text
-    * column ([[graft.ext.Lexical]]): postings partitioned by
-    * `__TERM_BUCKET__` (a keyword query prunes to its terms' buckets
-    * at the file listing, the lexical analogue of the IVF tiers'
-    * cell pruning) plus the narrow doc-length sidecar. With
-    * `positional` the postings also carry each occurrence's sorted
-    * token positions, enabling [[searchPhrase]] — BM25 queries read
-    * the same artifact and simply prune the positions column. */
-  def buildLexicalIndex(source: String, idCol: String, textCol: String,
-      buckets: Int = 64, positional: Boolean = false): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val df = store.loadTable(source)
+  private def readTextMeta(tier: TextTier): TextMeta = {
+    val n = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(store.readSidecar(s"${tier.base}/meta.json"))
+    def field(k: String) = Option(n.get(k)).filterNot(_.isNull)
+    def int(k: String) = field(k).filter(_.canConvertToInt).map(_.asInt)
+    val meta = TextMeta(
+      int("buckets").getOrElse(throw new IllegalStateException(
+        s"${tier.kind} index at ${tier.base} has no bucket count in meta.json")),
+      field("positional").map(_.asBoolean), int("maxDist"),
+      field("idCol").map(_.asText), int("layout"),
+      for (ns <- field("maxNsBound"); np <- field("maxNpBound"))
+        yield (ns.asLong, np.asLong))
+    tier.check(meta)
+    meta
+  }
+
+  private def writeTextMeta(base: String, m: TextMeta): Unit = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val o = mapper.createObjectNode()
+    m.maxDist.foreach(v => o.put("maxDist", v))
+    o.put("buckets", m.buckets)
+    m.idCol.foreach(v => o.put("idCol", v))
+    m.layout.foreach(v => o.put("layout", v))
+    m.positional.foreach(v => o.put("positional", v))
+    m.bounds.foreach { case (ns, np) =>
+      o.put("maxNsBound", ns); o.put("maxNpBound", np)
+    }
+    store.writeSidecar(s"$base/meta.json", mapper.writeValueAsBytes(o))
+  }
+
+  /** The lexical tier: postings partitioned by `__TERM_BUCKET__` (a
+    * keyword query prunes to its terms' buckets at the file listing, the
+    * lexical analogue of the IVF tiers' cell pruning) plus the narrow
+    * doc-length table. Positional postings also carry each occurrence's
+    * sorted token positions. */
+  private def lexicalTier(source: String, textCol: String): TextTier = {
     val base = store.lexIndexPath(source, textCol)
-    graft.store.Swap.withArtifactLock(base) {
-      val post =
-        if (positional)
-          graft.ext.Lexical.positionalPostings(df, idCol, textCol, buckets)
-        else graft.ext.Lexical.postings(df, idCol, textCol, buckets)
-      post.write.mode("overwrite").partitionBy("__TERM_BUCKET__")
-        .parquet(s"$base/postings")
-      graft.ext.Lexical.docLengths(df, idCol, textCol)
-        .write.mode("overwrite").parquet(s"$base/doclens")
-      // bucket count rides the artifact — a query pruning with the wrong
-      // modulus would silently miss terms; the positional flag too, so
-      // sync keeps appending the same posting shape
-      store.writeSidecar(s"$base/meta.json",
-        s"""{"buckets":$buckets,"positional":$positional}"""
-          .getBytes("UTF-8"))
+    TextTier("lexical", base, Seq("postings" -> "__TERM_BUCKET__"),
+      Seq("doclens"), known = "doclens",
+      write = (m, delta, mode) => {
+        val post =
+          if (m.positional.contains(true))
+            graft.ext.Lexical.positionalPostings(delta, "id", "t", m.buckets)
+          else graft.ext.Lexical.postings(delta, "id", "t", m.buckets)
+        writeBucketed(post, s"$base/postings", "__TERM_BUCKET__", m.buckets,
+          mode)
+        graft.ext.Lexical.docLengths(delta, "id", "t")
+          .write.mode(mode).parquet(s"$base/doclens")
+        m
+      })
+  }
+
+  /** The fuzzy tier: the PassJoin (id, t, len) base partitioned by an id
+    * bucket (layout 2 — the lookup's final verify prunes the base scan to
+    * its candidates' buckets), the segment and probe frames partitioned by
+    * a CRC32 bucket of the segment content, and their per-key row counts
+    * (the candidate-volume guard's statistics). */
+  private def fuzzyTier(source: String, textCol: String): TextTier = {
+    val base = store.fuzzyIndexPath(source, textCol)
+    // the true per-key maximum of one counts frame (partial count rows
+    // re-aggregated)
+    def trueMax(dir: String, alias: String): Long = {
+      val r = spark.read.parquet(s"$base/$dir")
+        .groupBy("l", "i", "g").agg(sum(col(alias)).as("__t__"))
+        .agg(max(col("__t__"))).head()
+      if (r.isNullAt(0)) 0L else r.getDouble(0).toLong
+    }
+    TextTier("fuzzy", base,
+      Seq("segs" -> "__SEG_BUCKET__", "probes" -> "__SEG_BUCKET__",
+        "base" -> "__ID_BUCKET__"),
+      Seq("segcounts", "probecounts"), known = "base",
+      write = (m, delta, mode) => {
+        val bf = graft.ext.Dedup.editDistanceBase(delta, "id", "t")
+        // base and frame writes overlap (guide §2.6)
+        var frames = (0L, 0L)
+        runConcurrently(Seq(
+          () => writeBucketed(
+            bf.withColumn("__ID_BUCKET__", idBucketCol(m.buckets)),
+            s"$base/base", "__ID_BUCKET__", m.buckets, mode),
+          () => frames =
+            writeFuzzyFrames(base, bf, fuzzyDist(m), m.buckets, mode)))
+        m.copy(bounds = Some(frames))
+      },
+      // layout 2 (id-bucketed base) is the only layout ever written, and
+      // every build writing it also records idCol, so anything else is a
+      // pre-lifecycle or hand-rolled artifact — refuse rather than serve
+      // an unknown shape. MIGRATION: layout-1 artifacts are intentionally
+      // no longer served — every lookup/sync/compact on one throws until a
+      // one-time `buildFuzzyIndex` against the (unchanged) source table,
+      // which regenerates the artifact in place (idempotent, Swap-guarded).
+      check = m => require(m.layout.contains(2),
+        s"fuzzy index at $base has an unsupported layout in meta.json — " +
+          "only layout 2 (id-bucketed base) is served. One-time migration: " +
+          "rebuild with buildFuzzyIndex(source, textCol) against the same " +
+          "source table"),
+      // accumulate the bounds: a key split across deltas totals at most
+      // the sum of the per-delta maxima. Recorded BEFORE the frame
+      // appends — a crash between the two leaves the bound LOOSE, never
+      // UNDER; an under-bound would let provenVolumeBound "prove" safe a
+      // candidate volume that is not, silently disabling the serving
+      // join's volume guard. An artifact predating the bounds stays
+      // unbounded until a rebuild or a compaction.
+      beforeAppend = (m, delta) => m.bounds.fold(m) { case (ns, np) =>
+        val (dNs, dNp) = deltaKeyMaxima(
+          graft.ext.Dedup.editDistanceBase(delta, "id", "t"), fuzzyDist(m))
+        m.copy(bounds = Some((ns + dNs, np + dNp)))
+      },
+      // re-tighten to the TRUE per-key maxima (sync's accumulation only
+      // ever loosens, and a loose bound degrades the volume guard back to
+      // its exact counting pass); the counts frames hold exact per-key
+      // totals and are orders of magnitude smaller than the key frames.
+      // Also ESTABLISHES bounds on artifacts that predate them.
+      afterCompact = m => m.copy(bounds = Some(
+        (trueMax("segcounts", "ns"), trueMax("probecounts", "np")))))
+  }
+
+  private def fuzzyDist(m: TextMeta): Int = m.maxDist.getOrElse(
+    throw new IllegalStateException("fuzzy index has no maxDist in meta.json"))
+
+  /** A source's indexable rows as a text tier's delta: (id, t), null
+    * text dropped — unindexable, and never in the known-id frame, so a
+    * re-sync stays a no-op. */
+  private def textRows(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), col(textCol).as("t"))
+
+  /** The one build of a text tier: frames, then `meta.json`, then the
+    * source file-listing stamp, all under the artifact lock. The listing
+    * is taken BEFORE the source is read: a concurrent source change
+    * mid-build then leaves a stale stamp (conservative) rather than a
+    * wrongly-fresh one. A from-scratch build is all-or-nothing (the stamp
+    * lands only after every write), so its writes carry no ordering
+    * constraint among themselves. */
+  private def buildText(tier: TextTier, meta: TextMeta, source: String,
+      idCol: String, textCol: String): Unit = {
+    val listing = store.sourceListing(source)
+    val delta = textRows(store.loadTable(source), idCol, textCol)
+    graft.store.Swap.withArtifactLock(tier.base) {
+      writeTextMeta(tier.base, tier.write(meta, delta, "overwrite"))
+      Index.recordSourceStamp(store, tier.base, listing)
     }
   }
 
-  private def lexMeta(base: String): (Int, Boolean) = {
-    val s = new String(store.readSidecar(s"$base/meta.json"), "UTF-8")
-    val buckets = """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(s)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"lexical index at $base has no bucket count in meta.json"))
-    val positional = """"positional"\s*:\s*true""".r.findFirstIn(s).isDefined
-    (buckets, positional)
-  }
-
-  /** Append newly ingested documents to the lexical index: docs whose
-    * id is absent from the doc-length sidecar get their postings and
-    * lengths appended — the append-only-corpus incremental path (no
-    * existing posting is rewritten; document UPDATES need a rebuild,
-    * as with every tier's in-place-modification contract). Mutations
-    * run under the artifact lock — a concurrent compaction rewriting
-    * the very buckets an append lands in would otherwise install a
-    * rewrite missing the appended rows. */
-  def syncLexicalIndex(source: String, idCol: String,
-      textCol: String): Long = {
-    val base = store.lexIndexPath(source, textCol)
-    graft.store.Swap.withArtifactLock(base) {
-      val (buckets, positional) = lexMeta(base)
+  /** The one incremental sync of a text tier: documents whose id is
+    * absent from the known-id frame get their frames appended — the
+    * append-only-corpus path (both tiers' frames are row-local, so the
+    * appended artifact equals a fresh rebuild row-for-row; document
+    * UPDATES need a rebuild, as with every tier). Runs under the artifact
+    * lock — a concurrent compaction rewriting the very buckets an append
+    * lands in would otherwise install a rewrite missing the appended
+    * rows. Re-stamps freshness only when growth is verifiably append-only
+    * (every file recorded at the last build/sync still present
+    * unchanged). `idCol` None reads the id column the artifact recorded.
+    * Returns rows appended. */
+  private def syncText(tier: TextTier, source: String, idCol: Option[String],
+      textCol: String): Long =
+    graft.store.Swap.withArtifactLock(tier.base) {
+      val meta = readTextMeta(tier)
       // restore any crashed-compaction aside BEFORE appending: an append
       // that recreates a bucket dir whose only full copy sits in an aside
-      // would otherwise turn the next compaction's stale-aside cleanup
-      // into silent data loss for every pre-crash posting of that bucket
-      recoverLexArtifacts(base)
-      val known = spark.read.parquet(s"$base/doclens").select("id")
-      val fresh = store.loadTable(source)
-        // null-text docs are unindexable and never enter doclens — drop
-        // them up front so re-sync stays a no-op (idempotent count)
-        .filter(col(textCol).isNotNull)
-        .join(known, col(idCol) === known("id"), "left_anti")
+      // would otherwise turn the next cleanup into silent data loss
+      graft.store.Swap.recover(store.fs, tier.base, tier.bucketed, tier.flats)
+      val listing = store.sourceListing(source) // before the read, as build
+      val id = idCol.orElse(meta.idCol).getOrElse(throw new IllegalStateException(
+        s"${tier.kind} index at ${tier.base} records no idCol in meta.json"))
+      val known = spark.read.parquet(s"${tier.base}/${tier.known}")
+        .select(col("id").as("__known_id__"))
+      val delta = textRows(store.loadTable(source), id, textCol)
+        .join(known, col("id") === col("__known_id__"), "left_anti")
         .localCheckpoint(true) // freeze: the appends below grow the very
                                // paths a lazy plan would re-list
       try {
-        val n = fresh.count()
+        val n = delta.count()
         if (n > 0) {
-          val post =
-            if (positional) graft.ext.Lexical
-              .positionalPostings(fresh, idCol, textCol, buckets)
-            else graft.ext.Lexical.postings(fresh, idCol, textCol, buckets)
-          post.write.mode("append").partitionBy("__TERM_BUCKET__")
-            .parquet(s"$base/postings")
-          graft.ext.Lexical.docLengths(fresh, idCol, textCol)
-            .write.mode("append").parquet(s"$base/doclens")
+          val grown = tier.beforeAppend(meta, delta)
+          if (grown != meta) writeTextMeta(tier.base, grown)
+          tier.write(meta, delta, "append")
         }
+        // re-stamp OUTSIDE the n > 0 branch: append-only growth whose new
+        // rows are all null-text appends nothing yet leaves the artifact
+        // semantically complete — a stamp gated on n > 0 would hold it
+        // "stale" with only a full rebuild as the way out
+        val curSet = listing.toSet
+        if (Index.recordedListing(store, tier.base)
+            .exists(_.forall(curSet.contains)))
+          Index.recordSourceStamp(store, tier.base, listing)
         n
-      } finally org.apache.spark.sql.GraftShims.releaseCheckpoint(fresh)
+      } finally org.apache.spark.sql.GraftShims.releaseCheckpoint(delta)
+    }
+
+  /** The one compaction of a text tier: every [[syncText]] appends its
+    * own file set to each touched bucket, so a bucket synced N times
+    * holds ≥ N small files and scan cost becomes task-overhead-bound.
+    * Buckets holding more than `maxFilesPerBucket` files are rewritten
+    * (temp sibling + per-bucket directory rename, [[graft.store.Swap]]);
+    * flat tables past the same bound are coalesced. Content is identical.
+    * The WHOLE compaction holds the artifact lock: the rewrite must not
+    * race a sync's append into the same buckets, and the aside→install
+    * window must not race a reader's recovery sweep. Returns (buckets
+    * compacted, per flat table its pre-compaction file count or 0). */
+  private def compactText(tier: TextTier,
+      maxFilesPerBucket: Int): (Long, Seq[Long]) = {
+    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
+    graft.store.Swap.withArtifactLock(tier.base) {
+      val meta = readTextMeta(tier) // fails loudly on a missing index
+      graft.store.Swap.recover(store.fs, tier.base, tier.bucketed, tier.flats)
+      val fs = store.fs
+      val op = s"compact${tier.kind.capitalize}Index"
+      val buckets = tier.bucketed.map { case (d, c) =>
+        graft.store.Swap.compactBuckets(spark, fs, s"${tier.base}/$d", c,
+          maxFilesPerBucket, op)
+      }.sum
+      val flats = tier.flats.map(d => graft.store.Swap.compactFlat(spark, fs,
+        s"${tier.base}/$d", maxFilesPerBucket, op))
+      val tightened = tier.afterCompact(meta)
+      if (tightened != meta) writeTextMeta(tier.base, tightened)
+      (buckets, flats)
     }
   }
+
+  /** Whether a text tier's artifact exists AND was built/synced from the
+    * CURRENT source content (file-listing stamp comparison, the
+    * [[Index.tierFresh]] contract). */
+  private def textFresh(tier: TextTier, source: String): Boolean =
+    store.sidecarExists(s"${tier.base}/meta.json") &&
+      Index.recordedStamp(store, tier.base).contains(store.sourceStamp(source))
+
+  /** The meta of a text tier a query is about to read, after the
+    * recovery sweep and the freshness check — loud-or-fresh, never
+    * silently stale: a query must not score text that no longer exists
+    * or miss documents appended since the last sync. */
+  private def servedMeta(tier: TextTier, source: String, textCol: String,
+      allowStale: Boolean = false): TextMeta = {
+    val meta = readTextMeta(tier)
+    // reads run the sweep too: an aside is INVISIBLE to parquet file
+    // listing, so between a crash and the next mutating call a query
+    // would silently miss every key hashing to the crashed bucket
+    graft.store.Swap.recover(store.fs, tier.base, tier.bucketed, tier.flats)
+    require(allowStale || textFresh(tier, source),
+      s"${tier.kind} index for $source.$textCol is STALE: the source " +
+        "content changed since the last build/sync (or the artifact " +
+        s"predates freshness stamps). Run sync${tier.kind.capitalize}Index " +
+        "after append-only growth, rebuild after in-place rewrites" +
+        (if (tier.kind == "fuzzy") ", or pass allowStale = true to serve " +
+          "from the stale artifact deliberately." else "."))
+    meta
+  }
+
+  /** Write a bucket-partitioned frame with its rows clustered by bucket
+    * first — without this every task writes a file into every bucket
+    * directory (tasks × buckets tiny files per build/sync), the
+    * [[Index.build]] lesson. One shuffle sized to the bucket count; each
+    * bucket becomes one task's output. */
+  private def writeBucketed(df: DataFrame, dir: String, partCol: String,
+      buckets: Int, mode: String): Unit = {
+    val parts = math.max(1, math.min(buckets,
+      spark.sparkContext.defaultParallelism * 2))
+    df.repartition(parts, col(partCol))
+      .write.mode(mode).partitionBy(partCol).parquet(dir)
+  }
+
+  // ——— lexical (BM25) inverted index ———
+
+  /** Materialize the BM25 inverted index of a stored table's text
+    * column ([[graft.ext.Lexical]], [[lexicalTier]]). With `positional`
+    * the postings also carry each occurrence's sorted token positions,
+    * enabling [[searchPhrase]] — BM25 queries read the same artifact and
+    * simply prune the positions column. Records the source file-listing
+    * stamp: [[searchBm25]]/[[searchPhrase]] refuse a stale artifact. */
+  def buildLexicalIndex(source: String, idCol: String, textCol: String,
+      buckets: Int = 64, positional: Boolean = false): Unit = {
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    buildText(lexicalTier(source, textCol),
+      TextMeta(buckets, positional = Some(positional)), source, idCol, textCol)
+  }
+
+  /** Append newly ingested documents to the lexical index ([[syncText]]):
+    * docs whose id is absent from the doc-length table get their postings
+    * and lengths appended. Returns docs appended. */
+  def syncLexicalIndex(source: String, idCol: String,
+      textCol: String): Long =
+    syncText(lexicalTier(source, textCol), source, Some(idCol), textCol)
 
   /** Top-k BM25 keyword search through the materialized index —
     * touches only the query terms' posting buckets
     * ([[graft.ext.Lexical.bm25FromIndex]]). `requireAll` switches to
-    * conjunctive (AND) retrieval. Ties break by id. */
+    * conjunctive (AND) retrieval. Ties break by id. Refuses a stale
+    * artifact (sync after append-only growth, rebuild after in-place
+    * rewrites). */
   def searchBm25(source: String, textCol: String, terms: Seq[String],
       k: Int = 10, requireAll: Boolean = false): DataFrame = {
-    val base = store.lexIndexPath(source, textCol)
-    recoverLexArtifacts(base) // reads too: a crashed compaction's aside
-    // is invisible to parquet listing — without this, queries silently
-    // miss every term hashing to that bucket until a mutating call
-    val buckets = lexMeta(base)._1
+    val tier = lexicalTier(source, textCol)
+    val buckets = servedMeta(tier, source, textCol).buckets
     // explicit term-bucket leaf paths (the fuzzy tier's round-19
     // lesson, [[readBuckets]]): a keyword query knows its buckets
     // before reading, so partition discovery lists just those dirs
     // instead of the whole layout
     val bks = terms.map(graft.ext.Lexical.termBucket(_, buckets)).distinct
     graft.ext.Lexical.bm25FromIndex(
-        readBuckets(s"$base/postings", "__TERM_BUCKET__", bks, buckets),
-        spark.read.parquet(s"$base/doclens"), terms, buckets,
+        readBuckets(s"${tier.base}/postings", "__TERM_BUCKET__", bks, buckets),
+        spark.read.parquet(s"${tier.base}/doclens"), terms, buckets,
         requireAll = requireAll)
       .orderBy(col("bm25").desc, col("id").asc).limit(k)
   }
@@ -196,106 +400,48 @@ class Engine(val spark: SparkSession, val root: String,
     * ([[graft.ext.Lexical.phraseMatch]] — pulls only the phrase terms'
     * posting buckets). Requires the index to have been built with
     * `positional = true`; fails loudly otherwise (a non-positional
-    * artifact cannot answer phrase queries). Ranks by occurrence
-    * count, ties break by id. */
+    * artifact cannot answer phrase queries), and on a stale artifact as
+    * [[searchBm25]]. Ranks by occurrence count, ties break by id. */
   def searchPhrase(source: String, textCol: String, phrase: Seq[String],
       k: Int = 10): DataFrame = {
-    val base = store.lexIndexPath(source, textCol)
-    recoverLexArtifacts(base) // see searchBm25 — reads need the sweep too
-    val (buckets, positional) = lexMeta(base)
-    require(positional, s"lexical index for $source.$textCol was built " +
-      "without positions — rebuild with positional = true for phrase search")
+    val tier = lexicalTier(source, textCol)
+    val meta = servedMeta(tier, source, textCol)
+    require(meta.positional.contains(true), s"lexical index for " +
+      s"$source.$textCol was built without positions — rebuild with " +
+      "positional = true for phrase search")
     // leaf-path pruning as [[searchBm25]]
-    val bks = phrase.map(graft.ext.Lexical.termBucket(_, buckets)).distinct
+    val bks = phrase.map(graft.ext.Lexical.termBucket(_, meta.buckets)).distinct
     graft.ext.Lexical.phraseMatch(
-        readBuckets(s"$base/postings", "__TERM_BUCKET__", bks, buckets),
-        phrase, buckets)
+        readBuckets(s"${tier.base}/postings", "__TERM_BUCKET__", bks,
+          meta.buckets),
+        phrase, meta.buckets)
       .orderBy(col("hits").desc, col("id").asc).limit(k)
   }
 
-  /** Coalesce fragmented posting buckets — the maintenance step an
-    * incrementally synced lexical index needs: every [[syncLexicalIndex]]
-    * appends its own file set to each touched bucket, so a bucket synced
-    * N times holds ≥ N small files and keyword-query scan cost becomes
-    * task-overhead-bound. Buckets with more than `maxFilesPerBucket`
-    * files are rewritten (temp sibling + per-bucket directory rename, as
-    * [[compactIndex]]); the doc-length sidecar is rewritten alongside
-    * when it fragments past the same bound. Content is identical. */
-  /** Crash recovery for the lexical index's swap artifacts
-    * ([[graft.store.Swap]] holds the shared discipline). MUST run
-    * before ANY path that appends to or rewrites the postings/doclens
-    * (sync and compaction both call it first): a lone posting-bucket
-    * aside with its live dir ABSENT means a compaction crashed between
-    * aside-rename and install — rename it back BEFORE an append can
-    * recreate the live dir with only new postings, which would make
-    * "aside alongside live" ambiguous and a later cleanup would delete
-    * the only full copy. Read entry points ([[searchBm25]]/
-    * [[searchPhrase]]) run it too: the aside is dot-prefixed and
-    * INVISIBLE to parquet file listing, so between a crash and the next
-    * mutating call queries would otherwise silently miss every term
-    * hashing to the crashed bucket. One listStatus when clean, and the
-    * artifact lock is taken ONLY when that listing shows an aside — a
-    * read path must never rename an aside out from under a RUNNING
-    * compaction's legitimate aside→install window (see
-    * [[graft.store.Swap.withArtifactLock]]); inside the lock the sweep
-    * re-checks, so an aside that belonged to a just-finished compaction
-    * resolves to a no-op. */
-  private def recoverLexArtifacts(base: String): Unit = {
-    val fs = store.fs
-    val postings = new org.apache.hadoop.fs.Path(s"$base/postings")
-    val doclens = new org.apache.hadoop.fs.Path(s"$base/doclens")
-    if (graft.store.Swap.hasBucketAsides(fs, postings, "__TERM_BUCKET__") ||
-        graft.store.Swap.hasFlatAside(fs, doclens))
-      graft.store.Swap.withArtifactLock(base) {
-        graft.store.Swap.recoverBucketAsides(fs, postings, "__TERM_BUCKET__")
-        graft.store.Swap.recoverFlatAside(fs, doclens)
-      }
-  }
-
+  /** Coalesce fragmented posting buckets and the doc-length table
+    * ([[compactText]]) — the maintenance step an incrementally synced
+    * lexical index needs. Returns (buckets compacted, doc-length files
+    * before compaction, 0 when it was not fragmented). */
   def compactLexicalIndex(source: String, textCol: String,
       maxFilesPerBucket: Int = 8): (Long, Long) = {
-    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    val base = store.lexIndexPath(source, textCol)
-    // the WHOLE compact holds the artifact lock: the rewrite must not
-    // race a sync's append into the same buckets (an installed rewrite
-    // read before the append would silently drop the appended rows),
-    // and the aside→install window must not race a reader's recovery
-    // sweep ([[graft.store.Swap.withArtifactLock]])
-    graft.store.Swap.withArtifactLock(base) {
-      lexMeta(base) // fail loudly on a missing index
-      // Crash recovery from a previous run killed mid-swap (postings
-      // bucket asides AND the doclens aside). Every mutating entry point
-      // runs this first — see [[recoverLexArtifacts]] for why ordering it
-      // before appends is what makes aside-alongside-live unambiguous.
-      recoverLexArtifacts(base)
-      val fs = store.fs
-      val buckets = graft.store.Swap.compactBuckets(spark, fs,
-        s"$base/postings", "__TERM_BUCKET__", maxFilesPerBucket,
-        "compactLexicalIndex")
-      val lens = graft.store.Swap.compactFlat(spark, fs,
-        s"$base/doclens", maxFilesPerBucket, "compactLexicalIndex")
-      (buckets, lens)
-    }
+    val (buckets, flats) =
+      compactText(lexicalTier(source, textCol), maxFilesPerBucket)
+    (buckets, flats.sum)
   }
 
   // ——— Fuzzy (edit-distance) lookup index ———
 
   /** Persist the PassJoin artifacts of a stored table's text column as
-    * a FUZZY LOOKUP INDEX: the (id, t, len) base plus the segment and
-    * probe frames, each PARTITIONED BY a CRC32 bucket of the segment
-    * content — the edit-distance analogue of the lexical tier's term
-    * buckets — plus the per-key row counts of both frames (the
-    * candidate-volume guard's statistics, precomputed so a batch
-    * [[fuzzyJoin]]'s guard cost scales with the query side only). A
-    * [[fuzzyLookup]] computes the query's ≤ (k+1)²(2k+1) segment keys
-    * DRIVER-SIDE ([[graft.ext.Dedup.querySegKeys]]/[[queryProbeKeys]])
-    * and prunes both scans to those keys' bucket directories at the
-    * file listing, so a single lookup touches a constant number of
-    * buckets regardless of corpus size.
+    * a FUZZY LOOKUP INDEX ([[fuzzyTier]]). A [[fuzzyLookup]] computes the
+    * query's ≤ (k+1)²(2k+1) segment keys DRIVER-SIDE
+    * ([[graft.ext.Dedup.querySegKeys]]/[[queryProbeKeys]]) and prunes
+    * both scans to those keys' bucket directories at the file listing,
+    * so a single lookup touches a constant number of buckets regardless
+    * of corpus size; the per-key counts, precomputed, make a batch
+    * [[fuzzyJoin]]'s guard cost scale with the query side only.
     *
-    * Lifecycle parity with the other five tiers: the build records the
-    * source file-listing stamp; [[syncFuzzyIndex]] appends new docs'
-    * rows (PassJoin frames are row-local, so appends compose exactly);
+    * The lifecycle is the lexical tier's: the build records the source
+    * file-listing stamp; [[syncFuzzyIndex]] appends new docs' rows;
     * [[fuzzyIndexIsFresh]] reports staleness after in-place source
     * rewrites (which need a rebuild, as everywhere); and
     * [[compactFuzzyIndex]] coalesces sync-fragmented buckets. */
@@ -303,38 +449,9 @@ class Engine(val spark: SparkSession, val root: String,
       maxDist: Int = 2, buckets: Int = 64): Unit = {
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val base = store.fuzzyIndexPath(source, textCol)
-    // listing BEFORE reading: a concurrent source change mid-build then
-    // leaves a stale stamp (conservative) rather than a wrongly-fresh one
-    val listing = store.sourceListing(source)
-    val bf = graft.ext.Dedup.editDistanceBase(
-      store.loadTable(source), idCol, textCol)
-    graft.store.Swap.withArtifactLock(base) {
-      // the base is partitioned by an ID bucket (layout 2): the lookup's
-      // final verify then prunes the base scan to its candidates' buckets
-      // instead of scanning every stored document's text — without this,
-      // single-lookup latency scales with corpus size.
-      // Base and frame writes overlap (guide §2.6): a from-scratch build
-      // is all-or-nothing (the freshness stamp lands only after every
-      // write), so the overwrite writes carry no ordering constraint.
-      var frames = (0L, 0L)
-      runConcurrently(Seq(
-        () => writeFuzzyBase(base, bf, buckets, mode = "overwrite"),
-        () => { frames =
-          writeFuzzyFrames(base, bf, maxDist, buckets, mode = "overwrite") }))
-      val (maxNs, maxNp) = frames
-      // parameters ride the artifact: pruning with a different modulus or
-      // distance than the build's would silently miss candidates; the id
-      // column rides too so sync can anti-join the source against the
-      // base. layout 2 (id-bucketed base) is the only layout written or
-      // served — artifacts predating it need a rebuild. maxNsBound/
-      // maxNpBound are per-key frequency UPPER bounds (sync adds each
-      // delta's max — Σ of per-delta maxima ≥ any key's true total),
-      // letting the serving join's volume guard run driver-side.
-      store.writeSidecar(s"$base/meta.json",
-        fuzzyMetaJson(maxDist, buckets, idCol, maxNs, maxNp))
-      Index.recordSourceStamp(store, base, listing)
-    }
+    buildText(fuzzyTier(source, textCol), TextMeta(buckets,
+        maxDist = Some(maxDist), idCol = Some(idCol), layout = Some(2)),
+      source, idCol, textCol)
   }
 
   /** Run independent Spark actions concurrently and wait for all
@@ -368,25 +485,6 @@ class Engine(val spark: SparkSession, val root: String,
   private def idBucketCol(buckets: Int): Column =
     (crc32(encode(col("id").cast("string"), "UTF-8")) % buckets).cast("int")
 
-  /** Cluster rows by their bucket BEFORE a bucket-partitioned write —
-    * without this every task writes a file into every bucket directory
-    * (tasks × buckets tiny files per build/sync), the [[Index.build]]
-    * lesson. One shuffle sized to the bucket count; each bucket becomes
-    * one task's output. */
-  private def bucketClustered(df: DataFrame, bucketCol: String,
-      buckets: Int): DataFrame = {
-    val parts = math.max(1, math.min(buckets,
-      spark.sparkContext.defaultParallelism * 2))
-    df.repartition(parts, col(bucketCol))
-  }
-
-  private def writeFuzzyBase(base: String, bf: DataFrame, buckets: Int,
-      mode: String): Unit =
-    bucketClustered(bf.withColumn("__ID_BUCKET__", idBucketCol(buckets)),
-        "__ID_BUCKET__", buckets)
-      .write.mode(mode).partitionBy("__ID_BUCKET__")
-      .parquet(s"$base/base")
-
   /** Segment/probe/count frames of one base delta, written under the
     * artifact — shared by build (overwrite) and sync (append). Returns
     * this DELTA's (max per-key segment count, max per-key probe count),
@@ -411,14 +509,10 @@ class Engine(val spark: SparkSession, val root: String,
     // time (the r20 fixture profile: the lifecycle queries were
     // job-count-bound, not data-bound)
     runConcurrently(Seq(
-      () => bucketClustered(segs.withColumn("__SEG_BUCKET__", bucketCol),
-          "__SEG_BUCKET__", buckets)
-        .write.mode(mode).partitionBy("__SEG_BUCKET__")
-        .parquet(s"$base/segs"),
-      () => bucketClustered(probes.withColumn("__SEG_BUCKET__", bucketCol),
-          "__SEG_BUCKET__", buckets)
-        .write.mode(mode).partitionBy("__SEG_BUCKET__")
-        .parquet(s"$base/probes"),
+      () => writeBucketed(segs.withColumn("__SEG_BUCKET__", bucketCol),
+        s"$base/segs", "__SEG_BUCKET__", buckets, mode),
+      () => writeBucketed(probes.withColumn("__SEG_BUCKET__", bucketCol),
+        s"$base/probes", "__SEG_BUCKET__", buckets, mode),
       () => graft.ext.Dedup.editDistanceKeyCounts(segs, "ns")
         .observe(segObs, max(col("ns")).as("mx"))
         .write.mode(mode).parquet(s"$base/segcounts"),
@@ -430,127 +524,19 @@ class Engine(val spark: SparkSession, val root: String,
     (mx(segObs), mx(probeObs))
   }
 
-  private def fuzzyMeta(base: String): (Int, Int, String) = {
-    val s = new String(store.readSidecar(s"$base/meta.json"), "UTF-8")
-    def intOf(k: String) = (k + """\s*:\s*(\d+)""").r
-      .findFirstMatchIn(s).map(_.group(1).toInt)
-    def intOrFail(k: String) = intOf(k)
-      .getOrElse(throw new IllegalStateException(
-        s"fuzzy index at $base has no $k in meta.json"))
-    val idCol = """"idCol"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s)
-      .map(_.group(1))
-      .getOrElse(throw new IllegalStateException(
-        s"fuzzy index at $base predates the lifecycle metadata " +
-          "(no idCol in meta.json) — rebuild with buildFuzzyIndex"))
-    // layout 2 (id-bucketed base) is the only layout ever written by a
-    // build that also records idCol, so anything else here is a
-    // hand-rolled artifact — refuse rather than serve an unknown shape.
-    // MIGRATION: layout-1 artifacts (pre-bucketed base, written before
-    // the idCol field existed) are intentionally no longer served —
-    // every lookup/sync/compact on one throws this error until a
-    // one-time `buildFuzzyIndex(source, textCol)` rebuild, which
-    // regenerates the artifact in place from the (unchanged) source
-    // table. The rebuild is idempotent and crash-safe (Swap-guarded),
-    // so the migration is a single engine call per artifact.
-    require(intOf("\"layout\"").contains(2),
-      s"fuzzy index at $base has an unsupported layout in meta.json — " +
-        "only layout 2 (id-bucketed base) is served. One-time migration: " +
-        "rebuild with buildFuzzyIndex(source, textCol) against the same " +
-        "source table")
-    (intOrFail("\"maxDist\""), intOrFail("\"buckets\""), idCol)
-  }
-
-  private def fuzzyMetaJson(maxDist: Int, buckets: Int, idCol: String,
-      maxNsBound: Long, maxNpBound: Long): Array[Byte] =
-    (s"""{"maxDist":$maxDist,"buckets":$buckets,"idCol":"$idCol",""" +
-      s""""layout":2,"maxNsBound":$maxNsBound,"maxNpBound":$maxNpBound}""")
-      .getBytes("UTF-8")
-
-  /** The artifact's accumulated per-key frequency upper bounds, or None
-    * for an artifact built before they existed (the serving guard then
-    * keeps its exact counting pass). */
-  private def fuzzyMetaBounds(base: String): Option[(Long, Long)] = {
-    val s = new String(store.readSidecar(s"$base/meta.json"), "UTF-8")
-    def longOf(k: String) = (k + """\s*:\s*(\d+)""").r
-      .findFirstMatchIn(s).map(_.group(1).toLong)
-    for (ns <- longOf("\"maxNsBound\""); np <- longOf("\"maxNpBound\""))
-      yield (ns, np)
-  }
-
   /** Whether the fuzzy artifact exists AND was built/synced from the
-    * CURRENT source content (file-listing stamp comparison, the
-    * [[Index.tierFresh]] contract) — false after any in-place source
-    * rewrite until a rebuild, and false for artifacts predating the
-    * stamp sidecar (rebuild to adopt). */
-  def fuzzyIndexIsFresh(source: String, textCol: String): Boolean = {
-    val base = store.fuzzyIndexPath(source, textCol)
-    store.sidecarExists(s"$base/meta.json") &&
-      Index.recordedStamp(store, base).contains(store.sourceStamp(source))
-  }
+    * CURRENT source content ([[textFresh]]) — false after any in-place
+    * source rewrite until a rebuild, and false for artifacts predating
+    * the stamp sidecar (rebuild to adopt). */
+  def fuzzyIndexIsFresh(source: String, textCol: String): Boolean =
+    textFresh(fuzzyTier(source, textCol), source)
 
-  /** Append newly ingested documents to the fuzzy index: docs whose id
-    * is absent from the base frame get their base/segment/probe rows
-    * and partial key counts appended — the append-only-corpus
-    * incremental path (PassJoin frames are row-local, so the appended
-    * artifact equals a fresh rebuild row-for-row; document UPDATES need
-    * a rebuild, as with every tier). Re-stamps freshness only when
-    * growth is verifiably append-only (every file recorded at the last
-    * build/sync still present unchanged). Returns rows appended. */
-  def syncFuzzyIndex(source: String, textCol: String): Long = {
-    val base = store.fuzzyIndexPath(source, textCol)
-    graft.store.Swap.withArtifactLock(base) {
-      val (maxDist, buckets, idCol) = fuzzyMeta(base)
-      // restore any crashed-compaction aside BEFORE appending — an append
-      // recreating a bucket dir whose only full copy sits in an aside
-      // would turn the next cleanup into silent data loss (see
-      // [[graft.store.Swap]])
-      recoverFuzzyArtifacts(base)
-      val listing = store.sourceListing(source)
-      val known = spark.read.parquet(s"$base/base")
-        .select(col("id").as("__known_id__"))
-      val fresh = store.loadTable(source)
-        .filter(col(textCol).isNotNull)
-        .join(known, col(idCol) === col("__known_id__"), "left_anti")
-      val bf = graft.ext.Dedup.editDistanceBase(fresh, idCol, textCol)
-        .localCheckpoint(true) // freeze: the appends below grow the very
-                               // paths a lazy plan would re-list
-      try {
-        val n = bf.count()
-        if (n > 0) {
-          // accumulate the frequency bounds: a key split across deltas
-          // totals at most the sum of the per-delta maxima. Written
-          // BEFORE the frame appends — a crash between the two leaves
-          // the bound LOOSE (counting a delta whose frames never
-          // landed), never UNDER; an under-bound would let
-          // provenVolumeBound "prove" safe a candidate volume that is
-          // not, silently disabling the serving join's volume guard.
-          // The delta maxima cost one extra agg pass over the
-          // (checkpointed) delta; [[compactFuzzyIndex]] re-tightens to
-          // the true maxima. An artifact predating the bounds stays
-          // unbounded (the serving guard keeps its exact count pass) —
-          // a rebuild or a compaction establishes a true bound.
-          fuzzyMetaBounds(base).foreach { case (ns, np) =>
-            val (dNs, dNp) = deltaKeyMaxima(bf, maxDist)
-            store.writeSidecar(s"$base/meta.json",
-              fuzzyMetaJson(maxDist, buckets, idCol, ns + dNs, np + dNp))
-          }
-          writeFuzzyBase(base, bf, buckets, mode = "append")
-          writeFuzzyFrames(base, bf, maxDist, buckets, mode = "append")
-        }
-        // re-stamp OUTSIDE the n > 0 branch: append-only growth whose
-        // new rows are all null-text (filtered by design) appends
-        // nothing yet leaves the artifact semantically complete — a
-        // stamp gated on n > 0 would hold it permanently "stale" with
-        // only a full rebuild as the way out. The append-only check
-        // (every file recorded at the last build/sync still present
-        // unchanged) still gates the stamp either way.
-        val curSet = listing.toSet
-        if (Index.recordedListing(store, base).exists(_.forall(curSet.contains)))
-          Index.recordSourceStamp(store, base, listing)
-        n
-      } finally org.apache.spark.sql.GraftShims.releaseCheckpoint(bf)
-    }
-  }
+  /** Append newly ingested documents to the fuzzy index ([[syncText]]):
+    * docs whose id (the artifact's recorded id column) is absent from the
+    * base frame get their base/segment/probe rows and partial key counts
+    * appended. Returns rows appended. */
+  def syncFuzzyIndex(source: String, textCol: String): Long =
+    syncText(fuzzyTier(source, textCol), source, None, textCol)
 
   /** One delta's (max per-key segment count, max per-key probe count),
     * measured EAGERLY — [[syncFuzzyIndex]] needs the accumulated bound
@@ -571,85 +557,17 @@ class Engine(val spark: SparkSession, val root: String,
     (ns, np)
   }
 
-  /** Crash recovery for the fuzzy index's swap artifacts — both bucket
-    * dirs plus the three flat tables; MUST run before every mutation
-    * and runs from the read paths too (same rationale as
-    * [[recoverLexArtifacts]]: an aside is invisible to parquet listing,
-    * so lookups would silently miss the crashed bucket's segments). */
-  private def recoverFuzzyArtifacts(base: String): Unit = {
-    val fs = store.fs
-    val bucketed = Seq(s"$base/segs" -> "__SEG_BUCKET__",
-      s"$base/probes" -> "__SEG_BUCKET__", s"$base/base" -> "__ID_BUCKET__")
-      .map { case (d, c) => new org.apache.hadoop.fs.Path(d) -> c }
-    val flats = Seq("segcounts", "probecounts")
-      .map(d => new org.apache.hadoop.fs.Path(s"$base/$d"))
-    // lock only when a listing actually shows an aside — the clean read
-    // path stays lock-free, and a visible aside may belong to a RUNNING
-    // compaction, whose window the lock serializes against (see
-    // [[recoverLexArtifacts]]); the sweep re-checks inside the lock
-    if (bucketed.exists { case (d, c) =>
-          graft.store.Swap.hasBucketAsides(fs, d, c) } ||
-        flats.exists(graft.store.Swap.hasFlatAside(fs, _)))
-      graft.store.Swap.withArtifactLock(base) {
-        bucketed.foreach { case (d, c) =>
-          graft.store.Swap.recoverBucketAsides(fs, d, c) }
-        flats.foreach(graft.store.Swap.recoverFlatAside(fs, _))
-      }
-  }
-
-  /** Coalesce sync-fragmented segment buckets (crash-safe per-bucket
-    * rename-aside swaps, [[graft.store.Swap]]) and flat tables.
-    * Returns (buckets compacted across segs+probes, flat tables
-    * compacted). Content identical; the partial count rows are merely
-    * coalesced, not merged — readers re-aggregate either way. */
+  /** Coalesce sync-fragmented segment buckets and flat tables
+    * ([[compactText]]), then re-tighten the frequency bounds. Returns
+    * (buckets compacted across segs+probes+base, flat tables compacted).
+    * Content identical; the partial count rows are merely coalesced, not
+    * merged — readers re-aggregate either way. */
   def compactFuzzyIndex(source: String, textCol: String,
       maxFilesPerBucket: Int = 8): (Long, Long) = {
-    require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    val base = store.fuzzyIndexPath(source, textCol)
-    // whole compact under the artifact lock — see [[compactLexicalIndex]]
-    graft.store.Swap.withArtifactLock(base) {
-      val (maxDist, buckets, idCol) = fuzzyMeta(base) // fails loudly on a missing index
-      recoverFuzzyArtifacts(base)
-      val fs = store.fs
-      val bucketsDone =
-        graft.store.Swap.compactBuckets(spark, fs, s"$base/segs",
-          "__SEG_BUCKET__", maxFilesPerBucket, "compactFuzzyIndex") +
-        graft.store.Swap.compactBuckets(spark, fs, s"$base/probes",
-          "__SEG_BUCKET__", maxFilesPerBucket, "compactFuzzyIndex") +
-        graft.store.Swap.compactBuckets(spark, fs, s"$base/base",
-          "__ID_BUCKET__", maxFilesPerBucket, "compactFuzzyIndex")
-      val flatsDone = Seq("segcounts", "probecounts").map(d =>
-        if (graft.store.Swap.compactFlat(spark, fs, s"$base/$d",
-          maxFilesPerBucket, "compactFuzzyIndex") > 0) 1L else 0L).sum
-      // Re-tighten the frequency bounds to the TRUE per-key maxima:
-      // sync's crash-safe accumulation (Σ of per-delta maxima) only
-      // ever loosens, and a loose bound degrades the serving join's
-      // driver-side volume guard back to its exact counting pass. The
-      // counts frames hold exact per-key totals and are orders of
-      // magnitude smaller than the key frames — one agg each, meta
-      // rewritten under the same artifact lock. Also ESTABLISHES
-      // bounds on artifacts that predate them.
-      def trueMax(dir: String, alias: String): Long = {
-        val r = spark.read.parquet(s"$base/$dir")
-          .groupBy("l", "i", "g").agg(sum(col(alias)).as("__t__"))
-          .agg(max(col("__t__"))).head()
-        if (r.isNullAt(0)) 0L else r.getDouble(0).toLong
-      }
-      store.writeSidecar(s"$base/meta.json", fuzzyMetaJson(maxDist,
-        buckets, idCol, trueMax("segcounts", "ns"),
-        trueMax("probecounts", "np")))
-      (bucketsDone, flatsDone)
-    }
+    val (buckets, flats) =
+      compactText(fuzzyTier(source, textCol), maxFilesPerBucket)
+    (buckets, flats.count(_ > 0).toLong)
   }
-
-  private def requireFuzzyFresh(source: String, textCol: String,
-      allowStale: Boolean): Unit =
-    require(allowStale || fuzzyIndexIsFresh(source, textCol),
-      s"fuzzy index for $source.$textCol is STALE: the source content " +
-        "changed since the last build/sync (or the artifact predates " +
-        "freshness stamps). Run syncFuzzyIndex after append-only growth, " +
-        "rebuild after in-place rewrites, or pass allowStale = true to " +
-        "serve from the stale artifact deliberately.")
 
   /** All documents within edit distance `maxDist` (the BUILD-time k) of
     * `query`, with the distance, through the persisted fuzzy index:
@@ -671,10 +589,10 @@ class Engine(val spark: SparkSession, val root: String,
       maxLookupCandidates: Int = 10000): DataFrame = {
     require(query != null && query.nonEmpty, "fuzzyLookup: empty query")
     require(maxLookupCandidates >= 1, "maxLookupCandidates must be >= 1")
-    val base = store.fuzzyIndexPath(source, textCol)
-    val (maxDist, buckets, _) = fuzzyMeta(base)
-    recoverFuzzyArtifacts(base)
-    requireFuzzyFresh(source, textCol, allowStale)
+    val tier = fuzzyTier(source, textCol)
+    val base = tier.base
+    val meta = servedMeta(tier, source, textCol, allowStale)
+    val (maxDist, buckets) = (fuzzyDist(meta), meta.buckets)
     val cand = fuzzyLookupCandidates(base, query, maxDist, buckets)
     // candidate ids to the driver (bounded, refused past the cap),
     // their id buckets computed IN the collecting job — never by a
@@ -833,10 +751,9 @@ class Engine(val spark: SparkSession, val root: String,
       leftId: String, leftText: String,
       maxCandidates: Long = 50000000L,
       allowStale: Boolean = false): DataFrame = {
-    val base = store.fuzzyIndexPath(source, textCol)
-    val (maxDist, buckets, _) = fuzzyMeta(base)
-    recoverFuzzyArtifacts(base)
-    requireFuzzyFresh(source, textCol, allowStale)
+    val tier = fuzzyTier(source, textCol)
+    val meta = servedMeta(tier, source, textCol, allowStale)
+    val (maxDist, buckets) = (fuzzyDist(meta), meta.buckets)
     // batch-shape serving plan (round 18): the single lookup always
     // pruned to its query's __SEG_BUCKET__ partitions, but the batch
     // join read the FULL artifact frames — per-batch cost scaled with
@@ -852,10 +769,11 @@ class Engine(val spark: SparkSession, val root: String,
     val lProbeStats = fuzzySideStats(
       graft.ext.Dedup.editDistanceProbes(lb, maxDist), buckets)
     val (rb, rSegs, rProbes, segCounts, probeCounts) =
-      fuzzyFrames(base, buckets, lProbeStats.hitBuckets, lSegStats.hitBuckets)
+      fuzzyFrames(tier.base, buckets, lProbeStats.hitBuckets,
+        lSegStats.hitBuckets)
     // Σ ns(k)·npLeft(k) + Σ np(k)·nsLeft(k) ≤ maxNs·|left probes| +
     // maxNp·|left segs| — every factor known on the driver
-    val bound = fuzzyMetaBounds(base).map { case (maxNs, maxNp) =>
+    val bound = meta.bounds.map { case (maxNs, maxNp) =>
       maxNs.toDouble * lProbeStats.rows + maxNp.toDouble * lSegStats.rows
     }
     graft.ext.Dedup.editDistanceJoinAgainstFrames(left, leftId, leftText,
@@ -881,45 +799,19 @@ class Engine(val spark: SparkSession, val root: String,
       s"fuzzyGateForEachBatch: stream idCol '$streamIdCol' collides with " +
         "the fixed output columns (ref_id, dist) or the join's internal " +
         "id_b; rename it apart first")
-    val base = store.fuzzyIndexPath(source, textCol)
-    val (maxDist, buckets, _) = fuzzyMeta(base)
-    recoverFuzzyArtifacts(base)
-    requireFuzzyFresh(source, textCol, allowStale = false)
+    servedMeta(fuzzyTier(source, textCol), source, textCol)
+    // each micro-batch is one [[fuzzyJoin]], which re-runs the recovery
+    // sweep and the freshness check (one file listing): the frames are
+    // re-read from parquet each batch, so an in-place source rewrite
+    // mid-stream fails the next batch loudly instead of serving a stale
+    // artifact until restart, while a syncFuzzyIndex re-stamps
+    // append-only growth and the batch's scans prune to its buckets
     (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) {
-        // freshness re-checked PER MICRO-BATCH (one file listing), not
-        // just at gate construction: the frames are re-read from parquet
-        // each batch, so an in-place source rewrite mid-stream would
-        // otherwise serve from a silently stale artifact until restart —
-        // this tier's contract is loud-or-fresh. (A syncFuzzyIndex while
-        // the stream runs re-stamps, so append-only growth passes.)
-        recoverFuzzyArtifacts(base)
-        requireFuzzyFresh(source, textCol, allowStale = false)
-        // a micro-batch hits a handful of buckets — prune the artifact
-        // scans to them (the batch-join discipline; per-arrival cost
-        // must scale with the BATCH, not the corpus); the persisted
-        // frequency bounds let the guard skip its artifact pass
-        val lb = graft.ext.Dedup.editDistanceBase(batch, streamIdCol,
-          streamTextCol)
-        val lSegStats = fuzzySideStats(
-          graft.ext.Dedup.editDistanceSegments(lb, maxDist), buckets)
-        val lProbeStats = fuzzySideStats(
-          graft.ext.Dedup.editDistanceProbes(lb, maxDist), buckets)
-        val (rb, rSegs, rProbes, segCounts, probeCounts) =
-          fuzzyFrames(base, buckets, lProbeStats.hitBuckets, lSegStats.hitBuckets)
-        val bound = fuzzyMetaBounds(base).map { case (maxNs, maxNp) =>
-          maxNs.toDouble * lProbeStats.rows +
-            maxNp.toDouble * lSegStats.rows
-        }
-        sink(graft.ext.Dedup.editDistanceJoinAgainstFrames(batch,
-            streamIdCol, streamTextCol, rb, rSegs, rProbes, maxDist,
-            maxCandidates, Some(segCounts), Some(probeCounts),
-            broadcastLeft =
-              lSegStats.rows + lProbeStats.rows <= FuzzyBroadcastKeyCap,
-            provenVolumeBound = bound)
+      if (!batch.isEmpty)
+        sink(fuzzyJoin(source, textCol, batch, streamIdCol, streamTextCol,
+            maxCandidates)
           .withColumnRenamed("id_a", streamIdCol)
           .withColumnRenamed("id_b", "ref_id"))
-      }
   }
 
   // ——— index maintenance / ops views ———
@@ -2124,6 +2016,42 @@ class Engine(val spark: SparkSession, val root: String,
 }
 
 object Engine {
+  /** A text tier's `meta.json`: the build parameters every later step
+    * must reuse — a query pruning with another bucket modulus or edit
+    * distance than the build's would silently miss matches. Lexical
+    * artifacts carry `buckets` and `positional` (sync keeps appending the
+    * same posting shape). Fuzzy ones carry `maxDist`, `buckets`, `idCol`
+    * (sync anti-joins the source on it), `layout` and `bounds`, the
+    * per-key frequency UPPER bounds `maxNsBound`/`maxNpBound` that let the
+    * serving join's volume guard run driver-side (None on an artifact
+    * predating them: the guard then keeps its exact counting pass). A
+    * field a tier does not use stays None and is not written. */
+  private[api] final case class TextMeta(buckets: Int,
+      positional: Option[Boolean] = None, maxDist: Option[Int] = None,
+      idCol: Option[String] = None, layout: Option[Int] = None,
+      bounds: Option[(Long, Long)] = None)
+
+  /** One text index tier — all the shared lifecycle needs to know of it:
+    *   - `kind` ("lexical" | "fuzzy") and `base`, its artifact root;
+    *   - `bucketed`, its bucket-partitioned dirs with their partition
+    *     column, and `flats`, its flat tables — what recovery sweeps and
+    *     compaction coalesces;
+    *   - `known`, the dir whose `id` column lists the indexed documents
+    *     (sync anti-joins the source against it);
+    *   - `check`, what a stored meta must hold before it is served;
+    *   - `write(meta, delta, mode)`, which writes the tier's frames of
+    *     `delta` — (id, t) rows of non-null text — and returns the meta a
+    *     build records for them;
+    *   - `beforeAppend` and `afterCompact`, the meta a sync records before
+    *     it appends a delta and the meta a compaction records after it
+    *     coalesces (unchanged for the lexical tier). */
+  private[api] final case class TextTier(kind: String, base: String,
+      bucketed: Seq[(String, String)], flats: Seq[String], known: String,
+      write: (TextMeta, DataFrame, String) => TextMeta,
+      check: TextMeta => Unit = _ => (),
+      beforeAppend: (TextMeta, DataFrame) => TextMeta = (m, _) => m,
+      afterCompact: TextMeta => TextMeta = m => m)
+
   /** Sentinel probe count: `probes = Some(Engine.Advised)` opts a
     * [[Engine.search]]/[[Engine.searchMulti]] call into the PERSISTED
     * advisor budget ([[Engine.adviseProbes]]) — explicit at the call

@@ -1,12 +1,12 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Crash-safe directory-swap compaction, shared by every bucketed index
-  * tier (lexical term buckets, fuzzy segment buckets) and their flat
-  * sidecar tables (doclens, PassJoin base/counts).
+  * tier (lexical term buckets, fuzzy segment and id buckets) and their
+  * flat sidecar tables (doclens, PassJoin key counts).
   *
   * Discipline (proved out by the lexical tier's crash cases in
   * LexicalSpec): a live directory is NEVER deleted before its
@@ -14,11 +14,11 @@ import org.apache.spark.sql.functions.col
   * dot-prefixed aside (invisible to parquet file listing — it cannot be
   * misread as a partition during the window), install the replacement,
   * then drop the aside; flat tables swap via a sibling `.__old__`
-  * rename pair. The matching [[recoverBucketAsides]]/[[recoverFlatAside]]
-  * sweep MUST run before any append or rewrite of the artifact: a lone
-  * aside with its live dir absent means a crash between aside-rename
-  * and install (restore it BEFORE an append can recreate the live dir
-  * with only new rows, which would make aside-alongside-live ambiguous);
+  * rename pair. The matching [[recover]] sweep MUST run before any
+  * append or rewrite of the artifact: a lone aside with its live dir
+  * absent means a crash between aside-rename and install (restore it
+  * BEFORE an append can recreate the live dir with only new rows, which
+  * would make aside-alongside-live ambiguous);
   * with recovery ordered before every mutation, aside-alongside-live can
   * only mean a crash after install and dropping the aside is safe. */
 private[graft] object Swap {
@@ -47,44 +47,45 @@ private[graft] object Swap {
   def withArtifactLock[A](base: String)(f: => A): A =
     artifactLocks.computeIfAbsent(base, _ => new Object).synchronized(f)
 
-  /** Whether `dir` holds any bucket aside for `partCol` — the cheap
-    * pre-check that lets read-path recovery skip the artifact lock on
-    * the (overwhelmingly common) clean path. */
-  def hasBucketAsides(fs: FileSystem, dir: Path, partCol: String): Boolean =
-    fs.exists(dir) && fs.listStatus(dir).exists(st => st.isDirectory &&
-      st.getPath.getName.startsWith(s".graft-old-$partCol="))
-
-  /** Whether a flat table's `.__old__` aside exists — see
-    * [[hasBucketAsides]]. */
-  def hasFlatAside(fs: FileSystem, live: Path): Boolean =
-    fs.exists(new Path(live.getParent, live.getName + ".__old__"))
-
-  /** Restore/drop bucket asides under `dir` for partition column
-    * `partCol` (dirs named `<partCol>=N`). Cheap: one listStatus. */
-  def recoverBucketAsides(fs: FileSystem, dir: Path, partCol: String): Unit =
-    if (fs.exists(dir))
-      fs.listStatus(dir).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(s".graft-old-$partCol="))
-        .foreach { st =>
-          val live = new Path(dir, st.getPath.getName.stripPrefix(".graft-old-"))
+  /** Crash recovery for one artifact rooted at `base`: its
+    * bucket-partitioned dirs (`bucketed`, each with its partition column,
+    * dirs named `<partCol>=N`) and its flat tables (`flats`), all relative
+    * to `base`. A bucket aside sits inside its dir, a flat table's
+    * `.__old__` aside beside the table, so one listStatus per bucketed dir
+    * plus one of `base` finds every aside. An aside whose live dir is
+    * absent is renamed back (a crash between aside-rename and install);
+    * one alongside its live dir is dropped (a crash after install, before
+    * cleanup). The artifact lock is taken ONLY when a listing shows an
+    * aside: the clean read path stays lock-free, and a visible aside may
+    * belong to a RUNNING compaction, whose window the lock serializes
+    * against — inside the lock the sweep lists again, so an aside that
+    * belonged to a just-finished compaction resolves to a no-op. */
+  def recover(fs: FileSystem, base: String, bucketed: Seq[(String, String)],
+      flats: Seq[String]): Unit = {
+    val root = new Path(base)
+    def children(dir: Path): Seq[FileStatus] =
+      try fs.listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    // every (aside, live) pair under the artifact
+    def asides(): Seq[(Path, Path)] =
+      children(root).map(_.getPath).flatMap(p => flats.collect {
+        case f if p.getName == s"$f.__old__" => p -> new Path(root, f)
+      }) ++ bucketed.flatMap { case (d, partCol) =>
+        val dir = new Path(root, d)
+        children(dir).filter(st => st.isDirectory &&
+            st.getPath.getName.startsWith(s".graft-old-$partCol="))
+          .map(st => st.getPath ->
+            new Path(dir, st.getPath.getName.stripPrefix(".graft-old-")))
+      }
+    if (asides().nonEmpty)
+      withArtifactLock(base) {
+        asides().foreach { case (aside, live) =>
           if (!fs.exists(live))
-            require(fs.rename(st.getPath, live),
-              s"recoverBucketAsides: crash-recovery rename ${st.getPath} failed")
-          else fs.delete(st.getPath, true)
+            require(fs.rename(aside, live),
+              s"Swap.recover: crash-recovery rename $aside failed")
+          else fs.delete(aside, true)
         }
-
-  /** Restore/drop a flat table's `.__old__` aside: restore when the
-    * live dir is absent (crash between the two renames of a swap), drop
-    * when both exist (crash after the swap, before cleanup). */
-  def recoverFlatAside(fs: FileSystem, live: Path): Unit = {
-    val old = new Path(live.getParent, live.getName + ".__old__")
-    if (fs.exists(old)) {
-      if (!fs.exists(live))
-        require(fs.rename(old, live),
-          s"recoverFlatAside: crash-recovery rename $old failed")
-      else fs.delete(old, true)
-    }
+      }
   }
 
   private def dataFiles(fs: FileSystem, p: Path): Int =
@@ -94,7 +95,7 @@ private[graft] object Swap {
     * `maxFiles` data files (each incremental sync appends its own file
     * set per touched bucket, so scan cost becomes task-overhead-bound
     * without this). Returns the number of buckets compacted. Caller
-    * must have run [[recoverBucketAsides]] first. */
+    * must have run [[recover]] first. */
   def compactBuckets(spark: SparkSession, fs: FileSystem, dir: String,
       partCol: String, maxFiles: Int, op: String): Long = {
     val dirP = new Path(dir)
@@ -130,7 +131,7 @@ private[graft] object Swap {
 
   /** Coalesce a flat sidecar table to one file when it fragments past
     * `maxFiles`. Returns the pre-compaction file count, 0 if skipped.
-    * Caller must have run [[recoverFlatAside]] first. */
+    * Caller must have run [[recover]] first. */
   def compactFlat(spark: SparkSession, fs: FileSystem, live: String,
       maxFiles: Int, op: String): Long = {
     val liveP = new Path(live)

@@ -111,24 +111,11 @@ object Streams {
       s"indexSyncStream: tier must be ivf | pq | sq | bq, got '$tier'")
     require(compactEveryBatches >= 0,
       "indexSyncStream: compactEveryBatches must be >= 0 (0 = off)")
-    val spark = store.spark
-    val path = store.tablePath(source)
-    val schema = spark.read.parquet(path).schema
-    val batches = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.readStream.schema(schema).parquet(path)
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        graft.index.Index.syncIncremental(
-          store, codingName, source, column, idCol, tier)
-        val n = batches.incrementAndGet()
-        if (compactEveryBatches > 0 && n % compactEveryBatches == 0)
-          graft.index.Index.compactCells(store, codingName, source, column,
-            maxFilesPerCell, tier = tier)
-        ()
-      }
-      .start()
+    syncStream(store, source, checkpoint, compactEveryBatches)(
+      () => graft.index.Index.syncIncremental(
+        store, codingName, source, column, idCol, tier),
+      () => graft.index.Index.compactCells(store, codingName, source, column,
+        maxFilesPerCell, tier = tier))
   }
 
   /** [[indexSyncStream]] for the TEXT index tiers — fuzzy (edit-
@@ -154,8 +141,25 @@ object Streams {
       s"textIndexSyncStream: tier must be fuzzy | lexical, got '$tier'")
     require(compactEveryBatches >= 0,
       "textIndexSyncStream: compactEveryBatches must be >= 0 (0 = off)")
-    val spark = engine.store.spark
-    val path = engine.store.tablePath(source)
+    val fuzzy = tier == "fuzzy"
+    syncStream(engine.store, source, checkpoint, compactEveryBatches)(
+      () =>
+        if (fuzzy) engine.syncFuzzyIndex(source, textCol)
+        else engine.syncLexicalIndex(source, idCol, textCol),
+      () =>
+        if (fuzzy) engine.compactFuzzyIndex(source, textCol, maxFilesPerBucket)
+        else engine.compactLexicalIndex(source, textCol, maxFilesPerBucket))
+  }
+
+  /** The frame both sync streams share: tail the streamed-into table
+    * directory and run `sync` after each micro-batch of committed files,
+    * then `compact` after every `compactEveryBatches` batches counted
+    * since stream start (0 = never). */
+  private def syncStream(store: graft.store.Store, source: String,
+      checkpoint: String, compactEveryBatches: Int)(sync: () => Any,
+      compact: () => Any): org.apache.spark.sql.streaming.StreamingQuery = {
+    val spark = store.spark
+    val path = store.tablePath(source)
     val schema = spark.read.parquet(path).schema
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.readStream.schema(schema).parquet(path)
@@ -163,19 +167,10 @@ object Streams {
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (_: DataFrame, _: Long) =>
-        tier match {
-          case "fuzzy" => engine.syncFuzzyIndex(source, textCol)
-          case "lexical" => engine.syncLexicalIndex(source, idCol, textCol)
-        }
+        sync()
         val n = batches.incrementAndGet()
-        if (compactEveryBatches > 0 && n % compactEveryBatches == 0) {
-          tier match {
-            case "fuzzy" =>
-              engine.compactFuzzyIndex(source, textCol, maxFilesPerBucket)
-            case "lexical" =>
-              engine.compactLexicalIndex(source, textCol, maxFilesPerBucket)
-          }
-        }
+        if (compactEveryBatches > 0 && n % compactEveryBatches == 0)
+          compact()
         ()
       }
       .start()

@@ -297,39 +297,42 @@ class FuzzySpec extends SparkSuite {
   test("sync fragments buckets; compaction coalesces them crash-safely; " +
       "a crashed-swap aside is recovered on the READ path") {
     val all = corpusRows(40).toDF("doc_id", "t")
-    val e = freshEngine("fcomp")
-    e.makeTable("fd", all.filter(col("doc_id") < 10))
-    e.buildFuzzyIndex("fd", "doc_id", "t", maxDist = 2, buckets = 4)
-    for (lo <- Seq(10, 20, 30)) {
-      all.filter(col("doc_id") >= lo && col("doc_id") < lo + 10)
-        .write.mode("append").parquet(e.store.tablePath("fd"))
-      e.syncFuzzyIndex("fd", "t")
-    }
-    val q = f"row ${25}%04d of the fuzzy corpus"
-    val before = e.fuzzyLookup("fd", "t", q).as[(Long, Long)].collect().toSeq
-    val (buckets, flats) = e.compactFuzzyIndex("fd", "t", maxFilesPerBucket = 1)
-    assert(buckets > 0, "4 syncs left no fragmented bucket?")
-    assert(flats > 0, "base/counts never fragmented?")
-    val after = e.fuzzyLookup("fd", "t", q).as[(Long, Long)].collect().toSeq
-    assert(after == before, s"$after vs $before")
+    for (tier <- TextTierCase.both) {
+      val e = freshEngine(s"${tier.name}comp")
+      e.makeTable("fd", all.filter(col("doc_id") < 10))
+      tier.build(e, "fd", "t", buckets = 4)
+      for (lo <- Seq(10, 20, 30)) {
+        all.filter(col("doc_id") >= lo && col("doc_id") < lo + 10)
+          .write.mode("append").parquet(e.store.tablePath("fd"))
+        tier.sync(e, "fd", "t")
+      }
+      val q = f"row ${25}%04d of the fuzzy corpus"
+      val before = tier.serve(e, "fd", "t", q)
+      val (buckets, flats) = tier.compact(e, "fd", "t", maxFilesPerBucket = 1)
+      assert(buckets > 0, s"${tier.name}: 4 syncs left no fragmented bucket?")
+      assert(flats > 0, s"${tier.name}: flat tables never fragmented?")
+      val after = tier.serve(e, "fd", "t", q)
+      assert(after == before, s"${tier.name}: $after vs $before")
 
-    // simulate a compaction crash between aside-rename and install: the
-    // live bucket dir is GONE, only the dot-prefixed aside remains —
-    // a read must restore it (parquet listing ignores the aside, so
-    // without recovery the bucket's segments silently vanish)
-    val base = e.store.fuzzyIndexPath("fd", "t")
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val segDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/segs"))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__SEG_BUCKET__="))
-    assert(segDirs.nonEmpty)
-    val victim = segDirs.head.getPath
-    val aside = new org.apache.hadoop.fs.Path(victim.getParent,
-      s".graft-old-${victim.getName}")
-    assert(fs.rename(victim, aside))
-    val recovered = e.fuzzyLookup("fd", "t", q).as[(Long, Long)].collect().toSeq
-    assert(recovered == before, s"$recovered vs $before")
-    assert(fs.exists(victim) && !fs.exists(aside), "aside not restored")
+      // simulate a compaction crash between aside-rename and install: the
+      // live bucket dir is GONE, only the dot-prefixed aside remains —
+      // a read must restore it (parquet listing ignores the aside, so
+      // without recovery the bucket's rows silently vanish)
+      val dir = new org.apache.hadoop.fs.Path(
+        s"${tier.base(e, "fd", "t")}/${tier.bucketed}")
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val bucketDirs = fs.listStatus(dir).filter(s =>
+        s.isDirectory && s.getPath.getName.startsWith(s"${tier.partCol}="))
+      assert(bucketDirs.nonEmpty)
+      val victim = bucketDirs.head.getPath
+      val aside = new org.apache.hadoop.fs.Path(victim.getParent,
+        s".graft-old-${victim.getName}")
+      assert(fs.rename(victim, aside))
+      val recovered = tier.serve(e, "fd", "t", q)
+      assert(recovered == before, s"${tier.name}: $recovered vs $before")
+      assert(fs.exists(victim) && !fs.exists(aside),
+        s"${tier.name}: aside not restored")
+    }
   }
 
   test("append-only growth of ONLY null-text rows re-stamps freshness " +

@@ -300,63 +300,66 @@ class LexicalSpec extends SparkSuite {
   test("compactLexicalIndex recovers a bucket from its crash aside: a " +
       "swap killed between aside-rename and install restores on the " +
       "next compaction, and queries never lose the bucket's terms") {
-    val root = Files.createTempDirectory("graft-lexcrash").toString
-    val engine = new Engine(spark, root)
-    engine.makeTable("cdocs", docs.filter(col("doc_id") <= 3))
-    engine.buildLexicalIndex("cdocs", "doc_id", "text", buckets = 4)
-    val before = engine.searchBm25("cdocs", "text", Seq("hash"), k = 10)
-      .as[(Long, Double)].collect().toSeq
-    assert(before.nonEmpty)
-    // simulate the crash window: one live bucket renamed to its aside,
-    // install never happened (bucket dir absent)
-    val postDir = java.nio.file.Paths.get(root,
-      "lex_indexes", "cdocs", "text", "postings")
-    val bucket = java.nio.file.Files.list(postDir).iterator().asScala
-      .find(_.getFileName.toString.startsWith("__TERM_BUCKET__=")).get
-    val aside = postDir.resolve(".graft-old-" + bucket.getFileName.toString)
-    java.nio.file.Files.move(bucket, aside)
-    // hidden aside dirs are ignored by the reader: the bucket's terms
-    // are MISSING until recovery (this is the crash residue)…
-    // …and the next compaction restores the aside before doing anything
-    engine.compactLexicalIndex("cdocs", "text", maxFilesPerBucket = 64)
-    assert(!java.nio.file.Files.exists(aside), "aside must be restored")
-    val after = engine.searchBm25("cdocs", "text", Seq("hash"), k = 10)
-      .as[(Long, Double)].collect().toSeq
-    assert(after == before)
+    for (tier <- TextTierCase.both) {
+      val root = Files.createTempDirectory(s"graft-${tier.name}crash").toString
+      val engine = new Engine(spark, root)
+      engine.makeTable("cdocs", docs.filter(col("doc_id") <= 3))
+      tier.build(engine, "cdocs", "text", buckets = 4)
+      val q = "spark shuffles the hash join build side"
+      val before = tier.serve(engine, "cdocs", "text", q)
+      assert(before.nonEmpty)
+      // simulate the crash window: one live bucket renamed to its aside,
+      // install never happened (bucket dir absent)
+      val postDir = java.nio.file.Paths.get(
+        tier.base(engine, "cdocs", "text"), tier.bucketed)
+      val bucket = java.nio.file.Files.list(postDir).iterator().asScala
+        .find(_.getFileName.toString.startsWith(s"${tier.partCol}=")).get
+      val aside = postDir.resolve(".graft-old-" + bucket.getFileName.toString)
+      java.nio.file.Files.move(bucket, aside)
+      // hidden aside dirs are ignored by the reader: the bucket's keys
+      // are MISSING until recovery (this is the crash residue)…
+      // …and the next compaction restores the aside before doing anything
+      tier.compact(engine, "cdocs", "text", maxFilesPerBucket = 64)
+      assert(!java.nio.file.Files.exists(aside),
+        s"${tier.name}: aside must be restored")
+      assert(tier.serve(engine, "cdocs", "text", q) == before, tier.name)
+    }
   }
 
   test("syncLexicalIndex restores a crashed-compaction aside BEFORE " +
       "appending — a later compaction can never mistake the only full " +
       "copy for a stale duplicate") {
-    val root = Files.createTempDirectory("graft-lexsync").toString
-    val engine = new Engine(spark, root)
-    engine.makeTable("sdocs", docs.filter(col("doc_id") <= 3))
-    engine.buildLexicalIndex("sdocs", "doc_id", "text", buckets = 1)
-    val before = engine.searchBm25("sdocs", "text", Seq("hash"), k = 10)
-      .as[(Long, Double)].collect().toMap
-    assert(before.nonEmpty)
-    // simulate the compaction crash window on the single bucket
-    val postDir = java.nio.file.Paths.get(root,
-      "lex_indexes", "sdocs", "text", "postings")
-    val bucket = java.nio.file.Files.list(postDir).iterator().asScala
-      .find(_.getFileName.toString.startsWith("__TERM_BUCKET__=")).get
-    val aside = postDir.resolve(".graft-old-" + bucket.getFileName.toString)
-    java.nio.file.Files.move(bucket, aside)
-    // sync appends a new doc whose terms land in the SAME (only)
-    // bucket — without recovery-first this recreates the live dir and
-    // the next compaction would delete the aside (= all old postings)
-    docs.filter(col("doc_id") === 4)
-      .write.mode("append").parquet(engine.store.tablePath("sdocs"))
-    assert(engine.syncLexicalIndex("sdocs", "doc_id", "text") == 1L)
-    assert(!java.nio.file.Files.exists(aside),
-      "sync must restore the aside before appending")
-    engine.compactLexicalIndex("sdocs", "text", maxFilesPerBucket = 1)
-    val after = engine.searchBm25("sdocs", "text", Seq("hash"), k = 10)
-      .as[(Long, Double)].collect().toMap
-    // every pre-crash doc still matches (avgdl shifted by the new doc,
-    // so compare keys, not scores) and the synced doc joined them
-    assert(before.keySet.subsetOf(after.keySet),
-      s"pre-crash postings lost: before=${before.keySet} after=${after.keySet}")
+    for (tier <- TextTierCase.both) {
+      val root = Files.createTempDirectory(s"graft-${tier.name}sync").toString
+      val engine = new Engine(spark, root)
+      engine.makeTable("sdocs", docs.filter(col("doc_id") <= 3))
+      tier.build(engine, "sdocs", "text", buckets = 1)
+      val q = "spark shuffles the hash join build side"
+      val before = tier.serve(engine, "sdocs", "text", q).toMap
+      assert(before.nonEmpty)
+      // simulate the compaction crash window on the single bucket
+      val postDir = java.nio.file.Paths.get(
+        tier.base(engine, "sdocs", "text"), tier.bucketed)
+      val bucket = java.nio.file.Files.list(postDir).iterator().asScala
+        .find(_.getFileName.toString.startsWith(s"${tier.partCol}=")).get
+      val aside = postDir.resolve(".graft-old-" + bucket.getFileName.toString)
+      java.nio.file.Files.move(bucket, aside)
+      // sync appends a new doc whose keys land in the SAME (only)
+      // bucket — without recovery-first this recreates the live dir and
+      // the next compaction would delete the aside (= all old rows)
+      docs.filter(col("doc_id") === 4)
+        .write.mode("append").parquet(engine.store.tablePath("sdocs"))
+      assert(tier.sync(engine, "sdocs", "text") == 1L)
+      assert(!java.nio.file.Files.exists(aside),
+        s"${tier.name}: sync must restore the aside before appending")
+      tier.compact(engine, "sdocs", "text", maxFilesPerBucket = 1)
+      val after = tier.serve(engine, "sdocs", "text", q).toMap
+      // every pre-crash doc still matches (avgdl shifted by the new doc,
+      // so compare keys, not scores)
+      assert(before.keySet.subsetOf(after.keySet),
+        s"${tier.name}: pre-crash rows lost: before=${before.keySet} " +
+          s"after=${after.keySet}")
+    }
   }
 
   test("tfidf cosine: degenerate vocabulary is refused loudly by the " +
@@ -467,5 +470,35 @@ class LexicalSpec extends SparkSuite {
       if (ingest.isActive) ingest.stop()
       engine.remove()
     }
+  }
+
+  test("a lexical build writes at most one postings file per term " +
+      "bucket: rows are clustered by bucket before the partitioned write") {
+    val root = Files.createTempDirectory("graft-lexcluster").toString
+    val engine = new Engine(spark, root)
+    val rnd = new scala.util.Random(7)
+    engine.makeTable("kdocs", (0 until 6000).map(i => (i.toLong,
+        Seq.fill(40)(s"w${rnd.nextInt(100000)}").mkString(" ")))
+      .toDF("doc_id", "text"))
+    def filesPerBucket(dir: String): Seq[Int] =
+      java.nio.file.Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("__TERM_BUCKET__="))
+        .map(b => java.nio.file.Files.list(b).iterator().asScala
+          .count(f => !f.getFileName.toString.startsWith(".") &&
+            !f.getFileName.toString.startsWith("_")))
+        .toSeq
+    // the corpus is large enough that the postings stage keeps >= 2
+    // partitions: written unclustered, buckets get one file per task
+    val raw = s"$root/unclustered"
+    Lexical.postings(engine.store.loadTable("kdocs"), "doc_id", "text", 64)
+      .write.partitionBy("__TERM_BUCKET__").parquet(raw)
+    assert(filesPerBucket(raw).max > 1,
+      "corpus too small to show unclustered fragmentation")
+    engine.buildLexicalIndex("kdocs", "doc_id", "text", buckets = 64)
+    val built = filesPerBucket(
+      s"${engine.store.lexIndexPath("kdocs", "text")}/postings")
+    assert(built.size == 64 && built.max <= 1,
+      s"${built.sum} postings files in ${built.size} bucket dirs")
+    engine.remove()
   }
 }
