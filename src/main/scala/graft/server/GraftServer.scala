@@ -7,9 +7,11 @@ import java.util.concurrent.Executors
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftShims}
 import org.apache.spark.sql.functions.{col, expr, max, max_by, substring}
 
 import graft.api.{Engine, TargetVector}
@@ -24,8 +26,9 @@ import graft.coder.CoderConfig
   * create table / read / make coder / make index / search / drop from a
   * second process — over plain HTTP+JSON using only the JDK's built-in
   * `HttpServer` and Spark's bundled Jackson, so the library API remains
-  * the contract: each handler parses a request, calls the engine and
-  * renders its rows, with no search or storage logic of its own.
+  * the contract: each handler reads a [[Req]], calls the engine and
+  * returns a [[GraftServer.Reply]], with no search or storage logic of
+  * its own.
   *
   * Deliberately NOT the bulk-data path: row payloads ride JSON, which is
   * fine for control-plane ops, small ingests and top-k results. At 100 TB
@@ -34,44 +37,20 @@ import graft.coder.CoderConfig
   * cluster through one socket, which is exactly the single-node shape
   * this engine exists to avoid.
   *
-  * Verbs (reference analogue in parens):
-  *   - `GET    /api/tables`                    (list-tables action)
-  *   - `PUT    /api/tables/{name}`             (do_put) — body `{"schema": ddl, "rows": [{...}]}`
-  *   - `GET    /api/tables/{name}?select=&filter=&limit=` (do_get scan)
-  *   - `DELETE /api/tables/{name}`             (drop-table action)
-  *   - `GET    /api/codings`                   (list-codings action)
-  *   - `POST   /api/indexes`                   (make-coder + sync-index actions)
-  *   - `DELETE /api/indexes/{name}`            (drop-index action)
-  *   - `POST   /api/search`                    (do_exchange search; a
-  *     `targets` array instead of `target` selects the batch kNN-join form)
-  *   - `POST   /api/search/maxsim`             (late-interaction retrieval)
-  *   - `GET    /api/bpe` · `POST /api/bpe` · `GET /api/bpe/{model}/tokens`
-  *   - `GET    /api/pca` · `POST /api/pca` · `GET /api/pca/{model}/project`
-  *     (tokenizer lifecycle: list / train+persist / per-row token counts)
-  *   - `POST   /api/text/fingerprints` · `POST /api/text/overlaps`
-  *     (winnowing fingerprints / MOSS overlap pairs)
-  *   - `GET    /api/ngram` · `POST /api/ngram` ·
-  *     `GET /api/ngram/{model}/perplexity` (LM quality-filter lifecycle)
-  *   - `POST   /api/dedup/spans` · `POST /api/dedup/strip`
-  *     (exact substring dedup: detect / rewrite)
-  *   - `POST   /api/dedup/gate` (arrivals-vs-corpus near-dup gate)
-  *   - `POST   /api/dedup/semantic-gate` (embedding dup gate over the IVF index)
-  *   - `POST   /api/text/decontaminate` (corpus-vs-benchmark containment)
-  *   - `POST   /api/text/curate` (full curation pipeline; optional dest table)
-  *   - `POST   /api/sample/mixture` (domain-mixture resampling)
-  *   - `POST   /api/sample/dsir` (DSIR importance weights / resampling)
-  *   - `POST   /api/indexes/stats` · `POST /api/indexes/compact` ·
-  *     `POST /api/indexes/repair`
-  *     (per-cell layout stats / compaction / cell-scoped repair, any tier)
-  *   - `POST   /api/streams/text-sync` · `GET /api/streams` ·
-  *     `DELETE /api/streams/{id}`
-  *     (start / list / stop the fuzzy|lexical self-maintenance stream)
-  *   - `POST   /api/advise/probes` (measure + persist the IVF probe
-  *     advice) · `GET /api/advise/probes/{coding}` (serve the cached
-  *     advice; 409 when the corpus outgrew it) ·
-  *     `POST /api/advise/candidates` (rerank-tier candidate budgets)
+  * Verbs: [[routes]] is the one list — `METHOD /path` under `/api`, each
+  * handler's scaladoc naming its body fields and library call.
+  *
+  * The request envelope ([[handle]]) is the only code that sees the
+  * `HttpExchange`: it reads the body once (at most [[maxRequestBytes]]),
+  * dispatches through [[routes]], renders the reply and maps every
+  * failure to a status in one place ([[GraftServer.knownStatus]]): 400
+  * for a bad request, 409 for state that refuses it (stale advice), 413
+  * for an oversized body, 404 for no route or a missing resource, 500
+  * for anything else — each with a JSON `error` body.
   */
 class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
+  import GraftServer._
+
   private val mapper = new ObjectMapper()
   // `send` writes headers, then body: without TCP_NODELAY Nagle holds
   // the body until the client's delayed ACK, about 40 ms per request.
@@ -82,6 +61,9 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
   private val pool = Executors.newFixedThreadPool(4)
   /** Cap on rows returned by a single scan/search response. */
   val maxResponseRows = 10000
+  /** Cap on a request body's bytes (8 MiB: JSON ingests are the small,
+    * control-plane kind); a longer body is refused with 413 unparsed. */
+  private[graft] val maxRequestBytes = 8 << 20
 
   def boundPort: Int = http.getAddress.getPort
 
@@ -108,150 +90,332 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     pool.shutdown()
   }
 
-  // ——— routing ———
+  // ——— routes ———
 
+  /** The one list of verbs. Paths are under `/api`; a `{name}` segment
+    * binds a path param ([[Req.path]]). */
+  private val routes: Seq[Route] = Seq(
+    // tables (do_put / do_get / list-tables / drop-table)
+    on("GET /tables")(_ => listJson("tables", engine.listTables())),
+    on("PUT /tables/{name}")(putTable),
+    on("GET /tables/{name}")(getTable),
+    on("GET /tables/{name}/arrow")(getTableArrow),
+    on("GET /tables/{name}/describe")(r =>
+      Rows(engine.describeTable(r.path("name")))),
+    on("DELETE /tables/{name}") { r =>
+      engine.dropTable(r.path("name")); Json("""{"dropped":true}""")
+    },
+    on("POST /tables/upsert")(postUpsert),
+    on("POST /tables/validate")(postValidate),
+    on("POST /tables/diff")(postDiff),
+    on("POST /tables/drift")(postDrift),
+    // vector indexes, search and the budget advisors
+    on("GET /codings")(_ => listJson("codings", engine.listCodings())),
+    on("POST /indexes")(postIndex),
+    on("DELETE /indexes/{name}") { r =>
+      engine.dropIndex(r.path("name")); Json("""{"dropped":true}""")
+    },
+    on("POST /indexes/stats")(postIndexStats),
+    on("POST /indexes/compact")(postIndexCompact),
+    on("POST /indexes/repair")(postIndexRepair),
+    on("POST /search")(postSearch),
+    on("POST /search/maxsim")(postMaxsim),
+    on("POST /advise/probes")(postAdviseProbes),
+    on("GET /advise/probes/{coding}")(getAdviseProbes),
+    on("POST /advise/candidates")(postAdviseCandidates),
+    on("GET /advise/candidates/{coding}")(getAdviseCandidates),
+    // text tiers: lexical (BM25, phrase) and fuzzy (edit distance)
+    on("POST /indexes/lexical")(postLexicalBuild),
+    on("POST /indexes/lexical/sync")(postLexicalSync),
+    on("POST /indexes/lexical/compact")(postLexicalCompact),
+    on("POST /search/bm25")(postBm25),
+    on("POST /search/phrase")(postPhrase),
+    on("POST /indexes/fuzzy")(postFuzzyBuild),
+    on("POST /indexes/fuzzy/sync")(postFuzzySync),
+    on("POST /indexes/fuzzy/compact")(postFuzzyCompact),
+    on("POST /search/fuzzy")(postFuzzy),
+    on("POST /search/fuzzy/join")(postFuzzyJoin),
+    on("POST /streams/text-sync")(postTextSyncStream),
+    on("GET /streams")(getStreams),
+    on("DELETE /streams/{id}")(deleteStream),
+    // persisted models: PCA, BPE, n-gram LM, quality classifier
+    on("GET /pca")(_ => listJson("models", engine.store.listPcaModels())),
+    on("POST /pca")(postPca),
+    on("GET /pca/{model}/project")(getPcaProject),
+    on("GET /bpe")(_ => listJson("models", engine.listBpeModels())),
+    on("POST /bpe")(postBpe),
+    on("GET /bpe/{model}/tokens")(getBpeTokens),
+    on("GET /ngram")(_ => listJson("models", engine.listNgramModels())),
+    on("POST /ngram")(postNgram),
+    on("GET /ngram/{model}/perplexity")(getPerplexity),
+    on("GET /quality")(_ => listJson("models", engine.listQualityModels())),
+    on("POST /text/quality-model")(postQualityModel),
+    on("POST /text/quality-score")(postQualityScore),
+    // corpus curation: fingerprints, dedup, decontamination, sampling
+    on("POST /text/fingerprints")(postFingerprints),
+    on("POST /text/overlaps")(postOverlaps),
+    on("POST /text/profile")(postProfile),
+    on("POST /text/decontaminate")(postDecontaminate),
+    on("POST /text/decontaminate-spans")(postDecontaminateSpans),
+    on("POST /text/curate")(postCurate),
+    on("POST /text/curate-drops")(postCurateDrops),
+    on("POST /dedup/spans")(postDedupSpans),
+    on("POST /dedup/strip")(postDedupStrip),
+    on("POST /dedup/segments")(postDedupSegments),
+    on("POST /dedup/strip-segments")(postDedupStripSegments),
+    on("POST /dedup/editdist")(postEditDistance),
+    on("POST /dedup/jaro")(postJaro),
+    on("POST /dedup/gate")(postDedupGate),
+    on("POST /dedup/semantic-gate")(postSemanticGate),
+    on("POST /sample/mixture")(postMixture),
+    on("POST /sample/budget")(postBudget),
+    on("POST /sample/splits")(postSplits),
+    on("POST /sample/dsir")(postDsir),
+    // graph, time series and sketches
+    on("POST /graph/pagerank")(postPageRank),
+    on("POST /graph/components")(postComponents),
+    on("POST /graph/triangles")(postTriangles),
+    on("POST /events/anomalies")(postAnomalies),
+    on("POST /events/resample")(postResample),
+    on("POST /events/asof")(postAsof),
+    on("POST /sketch/set-ops")(postKmvSetOps),
+    on("POST /sketch/distinct")(postKmvDistinct),
+    on("POST /sketch/heavy-hitters")(postHeavyHitters),
+    on("POST /sketch/quantiles")(postQuantiles))
+
+  /** Every route's `METHOD /path`, in table order. */
+  private[graft] def verbs: Seq[String] = routes.map(_.verb)
+
+  private def on(verb: String)(handler: Req => Reply): Route =
+    new Route(verb, handler)
+
+  /** One entry of the route table: `verb` is `METHOD /path`. */
+  private final class Route(val verb: String, val handler: Req => Reply) {
+    private val (method, segs) = verb.split(" ", 2) match {
+      case Array(m, p) => (m, p.split("/").toList.filter(_.nonEmpty))
+    }
+
+    /** This route's path params for (`m`, `path`), or None when it is
+      * not this route's. */
+    def bind(m: String, path: List[String]): Option[Map[String, String]] =
+      if (m != method || path.length != segs.length) None
+      else segs.zip(path).foldLeft(Option(Map.empty[String, String])) {
+        case (acc, (s, p)) if s.startsWith("{") =>
+          acc.map(_ + (s.substring(1, s.length - 1) -> p))
+        case (acc, (s, p)) => acc.filter(_ => s == p)
+      }
+  }
+
+  // ——— the envelope ———
+
+  /** The one place a request meets the exchange: read the body (capped),
+    * find the route, run its handler, render the reply — or map the
+    * failure to a status ([[statusOf]]). Handlers never catch, send or
+    * see the exchange. */
   private def handle(ex: HttpExchange): Unit = {
     val method = ex.getRequestMethod
     val path = ex.getRequestURI.getPath.stripPrefix("/api").stripSuffix("/")
-    val segs = path.stripPrefix("/").split("/").toList.filter(_.nonEmpty)
-    try {
-      (method, segs) match {
-        case ("GET", "tables" :: Nil) =>
-          ok(ex, mapper.writeValueAsString(Map("tables" -> engine.listTables().asJava).asJava))
-        case ("PUT", "tables" :: name :: Nil)    => putTable(ex, name)
-        case ("GET", "tables" :: name :: "arrow" :: Nil) => getTableArrow(ex, name)
-        case ("GET", "tables" :: name :: Nil)    => getTable(ex, name)
-        case ("GET", "tables" :: name :: "describe" :: Nil) =>
-          okRows(ex, engine.describeTable(name))
-        case ("DELETE", "tables" :: name :: Nil) =>
-          engine.dropTable(name); ok(ex, """{"dropped":true}""")
-        case ("GET", "codings" :: Nil) =>
-          ok(ex, mapper.writeValueAsString(Map("codings" -> engine.listCodings().asJava).asJava))
-        case ("POST", "indexes" :: Nil)          => postIndex(ex)
-        case ("DELETE", "indexes" :: name :: Nil) =>
-          engine.dropIndex(name); ok(ex, """{"dropped":true}""")
-        case ("POST", "search" :: Nil)           => postSearch(ex)
-        case ("POST", "search" :: "maxsim" :: Nil) => postMaxsim(ex)
-        case ("POST", "advise" :: "probes" :: Nil) => postAdviseProbes(ex)
-        case ("GET", "advise" :: "probes" :: coding :: Nil) =>
-          getAdviseProbes(ex, coding)
-        case ("POST", "advise" :: "candidates" :: Nil) =>
-          postAdviseCandidates(ex)
-        case ("GET", "advise" :: "candidates" :: coding :: Nil) =>
-          getAdviseCandidates(ex, coding)
-        case ("GET", "pca" :: Nil) =>
-          ok(ex, mapper.writeValueAsString(
-            Map("models" -> engine.store.listPcaModels().asJava).asJava))
-        case ("POST", "pca" :: Nil)              => postPca(ex)
-        case ("GET", "pca" :: model :: "project" :: Nil) => getPcaProject(ex, model)
-        case ("GET", "bpe" :: Nil) =>
-          ok(ex, mapper.writeValueAsString(
-            Map("models" -> engine.listBpeModels().asJava).asJava))
-        case ("POST", "bpe" :: Nil)              => postBpe(ex)
-        case ("GET", "bpe" :: model :: "tokens" :: Nil) => getBpeTokens(ex, model)
-        case ("POST", "text" :: "fingerprints" :: Nil) => postFingerprints(ex)
-        case ("POST", "text" :: "overlaps" :: Nil)     => postOverlaps(ex)
-        case ("GET", "ngram" :: Nil) =>
-          ok(ex, mapper.writeValueAsString(
-            Map("models" -> engine.listNgramModels().asJava).asJava))
-        case ("POST", "ngram" :: Nil)            => postNgram(ex)
-        case ("GET", "ngram" :: model :: "perplexity" :: Nil) =>
-          getPerplexity(ex, model)
-        case ("POST", "dedup" :: "spans" :: Nil) => postDedupSpans(ex)
-        case ("POST", "dedup" :: "strip" :: Nil) => postDedupStrip(ex)
-        case ("POST", "tables" :: "upsert" :: Nil) => postUpsert(ex)
-        case ("POST", "tables" :: "validate" :: Nil) => postValidate(ex)
-        case ("POST", "tables" :: "diff" :: Nil)     => postDiff(ex)
-        case ("POST", "tables" :: "drift" :: Nil)    => postDrift(ex)
-        case ("POST", "dedup" :: "segments" :: Nil) => postDedupSegments(ex)
-        case ("POST", "dedup" :: "strip-segments" :: Nil) => postDedupStripSegments(ex)
-        case ("POST", "dedup" :: "editdist" :: Nil) => postEditDistance(ex)
-        case ("POST", "dedup" :: "jaro" :: Nil)     => postJaro(ex)
-        case ("POST", "dedup" :: "gate" :: Nil)  => postDedupGate(ex)
-        case ("POST", "dedup" :: "semantic-gate" :: Nil) => postSemanticGate(ex)
-        case ("POST", "text" :: "decontaminate" :: Nil) => postDecontaminate(ex)
-        case ("POST", "text" :: "decontaminate-spans" :: Nil) =>
-          postDecontaminateSpans(ex)
-        case ("POST", "text" :: "curate" :: Nil)        => postCurate(ex)
-        case ("POST", "text" :: "curate-drops" :: Nil)  => postCurateDrops(ex)
-        case ("POST", "sample" :: "mixture" :: Nil) => postMixture(ex)
-        case ("POST", "sample" :: "budget" :: Nil)  => postBudget(ex)
-        case ("POST", "sample" :: "splits" :: Nil)  => postSplits(ex)
-        case ("POST", "sample" :: "dsir" :: Nil)    => postDsir(ex)
-        case ("POST", "text" :: "profile" :: Nil)       => postProfile(ex)
-        case ("POST", "text" :: "quality-model" :: Nil) => postQualityModel(ex)
-        case ("POST", "text" :: "quality-score" :: Nil) => postQualityScore(ex)
-        case ("GET", "quality" :: Nil) =>
-          ok(ex, s"""{"models":[${engine.listQualityModels()
-            .map(jstr).mkString(",")}]}""")
-        case ("POST", "graph" :: "pagerank" :: Nil)    => postPageRank(ex)
-        case ("POST", "graph" :: "components" :: Nil)  => postComponents(ex)
-        case ("POST", "graph" :: "triangles" :: Nil)   => postTriangles(ex)
-        case ("POST", "indexes" :: "lexical" :: Nil)   => postLexicalBuild(ex)
-        case ("POST", "indexes" :: "lexical" :: "sync" :: Nil) =>
-          postLexicalSync(ex)
-        case ("POST", "indexes" :: "lexical" :: "compact" :: Nil) =>
-          postLexicalCompact(ex)
-        case ("POST", "search" :: "bm25" :: Nil)       => postBm25(ex)
-        case ("POST", "search" :: "fuzzy" :: Nil)      => postFuzzy(ex)
-        case ("POST", "search" :: "fuzzy" :: "join" :: Nil) =>
-          postFuzzyJoin(ex)
-        case ("POST", "indexes" :: "fuzzy" :: Nil)     => postFuzzyBuild(ex)
-        case ("POST", "indexes" :: "fuzzy" :: "sync" :: Nil) =>
-          postFuzzySync(ex)
-        case ("POST", "indexes" :: "fuzzy" :: "compact" :: Nil) =>
-          postFuzzyCompact(ex)
-        case ("POST", "search" :: "phrase" :: Nil)     => postPhrase(ex)
-        case ("POST", "sketch" :: "set-ops" :: Nil)    => postKmvSetOps(ex)
-        case ("POST", "events" :: "anomalies" :: Nil)  => postAnomalies(ex)
-        case ("POST", "events" :: "resample" :: Nil)   => postResample(ex)
-        case ("POST", "events" :: "asof" :: Nil)       => postAsof(ex)
-        case ("POST", "sketch" :: "distinct" :: Nil)   => postKmvDistinct(ex)
-        case ("POST", "sketch" :: "heavy-hitters" :: Nil) => postHeavyHitters(ex)
-        case ("POST", "sketch" :: "quantiles" :: Nil)  => postQuantiles(ex)
-        case ("POST", "streams" :: "text-sync" :: Nil) =>
-          postTextSyncStream(ex)
-        case ("GET", "streams" :: Nil)                 => getStreams(ex)
-        case ("DELETE", "streams" :: id :: Nil)        => deleteStream(ex, id)
-        case ("POST", "indexes" :: "stats" :: Nil)     => postIndexStats(ex)
-        case ("POST", "indexes" :: "compact" :: Nil)   => postIndexCompact(ex)
-        case ("POST", "indexes" :: "repair" :: Nil)    => postIndexRepair(ex)
-        case _ => send(ex, 404,
-          s"""{"error":${jstr(s"no route: $method $path")}}""")
+    val segs = path.split("/").toList.filter(_.nonEmpty)
+    // Left: an Arrow frame to stream; Right: (status, JSON body)
+    val out: Either[DataFrame, (Int, String)] =
+      try {
+        val body = readBody(ex)
+        routes.iterator.flatMap(r => r.bind(method, segs).map(r -> _))
+          .nextOption() match {
+          case None => Right(404 -> errorJson(s"no route: $method $path"))
+          case Some((route, pathParams)) =>
+            val req = new Req(mapper.readTree(body),
+              queryParams(ex.getRequestURI.getRawQuery), pathParams)
+            route.handler(req) match {
+              case Json(json, status) => Right(status -> json)
+              case Rows(df, extraFields) => Right(200 -> rowsJson(df, extraFields))
+              case Arrow(df) =>
+                // analysis + planning BEFORE committing to a 200: bad
+                // table / column / filter errors still get a clean status
+                df.queryExecution.executedPlan
+                Left(df)
+            }
+        }
+      } catch {
+        case NonFatal(e) => Right(statusOf(e) ->
+          errorJson(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
-    } catch {
-      case NonFatal(e) =>
-        send(ex, 400, mapper.writeValueAsString(
-          Map("error" -> s"${e.getClass.getSimpleName}: ${e.getMessage}").asJava))
+    out.fold(streamArrow(ex, _), { case (status, json) => send(ex, status, json) })
+  }
+
+  /** The request body, at most [[maxRequestBytes]]: one byte more is
+    * read, so an over-long body is refused (413) with or without a
+    * Content-Length, and never held whole. */
+  private def readBody(ex: HttpExchange): Array[Byte] = {
+    val bytes = ex.getRequestBody.readNBytes(maxRequestBytes + 1)
+    if (bytes.length > maxRequestBytes) throw new BodyTooLarge(maxRequestBytes)
+    bytes
+  }
+
+  /** The status of a failure: the first exception on its cause chain
+    * with a known meaning ([[GraftServer.knownStatus]]) decides; any
+    * other failure is the server's fault (500). */
+  private def statusOf(e: Throwable): Int = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[Throwable, java.lang.Boolean])
+    Iterator.iterate(e)(_.getCause).takeWhile(t => t != null && seen.add(t))
+      .flatMap(knownStatus).nextOption().getOrElse(500)
+  }
+
+  /** Rows as a JSON array via Spark's own row→JSON encoder (handles
+    * nested arrays/structs/timestamps); bounded by [[maxResponseRows]].
+    * `extraFields` is a pre-rendered `"k":v,` run (trailing comma, or
+    * empty) placed before `rows` — the advised-serving marker's hook.
+    * Frees any localCheckpoint backing the frame (curate/dedup/graph
+    * results carry one; the release walks the whole plan, so a frame
+    * built on a checkpointed one frees that too) — a long-lived server
+    * otherwise pins one per request until GC. In a FINALLY so the error
+    * path (bad plan in collect) releases too: those are exactly the
+    * requests a long-lived server accumulates. No route shares
+    * checkpointed frames across requests (every handler builds its
+    * frame from stored tables), so the blocks are provably unread. */
+  private def rowsJson(df: DataFrame, extraFields: String): String =
+    try df.limit(maxResponseRows).toJSON.collect()
+      .mkString(s"""{$extraFields"rows":[""", ",", "]}")
+    finally GraftShims.releaseCheckpoint(df)
+
+  /** The [[Arrow]] reply: chunked, batch-bounded memory. A RUNTIME
+    * failure mid-stream can't be turned into an error status any more
+    * (headers are sent) — close the truncated stream so the client's
+    * Arrow reader fails fast, and log it. */
+  private def streamArrow(ex: HttpExchange, df: DataFrame): Unit = {
+    ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.arrow.stream")
+    ex.sendResponseHeaders(200, 0) // 0 = chunked: length unknown up front
+    val out = ex.getResponseBody
+    try GraftShims.writeArrowStream(df, out, 4096)
+    catch {
+      case NonFatal(e) => System.err.println(
+        s"[graft-server] arrow export of ${ex.getRequestURI.getPath} failed mid-stream: $e")
     }
+    finally out.close()
+  }
+
+  private def send(ex: HttpExchange, code: Int, json: String): Unit = {
+    val bytes = json.getBytes(StandardCharsets.UTF_8)
+    ex.getResponseHeaders.set("Content-Type", "application/json")
+    ex.sendResponseHeaders(code, bytes.length)
+    val os = ex.getResponseBody
+    try os.write(bytes) finally os.close()
+  }
+
+  private def queryParams(rawQuery: String): Map[String, String] =
+    Option(rawQuery).fold(Map.empty[String, String]) { q =>
+      q.split("&").toSeq.flatMap { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) =>
+            Some(k -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8))
+          case _ => None
+        }
+      }.toMap
+    }
+
+  /** JSON string literal (quoted + escaped) — hand-built response bodies
+    * must never interpolate raw user input. */
+  private def jstr(v: String): String = mapper.writeValueAsString(v)
+
+  private def errorJson(message: String): String = s"""{"error":${jstr(message)}}"""
+
+  private def notFound(message: String): Reply = Json(errorJson(message), 404)
+
+  private def listJson(key: String, names: Seq[String]): Reply =
+    Json(s"""{"$key":[${names.map(jstr).mkString(",")}]}""")
+
+  /** One request's inputs behind typed readers: the JSON body (parsed on
+    * the first field read), the query params and the route's path
+    * params. A reader refuses a wrong JSON type with a 400 naming the
+    * field rather than coercing it (Jackson's `asInt()` reads `"two"` as
+    * 0 and `2.9` as 2); a JSON `null` reads as absent. */
+  private final class Req(json: => JsonNode, params: Map[String, String],
+      pathParams: Map[String, String]) {
+    private lazy val node = json
+
+    private def field(f: String): Option[JsonNode] =
+      Option(node.get(f)).filterNot(_.isNull)
+    private def get[T](f: String, kind: Kind[T]): Option[T] = field(f).map { n =>
+      if (kind.accepts(n)) kind.read(n)
+      else throw new IllegalArgumentException(s"field '$f' must be ${kind.name}, got $n")
+    }
+    private def need[T](f: String, kind: Kind[T]): T = get(f, kind).getOrElse(
+      throw new IllegalArgumentException(s"missing required field '$f'"))
+
+    def has(f: String): Boolean = field(f).isDefined
+    def str(f: String): String = need(f, Text)
+    def strOpt(f: String): Option[String] = get(f, Text)
+    def str(f: String, default: String): String = strOpt(f).getOrElse(default)
+    def int(f: String): Int = need(f, IntKind)
+    def intOpt(f: String): Option[Int] = get(f, IntKind)
+    def int(f: String, default: Int): Int = intOpt(f).getOrElse(default)
+    def long(f: String): Long = need(f, LongKind)
+    def longOpt(f: String): Option[Long] = get(f, LongKind)
+    def long(f: String, default: Long): Long = longOpt(f).getOrElse(default)
+    def double(f: String): Double = need(f, Num)
+    def doubleOpt(f: String): Option[Double] = get(f, Num)
+    def double(f: String, default: Double): Double = doubleOpt(f).getOrElse(default)
+    def bool(f: String, default: Boolean): Boolean = get(f, Bool).getOrElse(default)
+    def strs(f: String): Seq[String] = need(f, Strs)
+    def strsOpt(f: String): Option[Seq[String]] = get(f, Strs)
+    def doubles(f: String): Seq[Double] = need(f, Nums)
+    def vectors(f: String): Seq[Seq[Double]] = need(f, Vectors)
+    def doubleMap(f: String): Map[String, Double] = need(f, NumMap)
+    def longMap(f: String): Map[String, Long] = need(f, LongMap)
+    def obj(f: String): Option[Req] = get(f, Obj).map(sub)
+    def objs(f: String): Seq[Req] = need(f, Objs).map(sub)
+    /** The objects of array `f`, each as its JSON text. */
+    def jsonRows(f: String): Seq[String] = need(f, Objs).map(_.toString)
+    private def sub(n: JsonNode) = new Req(n, Map.empty, Map.empty)
+
+    /** The stored table named by field `f`. */
+    def table(f: String): DataFrame = engine.readTable(Seq(str(f)))
+
+    /** An integer, or "advised" (→ [[Engine.Advised]]); any other value
+      * refuses loudly — a typo'd string must not read as 0. */
+    def count(f: String): Option[Int] = field(f).map { n =>
+      if (n.isTextual && n.asText() == "advised") Engine.Advised
+      else if (IntKind.accepts(n)) n.asInt()
+      else throw new IllegalArgumentException(
+        s"""$f must be an integer or "advised", got ${n.toString}""")
+    }
+
+    def path(name: String): String = pathParams(name)
+    def paramOpt(k: String): Option[String] = params.get(k)
+    def param(k: String): String = params.getOrElse(k,
+      throw new IllegalArgumentException(s"missing required param '$k'"))
   }
 
   // ——— handlers ———
 
   /** do_put analogue: JSON rows + explicit schema DDL, ingested through
-    * the normal table-creation path (shape enforcement included). */
-  private def putTable(ex: HttpExchange, name: String): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val ddl = require(body, "schema").asText()
-    val rows = require(body, "rows")
+    * the normal table-creation path (shape enforcement included). Body:
+    * schema (DDL), rows (array of objects). */
+  private def putTable(r: Req): Reply = {
+    val name = r.path("name")
+    val ddl = r.str("schema")
+    val rows = r.jsonRows("rows")
     val spark = engine.spark
     import spark.implicits._
-    val ds = spark.createDataset(rows.elements().asScala.map(_.toString).toSeq)
+    val ds = spark.createDataset(rows)
     // FAILFAST: a malformed row 400s the request instead of being
     // swallowed as nulls (the reference's typed do_put rejects at the wire)
     val df = spark.read.schema(ddl).option("mode", "FAILFAST").json(ds)
     engine.makeTable(name, df)
-    ok(ex, s"""{"table":${jstr(name)},"rows":${engine.readTable(Seq(name)).count()}}""")
+    Json(s"""{"table":${jstr(name)},"rows":${engine.readTable(Seq(name)).count()}}""")
   }
 
+  /** A stored table with the scan query params applied: `select`
+    * (comma-separated columns) and `filter` (SQL predicate). */
+  private def scan(r: Req): DataFrame =
+    engine.readTable(Seq(r.path("name")),
+      r.paramOpt("select").map(_.split(",").toSeq), r.paramOpt("filter").map(expr))
+
   /** do_get scan analogue: select / filter / limit as query params. */
-  private def getTable(ex: HttpExchange, name: String): Unit = {
-    val params = queryParams(ex)
-    val select = params.get("select").map(_.split(",").toSeq)
-    val filter = params.get("filter").map(expr)
-    val limit = params.get("limit").map(_.toInt).getOrElse(maxResponseRows)
-    val df = engine.readTable(Seq(name), select, filter)
-    okRows(ex, df.limit(math.min(limit, maxResponseRows)))
+  private def getTable(r: Req): Reply = {
+    val limit = r.paramOpt("limit").map(_.toInt).getOrElse(maxResponseRows)
+    Rows(scan(r).limit(math.min(limit, maxResponseRows)))
   }
 
   /** Table as an Arrow IPC stream over the wire — the reference's native
@@ -260,61 +424,39 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * Chunked response, batch-bounded memory; select/filter/limit as in
     * the JSON scan route, but no row cap by default (export is the
     * whole-table migration verb). */
-  private def getTableArrow(ex: HttpExchange, name: String): Unit = {
-    val params = queryParams(ex)
-    val select = params.get("select").map(_.split(",").toSeq)
-    val filter = params.get("filter").map(expr)
-    val base = engine.readTable(Seq(name), select, filter)
-    val df = params.get("limit").map(n => base.limit(n.toInt)).getOrElse(base)
-    // force analysis + planning BEFORE committing to a 200: bad table /
-    // column / filter errors surface as a clean 400 from handle()
-    df.queryExecution.executedPlan
-    ex.getResponseHeaders.set("Content-Type", "application/vnd.apache.arrow.stream")
-    ex.sendResponseHeaders(200, 0) // 0 = chunked: length unknown up front
-    val out = ex.getResponseBody
-    // a RUNTIME failure mid-stream can't be turned into an error status
-    // any more (headers are sent) — close the truncated stream so the
-    // client's Arrow reader fails fast, and swallow here so handle()
-    // doesn't attempt a second sendResponseHeaders on this exchange
-    try org.apache.spark.sql.GraftShims.writeArrowStream(df, out, 4096)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft-server] arrow export of '$name' failed mid-stream: $e")
-    }
-    finally out.close()
+  private def getTableArrow(r: Req): Reply = {
+    val base = scan(r)
+    Arrow(r.paramOpt("limit").fold(base)(n => base.limit(n.toInt)))
   }
 
   /** make-coder + sync-index in one verb (the reference's make-index
     * flow, `flight.py:205-233`). Config fields mirror [[CoderConfig]]. */
-  private def postIndex(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val name = require(body, "name").asText()
-    val source = require(body, "source").asText()
-    val column = require(body, "column").asText()
-    val base = CoderConfig(metric = require(body, "metric").asText())
+  private def postIndex(r: Req): Reply = {
+    val name = r.str("name")
+    val source = r.str("source")
+    val column = r.str("column")
+    val base = CoderConfig(metric = r.str("metric"))
     val cfg = base.copy(
-      codebookSize = intOr(body, "codebookSize", base.codebookSize),
-      numCodebooks = intOr(body, "numCodebooks", base.numCodebooks),
-      batchSize = intOr(body, "batchSize", base.batchSize),
-      numEpochs = intOr(body, "numEpochs", base.numEpochs))
+      codebookSize = r.int("codebookSize", base.codebookSize),
+      numCodebooks = r.int("numCodebooks", base.numCodebooks),
+      batchSize = r.int("batchSize", base.batchSize),
+      numEpochs = r.int("numEpochs", base.numEpochs))
     engine.makeIndex(name, source, column, cfg)
     // optional PQ sidecar index: {"pq": {"numSubspaces": 8, "codebookSize": 16,
     // "residual": true}} — residual=false explicitly opts into the flat variant
-    opt(body, "pq").foreach { pq =>
+    r.obj("pq").foreach { pq =>
       val pqBase = graft.coder.PQ.PQConfig(metric = cfg.metric)
       engine.makePqIndex(name, source, column, pqBase.copy(
-        numSubspaces = intOr(pq, "numSubspaces", pqBase.numSubspaces),
-        codebookSize = intOr(pq, "codebookSize", pqBase.codebookSize),
-        sampleSize = intOr(pq, "sampleSize", pqBase.sampleSize)),
-        residual = opt(pq, "residual").forall(_.asBoolean(true)))
+        numSubspaces = pq.int("numSubspaces", pqBase.numSubspaces),
+        codebookSize = pq.int("codebookSize", pqBase.codebookSize),
+        sampleSize = pq.int("sampleSize", pqBase.sampleSize)),
+        residual = pq.bool("residual", true))
     }
     // optional SQ8 sidecar index: {"sq": true}
-    if (opt(body, "sq").exists(_.asBoolean(false)))
-      engine.makeSqIndex(name, source, column)
+    if (r.bool("sq", false)) engine.makeSqIndex(name, source, column)
     // optional BQ (1-bit) sidecar index: {"bq": true}
-    if (opt(body, "bq").exists(_.asBoolean(false)))
-      engine.makeBqIndex(name, source, column)
-    ok(ex, s"""{"index":${jstr(name)}}""")
+    if (r.bool("bq", false)) engine.makeBqIndex(name, source, column)
+    Json(s"""{"index":${jstr(name)}}""")
   }
 
   /** Probe-count advisor ([[graft.api.Engine.adviseProbes]]): body =
@@ -323,30 +465,25 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * calibration verb, not a serving verb: the POST measures AND
     * persists (the advisor's own scaladoc demands "run once and
     * persist"), the GET below serves the cached answer many times. */
-  private def postAdviseProbes(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val p = engine.adviseProbes(
-      require(body, "coding").asText(),
-      require(body, "source").asText(),
-      require(body, "column").asText(),
-      require(body, "idCol").asText(),
-      k = intOr(body, "k", 10),
-      targetRecall = opt(body, "targetRecall").map(_.asDouble()).getOrElse(0.95),
-      sampleQueries = intOr(body, "sampleQueries", 32))
-    ok(ex, adviceJson(p, cached = false))
+  private def postAdviseProbes(r: Req): Reply = {
+    val p = engine.adviseProbes(r.str("coding"), r.str("source"),
+      r.str("column"), r.str("idCol"),
+      k = r.int("k", 10),
+      targetRecall = r.double("targetRecall", 0.95),
+      sampleQueries = r.int("sampleQueries", 32))
+    Json(probeAdviceJson(p, cached = false))
   }
 
   /** Serves the PERSISTED advice for a coding — no measurement pass.
     * 404 when never advised; 409 (loudly, naming the re-measure route)
     * when the source corpus changed since the advice was measured. */
-  private def getAdviseProbes(ex: HttpExchange, coding: String): Unit =
-    try ok(ex, adviceJson(engine.freshProbeAdvice(coding), cached = true))
-    catch {
-      case e: NoSuchElementException =>
-        send(ex, 404, s"""{"error":${jstr(e.getMessage)}}""")
-      case e: IllegalStateException =>
-        send(ex, 409, s"""{"error":${jstr(e.getMessage)}}""")
-    }
+  private def getAdviseProbes(r: Req): Reply = {
+    val coding = r.path("coding")
+    if (engine.loadProbeAdvice(coding).isEmpty)
+      notFound(s"no persisted probe advice for coding '$coding' — run " +
+        "adviseProbes (or POST /api/advise/probes) first")
+    else Json(probeAdviceJson(engine.freshProbeAdvice(coding), cached = true))
+  }
 
   /** Candidate-budget advisor for the reranked tiers — measures AND
     * persists per (coding, tier, probes)
@@ -354,73 +491,70 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * advisor's expensive brute ground-truth pass, so the POST is the
     * run-once and the GET below the serve-many, exactly the probe-advice
     * wire contract). */
-  private def postAdviseCandidates(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val p = engine.adviseCandidates(
-      require(body, "coding").asText(),
-      require(body, "source").asText(),
-      require(body, "column").asText(),
-      require(body, "idCol").asText(),
-      tier = require(body, "tier").asText(),
-      probes = require(body, "probes").asInt(),
-      k = intOr(body, "k", 10),
-      targetRecall = opt(body, "targetRecall").map(_.asDouble()).getOrElse(0.95),
-      sampleQueries = intOr(body, "sampleQueries", 32),
-      maxCandidates = intOr(body, "maxCandidates", 4096))
-    ok(ex, candidateAdviceJson(p, cached = false))
+  private def postAdviseCandidates(r: Req): Reply = {
+    val p = engine.adviseCandidates(r.str("coding"), r.str("source"),
+      r.str("column"), r.str("idCol"),
+      tier = r.str("tier"),
+      probes = r.int("probes"),
+      k = r.int("k", 10),
+      targetRecall = r.double("targetRecall", 0.95),
+      sampleQueries = r.int("sampleQueries", 32),
+      maxCandidates = r.int("maxCandidates", 4096))
+    Json(candidateAdviceJson(p, cached = false))
   }
 
   /** Serves the PERSISTED candidate advice for (coding, ?tier=, ?probes=)
     * — no measurement pass. 404 when never advised at this key; 409 when
     * the source corpus changed since the measurement (naming the
     * re-measure route) — mirrors [[getAdviseProbes]]. */
-  private def getAdviseCandidates(ex: HttpExchange, coding: String): Unit = {
-    val params = queryParams(ex)
-    val tier = params.getOrElse("tier", throw new IllegalArgumentException(
+  private def getAdviseCandidates(r: Req): Reply = {
+    val coding = r.path("coding")
+    val tier = r.paramOpt("tier").getOrElse(throw new IllegalArgumentException(
       "tier query param required (sq | bq | pq | rerank)"))
-    val probes = params.getOrElse("probes",
+    val probes = r.paramOpt("probes").getOrElse(
       throw new IllegalArgumentException("probes query param required")).toInt
-    try ok(ex, candidateAdviceJson(
+    if (engine.loadCandidateAdvice(coding, tier, probes).isEmpty)
+      notFound(s"no persisted candidate advice for (coding '$coding', tier " +
+        s"'$tier', probes $probes) — run adviseCandidates (or POST " +
+        "/api/advise/candidates) first")
+    else Json(candidateAdviceJson(
       engine.freshCandidateAdvice(coding, tier, probes), cached = true))
-    catch {
-      case e: NoSuchElementException =>
-        send(ex, 404, s"""{"error":${jstr(e.getMessage)}}""")
-      case e: IllegalStateException =>
-        send(ex, 409, s"""{"error":${jstr(e.getMessage)}}""")
-    }
   }
 
-  private def candidateAdviceJson(p: graft.api.Engine.PersistedCandidateAdvice,
+  private def probeAdviceJson(p: Engine.PersistedProbeAdvice,
       cached: Boolean): String = {
     val a = p.advice
-    val curve = a.curve
-      .map { case (c, r) => s"""{"candidates":$c,"recall":$r}""" }
-      .mkString(",")
-    s"""{"tier":${jstr(a.tier)},"probes":${a.probes},""" +
+    adviceJson(s""""probes":${a.probes},"recall":${a.recall},""" +
+      s""""numCells":${a.numCells},"curve":[${curveJson("probes", a.curve)}],""",
+      p.source, p.column, p.idCol, p.k, p.targetRecall, p.sampleQueries,
+      tail = "", p.sourceStamp, cached)
+  }
+
+  private def candidateAdviceJson(p: Engine.PersistedCandidateAdvice,
+      cached: Boolean): String = {
+    val a = p.advice
+    adviceJson(s""""tier":${jstr(a.tier)},"probes":${a.probes},""" +
       s""""candidates":${a.candidates},"recall":${a.recall},""" +
-      s""""reachedTarget":${a.reachedTarget},"curve":[$curve],""" +
-      s""""source":${jstr(p.source)},"column":${jstr(p.column)},""" +
-      s""""idCol":${jstr(p.idCol)},"k":${p.k},""" +
-      s""""targetRecall":${p.targetRecall},""" +
-      s""""sampleQueries":${p.sampleQueries},""" +
-      s""""maxCandidates":${p.maxCandidates},""" +
-      s""""sourceStamp":${jstr(p.sourceStamp)},"cached":$cached}"""
+      s""""reachedTarget":${a.reachedTarget},""" +
+      s""""curve":[${curveJson("candidates", a.curve)}],""",
+      p.source, p.column, p.idCol, p.k, p.targetRecall, p.sampleQueries,
+      tail = s""""maxCandidates":${p.maxCandidates},""", p.sourceStamp, cached)
   }
 
-  private def adviceJson(p: graft.api.Engine.PersistedProbeAdvice,
-      cached: Boolean): String = {
-    val a = p.advice
-    val curve = a.curve
-      .map { case (pr, r) => s"""{"probes":$pr,"recall":$r}""" }
+  /** The fields both persisted advice kinds share, between the kind's
+    * own leading `head` run and its `tail` run before the stamp (each a
+    * `"k":v,` run with a trailing comma). */
+  private def adviceJson(head: String, source: String, column: String,
+      idCol: String, k: Int, targetRecall: Double, sampleQueries: Int,
+      tail: String, sourceStamp: String, cached: Boolean): String =
+    s"""{$head"source":${jstr(source)},"column":${jstr(column)},""" +
+      s""""idCol":${jstr(idCol)},"k":$k,"targetRecall":$targetRecall,""" +
+      s""""sampleQueries":$sampleQueries,$tail""" +
+      s""""sourceStamp":${jstr(sourceStamp)},"cached":$cached}"""
+
+  private def curveJson(knob: String, curve: Seq[(Int, Double)]): String =
+    curve.map { case (x, recall) => s"""{"$knob":$x,"recall":$recall}""" }
       .mkString(",")
-    s"""{"probes":${a.probes},"recall":${a.recall},""" +
-      s""""numCells":${a.numCells},"curve":[$curve],""" +
-      s""""source":${jstr(p.source)},"column":${jstr(p.column)},""" +
-      s""""idCol":${jstr(p.idCol)},"k":${p.k},""" +
-      s""""targetRecall":${p.targetRecall},""" +
-      s""""sampleQueries":${p.sampleQueries},""" +
-      s""""sourceStamp":${jstr(p.sourceStamp)},"cached":$cached}"""
-  }
 
   /** The fields both search forms share, parsed once: sources, column,
     * metric, coding, k (capped at [[maxResponseRows]]), tieBreak, the
@@ -431,23 +565,20 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * call, so the response can carry the serving-visibility marker
     * ([[marker]]): a caller must always be able to tell exact from
     * advised. */
-  private final class SearchRequest(val body: JsonNode) {
-    val sources: Seq[String] =
-      require(body, "sources").elements().asScala.map(_.asText()).toSeq
-    val column: String = require(body, "column").asText()
-    val metric: Option[String] = opt(body, "metric").map(_.asText())
-    val coding: Option[String] = opt(body, "coding").map(_.asText())
-    val k: Int = math.min(intOr(body, "k", 10), maxResponseRows)
-    val tieBreak: Seq[String] = opt(body, "tieBreak")
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
+  private final class SearchRequest(r: Req) {
+    val sources: Seq[String] = r.strs("sources")
+    val column: String = r.str("column")
+    val metric: Option[String] = r.strOpt("metric")
+    val coding: Option[String] = r.strOpt("coding")
+    val k: Int = math.min(r.int("k", 10), maxResponseRows)
+    val tieBreak: Seq[String] = r.strsOpt("tieBreak").getOrElse(Nil)
     // "sq": true routes to the IVF+SQ8 index (d-byte quantized coarse
     // pass), "bq": true to the IVF+BQ index (1-bit coarse pass)
     val quantizedTier: Option[String] =
-      if (flag("sq")) Some("sq") else if (flag("bq")) Some("bq") else None
+      if (r.bool("sq", false)) Some("sq") else if (r.bool("bq", false)) Some("bq") else None
     private var advisedProbes, advisedCandidates: Option[Int] = None
 
-    def flag(name: String): Boolean = opt(body, name).exists(_.asBoolean(false))
-    def idCol: String = require(body, "idCol").asText()
+    def idCol: String = r.str("idCol")
 
     private def advisedSource(knob: String): String = {
       if (sources.size != 1) throw new IllegalArgumentException(
@@ -456,16 +587,7 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
       sources.head
     }
 
-    /** An integer, or "advised" (→ [[Engine.Advised]]); any other
-      * non-integer refuses loudly — Jackson's asInt() would otherwise
-      * silently read a typo'd string as 0. */
-    private def count(knob: String, n: JsonNode): Int =
-      if (n.isTextual && n.asText() == "advised") Engine.Advised
-      else if (n.isIntegralNumber) n.asInt()
-      else throw new IllegalArgumentException(
-        s"""$knob must be an integer or "advised", got ${n.toString}""")
-
-    val probes: Option[Int] = opt(body, "probes").map(count("probes", _)).map {
+    val probes: Option[Int] = r.count("probes").map {
       case Engine.Advised =>
         val c = coding.getOrElse(throw new IllegalArgumentException(
           """"probes":"advised" needs a coding"""))
@@ -476,16 +598,17 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
       case p => p
     }
 
-    /** `candidates` for (`coding`, `tier`): the advised form serves the
-      * persisted (coding, tier, probes) budget. */
-    def candidates(n: JsonNode, coding: String, tier: String, probes: => Int): Int =
-      count("candidates", n) match {
+    /** `candidates` for (`coding`, `tier`), required: the advised form
+      * serves the persisted (coding, tier, probes) budget. */
+    def candidates(coding: String, tier: String, probes: => Int): Int =
+      r.count("candidates").getOrElse(throw new IllegalArgumentException(
+        s"$tier search requires \"candidates\"")) match {
         case Engine.Advised =>
-          val r = engine.resolveAdvisedCandidates(coding, tier, probes,
+          val n = engine.resolveAdvisedCandidates(coding, tier, probes,
             advisedSource("candidates"), column, k, metric)
-          advisedCandidates = Some(r)
-          r
-        case c => c
+          advisedCandidates = Some(n)
+          n
+        case n => n
       }
 
     /** The `sq`/`bq` route's (tier, coding, probes, candidates) — each
@@ -496,8 +619,7 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
         new IllegalArgumentException(s"$tier search requires \"$f\"")
       val c = coding.getOrElse(throw missing("coding"))
       val p = probes.getOrElse(throw missing("probes"))
-      val n = opt(body, "candidates").getOrElse(throw missing("candidates"))
-      (tier, c, p, candidates(n, c, tier, p))
+      (tier, c, p, candidates(c, tier, p))
     }
 
     /** The serving-visibility marker: which knobs the persisted advice
@@ -514,55 +636,49 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * decision table as [[Engine.search]] / `flight.py:242-288`. A
     * `targets` array of vectors instead of `target` selects the BATCH
     * form ([[postSearchBatch]]). */
-  private def postSearch(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    if (opt(body, "targets").isDefined) {
-      postSearchBatch(ex, body)
-      return
-    }
-    val r = new SearchRequest(body)
-    val target: TargetVector =
-      require(body, "target").elements().asScala.map(_.asDouble()).toArray[Double]
-    val filter = opt(body, "filter").map(n => expr(n.asText()))
-    val select = opt(body, "select").map(_.elements().asScala.map(_.asText()).toSeq)
+  private def postSearch(r: Req): Reply = {
+    if (r.has("targets")) return postSearchBatch(r)
+    val s = new SearchRequest(r)
+    val target: TargetVector = r.doubles("target").toArray[Double]
+    val filter = r.strOpt("filter").map(expr)
+    val select = r.strsOpt("select")
     // "prefixDim": N routes to the index-free Matryoshka prefix search
     // (optional "prefixCol" selects a materialized prefix column)
-    opt(body, "prefixDim").foreach { pd =>
-      val cand = opt(body, "candidates").getOrElse(throw new IllegalArgumentException(
-        "matryoshka search requires \"candidates\"")).asInt()
-      okRows(ex, graft.api.Search.matryoshkaSearch(
-        engine.readTable(r.sources), r.column, target, pd.asInt(), cand,
-        r.idCol, r.k, r.metric.getOrElse("l2"),
-        opt(body, "prefixCol").map(_.asText()), filter, select, r.tieBreak))
-      return
+    if (r.has("prefixDim")) {
+      val cand = r.intOpt("candidates").getOrElse(throw new IllegalArgumentException(
+        "matryoshka search requires \"candidates\""))
+      return Rows(graft.api.Search.matryoshkaSearch(
+        engine.readTable(s.sources), s.column, target, r.int("prefixDim"), cand,
+        s.idCol, s.k, s.metric.getOrElse("l2"), r.strOpt("prefixCol"), filter,
+        select, s.tieBreak))
     }
     // candidates + idCol selects the IVF+PQ path (one index per source;
     // multi-source unions the per-source exact-reranked top-k);
     // "rerank": true instead routes to the two-stage retrieve-rerank over
     // the plain IVF index (id-only coarse pass, no PQ codes needed)
-    val df = (r.quantized, opt(body, "candidates"), r.coding, r.probes) match {
+    val df = (s.quantized, r.has("candidates"), s.coding, s.probes) match {
       case (Some(("sq", c, p, cand)), _, _, _) =>
-        engine.searchSqMulti(r.sources, r.column, target, c, p, cand, r.idCol,
-          r.k, r.metric, filter, select, r.tieBreak)
+        engine.searchSqMulti(s.sources, s.column, target, c, p, cand, s.idCol,
+          s.k, s.metric, filter, select, s.tieBreak)
       case (Some((_, c, p, cand)), _, _, _) =>
-        engine.searchBqMulti(r.sources, r.column, target, c, p, cand, r.idCol,
-          r.k, r.metric, filter, select, r.tieBreak)
-      case (_, Some(n), Some(c), _) if r.flag("rerank") =>
-        engine.searchRerankMulti(r.sources, r.column, target, c,
-          r.candidates(n, c, "rerank", r.probes.getOrElse(
+        engine.searchBqMulti(s.sources, s.column, target, c, p, cand, s.idCol,
+          s.k, s.metric, filter, select, s.tieBreak)
+      case (_, true, Some(c), _) if r.bool("rerank", false) =>
+        engine.searchRerankMulti(s.sources, s.column, target, c,
+          s.candidates(c, "rerank", s.probes.getOrElse(
             throw new IllegalArgumentException(
               """"candidates":"advised" rerank search needs explicit """ +
                 "\"probes\" (advice is keyed per (coding, tier, probes))"))),
-          r.idCol, r.k, r.probes, r.metric, filter, select, r.tieBreak)
-      case (_, Some(n), Some(c), Some(p)) =>
-        engine.searchPqMulti(r.sources, r.column, target, c, p,
-          r.candidates(n, c, "pq", p), r.idCol, r.k, r.metric, filter, select,
-          r.tieBreak)
+          s.idCol, s.k, s.probes, s.metric, filter, select, s.tieBreak)
+      case (_, true, Some(c), Some(p)) =>
+        engine.searchPqMulti(s.sources, s.column, target, c, p,
+          s.candidates(c, "pq", p), s.idCol, s.k, s.metric, filter, select,
+          s.tieBreak)
       case _ =>
-        engine.searchMulti(r.sources, r.column, target, r.metric, r.coding,
-          r.probes, r.k, filter, select, r.tieBreak)
+        engine.searchMulti(s.sources, s.column, target, s.metric, s.coding,
+          s.probes, s.k, filter, select, s.tieBreak)
     }
-    okRows(ex, df, r.marker)
+    Rows(df, s.marker)
   }
 
   /** Batch-targets search: `targets: [[...], ...]` maps onto the capped
@@ -575,131 +691,103 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * probes → IVF join, otherwise the brute join (explicit metric
     * required). Indexed tiers take exactly one source (per-source joins
     * don't union here — issue per-source requests for multi-source). */
-  private def postSearchBatch(ex: HttpExchange, body: JsonNode): Unit = {
-    val targets: Seq[Seq[Double]] = require(body, "targets").elements().asScala
-      .map(_.elements().asScala.map(_.asDouble()).toSeq).toSeq
+  private def postSearchBatch(r: Req): Reply = {
+    val targets = r.vectors("targets")
     if (targets.isEmpty)
       throw new IllegalArgumentException("targets must be a non-empty array of vectors")
-    val r = new SearchRequest(body)
+    val s = new SearchRequest(r)
     import engine.spark.implicits._
     val queries = targets.zipWithIndex
       .map { case (t, i) => (i.toLong, t) }.toDF("query_id", "__QV__")
     def oneSource(tier: String): String = {
-      if (r.sources.size != 1) throw new IllegalArgumentException(
-        s"$tier batch search takes exactly one source, got ${r.sources.size}")
-      r.sources.head
+      if (s.sources.size != 1) throw new IllegalArgumentException(
+        s"$tier batch search takes exactly one source, got ${s.sources.size}")
+      s.sources.head
     }
-    val df = (r.quantized, r.coding, r.probes) match {
+    val df = (s.quantized, s.coding, s.probes) match {
       case (Some(("sq", c, p, cand)), _, _) =>
-        engine.knnJoinSq(c, oneSource("sq"), r.column, queries, "query_id",
-          "__QV__", r.k, p, cand, r.idCol, r.metric, r.tieBreak)
+        engine.knnJoinSq(c, oneSource("sq"), s.column, queries, "query_id",
+          "__QV__", s.k, p, cand, s.idCol, s.metric, s.tieBreak)
       case (Some((tier, c, p, cand)), _, _) =>
-        engine.knnJoinBq(c, oneSource(tier), r.column, queries, "query_id",
-          "__QV__", r.k, p, cand, r.idCol, r.metric, r.tieBreak)
+        engine.knnJoinBq(c, oneSource(tier), s.column, queries, "query_id",
+          "__QV__", s.k, p, cand, s.idCol, s.metric, s.tieBreak)
       case (_, Some(c), Some(p)) =>
-        engine.knnJoinIvf(c, oneSource("ivf"), r.column, queries,
-          "query_id", "__QV__", r.k, p, r.idCol, r.metric, r.tieBreak)
+        engine.knnJoinIvf(c, oneSource("ivf"), s.column, queries,
+          "query_id", "__QV__", s.k, p, s.idCol, s.metric, s.tieBreak)
       case _ =>
-        val m = r.metric.getOrElse(throw new IllegalArgumentException(
+        val m = s.metric.getOrElse(throw new IllegalArgumentException(
           "brute batch search requires \"metric\""))
-        graft.api.Search.knnJoin(engine.readTable(r.sources), r.column,
-          queries, "query_id", "__QV__", m, r.k, r.tieBreak,
-          idCol = opt(body, "idCol").map(_.asText()))
+        graft.api.Search.knnJoin(engine.readTable(s.sources), s.column,
+          queries, "query_id", "__QV__", m, s.k, s.tieBreak,
+          idCol = r.strOpt("idCol"))
     }
-    okRows(ex, df.drop("__QV__"), r.marker)
+    Rows(df.drop("__QV__"), s.marker)
   }
 
   /** Late-interaction MaxSim retrieval ([[Engine.maxsimSearch]]): body
     * carries the multi-vector query as an array of arrays; optional
     * `poolCol` + `coding` + `probes` + `idCol` select the indexed serving
     * path, `candidates` alone the pooled two-stage, neither the brute. */
-  private def postMaxsim(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val source = require(body, "source").asText()
-    val tokensCol = require(body, "tokensCol").asText()
-    val query: Seq[Seq[Double]] = require(body, "query").elements().asScala
-      .map(_.elements().asScala.map(_.asDouble()).toSeq).toSeq
-    val metric = require(body, "metric").asText()
-    val k = intOr(body, "k", 10)
-    val tieBreak = opt(body, "tieBreak")
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-    val df = engine.maxsimSearch(source, tokensCol, query, metric,
-      math.min(k, maxResponseRows),
-      candidates = intOr(body, "candidates", 0),
-      poolCol = opt(body, "poolCol").map(_.asText()),
-      coding = opt(body, "coding").map(_.asText()),
-      probes = opt(body, "probes").map(_.asInt()),
-      idCol = opt(body, "idCol").map(_.asText()),
-      tieBreak = tieBreak)
+  private def postMaxsim(r: Req): Reply = {
+    val df = engine.maxsimSearch(r.str("source"), r.str("tokensCol"),
+      r.vectors("query"), r.str("metric"),
+      math.min(r.int("k", 10), maxResponseRows),
+      candidates = r.int("candidates", 0),
+      poolCol = r.strOpt("poolCol"),
+      coding = r.strOpt("coding"),
+      probes = r.intOpt("probes"),
+      idCol = r.strOpt("idCol"),
+      tieBreak = r.strsOpt("tieBreak").getOrElse(Nil))
     // "select" trims the response (token matrices are heavy; distance is
     // always appended, same contract as the single-vector search)
-    val out = opt(body, "select")
-      .map(_.elements().asScala.map(_.asText()).toSeq)
-      .fold(df)(cols => df.select(
-        (cols :+ graft.api.Search.DistCol).distinct.map(org.apache.spark.sql.functions.col): _*))
-    okRows(ex, out)
+    Rows(r.strsOpt("select").fold(df)(cols =>
+      df.select((cols :+ graft.api.Search.DistCol).distinct.map(col): _*)))
   }
 
   /** Train + persist a PCA/whitening model ([[Engine.trainPca]]). */
-  private def postPca(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val name = require(body, "name").asText()
-    val model = engine.trainPca(name,
-      require(body, "source").asText(),
-      require(body, "column").asText(),
-      k = require(body, "k").asInt(),
-      whiten = opt(body, "whiten").exists(_.asBoolean(false)))
-    ok(ex, s"""{"model":${jstr(name)},"k":${model.k},"dim":${model.dim},""" +
+  private def postPca(r: Req): Reply = {
+    val name = r.str("name")
+    val model = engine.trainPca(name, r.str("source"), r.str("column"),
+      k = r.int("k"), whiten = r.bool("whiten", false))
+    Json(s"""{"model":${jstr(name)},"k":${model.k},"dim":${model.dim},""" +
       s""""whitened":${model.whitened}}""")
   }
 
   /** Project a stored table under a persisted PCA model
     * ([[Engine.projectPca]]); `select` trims the response. */
-  private def getPcaProject(ex: HttpExchange, model: String): Unit = {
-    val params = queryParams(ex)
-    def p(k: String): String = params.getOrElse(k,
-      throw new IllegalArgumentException(s"missing required param '$k'"))
-    val df = engine.projectPca(p("source"), p("column"), model)
-    val out = params.get("select")
+  private def getPcaProject(r: Req): Reply = {
+    val df = engine.projectPca(r.param("source"), r.param("column"), r.path("model"))
+    val out = r.paramOpt("select")
       .map(s => df.select((s.split(",").toSeq :+ "projection").distinct.map(col): _*))
       .getOrElse(df)
-    val limit = params.get("limit").map(_.toInt).getOrElse(maxResponseRows)
-    okRows(ex, out.limit(math.min(limit, maxResponseRows)))
+    val limit = r.paramOpt("limit").map(_.toInt).getOrElse(maxResponseRows)
+    Rows(out.limit(math.min(limit, maxResponseRows)))
   }
 
   /** Train + persist a BPE model from a stored table's text column
     * ([[Engine.trainBpe]]) — the tokenizer lifecycle over the wire. */
-  private def postBpe(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val name = require(body, "name").asText()
-    val model = engine.trainBpe(name,
-      require(body, "source").asText(),
-      require(body, "column").asText(),
-      numMerges = require(body, "numMerges").asInt(),
-      maxWords = intOr(body, "maxWords", 65536))
-    ok(ex, s"""{"model":${jstr(name)},"merges":${model.merges.length}}""")
+  private def postBpe(r: Req): Reply = {
+    val name = r.str("name")
+    val model = engine.trainBpe(name, r.str("source"), r.str("column"),
+      numMerges = r.int("numMerges"), maxWords = r.int("maxWords", 65536))
+    Json(s"""{"model":${jstr(name)},"merges":${model.merges.length}}""")
   }
 
   /** Per-row token counts under a persisted model ([[Engine.bpeTokenCounts]]). */
-  private def getBpeTokens(ex: HttpExchange, model: String): Unit = {
-    val params = queryParams(ex)
-    def p(k: String): String = params.getOrElse(k,
-      throw new IllegalArgumentException(s"missing required param '$k'"))
-    okRows(ex, engine.bpeTokenCounts(p("source"), p("idCol"), p("column"), model))
-  }
+  private def getBpeTokens(r: Req): Reply =
+    Rows(engine.bpeTokenCounts(r.param("source"), r.param("idCol"),
+      r.param("column"), r.path("model")))
 
   /** Per-cell index layout stats ([[Engine.indexStats]]) — the ops view
     * for fragmentation and cell skew — plus the tier's source-freshness
     * verdict ([[graft.index.Index.tierFresh]]). */
-  private def postIndexStats(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val coding = require(body, "coding").asText()
-    val source = require(body, "source").asText()
-    val column = require(body, "column").asText()
-    val tier = opt(body, "tier").map(_.asText()).getOrElse("ivf")
+  private def postIndexStats(r: Req): Reply = {
+    val coding = r.str("coding")
+    val source = r.str("source")
+    val column = r.str("column")
+    val tier = r.str("tier", "ivf")
     val stats = engine.indexStats(coding, source, column,
-      withRows = opt(body, "withRows").exists(_.asBoolean(false)),
-      tier = tier)
+      withRows = r.bool("withRows", false), tier = tier)
     val fresh = graft.index.Index.tierFresh(engine.store, coding, source,
       column, tier)
     val rows = stats.map { case (cell, files, bytes, rows) =>
@@ -709,77 +797,59 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     // alert on hot cells without re-deriving it from the cell list
     val skew = graft.index.Index.cellSkew(engine.store, coding, source,
       column, tier)
-    ok(ex, f"""{"fresh":$fresh,"skew_ratio":${skew.ratio}%.3f,""" +
+    Json(f"""{"fresh":$fresh,"skew_ratio":${skew.ratio}%.3f,""" +
       f""""max_share":${skew.maxShare}%.4f,"max_cell":${skew.maxCell},""" +
       s""""cells":[$rows]}""")
   }
 
   /** Cell-scoped repair after in-place source changes
     * ([[Engine.repairIndex]], any tier). */
-  private def postIndexRepair(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val s = engine.repairIndex(require(body, "coding").asText(),
-      require(body, "source").asText(), require(body, "column").asText(),
-      tier = opt(body, "tier").map(_.asText()).getOrElse("ivf"))
-    ok(ex, s"""{"filesChanged":${s.filesChanged},""" +
+  private def postIndexRepair(r: Req): Reply = {
+    val s = engine.repairIndex(r.str("coding"), r.str("source"),
+      r.str("column"), tier = r.str("tier", "ivf"))
+    Json(s"""{"filesChanged":${s.filesChanged},""" +
       s""""cellsRewritten":${s.cellsRewritten},"fullRebuild":${s.fullRebuild}}""")
   }
 
   /** Coalesce fragmented index cells ([[Engine.compactIndex]]). */
-  private def postIndexCompact(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val s = engine.compactIndex(require(body, "coding").asText(),
-      require(body, "source").asText(), require(body, "column").asText(),
-      maxFilesPerCell = intOr(body, "maxFilesPerCell", 8),
-      tier = opt(body, "tier").map(_.asText()).getOrElse("ivf"))
-    ok(ex, s"""{"cellsCompacted":${s.cellsCompacted},""" +
+  private def postIndexCompact(r: Req): Reply = {
+    val s = engine.compactIndex(r.str("coding"), r.str("source"),
+      r.str("column"), maxFilesPerCell = r.int("maxFilesPerCell", 8),
+      tier = r.str("tier", "ivf"))
+    Json(s"""{"cellsCompacted":${s.cellsCompacted},""" +
       s""""filesBefore":${s.filesBefore},"filesAfter":${s.filesAfter}}""")
   }
 
   /** Train + persist a bigram stupid-backoff LM ([[Engine.trainNgramLm]])
     * — the perplexity-filter model lifecycle over the wire. */
-  private def postNgram(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val name = require(body, "name").asText()
-    val model = engine.trainNgramLm(name,
-      require(body, "source").asText(),
-      require(body, "column").asText(),
-      vocabSize = intOr(body, "vocabSize", 4096),
-      minCount = intOr(body, "minCount", 1).toLong,
-      alpha = opt(body, "alpha").map(_.asDouble()).getOrElse(0.4),
-      order = intOr(body, "order", 2))
-    ok(ex, s"""{"model":${jstr(name)},"vocab":${model.vocab.length},""" +
+  private def postNgram(r: Req): Reply = {
+    val name = r.str("name")
+    val model = engine.trainNgramLm(name, r.str("source"), r.str("column"),
+      vocabSize = r.int("vocabSize", 4096),
+      minCount = r.int("minCount", 1).toLong,
+      alpha = r.double("alpha", 0.4),
+      order = r.int("order", 2))
+    Json(s"""{"model":${jstr(name)},"vocab":${model.vocab.length},""" +
       s""""bigrams":${model.bigrams.size}}""")
   }
 
   /** Per-document perplexity under a persisted LM ([[Engine.perplexity]]). */
-  private def getPerplexity(ex: HttpExchange, model: String): Unit = {
-    val params = queryParams(ex)
-    def p(k: String): String = params.getOrElse(k,
-      throw new IllegalArgumentException(s"missing required param '$k'"))
-    okRows(ex, engine.perplexity(p("source"), p("idCol"), p("column"), model))
-  }
+  private def getPerplexity(r: Req): Reply =
+    Rows(engine.perplexity(r.param("source"), r.param("idCol"),
+      r.param("column"), r.path("model")))
 
   /** Duplicated k-token span occurrences
     * ([[graft.ext.Dedup.duplicatedSpans]]). */
-  private def postDedupSpans(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    okRows(ex, graft.ext.Dedup.duplicatedSpans(df,
-      require(body, "idCol").asText(), require(body, "column").asText(),
-      k = intOr(body, "k", 50),
-      minOccurrences = intOr(body, "minOccurrences", 2)))
-  }
+  private def postDedupSpans(r: Req): Reply =
+    Rows(graft.ext.Dedup.duplicatedSpans(r.table("source"),
+      r.str("idCol"), r.str("column"),
+      k = r.int("k", 50), minOccurrences = r.int("minOccurrences", 2)))
 
   /** Exact substring dedup rewrite
     * ([[graft.ext.Dedup.stripDuplicatedSpans]]). */
-  private def postDedupStrip(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    okRows(ex, graft.ext.Dedup.stripDuplicatedSpans(df,
-      require(body, "idCol").asText(), require(body, "column").asText(),
-      k = intOr(body, "k", 50)))
-  }
+  private def postDedupStrip(r: Req): Reply =
+    Rows(graft.ext.Dedup.stripDuplicatedSpans(r.table("source"),
+      r.str("idCol"), r.str("column"), k = r.int("k", 50)))
 
   /** Edit-distance near-dup pairs — PassJoin pigeonhole blocking by
     * default ([[graft.ext.Dedup.editDistancePairsBlocked]]); `blocked:
@@ -790,69 +860,58 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * rows, id_a = source id, id_b = corpus id). `prefixLen` optionally
     * truncates the compared text first (long documents rarely want
     * full-text character distance). */
-  private def postEditDistance(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val src = engine.readTable(Seq(require(body, "source").asText()))
-    val idCol = require(body, "idCol").asText()
-    val column = require(body, "column").asText()
-    val k = intOr(body, "maxDist", 2)
-    def trunc(df: DataFrame, id: String, c: String): DataFrame =
-      opt(body, "prefixLen").map(_.asInt()) match {
-        case Some(n) => df.select(col(id), substring(col(c), 1, n).as(c))
-        case None => df
-      }
-    val df = trunc(src, idCol, column)
-    okRows(ex, opt(body, "corpus") match {
-      case Some(corpusName) =>
-        val refIdCol = require(body, "refIdCol").asText()
-        val refColumn = require(body, "refColumn").asText()
-        val corpus = trunc(
-          engine.readTable(Seq(corpusName.asText())), refIdCol, refColumn)
-        graft.ext.Dedup.editDistanceJoin(
-          df, idCol, column, corpus, refIdCol, refColumn, k)
-      case None =>
-        if (opt(body, "blocked").forall(_.asBoolean(true)))
-          graft.ext.Dedup.editDistancePairsBlocked(df, idCol, column, k)
-        else graft.ext.Dedup.editDistancePairsExact(df, idCol, column, k)
-    })
+  private def postEditDistance(r: Req): Reply = {
+    val k = r.int("maxDist", 2)
+    fuzzyPairs(r,
+      graft.ext.Dedup.editDistanceJoin(_, _, _, _, _, _, k),
+      graft.ext.Dedup.editDistancePairsBlocked(_, _, _, k),
+      graft.ext.Dedup.editDistancePairsExact(_, _, _, k))
   }
 
   /** Jaro-Winkler near-dup pairs / cross-table join — the fuzzy-NAME
     * mirror of [[postEditDistance]]: `corpus` present → blocked
     * [[graft.ext.Dedup.jaroWinklerJoin]]; absent → blocked pairs
     * (`blocked: false` opts into the guarded exact all-pairs). */
-  private def postJaro(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val src = engine.readTable(Seq(require(body, "source").asText()))
-    val idCol = require(body, "idCol").asText()
-    val column = require(body, "column").asText()
-    val minSim = opt(body, "minSim").map(_.asDouble()).getOrElse(0.9)
+  private def postJaro(r: Req): Reply = {
+    val minSim = r.double("minSim", 0.9)
+    fuzzyPairs(r,
+      graft.ext.Dedup.jaroWinklerJoin(_, _, _, _, _, _, minSim),
+      graft.ext.Dedup.jaroWinklerPairsBlocked(_, _, _, minSim),
+      graft.ext.Dedup.jaroWinklerPairsExact(_, _, _, minSim))
+  }
+
+  /** The body both fuzzy pair routes share: source (idCol, column),
+    * optional `prefixLen` truncation of the compared text on both sides,
+    * then `corpus` (refIdCol, refColumn) → the cross-table `join`, else
+    * the `blocked` pairs (or, with `blocked: false`, the `exact` ones). */
+  private def fuzzyPairs(r: Req,
+      join: (DataFrame, String, String, DataFrame, String, String) => DataFrame,
+      blocked: (DataFrame, String, String) => DataFrame,
+      exact: (DataFrame, String, String) => DataFrame): Reply = {
+    val src = r.table("source")
+    val idCol = r.str("idCol")
+    val column = r.str("column")
+    val prefixLen = r.intOpt("prefixLen")
     def trunc(df: DataFrame, id: String, c: String): DataFrame =
-      opt(body, "prefixLen").map(_.asInt()) match {
-        case Some(n) => df.select(col(id), substring(col(c), 1, n).as(c))
-        case None => df
-      }
+      prefixLen.fold(df)(n => df.select(col(id), substring(col(c), 1, n).as(c)))
     val df = trunc(src, idCol, column)
-    okRows(ex, opt(body, "corpus") match {
-      case Some(corpusName) =>
-        val refIdCol = require(body, "refIdCol").asText()
-        val refColumn = require(body, "refColumn").asText()
-        val corpus = trunc(
-          engine.readTable(Seq(corpusName.asText())), refIdCol, refColumn)
-        graft.ext.Dedup.jaroWinklerJoin(
-          df, idCol, column, corpus, refIdCol, refColumn, minSim)
+    Rows(r.strOpt("corpus") match {
+      case Some(corpus) =>
+        val refIdCol = r.str("refIdCol")
+        val refColumn = r.str("refColumn")
+        join(df, idCol, column,
+          trunc(engine.readTable(Seq(corpus)), refIdCol, refColumn),
+          refIdCol, refColumn)
       case None =>
-        if (opt(body, "blocked").forall(_.asBoolean(true)))
-          graft.ext.Dedup.jaroWinklerPairsBlocked(df, idCol, column, minSim)
-        else graft.ext.Dedup.jaroWinklerPairsExact(df, idCol, column, minSim)
+        (if (r.bool("blocked", true)) blocked else exact)(df, idCol, column)
     })
   }
 
   /** `durable: true` without a configured checkpoint dir defaults it to
     * `<store root>/checkpoints` — on a cluster the store root is shared
     * storage, which is exactly where durable checkpoints belong. */
-  private def durableFlag(body: JsonNode): Boolean = {
-    val durable = opt(body, "durable").exists(_.asBoolean(false))
+  private def durableFlag(r: Req): Boolean = {
+    val durable = r.bool("durable", false)
     val sc = engine.spark.sparkContext
     if (durable && sc.getCheckpointDir.isEmpty)
       sc.setCheckpointDir(s"${engine.store.root}/checkpoints")
@@ -866,34 +925,32 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * seeds), and durable (default false) to checkpoint each iteration
     * to the cluster checkpoint dir instead of executor-local storage
     * (executor-loss-safe on a real cluster). */
-  private def postPageRank(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val edges = engine.readTable(Seq(require(body, "source").asText()))
-    val srcCol = require(body, "srcCol").asText()
-    val dstCol = require(body, "dstCol").asText()
-    val iters = intOr(body, "iterations", 5)
-    val durable = durableFlag(body)
-    val ranks = (opt(body, "seeds"), opt(body, "weightCol")) match {
+  private def postPageRank(r: Req): Reply = {
+    val edges = r.table("source")
+    val srcCol = r.str("srcCol")
+    val dstCol = r.str("dstCol")
+    val iters = r.int("iterations", 5)
+    val topK = r.int("topK", 100)
+    val durable = durableFlag(r)
+    val ranks = (r.strOpt("seeds"), r.strOpt("weightCol")) match {
       case (Some(_), Some(_)) =>
         throw new IllegalArgumentException(
           "seeds and weightCol are mutually exclusive")
       case (Some(seedTable), None) =>
         graft.ext.Graph.pageRankSeeded(edges, srcCol, dstCol,
-          engine.readTable(Seq(seedTable.asText())),
-          require(body, "seedCol").asText(), iters,
+          engine.readTable(Seq(seedTable)), r.str("seedCol"), iters,
           durableCheckpoint = durable)
       case (None, Some(w)) =>
         graft.ext.Graph.pageRankWeighted(edges, srcCol, dstCol,
-          w.asText(), iters, durableCheckpoint = durable)
+          w, iters, durableCheckpoint = durable)
       case (None, None) =>
         graft.ext.Graph.pageRank(edges, srcCol, dstCol, iters,
           durableCheckpoint = durable)
     }
-    // okRows collects before returning, so the result's final checkpoint
-    // can be freed — without this a long-lived server pins one
-    // checkpointed rank frame per request until GC
-    try okRows(ex, graft.ext.Graph.topRanked(ranks, intOr(body, "topK", 100)))
-    finally graft.ext.Graph.release(ranks)
+    // the Rows render releases the whole plan's checkpoints once it has
+    // collected, the rank frame's final one included — without that a
+    // long-lived server pins one checkpointed rank frame per request
+    Rows(graft.ext.Graph.topRanked(ranks, topK))
   }
 
   /** Connected components over an edge table
@@ -901,110 +958,81 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * O(log n) rounds, loud on non-convergence). Body: source, srcCol,
     * dstCol, optional maxIter (default 50) and durable (see
     * [[postPageRank]]). */
-  private def postComponents(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val cc = graft.ext.Graph.connectedComponents(
-      engine.readTable(Seq(require(body, "source").asText())),
-      require(body, "srcCol").asText(), require(body, "dstCol").asText(),
-      intOr(body, "maxIter", 50),
-      durableCheckpoint = durableFlag(body))
-    // collected by okRows ⇒ the final star-edge checkpoint can be freed
-    try okRows(ex, cc) finally graft.ext.Graph.release(cc)
-  }
+  private def postComponents(r: Req): Reply =
+    // released by the Rows render once collected, the final star-edge
+    // checkpoint included
+    Rows(graft.ext.Graph.connectedComponents(r.table("source"),
+      r.str("srcCol"), r.str("dstCol"), r.int("maxIter", 50),
+      durableCheckpoint = durableFlag(r)))
 
   /** Build the lexical (BM25) inverted index of a stored table
     * ([[graft.api.Engine.buildLexicalIndex]]). Body: source, idCol,
     * textCol, optional buckets (default 64). */
-  private def postLexicalBuild(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    engine.buildLexicalIndex(require(body, "source").asText(),
-      require(body, "idCol").asText(), require(body, "textCol").asText(),
-      intOr(body, "buckets", 64), boolOr(body, "positional", false))
-    ok(ex, """{"status":"built"}""")
+  private def postLexicalBuild(r: Req): Reply = {
+    engine.buildLexicalIndex(r.str("source"), r.str("idCol"),
+      r.str("textCol"), r.int("buckets", 64), r.bool("positional", false))
+    Json("""{"status":"built"}""")
   }
 
   /** Coalesce fragmented posting buckets after incremental syncs
     * ([[graft.api.Engine.compactLexicalIndex]]). Body: source, textCol,
     * optional maxFilesPerBucket (default 8). */
-  private def postLexicalCompact(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val (b, l) = engine.compactLexicalIndex(require(body, "source").asText(),
-      require(body, "textCol").asText(), intOr(body, "maxFilesPerBucket", 8))
-    ok(ex, s"""{"bucketsCompacted":$b,"doclensFilesCompacted":$l}""")
+  private def postLexicalCompact(r: Req): Reply = {
+    val (b, l) = engine.compactLexicalIndex(r.str("source"),
+      r.str("textCol"), r.int("maxFilesPerBucket", 8))
+    Json(s"""{"bucketsCompacted":$b,"doclensFilesCompacted":$l}""")
   }
 
   /** Incremental lexical-index sync — appends postings for documents
     * not yet indexed ([[graft.api.Engine.syncLexicalIndex]]). Body:
     * source, idCol, textCol. Responds with the indexed-doc count. */
-  private def postLexicalSync(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val n = engine.syncLexicalIndex(require(body, "source").asText(),
-      require(body, "idCol").asText(), require(body, "textCol").asText())
-    ok(ex, s"""{"indexed":$n}""")
+  private def postLexicalSync(r: Req): Reply = {
+    val n = engine.syncLexicalIndex(r.str("source"), r.str("idCol"),
+      r.str("textCol"))
+    Json(s"""{"indexed":$n}""")
   }
 
   /** Top-k BM25 keyword search through the materialized inverted index
     * ([[graft.api.Engine.searchBm25]] — touches only the query terms'
     * posting buckets). Body: source, textCol, terms, optional k. */
-  private def postBm25(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, engine.searchBm25(require(body, "source").asText(),
-      require(body, "textCol").asText(),
-      require(body, "terms").elements().asScala.map(_.asText()).toSeq,
-      intOr(body, "k", 10), boolOr(body, "requireAll", false)))
-  }
+  private def postBm25(r: Req): Reply =
+    Rows(engine.searchBm25(r.str("source"), r.str("textCol"),
+      r.strs("terms"), r.int("k", 10), r.bool("requireAll", false)))
 
   /** Top-k exact-phrase search through the positional index
     * ([[graft.api.Engine.searchPhrase]]). Body: source, textCol,
     * phrase (term array), optional k. */
-  private def postPhrase(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, engine.searchPhrase(require(body, "source").asText(),
-      require(body, "textCol").asText(),
-      require(body, "phrase").elements().asScala.map(_.asText()).toSeq,
-      intOr(body, "k", 10)))
-  }
+  private def postPhrase(r: Req): Reply =
+    Rows(engine.searchPhrase(r.str("source"), r.str("textCol"),
+      r.strs("phrase"), r.int("k", 10)))
 
   /** Exact triangle count over an edge table
     * ([[graft.ext.Graph.triangleCount]]: degree-ordered orientation,
     * O(m^1.5) wedges under any skew). Body: source, srcCol, dstCol,
     * optional durable. */
-  private def postTriangles(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, graft.ext.Graph.triangleCount(
-      engine.readTable(Seq(require(body, "source").asText())),
-      require(body, "srcCol").asText(), require(body, "dstCol").asText(),
-      durableCheckpoint = durableFlag(body)))
-  }
+  private def postTriangles(r: Req): Reply =
+    Rows(graft.ext.Graph.triangleCount(r.table("source"),
+      r.str("srcCol"), r.str("dstCol"), durableCheckpoint = durableFlag(r)))
 
   /** KMV set algebra — union/Jaccard/intersection key-cardinality
     * estimates across two tables ([[graft.ext.Sketches.kmvSetOps]]:
     * the join-size planner). Body: sourceA, columnA, sourceB, columnB,
     * optional k (default 256). */
-  private def postKmvSetOps(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, graft.ext.Sketches.kmvSetOps(
-      engine.readTable(Seq(require(body, "sourceA").asText())),
-      require(body, "columnA").asText(),
-      engine.readTable(Seq(require(body, "sourceB").asText())),
-      require(body, "columnB").asText(), intOr(body, "k", 256)))
-  }
+  private def postKmvSetOps(r: Req): Reply =
+    Rows(graft.ext.Sketches.kmvSetOps(r.table("sourceA"), r.str("columnA"),
+      r.table("sourceB"), r.str("columnB"), r.int("k", 256)))
 
   /** Rolling three-sigma anomaly flags
     * ([[graft.ext.Temporal.rollingAnomalies]]: exact cross-multiplied
     * z-score over the trailing per-key window). Body: source, keyCol,
     * tsCol, idCol, valueCol, optional window/minN/t/scale. */
-  private def postAnomalies(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, graft.ext.Temporal.rollingAnomalies(
-      engine.readTable(Seq(require(body, "source").asText())),
-      require(body, "keyCol").asText(), require(body, "tsCol").asText(),
-      require(body, "idCol").asText(), require(body, "valueCol").asText(),
-      window = intOr(body, "window", 20),
-      minN = opt(body, "minN").map(_.asLong()).getOrElse(10L),
-      t = intOr(body, "t", 3),
-      scale = opt(body, "scale").map(_.asDouble()).getOrElse(1000.0)))
-  }
+  private def postAnomalies(r: Req): Reply =
+    Rows(graft.ext.Temporal.rollingAnomalies(r.table("source"),
+      r.str("keyCol"), r.str("tsCol"), r.str("idCol"), r.str("valueCol"),
+      window = r.int("window", 20),
+      minN = r.long("minN", 10L),
+      t = r.int("t", 3),
+      scale = r.double("scale", 1000.0)))
 
   /** Fixed-grid resampling ([[graft.ext.Temporal.resampleLocf]] /
     * `resampleLinear`). Body: source, keyCol, tsCol (epoch seconds),
@@ -1017,23 +1045,21 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * way — without the collapse, duplicate timestamps would make the
     * bracketing pair, and hence the interpolated value, partition-
     * order-dependent). */
-  private def postResample(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    val mode = opt(body, "mode").map(_.asText()).getOrElse("locf")
-    // NB: `require(node, field)` above shadows Predef.require
-    Predef.require(Set("locf", "linear").contains(mode),
+  private def postResample(r: Req): Reply = {
+    val df = r.table("source")
+    val mode = r.str("mode", "locf")
+    require(Set("locf", "linear").contains(mode),
       s"mode must be locf | linear, got '$mode'")
-    val keyCol = require(body, "keyCol").asText()
-    val tsCol = require(body, "tsCol").asText()
-    val valueCol = require(body, "valueCol").asText()
-    val step = require(body, "stepSecs").asLong()
+    val keyCol = r.str("keyCol")
+    val tsCol = r.str("tsCol")
+    val valueCol = r.str("valueCol")
+    val step = r.long("stepSecs")
     val collapsed = df.groupBy(col(keyCol), col(tsCol))
-      .agg(opt(body, "tieBreakCol").map(_.asText()) match {
+      .agg(r.strOpt("tieBreakCol") match {
         case Some(tie) => max_by(col(valueCol), col(tie)).as(valueCol)
         case None      => max(col(valueCol)).as(valueCol)
       })
-    okRows(ex,
+    Rows(
       if (mode == "linear")
         graft.ext.Temporal.resampleLinear(collapsed, keyCol, tsCol, valueCol, step)
       else graft.ext.Temporal.resampleLocf(collapsed, keyCol, tsCol, valueCol, step))
@@ -1041,23 +1067,16 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
 
   /** KMV distinct-count estimate ([[graft.ext.Sketches.kmvDistinct]]).
     * Body: source, column, optional k (default 256). */
-  private def postKmvDistinct(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, graft.ext.Sketches.kmvDistinct(
-      engine.readTable(Seq(require(body, "source").asText())),
-      require(body, "column").asText(), intOr(body, "k", 256)))
-  }
+  private def postKmvDistinct(r: Req): Reply =
+    Rows(graft.ext.Sketches.kmvDistinct(r.table("source"), r.str("column"),
+      r.int("k", 256)))
 
   /** Exact heavy hitters via the CMS candidate pass
     * ([[graft.ext.Sketches.heavyHitters]]). Body: source, column,
     * minCount. */
-  private def postHeavyHitters(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, graft.ext.Sketches.heavyHitters(
-      engine.readTable(Seq(require(body, "source").asText())),
-      require(body, "column").asText(),
-      require(body, "minCount").asLong()))
-  }
+  private def postHeavyHitters(r: Req): Reply =
+    Rows(graft.ext.Sketches.heavyHitters(r.table("source"), r.str("column"),
+      r.long("minCount")))
 
   /** Grid-histogram quantiles
     * ([[graft.ext.Sketches.histogramQuantiles]]). Body: source, column,
@@ -1065,17 +1084,14 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * grid) or targetBins (auto-ranged: width derived from one min/max
     * pass, [[graft.ext.Sketches.histogramQuantilesAuto]]; defaults to
     * 500 when neither is given). */
-  private def postQuantiles(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val qsNode = require(body, "qs")
-    val qs = (0 until qsNode.size()).map(qsNode.get(_).asDouble())
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    val column = require(body, "column").asText()
-    okRows(ex, opt(body, "binWidth") match {
-      case Some(w) => graft.ext.Sketches.histogramQuantiles(
-        df, column, w.asDouble(), qs)
+  private def postQuantiles(r: Req): Reply = {
+    val qs = r.doubles("qs")
+    val df = r.table("source")
+    val column = r.str("column")
+    Rows(r.doubleOpt("binWidth") match {
+      case Some(w) => graft.ext.Sketches.histogramQuantiles(df, column, w, qs)
       case None => graft.ext.Sketches.histogramQuantilesAuto(
-        df, column, qs, intOr(body, "targetBins", 500))
+        df, column, qs, r.int("targetBins", 500))
     })
   }
 
@@ -1084,18 +1100,16 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * left, right, key, leftTs, rightTs, rightCols (array), optional
     * bucketSecs (> 0 selects the hot-key-parallel bucketed variant —
     * identical results, per-(key, bucket) windows). */
-  private def postAsof(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val left = engine.readTable(Seq(require(body, "left").asText()))
-    val right = engine.readTable(Seq(require(body, "right").asText()))
-    val key = require(body, "key").asText()
-    val leftTs = require(body, "leftTs").asText()
-    val rightTs = require(body, "rightTs").asText()
-    val colsNode = require(body, "rightCols")
-    val rightCols = (0 until colsNode.size()).map(colsNode.get(_).asText())
-    okRows(ex, opt(body, "bucketSecs") match {
+  private def postAsof(r: Req): Reply = {
+    val left = r.table("left")
+    val right = r.table("right")
+    val key = r.str("key")
+    val leftTs = r.str("leftTs")
+    val rightTs = r.str("rightTs")
+    val rightCols = r.strs("rightCols")
+    Rows(r.longOpt("bucketSecs") match {
       case Some(b) => graft.ext.Temporal.asofJoinBucketed(
-        left, right, key, leftTs, rightTs, rightCols, b.asLong())
+        left, right, key, leftTs, rightTs, rightCols, b)
       case None => graft.ext.Temporal.asofJoin(
         left, right, key, leftTs, rightTs, rightCols)
     })
@@ -1104,82 +1118,60 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
   /** Latest-wins merge of an updates table into a destination table
     * ([[graft.api.Engine.upsertTable]]). Body: dest, updates, keys
     * (array), versionCol, tieBreakCol. */
-  private def postUpsert(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val keysNode = require(body, "keys")
-    val keys = (0 until keysNode.size()).map(i => keysNode.get(i).asText())
-    val n = engine.upsertTable(require(body, "dest").asText(),
-      engine.readTable(Seq(require(body, "updates").asText())),
-      keys, require(body, "versionCol").asText(),
-      require(body, "tieBreakCol").asText())
-    ok(ex, s"""{"table":${jstr(require(body, "dest").asText())},"rows":$n}""")
+  private def postUpsert(r: Req): Reply = {
+    val keys = r.strs("keys")
+    val dest = r.str("dest")
+    val n = engine.upsertTable(dest, r.table("updates"), keys,
+      r.str("versionCol"), r.str("tieBreakCol"))
+    Json(s"""{"table":${jstr(dest)},"rows":$n}""")
   }
 
   /** Cross-document common segments ([[graft.ext.Dedup.commonSegments]]):
     * boilerplate lines appearing in ≥ minDocs distinct docs. */
-  private def postDedupSegments(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    okRows(ex, graft.ext.Dedup.commonSegments(df,
-      require(body, "idCol").asText(), require(body, "column").asText(),
-      sep = opt(body, "sep").map(_.asText()).getOrElse("\n"),
-      minDocs = intOr(body, "minDocs", 2)))
-  }
+  private def postDedupSegments(r: Req): Reply =
+    Rows(graft.ext.Dedup.commonSegments(r.table("source"),
+      r.str("idCol"), r.str("column"),
+      sep = r.str("sep", "\n"), minDocs = r.int("minDocs", 2)))
 
   /** Remove every occurrence of cross-document common segments
     * ([[graft.ext.Dedup.stripCommonSegments]]). */
-  private def postDedupStripSegments(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    okRows(ex, graft.ext.Dedup.stripCommonSegments(df,
-      require(body, "idCol").asText(), require(body, "column").asText(),
-      sep = opt(body, "sep").map(_.asText()).getOrElse("\n"),
-      minDocs = intOr(body, "minDocs", 2)))
-  }
+  private def postDedupStripSegments(r: Req): Reply =
+    Rows(graft.ext.Dedup.stripCommonSegments(r.table("source"),
+      r.str("idCol"), r.str("column"),
+      sep = r.str("sep", "\n"), minDocs = r.int("minDocs", 2)))
 
   /** Build the persisted fuzzy (edit-distance) lookup index
     * ([[graft.api.Engine.buildFuzzyIndex]]). */
-  private def postFuzzyBuild(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    engine.buildFuzzyIndex(require(body, "source").asText(),
-      require(body, "idCol").asText(), require(body, "column").asText(),
-      maxDist = intOr(body, "maxDist", 2),
-      buckets = intOr(body, "buckets", 64))
-    ok(ex, """{"built":true}""")
+  private def postFuzzyBuild(r: Req): Reply = {
+    engine.buildFuzzyIndex(r.str("source"), r.str("idCol"), r.str("column"),
+      maxDist = r.int("maxDist", 2), buckets = r.int("buckets", 64))
+    Json("""{"built":true}""")
   }
 
   /** Single-string fuzzy lookup through the persisted index
     * ([[graft.api.Engine.fuzzyLookup]] — bucket-pruned scans). */
-  private def postFuzzy(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, engine.fuzzyLookup(require(body, "source").asText(),
-      require(body, "column").asText(), require(body, "query").asText(),
-      allowStale = opt(body, "allowStale").exists(_.asBoolean())))
-  }
+  private def postFuzzy(r: Req): Reply =
+    Rows(engine.fuzzyLookup(r.str("source"), r.str("column"), r.str("query"),
+      allowStale = r.bool("allowStale", false)))
 
   /** BATCH edit-distance join of a stored query table against the
     * persisted fuzzy index ([[graft.api.Engine.fuzzyJoin]] — the corpus
     * frames and guard counts come from the artifact). */
-  private def postFuzzyJoin(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val left = engine.readTable(Seq(require(body, "left").asText()))
-    okRows(ex, engine.fuzzyJoin(require(body, "source").asText(),
-      require(body, "column").asText(), left,
-      require(body, "leftIdCol").asText(),
-      require(body, "leftColumn").asText(),
-      maxCandidates = opt(body, "maxCandidates").map(_.asLong())
-        .getOrElse(50000000L),
-      allowStale = opt(body, "allowStale").exists(_.asBoolean())))
+  private def postFuzzyJoin(r: Req): Reply = {
+    val left = r.table("left")
+    Rows(engine.fuzzyJoin(r.str("source"), r.str("column"), left,
+      r.str("leftIdCol"), r.str("leftColumn"),
+      maxCandidates = r.long("maxCandidates", 50000000L),
+      allowStale = r.bool("allowStale", false)))
   }
 
   /** Incremental fuzzy-index sync ([[graft.api.Engine.syncFuzzyIndex]]);
     * returns rows appended and the post-sync freshness. */
-  private def postFuzzySync(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val source = require(body, "source").asText()
-    val column = require(body, "column").asText()
+  private def postFuzzySync(r: Req): Reply = {
+    val source = r.str("source")
+    val column = r.str("column")
     val n = engine.syncFuzzyIndex(source, column)
-    ok(ex, s"""{"appended":$n,"fresh":${engine.fuzzyIndexIsFresh(source, column)}}""")
+    Json(s"""{"appended":$n,"fresh":${engine.fuzzyIndexIsFresh(source, column)}}""")
   }
 
   /** Start the TEXT-tier self-maintenance stream
@@ -1192,66 +1184,62 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * maxFilesPerBucket (default 8), checkpoint (default under the
     * engine root). Returns the stream id for GET /api/streams and
     * DELETE /api/streams/{id}. */
-  private def postTextSyncStream(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val source = require(body, "source").asText()
-    val textCol = require(body, "column").asText()
-    val tier = opt(body, "tier").map(_.asText()).getOrElse("fuzzy")
-    val checkpoint = opt(body, "checkpoint").map(_.asText()).getOrElse(
+  private def postTextSyncStream(r: Req): Reply = {
+    val source = r.str("source")
+    val textCol = r.str("column")
+    val tier = r.str("tier", "fuzzy")
+    val checkpoint = r.str("checkpoint",
       s"${engine.root}/streams/${source}_${textCol}_$tier")
     val q = graft.streaming.Streams.textIndexSyncStream(engine, source,
-      require(body, "idCol").asText(), textCol, checkpoint, tier,
-      compactEveryBatches = intOr(body, "compactEveryBatches", 0),
-      maxFilesPerBucket = intOr(body, "maxFilesPerBucket", 8))
+      r.str("idCol"), textCol, checkpoint, tier,
+      compactEveryBatches = r.int("compactEveryBatches", 0),
+      maxFilesPerBucket = r.int("maxFilesPerBucket", 8))
     opsStreams.put(q.id.toString, q)
-    ok(ex, s"""{"id":${jstr(q.id.toString)},"tier":${jstr(tier)},"active":true}""")
+    Json(s"""{"id":${jstr(q.id.toString)},"tier":${jstr(tier)},"active":true}""")
   }
 
   /** Active ops streams (id + liveness). A stream that died on its own
     * (source dropped, artifact error) shows active: false until a
     * DELETE reaps it. */
-  private def getStreams(ex: HttpExchange): Unit = {
+  private def getStreams(r: Req): Reply = {
     val items = opsStreams.asScala.toSeq.sortBy(_._1).map { case (id, q) =>
       s"""{"id":${jstr(id)},"active":${q.isActive}}"""
     }
-    ok(ex, s"""{"streams":[${items.mkString(",")}]}""")
+    Json(s"""{"streams":[${items.mkString(",")}]}""")
   }
 
-  /** Stop + deregister an ops stream. */
-  private def deleteStream(ex: HttpExchange, id: String): Unit = {
-    val q = opsStreams.remove(id)
-    if (q == null)
-      send(ex, 404, s"""{"error":${jstr(s"no stream: $id")}}""")
-    else {
-      q.stop()
-      ok(ex, s"""{"stopped":${jstr(id)}}""")
+  /** Stop + deregister an ops stream; 404 for an unknown id. */
+  private def deleteStream(r: Req): Reply = {
+    val id = r.path("id")
+    Option(opsStreams.remove(id)) match {
+      case None => notFound(s"no stream: $id")
+      case Some(q) =>
+        q.stop()
+        Json(s"""{"stopped":${jstr(id)}}""")
     }
   }
 
   /** Fuzzy-index bucket compaction ([[graft.api.Engine.compactFuzzyIndex]]). */
-  private def postFuzzyCompact(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val (buckets, flats) = engine.compactFuzzyIndex(
-      require(body, "source").asText(), require(body, "column").asText(),
-      maxFilesPerBucket = intOr(body, "maxFilesPerBucket", 8))
-    ok(ex, s"""{"bucketsCompacted":$buckets,"flatsCompacted":$flats}""")
+  private def postFuzzyCompact(r: Req): Reply = {
+    val (buckets, flats) = engine.compactFuzzyIndex(r.str("source"),
+      r.str("column"), maxFilesPerBucket = r.int("maxFilesPerBucket", 8))
+    Json(s"""{"bucketsCompacted":$buckets,"flatsCompacted":$flats}""")
   }
 
   /** Incoming-vs-corpus near-dup gate
     * ([[graft.streaming.Streams.nearDupAgainstCorpus]] on its batch
     * path): which docs of `source` near-duplicate a doc of `corpus`. */
-  private def postDedupGate(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val arrivals = engine.readTable(Seq(require(body, "source").asText()))
-    val corpus = engine.readTable(Seq(require(body, "corpus").asText()))
-    okRows(ex, graft.streaming.Streams.nearDupAgainstCorpus(
-      arrivals, require(body, "idCol").asText(), require(body, "column").asText(),
-      corpus, require(body, "refIdCol").asText(), require(body, "refColumn").asText(),
-      shingleSize = intOr(body, "shingleSize", 3),
-      numHashes = intOr(body, "numHashes", 32),
-      bands = intOr(body, "bands", 8),
-      threshold = opt(body, "threshold").map(_.asDouble()).getOrElse(0.5),
-      maxRefBucket = opt(body, "maxRefBucket").map(_.asLong()).getOrElse(8192L)))
+  private def postDedupGate(r: Req): Reply = {
+    val arrivals = r.table("source")
+    val corpus = r.table("corpus")
+    Rows(graft.streaming.Streams.nearDupAgainstCorpus(
+      arrivals, r.str("idCol"), r.str("column"),
+      corpus, r.str("refIdCol"), r.str("refColumn"),
+      shingleSize = r.int("shingleSize", 3),
+      numHashes = r.int("numHashes", 32),
+      bands = r.int("bands", 8),
+      threshold = r.double("threshold", 0.5),
+      maxRefBucket = r.long("maxRefBucket", 8192L)))
   }
 
   /** Semantic (embedding) dup gate — the SemDeDup ingest step's batch
@@ -1260,161 +1248,132 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * corpus vector through the trained IVF index, flagged within
     * `maxDist`. Same decision a streaming deployment makes per
     * micro-batch. */
-  private def postSemanticGate(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val arrivals = engine.readTable(Seq(require(body, "source").asText()))
-    var out: org.apache.spark.sql.DataFrame = null
+  private def postSemanticGate(r: Req): Reply = {
+    val arrivals = r.table("source")
+    val flagged = scala.collection.mutable.ListBuffer.empty[DataFrame]
     graft.streaming.Streams.semanticDupGateForEachBatch(
-      engine.store,
-      require(body, "coding").asText(),
-      require(body, "corpus").asText(),
-      require(body, "column").asText(),
-      require(body, "idCol").asText(),
-      require(body, "vecCol").asText(),
-      maxDist = require(body, "maxDist").asDouble(),
-      probes = require(body, "probes").asInt(),
-      corpusIdCol = require(body, "corpusIdCol").asText(),
-      metric = opt(body, "metric").map(_.asText()),
-      sink = df => out = df)(arrivals, 0L)
+      engine.store, r.str("coding"), r.str("corpus"), r.str("column"),
+      r.str("idCol"), r.str("vecCol"),
+      maxDist = r.double("maxDist"),
+      probes = r.int("probes"),
+      corpusIdCol = r.str("corpusIdCol"),
+      metric = r.strOpt("metric"),
+      sink = flagged += _)(arrivals, 0L)
     // empty arrivals: the gate body skips the sink (nothing to flag)
-    if (out == null) ok(ex, """{"rows":[]}""") else okRows(ex, out)
+    flagged.headOption.fold[Reply](Json("""{"rows":[]}"""))(Rows(_))
   }
 
   /** Benchmark decontamination of a stored corpus against a stored
     * benchmark table ([[graft.streaming.Streams.decontaminateGate]] on
     * its batch path). */
-  private def postDecontaminate(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val corpus = engine.readTable(Seq(require(body, "source").asText()))
-    val bench = engine.readTable(Seq(require(body, "bench").asText()))
-    okRows(ex, graft.streaming.Streams.decontaminateGate(
-      corpus, require(body, "idCol").asText(), require(body, "column").asText(),
-      bench, require(body, "benchIdCol").asText(), require(body, "benchColumn").asText(),
-      n = intOr(body, "n", 2),
-      threshold = opt(body, "threshold").map(_.asDouble()).getOrElse(0.2)))
+  private def postDecontaminate(r: Req): Reply = {
+    val corpus = r.table("source")
+    val bench = r.table("bench")
+    Rows(graft.streaming.Streams.decontaminateGate(
+      corpus, r.str("idCol"), r.str("column"),
+      bench, r.str("benchIdCol"), r.str("benchColumn"),
+      n = r.int("n", 2), threshold = r.double("threshold", 0.2)))
   }
 
   /** Span-LEVEL decontamination ([[graft.ext.Dedup.stripContaminatedSpans]]
     * or, with `"report": true`, [[graft.ext.Dedup.contaminatedSpans]]):
     * strip exactly the leaked benchmark k-gram windows instead of
     * dropping whole documents. */
-  private def postDecontaminateSpans(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val corpus = engine.readTable(Seq(require(body, "source").asText()))
-    val bench = engine.readTable(Seq(require(body, "bench").asText()))
-    val idCol = require(body, "idCol").asText()
-    val column = require(body, "column").asText()
-    val benchIdCol = require(body, "benchIdCol").asText()
-    val benchColumn = require(body, "benchColumn").asText()
-    val k = intOr(body, "k", 8)
-    okRows(ex,
-      if (opt(body, "report").exists(_.asBoolean()))
-        graft.ext.Dedup.contaminatedSpans(corpus, idCol, column,
-          bench, benchIdCol, benchColumn, k)
-      else
-        graft.ext.Dedup.stripContaminatedSpans(corpus, idCol, column,
-          bench, benchIdCol, benchColumn, k))
+  private def postDecontaminateSpans(r: Req): Reply = {
+    val corpus = r.table("source")
+    val bench = r.table("bench")
+    val spans =
+      if (r.bool("report", false)) graft.ext.Dedup.contaminatedSpans _
+      else graft.ext.Dedup.stripContaminatedSpans _
+    Rows(spans(corpus, r.str("idCol"), r.str("column"),
+      bench, r.str("benchIdCol"), r.str("benchColumn"), r.int("k", 8)))
   }
+
+  /** `target` projected onto the source's text column name (`textCol`),
+    * read from its own `targetTextCol` when given — the DSIR target
+    * frame of both the dsir and curate routes. Projected, not renamed:
+    * withColumnRenamed would leave a duplicate when the target table
+    * already has a column named textCol, and dsirTrain's reference to
+    * it would then be ambiguous. */
+  private def dsirTarget(target: String, textCol: String,
+      targetTextCol: Option[String]): DataFrame =
+    engine.readTable(Seq(target))
+      .select(col(targetTextCol.getOrElse(textCol)).as(textCol))
 
   /** The curation Config fields shared by the curate and curate-drops
     * routes — one parser so the two can never accept different knobs. */
-  private def curateCfg(body: JsonNode): graft.ext.Curate.Config = {
-    if (opt(body, "dsirKeepFraction").isDefined &&
-        opt(body, "dsirTarget").isEmpty)
+  private def curateCfg(r: Req): graft.ext.Curate.Config = {
+    if (r.has("dsirKeepFraction") && !r.has("dsirTarget"))
       throw new IllegalArgumentException(
         "dsirKeepFraction sizes the DSIR stage — it needs dsirTarget " +
           "(the table to train the importance model against)")
     graft.ext.Curate.Config(
-      jaccardThreshold =
-        opt(body, "jaccard").map(_.asDouble()).getOrElse(0.5),
-      contamThreshold =
-        opt(body, "contamThreshold").map(_.asDouble()).getOrElse(0.2),
-      minWords = intOr(body, "minWords", 50),
-      maxWords = intOr(body, "maxWords", 100000),
-      minStopwords = intOr(body, "minStopwords", 2),
-      dropUnknownLang =
-        opt(body, "dropUnknownLang").forall(_.asBoolean()),
+      jaccardThreshold = r.double("jaccard", 0.5),
+      contamThreshold = r.double("contamThreshold", 0.2),
+      minWords = r.int("minWords", 50),
+      maxWords = r.int("maxWords", 100000),
+      minStopwords = r.int("minStopwords", 2),
+      dropUnknownLang = r.bool("dropUnknownLang", true),
       // optional model tier: a persisted quality-model name + threshold
-      qualityModel = opt(body, "qualityModel")
-        .map(n => engine.store.loadQualityModel(n.asText())),
-      minQualityProb =
-        opt(body, "minQualityProb").map(_.asDouble()).getOrElse(0.5),
+      qualityModel = r.strOpt("qualityModel").map(engine.store.loadQualityModel),
+      minQualityProb = r.double("minQualityProb", 0.5),
       // optional bloom decontamination tier for oversized benchmarks
-      deconBloomFpp = opt(body, "deconBloomFpp").map(_.asDouble()),
+      deconBloomFpp = r.doubleOpt("deconBloomFpp"),
       // optional line-level boilerplate strip pre-stage
-      stripSegmentsMinDocs =
-        opt(body, "stripSegmentsMinDocs").map(_.asInt()),
-      stripSep = opt(body, "stripSep").map(_.asText()).getOrElse("\n"),
+      stripSegmentsMinDocs = r.intOpt("stripSegmentsMinDocs"),
+      stripSep = r.str("stripSep", "\n"),
       // surgical decontamination: strip leaked spans instead of
       // dropping the document
-      contamStripSpans =
-        opt(body, "contamStripSpans").exists(_.asBoolean()),
+      contamStripSpans = r.bool("contamStripSpans", false),
       // NFC + control/whitespace normalization before any hashing
-      normalizeUnicode =
-        opt(body, "normalizeUnicode").exists(_.asBoolean()),
+      normalizeUnicode = r.bool("normalizeUnicode", false),
       // PII output-scrub (emails/IPs/phones/Luhn cards) on survivors
-      redactOutputPii =
-        opt(body, "redactOutputPii").exists(_.asBoolean()),
+      redactOutputPii = r.bool("redactOutputPii", false),
       // optional DSIR resampling stage: train against a stored target
       // table ("what the data should look like"); pivot explicit
       // ("dsirPivot") or SIZED by kept mass ("dsirKeepFraction" — the
       // library derives the pivot from this corpus' weight histogram;
       // batch-only: the streaming gate refuses the fraction knob and
       // names the offline resolution, Curate.scala streaming gate)
-      dsir = opt(body, "dsirTarget").map { t =>
-        val textCol = require(body, "column").asText()
-        val df = engine.readTable(Seq(require(body, "source").asText()))
-        val targetRaw = engine.readTable(Seq(t.asText()))
-        val target = opt(body, "dsirTargetTextCol").map(_.asText()) match {
-          case Some(c) => targetRaw.select(
-            org.apache.spark.sql.functions.col(c).as(textCol))
-          case None => targetRaw.select(
-            org.apache.spark.sql.functions.col(textCol))
-        }
-        val model = graft.ext.Corpus.dsirTrain(target, df, textCol,
-          intOr(body, "dsirBuckets", 4096),
-          opt(body, "dsirSmoothing").map(_.asDouble()).getOrElse(1.0))
-        (model, opt(body, "dsirPivot").map(_.asDouble()).getOrElse(0.0))
+      dsir = r.strOpt("dsirTarget").map { t =>
+        val textCol = r.str("column")
+        val model = graft.ext.Corpus.dsirTrain(
+          dsirTarget(t, textCol, r.strOpt("dsirTargetTextCol")),
+          r.table("source"), textCol,
+          r.int("dsirBuckets", 4096), r.double("dsirSmoothing", 1.0))
+        (model, r.double("dsirPivot", 0.0))
       },
-      dsirKeepFraction =
-        opt(body, "dsirKeepFraction").map(_.asDouble()))
+      dsirKeepFraction = r.doubleOpt("dsirKeepFraction"))
   }
 
   /** Drop attribution ([[graft.ext.Curate.curateDrops]]): every dropped
     * doc + the first stage that dropped it — the "why was my document
     * removed" audit over the wire. Same knobs as /text/curate. */
-  private def postCurateDrops(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, graft.ext.Curate.curateDrops(
-      engine.readTable(Seq(require(body, "source").asText())),
-      require(body, "idCol").asText(), require(body, "column").asText(),
-      engine.readTable(Seq(require(body, "bench").asText())),
-      require(body, "benchIdCol").asText(),
-      require(body, "benchColumn").asText(),
-      curateCfg(body)))
-  }
+  private def postCurateDrops(r: Req): Reply =
+    Rows(graft.ext.Curate.curateDrops(r.table("source"),
+      r.str("idCol"), r.str("column"), r.table("bench"),
+      r.str("benchIdCol"), r.str("benchColumn"), curateCfg(r)))
 
   /** Full corpus-curation pipeline over stored tables
     * ([[graft.ext.Curate.curate]]). With `dest`, survivors are persisted
     * as a named table ([[graft.api.Engine.curateTable]]) and the row
     * count returned; without it the (response-capped) survivors come
     * back inline. */
-  private def postCurate(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val source = require(body, "source").asText()
-    val bench = require(body, "bench").asText()
-    val idCol = require(body, "idCol").asText()
-    val column = require(body, "column").asText()
-    val benchIdCol = require(body, "benchIdCol").asText()
-    val benchColumn = require(body, "benchColumn").asText()
-    val cfg = curateCfg(body)
-    opt(body, "dest") match {
-      case Some(d) =>
-        val n = engine.curateTable(source, d.asText(), bench,
+  private def postCurate(r: Req): Reply = {
+    val source = r.str("source")
+    val bench = r.str("bench")
+    val idCol = r.str("idCol")
+    val column = r.str("column")
+    val benchIdCol = r.str("benchIdCol")
+    val benchColumn = r.str("benchColumn")
+    val cfg = curateCfg(r)
+    r.strOpt("dest") match {
+      case Some(dest) =>
+        val n = engine.curateTable(source, dest, bench,
           idCol, column, benchIdCol, benchColumn, cfg)
-        ok(ex, s"""{"table":${jstr(d.asText())},"rows":$n}""")
+        Json(s"""{"table":${jstr(dest)},"rows":$n}""")
       case None =>
-        okRows(ex, graft.ext.Curate.curate(
+        Rows(graft.ext.Curate.curate(
           engine.readTable(Seq(source)), idCol, column,
           engine.readTable(Seq(bench)), benchIdCol, benchColumn, cfg))
     }
@@ -1425,30 +1384,19 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * ([[graft.ext.Corpus.mixtureSample]]), or `temperature` +
     * `domains` + `textCol` for token-mass share^τ resampling
     * ([[graft.ext.Corpus.temperatureMixture]]). */
-  private def postMixture(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    val keyCol = require(body, "keyCol").asText()
-    val domainCol = require(body, "domainCol").asText()
-    val salt = opt(body, "salt").map(_.asText()).getOrElse("")
-    opt(body, "temperature") match {
+  private def postMixture(r: Req): Reply = {
+    val df = r.table("source")
+    val keyCol = r.str("keyCol")
+    val domainCol = r.str("domainCol")
+    val salt = r.str("salt", "")
+    Rows(r.doubleOpt("temperature") match {
       case Some(tau) => // token-mass temperature form
-        val domains = require(body, "domains").elements().asScala
-          .map(_.asText()).toSeq
-        okRows(ex, graft.ext.Corpus.temperatureMixture(df, keyCol,
-          domainCol, require(body, "textCol").asText(), domains,
-          tau.asDouble(), salt))
+        graft.ext.Corpus.temperatureMixture(df, keyCol, domainCol,
+          r.str("textCol"), r.strs("domains"), tau, salt)
       case None => // explicit target-weights form
-        val wNode = require(body, "weights")
-        val weights = {
-          val it = wNode.fields()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble() }
-          b.result()
-        }
-        okRows(ex, graft.ext.Corpus.mixtureSample(df, keyCol, domainCol,
-          weights, salt))
-    }
+        graft.ext.Corpus.mixtureSample(df, keyCol, domainCol,
+          r.doubleMap("weights"), salt)
+    })
   }
 
   /** DSIR importance resampling ([[graft.ext.Corpus.dsirTrain]]):
@@ -1460,94 +1408,62 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * `salt`). Training is two bounded aggregates; the weights frame is
     * checkpointed before the sample filter so the scoring fold runs
     * once (the predicate-pushdown alias trap, DESIGN §14). */
-  private def postDsir(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    val idCol = require(body, "idCol").asText()
-    val textCol = require(body, "textCol").asText()
-    val targetRaw = engine.readTable(Seq(require(body, "target").asText()))
-    // project (not rename): withColumnRenamed would leave a duplicate
-    // when the target table already has a column named textCol, and
-    // dsirTrain's reference to it would then be ambiguous
-    val target = opt(body, "targetTextCol").map(_.asText()) match {
-      case Some(c) => targetRaw.select(
-        org.apache.spark.sql.functions.col(c).as(textCol))
-      case None => targetRaw.select(
-        org.apache.spark.sql.functions.col(textCol))
-    }
+  private def postDsir(r: Req): Reply = {
+    val df = r.table("source")
+    val idCol = r.str("idCol")
+    val textCol = r.str("textCol")
+    val target = dsirTarget(r.str("target"), textCol, r.strOpt("targetTextCol"))
     val model = graft.ext.Corpus.dsirTrain(target, df, textCol,
-      opt(body, "buckets").map(_.asInt()).getOrElse(4096),
-      opt(body, "smoothing").map(_.asDouble()).getOrElse(1.0))
+      r.int("buckets", 4096), r.double("smoothing", 1.0))
     val w = graft.ext.Corpus.dsirWeights(df, idCol, textCol, model)
-    opt(body, "pivot") match {
-      case Some(p) =>
-        okRows(ex, graft.ext.Corpus.dsirSample(w.localCheckpoint(),
-          idCol, org.apache.spark.sql.functions.col("dsir_weight"),
-          p.asDouble(), opt(body, "salt").map(_.asText()).getOrElse("")))
-      case None => okRows(ex, w)
-    }
+    Rows(r.doubleOpt("pivot") match {
+      case Some(p) => graft.ext.Corpus.dsirSample(w.localCheckpoint(),
+        idCol, col("dsir_weight"), p, r.str("salt", ""))
+      case None => w
+    })
   }
 
   /** Per-domain token-budget cut
     * ([[graft.ext.Corpus.tokenBudgetSample]]); budgets =
     * {"domain": tokenCount}. */
-  private def postBudget(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    val bNode = require(body, "budgets")
-    val budgets = {
-      val it = bNode.fields()
-      val b = Map.newBuilder[String, Long]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong() }
-      b.result()
-    }
-    okRows(ex, graft.ext.Corpus.tokenBudgetSample(df,
-      require(body, "keyCol").asText(), require(body, "domainCol").asText(),
-      require(body, "textCol").asText(), budgets,
-      salt = opt(body, "salt").map(_.asText()).getOrElse("")))
+  private def postBudget(r: Req): Reply = {
+    val df = r.table("source")
+    val budgets = r.longMap("budgets")
+    Rows(graft.ext.Corpus.tokenBudgetSample(df,
+      r.str("keyCol"), r.str("domainCol"), r.str("textCol"), budgets,
+      salt = r.str("salt", "")))
   }
 
   /** Keyed snapshot diff ([[graft.ext.Validate.diffByKey]]): body =
     * {left, right, keyCol}; rows = (key, status added|removed|changed). */
-  private def postDiff(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    okRows(ex, graft.ext.Validate.diffByKey(
-      engine.readTable(Seq(require(body, "left").asText())),
-      engine.readTable(Seq(require(body, "right").asText())),
-      require(body, "keyCol").asText()))
-  }
+  private def postDiff(r: Req): Reply =
+    Rows(graft.ext.Validate.diffByKey(r.table("left"), r.table("right"),
+      r.str("keyCol")))
 
   /** Data-quality constraint gate ([[graft.ext.Validate]]): body
     * `{"source": ..., "checks": [{"type": "not_null"|"unique"|
     * "in_range"|"in_set"|"matches"|"row_count_at_least"|"foreign_key",
     * ...}]}` — one report row per check. The whole batch is one
     * aggregation over one scan of the table. */
-  private def postValidate(ex: HttpExchange): Unit = {
+  private def postValidate(r: Req): Reply = {
     import graft.ext.Validate
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    val checks = require(body, "checks").elements().asScala.map { n =>
-      require(n, "type").asText() match {
-        case "not_null" => Validate.NotNull(require(n, "column").asText())
-        case "unique" => Validate.Unique(
-          require(n, "columns").elements().asScala.map(_.asText()).toSeq)
-        case "in_range" => Validate.InRange(require(n, "column").asText(),
-          require(n, "lo").asDouble(), require(n, "hi").asDouble())
-        case "in_set" => Validate.InSet(require(n, "column").asText(),
-          require(n, "values").elements().asScala.map(_.asText()).toSeq)
-        case "matches" => Validate.Matches(require(n, "column").asText(),
-          require(n, "regex").asText())
-        case "row_count_at_least" =>
-          Validate.RowCountAtLeast(require(n, "n").asLong())
-        case "foreign_key" => Validate.ForeignKey(
-          require(n, "column").asText(),
-          engine.readTable(Seq(require(n, "ref").asText())),
-          require(n, "refColumn").asText())
+    val df = r.table("source")
+    val checks = r.objs("checks").map { c =>
+      c.str("type") match {
+        case "not_null" => Validate.NotNull(c.str("column"))
+        case "unique" => Validate.Unique(c.strs("columns"))
+        case "in_range" =>
+          Validate.InRange(c.str("column"), c.double("lo"), c.double("hi"))
+        case "in_set" => Validate.InSet(c.str("column"), c.strs("values"))
+        case "matches" => Validate.Matches(c.str("column"), c.str("regex"))
+        case "row_count_at_least" => Validate.RowCountAtLeast(c.long("n"))
+        case "foreign_key" =>
+          Validate.ForeignKey(c.str("column"), c.table("ref"), c.str("refColumn"))
         case other =>
           throw new IllegalArgumentException(s"unknown check type '$other'")
       }
-    }.toSeq
-    okRows(ex, Validate.validate(df, checks))
+    }
+    Rows(Validate.validate(df, checks))
   }
 
   /** Snapshot drift between two stored tables
@@ -1555,43 +1471,32 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * "sourceB": ..., "valueCol": ..., "binWidth": ...}`; with
     * `"summary": true` responds with the one-row total-variation gate
     * instead of the per-bin report. */
-  private def postDrift(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val a = engine.readTable(Seq(require(body, "sourceA").asText()))
-    val b = engine.readTable(Seq(require(body, "sourceB").asText()))
-    val vc = require(body, "valueCol").asText()
-    val bw = require(body, "binWidth").asDouble()
-    val out =
-      if (opt(body, "summary").exists(_.asBoolean()))
-        graft.ext.Sketches.driftSummary(a, b, vc, bw)
-      else graft.ext.Sketches.histogramDrift(a, b, vc, bw)
-    okRows(ex, out)
+  private def postDrift(r: Req): Reply = {
+    val a = r.table("sourceA")
+    val b = r.table("sourceB")
+    val vc = r.str("valueCol")
+    val bw = r.double("binWidth")
+    Rows(
+      if (r.bool("summary", false)) graft.ext.Sketches.driftSummary(a, b, vc, bw)
+      else graft.ext.Sketches.histogramDrift(a, b, vc, bw))
   }
 
   /** Per-group corpus audit profile
     * ([[graft.ext.TextAnalysis.corpusProfile]]). */
-  private def postProfile(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val groupCols = require(body, "groupCols").elements().asScala
-      .map(_.asText()).toSeq
-    okRows(ex, engine.profileTable(
-      require(body, "source").asText(),
-      require(body, "textCol").asText(), groupCols,
-      minWords = intOr(body, "minWords", 50),
-      maxWords = intOr(body, "maxWords", 100000)))
+  private def postProfile(r: Req): Reply = {
+    val groupCols = r.strs("groupCols")
+    Rows(engine.profileTable(r.str("source"), r.str("textCol"), groupCols,
+      minWords = r.int("minWords", 50), maxWords = r.int("maxWords", 100000)))
   }
 
   /** Deterministic split assignment
     * ([[graft.ext.Corpus.assignSplits]]); splits = ordered
     * [{"name": ..., "weight": ...}] (order defines the hash intervals). */
-  private def postSplits(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    val splits = require(body, "splits").elements().asScala.map(n =>
-      require(n, "name").asText() -> require(n, "weight").asDouble()).toSeq
-    okRows(ex, graft.ext.Corpus.assignSplits(df,
-      require(body, "keyCol").asText(), splits,
-      salt = opt(body, "salt").map(_.asText()).getOrElse("")))
+  private def postSplits(r: Req): Reply = {
+    val df = r.table("source")
+    val splits = r.objs("splits").map(s => s.str("name") -> s.double("weight"))
+    Rows(graft.ext.Corpus.assignSplits(df, r.str("keyCol"), splits,
+      salt = r.str("salt", "")))
   }
 
   /** Train the logistic quality classifier on a stored table; labels
@@ -1601,118 +1506,103 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * at GET /api/quality); without one the call is stateless. Responds
     * with the weights JSON either way, which feeds
     * `/api/text/quality-score`. */
-  private def postQualityModel(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val source = require(body, "source").asText()
-    val textCol = require(body, "textCol").asText()
-    val labelCol = opt(body, "labelCol").map(_.asText())
-    val model = opt(body, "name") match {
-      case Some(n) =>
-        engine.trainQualityModel(n.asText(), source, textCol, labelCol)
+  private def postQualityModel(r: Req): Reply = {
+    val source = r.str("source")
+    val textCol = r.str("textCol")
+    val labelCol = r.strOpt("labelCol")
+    val model = r.strOpt("name") match {
+      case Some(n) => engine.trainQualityModel(n, source, textCol, labelCol)
       case None =>
         graft.ext.QualityModel.train(
           graft.ext.QualityModel.labeledFrame(
             engine.readTable(Seq(source)), textCol, labelCol),
           textCol, "__label__")
     }
-    ok(ex, model.toJson)
+    Json(model.toJson)
   }
 
   /** Score a stored table under a persisted `model` name or explicit
     * `weights` (from `/api/text/quality-model` or any external run). */
-  private def postQualityScore(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    val model = opt(body, "model") match {
-      case Some(n) => engine.store.loadQualityModel(n.asText())
-      case None => graft.ext.QualityModel.Logistic(
-        require(body, "weights").elements().asScala.map(_.asDouble()).toArray)
+  private def postQualityScore(r: Req): Reply = {
+    val df = r.table("source")
+    val model = r.strOpt("model") match {
+      case Some(n) => engine.store.loadQualityModel(n)
+      case None => graft.ext.QualityModel.Logistic(r.doubles("weights").toArray)
     }
-    okRows(ex, graft.ext.QualityModel.score(df,
-      require(body, "idCol").asText(), require(body, "textCol").asText(),
-      model))
+    Rows(graft.ext.QualityModel.score(df, r.str("idCol"), r.str("textCol"), model))
   }
 
   /** Winnowing fingerprints of a stored table's text column
     * ([[graft.ext.TextAnalysis.winnowFingerprints]]) — (id, fp) rows. */
-  private def postFingerprints(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    okRows(ex, graft.ext.TextAnalysis.winnowFingerprints(df,
-      require(body, "idCol").asText(), require(body, "column").asText(),
-      k = intOr(body, "k", 5), window = intOr(body, "window", 4)))
-  }
+  private def postFingerprints(r: Req): Reply =
+    Rows(graft.ext.TextAnalysis.winnowFingerprints(r.table("source"),
+      r.str("idCol"), r.str("column"),
+      k = r.int("k", 5), window = r.int("window", 4)))
 
   /** Document-overlap pairs from shared fingerprints (MOSS step,
     * [[graft.ext.TextAnalysis.overlapPairs]]). */
-  private def postOverlaps(ex: HttpExchange): Unit = {
-    val body = mapper.readTree(readBody(ex))
-    val df = engine.readTable(Seq(require(body, "source").asText()))
-    okRows(ex, graft.ext.TextAnalysis.overlapPairs(df,
-      require(body, "idCol").asText(), require(body, "column").asText(),
-      k = intOr(body, "k", 5), window = intOr(body, "window", 4),
-      minShared = intOr(body, "minShared", 10),
-      maxDocFreq = intOr(body, "maxDocFreq", 1000).toLong))
+  private def postOverlaps(r: Req): Reply =
+    Rows(graft.ext.TextAnalysis.overlapPairs(r.table("source"),
+      r.str("idCol"), r.str("column"),
+      k = r.int("k", 5), window = r.int("window", 4),
+      minShared = r.int("minShared", 10),
+      maxDocFreq = r.int("maxDocFreq", 1000).toLong))
+}
+
+object GraftServer {
+  /** What a handler returns; the envelope renders it. */
+  private sealed trait Reply
+  /** Rows of `df` as `{extraFields"rows":[...]}`, capped at
+    * `maxResponseRows`, its checkpoints released once rendered. */
+  private final case class Rows(df: DataFrame, extraFields: String = "") extends Reply
+  /** A pre-rendered JSON body. */
+  private final case class Json(body: String, status: Int = 200) extends Reply
+  /** `df` as a chunked Arrow IPC stream, planned before the 200. */
+  private final case class Arrow(df: DataFrame) extends Reply
+
+  /** A request body over `maxRequestBytes` (413). */
+  private final class BodyTooLarge(limit: Int)
+      extends RuntimeException(s"request body exceeds $limit bytes")
+
+  /** The one status map, per exception on a failure's cause chain: 400
+    * for a bad request (bad or missing field, malformed JSON, Spark
+    * analysis or data errors — SQLSTATE class 22 or 42), 409 for state
+    * that refuses the request (stale advice, non-convergence), 413 for
+    * an oversized body; None when the exception says nothing. */
+  private def knownStatus(t: Throwable): Option[Int] = t match {
+    case _: BodyTooLarge => Some(413)
+    case _: IllegalArgumentException | _: NoSuchElementException |
+        _: JsonProcessingException | _: AnalysisException => Some(400)
+    case s: SparkThrowable if Option(s.getSqlState)
+        .exists(c => c.startsWith("22") || c.startsWith("42")) => Some(400)
+    case _: IllegalStateException => Some(409)
+    case _ => None
   }
 
-  // ——— plumbing ———
+  /** A typed JSON reader: which nodes it accepts (`name` describes them
+    * in the refusal) and how it reads one. */
+  private final case class Kind[T](name: String, accepts: JsonNode => Boolean,
+      read: JsonNode => T)
 
-  private def require(n: JsonNode, field: String): JsonNode =
-    opt(n, field).getOrElse(
-      throw new IllegalArgumentException(s"missing required field '$field'"))
-  private def opt(n: JsonNode, field: String): Option[JsonNode] =
-    Option(n.get(field)).filterNot(_.isNull)
-  private def intOr(n: JsonNode, field: String, dflt: Int): Int =
-    opt(n, field).map(_.asInt()).getOrElse(dflt)
-  private def boolOr(n: JsonNode, field: String, dflt: Boolean): Boolean =
-    opt(n, field).map(_.asBoolean()).getOrElse(dflt)
+  private def arrayOf[T](k: Kind[T], name: String): Kind[Seq[T]] =
+    Kind(name, n => n.isArray && n.elements().asScala.forall(k.accepts),
+      _.elements().asScala.map(k.read).toSeq)
+  private def mapOf[T](k: Kind[T], name: String): Kind[Map[String, T]] =
+    Kind(name, n => n.isObject && n.properties().asScala.forall(e => k.accepts(e.getValue)),
+      _.properties().asScala.map(e => e.getKey -> k.read(e.getValue)).toMap)
 
-  private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getRawQuery).fold(Map.empty[String, String]) { q =>
-      q.split("&").toSeq.flatMap { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            Some(k -> java.net.URLDecoder.decode(v, StandardCharsets.UTF_8))
-          case _ => None
-        }
-      }.toMap
-    }
-
-  private def readBody(ex: HttpExchange): String =
-    new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-
-  /** Rows as a JSON array via Spark's own row→JSON encoder (handles
-    * nested arrays/structs/timestamps); bounded by [[maxResponseRows]]. */
-  private def okRows(ex: HttpExchange, df: DataFrame): Unit =
-    okRows(ex, df, extraFields = "")
-
-  /** `extraFields` is a pre-rendered `"k":v,` run (trailing comma, or
-    * empty) placed before `rows` — the advised-serving marker's hook.
-    * Frees any localCheckpoint backing the frame (curate/dedup/graph
-    * results carry one) — a long-lived server otherwise pins one per
-    * request until GC. In a FINALLY so the error paths (bad plan in
-    * collect, client disconnect in the response write) release too:
-    * those are exactly the requests a long-lived server accumulates.
-    * No route shares checkpointed frames across requests (every
-    * handler builds its frame from stored tables), so the blocks are
-    * provably unread. */
-  private def okRows(ex: HttpExchange, df: DataFrame,
-      extraFields: String): Unit =
-    try ok(ex, df.limit(maxResponseRows).toJSON.collect()
-      .mkString(s"""{$extraFields"rows":[""", ",", "]}"))
-    finally org.apache.spark.sql.GraftShims.releaseCheckpoint(df)
-
-  /** JSON string literal (quoted + escaped) — hand-built response bodies
-    * must never interpolate raw user input. */
-  private def jstr(v: String): String = mapper.writeValueAsString(v)
-
-  private def ok(ex: HttpExchange, json: String): Unit = send(ex, 200, json)
-
-  private def send(ex: HttpExchange, code: Int, json: String): Unit = {
-    val bytes = json.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length)
-    val os = ex.getResponseBody
-    try os.write(bytes) finally os.close()
-  }
+  private val Text = Kind[String]("a string", _.isTextual, _.asText())
+  private val IntKind = Kind[Int]("an integer",
+    n => n.isIntegralNumber && n.canConvertToInt, _.asInt())
+  private val LongKind = Kind[Long]("an integer",
+    n => n.isIntegralNumber && n.canConvertToLong, _.asLong())
+  private val Num = Kind[Double]("a number", _.isNumber, _.asDouble())
+  private val Bool = Kind[Boolean]("a boolean", _.isBoolean, _.asBoolean())
+  private val Obj = Kind[JsonNode]("an object", _.isObject, identity)
+  private val Strs = arrayOf(Text, "an array of strings")
+  private val Nums = arrayOf(Num, "an array of numbers")
+  private val Vectors = arrayOf(Nums, "an array of number arrays")
+  private val Objs = arrayOf(Obj, "an array of objects")
+  private val NumMap = mapOf(Num, "an object of numbers")
+  private val LongMap = mapOf(LongKind, "an object of integers")
 }

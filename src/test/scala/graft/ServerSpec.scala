@@ -21,12 +21,21 @@ class ServerSpec extends SparkSuite {
   private lazy val client = HttpClient.newHttpClient()
   private def base = s"http://127.0.0.1:${server.boundPort}/api"
 
-  private def send(method: String, path: String, body: String = ""): (Int, String) = {
-    val b = HttpRequest.newBuilder(URI.create(s"$base$path"))
+  private def send(method: String, path: String, body: String = ""): (Int, String) =
+    sendTo(server, method, path, body)
+
+  private def sendTo(to: GraftServer, method: String, path: String,
+      body: String = ""): (Int, String) =
+    sendRaw(to, method, path, HttpRequest.BodyPublishers.ofString(body))
+
+  private def sendRaw(to: GraftServer, method: String, path: String,
+      body: HttpRequest.BodyPublisher): (Int, String) = {
+    val b = HttpRequest.newBuilder(
+      URI.create(s"http://127.0.0.1:${to.boundPort}/api$path"))
     val req = (method match {
       case "GET"    => b.GET()
       case "DELETE" => b.DELETE()
-      case m        => b.method(m, HttpRequest.BodyPublishers.ofString(body))
+      case m        => b.method(m, body)
     }).header("Content-Type", "application/json").build()
     val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), resp.body())
@@ -1717,5 +1726,92 @@ class ServerSpec extends SparkSuite {
     assert(s.get("tv_permille").asLong() == 750L, sBody)
     assert(send("DELETE", "/tables/wire_drift_a")._1 == 200)
     assert(send("DELETE", "/tables/wire_drift_b")._1 == 200)
+  }
+
+  test("status map: an engine fault is a 500 with a JSON error, not a 400") {
+    val faulty = new Engine(spark, root) {
+      override def listTables(): Seq[String] =
+        throw new NullPointerException("listing failed")
+    }
+    val other = new GraftServer(faulty).start()
+    try {
+      val (c, body) = sendTo(other, "GET", "/tables")
+      assert(c == 500, s"$c $body")
+      assert(mapper.readTree(body).get("error").asText()
+        .contains("NullPointerException"), body)
+      // the same server still answers a bad request with a 400
+      val (bc, bBody) = sendTo(other, "POST", "/search", "{")
+      assert(bc == 400, s"$bc $bBody")
+    } finally other.stop()
+  }
+
+  test("status map: a PUT row that does not fit the schema is a 400 (FAILFAST)") {
+    val (c, body) = send("PUT", "/tables/wire_misfit",
+      """{"schema":"id LONG, v DOUBLE","rows":[{"id":1,"v":1.5},{"id":"x","v":2.0}]}""")
+    assert(c == 400, s"$c $body")
+    assert(mapper.readTree(body).get("error") != null, body)
+  }
+
+  test("typed reads: a wrong JSON type is a 400 naming the field, never coerced") {
+    val (pc, pBody) = send("PUT", "/tables/wire_typed",
+      """{"schema":"id LONG, text STRING, vec ARRAY<DOUBLE>","rows":[
+        {"id":1,"text":"same words here","vec":[0.0,0.0]},
+        {"id":2,"text":"same words hera","vec":[1.0,0.0]},
+        {"id":3,"text":"same words here","vec":[2.0,0.0]}]}""")
+    assert(pc == 200, pBody)
+    // Jackson's asInt() would read "two" as 0: exact duplicates only, 200
+    val (ec, eBody) = send("POST", "/dedup/editdist",
+      """{"source":"wire_typed","idCol":"id","column":"text","maxDist":"two"}""")
+    assert(ec == 400 && eBody.contains("maxDist") && eBody.contains("integer"),
+      s"$ec $eBody")
+    // …and 2.9 as 2
+    val (kc, kBody) = send("POST", "/search",
+      """{"sources":["wire_typed"],"column":"vec","target":[0,0],
+          "metric":"l2","k":2.9}""")
+    assert(kc == 400 && kBody.contains("'k'"), s"$kc $kBody")
+    // a flag must be a JSON boolean, a string list an array of strings
+    val (fc, fBody) = send("POST", "/dedup/editdist",
+      """{"source":"wire_typed","idCol":"id","column":"text","blocked":"no"}""")
+    assert(fc == 400 && fBody.contains("blocked"), s"$fc $fBody")
+    val (sc, sBody) = send("POST", "/search",
+      """{"sources":"wire_typed","column":"vec","target":[0,0],"metric":"l2"}""")
+    assert(sc == 400 && sBody.contains("sources"), s"$sc $sBody")
+    // the well-typed requests still serve
+    val (okc, okBody) = send("POST", "/dedup/editdist",
+      """{"source":"wire_typed","idCol":"id","column":"text","maxDist":1}""")
+    assert(okc == 200 && mapper.readTree(okBody).get("rows").size() == 3, okBody)
+    assert(send("POST", "/search",
+      """{"sources":["wire_typed"],"column":"vec","target":[0,0],
+          "metric":"l2","k":2}""")._1 == 200)
+    assert(send("DELETE", "/tables/wire_typed")._1 == 200)
+  }
+
+  test("request body cap: an oversized body is a 413, and the server serves on") {
+    val big = s"""{"pad":"${"x" * (server.maxRequestBytes + 1024)}"}"""
+    val (c, body) = send("POST", "/search", big)
+    assert(c == 413, s"$c ${body.take(200)}")
+    assert(mapper.readTree(body).get("error").asText().contains("exceeds"), body)
+    // without a Content-Length (chunked) the cap holds the same way
+    val chunked = HttpRequest.BodyPublishers.ofInputStream(() =>
+      new java.io.ByteArrayInputStream(big.getBytes("UTF-8")))
+    val (cc, cBody) = sendRaw(server, "POST", "/search", chunked)
+    assert(cc == 413, s"$cc ${cBody.take(200)}")
+    val (nc, nBody) = send("GET", "/tables")
+    assert(nc == 200, nBody)
+  }
+
+  test("route table: every POST route answers {} with a 400 naming a missing field") {
+    // routes that legitimately accept an empty body, with the reason
+    val acceptsEmpty = Map.empty[String, String]
+    val posts = server.verbs.filter(_.startsWith("POST "))
+    assert(posts.size >= 50, posts)
+    for (verb <- posts if !acceptsEmpty.contains(verb)) {
+      val (c, body) = send("POST", verb.stripPrefix("POST "), "{}")
+      assert(c == 400 && body.contains("missing required field"),
+        s"$verb: $c $body")
+    }
+    // an empty body reads as {}
+    val (ec, eBody) = send("POST", "/search", "")
+    assert(ec == 400 && eBody.contains("missing required field"), s"$ec $eBody")
   }
 }
