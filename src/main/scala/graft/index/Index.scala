@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -389,15 +389,17 @@ object Index {
     val path = tierPath(store, codingName, source, column, tier)
     val fs = store.fs
     val prefix = s"$CodeCol="
+    // rows with a null vector have no cell: Spark files them under its
+    // default partition, which is not a cell
     val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(path))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
+      .flatMap(d => d.getPath.getName.stripPrefix(prefix).toLongOption.map(_ -> d))
     val rowsByCell: Map[Long, Long] =
       if (!withRows) Map.empty
-      else store.spark.read.parquet(path)
+      else store.spark.read.parquet(path).filter(col(CodeCol).isNotNull)
         .groupBy(col(CodeCol).cast("long")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    dirs.map { d =>
-      val cell = d.getPath.getName.stripPrefix(prefix).toLong
+    dirs.map { case (cell, d) =>
       val files = fs.listStatus(d.getPath)
         .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
           !f.getPath.getName.startsWith("."))
@@ -535,20 +537,49 @@ object Index {
     * every cell directory and runs one Spark job to infer the schema,
     * while a reused frame prunes cells on its in-memory file index.
     * Build, sync, repair and compaction each rewrite `_SUCCESS` or the
-    * stamp, or change the directory's entries. */
+    * stamp, or change the directory's entries. The IVF tier's entry is
+    * a [[Store#Resident]] ([[ivfTier]]). */
   private def loadTier(store: Store, codingName: String, source: String,
-      column: String, tier: String): DataFrame = {
-    val path = tierPath(store, codingName, source, column, tier)
+      column: String, tier: String): DataFrame =
+    if (tier == "ivf") ivfTier(store, codingName, source, column).frame
+    else {
+      val path = tierPath(store, codingName, source, column, tier)
+      store.memo(path, Seq("_SUCCESS", StampFile))(readTier(store, path))
+    }
+
+  /** The IVF tier's memo entry: its relation, and its rows grouped by
+    * cell once a probed search over a small tier has read them. */
+  private def ivfTier(store: Store, codingName: String, source: String,
+      column: String): store.Resident = {
+    val path = tierPath(store, codingName, source, column, "ivf")
     store.memo(path, Seq("_SUCCESS", StampFile))(
-      store.spark.read.parquet(path)
-        // partition-column discovery types the cell id as int; contract says long
-        .withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol))
+      new store.Resident(readTier(store, path), CodeCol))
   }
+
+  private def readTier(store: Store, path: String): DataFrame =
+    store.spark.read.parquet(path)
+      // partition-column discovery types the cell id as int; contract says long
+      .withColumn(CodeCol, col(CodeCol).cast("long")).drop(SrcFileCol)
 
   /** Read the indexed copy: source schema ⊕ `__CODED_ID__: long`
     * (reference V7 `index.py:19-34`, minus the positional join). */
   def load(store: Store, codingName: String, source: String, column: String): DataFrame =
     loadTier(store, codingName, source, column, "ivf")
+
+  /** The leaf of a probed IVF search: the rows of the probed `cells`,
+    * from the driver when the tier is resident ([[ivfTier]]), otherwise
+    * the parquet relation pruned to those cells. Like [[pruneToCells]],
+    * a full probe also keeps the rows with no cell (a null vector). */
+  private[graft] def probedLeaf(store: Store, codingName: String,
+      source: String, column: String, cells: Array[Long],
+      numCells: Long): DataFrame = {
+    val tier = ivfTier(store, codingName, source, column)
+    tier.cells.fold(pruneToCells(tier.frame, cells, numCells)) { byCell =>
+      val keys = cells.toSeq.map(Option(_)) ++
+        (if (cells.length >= numCells) Seq(None) else Nil)
+      GraftShims.localFrame(tier.frame, keys.flatMap(byCell.get).flatten)
+    }
+  }
 
   /** Partition-prune to the probed cells — skipped entirely at full
     * probes, where the IN-SET predicate prunes nothing and would only
@@ -595,12 +626,22 @@ object Index {
     val coding = store.loadCoding(codingName)
     val m = metric.getOrElse(coding.config.metric)
     val cells = coding.rankCells(target.doubles, probes)
-    val pruned = pruneToCells(load(store, codingName, source, column),
-      cells, coding.numCells)
-    val base = filter.fold(pruned)(pruned.filter)
-    topK(base.withColumn(Search.DistCol,
-      vector_distance(col(column), target.lit, m)), k, select, tieBreak)
+    probedQuery(probedLeaf(store, codingName, source, column, cells,
+      coding.numCells), column, target, k, m, filter, select, tieBreak)
   }
+
+  /** The one body of a probed IVF search over either leaf of
+    * [[probedLeaf]]: filter, exact distance, top-k. Over a resident
+    * leaf the optimizer folds the filter and distance into the local
+    * rows and [[GraftShims.localTopK]] finishes the top-k, so the
+    * frame it returns runs no job. */
+  private[graft] def probedQuery(leaf: DataFrame, column: String,
+      target: graft.api.TargetVector, k: Int, metric: String,
+      filter: Option[Column], select: Option[Seq[String]],
+      tieBreak: Seq[String]): DataFrame =
+    GraftShims.localTopK(topK(filter.fold(leaf)(leaf.filter).withColumn(
+      Search.DistCol, vector_distance(col(column), target.lit, metric)),
+      k, select, tieBreak))
 
   // ——— two-pass probed search: one body, four candidate tiers ———
 

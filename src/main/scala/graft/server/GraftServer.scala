@@ -58,7 +58,10 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
   // a value the JVM already has wins.
   System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
   private val http = HttpServer.create(new InetSocketAddress(host, port), 0)
-  private val pool = Executors.newFixedThreadPool(4)
+  // one request thread per core: a search over a driver-resident tier
+  // is CPU work on that thread
+  private val pool =
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors)
   /** Cap on rows returned by a single scan/search response. */
   val maxResponseRows = 10000
   /** Cap on a request body's bytes (8 MiB: JSON ingests are the small,
@@ -263,7 +266,10 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
   }
 
   /** Rows as a JSON array via Spark's own row→JSON encoder (handles
-    * nested arrays/structs/timestamps); bounded by [[maxResponseRows]].
+    * nested arrays/structs/timestamps), run on the driver
+    * ([[GraftShims.jsonRows]]: the bytes `toJSON` gives, without its
+    * job, so a local frame renders with none); bounded by
+    * [[maxResponseRows]].
     * `extraFields` is a pre-rendered `"k":v,` run (trailing comma, or
     * empty) placed before `rows` — the advised-serving marker's hook.
     * Frees any localCheckpoint backing the frame (curate/dedup/graph
@@ -275,7 +281,7 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * checkpointed frames across requests (every handler builds its
     * frame from stored tables), so the blocks are provably unread. */
   private def rowsJson(df: DataFrame, extraFields: String): String =
-    try df.limit(maxResponseRows).toJSON.collect()
+    try GraftShims.jsonRows(df.limit(maxResponseRows))
       .mkString(s"""{$extraFields"rows":[""", ",", "]}")
     finally GraftShims.releaseCheckpoint(df)
 

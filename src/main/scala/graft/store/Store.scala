@@ -1,7 +1,11 @@
 package graft.store
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 
 import graft.coder.{Coder, CoderConfig, Coding}
@@ -120,13 +124,86 @@ class Store(val spark: SparkSession, val root: String) {
       case (`stamp`, v) => v.asInstanceOf[A]
       case _ =>
         val v = open
-        memos.put(key, (stamp, v))
+        Option(memos.put(key, (stamp, v))).foreach(old => release(old._2))
         v
     }
   }
 
+  /** Drops every memo entry at or under `path` (a dropped tier or
+    * coding), giving back what it held on the driver. */
+  private[graft] def forget(path: String): Unit =
+    memos.keySet.asScala.filter { key =>
+      val p = key.takeWhile(_ != '\u0000')
+      p == path || p.startsWith(path + "/")
+    }.foreach(key => Option(memos.remove(key)).foreach(old => release(old._2)))
+
+  private def release(v: Any): Unit = v match {
+    case r: Store#Resident => r.release()
+    case _ => ()
+  }
+
   @transient private lazy val memos =
     new java.util.concurrent.ConcurrentHashMap[String, (Seq[Option[(Long, Long)]], Any)]()
+
+  /** Bytes the store's [[Resident]] tiers hold now. */
+  private[graft] def residentBytes: Long = resident.get
+
+  @transient private lazy val resident = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Counts `bytes` against [[Store.ResidentBytes]] in place of `from`
+    * already counted, if the total stays within the cap. */
+  private def take(bytes: Long, from: Long = 0): Boolean = {
+    val was = resident.getAndUpdate(n =>
+      if (n - from + bytes <= Store.ResidentBytes) n - from + bytes else n)
+    was - from + bytes <= Store.ResidentBytes
+  }
+
+  /** A memoized IVF tier relation that can also keep its rows on the
+    * driver, grouped by the cell id in `cellCol` (`None`: a row with no
+    * cell, whose vector is null). [[Store.ResidentBytes]] caps the heap
+    * the rows of every resident tier of this store take together. Before
+    * the first read a tier counts its stored bytes (the scan's size
+    * estimate, the files' total length: no job); the read then counts
+    * what its rows really take (their `UnsafeRow` bytes: a repetitive
+    * column takes several times its compressed size), and keeps them
+    * only if that fits. [[cells]] reads on first use — callers racing a
+    * cold read wait for it — and is `None` when the rows do not fit
+    * beside what is already held (the caller serves the frame instead;
+    * the next use tries again, by the known size, with no job), when
+    * they are over the cap alone, or once the memo entry was replaced
+    * or forgotten, which gives their bytes back. */
+  private[graft] final class Resident(val frame: DataFrame, cellCol: String) {
+    // what the rows need: the stored estimate until they were read
+    private var need: Long =
+      frame.queryExecution.analyzed.collectLeaves().map(_.stats.sizeInBytes).sum.toLong
+    private var held: Option[Map[Option[Long], Array[InternalRow]]] = None
+    private var released = false
+
+    def cells: Option[Map[Option[Long], Array[InternalRow]]] = synchronized {
+      if (held.isEmpty && !released && take(need)) {
+        val rows = try GraftShims.collectInternal(frame) catch {
+          case e: Throwable => resident.addAndGet(-need); throw e
+        }
+        val heap = rows.iterator.map {
+          case u: UnsafeRow => u.getSizeInBytes.toLong
+          case _ => Store.ResidentBytes + 1 // of unknown size: never kept
+        }.sum
+        if (take(heap, from = need)) {
+          val cell = frame.schema.fieldIndex(cellCol)
+          held = Some(rows.groupBy(r =>
+            if (r.isNullAt(cell)) None else Some(r.getLong(cell))))
+        } else resident.addAndGet(-need)
+        need = heap
+      }
+      held
+    }
+
+    private[Store] def release(): Unit = synchronized {
+      if (held.nonEmpty) resident.addAndGet(-need)
+      held = None
+      released = true
+    }
+  }
 
   private def statOf(path: String): Option[(Long, Long)] =
     try {
@@ -185,8 +262,9 @@ class Store(val spark: SparkSession, val root: String) {
     // the FULL replacement is written before anything is renamed — df
     // may read the very table being replaced (upsert shape) or, after a
     // crashed swap, its aside copy via [[loadTable]]'s read fallback
-    graft.types.Tensors.enforceDeclaredShapes(df)
+    try graft.types.Tensors.enforceDeclaredShapes(df)
       .write.mode("overwrite").parquet(staging.toString)
+    catch { case e: Throwable => fs.delete(staging, true); throw e }
     // a stale aside from a prior swap that crashed AFTER going live is
     // dropped only when the destination is in fact live; in the
     // crashed-between-renames state (dest absent) it survives as the
@@ -203,10 +281,11 @@ class Store(val spark: SparkSession, val root: String) {
 
   /** Write a table; columns declared as fixed-shape tensors (via
     * `Tensors.asTensor` metadata) are shape-checked during the write, so a
-    * ragged vector fails ingest rather than a later distance/assign. */
-  def createTable(name: String, df: DataFrame): Unit =
-    graft.types.Tensors.enforceDeclaredShapes(df)
-      .write.mode("overwrite").parquet(sourcePath(name))
+    * ragged vector fails ingest rather than a later distance/assign.
+    * Written through [[replaceTable]]'s staging and swap: a write that
+    * fails (a ragged vector, a FAILFAST parse error) leaves no table
+    * where there was none and the old one untouched where there was. */
+  def createTable(name: String, df: DataFrame): Unit = replaceTable(name, df)
 
   /** Import an external CSV, JSON, or Arrow IPC stream file set as a
     * named table. For CSV/JSON the schema is caller-supplied DDL, never
@@ -617,27 +696,16 @@ class Store(val spark: SparkSession, val root: String) {
   /** Drop a coding AND every index built from it (fixes the reference's
     * drop-index leak, `flight.py:92-100` / SURVEY A4). */
   def dropCoding(name: String): Unit = {
-    fs.delete(new Path(codingPath(name)), true)
-    for {
-      source <- list(s"$root/indexes")
-      column <- list(s"$root/indexes/$source")
-      coding <- list(s"$root/indexes/$source/$column") if coding == name
-    } fs.delete(new Path(indexPath(source, column, coding)), true)
-    for {
-      source <- list(s"$root/pq_indexes")
-      column <- list(s"$root/pq_indexes/$source")
-      coding <- list(s"$root/pq_indexes/$source/$column") if coding == name
-    } fs.delete(new Path(pqIndexPath(source, column, coding)), true)
-    for {
-      source <- list(s"$root/sq_indexes")
-      column <- list(s"$root/sq_indexes/$source")
-      coding <- list(s"$root/sq_indexes/$source/$column") if coding == name
-    } fs.delete(new Path(sqIndexPath(source, column, coding)), true)
-    for {
-      source <- list(s"$root/bq_indexes")
-      column <- list(s"$root/bq_indexes/$source")
-      coding <- list(s"$root/bq_indexes/$source/$column") if coding == name
-    } fs.delete(new Path(bqIndexPath(source, column, coding)), true)
+    val tiers = for {
+      tier <- Seq("indexes", "pq_indexes", "sq_indexes", "bq_indexes")
+      source <- list(s"$root/$tier")
+      column <- list(s"$root/$tier/$source")
+      coding <- list(s"$root/$tier/$source/$column") if coding == name
+    } yield s"$root/$tier/${safeSeg(source)}/${safeSeg(column)}/${safeSeg(coding)}"
+    (codingPath(name) +: tiers).foreach { path =>
+      forget(path)
+      fs.delete(new Path(path), true)
+    }
     // advisor sidecars measured for this coding die with it: probe
     // advice (bare coding stem) and every (tier, probes) candidate
     // advice — the tier set is matched explicitly so a sibling coding
@@ -664,11 +732,16 @@ class Store(val spark: SparkSession, val root: String) {
   def remove(): Unit = fs.delete(new Path(root), true)
 }
 
-/** Pure-Column pieces of the Z-order key, exposed so queries can compute
-  * (and oracles can mirror) the deterministic bit interleave without a
-  * layout rewrite. */
+/** The driver-residency cap, and the pure-Column pieces of the Z-order
+  * key, exposed so queries can compute (and oracles can mirror) the
+  * deterministic bit interleave without a layout rewrite. */
 object Store {
   import org.apache.spark.sql.Column
+
+  /** Cap on the heap the rows of one store's resident IVF tiers take
+    * on the driver ([[Store#Resident]]), per tier and in total (DESIGN
+    * §19 for how it was sized). */
+  private[graft] val ResidentBytes: Long = 8L << 20
 
   /** Linear min/max normalization of a numeric column to a
     * [0, 2^bitsPer − 1] rank — the one-agg-pass default of

@@ -13,6 +13,79 @@ object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The frame's rows as Spark holds them, collected through its
+    * executed plan under an SQL execution (so query listeners see it),
+    * as `collect()` does minus the decode to external rows: a local
+    * frame (`LocalTableScanExec`) hands back its rows with no job. */
+  def collectInternal(df: Dataset[_]): Array[catalyst.InternalRow] = {
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      execution.QueryExecution.withInternalError(
+        """The "collect" action failed.""")(qe.executedPlan.executeCollect()))
+  }
+
+  /** The frame's rows as JSON objects, byte for byte what `toJSON`
+    * gives: Spark's own `JacksonGenerator` under the `JSONOptions`
+    * `toJSON` uses, run on the driver over [[collectInternal]]'s rows,
+    * so rendering a local frame runs no job. */
+  def jsonRows(df: Dataset[_]): Array[String] = {
+    val rows = collectInternal(df)
+    val out = new java.io.CharArrayWriter()
+    val gen = new catalyst.json.JacksonGenerator(df.schema, out,
+      new catalyst.json.JSONOptions(Map.empty[String, String],
+        df.sparkSession.sessionState.conf.sessionLocalTimeZone))
+    try rows.map { row =>
+      gen.write(row)
+      gen.flush()
+      val json = out.toString
+      out.reset()
+      json
+    } finally gen.close()
+  }
+
+  /** A frame over `rows` (in `like`'s row layout) with `like`'s
+    * schema under fresh attributes: a `LocalRelation`, which the
+    * optimizer folds filters and projections into on the driver. */
+  def localFrame(like: Dataset[_], rows: Seq[catalyst.InternalRow]): DataFrame =
+    ofRows(like, catalyst.plans.logical.LocalRelation(
+      catalyst.types.DataTypeUtils.toAttributes(like.schema), rows))
+
+  private def ofRows(like: Dataset[_],
+      plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(
+      classic.ClassicConversions.castToImpl(like.sparkSession), plan)
+
+  /** A top-k over a [[localFrame]] finished on the driver. The
+    * optimizer folds filters and projections into a `LocalRelation`
+    * but not a sort: `GlobalLimit(LocalLimit(Sort(LocalRelation)))`
+    * plans as `TakeOrderedAndProjectExec`, one job. When `df`'s
+    * optimized plan is that shape — the limit may be gone (the rows
+    * fit in it), and a projection may sit on top — its rows are sorted
+    * here with the `LazilyGeneratedOrdering` over the same `SortOrder`s
+    * `TakeOrderedAndProjectExec` uses (a stable sort), and the result
+    * is a frame over the first k. Any other shape is returned as is. */
+  def localTopK(df: DataFrame): DataFrame = {
+    import catalyst.expressions.IntegerLiteral
+    import catalyst.plans.logical._
+    val qe = df.queryExecution
+    def sorted(s: Sort, limit: Option[Int]): Option[LogicalPlan] = s match {
+      case Sort(order, true, LocalRelation(output, data, false, _), _) =>
+        val all = data.toArray.sorted(
+          new catalyst.expressions.codegen.LazilyGeneratedOrdering(order, output))
+        Some(LocalRelation(output, limit.fold(all)(all.take).toSeq))
+      case _ => None
+    }
+    def topK(p: LogicalPlan): Option[LogicalPlan] = p match {
+      case GlobalLimit(IntegerLiteral(k), LocalLimit(IntegerLiteral(l), s: Sort))
+          if k == l => sorted(s, Some(k))
+      case s: Sort => sorted(s, None)
+      case Project(list, child) => topK(child).map(Project(list, _))
+      case _ => None
+    }
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) df
+    else topK(qe.optimizedPlan).fold(df)(ofRows(df, _))
+  }
+
   /** Release the executor-storage blocks behind a `localCheckpoint`ed
     * (or `checkpoint`ed) DataFrame.
     *

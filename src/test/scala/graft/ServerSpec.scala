@@ -4,9 +4,12 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.api.Engine
+import graft.index.Index
 import graft.server.GraftServer
 
 /** End-to-end drive of the serving surface over real TCP — the reference
@@ -1813,5 +1816,113 @@ class ServerSpec extends SparkSuite {
     // an empty body reads as {}
     val (ec, eBody) = send("POST", "/search", "")
     assert(ec == 400 && eBody.contains("missing required field"), s"$ec $eBody")
+  }
+
+  test("a rejected PUT leaves no table behind") {
+    val (c, body) = send("PUT", "/tables/wire_misfit",
+      """{"schema":"id LONG, v DOUBLE","rows":[{"id":1,"v":1.5},{"id":"x","v":2.0}]}""")
+    assert(c == 400, s"$c $body")
+    assert(!Files.exists(java.nio.file.Paths.get(engine.store.tablePath("wire_misfit"))))
+    val (_, lBody) = send("GET", "/tables")
+    assert(!lBody.contains("wire_misfit"), lBody)
+  }
+
+  test("a rejected PUT over an existing table leaves its rows unchanged") {
+    val good = """{"schema":"id LONG, v DOUBLE","rows":[{"id":1,"v":1.5},{"id":2,"v":2.5}]}"""
+    assert(send("PUT", "/tables/wire_keep", good)._1 == 200)
+    val (_, before) = send("GET", "/tables/wire_keep")
+    val (c, body) = send("PUT", "/tables/wire_keep",
+      """{"schema":"id LONG, v DOUBLE","rows":[{"id":7,"v":7.5},{"id":"x","v":2.0}]}""")
+    assert(c == 400, s"$c $body")
+    val (gc, after) = send("GET", "/tables/wire_keep")
+    assert(gc == 200, after)
+    def ids(json: String) =
+      mapper.readTree(json).get("rows").elements().asScala.map(_.get("id").asLong()).toSet
+    assert(ids(after) == Set(1L, 2L), after)
+    assert(ids(after) == ids(before))
+  }
+
+  test("the driver-side render gives toJSON's bytes") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("f", ArrayType(FloatType)),
+      StructField("d", ArrayType(DoubleType)),
+      StructField("s", StructType(Seq(StructField("a", IntegerType),
+        StructField("b", StructType(Seq(StructField("c", StringType),
+          StructField("e", ArrayType(DoubleType)))))))),
+      StructField("ts", TimestampType),
+      StructField("n", StringType),
+      StructField("txt", StringType)))
+    val rows = Seq(
+      Row(1L, Seq(1.5f, Float.NaN, Float.PositiveInfinity, -0.0f, 1e-40f),
+        Seq(Double.NegativeInfinity, 0.1, 1e300, Double.NaN, Double.MinPositiveValue),
+        Row(1, Row("in \"quotes\"", Seq(0.5, -2.0))),
+        java.sql.Timestamp.valueOf("2024-01-02 03:04:05.678901"), null,
+        "tab\t \"q\" back\\slash\nnew é ☃ \u0001 \u2028 </script>"),
+      Row(2L, null, Seq(null, 3.0), Row(null, null), null, null, ""),
+      Row(3L, Seq.empty[Float], Seq(Double.PositiveInfinity), null,
+        java.sql.Timestamp.valueOf("1969-12-31 23:59:59.999"), "x", "\\u0041"))
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val stored = Files.createTempDirectory("graft-render").resolve("t").toString
+    local.write.parquet(stored)
+    for (df <- Seq(local, spark.read.parquet(stored).orderBy("id"))) {
+      val want = df.toJSON.collect().mkString("\n").getBytes("UTF-8")
+      val got = org.apache.spark.sql.GraftShims.jsonRows(df).mkString("\n").getBytes("UTF-8")
+      assert(java.util.Arrays.equals(got, want),
+        s"${new String(got, "UTF-8")}\n!=\n${new String(want, "UTF-8")}")
+    }
+  }
+
+  /** Spark jobs started while `f` runs, on any thread (a request runs
+    * on the server's). */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    def drain(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try f finally { drain(); sc.removeSparkListener(listener) }
+    n.get
+  }
+
+  test("a warm resident probed IVF search runs no Spark job; a tier over the cap runs one") {
+    val root = Files.createTempDirectory("graft-server-resident").toString
+    val e = new Engine(spark, root)
+    val server = new GraftServer(e).start()
+    try {
+      val cfg = graft.coder.CoderConfig(codebookSize = 2, numCodebooks = 1,
+        numEpochs = 1, maxStepsPerEpoch = 2)
+      // a small tier and one past Store.ResidentBytes: 12k rows of 256 floats
+      e.makeTable("small", spark.range(400).selectExpr("id",
+        "transform(sequence(1, 8), x -> CAST(hash(id, x) AS FLOAT) / 2147483648) AS vec"))
+      e.makeTable("big", spark.range(12000).selectExpr("id",
+        "transform(sequence(1, 256), x -> CAST(hash(id, x) AS FLOAT) / 2147483648) AS vec"))
+      e.makeIndex("cs", "small", "vec", cfg)
+      e.makeIndex("cb", "big", "vec", cfg)
+      assert(Index.load(e.store, "cb", "big", "vec").queryExecution.analyzed
+        .stats.sizeInBytes > graft.store.Store.ResidentBytes)
+      def search(source: String, coding: String, dim: Int): Unit = {
+        val (c, body) = sendTo(server, "POST", "/search",
+          s"""{"sources":["$source"],"column":"vec","target":[${Seq.fill(dim)(0.1).mkString(",")}],
+              "coding":"$coding","probes":1,"k":5,"select":["id"],"tieBreak":["id"]}""")
+        assert(c == 200, body)
+        assert(mapper.readTree(body).get("rows").size() == 5, body)
+      }
+      search("small", "cs", 8)
+      search("big", "cb", 256)
+      assert(jobsDuring(search("small", "cs", 8)) == 0, "a warm resident search")
+      assert(e.store.residentBytes > 0 &&
+        e.store.residentBytes <= graft.store.Store.ResidentBytes)
+      assert(jobsDuring(search("big", "cb", 256)) == 1, "a search over the cap")
+    } finally { server.stop(); e.remove() }
   }
 }

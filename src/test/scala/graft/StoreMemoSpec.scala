@@ -6,7 +6,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.util.Try
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShims, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.col
 
 import graft.api.{Engine, Search}
 import graft.coder.CoderConfig
@@ -134,21 +137,157 @@ class StoreMemoSpec extends SparkSuite {
     n.get
   }
 
-  test("a warm served search plans with no Spark job; the IVF action is one job") {
+  test("a warm served search plans with no Spark job; a resident IVF search runs none") {
     val root = Files.createTempDirectory("graft-memo-jobs").toString
     val e = new Engine(spark, root)
     e.makeTable("t", rows(0 until 400))
     e.makeIndex("c", "t", "vec", Cells64)
     e.makeSqIndex("c", "t", "vec")
-    assert(ivf(e).isRight && sq(e).isRight)
     def ivfFrame = e.search("t", "vec", target, coding = Some("c"),
       probes = Some(3), k = 8, tieBreak = Seq("id"))
+    // the coding and the tier's relation resolved, its rows not yet read
+    e.store.loadCoding("c")
+    Index.load(e.store, "c", "t", "vec")
+    assert(e.store.residentBytes == 0)
+    assert(jobsOf(ivfFrame) == 1, "a cold probed IVF search reads the tier")
+    assert(e.store.residentBytes > 0)
+    assert(ivf(e).isRight && sq(e).isRight)
     assert(jobsOf(ivfFrame) == 0, "planning a probed IVF search")
     assert(jobsOf(e.searchSq("t", "vec", target, "c", probes = 3,
       candidates = 40, idCol = "id", k = 8, tieBreak = Seq("id"))) == 0,
       "planning an IVF+SQ8 search")
     val frame = ivfFrame
-    assert(jobsOf(frame.collect()) == 1, "running a probed IVF search")
+    assert(jobsOf(frame.collect()) == 0, "running a resident probed IVF search")
+    e.remove()
+  }
+
+  test("resident rows are given back when their tier is rewritten or dropped") {
+    val root = Files.createTempDirectory("graft-memo-resident").toString
+    val e = new Engine(spark, root)
+    // the heap the IVF copy's rows take: what a resident tier counts
+    def tier: Long = GraftShims.collectInternal(Index.load(e.store, "c", "t", "vec"))
+      .map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum
+    for (cycle <- 0 until 3) {
+      e.makeTable("t", rows(0 until 400, shift = cycle))
+      e.makeIndex("c", "t", "vec", Cells64)
+      val built = ivf(e)
+      assert(built.exists(_.size == 8), built)
+      assert(e.store.residentBytes == tier, s"cycle $cycle: the tier is resident")
+      // a rewrite replaces the memo entry: its rows are re-read, the old
+      // ones given back
+      e.makeTable("t", rows(0 until 400, shift = cycle + 0.5))
+      e.syncIndex("c", "t", "vec")
+      val rebuilt = ivf(e)
+      assert(rebuilt == ivf(new Engine(spark, root)), s"cycle $cycle")
+      assert(rebuilt != built, s"cycle $cycle: served from the new rows")
+      assert(e.store.residentBytes == tier, s"cycle $cycle: one tier held")
+      e.dropIndex("c")
+      assert(e.store.residentBytes == 0, s"cycle $cycle: dropIndex")
+    }
+    e.makeIndex("c", "t", "vec", Cells64)
+    assert(ivf(e).isRight)
+    e.dropTable("t")
+    e.dropIndex("c")
+    assert(e.store.residentBytes == 0)
+    e.remove()
+  }
+
+  test("one query body: a resident leaf and the parquet leaf give the same rows") {
+    val root = Files.createTempDirectory("graft-memo-identity").toString
+    val e = new Engine(spark, root)
+    val cells16 = CoderConfig(metric = "l2", codebookSize = 4, numCodebooks = 2)
+    // 150 vectors in 8 clusters, each stored twice under two ids (ties);
+    // `grp` follows the vector, so a filter keeps both copies or neither;
+    // three rows have no vector, so no cell
+    val base = (0 until 150).map { b =>
+      val r = new scala.util.Random(b)
+      Array.tabulate(8)(d => (b % 8) * 2.0 * (if (d == b % 8) 1 else 0) + r.nextGaussian())
+    }
+    val corpus = ((0 until 300).map { i =>
+      val v = base(i % 150)
+      (i.toLong, (i % 150) % 5, s"row-$i", Option(v.map(_.toFloat).toSeq), Option(v.toSeq))
+    } ++ (300 until 303).map(i => (i.toLong, i % 5, s"row-$i", None, None)))
+      .toDF("id", "grp", "label", "vf", "vd")
+    e.makeTable("t", corpus)
+    e.makeIndex("cf", "t", "vf", cells16)
+    e.makeIndex("cd", "t", "vd", cells16)
+    def resident(coding: String, column: String, cells: Array[Long]) = {
+      val leaf = Index.probedLeaf(e.store, coding, "t", column, cells, 16)
+      assert(leaf.queryExecution.analyzed.collectLeaves()
+        .forall(_.isInstanceOf[LocalRelation]), s"$coding: the tier is resident")
+      leaf
+    }
+    def parquet(coding: String, column: String, cells: Array[Long]) =
+      Index.pruneToCells(Index.load(e.store, coding, "t", column), cells, 16)
+    // leaf by leaf: every single cell, then all of them (where the rows
+    // with no cell join in, as the parquet leaf skips its cell filter)
+    for ((column, coding) <- Seq("vf" -> "cf", "vd" -> "cd");
+         cells <- (0L until 16L).map(Array(_)) :+ (0L until 16L).toArray) {
+      def ids(leaf: DataFrame) = leaf.select("id").as[Long].collect().sorted.toSeq
+      val want = ids(parquet(coding, column, cells))
+      assert(ids(resident(coding, column, cells)) == want, s"$coding cells ${cells.toSeq}")
+      assert(want.exists(_ >= 300) == (cells.length == 16), s"$coding cells ${cells.toSeq}")
+    }
+    val q = Array.tabulate(8)(d => if (d == 2) 4.0 else 0.2)
+    val k = 12
+    var ties = 0
+    for {
+      (column, coding) <- Seq("vf" -> "cf", "vd" -> "cd")
+      metric <- Seq("l2", "cosine", "dot")
+      probes <- Seq(1, 4, 16)
+      filter <- Seq(None, Some(col("grp") =!= 2))
+      select <- Seq(None, Some(Seq("label")), Some(Seq("id", "label", column)))
+      tieBreak <- Seq(Nil, Seq("id"))
+    } {
+      val what = s"$column $metric probes=$probes filter=$filter select=$select tieBreak=$tieBreak"
+      val cells = e.store.loadCoding(coding).rankCells(q, probes)
+      def run(leaf: DataFrame) = Index.probedQuery(leaf, column, q, k, metric,
+        filter, select, tieBreak).collect().toSeq
+      val (want, got) = (run(parquet(coding, column, cells)),
+        run(resident(coding, column, cells)))
+      assert(want.nonEmpty, what)
+      def bits(rows: Seq[Row]) = rows.map(r => Option(r.getAs[java.lang.Double](Search.DistCol))
+        .map(java.lang.Double.doubleToLongBits(_)))
+      assert(bits(got) == bits(want), what)
+      // the vectorless rows' null distance sorts first, at full probes only
+      assert(bits(want).contains(None) == (probes == 16), what)
+      if (bits(want).distinct.size < want.size) ties += 1
+      if (tieBreak.nonEmpty) assert(got == want, what)
+      else {
+        // without a tie-break the order inside a tie is unspecified (Spark's
+        // TakeOrdered is not a stable sort): the same rows at each distance,
+        // save the last, where a tie across the k-th place may keep either
+        // copy (`bits` already holds the count there)
+        def dist(r: Row) = Option(r.getAs[java.lang.Double](Search.DistCol))
+        def byDistance(rows: Seq[Row]) =
+          rows.filterNot(r => want.lastOption.map(dist).contains(dist(r)))
+            .groupBy(dist).view.mapValues(_.map(_.toString).sorted).toMap
+        assert(byDistance(got) == byDistance(want), what)
+      }
+    }
+    assert(ties > 0, "the corpus produced no tie")
+    e.remove()
+  }
+
+  test("a tier whose rows outgrow the cap in memory is served from parquet") {
+    val root = Files.createTempDirectory("graft-memo-heap").toString
+    val e = new Engine(spark, root)
+    // a 32 KiB text repeated on every row: small on disk (dictionary
+    // encoded), about 12 MiB as rows
+    val text = "graft " * 5461
+    e.makeTable("t", rows(0 until 400).withColumn("text", org.apache.spark.sql.functions.lit(text)))
+    e.makeIndex("c", "t", "vec", Cells64)
+    assert(Index.load(e.store, "c", "t", "vec").queryExecution.analyzed
+      .stats.sizeInBytes < graft.store.Store.ResidentBytes, "stored under the cap")
+    e.store.loadCoding("c")
+    def search = e.search("t", "vec", target, coding = Some("c"),
+      probes = Some(3), k = 8, select = Some(Seq("id", "text")), tieBreak = Seq("id"))
+    var cold: Seq[Row] = Nil
+    assert(jobsOf { cold = search.collect().toSeq } == 2, "one read, then the parquet plan")
+    assert(e.store.residentBytes == 0, "the rows were given back")
+    var warm: Seq[Row] = Nil
+    assert(jobsOf { warm = search.collect().toSeq } == 1, "no second read")
+    assert(warm == cold && cold.size == 8 && cold.forall(_.getString(1) == text))
     e.remove()
   }
 }

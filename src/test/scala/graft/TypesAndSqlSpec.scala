@@ -811,12 +811,24 @@ class PlanShapeSpec extends SparkSuite {
       CoderConfig(metric = "l2", codebookSize = 4, numCodebooks = 2,
         batchSize = 128, numEpochs = 1))
     val t = Array.fill(64)(0.1)
-    val df = engine.search("emb", "embedding", t, coding = Some("c"),
-      probes = Some(4), k = 5)
+    // the parquet leaf (a tier over Store.ResidentBytes) through the one
+    // probed query body
+    val coding = engine.store.loadCoding("c")
+    val df = graft.index.Index.probedQuery(graft.index.Index.pruneToCells(
+      graft.index.Index.load(engine.store, "c", "emb", "embedding"),
+      coding.rankCells(t, 4), coding.numCells), "embedding", t, 5, "l2",
+      None, None, Nil)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"no top-k operator:\n$plan")
     val scan = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
     assert(scan.contains("__CODED_ID__"), s"no partition filter on scan:\n$scan")
+    // this small tier is resident: the served search is a local scan of
+    // its top-k rows, no top-k operator and no file scan
+    val served = engine.search("emb", "embedding", t, coding = Some("c"),
+      probes = Some(4), k = 5).queryExecution.executedPlan
+    assert(served.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
+      s"resident search did not plan a local scan:\n$served")
+    assert(served.executeCollect().length == 5)
     engine.remove()
   }
 
