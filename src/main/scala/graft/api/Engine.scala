@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.coder.{CoderConfig, Coding}
@@ -1217,17 +1217,19 @@ class Engine(val spark: SparkSession, val root: String,
     * final distances — the shared merge step of every multi-source
     * search path. One source is its own result. The per-source frames
     * keep the `tieBreak` columns through `select` so the merge can
-    * order on them; the projection is applied after the merge. */
+    * order on them; the projection is applied after the merge. Over
+    * resident sources the merge finishes on the driver
+    * ([[GraftShims.localTopK]]). */
   private def unionTopK(sources: Seq[String], k: Int,
       select: Option[Seq[String]], tieBreak: Seq[String])(
       perSource: (String, Option[Seq[String]]) => DataFrame): DataFrame =
     if (sources.size == 1) perSource(sources.head, select)
     else {
       val wide = select.map(cols => (cols ++ tieBreak).distinct)
-      val top = sources.map(perSource(_, wide))
+      val top = GraftShims.localTopK(sources.map(perSource(_, wide))
         .reduce(_ unionByName _)
-        .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
-        .limit(k)
+        .orderBy(col(Search.DistCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
+        .limit(k))
       select.fold(top)(cols => top.select((cols :+ Search.DistCol).map(col): _*))
     }
 
@@ -1649,7 +1651,7 @@ class Engine(val spark: SparkSession, val root: String,
         import graft.functions.functions.{maxsim, tokens_lit}
         docs.withColumn(Search.DistCol,
             maxsim(col(tokensCol), tokens_lit(query), metric))
-          .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
+          .orderBy(col(Search.DistCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
           .limit(k)
       case _ =>
         Search.maxsimSearch(store.loadTable(source), tokensCol, query,

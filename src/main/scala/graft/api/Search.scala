@@ -90,7 +90,7 @@ object Search {
       .withColumn(distCol, vector_distance(col(vecCol), col(targetCol), metric))
       .drop(targetCol)
     val projected = select.fold(withDist)(cols => withDist.select((cols :+ distCol).map(col): _*))
-    projected.orderBy(col(distCol).asc +: tieBreak.map(col(_).asc): _*).limit(k)
+    projected.orderBy(col(distCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*).limit(k)
   }
 
   /** Matryoshka (MRL) prefix-truncation search: coarse-rank on the FIRST
@@ -131,14 +131,14 @@ object Search {
     val coarseIds = base
       .select(col(idCol), coarseVec.as("__PFX__"))
       .withColumn("__PD__", vector_distance(col("__PFX__"), prefixTarget, metric))
-      .orderBy(col("__PD__").asc, col(idCol).asc)
+      .orderBy(col("__PD__").asc_nulls_last, col(idCol).asc)
       .limit(candidates)
       .select(idCol)
     val reranked = base.join(broadcast(coarseIds), Seq(idCol))
       .withColumn(DistCol, vector_distance(col(vecCol), target.lit, metric))
     val projected = select.fold(reranked)(cols =>
       reranked.select((cols :+ DistCol).map(col): _*))
-    projected.orderBy(col(DistCol).asc +: tieBreak.map(col(_).asc): _*).limit(k)
+    projected.orderBy(col(DistCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*).limit(k)
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Buettcher 2009): combine
@@ -241,7 +241,7 @@ object Search {
       idCol: Option[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col(distCol).asc +: tieBreak.map(col(_).asc): _*)
+      .orderBy(col(distCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
     idCol match {
       case Some(id) =>
         val coarseCols = (id +: tieBreak).distinct
@@ -310,13 +310,13 @@ object Search {
         }
         docs.withColumn("__POOL_DIST__",
             vector_distance(pooled, vector_lit(pooledQuery), metric))
-          .orderBy(ord(Seq(col("__POOL_DIST__").asc)): _*)
+          .orderBy(ord(Seq(col("__POOL_DIST__").asc_nulls_last)): _*)
           .limit(candidates)
           .drop("__POOL_DIST__")
       }
     coarse
       .withColumn(distCol, maxsim(col(tokensCol), tokens_lit(query), metric))
-      .orderBy(ord(Seq(col(distCol).asc)): _*)
+      .orderBy(ord(Seq(col(distCol).asc_nulls_last)): _*)
       .limit(k)
   }
 
@@ -367,7 +367,7 @@ object Search {
     val qs = queries.select(col(queryIdCol), col(queryTokensCol))
     chunkTokenBatch(qs, queryIdCol, queryTokensCol, broadcastCapBytes).map { ch =>
       val w = Window.partitionBy(col(queryIdCol))
-        .orderBy(col(distCol).asc +: tieBreak.map(col(_).asc): _*)
+        .orderBy(col(distCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
       val coarseCols = (idCol +: tieBreak).distinct
       val scored = corpus
         .select((coarseCols :+ tokensCol).distinct.map(col): _*)

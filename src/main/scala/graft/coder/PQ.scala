@@ -169,7 +169,9 @@ object PQ {
     * corpora), so training cost is independent of corpus size; the
     * corpus-scale passes (encode, ADC scan) are distributed. */
   def train(df: DataFrame, column: String, cfg: PQConfig): PQCodebooks = {
-    val rows = df.select(col(column).cast("array<double>"))
+    // a row with no vector has no code: it trains nothing
+    val rows = df.filter(col(column).isNotNull)
+      .select(col(column).cast("array<double>"))
       .limit(cfg.sampleSize).collect()
       .map(_.getSeq[Double](0).toArray)
     require(rows.nonEmpty, "PQ.train: empty input")
@@ -566,14 +568,14 @@ object PQ {
         "Index.searchIvfPq, not the flat PQ.search path")
     val coarse = dfWithCodes
       .withColumn("__ADC__", adcScoreExpr(col(codesCol), cb, target))
-      .orderBy(col("__ADC__").asc +: tieBreak.map(col(_).asc): _*)
+      .orderBy(col("__ADC__").asc_nulls_last +: tieBreak.map(col(_).asc): _*)
       .limit(candidates)
     coarse
       .withColumn(graft.api.Search.DistCol,
         graft.functions.functions.vector_distance(
           col(vecCol), typedLit(target.toSeq), cb.canonicalMetric))
       .drop("__ADC__")
-      .orderBy(col(graft.api.Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
+      .orderBy(col(graft.api.Search.DistCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
       .limit(k)
   }
 }

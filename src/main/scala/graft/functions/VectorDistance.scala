@@ -45,6 +45,16 @@ case class VectorDistance(left: Expression, right: Expression, metric: String)
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
+  // what nullSafeEval dispatches on, resolved once rather than per row
+  // (lazy: the children are unresolved at construction time)
+  @transient private lazy val leftFloat = isFloat(left)
+  @transient private lazy val rightFloat = isFloat(right)
+  @transient private lazy val kernel: Int = metric match {
+    case "l2" => 0
+    case "cosine" => 1
+    case "dot" => 2
+  }
+
   override def nullSafeEval(uAny: Any, vAny: Any): Any = {
     val u = uAny.asInstanceOf[ArrayData]
     val v = vAny.asInstanceOf[ArrayData]
@@ -52,7 +62,7 @@ case class VectorDistance(left: Expression, right: Expression, metric: String)
     if (v.numElements() != n)
       throw new IllegalArgumentException(
         s"vector_distance: dim mismatch ${n} vs ${v.numElements()}")
-    val uf = isFloat(left); val vf = isFloat(right)
+    val uf = leftFloat; val vf = rightFloat
     var c = 0
     while (c < n) {
       if (u.isNullAt(c) || v.isNullAt(c))
@@ -61,19 +71,19 @@ case class VectorDistance(left: Expression, right: Expression, metric: String)
     }
     @inline def ue(i: Int): Double = if (uf) u.getFloat(i).toDouble else u.getDouble(i)
     @inline def ve(i: Int): Double = if (vf) v.getFloat(i).toDouble else v.getDouble(i)
-    metric match {
-      case "l2" =>
+    kernel match {
+      case 0 =>
         var acc = 0.0; var i = 0
         while (i < n) { val d = ue(i) - ve(i); acc += d * d; i += 1 }
         math.sqrt(acc)
-      case "cosine" =>
+      case 1 =>
         var dot = 0.0; var nu = 0.0; var nv = 0.0; var i = 0
         while (i < n) {
           val a = ue(i); val b = ve(i)
           dot += a * b; nu += a * a; nv += b * b; i += 1
         }
         0.5 - 0.5 * (dot / math.sqrt(nu * nv))
-      case "dot" =>
+      case _ =>
         var dot = 0.0; var i = 0
         while (i < n) { dot += ue(i) * ve(i); i += 1 }
         -dot

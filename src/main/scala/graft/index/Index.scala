@@ -537,21 +537,17 @@ object Index {
     * every cell directory and runs one Spark job to infer the schema,
     * while a reused frame prunes cells on its in-memory file index.
     * Build, sync, repair and compaction each rewrite `_SUCCESS` or the
-    * stamp, or change the directory's entries. The IVF tier's entry is
-    * a [[Store#Resident]] ([[ivfTier]]). */
+    * stamp, or change the directory's entries. */
   private def loadTier(store: Store, codingName: String, source: String,
       column: String, tier: String): DataFrame =
-    if (tier == "ivf") ivfTier(store, codingName, source, column).frame
-    else {
-      val path = tierPath(store, codingName, source, column, tier)
-      store.memo(path, Seq("_SUCCESS", StampFile))(readTier(store, path))
-    }
+    residentTier(store, codingName, source, column, tier).frame
 
-  /** The IVF tier's memo entry: its relation, and its rows grouped by
-    * cell once a probed search over a small tier has read them. */
-  private def ivfTier(store: Store, codingName: String, source: String,
-      column: String): store.Resident = {
-    val path = tierPath(store, codingName, source, column, "ivf")
+  /** A tier's memo entry: its relation, and its rows grouped by cell
+    * once a probed search over a small tier has read them
+    * ([[Store#Resident]]). */
+  private def residentTier(store: Store, codingName: String, source: String,
+      column: String, tier: String): store.Resident = {
+    val path = tierPath(store, codingName, source, column, tier)
     store.memo(path, Seq("_SUCCESS", StampFile))(
       new store.Resident(readTier(store, path), CodeCol))
   }
@@ -566,18 +562,19 @@ object Index {
   def load(store: Store, codingName: String, source: String, column: String): DataFrame =
     loadTier(store, codingName, source, column, "ivf")
 
-  /** The leaf of a probed IVF search: the rows of the probed `cells`,
-    * from the driver when the tier is resident ([[ivfTier]]), otherwise
-    * the parquet relation pruned to those cells. Like [[pruneToCells]],
-    * a full probe also keeps the rows with no cell (a null vector). */
+  /** The leaf of a probed search over `tier` (ivf | sq | bq | pq): the
+    * rows of the probed `cells`, from the driver when the tier is
+    * resident ([[residentTier]]), otherwise the parquet relation pruned
+    * to those cells. Like [[pruneToCells]], a full probe also keeps the
+    * rows with no cell (a null vector). */
   private[graft] def probedLeaf(store: Store, codingName: String,
-      source: String, column: String, cells: Array[Long],
+      source: String, column: String, tier: String, cells: Array[Long],
       numCells: Long): DataFrame = {
-    val tier = ivfTier(store, codingName, source, column)
-    tier.cells.fold(pruneToCells(tier.frame, cells, numCells)) { byCell =>
+    val t = residentTier(store, codingName, source, column, tier)
+    t.cells.fold(pruneToCells(t.frame, cells, numCells)) { byCell =>
       val keys = cells.toSeq.map(Option(_)) ++
         (if (cells.length >= numCells) Seq(None) else Nil)
-      GraftShims.localFrame(tier.frame, keys.flatMap(byCell.get).flatten)
+      GraftShims.localFrame(t.frame, keys.flatMap(byCell.get).flatten)
     }
   }
 
@@ -598,12 +595,15 @@ object Index {
 
   /** The shared tail of every single-target search: optional
     * projection (the distance column always kept), then top-k by
-    * distance and `tieBreak`. */
+    * distance and `tieBreak`, finished on the driver over a resident
+    * leaf ([[GraftShims.localTopK]]). A null distance (a row with no
+    * vector) sorts last. */
   private def topK(scored: DataFrame, k: Int, select: Option[Seq[String]],
       tieBreak: Seq[String]): DataFrame =
-    select.fold(scored)(cols => scored.select((cols :+ Search.DistCol).map(col): _*))
-      .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
-      .limit(k)
+    GraftShims.localTopK(
+      select.fold(scored)(cols => scored.select((cols :+ Search.DistCol).map(col): _*))
+        .orderBy(col(Search.DistCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
+        .limit(k))
 
   /** Probed top-k search (reference V8 with coding+probes,
     * `index.py:113-126`): rank cells driver-side from the coding, prune to
@@ -626,7 +626,7 @@ object Index {
     val coding = store.loadCoding(codingName)
     val m = metric.getOrElse(coding.config.metric)
     val cells = coding.rankCells(target.doubles, probes)
-    probedQuery(probedLeaf(store, codingName, source, column, cells,
+    probedQuery(probedLeaf(store, codingName, source, column, "ivf", cells,
       coding.numCells), column, target, k, m, filter, select, tieBreak)
   }
 
@@ -639,9 +639,9 @@ object Index {
       target: graft.api.TargetVector, k: Int, metric: String,
       filter: Option[Column], select: Option[Seq[String]],
       tieBreak: Seq[String]): DataFrame =
-    GraftShims.localTopK(topK(filter.fold(leaf)(leaf.filter).withColumn(
+    topK(filter.fold(leaf)(leaf.filter).withColumn(
       Search.DistCol, vector_distance(col(column), target.lit, metric)),
-      k, select, tieBreak))
+      k, select, tieBreak)
 
   // ——— two-pass probed search: one body, four candidate tiers ———
 
@@ -680,14 +680,17 @@ object Index {
   private val CoarseCol = "__coarse__"
 
   /** The one body of the single-target two-pass searches: load the
-    * coding and rank the cells (`probes = None` ranks all of them);
-    * prune the tier copy to the probed cells; apply the filter — to
-    * BOTH passes, since it is pushed into the coarse scan, so the
-    * candidate budget is spent on qualifying rows only; score the
-    * (id, cell, codes) projection and keep the best `candidates` ids
-    * (TakeOrdered, no full sort), ties broken on `coarseTies`;
-    * broadcast-join those ids back against the same pruned rows; score
-    * them exactly and take the top-k. `idCol` must be unique per row. */
+    * coding and rank the cells (`probes = None` ranks all of them); take
+    * the tier's [[probedLeaf]]; apply the filter — to BOTH passes, since
+    * it is pushed into the coarse scan, so the candidate budget is spent
+    * on qualifying rows only; score the (id, cell, codes) projection and
+    * keep the best `candidates` ids (TakeOrdered, no full sort; a null
+    * score sorts last), ties broken on `coarseTies`; join those ids back
+    * against the same probed rows ([[GraftShims.joinOnIds]]: a broadcast
+    * join over parquet, an id filter over resident rows); score them
+    * exactly and take the top-k. Over a resident leaf both top-ks finish
+    * on the driver ([[GraftShims.localTopK]]) and the frame runs no job.
+    * `idCol` must be unique per row. */
   private def twoPass(tierOf: TierOf, coarseTies: Seq[String],
       store: Store, codingName: String, source: String, column: String,
       target: graft.api.TargetVector, k: Int, probes: Option[Int],
@@ -700,17 +703,16 @@ object Index {
     val tier = tierOf(store, codingName, source, column, coding, metric)
     val cells = coding.rankCells(target.doubles,
       probes.getOrElse(coding.numCells.toInt))
-    val probed = pruneToCells(
-      loadTier(store, codingName, source, column, tier.name),
+    val probed = probedLeaf(store, codingName, source, column, tier.name,
       cells, coding.numCells)
     val pruned = filter.fold(probed)(probed.filter)
-    val coarseIds = pruned
+    val coarseIds = GraftShims.localTopK(pruned
       .select((Seq(idCol, CodeCol) ++ tier.codes ++ coarseTies).distinct.map(col): _*)
       .withColumn(CoarseCol, tier.score(target, cells))
-      .orderBy(col(CoarseCol).asc +: coarseTies.map(col(_).asc): _*)
-      .limit(candidates)
+      .orderBy(col(CoarseCol).asc_nulls_last +: coarseTies.map(col(_).asc): _*)
+      .limit(candidates))
       .select(idCol)
-    val reranked = pruned.join(broadcast(coarseIds), Seq(idCol))
+    val reranked = GraftShims.joinOnIds(pruned, coarseIds, idCol)
       .withColumn(Search.DistCol,
         vector_distance(col(column), target.lit, tier.metric))
     topK(tier.codes.fold(reranked)(reranked.drop), k, select, tieBreak)
@@ -824,6 +826,7 @@ object Index {
         val vecSum = udaf(graft.coder.VecSumAgg)
         assigned
           .select(col(CodeCol), col(ResBase).as("__v__"))
+          .filter(col(CodeCol).isNotNull) // no vector, no cell
           .groupBy(col(CodeCol))
           .agg(vecSum(col("__v__")).as("s"), count(col("__v__")).as("n"))
           .collect()
@@ -1621,7 +1624,7 @@ object Index {
       .withColumn(Search.DistCol, vector_distance(col(column), col(queryVecCol), m))
       .select(col(queryIdCol) +: col(Search.DistCol) +: coarseCols.map(col): _*)
     val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
+      .orderBy(col(Search.DistCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
     val topk = scored.withColumn("__rank__", row_number().over(w))
       .filter(col("__rank__") <= k)
       .select(col(queryIdCol), col(Search.DistCol), col(idCol))
@@ -1672,7 +1675,7 @@ object Index {
           .join(broadcast(qSide), col(CodeCol) === col(CellCol))
           .select(col(queryIdCol), col(idCol), score.as(CoarseCol))
         val w = Window.partitionBy(col(queryIdCol))
-          .orderBy(col(CoarseCol).asc, col(idCol).asc)
+          .orderBy(col(CoarseCol).asc_nulls_last, col(idCol).asc)
         val survivors = coarse.withColumn("__crank__", row_number().over(w))
           .filter(col("__crank__") <= candidates)
           .select(col(queryIdCol), col(idCol))
@@ -1711,7 +1714,7 @@ object Index {
         vector_distance(col(column), col(queryVecCol), metric))
       .select((rerankCols :+ Search.DistCol).map(col): _*)
     val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col(Search.DistCol).asc +: tieBreak.map(col(_).asc): _*)
+      .orderBy(col(Search.DistCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
     val topk = scored.withColumn("__rank__", row_number().over(w))
       .filter(col("__rank__") <= k).drop("__rank__")
     broadcast(topk).join(corpus.select(col(idCol), col(column)), Seq(idCol))

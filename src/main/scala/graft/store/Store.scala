@@ -158,15 +158,15 @@ class Store(val spark: SparkSession, val root: String) {
     was - from + bytes <= Store.ResidentBytes
   }
 
-  /** A memoized IVF tier relation that can also keep its rows on the
-    * driver, grouped by the cell id in `cellCol` (`None`: a row with no
-    * cell, whose vector is null). [[Store.ResidentBytes]] caps the heap
-    * the rows of every resident tier of this store take together. Before
-    * the first read a tier counts its stored bytes (the scan's size
-    * estimate, the files' total length: no job); the read then counts
-    * what its rows really take (their `UnsafeRow` bytes: a repetitive
-    * column takes several times its compressed size), and keeps them
-    * only if that fits. [[cells]] reads on first use — callers racing a
+  /** A memoized cell tier relation (ivf, sq, bq or pq) that can also
+    * keep its rows on the driver, grouped by the cell id in `cellCol`
+    * (`None`: a row with no cell, whose vector is null).
+    * [[Store.ResidentBytes]] caps the heap the rows of every resident
+    * tier of this store take together. Before the first read a tier
+    * counts its stored bytes (the scan's size estimate, the files'
+    * total length: no job); the read then counts what its rows really
+    * take (their `UnsafeRow` bytes: a repetitive column takes several
+    * times its compressed size), and keeps them only if that fits. [[cells]] reads on first use — callers racing a
     * cold read wait for it — and is `None` when the rows do not fit
     * beside what is already held (the caller serves the frame instead;
     * the next use tries again, by the known size, with no job), when
@@ -738,7 +738,7 @@ class Store(val spark: SparkSession, val root: String) {
 object Store {
   import org.apache.spark.sql.Column
 
-  /** Cap on the heap the rows of one store's resident IVF tiers take
+  /** Cap on the heap the rows of one store's resident cell tiers take
     * on the driver ([[Store#Resident]]), per tier and in total (DESIGN
     * §19 for how it was sized). */
   private[graft] val ResidentBytes: Long = 8L << 20

@@ -105,8 +105,14 @@ class BqSpec extends SparkSuite {
       metric = Some("l2"), tieBreak = Seq("id"))
     assert(full.select("id").as[Long].collect().toSeq == brute)
 
-    // the coarse scan reads 1-bit codes, not the vector column
-    val planStr = full.queryExecution.executedPlan.toString
+    // the coarse scan reads 1-bit codes, not the vector column, in the
+    // parquet plan (a second engine whose resident budget is taken, as
+    // for a tier past the cap; a resident tier scans no file)
+    val cold = new Engine(spark, engine.store.root)
+    val planStr = overCap(cold.store)(cold.searchBq("bqv", "vec", target, coding = "bc",
+      probes = 16, candidates = 1 << 20, idCol = "id", k = 10,
+      metric = Some("l2"), tieBreak = Seq("id")))
+      .queryExecution.executedPlan.toString
     val scans = planStr.split("\n").filter(_.contains("ReadSchema"))
     assert(scans.exists(l => l.contains(Index.BqCol) && !l.contains("vec:")),
       s"no codes-only scan found:\n$planStr")

@@ -24,6 +24,46 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   def sf(dir: String, table: String) =
     spark.read.parquet(s"/root/testdata/$dir/$table.parquet")
 
+  /** Spark jobs started on this thread while `f` runs. */
+  def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try f
+    finally {
+      sc.clearJobGroup()
+      // listener delivery is asynchronous: drain the bus before reading
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  /** Runs `f` with `store`'s driver-residency budget
+    * ([[graft.store.Store.ResidentBytes]]) used up by a filler entry, so
+    * a tier not already resident is served from parquet — the plan a
+    * tier over the cap gets — then gives the budget back. */
+  def overCap[A](store: graft.store.Store)(f: => A): A = {
+    import spark.implicits._
+    // one row of (null cell, bytes): an UnsafeRow of 8 (null bits) +
+    // 2 × 8 (fixed slots) + the bytes, rounded up to a word
+    val free = graft.store.Store.ResidentBytes - store.residentBytes
+    val filler = Seq((Option.empty[Long], new Array[Byte]((free - 24).toInt)))
+      .toDF("cell", "bytes")
+    val key = s"/graft-over-cap-${System.nanoTime()}"
+    assert(store.memo(key)(new store.Resident(filler, "cell")).cells.nonEmpty)
+    assert(store.residentBytes == graft.store.Store.ResidentBytes)
+    try f finally store.forget(key)
+  }
+
   /** Asserts the batch-kNN-join scale contract: the corpus side never
     * shuffles by its id column — the rerank reads it through a
     * broadcast of the survivor ids, so the only hash exchanges in the

@@ -1925,4 +1925,41 @@ class ServerSpec extends SparkSuite {
       assert(jobsDuring(search("big", "cb", 256)) == 1, "a search over the cap")
     } finally { server.stop(); e.remove() }
   }
+
+  test("an IVF+SQ8 reply is the same bytes from resident tiers and from parquet; warm, it runs no job") {
+    val root = Files.createTempDirectory("graft-server-sq").toString
+    val e = new Engine(spark, root)
+    val server = new GraftServer(e).start()
+    try {
+      val cfg = graft.coder.CoderConfig(codebookSize = 4, numCodebooks = 2,
+        numEpochs = 1, maxStepsPerEpoch = 2)
+      for ((source, from) <- Seq("a" -> 0, "b" -> 1000))
+        e.makeTable(source, spark.range(from, from + 600).selectExpr("id",
+          "transform(sequence(1, 8), x -> CAST(hash(id % 300, x) AS FLOAT) / 2147483648) AS vec",
+          "concat('row-', id) AS label"))
+      e.makeIndex("c", "a", "vec", cfg)
+      e.syncIndex("c", "b", "vec")
+      e.makeSqIndex("c", "a", "vec")
+      e.makeSqIndex("c", "b", "vec")
+      // one source and two (the merge of their top-ks); ids 0-299 and
+      // 300-599 of a source share their vectors, so distances tie
+      val requests = Seq("""["a"]""", """["a","b"]""").map(sources =>
+        s"""{"sources":$sources,"column":"vec","target":[0.1,-0.2,0.3,0,0.1,0.2,-0.1,0],
+            "coding":"c","probes":2,"candidates":30,"idCol":"id","sq":true,
+            "k":12,"tieBreak":["id"]}""")
+      def replies(): Seq[String] = requests.map { body =>
+        val (c, reply) = sendTo(server, "POST", "/search", body)
+        assert(c == 200, reply)
+        reply
+      }
+      val parquet = overCap(e.store)(replies())
+      assert(e.store.residentBytes == 0)
+      assert(mapper.readTree(parquet(1)).get("rows").size() == 12, parquet(1))
+      replies() // reads the tiers
+      assert(e.store.residentBytes > 0)
+      var resident: Seq[String] = Nil
+      assert(jobsDuring { resident = replies() } == 0, "warm resident IVF+SQ8 replies")
+      for ((got, want) <- resident.zip(parquet)) assert(got == want)
+    } finally { server.stop(); e.remove() }
+  }
 }

@@ -1,12 +1,10 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftShims, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
@@ -114,29 +112,6 @@ class StoreMemoSpec extends SparkSuite {
     w.remove()
   }
 
-  /** Spark jobs started on this thread while `f` runs. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"memo-jobs-${System.nanoTime()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "memo job count")
-    try f
-    finally {
-      sc.clearJobGroup()
-      // listener delivery is asynchronous: drain the bus before reading
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
-
   test("a warm served search plans with no Spark job; a resident IVF search runs none") {
     val root = Files.createTempDirectory("graft-memo-jobs").toString
     val e = new Engine(spark, root)
@@ -145,19 +120,38 @@ class StoreMemoSpec extends SparkSuite {
     e.makeSqIndex("c", "t", "vec")
     def ivfFrame = e.search("t", "vec", target, coding = Some("c"),
       probes = Some(3), k = 8, tieBreak = Seq("id"))
-    // the coding and the tier's relation resolved, its rows not yet read
+    def sqFrame = e.searchSq("t", "vec", target, "c", probes = 3,
+      candidates = 40, idCol = "id", k = 8, tieBreak = Seq("id"))
+    // the coding and the tiers' relations resolved, their rows not yet
+    // read (with the budget taken, planning reads no rows)
     e.store.loadCoding("c")
     Index.load(e.store, "c", "t", "vec")
+    overCap(e.store)(sqFrame)
+    assert(jobsOf(overCap(e.store)(sqFrame)) == 0,
+      "planning an IVF+SQ8 search over a tier past the cap")
     assert(e.store.residentBytes == 0)
     assert(jobsOf(ivfFrame) == 1, "a cold probed IVF search reads the tier")
-    assert(e.store.residentBytes > 0)
+    val ivfBytes = e.store.residentBytes
+    assert(ivfBytes > 0)
+    assert(jobsOf(sqFrame) == 1, "a cold probed IVF+SQ8 search reads the tier")
+    assert(e.store.residentBytes > ivfBytes)
     assert(ivf(e).isRight && sq(e).isRight)
     assert(jobsOf(ivfFrame) == 0, "planning a probed IVF search")
-    assert(jobsOf(e.searchSq("t", "vec", target, "c", probes = 3,
-      candidates = 40, idCol = "id", k = 8, tieBreak = Seq("id"))) == 0,
-      "planning an IVF+SQ8 search")
-    val frame = ivfFrame
-    assert(jobsOf(frame.collect()) == 0, "running a resident probed IVF search")
+    assert(jobsOf(sqFrame) == 0, "planning an IVF+SQ8 search")
+    val (i, s) = (ivfFrame, sqFrame)
+    assert(jobsOf(i.collect()) == 0, "running a resident probed IVF search")
+    assert(jobsOf(s.collect()) == 0, "running a resident IVF+SQ8 search")
+    // a write replaces the SQ8 tier's entry: the first search after it
+    // reads the new rows in one job, as a cold IVF search does
+    e.makeTable("t", rows(0 until 400, shift = 0.5))
+    e.syncIndex("c", "t", "vec")
+    e.makeSqIndex("c", "t", "vec")
+    e.store.loadCoding("c")
+    Index.load(e.store, "c", "t", "vec")
+    overCap(e.store)(sqFrame)
+    assert(jobsOf(sqFrame) == 1, "the first IVF+SQ8 search after a write")
+    assert(jobsOf(sqFrame.collect()) == 0, "and the next one runs none")
+    assert(sq(e) == sq(new Engine(spark, root)))
     e.remove()
   }
 
@@ -212,7 +206,7 @@ class StoreMemoSpec extends SparkSuite {
     e.makeIndex("cf", "t", "vf", cells16)
     e.makeIndex("cd", "t", "vd", cells16)
     def resident(coding: String, column: String, cells: Array[Long]) = {
-      val leaf = Index.probedLeaf(e.store, coding, "t", column, cells, 16)
+      val leaf = Index.probedLeaf(e.store, coding, "t", column, "ivf", cells, 16)
       assert(leaf.queryExecution.analyzed.collectLeaves()
         .forall(_.isInstanceOf[LocalRelation]), s"$coding: the tier is resident")
       leaf
@@ -243,14 +237,17 @@ class StoreMemoSpec extends SparkSuite {
       val cells = e.store.loadCoding(coding).rankCells(q, probes)
       def run(leaf: DataFrame) = Index.probedQuery(leaf, column, q, k, metric,
         filter, select, tieBreak).collect().toSeq
-      val (want, got) = (run(parquet(coding, column, cells)),
-        run(resident(coding, column, cells)))
+      val want = run(parquet(coding, column, cells))
+      var got: Seq[Row] = Nil
+      val leaf = resident(coding, column, cells)
+      assert(jobsOf { got = run(leaf) } == 0, s"$what: a resident search ran a job")
       assert(want.nonEmpty, what)
       def bits(rows: Seq[Row]) = rows.map(r => Option(r.getAs[java.lang.Double](Search.DistCol))
         .map(java.lang.Double.doubleToLongBits(_)))
       assert(bits(got) == bits(want), what)
-      // the vectorless rows' null distance sorts first, at full probes only
-      assert(bits(want).contains(None) == (probes == 16), what)
+      // the vectorless rows (in the leaf at full probes only) sort last:
+      // never in a top-12 with 270+ vectors to rank
+      assert(!bits(want).contains(None), what)
       if (bits(want).distinct.size < want.size) ties += 1
       if (tieBreak.nonEmpty) assert(got == want, what)
       else {
@@ -259,6 +256,109 @@ class StoreMemoSpec extends SparkSuite {
         // save the last, where a tie across the k-th place may keep either
         // copy (`bits` already holds the count there)
         def dist(r: Row) = Option(r.getAs[java.lang.Double](Search.DistCol))
+        def byDistance(rows: Seq[Row]) =
+          rows.filterNot(r => want.lastOption.map(dist).contains(dist(r)))
+            .groupBy(dist).view.mapValues(_.map(_.toString).sorted).toMap
+        assert(byDistance(got) == byDistance(want), what)
+      }
+    }
+    assert(ties > 0, "the corpus produced no tie")
+    e.remove()
+  }
+
+  test("one two-pass body: every candidate tier gives the same rows from both leaves") {
+    val root = Files.createTempDirectory("graft-memo-twopass").toString
+    val e = new Engine(spark, root)
+    val cells16 = CoderConfig(metric = "l2", codebookSize = 4, numCodebooks = 2)
+    // the identity corpus above: 150 vectors stored twice (ties), `grp`
+    // following the vector, three rows with no vector
+    val base = (0 until 150).map { b =>
+      val r = new scala.util.Random(b)
+      Array.tabulate(8)(d => (b % 8) * 2.0 * (if (d == b % 8) 1 else 0) + r.nextGaussian())
+    }
+    val corpus = ((0 until 300).map { i =>
+      val v = base(i % 150)
+      (i.toLong, (i % 150) % 5, s"row-$i", Option(v.map(_.toFloat).toSeq), Option(v.toSeq))
+    } ++ (300 until 303).map(i => (i.toLong, i % 5, s"row-$i", None, None)))
+      .toDF("id", "grp", "label", "vf", "vd")
+    e.makeTable("t", corpus)
+    e.makeIndex("cf", "t", "vf", cells16)
+    e.makeIndex("cd", "t", "vd", cells16)
+    // global codecs on the float column, per-cell ones on the double one
+    e.makeSqIndex("cf", "t", "vf")
+    e.makeSqIndex("cd", "t", "vd", perCell = true)
+    e.makeBqIndex("cf", "t", "vf")
+    e.makeBqIndex("cd", "t", "vd", perCell = true)
+    val pqCfg = graft.coder.PQ.PQConfig(numSubspaces = 2, codebookSize = 8)
+    e.makePqIndex("cf", "t", "vf", pqCfg)
+    e.makePqIndex("cd", "t", "vd", pqCfg)
+    val q = Array.tabulate(8)(d => if (d == 2) 4.0 else 0.2)
+    val k = 12
+    type TwoPass = (String, String, String, Option[Int], Int, Option[Column],
+      Option[Seq[String]], Seq[String]) => DataFrame
+    // (tier, metrics, search: coding, column, metric, probes, candidates,
+    // filter, select, tieBreak)
+    val tiers: Seq[(String, Seq[String], TwoPass)] = Seq(
+      ("sq", Seq("l2", "cosine", "dot"), (c, v, m, p, n, f, s, t) =>
+        Index.searchSq(e.store, c, "t", v, q, k, p.get, n, "id", Some(m), f, s, t)),
+      ("bq", Seq("l2", "cosine", "dot"), (c, v, m, p, n, f, s, t) =>
+        Index.searchBq(e.store, c, "t", v, q, k, p.get, n, "id", Some(m), f, s, t)),
+      ("pq", Seq("l2"), (c, v, m, p, n, f, s, t) =>
+        Index.searchIvfPq(e.store, c, "t", v, q, k, p.get, n, "id", Some(m), f, s, t)),
+      ("rerank", Seq("l2", "cosine", "dot"), (c, v, m, p, n, f, s, t) =>
+        Index.searchRerank(e.store, c, "t", v, q, k, n, "id", p, Some(m), f, s, t)))
+    val filters = Seq(None, Some(col("grp") =!= 2))
+    val cases = for {
+      (tier, metrics, search) <- tiers
+      (column, coding) <- Seq("vf" -> "cf", "vd" -> "cd")
+      metric <- metrics
+      (probes, at) <- Seq(Some(1), Some(4), Some(16)).zipWithIndex
+      candidates <- Seq(20, 1000)
+      tieBreak <- Seq(Nil, Seq("id"))
+      // without a tie-break the rerank tier's coarse pass (a cell rank,
+      // tied across a cell) keeps an unspecified subset on both leaves
+      if tier != "rerank" || tieBreak.nonEmpty || candidates >= 303
+    } yield {
+      val n = at * 4 + (candidates / 1000) * 2 + tieBreak.size
+      val filter = filters(n % 2)
+      val select = Seq(None, Some(Seq("label")), Some(Seq("id", "label", column)))(n / 2 % 3)
+      (s"$tier $column $metric probes=$probes candidates=$candidates " +
+        s"filter=$filter select=$select tieBreak=$tieBreak",
+        () => search(coding, column, metric,
+          if (tier == "rerank" && probes.contains(16)) None else probes,
+          candidates, filter, select, tieBreak),
+        tieBreak)
+    }
+    def run(df: DataFrame) = (df.schema, df.collect().toSeq)
+    // the budget taken: every tier is served from parquet
+    val parquet = overCap(e.store)(cases.map(c => run(c._2())))
+    assert(e.store.residentBytes == 0)
+    cases.foreach(c => run(c._2())) // reads each tier once
+    for ((coding, column) <- Seq("cf" -> "vf", "cd" -> "vd"); tier <- Seq("ivf", "sq", "bq", "pq"))
+      assert(Index.probedLeaf(e.store, coding, "t", column, tier, Array(0L), 16)
+        .queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]),
+        s"$coding $tier is resident")
+    // both passes over resident tiers finish on the driver
+    val resident = cases.map { case (what, search, _) =>
+      var got: (org.apache.spark.sql.types.StructType, Seq[Row]) = null
+      val jobs = jobsOf { got = run(search()) }
+      assert(jobs == 0, s"$what: $jobs jobs\n${search().queryExecution.optimizedPlan}")
+      got
+    }
+    def dist(r: Row) = Option(r.getAs[java.lang.Double](Search.DistCol))
+    def bits(rows: Seq[Row]) = rows.map(dist(_).map(java.lang.Double.doubleToLongBits(_)))
+    var ties = 0
+    for (((what, _, tieBreak), (wantSchema, want), (gotSchema, got)) <-
+        cases.lazyZip(parquet).lazyZip(resident)) {
+      assert(gotSchema == wantSchema, what)
+      assert(want.nonEmpty, what)
+      assert(bits(got) == bits(want), what)
+      assert(!bits(want).contains(None), s"$what: a null distance in the top-k")
+      if (bits(want).distinct.size < want.size) ties += 1
+      if (tieBreak.nonEmpty) assert(got == want, what)
+      else {
+        // without a tie-break the order inside a tie is unspecified: the
+        // same rows at each distance, save the last
         def byDistance(rows: Seq[Row]) =
           rows.filterNot(r => want.lastOption.map(dist).contains(dist(r)))
             .groupBy(dist).view.mapValues(_.map(_.toString).sorted).toMap

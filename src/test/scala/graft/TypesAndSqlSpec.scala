@@ -789,13 +789,17 @@ class EdgeCaseSpec extends SparkSuite {
     assert(engine.search("e", "embedding", t, metric = Some("l2"), k = 100).count() == 5)
     assert(engine.search("e", "embedding", t, metric = Some("l2"), k = 10,
       filter = Some(col("vec_id") < 0)).count() == 0)
-    // null vector rows are skipped by the null-safe distance (null dist
-    // sorts last in Spark's default NULLS LAST ascending order)
+    // a null vector row has a null distance, which sorts after every
+    // real one (asc NULLS LAST, as the DuckDB oracles order)
     val withNull = sf("sf0.001", "embeddings").limit(3)
       .select($"vec_id", when($"vec_id" === 0, lit(null)).otherwise($"embedding").as("embedding"))
     engine.makeTable("n", withNull)
     val got = engine.search("n", "embedding", t, metric = Some("l2"), k = 3)
     assert(got.count() == 3 && got.filter(col(graft.api.Search.DistCol).isNull).count() == 1)
+    val top2 = engine.search("n", "embedding", t, metric = Some("l2"), k = 2,
+      tieBreak = Seq("vec_id")).collect()
+    assert(top2.length == 2 && top2.forall(r => !r.isNullAt(r.fieldIndex(graft.api.Search.DistCol))),
+      s"a null distance took a top-k place: ${top2.toSeq}")
     engine.remove()
   }
 }
@@ -829,6 +833,39 @@ class PlanShapeSpec extends SparkSuite {
     assert(served.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
       s"resident search did not plan a local scan:\n$served")
     assert(served.executeCollect().length == 5)
+    engine.remove()
+  }
+
+  test("a two-pass search over a tier past the cap plans the broadcast two-pass, with no job") {
+    val root = java.nio.file.Files.createTempDirectory("planshape-sq").toString
+    val engine = new graft.api.Engine(spark, root)
+    engine.makeTable("emb", sf("sf0.001", "embeddings"))
+    engine.makeIndex("c", "emb", "embedding",
+      CoderConfig(metric = "l2", codebookSize = 4, numCodebooks = 2,
+        batchSize = 128, numEpochs = 1))
+    engine.makeSqIndex("c", "emb", "embedding")
+    val t = Array.fill(64)(0.1)
+    def sq = engine.searchSq("emb", "embedding", t, "c", probes = 4,
+      candidates = 40, idCol = "vec_id", k = 5, tieBreak = Seq("vec_id"))
+    overCap(engine.store)(sq) // the coding, sidecar and relation resolved
+    var plan: org.apache.spark.sql.execution.SparkPlan = null
+    val over = overCap(engine.store)(sq)
+    assert(jobsOf { plan = over.queryExecution.executedPlan } == 0,
+      "planning a search over the cap")
+    val s = plan.toString
+    assert(s.contains("BroadcastHashJoin") && s.contains("TakeOrderedAndProject"),
+      s"not the broadcast two-pass:\n$s")
+    val schemas = s.split("\n").filter(_.contains("ReadSchema"))
+      .map(l => l.substring(l.indexOf("ReadSchema")))
+    assert(schemas.exists(l => l.contains(graft.index.Index.SqCol) && !l.contains("embedding")),
+      s"no codes-only coarse scan:\n$s")
+    // within the cap both passes finish on the driver: a local scan of
+    // the top-k rows, the same rows
+    val served = sq
+    assert(served.queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
+      s"resident search did not plan a local scan:\n${served.queryExecution.executedPlan}")
+    assert(served.collect().toSeq == over.collect().toSeq)
     engine.remove()
   }
 
@@ -953,8 +990,12 @@ class RerankSpec extends SparkSuite {
     assert(filtered.forall(_.getLong(0) != 3L))
     assert(filtered.head.schema.fieldNames.toSeq == Seq("vec_id", "__DISTANCE__"))
 
-    val planDf = Index.searchRerank(engine.store, "c", "emb", "embedding",
-      t, k = 10, candidates = 50, idCol = "vec_id", tieBreak = Seq("vec_id"))
+    // the parquet plan (a second engine whose resident budget is taken,
+    // as for a tier past the cap; a resident tier scans no file)
+    val cold = new graft.api.Engine(spark, root)
+    val planDf = overCap(cold.store)(Index.searchRerank(cold.store, "c", "emb",
+      "embedding", t, k = 10, candidates = 50, idCol = "vec_id",
+      tieBreak = Seq("vec_id")))
     val plan = planDf.queryExecution.executedPlan.toString
     // the coarse rank lookup must stay in codegen: no ScalaUDF in the plan
     assert(!plan.contains("UDF"), s"rerank plan must be UDF-free:\n$plan")
