@@ -1,12 +1,13 @@
 package graft.api
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.coder.{CoderConfig, Coding}
 import graft.index.Index
 import graft.api.Engine.{TextMeta, TextTier}
-import graft.store.Store
+import graft.store.{Store, Swap}
 
 /** The engine facade — the reference Flight client surface
   * (`/root/reference/src/fenix/flight.py:137-292`) re-expressed as a
@@ -129,15 +130,13 @@ class Engine(val spark: SparkSession, val root: String,
     val base = store.lexIndexPath(source, textCol)
     TextTier("lexical", base, Seq("postings" -> "__TERM_BUCKET__"),
       Seq("doclens"), known = "doclens",
-      write = (m, delta, mode) => {
+      write = (m, delta, dir) => {
         val post =
           if (m.positional.contains(true))
             graft.ext.Lexical.positionalPostings(delta, "id", "t", m.buckets)
           else graft.ext.Lexical.postings(delta, "id", "t", m.buckets)
-        writeBucketed(post, s"$base/postings", "__TERM_BUCKET__", m.buckets,
-          mode)
-        graft.ext.Lexical.docLengths(delta, "id", "t")
-          .write.mode(mode).parquet(s"$base/doclens")
+        writeBucketed(post, s"$dir/postings", "__TERM_BUCKET__", m.buckets)
+        graft.ext.Lexical.docLengths(delta, "id", "t").write.parquet(s"$dir/doclens")
         m
       })
   }
@@ -161,16 +160,16 @@ class Engine(val spark: SparkSession, val root: String,
       Seq("segs" -> "__SEG_BUCKET__", "probes" -> "__SEG_BUCKET__",
         "base" -> "__ID_BUCKET__"),
       Seq("segcounts", "probecounts"), known = "base",
-      write = (m, delta, mode) => {
+      write = (m, delta, dir) => {
         val bf = graft.ext.Dedup.editDistanceBase(delta, "id", "t")
         // base and frame writes overlap (guide §2.6)
         var frames = (0L, 0L)
         runConcurrently(Seq(
           () => writeBucketed(
             bf.withColumn("__ID_BUCKET__", idBucketCol(m.buckets)),
-            s"$base/base", "__ID_BUCKET__", m.buckets, mode),
+            s"$dir/base", "__ID_BUCKET__", m.buckets),
           () => frames =
-            writeFuzzyFrames(base, bf, fuzzyDist(m), m.buckets, mode)))
+            writeFuzzyFrames(dir, bf, fuzzyDist(m), m.buckets)))
         m.copy(bounds = Some(frames))
       },
       // layout 2 (id-bucketed base) is the only layout ever written, and
@@ -186,12 +185,11 @@ class Engine(val spark: SparkSession, val root: String,
           "rebuild with buildFuzzyIndex(source, textCol) against the same " +
           "source table"),
       // accumulate the bounds: a key split across deltas totals at most
-      // the sum of the per-delta maxima. Recorded BEFORE the frame
-      // appends — a crash between the two leaves the bound LOOSE, never
-      // UNDER; an under-bound would let provenVolumeBound "prove" safe a
-      // candidate volume that is not, silently disabling the serving
-      // join's volume guard. An artifact predating the bounds stays
-      // unbounded until a rebuild or a compaction.
+      // the sum of the per-delta maxima, installed with the frames (an
+      // under-bound would let provenVolumeBound "prove" safe a candidate
+      // volume that is not, silently disabling the serving join's volume
+      // guard). An artifact predating the bounds stays unbounded until a
+      // rebuild or a compaction.
       beforeAppend = (m, delta) => m.bounds.fold(m) { case (ns, np) =>
         val (dNs, dNp) = deltaKeyMaxima(
           graft.ext.Dedup.editDistanceBase(delta, "id", "t"), fuzzyDist(m))
@@ -217,42 +215,37 @@ class Engine(val spark: SparkSession, val root: String,
     df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"), col(textCol).as("t"))
 
-  /** The one build of a text tier: frames, then `meta.json`, then the
-    * source file-listing stamp, all under the artifact lock. The listing
-    * is taken BEFORE the source is read: a concurrent source change
-    * mid-build then leaves a stale stamp (conservative) rather than a
-    * wrongly-fresh one. A from-scratch build is all-or-nothing (the stamp
-    * lands only after every write), so its writes carry no ordering
-    * constraint among themselves. */
+  /** The one build of a text tier: frames, `meta.json` and the source
+    * file-listing stamp are staged and installed over the artifact as
+    * one entry ([[Swap.install]]), so a failed rebuild leaves the old
+    * artifact served. The listing is taken BEFORE the source is read: a
+    * concurrent source change mid-build then leaves a stale stamp
+    * (conservative) rather than a wrongly-fresh one. */
   private def buildText(tier: TextTier, meta: TextMeta, source: String,
       idCol: String, textCol: String): Unit = {
     val listing = store.sourceListing(source)
     val delta = textRows(store.loadTable(source), idCol, textCol)
-    graft.store.Swap.withArtifactLock(tier.base) {
-      writeTextMeta(tier.base, tier.write(meta, delta, "overwrite"))
-      Index.recordSourceStamp(store, tier.base, listing)
+    Swap.replace(store.fs, new Path(tier.base)) { image =>
+      writeTextMeta(image, tier.write(meta, delta, image))
+      Index.recordSourceStamp(store, image, listing)
     }
   }
 
   /** The one incremental sync of a text tier: documents whose id is
-    * absent from the known-id frame get their frames appended — the
-    * append-only-corpus path (both tiers' frames are row-local, so the
-    * appended artifact equals a fresh rebuild row-for-row; document
-    * UPDATES need a rebuild, as with every tier). Runs under the artifact
-    * lock — a concurrent compaction rewriting the very buckets an append
-    * lands in would otherwise install a rewrite missing the appended
-    * rows. Re-stamps freshness only when growth is verifiably append-only
+    * absent from the known-id frame get their frames staged, and the new
+    * files land with `meta.json` and the stamp under one marker
+    * ([[Swap.install]]) — the known-id frame and the other frames
+    * together or not at all. The append-only-corpus path (both tiers'
+    * frames are row-local, so the synced artifact equals a fresh rebuild
+    * row-for-row; document UPDATES need a rebuild, as with every tier).
+    * Re-stamps freshness only when growth is verifiably append-only
     * (every file recorded at the last build/sync still present
     * unchanged). `idCol` None reads the id column the artifact recorded.
     * Returns rows appended. */
   private def syncText(tier: TextTier, source: String, idCol: Option[String],
       textCol: String): Long =
-    graft.store.Swap.withArtifactLock(tier.base) {
+    Swap.install(store.fs, new Path(tier.base), tier.dirs) { image =>
       val meta = readTextMeta(tier)
-      // restore any crashed-compaction aside BEFORE appending: an append
-      // that recreates a bucket dir whose only full copy sits in an aside
-      // would otherwise turn the next cleanup into silent data loss
-      graft.store.Swap.recover(store.fs, tier.base, tier.bucketed, tier.flats)
       val listing = store.sourceListing(source) // before the read, as build
       val id = idCol.orElse(meta.idCol).getOrElse(throw new IllegalStateException(
         s"${tier.kind} index at ${tier.base} records no idCol in meta.json"))
@@ -260,55 +253,79 @@ class Engine(val spark: SparkSession, val root: String,
         .select(col("id").as("__known_id__"))
       val delta = textRows(store.loadTable(source), id, textCol)
         .join(known, col("id") === col("__known_id__"), "left_anti")
-        .localCheckpoint(true) // freeze: the appends below grow the very
-                               // paths a lazy plan would re-list
+        .localCheckpoint(true) // counted, measured and written: compute once
       try {
         val n = delta.count()
-        if (n > 0) {
-          val grown = tier.beforeAppend(meta, delta)
-          if (grown != meta) writeTextMeta(tier.base, grown)
-          tier.write(meta, delta, "append")
-        }
-        // re-stamp OUTSIDE the n > 0 branch: append-only growth whose new
-        // rows are all null-text appends nothing yet leaves the artifact
+        val frames =
+          if (n == 0) Nil
+          else {
+            val grown = tier.beforeAppend(meta, delta)
+            tier.write(meta, delta, image.toString)
+            val files = Swap.files(store.fs, image)
+            if (grown == meta) files
+            else { writeTextMeta(image.toString, grown); "meta.json" +: files }
+          }
+        // re-stamp even when n == 0: append-only growth whose new rows are
+        // all null-text appends nothing yet leaves the artifact
         // semantically complete — a stamp gated on n > 0 would hold it
         // "stale" with only a full rebuild as the way out
         val curSet = listing.toSet
-        if (Index.recordedListing(store, tier.base)
-            .exists(_.forall(curSet.contains)))
-          Index.recordSourceStamp(store, tier.base, listing)
-        n
+        val restamp = Index.recordedListing(store, tier.base)
+          .exists(_.forall(curSet.contains))
+        if (restamp) Index.recordSourceStamp(store, image.toString, listing)
+        (frames ++ (if (restamp) Seq(Index.StampFile) else Nil), n)
       } finally org.apache.spark.sql.GraftShims.releaseCheckpoint(delta)
     }
 
-  /** The one compaction of a text tier: every [[syncText]] appends its
-    * own file set to each touched bucket, so a bucket synced N times
-    * holds ≥ N small files and scan cost becomes task-overhead-bound.
-    * Buckets holding more than `maxFilesPerBucket` files are rewritten
-    * (temp sibling + per-bucket directory rename, [[graft.store.Swap]]);
-    * flat tables past the same bound are coalesced. Content is identical.
-    * The WHOLE compaction holds the artifact lock: the rewrite must not
-    * race a sync's append into the same buckets, and the aside→install
-    * window must not race a reader's recovery sweep. Returns (buckets
+  /** The one compaction of a text tier: every [[syncText]] adds its own
+    * file set to each touched bucket, so a bucket synced N times holds
+    * ≥ N small files and scan cost becomes task-overhead-bound. Buckets
+    * holding more than `maxFilesPerBucket` files are rewritten and flat
+    * tables past the same bound coalesced, then installed under one
+    * marker ([[Swap.install]]). Content is identical. Returns (buckets
     * compacted, per flat table its pre-compaction file count or 0). */
   private def compactText(tier: TextTier,
       maxFilesPerBucket: Int): (Long, Seq[Long]) = {
     require(maxFilesPerBucket >= 1, "maxFilesPerBucket must be >= 1")
-    graft.store.Swap.withArtifactLock(tier.base) {
+    Swap.install(store.fs, new Path(tier.base), tier.dirs) { image =>
       val meta = readTextMeta(tier) // fails loudly on a missing index
-      graft.store.Swap.recover(store.fs, tier.base, tier.bucketed, tier.flats)
-      val fs = store.fs
-      val op = s"compact${tier.kind.capitalize}Index"
-      val buckets = tier.bucketed.map { case (d, c) =>
-        graft.store.Swap.compactBuckets(spark, fs, s"${tier.base}/$d", c,
-          maxFilesPerBucket, op)
-      }.sum
-      val flats = tier.flats.map(d => graft.store.Swap.compactFlat(spark, fs,
-        s"${tier.base}/$d", maxFilesPerBucket, op))
+      val buckets = tier.bucketed.flatMap { case (d, c) =>
+        compactBuckets(s"${tier.base}/$d", s"$image/$d", c, maxFilesPerBucket)
+          .map(b => s"$d/$b")
+      }
+      val flats = tier.flats.map(d =>
+        d -> compactFlat(s"${tier.base}/$d", s"$image/$d", maxFilesPerBucket))
       val tightened = tier.afterCompact(meta)
-      if (tightened != meta) writeTextMeta(tier.base, tightened)
-      (buckets, flats)
+      val metaEntry =
+        if (tightened == meta) Nil
+        else { writeTextMeta(image.toString, tightened); Seq("meta.json") }
+      (buckets ++ flats.collect { case (d, n) if n > 0 => d } ++ metaEntry,
+        (buckets.length.toLong, flats.map(_._2)))
     }
+  }
+
+  /** Rewrites under `out` every `<partCol>=N` bucket of `dir` holding
+    * more than `maxFiles` data files; returns their directory names. */
+  private def compactBuckets(dir: String, out: String, partCol: String,
+      maxFiles: Int): Seq[String] = {
+    val frag = store.fs.listStatus(new Path(dir)).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol=") &&
+        Swap.files(store.fs, s.getPath).length > maxFiles)
+      .map(_.getPath.getName)
+    if (frag.nonEmpty)
+      spark.read.parquet(dir)
+        .filter(col(partCol).isin(frag.map(_.stripPrefix(s"$partCol=").toInt): _*))
+        .repartition(frag.length, col(partCol))
+        .write.partitionBy(partCol).parquet(out)
+    frag
+  }
+
+  /** Coalesces flat table `dir` to one file under `out` when it holds
+    * more than `maxFiles` data files; returns that count, 0 if skipped. */
+  private def compactFlat(dir: String, out: String, maxFiles: Int): Long = {
+    val files = Swap.files(store.fs, new Path(dir)).length
+    if (files <= maxFiles) 0L
+    else { spark.read.parquet(dir).coalesce(1).write.parquet(out); files.toLong }
   }
 
   /** Whether a text tier's artifact exists AND was built/synced from the
@@ -324,11 +341,12 @@ class Engine(val spark: SparkSession, val root: String,
     * or miss documents appended since the last sync. */
   private def servedMeta(tier: TextTier, source: String, textCol: String,
       allowStale: Boolean = false): TextMeta = {
-    val meta = readTextMeta(tier)
-    // reads run the sweep too: an aside is INVISIBLE to parquet file
+    // reads run the sweep first: an aside is INVISIBLE to parquet file
     // listing, so between a crash and the next mutating call a query
-    // would silently miss every key hashing to the crashed bucket
-    graft.store.Swap.recover(store.fs, tier.base, tier.bucketed, tier.flats)
+    // would silently miss every key hashing to the crashed bucket, or
+    // read one install's meta over another's frames
+    Swap.recover(store.fs, new Path(tier.base), tier.dirs)
+    val meta = readTextMeta(tier)
     require(allowStale || textFresh(tier, source),
       s"${tier.kind} index for $source.$textCol is STALE: the source " +
         "content changed since the last build/sync (or the artifact " +
@@ -345,11 +363,10 @@ class Engine(val spark: SparkSession, val root: String,
     * [[Index.build]] lesson. One shuffle sized to the bucket count; each
     * bucket becomes one task's output. */
   private def writeBucketed(df: DataFrame, dir: String, partCol: String,
-      buckets: Int, mode: String): Unit = {
+      buckets: Int): Unit = {
     val parts = math.max(1, math.min(buckets,
       spark.sparkContext.defaultParallelism * 2))
-    df.repartition(parts, col(partCol))
-      .write.mode(mode).partitionBy(partCol).parquet(dir)
+    df.repartition(parts, col(partCol)).write.partitionBy(partCol).parquet(dir)
   }
 
   // ——— lexical (BM25) inverted index ———
@@ -493,7 +510,7 @@ class Engine(val spark: SparkSession, val root: String,
     * accumulated bounds against the query batch's key counts and skips
     * its artifact pass entirely when the product is safely small. */
   private def writeFuzzyFrames(base: String, bf: DataFrame, maxDist: Int,
-      buckets: Int, mode: String): (Long, Long) = {
+      buckets: Int): (Long, Long) = {
     val bucketCol =
       (crc32(encode(col("g"), "UTF-8")) % buckets).cast("int")
     val segs = graft.ext.Dedup.editDistanceSegments(bf, maxDist)
@@ -510,15 +527,15 @@ class Engine(val spark: SparkSession, val root: String,
     // job-count-bound, not data-bound)
     runConcurrently(Seq(
       () => writeBucketed(segs.withColumn("__SEG_BUCKET__", bucketCol),
-        s"$base/segs", "__SEG_BUCKET__", buckets, mode),
+        s"$base/segs", "__SEG_BUCKET__", buckets),
       () => writeBucketed(probes.withColumn("__SEG_BUCKET__", bucketCol),
-        s"$base/probes", "__SEG_BUCKET__", buckets, mode),
+        s"$base/probes", "__SEG_BUCKET__", buckets),
       () => graft.ext.Dedup.editDistanceKeyCounts(segs, "ns")
         .observe(segObs, max(col("ns")).as("mx"))
-        .write.mode(mode).parquet(s"$base/segcounts"),
+        .write.parquet(s"$base/segcounts"),
       () => graft.ext.Dedup.editDistanceKeyCounts(probes, "np")
         .observe(probeObs, max(col("np")).as("mx"))
-        .write.mode(mode).parquet(s"$base/probecounts")))
+        .write.parquet(s"$base/probecounts")))
     def mx(o: org.apache.spark.sql.Observation): Long =
       Option(o.get("mx")).map(_.asInstanceOf[Double].toLong).getOrElse(0L)
     (mx(segObs), mx(probeObs))
@@ -2036,23 +2053,26 @@ object Engine {
   /** One text index tier — all the shared lifecycle needs to know of it:
     *   - `kind` ("lexical" | "fuzzy") and `base`, its artifact root;
     *   - `bucketed`, its bucket-partitioned dirs with their partition
-    *     column, and `flats`, its flat tables — what recovery sweeps and
-    *     compaction coalesces;
+    *     column, and `flats`, its flat tables — what compaction
+    *     coalesces; the recovery sweep looks for bucket asides in the
+    *     bucketed dirs;
     *   - `known`, the dir whose `id` column lists the indexed documents
     *     (sync anti-joins the source against it);
     *   - `check`, what a stored meta must hold before it is served;
-    *   - `write(meta, delta, mode)`, which writes the tier's frames of
-    *     `delta` — (id, t) rows of non-null text — and returns the meta a
-    *     build records for them;
-    *   - `beforeAppend` and `afterCompact`, the meta a sync records before
-    *     it appends a delta and the meta a compaction records after it
-    *     coalesces (unchanged for the lexical tier). */
+    *   - `write(meta, delta, dir)`, which writes the tier's frames of
+    *     `delta` — (id, t) rows of non-null text — under `dir` and
+    *     returns the meta a build records for them;
+    *   - `beforeAppend` and `afterCompact`, the meta a sync records with
+    *     a delta and the meta a compaction records after it coalesces
+    *     (unchanged for the lexical tier). */
   private[api] final case class TextTier(kind: String, base: String,
       bucketed: Seq[(String, String)], flats: Seq[String], known: String,
       write: (TextMeta, DataFrame, String) => TextMeta,
       check: TextMeta => Unit = _ => (),
       beforeAppend: (TextMeta, DataFrame) => TextMeta = (m, _) => m,
-      afterCompact: TextMeta => TextMeta = m => m)
+      afterCompact: TextMeta => TextMeta = m => m) {
+    def dirs: Seq[String] = bucketed.map(_._1)
+  }
 
   /** Sentinel probe count: `probes = Some(Engine.Advised)` opts a
     * [[Engine.search]]/[[Engine.searchMulti]] call into the PERSISTED

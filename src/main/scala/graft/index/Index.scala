@@ -1,5 +1,6 @@
 package graft.index
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
@@ -7,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.api.Search
 import graft.coder.Coding
 import graft.functions.functions.vector_distance
-import graft.store.Store
+import graft.store.{Store, Swap}
 
 /** IVF-style index: a cell-partitioned materialization of the source.
   *
@@ -51,48 +52,30 @@ object Index {
     // rather than a wrongly-fresh one
     val listing = store.sourceListing(source)
     val df = store.loadTable(source)
-    val path = store.indexPath(source, column, codingName)
-    writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
-      .withColumn(CodeCol, assignExpr(col(column), coding)), coding.numCells, path)
-    recordSourceStamp(store, path, listing)
+    Swap.replace(store.fs, new Path(store.indexPath(source, column, codingName))) { image =>
+      writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
+        .withColumn(CodeCol, assignExpr(col(column), coding)), coding.numCells, image)
+      recordSourceStamp(store, image, listing)
+    }
     warnIfSkewed(store, codingName, source, column)
   }
 
-  /** The write every build and [[repair]] ends with: overwrite `path`
-    * with `coded` partitioned by cell. Rows are clustered by cell first:
+  /** The cell write of every build and [[repair]]: `coded` written
+    * under `path` partitioned by cell. Rows are clustered by cell first:
     * without this every task writes a file into every cell directory
     * (tasks × cells tiny files); with it each cell is one task's output.
     * Hash-repartition on the cell id keeps it one shuffle, sized to the
-    * `cells` written. Callers stamp after it, codec sidecar first, so a
-    * crash in between leaves a stale stamp rather than a wrongly-fresh
-    * one. */
+    * `cells` written. */
   private def writeCells(coded: DataFrame, cells: Long, path: String): Unit = {
     val parts = math.max(1, math.min(cells,
       coded.sparkSession.sparkContext.defaultParallelism.toLong * 2).toInt)
     coded.repartition(parts, col(CodeCol))
-      .write.mode("overwrite")
+      .write
       .partitionBy(CodeCol)
       .parquet(path)
   }
 
-  /** Moves each of `cells` from `tmp` over `path`, one directory at a
-    * time (a cell absent from `tmp` ends up deleted), then drops `tmp`.
-    * A crash mid-swap leaves some cells old and some new: callers make
-    * sure the stamp does not read fresh across it. */
-  private def swapCells(store: Store, tmp: String, path: String,
-      cells: Seq[Long], op: String): Unit = {
-    val fs = store.fs
-    cells.foreach { cell =>
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$CodeCol=$cell")
-      val srcP = new org.apache.hadoop.fs.Path(s"$tmp/$CodeCol=$cell")
-      fs.delete(dst, true)
-      if (fs.exists(srcP))
-        require(fs.rename(srcP, dst), s"$op: rename failed for cell $cell")
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-  }
-
-  private val StampFile = "_source_stamp.json"
+  private[graft] val StampFile = "_source_stamp.json"
   private def stampSidecar(path: String) = s"$path/$StampFile"
 
   /** The sidecar records both the MD5 stamp and the full (name:len:mtime)
@@ -173,6 +156,8 @@ object Index {
   private def storedCodec(store: Store, codingName: String, source: String,
       column: String, tier: String): Codec = {
     val path = tierPath(store, codingName, source, column, tier)
+    // a rebuild cut short between its renames leaves the tier in its aside
+    Swap.recover(store.fs, new Path(path))
     def requireBuilt(sidecar: String, builder: String): Unit =
       require(store.sidecarExists(sidecar),
         s"no ${tier.toUpperCase} index for $source.$column under coding " +
@@ -244,42 +229,49 @@ object Index {
       column: String, idCol: String, tier: String = "ivf"): Long = {
     val codec = storedCodec(store, codingName, source, column, tier)
     val path = codec.path
-    if (!store.fs.exists(new org.apache.hadoop.fs.Path(path))) {
+    if (!store.fs.exists(new Path(path))) {
       codec.rebuild()
       return store.spark.read.parquet(path).count()
     }
-    val coding = store.loadCoding(codingName)
-    val listing = store.sourceListing(source)
-    val existingDf = store.spark.read.parquet(path)
-    val existing = existingDf.select(col(idCol))
-    val hasProvenance = existingDf.schema.fieldNames.contains(SrcFileCol)
-    val src0 = store.loadTable(source)
-    // legacy copies (no provenance column) append without it — a mixed
-    // schema would make the parquet read schema file-order-dependent
-    val src = if (hasProvenance)
-      src0.withColumn(SrcFileCol, col("_metadata.file_name"))
-    else src0
-    val fresh = src.join(existing, Seq(idCol), "left_anti")
-    val delta = codec.encode(fresh.withColumn(CodeCol, assignExpr(col(column), coding)))
-    // the delta is bounded by the append size, so persist it: count +
-    // write would otherwise run the anti-join + assignment + encode twice
-    delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val appended = delta.count()
-      if (appended > 0) {
-        delta.write.mode("append").partitionBy(CodeCol).parquet(path)
-        // re-stamp ONLY for verifiably append-only growth: the recorded
-        // listing must be a subset of the current one. Otherwise (files
-        // modified or removed alongside the append) the indexed copy
-        // still serves stale vectors for the modified rows, so freshness
-        // must keep failing until repair()/build()
-        val curSet = listing.toSet
-        if (recordedListing(store, path).exists(_.forall(curSet.contains)))
-          recordSourceStamp(store, path, listing)
-        if (tier == "ivf") warnIfSkewed(store, codingName, source, column)
-      }
-      appended
-    } finally delta.unpersist(blocking = false)
+    val appended = Swap.install(store.fs, new Path(path)) { image =>
+      val coding = store.loadCoding(codingName)
+      val listing = store.sourceListing(source)
+      val existingDf = store.spark.read.parquet(path)
+      val existing = existingDf.select(col(idCol))
+      val hasProvenance = existingDf.schema.fieldNames.contains(SrcFileCol)
+      val src0 = store.loadTable(source)
+      // legacy copies (no provenance column) append without it — a mixed
+      // schema would make the parquet read schema file-order-dependent
+      val src = if (hasProvenance)
+        src0.withColumn(SrcFileCol, col("_metadata.file_name"))
+      else src0
+      val fresh = src.join(existing, Seq(idCol), "left_anti")
+      val delta = codec.encode(fresh.withColumn(CodeCol, assignExpr(col(column), coding)))
+      // the delta is bounded by the append size, so persist it: count +
+      // write would otherwise run the anti-join + assignment + encode twice
+      delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val n = delta.count()
+        if (n == 0) (Nil, n)
+        else {
+          // the delta's files, `_SUCCESS` (a memo marker) and the stamp
+          // land under one marker
+          delta.write.partitionBy(CodeCol).parquet(image.toString)
+          // re-stamp ONLY for verifiably append-only growth: the recorded
+          // listing must be a subset of the current one. Otherwise (files
+          // modified or removed alongside the append) the indexed copy
+          // still serves stale vectors for the modified rows, so
+          // freshness must keep failing until repair()/build()
+          val curSet = listing.toSet
+          val restamp = recordedListing(store, path).exists(_.forall(curSet.contains))
+          if (restamp) recordSourceStamp(store, image.toString, listing)
+          (Swap.files(store.fs, image) ++ Seq("_SUCCESS") ++
+            (if (restamp) Seq(StampFile) else Nil), n)
+        }
+      } finally delta.unpersist(blocking = false)
+    }
+    if (appended > 0 && tier == "ivf") warnIfSkewed(store, codingName, source, column)
+    appended
   }
 
   /** Outcome of a [[repair]]: which files were re-ingested / dropped and
@@ -308,72 +300,57 @@ object Index {
       column: String, tier: String = "ivf"): RepairStats = {
     val codec = storedCodec(store, codingName, source, column, tier)
     val path = codec.path
-    def fullRebuild(): RepairStats = {
+    Swap.install(store.fs, new Path(path)) { image =>
+      val indexed = Option.when(store.fs.exists(new Path(path)))(store.spark.read
+        .parquet(path).withColumn(CodeCol, col(CodeCol).cast("long")))
+        .filter(_.schema.fieldNames.contains(SrcFileCol))
+      (indexed, recordedListing(store, path)) match {
+        case (Some(indexedRaw), Some(recorded)) =>
+          // entry = "name:len:mtime" (parquet part names never contain
+          // ':'; strip the two trailing fields defensively anyway)
+          def nameOf(e: String): String =
+            e.substring(0, e.lastIndexOf(':', e.lastIndexOf(':') - 1))
+          val listing = store.sourceListing(source)
+          val curSet = listing.toSet
+          val recSet = recorded.toSet
+          // recorded entries no longer exactly present: modified or removed
+          val staleNames = recorded.filterNot(curSet.contains).map(nameOf).distinct
+          // current entries not recorded: added, or the new face of a
+          // modified file, or files appended by a sync that could not
+          // re-stamp
+          val freshNames = listing.filterNot(recSet.contains).map(nameOf).distinct
+          val affectedNames = (staleNames ++ freshNames).distinct
+          lazy val freshRows = codec.encode(store.loadTable(source)
+            .withColumn(SrcFileCol, col("_metadata.file_name"))
+            .filter(col(SrcFileCol).isin(freshNames: _*))
+            .withColumn(CodeCol, assignExpr(col(column), store.loadCoding(codingName))))
+          // affected cells: wherever a stale file's rows sit, plus
+          // wherever a fresh file's rows land — two small
+          // distinct-collects, bounded by numCells
+          def cellsOf(names: Seq[String], rows: => DataFrame): Array[Long] =
+            if (names.isEmpty) Array.empty
+            else rows.select(CodeCol).distinct().collect().map(_.getLong(0))
+          val affected = (cellsOf(staleNames,
+            indexedRaw.filter(col(SrcFileCol).isin(staleNames: _*))) ++
+            cellsOf(freshNames, freshRows)).distinct.sorted
+          // replacement content for the affected cells: surviving rows
+          // from untouched files + re-encoded rows from changed/added
+          // files; a cell left with no rows is deleted
+          if (affected.nonEmpty)
+            writeCells(indexedRaw
+              .filter(col(CodeCol).isin(affected.toIndexedSeq: _*))
+              .filter(!col(SrcFileCol).isin(affectedNames: _*))
+              .unionByName(freshRows), affected.length.toLong, image.toString)
+          recordSourceStamp(store, image.toString, listing)
+          (affected.toSeq.map(c => s"$CodeCol=$c") :+ StampFile,
+            Some(RepairStats(affectedNames.length.toLong, affected.length.toLong,
+              fullRebuild = false)))
+        case _ => (Nil, None) // a missing or legacy copy: rebuilt below
+      }
+    }.getOrElse {
       codec.rebuild()
       RepairStats(-1, -1, fullRebuild = true)
     }
-    if (!store.fs.exists(new org.apache.hadoop.fs.Path(path))) return fullRebuild()
-    val recordedOpt = recordedListing(store, path)
-    val indexedRaw = store.spark.read.parquet(path)
-      .withColumn(CodeCol, col(CodeCol).cast("long"))
-    if (recordedOpt.isEmpty || !indexedRaw.schema.fieldNames.contains(SrcFileCol))
-      return fullRebuild()
-
-    // entry = "name:len:mtime" (parquet part names never contain ':';
-    // strip the two trailing fields defensively anyway)
-    def nameOf(e: String): String =
-      e.substring(0, e.lastIndexOf(':', e.lastIndexOf(':') - 1))
-    val recorded = recordedOpt.get
-    val listing = store.sourceListing(source)
-    val curSet = listing.toSet
-    val recSet = recorded.toSet
-    // recorded entries no longer exactly present: modified or removed
-    val staleNames = recorded.filterNot(curSet.contains).map(nameOf).distinct
-    // current entries not recorded: added, or the new face of a modified
-    // file, or files appended by a sync that could not re-stamp
-    val freshNames = listing.filterNot(recSet.contains).map(nameOf).distinct
-    if (staleNames.isEmpty && freshNames.isEmpty) {
-      recordSourceStamp(store, path, listing) // already consistent
-      return RepairStats(0, 0, fullRebuild = false)
-    }
-    val affectedNames = (staleNames ++ freshNames).distinct
-    val coding = store.loadCoding(codingName)
-    val freshRows = codec.encode(store.loadTable(source)
-      .withColumn(SrcFileCol, col("_metadata.file_name"))
-      .filter(col(SrcFileCol).isin(freshNames: _*))
-      .withColumn(CodeCol, assignExpr(col(column), coding)))
-    // affected cells: wherever a stale file's rows sit, plus wherever a
-    // fresh file's rows land — two small distinct-collects, bounded by
-    // numCells
-    val staleCells =
-      if (staleNames.isEmpty) Array.empty[Long]
-      else indexedRaw.filter(col(SrcFileCol).isin(staleNames: _*))
-        .select(CodeCol).distinct().collect().map(_.getLong(0))
-    val freshCells = freshRows
-      .select(CodeCol).distinct().collect().map(_.getLong(0))
-    val affected = (staleCells ++ freshCells).distinct.sorted
-    if (affected.isEmpty) {
-      recordSourceStamp(store, path, listing) // e.g. an empty file removed
-      return RepairStats(affectedNames.length.toLong, 0, fullRebuild = false)
-    }
-    // replacement content for the affected cells: surviving rows from
-    // untouched files + re-encoded rows from changed/added files. It
-    // READS the directories about to be deleted, so it must land on disk
-    // (a temp sibling) before any delete — a cache could be evicted and
-    // recompute over deleted files
-    val replacement = indexedRaw
-      .filter(col(CodeCol).isin(affected.toIndexedSeq: _*))
-      .filter(!col(SrcFileCol).isin(affectedNames: _*))
-      .unionByName(freshRows)
-    val tmp = s"$path.__repair_tmp__"
-    store.fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    writeCells(replacement, affected.length.toLong, tmp)
-    // the stamp is written LAST: a crash mid-swap leaves it stale, so
-    // freshness keeps failing rather than lying
-    swapCells(store, tmp, path, affected.toSeq, "repair")
-    recordSourceStamp(store, path, listing)
-    RepairStats(affectedNames.length.toLong, affected.length.toLong,
-      fullRebuild = false)
   }
 
   /** Per-cell layout statistics of the IVF copy: (cell, files, bytes,
@@ -474,51 +451,42 @@ object Index {
     * appends its own file set, so a cell touched by N waves holds ≥ N
     * small files and scan cost becomes task-overhead-bound. Cells with
     * more than `maxFilesPerCell` files are rewritten to ≈
-    * max(1, bytes/targetFileBytes) files each (temp sibling + per-cell
-    * rename, as [[repair]]).
+    * max(1, bytes/targetFileBytes) files each, installed cell by cell
+    * under one marker ([[Swap.install]], as [[repair]]).
     *
     * Content is identical, so the recorded source stamp remains VALID —
-    * it is snapshotted before the swap and restored verbatim after (NOT
-    * refreshed to the current source listing, which may have drifted).
-    * Crash discipline is fail-closed: the stamp sidecar is deleted before
-    * the first swap, so a crash mid-compaction leaves freshness failing
-    * (recover with [[build]]/[[repair]]) instead of serving a cell whose
-    * directory vanished between the delete and the rename.
-    *
-    * `tier` selects which cell-partitioned copy to compact (ivf | pq |
-    * sq | bq — all share the layout and, since round 6, the stamp
-    * sidecar, so the fail-closed snapshot/restore applies uniformly;
-    * the tiers' codec sidecars live at the path root and are never
-    * touched since only cell directories are swapped). */
+    * it is installed verbatim with the cells (NOT refreshed to the
+    * current source listing, which may have drifted), which also moves
+    * the tier's memo stamp. `tier` selects which cell-partitioned copy to
+    * compact (ivf | pq | sq | bq — all share the layout; the tiers' codec
+    * sidecars are never touched since only cell directories are
+    * swapped). */
   def compactCells(store: Store, codingName: String, source: String,
       column: String, maxFilesPerCell: Int = 8,
       targetFileBytes: Long = 128L << 20, tier: String = "ivf"): CompactStats = {
     require(maxFilesPerCell >= 1, "maxFilesPerCell must be >= 1")
     val path = tierPath(store, codingName, source, column, tier)
-    require(store.sidecarExists(s"$path/_SUCCESS"),
-      s"compactCells: no $tier index for $source.$column under '$codingName'")
-    val fs = store.fs
-    val stats = cellStats(store, codingName, source, column, tier = tier)
-    val frag = stats.filter(_._2 > maxFilesPerCell)
-    if (frag.isEmpty) return CompactStats(0, 0, 0)
-    val cells = frag.map(_._1)
-    val bytes = frag.map(_._3).sum
-    val recorded = recordedListing(store, path)
-    val tmp = s"$path.__compact_tmp__"
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    val parts = math.max(cells.length.toLong,
-      bytes / math.max(1L, targetFileBytes) + 1).toInt
-    store.spark.read.parquet(path)
-      .withColumn(CodeCol, col(CodeCol).cast("long"))
-      .filter(col(CodeCol).isin(cells: _*))
-      .repartition(parts, col(CodeCol))
-      .write.mode("overwrite").partitionBy(CodeCol).parquet(tmp)
-    fs.delete(new org.apache.hadoop.fs.Path(stampSidecar(path)), false)
-    swapCells(store, tmp, path, cells, "compactCells")
-    recorded.foreach(l => recordSourceStamp(store, path, l))
-    val after = cellStats(store, codingName, source, column, tier = tier)
-      .filter(s => cells.contains(s._1)).map(_._2.toLong).sum
-    CompactStats(cells.length.toLong, frag.map(_._2.toLong).sum, after)
+    Swap.install(store.fs, new Path(path)) { image =>
+      require(store.sidecarExists(s"$path/_SUCCESS"),
+        s"compactCells: no $tier index for $source.$column under '$codingName'")
+      val frag = cellStats(store, codingName, source, column, tier = tier)
+        .filter(_._2 > maxFilesPerCell)
+      val cells = frag.map(_._1)
+      val recorded = recordedListing(store, path)
+      if (cells.nonEmpty) {
+        val parts = math.max(cells.length.toLong,
+          frag.map(_._3).sum / math.max(1L, targetFileBytes) + 1).toInt
+        store.spark.read.parquet(path)
+          .withColumn(CodeCol, col(CodeCol).cast("long"))
+          .filter(col(CodeCol).isin(cells: _*))
+          .repartition(parts, col(CodeCol))
+          .write.partitionBy(CodeCol).parquet(image.toString)
+        recorded.foreach(l => recordSourceStamp(store, image.toString, l))
+      }
+      (if (cells.isEmpty) Nil else cells.map(c => s"$CodeCol=$c") ++ recorded.map(_ => StampFile),
+        CompactStats(cells.length.toLong, frag.map(_._2.toLong).sum,
+          Swap.files(store.fs, image).length.toLong))
+    }
   }
 
   /** Whether the materialized indexed copy exists (Spark's _SUCCESS
@@ -536,8 +504,9 @@ object Index {
     * directory, its `_SUCCESS` and its stamp sidecar: resolving lists
     * every cell directory and runs one Spark job to infer the schema,
     * while a reused frame prunes cells on its in-memory file index.
-    * Build, sync, repair and compaction each rewrite `_SUCCESS` or the
-    * stamp, or change the directory's entries. */
+    * Build, sync, repair and compaction each install `_SUCCESS` or the
+    * stamp, or change the directory's entries. A miss runs the tier's
+    * crash sweep ([[Swap.recover]]) before it resolves. */
   private def loadTier(store: Store, codingName: String, source: String,
       column: String, tier: String): DataFrame =
     residentTier(store, codingName, source, column, tier).frame
@@ -548,8 +517,10 @@ object Index {
   private def residentTier(store: Store, codingName: String, source: String,
       column: String, tier: String): store.Resident = {
     val path = tierPath(store, codingName, source, column, tier)
-    store.memo(path, Seq("_SUCCESS", StampFile))(
-      new store.Resident(readTier(store, path), CodeCol))
+    store.memo(path, Seq("_SUCCESS", StampFile)) {
+      Swap.recover(store.fs, new Path(path))
+      new store.Resident(readTier(store, path), CodeCol)
+    }
   }
 
   private def readTier(store: Store, path: String): DataFrame =
@@ -852,13 +823,14 @@ object Index {
     log.info(s"buildPq($source.$column under $codingName): " +
       s"variant=${if (useRes) "residual" else "flat"} metric=$metricC " +
       s"cells=${coding.numCells} m=${cb.m} k=${cb.k}")
-    val path = store.pqIndexPath(source, column, codingName)
-    writeCells(encodeInput
-      .withColumn(PqCol, graft.coder.PQ.encodeExpr(
-        col(if (useRes) "__RES__" else column), cb))
-      .drop("__RES__", ResBase), coding.numCells, path)
-    store.writeSidecar(pqSidecar(path), graft.coder.PQ.toJsonBytes(cb))
-    recordSourceStamp(store, path, listing)
+    Swap.replace(store.fs, new Path(store.pqIndexPath(source, column, codingName))) { image =>
+      writeCells(encodeInput
+        .withColumn(PqCol, graft.coder.PQ.encodeExpr(
+          col(if (useRes) "__RES__" else column), cb))
+        .drop("__RES__", ResBase), coding.numCells, image)
+      store.writeSidecar(pqSidecar(image), graft.coder.PQ.toJsonBytes(cb))
+      recordSourceStamp(store, image, listing)
+    }
     cb
   }
 
@@ -890,8 +862,16 @@ object Index {
   def loadPqCodebooks(store: Store, codingName: String, source: String,
       column: String): graft.coder.PQ.PQCodebooks = {
     val sidecar = pqSidecar(store.pqIndexPath(source, column, codingName))
-    store.memo(sidecar)(graft.coder.PQ.fromJsonBytes(store.readSidecar(sidecar)))
+    codecOf(store, sidecar)(graft.coder.PQ.fromJsonBytes(store.readSidecar(sidecar)))
   }
+
+  /** A tier's codec sidecar, [[Store.memo]]ized; a miss runs the tier's
+    * crash sweep first, as [[residentTier]]. */
+  private def codecOf[A](store: Store, sidecar: String)(open: => A): A =
+    store.memo(sidecar) {
+      Swap.recover(store.fs, new Path(sidecar).getParent)
+      open
+    }
 
   def loadPq(store: Store, codingName: String, source: String, column: String): DataFrame =
     loadTier(store, codingName, source, column, "pq")
@@ -1112,13 +1092,14 @@ object Index {
         SqParamsSet(fitSqParams(gLo, gHi),
           bounds.map { case (c, (lo, hi)) => c -> fitSqParams(lo, hi) }.toMap)
       }
-    val path = store.sqIndexPath(source, column, codingName)
-    writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
-      .withColumn(CodeCol, assignExpr(col(column), coding))
-      .withColumn(SqCol, quantizeSetCol(col(column), col(CodeCol), set)),
-      coding.numCells, path)
-    store.writeSidecar(sqSidecar(path), sqParamsJson(set).getBytes("UTF-8"))
-    recordSourceStamp(store, path, listing)
+    Swap.replace(store.fs, new Path(store.sqIndexPath(source, column, codingName))) { image =>
+      writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
+        .withColumn(CodeCol, assignExpr(col(column), coding))
+        .withColumn(SqCol, quantizeSetCol(col(column), col(CodeCol), set)),
+        coding.numCells, image)
+      store.writeSidecar(sqSidecar(image), sqParamsJson(set).getBytes("UTF-8"))
+      recordSourceStamp(store, image, listing)
+    }
     set.global
   }
 
@@ -1153,7 +1134,7 @@ object Index {
   private def loadSqParams(store: Store, codingName: String, source: String,
       column: String): SqParamsSet = {
     val sidecar = sqSidecar(store.sqIndexPath(source, column, codingName))
-    store.memo(sidecar)(parseSqParams(store.readSidecar(sidecar)))
+    codecOf(store, sidecar)(parseSqParams(store.readSidecar(sidecar)))
   }
 
   private def parseSqParams(bytes: Array[Byte]): SqParamsSet = {
@@ -1379,13 +1360,14 @@ object Index {
         BqParamsSet(global, cells)
       }
 
-    val path = store.bqIndexPath(source, column, codingName)
-    writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
-      .withColumn(CodeCol, assignExpr(col(column), coding))
-      .withColumn(BqCol, packSignBitsSetCol(col(column), col(CodeCol), set)),
-      coding.numCells, path)
-    store.writeSidecar(bqSidecar(path), bqParamsJson(set).getBytes("UTF-8"))
-    recordSourceStamp(store, path, listing)
+    Swap.replace(store.fs, new Path(store.bqIndexPath(source, column, codingName))) { image =>
+      writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
+        .withColumn(CodeCol, assignExpr(col(column), coding))
+        .withColumn(BqCol, packSignBitsSetCol(col(column), col(CodeCol), set)),
+        coding.numCells, image)
+      store.writeSidecar(bqSidecar(image), bqParamsJson(set).getBytes("UTF-8"))
+      recordSourceStamp(store, image, listing)
+    }
     thresholds
   }
 
@@ -1425,7 +1407,7 @@ object Index {
   private def loadBqParams(store: Store, codingName: String,
       source: String, column: String): BqParamsSet = {
     val sidecar = bqSidecar(store.bqIndexPath(source, column, codingName))
-    store.memo(sidecar) {
+    codecOf(store, sidecar) {
       require(store.sidecarExists(sidecar),
         s"no BQ index for $source.$column under coding '$codingName' — " +
           "build it first (buildBq)")

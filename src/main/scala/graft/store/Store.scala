@@ -54,9 +54,9 @@ class Store(val spark: SparkSession, val root: String) {
       name.forall(c => (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
         (c >= '0' && c <= '9') || c == '.' || c == '_' || c == '-'),
       s"invalid name '$name': allowed characters are [A-Za-z0-9._-]")
-    require(!name.endsWith(".graft-old"),
-      s"invalid name '$name': the .graft-old suffix is reserved for " +
-        "replaceTable's crash-safe aside copy")
+    require(!Swap.reserved(name),
+      s"invalid name '$name': the .graft-new-/.graft-old- prefixes are " +
+        "reserved for the commit protocol's staging and aside copies")
     name
   }
 
@@ -214,77 +214,25 @@ class Store(val spark: SparkSession, val root: String) {
   private def list(dir: String): Seq[String] = {
     val p = new Path(dir)
     if (!fs.exists(p)) Nil
-    else {
-      val names = fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath.getName).toSeq
-      val live = names.filterNot(_.endsWith(".graft-old"))
-      // a LONE aside (a replaceTable swap crashed between its two
-      // renames) is readable via loadTable's fallback — surface it
-      // under its base name, or listings/exists-based routes would
-      // report a readable table absent and DELETE could never reach
-      // it. An aside alongside its live dir stays hidden (stale copy).
-      val liveSet = live.toSet
-      val ghosts = names.filter(_.endsWith(".graft-old"))
-        .map(_.stripSuffix(".graft-old")).filterNot(liveSet)
-      (live ++ ghosts).sorted
-    }
+    else Swap.listed(fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq)
   }
 
   // ——— Tables (S1-S6) ———
 
-  /** Replace table `name` with `df` via staging + swap (the upsert/merge
-    * path, where `df` typically READS the very table being replaced).
-    *
-    * `mode("overwrite")` truncates the destination before the (long)
-    * distributed rewrite even starts, so a crash mid-write loses the
-    * whole table and a concurrent reader can observe a partial one.
-    * Here the new contents are fully written to a staging directory
-    * first; the swap is then metadata ops only: the OLD table is renamed
-    * ASIDE (never deleted before the new one is live), staging renames
-    * into place, and only then is the aside copy dropped. A crash at any
-    * point leaves a complete table readable: before the aside-rename,
-    * the old table is untouched; between the two renames, the old table
-    * sits at `<dest>.graft-old` — [[loadTable]] falls back to it
-    * read-only, and the NEXT replaceTable completes the swap (it reads
-    * through the fallback, skips the aside-rename since dest is absent,
-    * and installs the fresh staging copy); after the staging rename the
-    * new table is live regardless of whether the aside cleanup ran.
-    * Readers racing the swap see old-or-new, never partial — the residue
-    * is the two-rename-sized window where the path is briefly absent
-    * (Hadoop rename cannot atomically replace a non-empty directory; on
-    * object stores without atomic rename the window widens to a copy,
-    * the documented trade-off). */
-  def replaceTable(name: String, df: DataFrame): Unit = {
-    val dest = new Path(sourcePath(name))
-    val aside = new Path(sourcePath(name) + ".graft-old")
-    val staging = new Path(s"$root/staging/${safeSeg(name)}")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    // the FULL replacement is written before anything is renamed — df
-    // may read the very table being replaced (upsert shape) or, after a
-    // crashed swap, its aside copy via [[loadTable]]'s read fallback
-    try graft.types.Tensors.enforceDeclaredShapes(df)
-      .write.mode("overwrite").parquet(staging.toString)
-    catch { case e: Throwable => fs.delete(staging, true); throw e }
-    // a stale aside from a prior swap that crashed AFTER going live is
-    // dropped only when the destination is in fact live; in the
-    // crashed-between-renames state (dest absent) it survives as the
-    // readable copy until the new table is in place
-    if (fs.exists(aside) && fs.exists(dest)) fs.delete(aside, true)
-    if (fs.exists(dest)) require(fs.rename(dest, aside),
-      s"replaceTable: aside rename $dest -> $aside failed (table untouched)")
-    fs.mkdirs(dest.getParent)
-    require(fs.rename(staging, dest),
-      s"replaceTable: rename $staging -> $dest failed (old table intact at " +
-        s"$aside, new table left in staging)")
-    if (fs.exists(aside)) fs.delete(aside, true)
-  }
+  /** Replace table `name` with `df` through [[Swap.install]] (the
+    * upsert/merge path, where `df` typically READS the very table being
+    * replaced): the full replacement is written to staging before
+    * anything is renamed, so a failed write leaves the old table (or no
+    * table) untouched, and a reader sees the old table or the new one.
+    * Columns declared as fixed-shape tensors (via `Tensors.asTensor`
+    * metadata) are shape-checked during the write, so a ragged vector
+    * fails ingest rather than a later distance/assign. */
+  def replaceTable(name: String, df: DataFrame): Unit =
+    Swap.replace(fs, new Path(sourcePath(name))) { image =>
+      graft.types.Tensors.enforceDeclaredShapes(df).write.parquet(image)
+    }
 
-  /** Write a table; columns declared as fixed-shape tensors (via
-    * `Tensors.asTensor` metadata) are shape-checked during the write, so a
-    * ragged vector fails ingest rather than a later distance/assign.
-    * Written through [[replaceTable]]'s staging and swap: a write that
-    * fails (a ragged vector, a FAILFAST parse error) leaves no table
-    * where there was none and the old one untouched where there was. */
+  /** Write a table ([[replaceTable]]). */
   def createTable(name: String, df: DataFrame): Unit = replaceTable(name, df)
 
   /** Import an external CSV, JSON, or Arrow IPC stream file set as a
@@ -319,31 +267,24 @@ class Store(val spark: SparkSession, val root: String) {
   }
 
   /** Load one or many sources; many ⇒ vertical concat (S4/P7,
-    * `table.py:12-21`).
-    *
-    * Read-only crash fallback: if a [[replaceTable]] swap crashed
-    * between its two renames, the table sits complete at
-    * `<dest>.graft-old` with the destination path absent — readers fall
-    * back to the aside copy (no mutation, so no race with a live
-    * writer; the next replaceTable performs the mutating recovery). */
+    * `table.py:12-21`). A table with pending residue (absent, or a
+    * committed install not yet rolled forward) is swept first
+    * ([[Swap.recover]]), so a read after a crash sees a whole table. */
   def loadTable(names: String*): DataFrame = {
     require(names.nonEmpty, "at least one source name")
     names.map { n =>
-      val p = sourcePath(n)
-      val path =
-        if (!fs.exists(new Path(p)) && fs.exists(new Path(p + ".graft-old")))
-          p + ".graft-old"
-        else p
-      spark.read.parquet(path)
+      val p = new Path(sourcePath(n))
+      if (Swap.pending(fs, p)) Swap.recover(fs, p)
+      spark.read.parquet(p.toString)
     }.reduce(_ unionByName _)
   }
 
   def listTables(): Seq[String] = list(s"$root/sources")
 
+  /** A lone aside is the table until a sweep restores it. */
   def tableExists(name: String): Boolean =
     fs.exists(new Path(sourcePath(name))) ||
-      // crashed-swap aside: readable via loadTable's fallback
-      fs.exists(new Path(sourcePath(name) + ".graft-old"))
+      fs.exists(Swap.aside(new Path(sourcePath(name))))
 
   /** Metadata-cheap content stamp of a stored source: MD5 over the
     * sorted (name, length, mtime) file listing of its directory. Any
@@ -395,24 +336,13 @@ class Store(val spark: SparkSession, val root: String) {
 
   def loadBucketedTable(name: String): DataFrame = spark.table(name)
 
-  def dropTable(name: String): Unit = {
-    fs.delete(new Path(sourcePath(name)), true)
-    // a crashed-swap aside is the same logical table — dropping the
-    // name must not leave a readable ghost behind
-    fs.delete(new Path(sourcePath(name) + ".graft-old"), true)
-  }
+  def dropTable(name: String): Unit = Swap.drop(fs, new Path(sourcePath(name)))
 
   /** Rewrite a table into `numFiles` files (small-file compaction after
     * many incremental appends — at scale, file-count hygiene is what keeps
     * scan task counts and NameNode/liststatus pressure sane). */
-  def compact(name: String, numFiles: Int): Unit = {
-    val src = sourcePath(name)
-    val tmp = s"$src.__compact_tmp__"
-    spark.read.parquet(src).repartition(numFiles)
-      .write.mode("overwrite").parquet(tmp)
-    fs.delete(new Path(src), true)
-    require(fs.rename(new Path(tmp), new Path(src)), s"rename failed for $name")
-  }
+  def compact(name: String, numFiles: Int): Unit =
+    replaceTable(name, loadTable(name).repartition(numFiles))
 
   /** Range-cluster a table on `sortCol`: repartitionByRange + sort within
     * partitions, so each output file covers a disjoint value range and
@@ -420,16 +350,10 @@ class Store(val spark: SparkSession, val root: String) {
     * predicates (the poor man's clustering key — at 100 TB this is the
     * difference between scanning one file and scanning all of them for a
     * `WHERE ts BETWEEN …`). */
-  def optimizeLayout(name: String, sortCol: String, numFiles: Int): Unit = {
-    val src = sourcePath(name)
-    val tmp = s"$src.__layout_tmp__"
-    spark.read.parquet(src)
-      .repartitionByRange(numFiles, org.apache.spark.sql.functions.col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(tmp)
-    fs.delete(new Path(src), true)
-    require(fs.rename(new Path(tmp), new Path(src)), s"rename failed for $name")
-  }
+  def optimizeLayout(name: String, sortCol: String, numFiles: Int): Unit =
+    replaceTable(name, loadTable(name)
+      .repartitionByRange(numFiles, col(sortCol))
+      .sortWithinPartitions(sortCol))
 
   /** Z-order (Morton-curve) multi-column clustering: interleave the bits
     * of min/max-normalized column ranks and range-cluster on the
@@ -452,9 +376,7 @@ class Store(val spark: SparkSession, val root: String) {
     require(cols.size >= 2 && cols.size <= 4,
       s"zorderLayout interleaves 2-4 columns, got ${cols.size} " +
         "(one column wants optimizeLayout; >4 dims dilute per-dim locality)")
-    val src = sourcePath(name)
-    val tmp = s"$src.__zorder_tmp__"
-    val df = spark.read.parquet(src)
+    val df = loadTable(name)
     val n = cols.size
     val bitsPer = if (equiDepth) 8 else math.min(16, 63 / n)
     val scale = (1L << bitsPer) - 1
@@ -490,13 +412,10 @@ class Store(val spark: SparkSession, val root: String) {
         }
       }
     val z = Store.mortonInterleave(ranks, bitsPer)
-    df.withColumn("__Z__", z)
+    replaceTable(name, df.withColumn("__Z__", z)
       .repartitionByRange(numFiles, col("__Z__"))
       .sortWithinPartitions("__Z__")
-      .drop("__Z__")
-      .write.mode("overwrite").parquet(tmp)
-    fs.delete(new Path(src), true)
-    require(fs.rename(new Path(tmp), new Path(src)), s"rename failed for $name")
+      .drop("__Z__"))
   }
 
   /** Catalog stats for a table: (rowCount, totalBytes, fileCount). */
@@ -644,14 +563,15 @@ class Store(val spark: SparkSession, val root: String) {
       j <- coding.centroids.indices
       i <- coding.centroids(j).indices
     } yield (j, i, coding.centroids(j)(i).toSeq)
-    rows.toDF("codebook", "cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"${codingPath(name)}/centroids")
     val json =
       s"""{"metric":"${c.metric}","codebookSize":${c.codebookSize},"numCodebooks":${c.numCodebooks},
          |"batchSize":${c.batchSize},"numEpochs":${c.numEpochs},"seed":${c.seed},
          |"maxStepsPerEpoch":${c.maxStepsPerEpoch}}""".stripMargin.replace("\n", "")
-    val out = fs.create(new Path(s"${codingPath(name)}/config.json"), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
+    Swap.replace(fs, new Path(codingPath(name))) { image =>
+      rows.toDF("codebook", "cell", "centroid")
+        .coalesce(1).write.parquet(s"$image/centroids")
+      writeSidecar(s"$image/config.json", json.getBytes("UTF-8"))
+    }
   }
 
   /** Codings are tiny (n·k·d doubles) but live in Parquet, so a probed
@@ -704,7 +624,7 @@ class Store(val spark: SparkSession, val root: String) {
     } yield s"$root/$tier/${safeSeg(source)}/${safeSeg(column)}/${safeSeg(coding)}"
     (codingPath(name) +: tiers).foreach { path =>
       forget(path)
-      fs.delete(new Path(path), true)
+      Swap.drop(fs, new Path(path))
     }
     // advisor sidecars measured for this coding die with it: probe
     // advice (bare coding stem) and every (tier, probes) candidate

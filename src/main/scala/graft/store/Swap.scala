@@ -1,151 +1,178 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe directory-swap compaction, shared by every bucketed index
-  * tier (lexical term buckets, fuzzy segment and id buckets) and their
-  * flat sidecar tables (doclens, PassJoin key counts).
+/** The one commit protocol of every store write (DESIGN §12): the only
+  * code that renames or removes live data.
   *
-  * Discipline (proved out by the lexical tier's crash cases in
-  * LexicalSpec): a live directory is NEVER deleted before its
-  * replacement is installed. Bucket swaps rename the live dir to a
-  * dot-prefixed aside (invisible to parquet file listing — it cannot be
-  * misread as a partition during the window), install the replacement,
-  * then drop the aside; flat tables swap via a sibling `.__old__`
-  * rename pair. The matching [[recover]] sweep MUST run before any
-  * append or rewrite of the artifact: a lone aside with its live dir
-  * absent means a crash between aside-rename and install (restore it
-  * BEFORE an append can recreate the live dir with only new rows, which
-  * would make aside-alongside-live ambiguous);
-  * with recovery ordered before every mutation, aside-alongside-live can
-  * only mean a crash after install and dropping the aside is safe. */
+  * An artifact is a directory `<parent>/<name>` (a table, an index tier,
+  * a text tier, a coding). A write [[install]]s a set of entries, paths
+  * relative to the artifact (`""` is the artifact itself):
+  *   1. the new contents are written in full under the staging image
+  *      `<parent>/.graft-new-<name>/<name>/`;
+  *   2. a commit marker listing the entries is renamed into the staging
+  *      dir — the commit point;
+  *   3. each live entry is renamed to its aside `.graft-old-<entry name>`
+  *      in the same directory, its staged copy renamed into place (an
+  *      entry with no staged copy is a deletion), and the aside dropped;
+  *   4. last, the staging dir is dropped.
+  * Dot-prefixed names are invisible to parquet file listing and to
+  * [[Store]]'s listings, so neither staging nor an aside is ever read
+  * as data. Hadoop rename cannot replace a non-empty directory, hence
+  * the aside.
+  *
+  * [[recover]] is the one sweep: a committed staging dir is rolled
+  * forward, an uncommitted one dropped, an aside beside its live entry
+  * dropped, and a lone aside (one no marker covers) renamed back. Every
+  * writer sweeps before it reads, under the artifact's lock. */
 private[graft] object Swap {
-  private def asidePath(dir: Path, partDirName: String) =
-    new Path(dir, s".graft-old-$partDirName")
+  private val New = ".graft-new-"
+  private val Old = ".graft-old-"
+  private val Marker = "_GRAFT_COMMIT"
 
-  /** Per-artifact mutation locks (striped by base path, process-wide).
-    *
-    * A server thread pool can race a read path's crash-recovery sweep
-    * against an in-flight compaction: during the legitimate
-    * aside-rename→install window the reader sees "aside with live
-    * absent" and would rename the aside back over the live dir, making
-    * the compactor's install fail (local FS) or nest the new dir inside
-    * the restored one (HDFS rename-into-dir), corrupting the bucket;
-    * two readers recovering one genuine crash aside also race, and the
-    * loser's require(rename) fails a query spuriously. Every mutation
-    * (build/sync/compact) runs under its artifact's lock, and recovery
-    * sweeps take it only when a listing actually shows an aside — the
-    * clean-path read stays lock-free. Monitor locks are reentrant, so
-    * the recovery call inside a locked sync/compact is safe. In-process
-    * only: the engine's single-driver deployment model (one JVM owns an
-    * artifact root's mutations); cross-process coordination would need
-    * a filesystem lease and is out of scope by design. */
+  /** Whether `name` is taken by the protocol (a staging dir or aside). */
+  def reserved(name: String): Boolean = name.startsWith(New) || name.startsWith(Old)
+
+  private def staging(artifact: Path): Path =
+    new Path(artifact.getParent, New + artifact.getName)
+  def aside(live: Path): Path = new Path(live.getParent, Old + live.getName)
+  private def marker(artifact: Path) = new Path(staging(artifact), Marker)
+  private def under(dir: Path, entry: String) =
+    if (entry.isEmpty) dir else new Path(dir, entry)
+
+  /** Directory entry names as a listing shows them: dot-prefixed names
+    * (staging dirs, asides) hidden, but a lone aside under its live name
+    * — it is what [[recover]] restores. */
+  def listed(names: Seq[String]): Seq[String] = {
+    val live = names.filterNot(_.startsWith("."))
+    (live ++ names.filter(_.startsWith(Old)).map(_.stripPrefix(Old)))
+      .distinct.sorted
+  }
+
+  /** Whether a reader of `artifact` must sweep first: it is absent (a
+    * lone aside may hold it) or a committed install awaits roll-forward. */
+  def pending(fs: FileSystem, artifact: Path): Boolean =
+    !fs.exists(artifact) || fs.exists(marker(artifact))
+
+  /** Per-artifact mutation locks (keyed by the artifact path,
+    * process-wide). A writer holds its artifact's lock from its sweep to
+    * the end of its install; a sweep takes it only when a listing shows
+    * residue, so the clean read path stays lock-free, and residue seen
+    * during a running install resolves, inside the lock, to a no-op.
+    * Monitor locks are reentrant. In-process only: one JVM owns an
+    * artifact root's mutations (cross-process coordination would need a
+    * filesystem lease, out of scope by design). */
   private val artifactLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   def withArtifactLock[A](base: String)(f: => A): A =
     artifactLocks.computeIfAbsent(base, _ => new Object).synchronized(f)
 
-  /** Crash recovery for one artifact rooted at `base`: its
-    * bucket-partitioned dirs (`bucketed`, each with its partition column,
-    * dirs named `<partCol>=N`) and its flat tables (`flats`), all relative
-    * to `base`. A bucket aside sits inside its dir, a flat table's
-    * `.__old__` aside beside the table, so one listStatus per bucketed dir
-    * plus one of `base` finds every aside. An aside whose live dir is
-    * absent is renamed back (a crash between aside-rename and install);
-    * one alongside its live dir is dropped (a crash after install, before
-    * cleanup). The artifact lock is taken ONLY when a listing shows an
-    * aside: the clean read path stays lock-free, and a visible aside may
-    * belong to a RUNNING compaction, whose window the lock serializes
-    * against — inside the lock the sweep lists again, so an aside that
-    * belonged to a just-finished compaction resolves to a no-op. */
-  def recover(fs: FileSystem, base: String, bucketed: Seq[(String, String)],
-      flats: Seq[String]): Unit = {
-    val root = new Path(base)
-    def children(dir: Path): Seq[FileStatus] =
-      try fs.listStatus(dir).toSeq
-      catch { case _: java.io.FileNotFoundException => Nil }
-    // every (aside, live) pair under the artifact
-    def asides(): Seq[(Path, Path)] =
-      children(root).map(_.getPath).flatMap(p => flats.collect {
-        case f if p.getName == s"$f.__old__" => p -> new Path(root, f)
-      }) ++ bucketed.flatMap { case (d, partCol) =>
-        val dir = new Path(root, d)
-        children(dir).filter(st => st.isDirectory &&
-            st.getPath.getName.startsWith(s".graft-old-$partCol="))
-          .map(st => st.getPath ->
-            new Path(dir, st.getPath.getName.stripPrefix(".graft-old-")))
+  /** One install of `artifact`, under its lock after [[recover]] (`dirs`
+    * as there), so the writer's reads see no residue: `stage` writes the
+    * new contents under the staging image it is given and returns the
+    * entries to install (one with nothing staged is deleted) with its
+    * result. A failed stage leaves the live artifact untouched and its
+    * staging dropped. */
+  def install[A](fs: FileSystem, artifact: Path, dirs: Seq[String] = Nil)(
+      stage: Path => (Seq[String], A)): A =
+    withArtifactLock(artifact.toString) {
+      recover(fs, artifact, dirs)
+      val st = staging(artifact)
+      val image = new Path(st, artifact.getName)
+      val (entries, result) =
+        try stage(image) catch { case e: Throwable => fs.delete(st, true); throw e }
+      // after the sweep no entry lives only in an aside: one neither
+      // staged nor live has nothing to install
+      val lines = entries.flatMap { e =>
+        if (fs.exists(under(image, e))) Some("+" + e)
+        else if (fs.exists(under(artifact, e))) Some("-" + e)
+        else None
       }
-    if (asides().nonEmpty)
-      withArtifactLock(base) {
-        asides().foreach { case (aside, live) =>
-          if (!fs.exists(live))
-            require(fs.rename(aside, live),
-              s"Swap.recover: crash-recovery rename $aside failed")
-          else fs.delete(aside, true)
-        }
+      if (lines.isEmpty) fs.delete(st, true)
+      else {
+        val tmp = new Path(st, s".$Marker")
+        val out = fs.create(tmp, true)
+        try out.write(lines.mkString("\n").getBytes("UTF-8")) finally out.close()
+        rename(fs, tmp, marker(artifact))
+        rollForward(fs, artifact)
       }
-  }
-
-  private def dataFiles(fs: FileSystem, p: Path): Int =
-    fs.listStatus(p).count(f => f.isFile && !f.getPath.getName.startsWith("_"))
-
-  /** Rewrite every `<partCol>=N` bucket under `dir` holding more than
-    * `maxFiles` data files (each incremental sync appends its own file
-    * set per touched bucket, so scan cost becomes task-overhead-bound
-    * without this). Returns the number of buckets compacted. Caller
-    * must have run [[recover]] first. */
-  def compactBuckets(spark: SparkSession, fs: FileSystem, dir: String,
-      partCol: String, maxFiles: Int, op: String): Long = {
-    val dirP = new Path(dir)
-    val frag = fs.listStatus(dirP).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
-      .map(s => s.getPath.getName.stripPrefix(s"$partCol=").toInt ->
-        dataFiles(fs, s.getPath))
-      .filter(_._2 > maxFiles).map(_._1)
-    if (frag.nonEmpty) {
-      val tmp = s"$dir.__compact_tmp__"
-      fs.delete(new Path(tmp), true)
-      spark.read.parquet(dir)
-        .filter(col(partCol).isin(frag: _*))
-        .repartition(frag.length, col(partCol))
-        .write.mode("overwrite").partitionBy(partCol).parquet(tmp)
-      frag.foreach { b =>
-        val dst = new Path(s"$dir/$partCol=$b")
-        val srcP = new Path(s"$tmp/$partCol=$b")
-        if (fs.exists(srcP)) {
-          val aside = asidePath(dirP, s"$partCol=$b")
-          if (fs.exists(dst))
-            require(fs.rename(dst, aside),
-              s"$op: aside rename failed for bucket $b (bucket untouched)")
-          require(fs.rename(srcP, dst),
-            s"$op: install failed for bucket $b (original intact at $aside)")
-          fs.delete(aside, true)
-        }
-      }
-      fs.delete(new Path(tmp), true)
+      result
     }
-    frag.length.toLong
+
+  /** Replaces `artifact` whole by what `write` writes under the staging
+    * image it is given: a reader sees the old artifact or the new one. */
+  def replace(fs: FileSystem, artifact: Path)(write: String => Unit): Unit =
+    install(fs, artifact) { image => write(image.toString); (Seq(""), ()) }
+
+  /** Deletes `artifact` through the protocol. */
+  def drop(fs: FileSystem, artifact: Path): Unit = replace(fs, artifact)(_ => ())
+
+  /** Data files under `dir` (paths relative to it), as a partitioned
+    * parquet write left them: names parquet hides (`.`, or `_` but for a
+    * `col=value` partition dir) skipped. */
+  def files(fs: FileSystem, dir: Path): Seq[String] = {
+    def walk(d: Path, rel: String): Seq[String] = fs.listStatus(d).toSeq.flatMap { s =>
+      val name = s.getPath.getName
+      if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) Nil
+      else if (s.isDirectory) walk(s.getPath, s"$rel$name/")
+      else Seq(rel + name)
+    }
+    if (fs.exists(dir)) walk(dir, "").sorted else Nil
   }
 
-  /** Coalesce a flat sidecar table to one file when it fragments past
-    * `maxFiles`. Returns the pre-compaction file count, 0 if skipped.
-    * Caller must have run [[recover]] first. */
-  def compactFlat(spark: SparkSession, fs: FileSystem, live: String,
-      maxFiles: Int, op: String): Long = {
-    val liveP = new Path(live)
-    val files = dataFiles(fs, liveP)
-    if (files <= maxFiles) return 0L
-    val tmp = new Path(s"$live.__compact_tmp__")
-    fs.delete(tmp, true)
-    spark.read.parquet(live).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val old = new Path(s"$live.__old__")
-    fs.delete(old, true)
-    require(fs.rename(liveP, old), s"$op: aside rename failed (table untouched)")
-    require(fs.rename(tmp, liveP), s"$op: swap failed (original intact at $old)")
-    fs.delete(old, true)
-    files.toLong
+  /** Idempotent: every step checks the state the previous one left. */
+  private def rollForward(fs: FileSystem, artifact: Path): Unit = {
+    val in = fs.open(marker(artifact))
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    val image = new Path(staging(artifact), artifact.getName)
+    lines.filter(_.nonEmpty).foreach { line =>
+      val entry = line.tail
+      val live = under(artifact, entry)
+      val staged = under(image, entry)
+      val put = line.head == '+'
+      val old = aside(live)
+      if (!put || fs.exists(staged)) { // not installed yet
+        if (fs.exists(live)) {
+          if (fs.exists(old)) fs.delete(old, true)
+          rename(fs, live, old)
+        }
+        if (put) {
+          fs.mkdirs(live.getParent)
+          rename(fs, staged, live)
+        }
+      }
+      if (fs.exists(old)) fs.delete(old, true)
+    }
+    fs.delete(staging(artifact), true)
+  }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    require(fs.rename(from, to), s"Swap: rename $from -> $to failed")
+
+  /** The one crash sweep of `artifact`: roll a committed staging dir
+    * forward or drop an uncommitted one, then settle every aside beside
+    * the artifact, in it, or in its subdirectories `dirs` (where a
+    * writer installs bucket entries): dropped beside its live entry,
+    * renamed back when alone. The lock is taken only when residue shows;
+    * inside it everything is looked at again. */
+  def recover(fs: FileSystem, artifact: Path, dirs: Seq[String] = Nil): Unit = {
+    def asides(): Seq[Path] =
+      Seq(aside(artifact)).filter(fs.exists) ++
+        ("" +: dirs).flatMap { d =>
+          try fs.listStatus(under(artifact, d)).toSeq.map(_.getPath)
+            .filter(_.getName.startsWith(Old))
+          catch { case _: java.io.FileNotFoundException => Nil }
+        }
+    if (fs.exists(staging(artifact)) || asides().nonEmpty)
+      withArtifactLock(artifact.toString) {
+        if (fs.exists(marker(artifact))) rollForward(fs, artifact)
+        else fs.delete(staging(artifact), true)
+        asides().foreach { a =>
+          val live = new Path(a.getParent, a.getName.stripPrefix(Old))
+          if (fs.exists(live)) fs.delete(a, true) else rename(fs, a, live)
+        }
+      }
   }
 }

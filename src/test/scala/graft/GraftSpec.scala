@@ -19,6 +19,7 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
+    .config(s"spark.hadoop.fs.${FaultFs.Scheme}.impl", classOf[FaultFs].getName)
     .getOrCreate()
   override def afterAll(): Unit = { /* shared across suites; do not stop */ }
   def sf(dir: String, table: String) =

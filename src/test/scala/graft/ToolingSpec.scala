@@ -47,6 +47,23 @@ class ToolingSpec extends AnyFunSuite {
     assert(buildersIn("src/main/scala") == Seq("BenchSession.scala"))
   }
 
+  test("src/main renames only in graft/store/Swap.scala, and no private " +
+      "swap scheme's temp or aside name remains") {
+    val main = root.resolve("src/main/scala")
+    val renaming = sources("src/main/scala")
+      .filter(f => Files.readString(f).contains(".rename("))
+      .map(f => main.relativize(f).toString)
+    assert(renaming == Seq("graft/store/Swap.scala"),
+      s"FileSystem.rename outside the commit protocol: $renaming")
+    val retired = Seq("__compact_tmp__", "__repair_tmp__", "__layout_tmp__",
+      "__zorder_tmp__", ".__old__")
+    val found = for {
+      f <- sources("src/main/scala")
+      name <- retired if Files.readString(f).contains(name)
+    } yield s"${main.relativize(f)}: $name"
+    assert(found.isEmpty, s"a private swap scheme is back: $found")
+  }
+
   test("src/test builds a SparkSession only in *Spec.scala fixtures") {
     val outside = buildersIn("src/test/scala").filterNot(_.endsWith("Spec.scala"))
     assert(outside.isEmpty, s"session builders outside spec fixtures: $outside")

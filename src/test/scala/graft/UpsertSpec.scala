@@ -118,7 +118,7 @@ class UpsertSpec extends SparkSuite {
     assert(got == Seq((1L, "a"), (2L, "b")))
     // staged dir was renamed into place, not left behind
     assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "staging", "t")))
+      java.nio.file.Paths.get(root, "sources", ".graft-new-t")))
   }
 
   test("replaceTable swap is crash-recoverable: a crash between the two " +
@@ -129,9 +129,9 @@ class UpsertSpec extends SparkSuite {
     engine.makeTable("t", Seq((1L, "a")).toDF("id", "txt"))
     // simulate the crash window: old table renamed aside, dest missing
     val dest = java.nio.file.Paths.get(root, "sources", "t")
-    val aside = java.nio.file.Paths.get(root, "sources", "t.graft-old")
+    val aside = java.nio.file.Paths.get(root, "sources", ".graft-old-t")
     java.nio.file.Files.move(dest, aside)
-    assert(!engine.listTables().contains("t.graft-old"),
+    assert(!engine.listTables().contains(".graft-old-t"),
       "aside copies must not appear as tables")
     // … but the LONE aside IS the table (readable via the fallback):
     // listings and exists must surface it under its base name, or the
@@ -161,7 +161,7 @@ class UpsertSpec extends SparkSuite {
     assert(!java.nio.file.Files.exists(aside), "aside must be cleaned up")
     // the reserved suffix is rejected as a table name
     intercept[IllegalArgumentException] {
-      engine.makeTable("x.graft-old", Seq((1L, "a")).toDF("id", "txt"))
+      engine.makeTable(".graft-old-x", Seq((1L, "a")).toDF("id", "txt"))
     }
   }
 
