@@ -1,5 +1,9 @@
 package graft.api
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,8 +18,7 @@ import graft.store.{Store, Swap}
   * stateless library API: every scan parameter travels in the call (no
   * server-global session state, fixing the reference race — SURVEY §1.3).
   */
-class Engine(val spark: SparkSession, val root: String,
-    val advisedStampTtlMs: Long = 10000L) {
+class Engine(val spark: SparkSession, val root: String) {
   val store = new Store(spark, root)
 
   // ——— tables ———
@@ -1477,152 +1480,82 @@ class Engine(val spark: SparkSession, val root: String,
     searchMulti(Seq(source), column, target, metric, coding, probes, k,
       filter, select, tieBreak)
 
-  /** Per-coding (parsed advice, coding metric, verified-at) memo behind
-    * [[resolveAdvisedProbes]]: the freshness check is a full source
-    * file listing, the advice itself is a sidecar read, and the metric
-    * compat check is a coding load — a serving loop issuing one advised
-    * search per query must pay NONE of them per call. Entries expire
-    * after [[advisedStampTtlMs]] (an in-place corpus rewrite — or a
-    * re-advise — is therefore picked up within the TTL, not instantly;
-    * pass `0` to re-verify every call). The metric slot fills lazily:
-    * only a call with a metric override needs the coding, and once one
-    * has paid that load the entry is upgraded in place. */
-  @transient private lazy val advisedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Engine.PersistedProbeAdvice, Option[String], Long)]()
-
   /** The probe budget `probes = Some(Engine.Advised)` serves, or a LOUD
-    * refusal. Refuses when: no advice was ever persisted for `coding`
-    * ([[adviseProbes]] names the remedy); the advice was measured
-    * against a different (source, column); the caller's `k` exceeds the
-    * advice's (recall@k was never measured past the advice's k); a
-    * `metric` override differs from the coding's metric the advice was
-    * measured under; or the source corpus changed since the measurement
-    * (file-listing stamp — checked at most once per
-    * [[advisedStampTtlMs]] per coding). Compatibility is checked BEFORE
-    * the stamp so a mismatch never pays the listing IO. */
+    * refusal ([[advised]]). */
   def resolveAdvisedProbes(coding: String, source: String, column: String,
-      k: Int, metric: Option[String]): Int = {
-    val now = System.nanoTime()
-    val hit = Option(advisedMemo.get(coding)).filter { case (_, _, at) =>
-      (now - at) < advisedStampTtlMs * 1000000L
-    }
-    // sidecar read only on a memo miss — the steady-state advised call
-    // touches no storage at all
-    val p = hit.map(_._1).getOrElse(loadProbeAdvice(coding).getOrElse(
-      throw new NoSuchElementException(
-        s"no persisted probe advice for coding '$coding' — run " +
-          "adviseProbes (or POST /api/advise/probes) first")))
-    require(p.source == source && p.column == column,
-      s"probe advice for coding '$coding' was measured against " +
-        s"(${p.source}, ${p.column}), not ($source, $column) — advise " +
-        "this corpus before serving it with Engine.Advised")
-    require(k <= p.k,
-      s"probe advice for coding '$coding' was measured at k = ${p.k}; " +
-        s"serving k = $k with it would apply a recall curve nobody " +
-        s"measured — re-run adviseProbes with k >= $k")
-    val codingMetric = metric.map(graft.core.Metrics.canonical).map { m =>
-      val cm = hit.flatMap(_._2).getOrElse(graft.core.Metrics.canonical(
-        store.loadCoding(coding).config.metric))
-      require(m == cm,
-        s"probe advice for coding '$coding' was measured under the " +
-          s"coding's metric '$cm', not '$m' — drop the metric override " +
-          "or re-index/advise under it")
-      cm
-    }
-    hit match {
-      case Some((cached, None, at)) if codingMetric.isDefined =>
-        // upgrade in place: the NEXT overridden call skips the coding
-        // load too (same verified-at — no freshness extension)
-        advisedMemo.put(coding, (cached, codingMetric, at))
-      case Some(_) => ()
-      case None =>
-        val stampNow = store.sourceStamp(p.source)
-        if (stampNow != p.sourceStamp) {
-          advisedMemo.remove(coding)
-          throw new IllegalStateException(
-            s"probe advice for coding '$coding' is STALE: source " +
-              s"'${p.source}' changed since the advice was measured " +
-              s"(stamp ${p.sourceStamp} -> $stampNow) — re-run " +
-              "adviseProbes (or POST /api/advise/probes) to re-measure")
-        }
-        advisedMemo.put(coding, (p, codingMetric, now))
-    }
-    p.advice.probes
-  }
-
-  /** [[advisedMemo]]'s candidate-advice twin — same TTL and
-    * lazily-filled coding-metric semantics, keyed per
-    * (coding, tier, probes). */
-  @transient private lazy val advisedCandMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (Engine.PersistedCandidateAdvice, Option[String], Long)]()
+      k: Int, metric: Option[String]): Int =
+    probeAdvice(coding, Some((source, column, k, metric))).advice.probes
 
   /** The candidate budget `candidates = Engine.Advised` serves, or a
-    * LOUD refusal — [[resolveAdvisedProbes]]' contract for the OTHER
-    * serving knob. Additionally refuses advice that never REACHED its
-    * recall target: a ceiling budget measured to miss is a diagnosis
-    * (probe-bound or rate-distortion-bound), not a budget anyone should
-    * silently serve. Keyed per (coding, tier, probes) — the advice is
-    * only valid at the probe count it was measured with. */
+    * LOUD refusal ([[advised]]), keyed per (coding, tier, probes) — the
+    * advice is only valid at the probe count it was measured with. */
   def resolveAdvisedCandidates(coding: String, tier: String, probes: Int,
       source: String, column: String, k: Int,
-      metric: Option[String]): Int = {
-    val key = s"$coding#$tier#$probes"
-    val now = System.nanoTime()
-    val hit = Option(advisedCandMemo.get(key)).filter { case (_, _, at) =>
-      (now - at) < advisedStampTtlMs * 1000000L
+      metric: Option[String]): Int =
+    candidateAdvice(coding, tier, probes,
+      Some((source, column, k, metric))).advice.candidates
+
+  /** What an advised search serves: (source, column, k, metric). */
+  private type Serving = (String, String, Int, Option[String])
+
+  private def probeAdvice(coding: String, serving: Option[Serving]) =
+    advised(Engine.PersistedProbeAdvice, coding, Engine.ProbeKey,
+      s"probe advice for coding '$coding'", serving)
+
+  private def candidateAdvice(coding: String, tier: String, probes: Int,
+      serving: Option[Serving]) =
+    advised(Engine.PersistedCandidateAdvice, coding,
+      Engine.candidateKey(tier, probes),
+      s"candidate advice for (coding '$coding', tier '$tier', probes $probes)",
+      serving)
+
+  /** The one read of persisted advice — [[Store.loadAdvice]], so a write
+    * or a drop by any engine over the root shows on the next call — or
+    * a LOUD refusal. Refuses when: none was persisted under `key` (the
+    * coding was never advised, or was retrained or dropped since; the
+    * refusal names the advisor); when `serving`, the advice was measured
+    * against another (source, column), at a smaller k (recall@k was
+    * never measured past it), is candidate advice that never REACHED its
+    * target (a ceiling budget measured to miss is a diagnosis, not a
+    * budget to serve), or a `metric` override differs from the coding's
+    * metric; and, on every call, when the source changed since the
+    * measurement (its file-listing stamp: one listing). Compatibility is
+    * checked before the stamp, so a mismatch never pays the listing. */
+  private def advised[A <: Engine.PersistedAdvice](kind: Engine.AdviceKind[A],
+      coding: String, key: String, name: String, serving: Option[Serving]): A = {
+    val p = store.loadAdvice(coding, key)(kind.fromJson).getOrElse(
+      throw new NoSuchElementException(s"no persisted $name — run ${kind.remedy} first"))
+    for ((source, column, k, metric) <- serving) {
+      require(p.source == source && p.column == column,
+        s"$name was measured against (${p.source}, ${p.column}), not " +
+          s"($source, $column) — advise this corpus before serving it with " +
+          "Engine.Advised")
+      require(k <= p.k,
+        s"$name was measured at k = ${p.k}; serving k = $k with it would " +
+          s"apply a recall curve nobody measured — re-run ${kind.advisor} " +
+          s"with k >= $k")
+      p match {
+        case c: Engine.PersistedCandidateAdvice => require(c.advice.reachedTarget,
+          s"$name never REACHED its ${c.targetRecall} target (recall " +
+            s"${c.advice.recall} at the ${c.advice.candidates} ceiling) — " +
+            "the budget is probe- or rate-bound; raise probes/maxCandidates " +
+            "and re-advise, or pass an explicit candidate count deliberately")
+        case _ => ()
+      }
+      for (m <- metric.map(graft.core.Metrics.canonical)) {
+        val cm = graft.core.Metrics.canonical(store.loadCoding(coding).config.metric)
+        require(m == cm,
+          s"${kind.kind} advice for coding '$coding' was measured under the " +
+            s"coding's metric '$cm', not '$m' — drop the metric override " +
+            "or re-index/advise under it")
+      }
     }
-    // sidecar read only on a memo miss — see [[resolveAdvisedProbes]]
-    val p = hit.map(_._1).getOrElse(
-      loadCandidateAdvice(coding, tier, probes).getOrElse(
-        throw new NoSuchElementException(
-          s"no persisted candidate advice for (coding '$coding', tier " +
-            s"'$tier', probes $probes) — run adviseCandidates (or POST " +
-            "/api/advise/candidates) first")))
-    require(p.source == source && p.column == column,
-      s"candidate advice for (coding '$coding', tier '$tier', probes " +
-        s"$probes) was measured against (${p.source}, ${p.column}), " +
-        s"not ($source, $column) — advise this corpus before serving " +
-        "it with Engine.Advised")
-    require(k <= p.k,
-      s"candidate advice for (coding '$coding', tier '$tier', probes " +
-        s"$probes) was measured at k = ${p.k}; serving k = $k with it " +
-        s"would apply a recall curve nobody measured — re-run " +
-        s"adviseCandidates with k >= $k")
-    require(p.advice.reachedTarget,
-      s"candidate advice for (coding '$coding', tier '$tier', probes " +
-        s"$probes) never REACHED its ${p.targetRecall} target (recall " +
-        s"${p.advice.recall} at the ${p.advice.candidates} ceiling) — " +
-        "the budget is probe- or rate-bound; raise probes/maxCandidates " +
-        "and re-advise, or pass an explicit candidate count deliberately")
-    val codingMetric = metric.map(graft.core.Metrics.canonical).map { m =>
-      val cm = hit.flatMap(_._2).getOrElse(graft.core.Metrics.canonical(
-        store.loadCoding(coding).config.metric))
-      require(m == cm,
-        s"candidate advice for coding '$coding' was measured under the " +
-          s"coding's metric '$cm', not '$m' — drop the metric override " +
-          "or re-index/advise under it")
-      cm
-    }
-    hit match {
-      case Some((cached, None, at)) if codingMetric.isDefined =>
-        advisedCandMemo.put(key, (cached, codingMetric, at))
-      case Some(_) => ()
-      case None =>
-        val stampNow = store.sourceStamp(p.source)
-        if (stampNow != p.sourceStamp) {
-          advisedCandMemo.remove(key)
-          throw new IllegalStateException(
-            s"candidate advice for (coding '$coding', tier '$tier', " +
-              s"probes $probes) is STALE: source '${p.source}' changed " +
-              s"since the advice was measured (stamp ${p.sourceStamp} -> " +
-              s"$stampNow) — re-run adviseCandidates (or POST " +
-              "/api/advise/candidates) to re-measure")
-        }
-        advisedCandMemo.put(key, (p, codingMetric, now))
-    }
-    p.advice.candidates
+    val now = store.sourceStamp(p.source)
+    if (now != p.sourceStamp) throw new IllegalStateException(
+      s"$name is STALE: source '${p.source}' changed since the advice was " +
+        s"measured (stamp ${p.sourceStamp} -> $now) — re-run ${kind.remedy} " +
+        "to re-measure")
+    p
   }
 
   /** Late-interaction (ColBERT MaxSim) retrieval over a table carrying a
@@ -1786,23 +1719,16 @@ class Engine(val spark: SparkSession, val root: String,
 
   /** [[recommendProbes]] + PERSIST: the advisor's scaladoc says "run
     * once per (coding, corpus) and persist the answer" — this is the
-    * method that actually does. The advice lands as a JSON sidecar
-    * under the coding (the PCA/BPE model-artifact pattern) stamped
-    * with the source's file-listing stamp taken BEFORE the measurement
-    * pass (the [[graft.index.Index]] discipline: a concurrent source
-    * change mid-run leaves a stale stamp — conservative). */
+    * method that actually does ([[persisted]]). */
   def adviseProbes(coding: String, source: String, column: String,
       idCol: String, k: Int = 10, targetRecall: Double = 0.95,
-      sampleQueries: Int = 32): Engine.PersistedProbeAdvice = {
-    val stamp = store.sourceStamp(source)
-    val a = recommendProbes(coding, source, column, idCol, k,
-      targetRecall, sampleQueries)
-    val p = Engine.PersistedProbeAdvice(a, source, column, idCol, k,
-      targetRecall, sampleQueries, stamp)
-    store.saveProbeAdvice(coding, p.toJson.getBytes("UTF-8"))
-    advisedMemo.put(coding, (p, None, System.nanoTime()))
-    p
-  }
+      sampleQueries: Int = 32): Engine.PersistedProbeAdvice =
+    persisted(coding, source) { stamp =>
+      val p = Engine.PersistedProbeAdvice(recommendProbes(coding, source,
+        column, idCol, k, targetRecall, sampleQueries), source, column,
+        idCol, k, targetRecall, sampleQueries, stamp)
+      (p, Some(p))
+    }
 
   /** Joint (probes, candidates) frontier advisor for the RERANK tier,
     * persisted.
@@ -1839,128 +1765,103 @@ class Engine(val spark: SparkSession, val root: String,
     require(maxCandidates >= k,
       s"maxCandidates ($maxCandidates) must be >= k ($k)")
     require(startProbes >= 1, s"startProbes must be >= 1, got $startProbes")
-    val stamp = store.sourceStamp(source)
-    val ctx = adviceContext(coding, source, column, idCol, k, sampleQueries)
-    try {
-      val start = math.min(startProbes, ctx.cells)
-      val probeLadder = (Iterator.iterate(start)(_ * 2)
-        .takeWhile(_ < ctx.cells) ++ Iterator.single(ctx.cells)).toSeq
-      val candLadder = (Iterator.iterate(k)(_ * 2)
-        .takeWhile(_ < maxCandidates) ++ Iterator.single(maxCandidates))
-        .toSeq
-      val frontier = scala.collection.mutable.ListBuffer.empty[(Int, Int, Double)]
-      var winner: Option[(Int, Int, Double)] = None
-      var winnerCurve: List[(Int, Double)] = Nil
-      val pit = probeLadder.iterator
-      while (winner.isEmpty && pit.hasNext) {
-        val p = pit.next()
-        def recallAt(cand: Int): Double =
-          ctx.meanRecall(collectTopK(idCol, knnJoinRerank(coding, source,
-            column, ctx.queries, "__q_id__", "__q_vec__", k, p, cand,
-            idCol, tieBreak = Seq(idCol))))
-        val ceiling = recallAt(maxCandidates)
-        if (ceiling >= targetRecall) {
-          val (curve, advice) =
-            climbLadder(candLadder.init, recallAt, targetRecall)
-          val fullCurve = curve :+ ((maxCandidates, ceiling))
-          frontier ++= fullCurve.map { case (c, r) => (p, c, r) }
-          winner = Some(advice.getOrElse((maxCandidates, ceiling)))
-            .map { case (c, r) => (p, c, r) }
-          winnerCurve = fullCurve
-        } else frontier += ((p, maxCandidates, ceiling))
-      }
-      winner match {
-        case Some((p, c, r)) =>
-          val a = Engine.CandidateAdvice("rerank", p, c, r, winnerCurve,
-            reachedTarget = true)
-          val pa = Engine.PersistedCandidateAdvice(a, source, column,
-            idCol, k, targetRecall, sampleQueries, maxCandidates, stamp)
-          store.saveCandidateAdvice(coding, "rerank", p,
-            pa.toJson.getBytes("UTF-8"))
-          advisedCandMemo.put(s"$coding#rerank#$p",
-            (pa, None, System.nanoTime()))
-          Engine.RerankFrontier(p, c, r, frontier.toList,
-            reachedTarget = true)
-        case None =>
-          val (p, c, r) = frontier.last
-          Engine.RerankFrontier(p, c, r, frontier.toList,
-            reachedTarget = false)
-      }
-    } finally graft.ext.Graph.release(ctx.queries)
+    persisted(coding, source) { stamp =>
+      val ctx = adviceContext(coding, source, column, idCol, k, sampleQueries)
+      try {
+        val start = math.min(startProbes, ctx.cells)
+        val probeLadder = (Iterator.iterate(start)(_ * 2)
+          .takeWhile(_ < ctx.cells) ++ Iterator.single(ctx.cells)).toSeq
+        val candLadder = (Iterator.iterate(k)(_ * 2)
+          .takeWhile(_ < maxCandidates) ++ Iterator.single(maxCandidates))
+          .toSeq
+        val frontier = scala.collection.mutable.ListBuffer.empty[(Int, Int, Double)]
+        var winner: Option[(Int, Int, Double)] = None
+        var winnerCurve: List[(Int, Double)] = Nil
+        val pit = probeLadder.iterator
+        while (winner.isEmpty && pit.hasNext) {
+          val p = pit.next()
+          def recallAt(cand: Int): Double =
+            ctx.meanRecall(collectTopK(idCol, knnJoinRerank(coding, source,
+              column, ctx.queries, "__q_id__", "__q_vec__", k, p, cand,
+              idCol, tieBreak = Seq(idCol))))
+          val ceiling = recallAt(maxCandidates)
+          if (ceiling >= targetRecall) {
+            val (curve, advice) =
+              climbLadder(candLadder.init, recallAt, targetRecall)
+            val fullCurve = curve :+ ((maxCandidates, ceiling))
+            frontier ++= fullCurve.map { case (c, r) => (p, c, r) }
+            winner = Some(advice.getOrElse((maxCandidates, ceiling)))
+              .map { case (c, r) => (p, c, r) }
+            winnerCurve = fullCurve
+          } else frontier += ((p, maxCandidates, ceiling))
+        }
+        val (p, c, r) = winner.getOrElse(frontier.last)
+        (Engine.RerankFrontier(p, c, r, frontier.toList, winner.isDefined),
+          winner.map(_ => Engine.PersistedCandidateAdvice(
+            Engine.CandidateAdvice("rerank", p, c, r, winnerCurve,
+              reachedTarget = true),
+            source, column, idCol, k, targetRecall, sampleQueries,
+            maxCandidates, stamp)))
+      } finally graft.ext.Graph.release(ctx.queries)
+    }
   }
 
   /** [[recommendCandidates]] + PERSIST, keyed per (coding, tier,
-    * probes) — the same sidecar discipline as [[adviseProbes]] (the
-    * candidate advisor shares its expensive brute ground-truth pass, so
-    * "measure per call" was the one advisor output that did NOT
-    * persist). Stamp taken BEFORE the measurement, conservative under
-    * concurrent source changes. */
+    * probes) ([[persisted]]): the candidate advisor shares the probe
+    * advisor's expensive brute ground-truth pass, so it is run once and
+    * served many times too. */
   def adviseCandidates(coding: String, source: String, column: String,
       idCol: String, tier: String, probes: Int, k: Int = 10,
       targetRecall: Double = 0.95, sampleQueries: Int = 32,
-      maxCandidates: Int = 4096): Engine.PersistedCandidateAdvice = {
-    val stamp = store.sourceStamp(source)
-    val a = recommendCandidates(coding, source, column, idCol, tier,
-      probes, k, targetRecall, sampleQueries, maxCandidates)
-    val p = Engine.PersistedCandidateAdvice(a, source, column, idCol, k,
-      targetRecall, sampleQueries, maxCandidates, stamp)
-    store.saveCandidateAdvice(coding, tier, probes,
-      p.toJson.getBytes("UTF-8"))
-    advisedCandMemo.put(s"$coding#$tier#$probes",
-      (p, None, System.nanoTime()))
-    p
+      maxCandidates: Int = 4096): Engine.PersistedCandidateAdvice =
+    persisted(coding, source) { stamp =>
+      val p = Engine.PersistedCandidateAdvice(recommendCandidates(coding,
+        source, column, idCol, tier, probes, k, targetRecall, sampleQueries,
+        maxCandidates), source, column, idCol, k, targetRecall,
+        sampleQueries, maxCandidates, stamp)
+      (p, Some(p))
+    }
+
+  /** The one persist step of every advisor: the source's file-listing
+    * stamp and the coding's [[Store.codingStamp]] are taken BEFORE
+    * `measure` runs (given the source stamp, it returns its result and
+    * the advice to persist, if any), then the advice is installed under
+    * its coding ([[Store.saveAdvice]]). A source changed mid-run leaves
+    * a stale stamp, which refuses at serve time — conservative; a coding
+    * retrained or dropped mid-run refuses the install. */
+  private def persisted[R](coding: String, source: String)(
+      measure: String => (R, Option[Engine.PersistedAdvice])): R = {
+    val measuredOn = store.codingStamp(coding)
+    val (result, advice) = measure(store.sourceStamp(source))
+    advice.foreach(p =>
+      store.saveAdvice(coding, p.key, p.toJson.getBytes("UTF-8"), measuredOn))
+    result
   }
 
   /** Persisted candidate advice for (coding, tier, probes), or None when
     * never advised. No freshness check — see [[freshCandidateAdvice]]. */
   def loadCandidateAdvice(coding: String, tier: String,
       probes: Int): Option[Engine.PersistedCandidateAdvice] =
-    store.loadCandidateAdviceBytes(coding, tier, probes)
-      .map(b => Engine.PersistedCandidateAdvice.fromJson(new String(b, "UTF-8")))
+    store.loadAdvice(coding, Engine.candidateKey(tier, probes))(
+      Engine.PersistedCandidateAdvice.fromJson)
 
   /** Persisted candidate advice, REFUSED loudly when never advised for
     * this (coding, tier, probes) or when the source corpus changed since
-    * the measurement — the [[freshProbeAdvice]] contract. */
+    * the measurement ([[advised]]). */
   def freshCandidateAdvice(coding: String, tier: String,
-      probes: Int): Engine.PersistedCandidateAdvice = {
-    val p = loadCandidateAdvice(coding, tier, probes).getOrElse(
-      throw new NoSuchElementException(
-        s"no persisted candidate advice for (coding '$coding', tier " +
-          s"'$tier', probes $probes) — run adviseCandidates (or POST " +
-          "/api/advise/candidates) first"))
-    val now = store.sourceStamp(p.source)
-    if (now != p.sourceStamp) throw new IllegalStateException(
-      s"candidate advice for (coding '$coding', tier '$tier', probes " +
-        s"$probes) is STALE: source '${p.source}' changed since the " +
-        s"advice was measured (stamp ${p.sourceStamp} -> $now) — re-run " +
-        "adviseCandidates (or POST /api/advise/candidates) to re-measure")
-    p
-  }
+      probes: Int): Engine.PersistedCandidateAdvice =
+    candidateAdvice(coding, tier, probes, None)
 
   /** Persisted advice for `coding`, or None when never advised. No
     * freshness check — see [[freshProbeAdvice]]. */
   def loadProbeAdvice(coding: String): Option[Engine.PersistedProbeAdvice] =
-    store.loadProbeAdviceBytes(coding)
-      .map(b => Engine.PersistedProbeAdvice.fromJson(new String(b, "UTF-8")))
+    store.loadAdvice(coding, Engine.ProbeKey)(Engine.PersistedProbeAdvice.fromJson)
 
-  /** Persisted advice, REFUSED loudly when the source corpus changed
-    * since it was measured (file-listing stamp mismatch — the advice's
-    * recall curve was measured against a corpus that no longer
-    * exists). Callers that can re-measure should catch and call
-    * [[adviseProbes]]. */
-  def freshProbeAdvice(coding: String): Engine.PersistedProbeAdvice = {
-    val p = loadProbeAdvice(coding).getOrElse(
-      throw new NoSuchElementException(
-        s"no persisted probe advice for coding '$coding' — run " +
-          "adviseProbes (or POST /api/advise/probes) first"))
-    val now = store.sourceStamp(p.source)
-    if (now != p.sourceStamp) throw new IllegalStateException(
-      s"probe advice for coding '$coding' is STALE: source " +
-        s"'${p.source}' changed since the advice was measured " +
-        s"(stamp ${p.sourceStamp} -> $now) — re-run adviseProbes " +
-        "(or POST /api/advise/probes) to re-measure")
-    p
-  }
+  /** Persisted advice, REFUSED loudly when never advised or when the
+    * source corpus changed since it was measured ([[advised]]). Callers
+    * that can re-measure should catch and call [[adviseProbes]]. */
+  def freshProbeAdvice(coding: String): Engine.PersistedProbeAdvice =
+    probeAdvice(coding, None)
 
   /** Shared advisor scaffolding: deterministic bounded query sample
     * (checkpointed — the orderBy scan runs once, not once per ladder
@@ -2117,90 +2018,116 @@ object Engine {
   case class RerankFrontier(probes: Int, candidates: Int, recall: Double,
       frontier: Seq[(Int, Int, Double)], reachedTarget: Boolean)
 
-  /** [[Engine.adviseProbes]]' sidecar payload: the measured advice plus
-    * everything needed to (a) reproduce the measurement and (b) detect
-    * staleness (the source's file-listing stamp at measure time). */
-  case class PersistedProbeAdvice(advice: ProbeAdvice, source: String,
-      column: String, idCol: String, k: Int, targetRecall: Double,
-      sampleQueries: Int, sourceStamp: String) {
+  /** Persisted advice of either kind, as [[Engine.adviseProbes]] and
+    * [[Engine.adviseCandidates]] install it under its coding: the
+    * measured advice plus everything needed to (a) reproduce the
+    * measurement and (b) detect staleness (the source's file-listing
+    * stamp at measure time). `key` names it among its coding's advice. */
+  sealed trait PersistedAdvice {
+    def source: String; def column: String; def idCol: String; def k: Int
+    def targetRecall: Double; def sampleQueries: Int; def sourceStamp: String
+    def key: String
+    /** The kind's own fields. */
+    protected def own(o: ObjectNode): Unit
+
+    /** The one advice codec: the shared fields are written here, the
+      * kind's in [[own]]; [[AdviceKind.fromJson]] reads them back. */
     def toJson: String = {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
+      val m = new ObjectMapper()
       val o = m.createObjectNode()
       o.put("source", source); o.put("column", column)
       o.put("idCol", idCol); o.put("k", k)
       o.put("targetRecall", targetRecall)
       o.put("sampleQueries", sampleQueries)
       o.put("sourceStamp", sourceStamp)
-      o.put("probes", advice.probes); o.put("recall", advice.recall)
-      o.put("numCells", advice.numCells)
-      val arr = o.putArray("curve")
-      advice.curve.foreach { case (p, r) =>
-        val e = arr.addObject(); e.put("probes", p); e.put("recall", r)
-      }
+      own(o)
       m.writeValueAsString(o)
+    }
+
+    protected def putCurve(o: ObjectNode, knob: String,
+        curve: Seq[(Int, Double)]): Unit = {
+      val arr = o.putArray("curve")
+      curve.foreach { case (x, r) =>
+        val e = arr.addObject(); e.put(knob, x); e.put("recall", r)
+      }
     }
   }
 
-  /** [[Engine.adviseCandidates]]' sidecar payload — the candidate-budget
-    * analogue of [[PersistedProbeAdvice]] (tier and probes live inside
-    * the advice; the sidecar is keyed by them too). */
+  /** One advice kind, as the shared read and its refusals name it:
+    * `kind` ("probe" | "candidate") and the advisor that measures it. */
+  sealed abstract class AdviceKind[A <: PersistedAdvice](val kind: String,
+      val advisor: String, route: String) {
+    def remedy: String = s"$advisor (or POST /api/advise/$route)"
+
+    /** Reads the shared fields of `s`, and `make` the kind's own from
+      * its node (`field` refuses a missing one loudly). */
+    protected def read(s: String)(make: (String => JsonNode) => (String,
+        String, String, Int, Double, Int, String) => A): A = {
+      val n = new ObjectMapper().readTree(s)
+      def field(k: String): JsonNode = Option(n.get(k)).getOrElse(
+        throw new IllegalStateException(s"$kind advice has no '$k': $s"))
+      make(field)(field("source").asText(), field("column").asText(),
+        field("idCol").asText(), field("k").asInt(),
+        field("targetRecall").asDouble(), field("sampleQueries").asInt(),
+        field("sourceStamp").asText())
+    }
+
+    protected def curve(field: String => JsonNode, knob: String): List[(Int, Double)] =
+      field("curve").elements().asScala
+        .map(e => (e.get(knob).asInt(), e.get("recall").asDouble())).toList
+
+    def fromJson(s: String): A
+  }
+
+  /** The advice key of probe advice, and of candidate advice per (tier,
+    * probes): `<coding>/advice/<key>.json`. */
+  private[graft] val ProbeKey = "probes"
+  private[graft] def candidateKey(tier: String, probes: Int): String = s"${tier}_p$probes"
+
+  /** [[Engine.adviseProbes]]' advice. */
+  case class PersistedProbeAdvice(advice: ProbeAdvice, source: String,
+      column: String, idCol: String, k: Int, targetRecall: Double,
+      sampleQueries: Int, sourceStamp: String) extends PersistedAdvice {
+    def key: String = ProbeKey
+    protected def own(o: ObjectNode): Unit = {
+      o.put("probes", advice.probes); o.put("recall", advice.recall)
+      o.put("numCells", advice.numCells)
+      putCurve(o, "probes", advice.curve)
+    }
+  }
+
+  object PersistedProbeAdvice
+      extends AdviceKind[PersistedProbeAdvice]("probe", "adviseProbes", "probes") {
+    def fromJson(s: String): PersistedProbeAdvice = read(s) { f =>
+      PersistedProbeAdvice(ProbeAdvice(f("probes").asInt(),
+        f("recall").asDouble(), curve(f, "probes"), f("numCells").asInt()),
+        _, _, _, _, _, _, _)
+    }
+  }
+
+  /** [[Engine.adviseCandidates]]' advice, keyed by its (tier, probes). */
   case class PersistedCandidateAdvice(advice: CandidateAdvice,
       source: String, column: String, idCol: String, k: Int,
       targetRecall: Double, sampleQueries: Int, maxCandidates: Int,
-      sourceStamp: String) {
-    def toJson: String = {
-      val m = new com.fasterxml.jackson.databind.ObjectMapper()
-      val o = m.createObjectNode()
-      o.put("source", source); o.put("column", column)
-      o.put("idCol", idCol); o.put("k", k)
-      o.put("targetRecall", targetRecall)
-      o.put("sampleQueries", sampleQueries)
-      o.put("maxCandidates", maxCandidates)
-      o.put("sourceStamp", sourceStamp)
+      sourceStamp: String) extends PersistedAdvice {
+    def key: String = candidateKey(advice.tier, advice.probes)
+    protected def own(o: ObjectNode): Unit = {
       o.put("tier", advice.tier); o.put("probes", advice.probes)
       o.put("candidates", advice.candidates)
       o.put("recall", advice.recall)
       o.put("reachedTarget", advice.reachedTarget)
-      val arr = o.putArray("curve")
-      advice.curve.foreach { case (c, r) =>
-        val e = arr.addObject(); e.put("candidates", c); e.put("recall", r)
-      }
-      m.writeValueAsString(o)
+      o.put("maxCandidates", maxCandidates)
+      putCurve(o, "candidates", advice.curve)
     }
   }
 
-  object PersistedCandidateAdvice {
-    def fromJson(s: String): PersistedCandidateAdvice = {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
-      import scala.jdk.CollectionConverters._
-      val curve = n.get("curve").elements().asScala
-        .map(e => (e.get("candidates").asInt(), e.get("recall").asDouble()))
-        .toList
-      PersistedCandidateAdvice(
-        CandidateAdvice(n.get("tier").asText(), n.get("probes").asInt(),
-          n.get("candidates").asInt(), n.get("recall").asDouble(), curve,
-          n.get("reachedTarget").asBoolean()),
-        n.get("source").asText(), n.get("column").asText(),
-        n.get("idCol").asText(), n.get("k").asInt(),
-        n.get("targetRecall").asDouble(), n.get("sampleQueries").asInt(),
-        n.get("maxCandidates").asInt(), n.get("sourceStamp").asText())
-    }
-  }
-
-  object PersistedProbeAdvice {
-    def fromJson(s: String): PersistedProbeAdvice = {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
-      import scala.jdk.CollectionConverters._
-      val curve = n.get("curve").elements().asScala
-        .map(e => (e.get("probes").asInt(), e.get("recall").asDouble()))
-        .toList
-      PersistedProbeAdvice(
-        ProbeAdvice(n.get("probes").asInt(), n.get("recall").asDouble(),
-          curve, n.get("numCells").asInt()),
-        n.get("source").asText(), n.get("column").asText(),
-        n.get("idCol").asText(), n.get("k").asInt(),
-        n.get("targetRecall").asDouble(), n.get("sampleQueries").asInt(),
-        n.get("sourceStamp").asText())
+  object PersistedCandidateAdvice extends AdviceKind[PersistedCandidateAdvice](
+      "candidate", "adviseCandidates", "candidates") {
+    def fromJson(s: String): PersistedCandidateAdvice = read(s) { f =>
+      PersistedCandidateAdvice(CandidateAdvice(f("tier").asText(),
+        f("probes").asInt(), f("candidates").asInt(), f("recall").asDouble(),
+        curve(f, "candidates"), f("reachedTarget").asBoolean()),
+        _, _, _, _, _, _, f("maxCandidates").asInt(), _)
     }
   }
 }

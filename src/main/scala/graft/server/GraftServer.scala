@@ -471,25 +471,17 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * calibration verb, not a serving verb: the POST measures AND
     * persists (the advisor's own scaladoc demands "run once and
     * persist"), the GET below serves the cached answer many times. */
-  private def postAdviseProbes(r: Req): Reply = {
-    val p = engine.adviseProbes(r.str("coding"), r.str("source"),
+  private def postAdviseProbes(r: Req): Reply =
+    adviceReply(engine.adviseProbes(r.str("coding"), r.str("source"),
       r.str("column"), r.str("idCol"),
       k = r.int("k", 10),
       targetRecall = r.double("targetRecall", 0.95),
-      sampleQueries = r.int("sampleQueries", 32))
-    Json(probeAdviceJson(p, cached = false))
-  }
+      sampleQueries = r.int("sampleQueries", 32)), cached = false)
 
-  /** Serves the PERSISTED advice for a coding — no measurement pass.
-    * 404 when never advised; 409 (loudly, naming the re-measure route)
-    * when the source corpus changed since the advice was measured. */
-  private def getAdviseProbes(r: Req): Reply = {
-    val coding = r.path("coding")
-    if (engine.loadProbeAdvice(coding).isEmpty)
-      notFound(s"no persisted probe advice for coding '$coding' — run " +
-        "adviseProbes (or POST /api/advise/probes) first")
-    else Json(probeAdviceJson(engine.freshProbeAdvice(coding), cached = true))
-  }
+  /** Serves the PERSISTED advice for a coding — no measurement pass
+    * ([[servedAdvice]]). */
+  private def getAdviseProbes(r: Req): Reply =
+    servedAdvice(engine.freshProbeAdvice(r.path("coding")))
 
   /** Candidate-budget advisor for the reranked tiers — measures AND
     * persists per (coding, tier, probes)
@@ -497,70 +489,37 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * advisor's expensive brute ground-truth pass, so the POST is the
     * run-once and the GET below the serve-many, exactly the probe-advice
     * wire contract). */
-  private def postAdviseCandidates(r: Req): Reply = {
-    val p = engine.adviseCandidates(r.str("coding"), r.str("source"),
+  private def postAdviseCandidates(r: Req): Reply =
+    adviceReply(engine.adviseCandidates(r.str("coding"), r.str("source"),
       r.str("column"), r.str("idCol"),
       tier = r.str("tier"),
       probes = r.int("probes"),
       k = r.int("k", 10),
       targetRecall = r.double("targetRecall", 0.95),
       sampleQueries = r.int("sampleQueries", 32),
-      maxCandidates = r.int("maxCandidates", 4096))
-    Json(candidateAdviceJson(p, cached = false))
-  }
+      maxCandidates = r.int("maxCandidates", 4096)), cached = false)
 
   /** Serves the PERSISTED candidate advice for (coding, ?tier=, ?probes=)
-    * — no measurement pass. 404 when never advised at this key; 409 when
-    * the source corpus changed since the measurement (naming the
-    * re-measure route) — mirrors [[getAdviseProbes]]. */
+    * — no measurement pass ([[servedAdvice]]). */
   private def getAdviseCandidates(r: Req): Reply = {
-    val coding = r.path("coding")
     val tier = r.paramOpt("tier").getOrElse(throw new IllegalArgumentException(
       "tier query param required (sq | bq | pq | rerank)"))
     val probes = r.paramOpt("probes").getOrElse(
       throw new IllegalArgumentException("probes query param required")).toInt
-    if (engine.loadCandidateAdvice(coding, tier, probes).isEmpty)
-      notFound(s"no persisted candidate advice for (coding '$coding', tier " +
-        s"'$tier', probes $probes) — run adviseCandidates (or POST " +
-        "/api/advise/candidates) first")
-    else Json(candidateAdviceJson(
-      engine.freshCandidateAdvice(coding, tier, probes), cached = true))
+    servedAdvice(engine.freshCandidateAdvice(r.path("coding"), tier, probes))
   }
 
-  private def probeAdviceJson(p: Engine.PersistedProbeAdvice,
-      cached: Boolean): String = {
-    val a = p.advice
-    adviceJson(s""""probes":${a.probes},"recall":${a.recall},""" +
-      s""""numCells":${a.numCells},"curve":[${curveJson("probes", a.curve)}],""",
-      p.source, p.column, p.idCol, p.k, p.targetRecall, p.sampleQueries,
-      tail = "", p.sourceStamp, cached)
-  }
+  /** One read of persisted advice: 404 when there is none at the key, 409
+    * (naming the re-measure route) when the source changed since it was
+    * measured. */
+  private def servedAdvice(read: => Engine.PersistedAdvice): Reply =
+    try adviceReply(read, cached = true)
+    catch { case e: NoSuchElementException => notFound(e.getMessage) }
 
-  private def candidateAdviceJson(p: Engine.PersistedCandidateAdvice,
-      cached: Boolean): String = {
-    val a = p.advice
-    adviceJson(s""""tier":${jstr(a.tier)},"probes":${a.probes},""" +
-      s""""candidates":${a.candidates},"recall":${a.recall},""" +
-      s""""reachedTarget":${a.reachedTarget},""" +
-      s""""curve":[${curveJson("candidates", a.curve)}],""",
-      p.source, p.column, p.idCol, p.k, p.targetRecall, p.sampleQueries,
-      tail = s""""maxCandidates":${p.maxCandidates},""", p.sourceStamp, cached)
-  }
-
-  /** The fields both persisted advice kinds share, between the kind's
-    * own leading `head` run and its `tail` run before the stamp (each a
-    * `"k":v,` run with a trailing comma). */
-  private def adviceJson(head: String, source: String, column: String,
-      idCol: String, k: Int, targetRecall: Double, sampleQueries: Int,
-      tail: String, sourceStamp: String, cached: Boolean): String =
-    s"""{$head"source":${jstr(source)},"column":${jstr(column)},""" +
-      s""""idCol":${jstr(idCol)},"k":$k,"targetRecall":$targetRecall,""" +
-      s""""sampleQueries":$sampleQueries,$tail""" +
-      s""""sourceStamp":${jstr(sourceStamp)},"cached":$cached}"""
-
-  private def curveJson(knob: String, curve: Seq[(Int, Double)]): String =
-    curve.map { case (x, recall) => s"""{"$knob":$x,"recall":$recall}""" }
-      .mkString(",")
+  /** The advice as it is persisted, plus whether it was served from the
+    * store rather than measured by this request. */
+  private def adviceReply(p: Engine.PersistedAdvice, cached: Boolean): Reply =
+    Json(p.toJson.stripSuffix("}") + s""","cached":$cached}""")
 
   /** The fields both search forms share, parsed once: sources, column,
     * metric, coding, k (capped at [[maxResponseRows]]), tieBreak, the

@@ -21,6 +21,7 @@ import graft.coder.{Coder, CoderConfig, Coding}
   * <root>/sources/<name>/                      Parquet table
   * <root>/codings/<name>/centroids/            Parquet (codebook, cell, centroid)
   * <root>/codings/<name>/config.json           training config
+  * <root>/codings/<name>/advice/<key>.json     advisor advice (probes | <tier>_p<probes>)
   * <root>/indexes/<source>/<column>/<coding>/  Parquet partitioned by __CODED_ID__
   * }}}
   *
@@ -516,43 +517,52 @@ class Store(val spark: SparkSession, val root: String) {
   def dropPcaModel(name: String): Unit =
     fs.delete(new Path(pcaModelPath(name)), false)
 
-  // ——— probe/candidate advisor advice (persisted per coding — the
-  // advisor's ground-truth pass is a full corpus scan; "run once per
-  // (coding, corpus) and persist" is only real if something persists) ———
+  // ——— advisor advice: a measured serving budget is an artifact of its
+  // coding, `<coding>/advice/<key>.json`, so a retrain or a drop of the
+  // coding takes it along (DESIGN §19) ———
 
-  def probeAdvicePath(coding: String): String =
-    s"$root/models/advice/${safeSeg(coding)}.json"
+  def advicePath(coding: String, key: String): String =
+    s"${codingPath(coding)}/advice/${safeSeg(key)}.json"
 
-  def saveProbeAdvice(coding: String, json: Array[Byte]): Unit =
-    writeSidecar(probeAdvicePath(coding), json)
+  /** What a measurement of `coding` starts from: the (modification time,
+    * length) of its `centroids/_SUCCESS`, None when there is no coding. */
+  def codingStamp(coding: String): Option[(Long, Long)] =
+    statOf(s"${codingPath(coding)}/centroids/_SUCCESS")
 
-  def loadProbeAdviceBytes(coding: String): Option[Array[Byte]] = {
-    val p = probeAdvicePath(coding)
-    if (sidecarExists(p)) Some(readSidecar(p)) else None
+  /** Installs advice `key` of `coding` ([[Swap.install]] of that one
+    * entry), refused if the coding was retrained or dropped since
+    * `measuredOn` ([[codingStamp]]) — the advice would describe cells
+    * that no longer exist. */
+  def saveAdvice(coding: String, key: String, json: Array[Byte],
+      measuredOn: Option[(Long, Long)]): Unit =
+    Swap.install(fs, new Path(codingPath(coding)), Seq("advice")) { image =>
+      if (measuredOn.isEmpty || codingStamp(coding) != measuredOn)
+        throw new IllegalStateException(s"coding '$coding' was retrained " +
+          s"or dropped while its advice '$key' was measured — advise it again")
+      val file = s"advice/${safeSeg(key)}.json"
+      writeSidecar(s"$image/$file", json)
+      (Seq(file), ())
+    }
+
+  /** Advice `key` of `coding`, parsed by `parse`, or None when there is
+    * none; [[memo]]ized under the advice file. On a miss a pending coding
+    * is swept ([[Swap.recover]]) and read again: an install cut short
+    * between its renames holds the advice in staging or an aside. */
+  def loadAdvice[A](coding: String, key: String)(parse: String => A): Option[A] = {
+    val path = advicePath(coding, key)
+    def read() = memo(path)(
+      if (sidecarExists(path)) Some(parse(new String(readSidecar(path), "UTF-8"))) else None)
+    read().orElse {
+      val artifact = new Path(codingPath(coding))
+      if (Swap.pending(fs, artifact)) { Swap.recover(fs, artifact, Seq("advice")); read() }
+      else None
+    }
   }
 
-  def dropProbeAdvice(coding: String): Unit =
-    fs.delete(new Path(probeAdvicePath(coding)), false)
-
-  /** Candidate advice is keyed per (coding, tier, probes): the budget is
-    * a property of the serving tier AT a probe count, not of the coding
-    * alone (`_cand_` + the tier name keeps the namespace disjoint from
-    * probe-advice files, whose stem is the bare coding name). */
-  def candidateAdvicePath(coding: String, tier: String, probes: Int): String =
-    s"$root/models/advice/${safeSeg(coding)}_cand_${safeSeg(tier)}_p$probes.json"
-
-  def saveCandidateAdvice(coding: String, tier: String, probes: Int,
-      json: Array[Byte]): Unit =
-    writeSidecar(candidateAdvicePath(coding, tier, probes), json)
-
-  def loadCandidateAdviceBytes(coding: String, tier: String,
-      probes: Int): Option[Array[Byte]] = {
-    val p = candidateAdvicePath(coding, tier, probes)
-    if (sidecarExists(p)) Some(readSidecar(p)) else None
-  }
-
-  def dropCandidateAdvice(coding: String, tier: String, probes: Int): Unit =
-    fs.delete(new Path(candidateAdvicePath(coding, tier, probes)), false)
+  def dropAdvice(coding: String, key: String): Unit =
+    Swap.install(fs, new Path(codingPath(coding)), Seq("advice")) { _ =>
+      (Seq(s"advice/${safeSeg(key)}.json"), ())
+    }
 
   // ——— Codings (V3, A1) ———
 
@@ -613,8 +623,8 @@ class Store(val spark: SparkSession, val root: String) {
 
   def listCodings(): Seq[String] = list(s"$root/codings")
 
-  /** Drop a coding AND every index built from it (fixes the reference's
-    * drop-index leak, `flight.py:92-100` / SURVEY A4). */
+  /** Drop a coding, its advice, AND every index built from it (fixes
+    * the reference's drop-index leak, `flight.py:92-100` / SURVEY A4). */
   def dropCoding(name: String): Unit = {
     val tiers = for {
       tier <- Seq("indexes", "pq_indexes", "sq_indexes", "bq_indexes")
@@ -626,19 +636,6 @@ class Store(val spark: SparkSession, val root: String) {
       forget(path)
       Swap.drop(fs, new Path(path))
     }
-    // advisor sidecars measured for this coding die with it: probe
-    // advice (bare coding stem) and every (tier, probes) candidate
-    // advice — the tier set is matched explicitly so a sibling coding
-    // whose NAME merely starts with "<name>_cand_" is never collected
-    dropProbeAdvice(name)
-    val candRe = (java.util.regex.Pattern.quote(safeSeg(name)) +
-      """_cand_(sq|bq|pq|rerank)_p\d+\.json""").r
-    val adviceDir = new Path(s"$root/models/advice")
-    if (fs.exists(adviceDir))
-      fs.listStatus(adviceDir)
-        .filter(s => s.isFile &&
-          candRe.pattern.matcher(s.getPath.getName).matches())
-        .foreach(s => fs.delete(s.getPath, false))
   }
 
   def listIndexes(): Seq[(String, String, String)] =

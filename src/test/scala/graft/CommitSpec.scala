@@ -59,6 +59,9 @@ class CommitSpec extends SparkSuite {
     e.readTable(Seq("t"), coding = Some(("c", "vec")))
       .select("id", "__CODED_ID__").collect().map(_.toString).toSeq.sorted
 
+  private def advise(e: Engine, k: Int): Unit =
+    e.adviseProbes("c", "t", "vec", "id", k = k, targetRecall = 1.0, sampleQueries = 8)
+
   private def sqIds(e: Engine): Seq[Long] =
     e.searchSq("t", "vec", target, "c", probes = 4, candidates = 1000,
       idCol = "id", k = 1000, tieBreak = Seq("id"))
@@ -172,7 +175,14 @@ class CommitSpec extends SparkSuite {
     Writer("syncIncremental",
       e => { withIvf(e); append(e, vectors(40 until 55)) },
       e => graft.index.Index.syncIncremental(e.store, "c", "t", "vec", "id"),
-      ivfRows, indexes = ivf)
+      ivfRows, indexes = ivf),
+    Writer("adviseProbes over existing advice",
+      e => { withIvf(e); advise(e, k = 5) },
+      e => advise(e, k = 10),
+      e => (scala.util.Try(e.freshProbeAdvice("c")).toEither.left.map(_.toString),
+        scala.util.Try(e.resolveAdvisedProbes("c", "t", "vec", 5, None))
+          .toEither.left.map(_.toString)),
+      indexes = ivf)
   ) ++ TextTierCase.both.flatMap(textWriters)
 
   private def copyTree(from: Path, to: Path): Unit = {

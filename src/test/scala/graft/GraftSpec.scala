@@ -307,14 +307,14 @@ class EngineSpec extends SparkSuite {
         reachedTarget = false),
       "emb", "embedding", "vec_id", 10, 0.95, 8, 128,
       engine.store.sourceStamp("emb"))
-    engine.store.saveCandidateAdvice("c1", "sq", 2,
-      unreached.toJson.getBytes("UTF-8"))
+    engine.store.saveAdvice("c1", "sq_p2",
+      unreached.toJson.getBytes("UTF-8"), engine.store.codingStamp("c1"))
     val miss = intercept[IllegalArgumentException] {
       engine.resolveAdvisedCandidates("c1", "sq", 2, "emb", "embedding",
         k = 10, metric = None)
     }
     assert(miss.getMessage.contains("REACHED"), miss.getMessage)
-    engine.store.dropCandidateAdvice("c1", "sq", 2)
+    engine.store.dropAdvice("c1", "sq_p2")
     // multi-source unions refuse the sentinel (a different corpus)
     intercept[IllegalArgumentException] {
       engine.searchSqMulti(Seq("emb", "emb_lo"), "embedding", t, "c1",
@@ -373,30 +373,26 @@ class EngineSpec extends SparkSuite {
         metric = None)
     }
     // never-advised coding → loud refusal with the remedy named, from
-    // the search call itself. The default-TTL engine above has the
-    // advice memoized (parsed-advice memo: a drop — like a corpus
-    // rewrite — is picked up within the TTL, not instantly; that is
-    // the documented trade for IO-free steady-state serving), so the
-    // refusal is pinned through a FRESH engine with an empty memo.
-    engine.store.dropProbeAdvice("c1")
-    assert(engine.resolveAdvisedProbes("c1", "emb", "embedding", k = 10,
-        metric = None) == p.advice.probes,
-      "within the TTL the memo serves the parsed advice with no sidecar read")
+    // the search call itself. A drop shows on the next call of the
+    // engine that read the advice, and of a FRESH engine.
+    engine.store.dropAdvice("c1", "probes")
+    intercept[NoSuchElementException] {
+      engine.resolveAdvisedProbes("c1", "emb", "embedding", k = 10,
+        metric = None)
+    }
     val e = intercept[NoSuchElementException] {
       new Engine(spark, root).search("emb", "embedding", t,
         coding = Some("c1"), probes = Some(Engine.Advised), k = 5)
     }
     assert(e.getMessage.contains("adviseProbes"))
-    // stale: re-advise, then change the corpus listing. A zero-TTL
-    // engine re-verifies freshness on every resolve (the default 10s
-    // memo legitimately serves inside its window — that is its
-    // documented trade)
+    // stale: re-advise, then change the corpus listing. Every resolve
+    // re-verifies freshness, through any engine over the root
     engine.adviseProbes("c1", "emb", "embedding", "vec_id",
       k = 10, targetRecall = 1.0, sampleQueries = 8)
     val sp = engine.spark; import sp.implicits._
     Seq((9999L, Seq.fill(dim)(9.0f))).toDF("vec_id", "embedding")
       .write.mode("append").parquet(engine.store.tablePath("emb"))
-    val eager = new Engine(spark, root, advisedStampTtlMs = 0)
+    val eager = new Engine(spark, root)
     val stale = intercept[IllegalStateException] {
       eager.search("emb", "embedding", t, coding = Some("c1"),
         probes = Some(Engine.Advised), k = 5)
@@ -404,14 +400,14 @@ class EngineSpec extends SparkSuite {
     assert(stale.getMessage.contains("STALE") &&
       stale.getMessage.contains("adviseProbes"))
     intercept[IllegalStateException] { eager.freshProbeAdvice("c1") }
-    // re-advising heals (through the zero-TTL engine too)
+    // re-advising heals (through the other engine too)
     engine.adviseProbes("c1", "emb", "embedding", "vec_id",
       k = 10, targetRecall = 1.0, sampleQueries = 8)
     assert(engine.freshProbeAdvice("c1").sourceStamp ==
       engine.store.sourceStamp("emb"))
     assert(eager.resolveAdvisedProbes("c1", "emb", "embedding", k = 10,
       metric = None) >= 1)
-    engine.store.dropProbeAdvice("c1")
+    engine.store.dropAdvice("c1", "probes")
   }
 
   test("rerank frontier advisor: finds a reaching (probes, candidates) " +
@@ -442,7 +438,7 @@ class EngineSpec extends SparkSuite {
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(served == explicit,
       "advised rerank serving must equal the explicit frontier pair")
-    engine.store.dropCandidateAdvice("c1", "rerank", fr.probes)
+    engine.store.dropAdvice("c1", s"rerank_p${fr.probes}")
     // an unreachable frontier (candidate cap at k: the cell-rank coarse
     // truncated to 5 rows by id cannot recover the true top-5) reports
     // the measured ceilings and persists NO advice key
@@ -580,13 +576,15 @@ class EngineSpec extends SparkSuite {
     assert(engine.listCodings().contains("c1"))
     assert(engine.store.listIndexes().contains(("emb", "embedding", "c1")))
     // advisor sidecars must die with their coding (probe + candidate)
-    engine.store.saveProbeAdvice("c1", "{}".getBytes("UTF-8"))
-    engine.store.saveCandidateAdvice("c1", "bq", 4, "{}".getBytes("UTF-8"))
+    engine.store.saveAdvice("c1", "probes", "{}".getBytes("UTF-8"),
+      engine.store.codingStamp("c1"))
+    engine.store.saveAdvice("c1", "bq_p4", "{}".getBytes("UTF-8"),
+      engine.store.codingStamp("c1"))
     engine.dropIndex("c1")
     assert(!engine.listCodings().contains("c1"))
     assert(engine.store.listIndexes().isEmpty, "drop-index must not leak sidecars")
-    assert(engine.store.loadProbeAdviceBytes("c1").isEmpty &&
-      engine.store.loadCandidateAdviceBytes("c1", "bq", 4).isEmpty,
+    assert(engine.store.loadAdvice("c1", "probes")(identity).isEmpty &&
+      engine.store.loadAdvice("c1", "bq_p4")(identity).isEmpty,
       "drop-index must drop the coding's advisor sidecars")
     engine.dropTable("emb_lo")
     assert(!engine.listTables().contains("emb_lo"))
