@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Metrics
-import graft.functions.{Dequantize, HammingDistancePair, PackSignBits, Quantize, VectorDistance, VectorNorm, VectorNormalize, WinnowFingerprints}
+import graft.functions.{Dequantize, HammingDistancePair, PackSignBitsPerCell, Quantize, VectorDistance, VectorNorm, VectorNormalize, WinnowFingerprints}
 
 /** SQL-surface registration.
   *
@@ -90,13 +90,14 @@ object GraftExtensions {
           numArg(args(1), "scale").toFloat, numArg(args(2), "zeroPoint").toFloat)
       }),
     (FunctionIdentifier("pack_sign_bits"),
-      new ExpressionInfo(classOf[PackSignBits].getName, "pack_sign_bits",
+      new ExpressionInfo(classOf[PackSignBitsPerCell].getName, "pack_sign_bits",
         "pack_sign_bits(v, dims) - pack a float/double array's sign bits " +
           "(x > 0) MSB-first into ceil(dims/8) bytes; the 1-bit binary- " +
           "quantization code (library paths threshold at the per-dim mean)"),
       (args: Seq[Expression]) => {
         require(args.length == 2, "pack_sign_bits(v, dims)")
-        PackSignBits(args(0),
+        // the sign-pack kernel with no cells: one zero-threshold block
+        PackSignBitsPerCell(args(0), Literal(0L), IndexedSeq.empty,
           IndexedSeq.fill(numArg(args(1), "dims").toInt)(0.0))
       }),
     (FunctionIdentifier("hamming_distance"),

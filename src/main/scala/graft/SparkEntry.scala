@@ -922,8 +922,10 @@ object SparkEntry {
         .select(col("q_id"), col("vec_id"), col(Search.DistCol).as("dist"))
     }),
     // —— batch kNN join over the BQ copy: the per-cell join carries
-    // 1-bit sign codes, Hamming in the join projection, scalars-only
-    // window; full budgets == exact, sharing knn_join_ivf's oracle shape ——
+    // 1-bit sign codes, scored asymmetrically (their conditional-mean
+    // decode against each query's float vector) in the join projection,
+    // scalars-only window; full budgets == exact, sharing knn_join_ivf's
+    // oracle shape ——
     "knn_join_bq" -> ((s: SparkSession, dir: String) => {
       val e = withBqIndex(s, dir)
       val queries = tbl(s, dir, "embeddings").filter(col("vec_id") < 3)

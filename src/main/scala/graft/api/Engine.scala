@@ -1518,9 +1518,11 @@ class Engine(val spark: SparkSession, val root: String) {
     * never measured past it), is candidate advice that never REACHED its
     * target (a ceiling budget measured to miss is a diagnosis, not a
     * budget to serve), or a `metric` override differs from the coding's
-    * metric; and, on every call, when the source changed since the
-    * measurement (its file-listing stamp: one listing). Compatibility is
-    * checked before the stamp, so a mismatch never pays the listing. */
+    * metric; and, on every call, when candidate advice's tier was
+    * rebuilt since the measurement (its codec sidecar's stamp, also when
+    * the advice recorded none: one file status) or the source changed
+    * (its file-listing stamp: one listing). Compatibility is checked
+    * before the stamps, so a mismatch never pays the listing. */
   private def advised[A <: Engine.PersistedAdvice](kind: Engine.AdviceKind[A],
       coding: String, key: String, name: String, serving: Option[Serving]): A = {
     val p = store.loadAdvice(coding, key)(kind.fromJson).getOrElse(
@@ -1549,6 +1551,15 @@ class Engine(val spark: SparkSession, val root: String) {
             s"coding's metric '$cm', not '$m' — drop the metric override " +
             "or re-index/advise under it")
       }
+    }
+    p match {
+      case c: Engine.PersistedCandidateAdvice =>
+        val codec = Index.codecStamp(store, coding, c.source, c.column, c.advice.tier)
+        if (codec != c.codecStamp) throw new IllegalStateException(
+          s"$name is STALE: the ${c.advice.tier} index was rebuilt since the " +
+            s"advice was measured (codec stamp ${c.codecStamp.getOrElse("unrecorded")} " +
+            s"-> ${codec.getOrElse("none")}) — re-run ${kind.remedy} to re-measure")
+      case _ => ()
     }
     val now = store.sourceStamp(p.source)
     if (now != p.sourceStamp) throw new IllegalStateException(
@@ -1815,10 +1826,13 @@ class Engine(val spark: SparkSession, val root: String) {
       targetRecall: Double = 0.95, sampleQueries: Int = 32,
       maxCandidates: Int = 4096): Engine.PersistedCandidateAdvice =
     persisted(coding, source) { stamp =>
+      // the tier's codec as the measurement starts: a rebuild of the
+      // tier (other params, other codes) moves it
+      val codec = Index.codecStamp(store, coding, source, column, tier)
       val p = Engine.PersistedCandidateAdvice(recommendCandidates(coding,
         source, column, idCol, tier, probes, k, targetRecall, sampleQueries,
         maxCandidates), source, column, idCol, k, targetRecall,
-        sampleQueries, maxCandidates, stamp)
+        sampleQueries, maxCandidates, stamp, codec)
       (p, Some(p))
     }
 
@@ -2059,13 +2073,19 @@ object Engine {
       val advisor: String, route: String) {
     def remedy: String = s"$advisor (or POST /api/advise/$route)"
 
-    /** Reads the shared fields of `s`, and `make` the kind's own from
-      * its node (`field` refuses a missing one loudly). */
-    protected def read(s: String)(make: (String => JsonNode) => (String,
-        String, String, Int, Double, Int, String) => A): A = {
-      val n = new ObjectMapper().readTree(s)
-      def field(k: String): JsonNode = Option(n.get(k)).getOrElse(
+    /** The fields of one advice file: `apply` refuses a missing one
+      * loudly, `opt` reads one that older advice lacks. */
+    protected final class Fields(n: JsonNode, s: String) extends (String => JsonNode) {
+      def apply(k: String): JsonNode = opt(k).getOrElse(
         throw new IllegalStateException(s"$kind advice has no '$k': $s"))
+      def opt(k: String): Option[JsonNode] = Option(n.get(k))
+    }
+
+    /** Reads the shared fields of `s`, and `make` the kind's own from
+      * its [[Fields]]. */
+    protected def read(s: String)(make: Fields => (String,
+        String, String, Int, Double, Int, String) => A): A = {
+      val field = new Fields(new ObjectMapper().readTree(s), s)
       make(field)(field("source").asText(), field("column").asText(),
         field("idCol").asText(), field("k").asInt(),
         field("targetRecall").asDouble(), field("sampleQueries").asInt(),
@@ -2105,11 +2125,15 @@ object Engine {
     }
   }
 
-  /** [[Engine.adviseCandidates]]' advice, keyed by its (tier, probes). */
+  /** [[Engine.adviseCandidates]]' advice, keyed by its (tier, probes).
+    * `codecStamp` is the stamp of the tier's codec sidecar when the
+    * measurement began ([[Index.codecStamp]]; None for the rerank tier,
+    * which has no codec). */
   case class PersistedCandidateAdvice(advice: CandidateAdvice,
       source: String, column: String, idCol: String, k: Int,
       targetRecall: Double, sampleQueries: Int, maxCandidates: Int,
-      sourceStamp: String) extends PersistedAdvice {
+      sourceStamp: String, codecStamp: Option[String] = None)
+      extends PersistedAdvice {
     def key: String = candidateKey(advice.tier, advice.probes)
     protected def own(o: ObjectNode): Unit = {
       o.put("tier", advice.tier); o.put("probes", advice.probes)
@@ -2117,6 +2141,7 @@ object Engine {
       o.put("recall", advice.recall)
       o.put("reachedTarget", advice.reachedTarget)
       o.put("maxCandidates", maxCandidates)
+      codecStamp.foreach(o.put("codecStamp", _))
       putCurve(o, "candidates", advice.curve)
     }
   }
@@ -2127,7 +2152,8 @@ object Engine {
       PersistedCandidateAdvice(CandidateAdvice(f("tier").asText(),
         f("probes").asInt(), f("candidates").asInt(), f("recall").asDouble(),
         curve(f, "candidates"), f("reachedTarget").asBoolean()),
-        _, _, _, _, _, _, f("maxCandidates").asInt(), _)
+        _, _, _, _, _, _, f("maxCandidates").asInt(), _,
+        f.opt("codecStamp").map(_.asText()))
     }
   }
 }

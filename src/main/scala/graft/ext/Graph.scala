@@ -274,6 +274,8 @@ object Graph {
       durableCheckpoint: Boolean = false): DataFrame = {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1, 50], got $iterations")
+    require(dampPerMille >= 0 && dampPerMille <= 1000,
+      s"dampPerMille must be in [0, 1000], got $dampPerMille")
     // same reused-partitioning shape as [[pageRank]]: edges on src,
     // the rank frame (carrying out_deg + is_seed) on v; repartition
     // before distinct = one edge shuffle (see [[pageRank]])

@@ -1,87 +1,95 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
-/** Sign-bit packing of a float vector against per-dimension thresholds:
-  * bit `i` of the output is set iff `x[i] > thresholds[i]`, packed
-  * MSB-first into `ceil(d/8)` bytes.
-  *
-  * The 1-bit quantization kernel of the IVF+BQ index tier (binary
-  * quantization — 32× smaller than float32): with thresholds at the
-  * per-dimension mean this is the classic one-bit-per-dimension code
-  * whose Hamming distance tracks angular/L2 proximity of the original
-  * vectors (sign-random-projection family, Charikar 2002 — here with the
-  * identity "projection" and mean-centering, the shape used by binary
-  * embedding search). MSB-first packing keeps the code a deterministic
-  * pure function of the input, so the whole column is mirrorable in SQL
-  * if ever needed.
-  *
-  * Thresholds ride the plan as a reference object (no literal
-  * interpolation); `IndexedSeq` params keep case-class equality
-  * structural (array fields would compare by reference and defeat
-  * Catalyst subexpression elimination).
-  */
-case class PackSignBits(child: Expression, thresholds: IndexedSeq[Double])
-    extends UnaryExpression {
-  require(thresholds.nonEmpty, "pack_sign_bits: thresholds must be non-empty")
+/** Sign-bit packing of a float vector against per-(cell, dimension)
+  * thresholds: bit `i` is set iff `x[i] > thresholds[b + i]`, with `b`
+  * the offset of the row's block ([[CellBlocks]]), packed MSB-first into
+  * `ceil(d/8)` bytes — the 1-bit code of the IVF+BQ tier (32× smaller
+  * than float32). With thresholds at the per-dimension mean this is the
+  * classic one-bit-per-dimension code whose Hamming distance tracks
+  * angular/L2 proximity (sign-random-projection family, Charikar 2002,
+  * here with the identity "projection" and mean-centering). Per-cell
+  * thresholds make the bits encode WITHIN-cell (residual) variation:
+  * under a clustered corpus a globally-centered sign code degenerates
+  * into a cluster id (every member shares the sign pattern of its
+  * cluster offset), carrying no information about a query's true
+  * neighbors, which all live in the same cells. MSB-first packing keeps
+  * the code a pure function of the input; the SQL `pack_sign_bits(v,
+  * dims)` is this kernel with no cells and zero thresholds. */
+case class PackSignBitsPerCell(child: Expression, cell: Expression,
+    cells: IndexedSeq[Long], thresholds: IndexedSeq[Double])
+    extends BinaryExpression {
+  private val dim = CellBlocks.dim("per-cell pack", cells, thresholds)
   require(thresholds.forall(java.lang.Double.isFinite),
-    "pack_sign_bits: every threshold must be finite")
+    "per-cell pack: every threshold must be finite")
 
+  @transient private lazy val cellsArr: Array[Long] = cells.toArray
   @transient private lazy val thrArr: Array[Double] = thresholds.toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pack_sign_bits expects array<float|double>, got ${other.catalogString}")
+  override def left: Expression = child
+  override def right: Expression = cell
+
+  override def checkInputDataTypes(): TypeCheckResult = (child.dataType, cell.dataType) match {
+    case (ArrayType(FloatType | DoubleType, _), LongType) => TypeCheckResult.TypeCheckSuccess
+    case (c, l) => TypeCheckResult.TypeCheckFailure(
+      s"per-cell pack expects (array<float|double>, bigint), got " +
+        s"(${c.catalogString}, ${l.catalogString})")
   }
 
   private lazy val childIsFloat =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_pack_sign_bits"
+  // with no cells this is the SQL `pack_sign_bits`: it keeps that
+  // function's name, and its constant cell stays out of the SQL text
+  override def prettyName: String =
+    if (cells.isEmpty) "graft_pack_sign_bits" else "graft_pack_sign_bits_cell"
+  override def sql: String =
+    if (cells.isEmpty) s"$prettyName(${child.sql})" else super.sql
 
-  override def nullSafeEval(input: Any): Any = {
+  override def nullSafeEval(input: Any, cellAny: Any): Any = {
     val arr = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
     val n = arr.numElements()
-    if (n != thrArr.length) throw new IllegalArgumentException(
-      s"graft_pack_sign_bits: vector has $n dims but thresholds have ${thrArr.length}")
+    if (n != dim) throw new IllegalArgumentException(
+      s"$prettyName: vector has $n dims but thresholds have $dim")
+    val base = CellBlocks.base(cellsArr, cellAny.asInstanceOf[Long], dim)
     val out = new Array[Byte]((n + 7) / 8)
     var i = 0
     while (i < n) {
       if (arr.isNullAt(i)) throw new IllegalArgumentException(
-        s"graft_pack_sign_bits: null element at index $i — needs dense vectors")
+        s"$prettyName: null element at index $i — needs dense vectors")
       val x = if (childIsFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-      if (x > thrArr(i)) out(i >> 3) = (out(i >> 3) | (0x80 >> (i & 7))).toByte
+      if (x > thrArr(base + i)) out(i >> 3) = (out(i >> 3) | (0x80 >> (i & 7))).toByte
       i += 1
     }
     out
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
+    nullSafeCodeGen(ctx, ev, (a, c) => {
+      val cl = ctx.addReferenceObj("cells", cellsArr, "long[]")
       val t = ctx.addReferenceObj("thresholds", thrArr, "double[]")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("idx")
-      val n = ctx.freshName("n")
+      val out = ctx.freshName("out"); val i = ctx.freshName("idx")
+      val n = ctx.freshName("n"); val base = ctx.freshName("base")
       val get = if (childIsFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
       s"""
          |int $n = $a.numElements();
-         |if ($n != $t.length) {
+         |if ($n != $dim) {
          |  throw new IllegalArgumentException(
-         |    "graft_pack_sign_bits: vector has " + $n + " dims but thresholds have " + $t.length);
+         |    "$prettyName: vector has " + $n + " dims but thresholds have $dim");
          |}
+         |final int $base = ${CellBlocks.baseCode(cl, c, dim)};
          |byte[] $out = new byte[($n + 7) / 8];
          |for (int $i = 0; $i < $n; $i++) {
          |  if ($a.isNullAt($i)) {
          |    throw new IllegalArgumentException(
-         |      "graft_pack_sign_bits: null element at index " + $i +
-         |      " — needs dense vectors");
+         |      "$prettyName: null element at index " + $i + " — needs dense vectors");
          |  }
-         |  if ($get > $t[$i]) {
+         |  if ($get > $t[$base + $i]) {
          |    $out[$i >> 3] = (byte) ($out[$i >> 3] | (0x80 >> ($i & 7)));
          |  }
          |}
@@ -89,71 +97,88 @@ case class PackSignBits(child: Expression, thresholds: IndexedSeq[Double])
        """.stripMargin
     })
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(child = newLeft, cell = newRight)
 }
 
-/** Hamming distance between a packed sign-bit code column (binary, as
-  * produced by [[PackSignBits]]) and a fixed query code: popcount of the
-  * bytewise XOR. The coarse-ranking distance of the IVF+BQ tier — 32
-  * byte-XOR + popcount steps rank a 256-d vector, vs 256 float multiplies
-  * for the full distance. Integer and exactly deterministic, so coarse
-  * ranking never suffers float-order nondeterminism.
-  */
-case class HammingDistance(child: Expression, query: IndexedSeq[Byte])
-    extends UnaryExpression {
-  require(query.nonEmpty, "hamming_distance: query code must be non-empty")
+/** Asymmetric decode of a packed sign-bit code over the
+  * [[PackSignBitsPerCell]] layout: each bit reconstructs to its side's
+  * CONDITIONAL MEAN, `out[i] = bit_i ? hi[b + i] : lo[b + i]` — the
+  * optimal (MMSE) 1-bit scalar dequantizer given the build-time split.
+  * Ranking `vector_distance(reconstruction, query)` keeps the query at
+  * full float precision and per-dimension magnitudes in the ranking,
+  * while the corpus-side scan still reads only ceil(d/8) bytes per
+  * row. */
+case class DequantizeSignBitsPerCell(child: Expression, cell: Expression,
+    cells: IndexedSeq[Long], lo: IndexedSeq[Float], hi: IndexedSeq[Float])
+    extends BinaryExpression {
+  private val dim = CellBlocks.dim("per-cell sign decode", cells, lo, hi)
+  require(lo.forall(java.lang.Float.isFinite) && hi.forall(java.lang.Float.isFinite),
+    "per-cell sign decode: every reconstruction level must be finite")
 
-  @transient private lazy val qArr: Array[Byte] = query.toArray
+  @transient private lazy val cellsArr: Array[Long] = cells.toArray
+  @transient private lazy val loArr: Array[Float] = lo.toArray
+  @transient private lazy val hiArr: Array[Float] = hi.toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"hamming_distance expects binary, got ${other.catalogString}")
+  override def left: Expression = child
+  override def right: Expression = cell
+
+  override def checkInputDataTypes(): TypeCheckResult = (child.dataType, cell.dataType) match {
+    case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
+    case (c, l) => TypeCheckResult.TypeCheckFailure(
+      s"per-cell sign decode expects (binary, bigint), got " +
+        s"(${c.catalogString}, ${l.catalogString})")
   }
 
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_hamming"
+  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
+  override def prettyName: String = "graft_dequantize_sign_bits_cell"
 
-  override def nullSafeEval(input: Any): Any = {
+  override def nullSafeEval(input: Any, cellAny: Any): Any = {
     val bytes = input.asInstanceOf[Array[Byte]]
-    if (bytes.length != qArr.length) throw new IllegalArgumentException(
-      s"graft_hamming: code has ${bytes.length} bytes but query has ${qArr.length}")
-    var acc = 0
+    if (bytes.length != (dim + 7) / 8) throw new IllegalArgumentException(
+      s"graft_dequantize_sign_bits_cell: code has ${bytes.length} bytes for $dim dims")
+    val base = CellBlocks.base(cellsArr, cellAny.asInstanceOf[Long], dim)
+    val out = new Array[Float](dim)
     var i = 0
-    while (i < bytes.length) {
-      acc += java.lang.Integer.bitCount((bytes(i) ^ qArr(i)) & 0xff)
+    while (i < dim) {
+      out(i) = if ((bytes(i >> 3) & (0x80 >> (i & 7))) != 0) hiArr(base + i)
+        else loArr(base + i)
       i += 1
     }
-    acc
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      val q = ctx.addReferenceObj("queryCode", qArr, "byte[]")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("idx")
+    nullSafeCodeGen(ctx, ev, (b, c) => {
+      val cl = ctx.addReferenceObj("cells", cellsArr, "long[]")
+      val l = ctx.addReferenceObj("loLevels", loArr, "float[]")
+      val h = ctx.addReferenceObj("hiLevels", hiArr, "float[]")
+      val out = ctx.freshName("out"); val i = ctx.freshName("idx")
+      val base = ctx.freshName("base")
       s"""
-         |if ($b.length != $q.length) {
+         |if ($b.length != ($dim + 7) / 8) {
          |  throw new IllegalArgumentException(
-         |    "graft_hamming: code has " + $b.length + " bytes but query has " + $q.length);
+         |    "graft_dequantize_sign_bits_cell: code has " + $b.length + " bytes for $dim dims");
          |}
-         |int $acc = 0;
-         |for (int $i = 0; $i < $b.length; $i++) {
-         |  $acc += java.lang.Integer.bitCount(($b[$i] ^ $q[$i]) & 0xff);
+         |final int $base = ${CellBlocks.baseCode(cl, c, dim)};
+         |float[] $out = new float[$dim];
+         |for (int $i = 0; $i < $dim; $i++) {
+         |  $out[$i] = (($b[$i >> 3] & (0x80 >> ($i & 7))) != 0) ? $h[$base + $i] : $l[$base + $i];
          |}
-         |${ev.value} = $acc;
+         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
        """.stripMargin
     })
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(child = newLeft, cell = newRight)
 }
 
-/** Hamming distance between two packed sign-bit code COLUMNS (both
-  * binary): popcount of the bytewise XOR. The batch-join variant of
-  * [[HammingDistance]] — each corpus code meets a different query code
-  * in the per-cell broadcast join, so neither side is a literal. */
+/** Hamming distance between two packed sign-bit code columns (both
+  * binary, as [[PackSignBitsPerCell]] packs them): popcount of the
+  * bytewise XOR — the SQL `hamming_distance`. Integer and exactly
+  * deterministic. */
 case class HammingDistancePair(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -200,235 +225,4 @@ case class HammingDistancePair(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** Asymmetric decode of a packed sign-bit code: each bit reconstructs to
-  * its side's CONDITIONAL MEAN — `out[i] = bit_i ? hi[i] : lo[i]` — i.e.
-  * the optimal (MMSE) 1-bit scalar dequantizer given the build-time
-  * split. Ranking `vector_distance(reconstruction, query)` is the
-  * asymmetric-distance refinement of symmetric Hamming: the query keeps
-  * full float precision and per-dimension magnitudes re-enter the
-  * ranking, while the corpus-side scan still reads only ceil(d/8) bytes
-  * per row. */
-case class DequantizeSignBits(child: Expression, lo: IndexedSeq[Float],
-    hi: IndexedSeq[Float]) extends UnaryExpression {
-  require(lo.nonEmpty && lo.length == hi.length,
-    s"dequantize_sign_bits: ${lo.length} lo vs ${hi.length} hi means")
-  require(lo.forall(java.lang.Float.isFinite) && hi.forall(java.lang.Float.isFinite),
-    "dequantize_sign_bits: every reconstruction level must be finite")
-
-  @transient private lazy val loArr: Array[Float] = lo.toArray
-  @transient private lazy val hiArr: Array[Float] = hi.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"dequantize_sign_bits expects binary, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "graft_dequantize_sign_bits"
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    val n = loArr.length
-    if (bytes.length != (n + 7) / 8) throw new IllegalArgumentException(
-      s"graft_dequantize_sign_bits: code has ${bytes.length} bytes for $n dims")
-    val out = new Array[Float](n)
-    var i = 0
-    while (i < n) {
-      out(i) = if ((bytes(i >> 3) & (0x80 >> (i & 7))) != 0) hiArr(i) else loArr(i)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      val l = ctx.addReferenceObj("loMeans", loArr, "float[]")
-      val h = ctx.addReferenceObj("hiMeans", hiArr, "float[]")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("idx")
-      s"""
-         |if ($b.length != ($l.length + 7) / 8) {
-         |  throw new IllegalArgumentException(
-         |    "graft_dequantize_sign_bits: code has " + $b.length + " bytes for " + $l.length + " dims");
-         |}
-         |float[] $out = new float[$l.length];
-         |for (int $i = 0; $i < $l.length; $i++) {
-         |  $out[$i] = (($b[$i >> 3] & (0x80 >> ($i & 7))) != 0) ? $h[$i] : $l[$i];
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Per-cell sign-bit packing: the threshold block is selected by the
-  * row's IVF cell id (flat layout: one dim-sized block per sorted cell,
-  * plus a trailing global-fallback block for unseen cells — the
-  * [[QuantizePerCellDim]] convention). Per-cell thresholds make the bits
-  * encode WITHIN-cell (residual) variation: under a clustered corpus a
-  * globally-centered sign code degenerates into a cluster id (every
-  * member shares the sign pattern of its cluster offset), carrying no
-  * information about a query's true neighbors — which all live in the
-  * same cells. */
-case class PackSignBitsPerCell(child: Expression, cell: Expression,
-    cells: IndexedSeq[Long], thresholds: IndexedSeq[Double])
-    extends BinaryExpression {
-  require(thresholds.nonEmpty && thresholds.length % (cells.length + 1) == 0,
-    s"per-cell pack: ${thresholds.length} thresholds not divisible into " +
-      s"${cells.length + 1} blocks (cells + global fallback)")
-  require(cells.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
-    "per-cell pack: cell ids must be strictly sorted")
-
-  private val dim = thresholds.length / (cells.length + 1)
-  @transient private lazy val cellsArr: Array[Long] = cells.toArray
-  @transient private lazy val thrArr: Array[Double] = thresholds.toArray
-
-  override def left: Expression = child
-  override def right: Expression = cell
-
-  override def checkInputDataTypes(): TypeCheckResult = (child.dataType, cell.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _), LongType) => TypeCheckResult.TypeCheckSuccess
-    case (c, l) => TypeCheckResult.TypeCheckFailure(
-      s"per-cell pack expects (array<float|double>, bigint), got " +
-        s"(${c.catalogString}, ${l.catalogString})")
-  }
-
-  private lazy val childIsFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_pack_sign_bits_cell"
-
-  override def nullSafeEval(input: Any, cellAny: Any): Any = {
-    val arr = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = arr.numElements()
-    if (n != dim) throw new IllegalArgumentException(
-      s"graft_pack_sign_bits_cell: vector has $n dims but params have $dim")
-    val idx = java.util.Arrays.binarySearch(cellsArr, cellAny.asInstanceOf[Long])
-    val base = (if (idx >= 0) idx else cellsArr.length) * dim
-    val out = new Array[Byte]((n + 7) / 8)
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) throw new IllegalArgumentException(
-        s"graft_pack_sign_bits_cell: null element at index $i")
-      val x = if (childIsFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-      if (x > thrArr(base + i)) out(i >> 3) = (out(i >> 3) | (0x80 >> (i & 7))).toByte
-      i += 1
-    }
-    out
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, c) => {
-      val cl = ctx.addReferenceObj("cells", cellsArr, "long[]")
-      val t = ctx.addReferenceObj("thresholds", thrArr, "double[]")
-      val out = ctx.freshName("out"); val i = ctx.freshName("idx")
-      val n = ctx.freshName("n")
-      val ix = ctx.freshName("cix"); val base = ctx.freshName("base")
-      val get = if (childIsFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $dim) {
-         |  throw new IllegalArgumentException(
-         |    "graft_pack_sign_bits_cell: vector has " + $n + " dims but params have $dim");
-         |}
-         |final int $ix = java.util.Arrays.binarySearch($cl, $c);
-         |final int $base = ($ix >= 0 ? $ix : $cl.length) * $dim;
-         |byte[] $out = new byte[($n + 7) / 8];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) {
-         |    throw new IllegalArgumentException(
-         |      "graft_pack_sign_bits_cell: null element at index " + $i);
-         |  }
-         |  if ($get > $t[$base + $i]) {
-         |    $out[$i >> 3] = (byte) ($out[$i >> 3] | (0x80 >> ($i & 7)));
-         |  }
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(child = newLeft, cell = newRight)
-}
-
-/** Per-cell asymmetric decode: [[DequantizeSignBits]] with the
-  * reconstruction-level block selected by the row's cell id (flat
-  * cells+fallback layout, as [[PackSignBitsPerCell]]). */
-case class DequantizeSignBitsPerCell(child: Expression, cell: Expression,
-    cells: IndexedSeq[Long], lo: IndexedSeq[Float], hi: IndexedSeq[Float])
-    extends BinaryExpression {
-  require(lo.nonEmpty && lo.length == hi.length,
-    s"per-cell sign decode: ${lo.length} lo vs ${hi.length} hi")
-  require(lo.length % (cells.length + 1) == 0,
-    s"per-cell sign decode: ${lo.length} levels not divisible into " +
-      s"${cells.length + 1} blocks")
-  require(cells.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
-    "per-cell sign decode: cell ids must be strictly sorted")
-
-  private val dim = lo.length / (cells.length + 1)
-  @transient private lazy val cellsArr: Array[Long] = cells.toArray
-  @transient private lazy val loArr: Array[Float] = lo.toArray
-  @transient private lazy val hiArr: Array[Float] = hi.toArray
-
-  override def left: Expression = child
-  override def right: Expression = cell
-
-  override def checkInputDataTypes(): TypeCheckResult = (child.dataType, cell.dataType) match {
-    case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-    case (c, l) => TypeCheckResult.TypeCheckFailure(
-      s"per-cell sign decode expects (binary, bigint), got " +
-        s"(${c.catalogString}, ${l.catalogString})")
-  }
-
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "graft_dequantize_sign_bits_cell"
-
-  override def nullSafeEval(input: Any, cellAny: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    if (bytes.length != (dim + 7) / 8) throw new IllegalArgumentException(
-      s"graft_dequantize_sign_bits_cell: code has ${bytes.length} bytes for $dim dims")
-    val idx = java.util.Arrays.binarySearch(cellsArr, cellAny.asInstanceOf[Long])
-    val base = (if (idx >= 0) idx else cellsArr.length) * dim
-    val out = new Array[Float](dim)
-    var i = 0
-    while (i < dim) {
-      out(i) = if ((bytes(i >> 3) & (0x80 >> (i & 7))) != 0) hiArr(base + i)
-        else loArr(base + i)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, c) => {
-      val cl = ctx.addReferenceObj("cells", cellsArr, "long[]")
-      val l = ctx.addReferenceObj("loLevels", loArr, "float[]")
-      val h = ctx.addReferenceObj("hiLevels", hiArr, "float[]")
-      val out = ctx.freshName("out"); val i = ctx.freshName("idx")
-      val ix = ctx.freshName("cix"); val base = ctx.freshName("base")
-      s"""
-         |if ($b.length != ($dim + 7) / 8) {
-         |  throw new IllegalArgumentException(
-         |    "graft_dequantize_sign_bits_cell: code has " + $b.length + " bytes for $dim dims");
-         |}
-         |final int $ix = java.util.Arrays.binarySearch($cl, $c);
-         |final int $base = ($ix >= 0 ? $ix : $cl.length) * $dim;
-         |float[] $out = new float[$dim];
-         |for (int $i = 0; $i < $dim; $i++) {
-         |  $out[$i] = (($b[$i >> 3] & (0x80 >> ($i & 7))) != 0) ? $h[$base + $i] : $l[$base + $i];
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(child = newLeft, cell = newRight)
 }

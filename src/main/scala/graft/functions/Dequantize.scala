@@ -66,8 +66,8 @@ case class Dequantize(child: Expression, scale: Float, zeroPoint: Float)
   * codegen'd inverse of [[Dequantize]] and the hot-path twin of
   * `Tensors.quantizeUdf` (bit-identical rounding, asserted in tests):
   * `out[i] = clamp(round(x[i] / scale + zeroPoint), 0, 255)`, computed in
-  * double so the rounding boundary is exact. Used by the SQ8 index build,
-  * where the encode is a corpus-scale pass and UDF boxing would dominate.
+  * double so the rounding boundary is exact — the SQL `graft_quantize`.
+  * (The SQ8 index encodes with [[QuantizePerCellDim]].)
   */
 case class Quantize(child: Expression, scale: Float, zeroPoint: Float)
     extends UnaryExpression {
@@ -136,180 +136,68 @@ case class Quantize(child: Expression, scale: Float, zeroPoint: Float)
     copy(child = newChild)
 }
 
-/** Per-dimension affine quantization:
-  * `out[i] = clamp(round(x[i] / scales[i] + zeroPoints[i]), 0, 255)`.
-  *
-  * The SQ8 index's encode path: one (scale, zeroPoint) pair PER DIMENSION
-  * instead of [[Quantize]]'s single global affine — the standard scalar-
-  * quantizer formulation (one outlier element anywhere must not collapse
-  * resolution for every dimension). Params ride the plan as a reference
-  * object (no literal interpolation, so the array size doesn't bloat the
-  * generated source). Input dimensionality must match the param arrays —
-  * a mismatch encodes garbage, so it throws.
+/** The one parameter layout of the per-dimension quantizer kernels
+  * ([[QuantizePerCellDim]], [[DequantizePerCellDim]],
+  * [[PackSignBitsPerCell]], [[DequantizeSignBitsPerCell]]): `cells` is
+  * the SORTED list of cell ids the params were fitted on, and each flat
+  * param array holds one `dim`-long block per cell in that order plus
+  * one trailing GLOBAL block. A row whose cell is not in `cells` (a cell
+  * the build never saw, possible after incremental sync) reads the
+  * global block, exactly as its encode did. A global codec is this
+  * layout with no cells: every row reads the one block. Params ride the
+  * plan as `IndexedSeq`s so case-class equality stays structural (array
+  * fields compare by reference and defeat Catalyst subexpression
+  * elimination); eval and codegen read flat arrays.
   */
-case class QuantizePerDim(child: Expression, scales: IndexedSeq[Float],
-    zeroPoints: IndexedSeq[Float]) extends UnaryExpression {
-  require(scales.nonEmpty && scales.length == zeroPoints.length,
-    s"per-dim quantize: ${scales.length} scales vs ${zeroPoints.length} zeroPoints")
-  require(scales.forall(s => java.lang.Float.isFinite(s) && s != 0f) &&
-      zeroPoints.forall(java.lang.Float.isFinite),
-    "per-dim quantize: every scale must be finite non-zero and every zeroPoint finite")
-
-  // IndexedSeq params (not Array) so case-class equality is structural —
-  // array fields fall back to reference identity, which defeats Catalyst
-  // subexpression elimination and canonical plan matching. The hot paths
-  // still read flat arrays:
-  @transient private lazy val scalesArr: Array[Float] = scales.toArray
-  @transient private lazy val zpArr: Array[Float] = zeroPoints.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"per-dim quantize expects array<float|double>, got ${other.catalogString}")
+object CellBlocks {
+  /** The block length of a layout, refusing a malformed one. */
+  def dim(kernel: String, cells: IndexedSeq[Long], params: IndexedSeq[_]*): Int = {
+    val n = params.head.length
+    require(n > 0 && params.forall(_.length == n),
+      s"$kernel: param arrays must be non-empty and of one length, got " +
+        params.map(_.length).mkString(", "))
+    require(n % (cells.length + 1) == 0,
+      s"$kernel: $n params not divisible into ${cells.length + 1} blocks " +
+        "(cells + global fallback)")
+    require(cells.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
+      s"$kernel: cell ids must be strictly sorted")
+    n / (cells.length + 1)
   }
 
-  private lazy val childIsFloat =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_quantize_dims"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = arr.numElements()
-    if (n != scales.length) throw new IllegalArgumentException(
-      s"graft_quantize_dims: vector has $n dims but params have ${scales.length}")
-    val out = new Array[Byte](n)
-    var i = 0
-    while (i < n) {
-      if (arr.isNullAt(i)) throw new IllegalArgumentException(
-        s"graft_quantize_dims: null element at index $i — quantize needs dense vectors")
-      val x = if (childIsFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-      val q = math.round(x / scalesArr(i) + zpArr(i))
-      out(i) = math.max(0L, math.min(255L, q)).toByte
-      i += 1
-    }
-    out
+  /** Offset of `cell`'s block in the flat params. Generated code calls it
+    * too. */
+  def base(cells: Array[Long], cell: Long, dim: Int): Int = {
+    val i = java.util.Arrays.binarySearch(cells, cell)
+    (if (i >= 0) i else cells.length) * dim
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val s = ctx.addReferenceObj("scales", scalesArr, "float[]")
-      val z = ctx.addReferenceObj("zeroPoints", zpArr, "float[]")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("idx")
-      val n = ctx.freshName("n")
-      val q = ctx.freshName("q")
-      val get = if (childIsFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $s.length) {
-         |  throw new IllegalArgumentException(
-         |    "graft_quantize_dims: vector has " + $n + " dims but params have " + $s.length);
-         |}
-         |byte[] $out = new byte[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) {
-         |    throw new IllegalArgumentException(
-         |      "graft_quantize_dims: null element at index " + $i +
-         |      " — quantize needs dense vectors");
-         |  }
-         |  long $q = Math.round($get / ((double) $s[$i]) + ((double) $z[$i]));
-         |  $out[$i] = (byte) Math.max(0L, Math.min(255L, $q));
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  /** The Java expression of [[base]] in generated code. */
+  private[functions] def baseCode(cells: String, cell: String, dim: Int): String =
+    s"graft.functions.CellBlocks.base($cells, $cell, $dim)"
 }
 
-/** Per-dimension affine dequantization — the inverse of [[QuantizePerDim]]:
-  * `out[i] = scales[i] * (bytes[i] - zeroPoints[i])`. */
-case class DequantizePerDim(child: Expression, scales: IndexedSeq[Float],
-    zeroPoints: IndexedSeq[Float]) extends UnaryExpression {
-  require(scales.nonEmpty && scales.length == zeroPoints.length,
-    s"per-dim dequantize: ${scales.length} scales vs ${zeroPoints.length} zeroPoints")
-  require(scales.forall(java.lang.Float.isFinite) &&
-      zeroPoints.forall(java.lang.Float.isFinite),
-    "per-dim dequantize: every scale and zeroPoint must be finite")
-
-  // see QuantizePerDim: structural equality via IndexedSeq, arrays inside
-  @transient private lazy val scalesArr: Array[Float] = scales.toArray
-  @transient private lazy val zpArr: Array[Float] = zeroPoints.toArray
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"per-dim dequantize expects binary, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "graft_dequantize_dims"
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    if (bytes.length != scales.length) throw new IllegalArgumentException(
-      s"graft_dequantize_dims: payload has ${bytes.length} dims but params " +
-        s"have ${scales.length}")
-    val out = new Array[Float](bytes.length)
-    var i = 0
-    while (i < bytes.length) {
-      out(i) = scalesArr(i) * ((bytes(i) & 0xFF) - zpArr(i))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      val s = ctx.addReferenceObj("scales", scalesArr, "float[]")
-      val z = ctx.addReferenceObj("zeroPoints", zpArr, "float[]")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("idx")
-      s"""
-         |if ($b.length != $s.length) {
-         |  throw new IllegalArgumentException(
-         |    "graft_dequantize_dims: payload has " + $b.length +
-         |    " dims but params have " + $s.length);
-         |}
-         |float[] $out = new float[$b.length];
-         |for (int $i = 0; $i < $b.length; $i++) {
-         |  $out[$i] = $s[$i] * (($b[$i] & 0xFF) - $z[$i]);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Per-(cell, dimension) affine quantization — [[QuantizePerDim]] with
-  * the params selected per row by its IVF cell id (the SemDeDup setting:
-  * heterogeneous clusters whose per-dimension value ranges are disjoint,
-  * where one shared range wastes most of the 8-bit resolution on
-  * BETWEEN-cluster spread). Layout: `cells` is the SORTED cell id list;
-  * `scales`/`zeroPoints` concatenate one dim-length block per cell plus
-  * one trailing GLOBAL fallback block (rows in cells the build never saw
-  * — possible after incremental sync — quantize under it, exactly as the
-  * dequantize side will read them). IndexedSeq params keep case-class
-  * equality structural; flat arrays inside for eval/codegen.
+/** Per-(cell, dimension) affine quantization, the SQ8 tier's encode:
+  * `out[i] = clamp(round(x[i] / scales[b + i] + zeroPoints[b + i]), 0, 255)`
+  * with `b` the offset of the row's block ([[CellBlocks]]). One (scale,
+  * zeroPoint) pair PER DIMENSION is the standard scalar-quantizer
+  * formulation: an outlier element in one dimension cannot collapse the
+  * others' resolution. Per-cell blocks are the SemDeDup setting:
+  * heterogeneous clusters whose per-dimension ranges are disjoint, where
+  * one shared range wastes most of the 8 bits on BETWEEN-cluster spread.
+  * Computed in double, so the rounding boundary is exact. A vector whose
+  * length is not the block length encodes garbage, so it throws.
   */
 case class QuantizePerCellDim(child: Expression, cell: Expression,
     cells: IndexedSeq[Long], scales: IndexedSeq[Float],
     zeroPoints: IndexedSeq[Float])
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  require(scales.nonEmpty && scales.length == zeroPoints.length,
-    s"per-cell quantize: ${scales.length} scales vs ${zeroPoints.length} zeroPoints")
-  require(scales.length % (cells.length + 1) == 0,
-    s"per-cell quantize: ${scales.length} params not divisible into " +
-      s"${cells.length + 1} blocks (cells + global fallback)")
-  require(cells.sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
-    "per-cell quantize: cell ids must be strictly sorted")
+  private val dim = CellBlocks.dim("per-cell quantize", cells, scales, zeroPoints)
+  // non-finite params would render as `NaNf`/`Infinityf`; a zero scale
+  // silently divides to ±Infinity
+  require(scales.forall(s => java.lang.Float.isFinite(s) && s != 0f) &&
+      zeroPoints.forall(java.lang.Float.isFinite),
+    "per-cell quantize: every scale must be finite non-zero and every zeroPoint finite")
 
-  private val dim = scales.length / (cells.length + 1)
   @transient private lazy val cellsArr: Array[Long] = cells.toArray
   @transient private lazy val scalesArr: Array[Float] = scales.toArray
   @transient private lazy val zpArr: Array[Float] = zeroPoints.toArray
@@ -324,6 +212,7 @@ case class QuantizePerCellDim(child: Expression, cell: Expression,
         s"(${c.catalogString}, ${l.catalogString})")
   }
 
+  // lazy: the child is unresolved (NullType) at construction time
   private lazy val childIsFloat =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
@@ -335,8 +224,7 @@ case class QuantizePerCellDim(child: Expression, cell: Expression,
     val n = arr.numElements()
     if (n != dim) throw new IllegalArgumentException(
       s"graft_quantize_cell_dims: vector has $n dims but params have $dim")
-    val idx = java.util.Arrays.binarySearch(cellsArr, cellAny.asInstanceOf[Long])
-    val base = (if (idx >= 0) idx else cellsArr.length) * dim
+    val base = CellBlocks.base(cellsArr, cellAny.asInstanceOf[Long], dim)
     val out = new Array[Byte](n)
     var i = 0
     while (i < n) {
@@ -357,7 +245,7 @@ case class QuantizePerCellDim(child: Expression, cell: Expression,
       val z = ctx.addReferenceObj("zeroPoints", zpArr, "float[]")
       val out = ctx.freshName("out"); val i = ctx.freshName("idx")
       val n = ctx.freshName("n"); val q = ctx.freshName("q")
-      val ix = ctx.freshName("cix"); val base = ctx.freshName("base")
+      val base = ctx.freshName("base")
       val get = if (childIsFloat) s"(double) $a.getFloat($i)" else s"$a.getDouble($i)"
       s"""
          |int $n = $a.numElements();
@@ -365,8 +253,7 @@ case class QuantizePerCellDim(child: Expression, cell: Expression,
          |  throw new IllegalArgumentException(
          |    "graft_quantize_cell_dims: vector has " + $n + " dims but params have $dim");
          |}
-         |final int $ix = java.util.Arrays.binarySearch($cl, $c);
-         |final int $base = ($ix >= 0 ? $ix : $cl.length) * $dim;
+         |final int $base = ${CellBlocks.baseCode(cl, c, dim)};
          |byte[] $out = new byte[$n];
          |for (int $i = 0; $i < $n; $i++) {
          |  if ($a.isNullAt($i)) {
@@ -386,18 +273,17 @@ case class QuantizePerCellDim(child: Expression, cell: Expression,
 }
 
 /** Per-(cell, dimension) affine dequantization — the inverse of
-  * [[QuantizePerCellDim]], same block layout and fallback rule. */
+  * [[QuantizePerCellDim]] over the same layout:
+  * `out[i] = scales[b + i] * (bytes[i] - zeroPoints[b + i])`. */
 case class DequantizePerCellDim(child: Expression, cell: Expression,
     cells: IndexedSeq[Long], scales: IndexedSeq[Float],
     zeroPoints: IndexedSeq[Float])
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  require(scales.nonEmpty && scales.length == zeroPoints.length,
-    s"per-cell dequantize: ${scales.length} scales vs ${zeroPoints.length} zeroPoints")
-  require(scales.length % (cells.length + 1) == 0,
-    s"per-cell dequantize: ${scales.length} params not divisible into " +
-      s"${cells.length + 1} blocks (cells + global fallback)")
+  private val dim = CellBlocks.dim("per-cell dequantize", cells, scales, zeroPoints)
+  require(scales.forall(java.lang.Float.isFinite) &&
+      zeroPoints.forall(java.lang.Float.isFinite),
+    "per-cell dequantize: every scale and zeroPoint must be finite")
 
-  private val dim = scales.length / (cells.length + 1)
   @transient private lazy val cellsArr: Array[Long] = cells.toArray
   @transient private lazy val scalesArr: Array[Float] = scales.toArray
   @transient private lazy val zpArr: Array[Float] = zeroPoints.toArray
@@ -419,8 +305,7 @@ case class DequantizePerCellDim(child: Expression, cell: Expression,
     val bytes = input.asInstanceOf[Array[Byte]]
     if (bytes.length != dim) throw new IllegalArgumentException(
       s"graft_dequantize_cell_dims: payload has ${bytes.length} dims but params have $dim")
-    val idx = java.util.Arrays.binarySearch(cellsArr, cellAny.asInstanceOf[Long])
-    val base = (if (idx >= 0) idx else cellsArr.length) * dim
+    val base = CellBlocks.base(cellsArr, cellAny.asInstanceOf[Long], dim)
     val out = new Array[Float](bytes.length)
     var i = 0
     while (i < bytes.length) {
@@ -436,15 +321,14 @@ case class DequantizePerCellDim(child: Expression, cell: Expression,
       val s = ctx.addReferenceObj("scales", scalesArr, "float[]")
       val z = ctx.addReferenceObj("zeroPoints", zpArr, "float[]")
       val out = ctx.freshName("out"); val i = ctx.freshName("idx")
-      val ix = ctx.freshName("cix"); val base = ctx.freshName("base")
+      val base = ctx.freshName("base")
       s"""
          |if ($b.length != $dim) {
          |  throw new IllegalArgumentException(
          |    "graft_dequantize_cell_dims: payload has " + $b.length +
          |    " dims but params have $dim");
          |}
-         |final int $ix = java.util.Arrays.binarySearch($cl, $c);
-         |final int $base = ($ix >= 0 ? $ix : $cl.length) * $dim;
+         |final int $base = ${CellBlocks.baseCode(cl, c, dim)};
          |float[] $out = new float[$b.length];
          |for (int $i = 0; $i < $b.length; $i++) {
          |  $out[$i] = $s[$base + $i] * (($b[$i] & 0xFF) - $z[$base + $i]);

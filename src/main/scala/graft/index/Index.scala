@@ -1,5 +1,8 @@
 package graft.index
 
+import scala.collection.immutable.ArraySeq
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
@@ -145,14 +148,21 @@ object Index {
     *     (codebooks / affine params / sign thresholds). Maintenance never
     *     re-fits: a shifted value distribution is a rebuild decision;
     *   - `rebuild`, a full build under the STORED config (per-cell mode,
-    *     PQ m/k/metric/residual). */
+    *     PQ m/k/metric/residual);
+    *   - `readable`, false when the codec sidecar no longer reads
+    *     (malformed, or from before the tier's current codec): [[repair]]
+    *     then rebuilds, and [[syncIncremental]] refuses.
+    * `encode` and `readable` read the codec when first called, which both
+    * callers do inside `Swap.install`: under the tier's lock, so a build
+    * that replaced the tier meanwhile is what they see. */
   private final case class Codec(path: String,
-      encode: DataFrame => DataFrame, rebuild: () => Unit)
+      encode: DataFrame => DataFrame, rebuild: () => Unit,
+      readable: () => Boolean = () => true)
 
   /** The stored codec of `tier` (ivf | pq | sq | bq). The plain IVF copy
     * has no codes and rebuilds with [[build]]; a quantized tier with no
     * codec sidecar refuses, since there is no config to encode or
-    * rebuild under. The codec itself is read on first use. */
+    * rebuild under. Codebooks and SQ8/BQ params are read on first use. */
   private def storedCodec(store: Store, codingName: String, source: String,
       column: String, tier: String): Codec = {
     val path = tierPath(store, codingName, source, column, tier)
@@ -165,24 +175,19 @@ object Index {
     tier match {
       case "ivf" =>
         Codec(path, identity, () => build(store, codingName, source, column))
-      case "sq" =>
-        requireBuilt(sqSidecar(path), "buildSq")
-        lazy val params = loadSqParams(store, codingName, source, column)
+      case "sq" | "bq" =>
+        val q = quantOf(tier)
+        val sidecar = q.sidecar(store, codingName, source, column)
+        requireBuilt(sidecar, q.builder)
+        lazy val stored = scala.util.Try(quantParams(q, store, codingName, source, column))
         Codec(path,
-          // per-cell sets quantize rows in unseen cells under the global
-          // fallback block — the same block the dequantize side selects
-          _.withColumn(SqCol, quantizeSetCol(col(column), col(CodeCol), params)),
-          // a legacy single-affine sidecar does not parse: rebuild shared
-          () => buildSq(store, codingName, source, column,
-            scala.util.Try(params.perCell).getOrElse(false)))
-      case "bq" =>
-        requireBuilt(bqSidecar(path), "buildBq")
-        lazy val params = loadBqParams(store, codingName, source, column)
-        Codec(path,
-          // per-cell sets pack rows in unseen cells under the global
-          // fallback block — the same block the decode side selects
-          _.withColumn(BqCol, packSignBitsSetCol(col(column), col(CodeCol), params)),
-          () => buildBq(store, codingName, source, column, params.perCell))
+          // rows in cells the build never saw encode under the global
+          // block — the same block the decode side selects. A sidecar
+          // that does not read refuses the encode
+          _.withColumn(q.codes, q.encode(col(column), col(CodeCol), stored.get)),
+          () => buildQuant(q, store, codingName, source, column,
+            storedPerCell(q, store, sidecar)),
+          readable = () => stored.isSuccess)
       case "pq" =>
         requireBuilt(pqSidecar(path), "buildPq")
         lazy val cb = loadPqCodebooks(store, codingName, source, column)
@@ -293,9 +298,10 @@ object Index {
     * re-index. Each tier keeps its own stamp, so each is repaired on its
     * own.
     *
-    * Copies built before the provenance column / listing sidecar fall
-    * back to a full rebuild under the stored config (flagged in the
-    * returned stats); a quantized tier that was never built refuses. */
+    * Copies built before the provenance column / listing sidecar, and
+    * quantized copies whose codec sidecar no longer reads, fall back to
+    * a full rebuild under the stored config (flagged in the returned
+    * stats); a quantized tier that was never built refuses. */
   def repair(store: Store, codingName: String, source: String,
       column: String, tier: String = "ivf"): RepairStats = {
     val codec = storedCodec(store, codingName, source, column, tier)
@@ -305,7 +311,7 @@ object Index {
         .parquet(path).withColumn(CodeCol, col(CodeCol).cast("long")))
         .filter(_.schema.fieldNames.contains(SrcFileCol))
       (indexed, recordedListing(store, path)) match {
-        case (Some(indexedRaw), Some(recorded)) =>
+        case (Some(indexedRaw), Some(recorded)) if codec.readable() =>
           // entry = "name:len:mtime" (parquet part names never contain
           // ':'; strip the two trailing fields defensively anyway)
           def nameOf(e: String): String =
@@ -345,7 +351,7 @@ object Index {
           (affected.toSeq.map(c => s"$CodeCol=$c") :+ StampFile,
             Some(RepairStats(affectedNames.length.toLong, affected.length.toLong,
               fullRebuild = false)))
-        case _ => (Nil, None) // a missing or legacy copy: rebuilt below
+        case _ => (Nil, None) // a missing or legacy copy or codec: rebuilt below
       }
     }.getOrElse {
       codec.rebuild()
@@ -942,11 +948,14 @@ object Index {
       perReplicaExtraBytes = cb.m.toLong * cb.k * 8)
   }
 
-  // ——— IVF+SQ8: cell-partitioned layout + 8-bit scalar-quantized vectors ———
+  // ——— IVF+SQ8 and IVF+BQ: cell-partitioned layout + quantized codes,
+  // one codec for both ———
 
   /** Codes column in an SQ8 index (one uint8 per dimension). */
   val SqCol: String = "__SQ__"
-  private def sqSidecar(path: String) = s"$path/_sq_params.json"
+
+  /** Codes column in a BQ index (one sign bit per dimension). */
+  val BqCol: String = "__BQ__"
 
   /** The SQ8 index's affine params: one (scale, zeroPoint) pair PER
     * DIMENSION — the standard scalar-quantizer formulation. A single
@@ -957,53 +966,127 @@ object Index {
     def dim: Int = scales.length
   }
 
-  /** The full affine parameter set of an SQ8 index: the shared per-dim
-    * params, plus (opt-in, [[buildSq]] `perCell = true`) one params block
-    * PER CELL keyed by `__CODED_ID__` — the SemDeDup setting, where
-    * heterogeneous clusters have disjoint per-dimension ranges and one
-    * shared range wastes the 8-bit resolution on between-cluster spread.
-    * `global` doubles as the fallback for cells the build never saw. */
-  case class SqParamsSet(global: SqParams, cells: Map[Long, SqParams] = Map.empty) {
-    def perCell: Boolean = cells.nonEmpty
-    /** (sorted cells, flat scales, flat zps) with the global block LAST —
-      * the layout [[graft.functions.QuantizePerCellDim]] binary-searches. */
-    def flat: (IndexedSeq[Long], IndexedSeq[Float], IndexedSeq[Float]) = {
-      val sorted = cells.keys.toIndexedSeq.sorted
-      val blocks = sorted.map(cells) :+ global
-      (sorted,
-        blocks.flatMap(_.scales.toIndexedSeq),
-        blocks.flatMap(_.zeroPoints.toIndexedSeq))
+  /** A quantized tier's codec in the one layout its kernels read
+    * ([[graft.functions.CellBlocks]]): the sorted ids of the cells the
+    * build fitted and, per field, one flat array of `dim`-long blocks —
+    * one per cell in that order, then the GLOBAL block, which a row in a
+    * cell the build never saw reads. A global codec is this layout with
+    * no cells. Built once per read of the sidecar ([[quantParams]] is
+    * memoized), so a search hands the kernels these arrays as they are.
+    * Values are held as doubles; a float field round-trips exactly. */
+  private final case class QuantParams(cells: IndexedSeq[Long],
+      values: Map[String, IndexedSeq[Double]]) {
+    def dim: Int = values.head._2.length / (cells.length + 1)
+    def doubles(field: String): IndexedSeq[Double] = values(field)
+    def floats(field: String): IndexedSeq[Float] = asFloats(field)
+    private lazy val asFloats: Map[String, IndexedSeq[Float]] = values.map {
+      case (f, v) => f -> ArraySeq.unsafeWrapArray(v.iterator.map(_.toFloat).toArray)
+    }
+    /** The global block of `field`. */
+    def global(field: String): Array[Double] = values(field).takeRight(dim).toArray
+  }
+
+  /** Per-key blocks of a fit — `None` keys the global block, `Some(cell)`
+    * a cell's — each a sequence of per-dimension arrays in field order. */
+  private type Blocks = Map[Option[Long], Seq[Array[Double]]]
+
+  /** A quantized tier (SQ8 or BQ): its code column, its codec sidecar and
+    * builder, its per-dimension `fields` (those in `doubles` are stored
+    * at double precision, the rest as floats), its kernels over (input,
+    * cell, codec) and its `fit` over the non-null vectors `VecCol` of
+    * the source, keyed by `keys` (the cell, or none for a global
+    * codec). Everything else — build, sidecar, load, search, batch join,
+    * sync and repair — is one body for both. */
+  private final case class Quant(tier: String, name: String, codes: String,
+      sidecarName: String, builder: String, fields: Seq[String],
+      doubles: Set[String],
+      encode: (Column, Column, QuantParams) => Column,
+      decode: (Column, Column, QuantParams) => Column,
+      fit: (DataFrame, Seq[Column]) => Blocks) {
+    def sidecar(store: Store, codingName: String, source: String, column: String): String =
+      s"${tierPath(store, codingName, source, column, tier)}/$sidecarName"
+
+    /** The sidecar: the global block's fields at the top level, plus a
+      * `cells` object keyed by cell id when there are cells. */
+    def toJson(p: QuantParams): Array[Byte] = {
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def put(node: com.fasterxml.jackson.databind.node.ObjectNode, block: Int): Unit =
+        fields.foreach { f =>
+          val arr = node.putArray(f)
+          val v = p.values(f).slice(block * p.dim, (block + 1) * p.dim)
+          if (doubles(f)) v.foreach(x => arr.add(x)) else v.foreach(x => arr.add(x.toFloat))
+        }
+      val root = mapper.createObjectNode()
+      put(root, p.cells.length)
+      if (p.cells.nonEmpty) {
+        val cn = root.putObject("cells")
+        p.cells.zipWithIndex.foreach { case (c, i) => put(cn.putObject(c.toString), i) }
+      }
+      mapper.writeValueAsBytes(root)
+    }
+
+    /** Reads a sidecar back, refusing a malformed one (truncated, a
+      * field missing — as in a sidecar from before the tier's current
+      * codec — or blocks of unequal length) with an IllegalStateException
+      * that names the tier, the field and the builder. */
+    def parse(path: String, bytes: Array[Byte]): QuantParams = {
+      def refuse(what: String): Nothing = throw new IllegalStateException(
+        s"malformed $name sidecar $path: $what — rebuild with $builder")
+      val root = try new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
+        catch { case e: java.io.IOException => refuse(s"unreadable JSON (${e.getMessage})") }
+      def block(n: com.fasterxml.jackson.databind.JsonNode, where: String): Seq[Array[Double]] =
+        fields.map { f =>
+          val a = Option(n.get(f)).filter(a => a.isArray && a.elements().asScala.forall(_.isNumber))
+            .getOrElse(refuse(s"no numeric '$f' array$where"))
+          Array.tabulate(a.size())(i => a.get(i).asDouble())
+        }
+      val cells = Option(root.get("cells")).toSeq.flatMap(_.properties().asScala.map { e =>
+        val c = e.getKey.toLongOption.getOrElse(refuse(s"cell id '${e.getKey}' is not a number"))
+        Option(c) -> block(e.getValue, s" in cell $c")
+      })
+      val blocks: Blocks = (cells :+ (None -> block(root, ""))).toMap
+      val dims = blocks.values.flatten.map(_.length).toSet
+      if (dims.size != 1 || dims.contains(0))
+        refuse(s"blocks of unequal or zero length ${dims.mkString(", ")}")
+      layout(blocks)
+    }
+
+    def layout(blocks: Blocks): QuantParams = {
+      val cells = blocks.keys.flatten.toIndexedSeq.sorted
+      val order = cells.map(Option(_)) :+ None
+      QuantParams(cells, fields.indices.map { f =>
+        fields(f) -> ArraySeq.unsafeWrapArray(order.flatMap(blocks(_)(f)).toArray)
+      }.toMap)
     }
   }
 
-  private def quantizeCol(vec: Column, p: SqParams): Column =
-    org.apache.spark.sql.GraftShims.column(graft.functions.QuantizePerDim(
-      org.apache.spark.sql.GraftShims.expression(vec), p.scales.toIndexedSeq, p.zeroPoints.toIndexedSeq))
+  private val VecCol = "__v__"
 
-  private def dequantizeCol(codes: Column, p: SqParams): Column =
-    org.apache.spark.sql.GraftShims.column(graft.functions.DequantizePerDim(
-      org.apache.spark.sql.GraftShims.expression(codes), p.scales.toIndexedSeq, p.zeroPoints.toIndexedSeq))
+  private val Sq = Quant("sq", "SQ8", SqCol, "_sq_params.json", "buildSq",
+    Seq("scales", "zeroPoints"), Set.empty,
+    (v, c, p) => GraftShims.column(graft.functions.QuantizePerCellDim(
+      GraftShims.expression(v), GraftShims.expression(c), p.cells,
+      p.floats("scales"), p.floats("zeroPoints"))),
+    (b, c, p) => GraftShims.column(graft.functions.DequantizePerCellDim(
+      GraftShims.expression(b), GraftShims.expression(c), p.cells,
+      p.floats("scales"), p.floats("zeroPoints"))),
+    fitSq)
 
-  /** Quantize under a param set: per-cell expression (params selected per
-    * row by its cell id) when the set carries cells, plain per-dim
-    * otherwise. */
-  private def quantizeSetCol(vec: Column, cell: Column, set: SqParamsSet): Column =
-    if (!set.perCell) quantizeCol(vec, set.global)
-    else {
-      val (cs, ss, zs) = set.flat
-      org.apache.spark.sql.GraftShims.column(graft.functions.QuantizePerCellDim(
-        org.apache.spark.sql.GraftShims.expression(vec),
-        org.apache.spark.sql.GraftShims.expression(cell), cs, ss, zs))
-    }
+  private val Bq = Quant("bq", "BQ", BqCol, "_bq_thresholds.json", "buildBq",
+    Seq("thresholds", "lo", "hi"), Set("thresholds"),
+    (v, c, p) => GraftShims.column(graft.functions.PackSignBitsPerCell(
+      GraftShims.expression(v), GraftShims.expression(c), p.cells,
+      p.doubles("thresholds"))),
+    (b, c, p) => GraftShims.column(graft.functions.DequantizeSignBitsPerCell(
+      GraftShims.expression(b), GraftShims.expression(c), p.cells,
+      p.floats("lo"), p.floats("hi"))),
+    fitBq)
 
-  private def dequantizeSetCol(codes: Column, cell: Column, set: SqParamsSet): Column =
-    if (!set.perCell) dequantizeCol(codes, set.global)
-    else {
-      val (cs, ss, zs) = set.flat
-      org.apache.spark.sql.GraftShims.column(graft.functions.DequantizePerCellDim(
-        org.apache.spark.sql.GraftShims.expression(codes),
-        org.apache.spark.sql.GraftShims.expression(cell), cs, ss, zs))
-    }
+  private def quantOf(tier: String): Quant = if (tier == "sq") Sq else Bq
+
+  /** The key of a row grouped by `keys` (none, or the cell). */
+  private def keyOf(r: org.apache.spark.sql.Row, keys: Seq[Column]): Option[Long] =
+    Option.when(keys.nonEmpty)(r.getLong(0))
 
   /** Fit per-dimension affine params from per-dimension [lo, hi]:
     * `q = x/scale + zeroPoint` maps [lo_i, hi_i] onto [0, 255]. Constant
@@ -1027,136 +1110,191 @@ object Index {
     SqParams(scales, zps)
   }
 
-  /** Build the IVF+SQ8 index: the cell-partitioned copy carries an 8-bit
-    * scalar-quantized copy of the vector (d bytes/row vs 4d float bytes —
-    * the memory tier BETWEEN raw vectors and PQ's m bytes, with near-exact
-    * ranking instead of PQ's subspace approximation). Affine params are
-    * PER-DIMENSION ([[fitSqParams]]): one map-side-combined min/max agg
-    * pass (only partitions × dim doubles shuffle), so each dimension's
-    * dequantized values have ≤ range_i/510 absolute error — an outlier
-    * in one dimension cannot collapse the others' resolution. Encode is
-    * the codegen'd [[graft.functions.QuantizePerDim]] — a single narrow
-    * corpus pass. */
-  def buildSq(store: Store, codingName: String, source: String,
-      column: String, perCell: Boolean = false): SqParams = {
+  /** The SQ8 fit: ONE map-side-combined per-dimension min/max agg per key
+    * (only partitions × dim doubles shuffle; per cell, numCells × (lo, hi)
+    * rows collect — bounded by the cell cap). The global block comes from
+    * the per-key bounds driver-side, no second scan. */
+  private def fitSq(vecs: DataFrame, keys: Seq[Column]): Blocks = {
+    val vecMin = udaf(graft.coder.VecMinAgg)
+    val vecMax = udaf(graft.coder.VecMaxAgg)
+    val bounds = vecs.groupBy(keys: _*)
+      .agg(vecMin(col(VecCol)), vecMax(col(VecCol)))
+      .collect()
+      .map(r => keyOf(r, keys) ->
+        (r.getSeq[Double](keys.length).toArray, r.getSeq[Double](keys.length + 1).toArray))
+      .filter(_._2._1.nonEmpty)
+    def fit(b: (Array[Double], Array[Double])): Seq[Array[Double]] = {
+      val p = fitSqParams(b._1, b._2)
+      Seq(p.scales.map(_.toDouble), p.zeroPoints.map(_.toDouble))
+    }
+    if (bounds.isEmpty) Map.empty
+    else {
+      val global = bounds.map(_._2).reduce { (a, b) =>
+        (Array.tabulate(a._1.length)(i => if (b._1(i) < a._1(i)) b._1(i) else a._1(i)),
+          Array.tabulate(a._2.length)(i => if (b._2(i) > a._2(i)) b._2(i) else a._2(i)))
+      }
+      val cells: Blocks =
+        if (keys.isEmpty) Map.empty else bounds.map { case (k, b) => k -> fit(b) }.toMap
+      cells + (None -> fit(global))
+    }
+  }
+
+  /** The BQ fit: each dimension binarized around its MEAN, with each
+    * side's CONDITIONAL MEAN as its reconstruction level — the optimal
+    * 1-bit scalar dequantizer. The global block always fits over the
+    * whole corpus; per cell, the same two aggs run keyed by the cell. */
+  private def fitBq(vecs: DataFrame, keys: Seq[Column]): Blocks =
+    if (keys.isEmpty) bqLevels(vecs, Nil) else bqLevels(vecs, Nil) ++ bqLevels(vecs, keys)
+
+  /** (thresholds, lo, hi) per key: one sum/count agg for the means, then
+    * one agg of four element-masked VecSums under each key's thresholds
+    * (a literal for the one global key; per cell a broadcast of the tiny
+    * (cell, thresholds) table). An empty side (a constant dimension)
+    * reconstructs to the threshold. */
+  private def bqLevels(vecs: DataFrame, keys: Seq[Column]): Blocks = {
+    val vecSum = udaf(graft.coder.VecSumAgg)
+    val o = keys.length
+    val thr: Map[Option[Long], Array[Double]] = vecs.groupBy(keys: _*)
+      .agg(vecSum(col(VecCol)), count(lit(1)))
+      .collect()
+      .filter(r => !r.isNullAt(o) && r.getSeq[Double](o).nonEmpty)
+      .map { r =>
+        val n = r.getLong(o + 1).toDouble
+        keyOf(r, keys) -> r.getSeq[Double](o).map(_ / n).toArray
+      }.toMap
+    if (thr.isEmpty) return Map.empty
+    val ThrCol = "__thr__"
+    val withThr =
+      if (keys.isEmpty) vecs.withColumn(ThrCol, typedLit(thr(None).toSeq))
+      else {
+        import vecs.sparkSession.implicits._
+        vecs.join(broadcast(thr.toSeq.map { case (c, t) => (c.get, t.toSeq) }
+          .toDF(CodeCol, ThrCol)), CodeCol)
+      }
+    def masked(f: (Column, Column) => Column): Column =
+      vecSum(zip_with(col(VecCol), col(ThrCol), f))
+    withThr.groupBy(keys: _*)
+      .agg(masked((x, t) => when(x > t, x).otherwise(lit(0.0d))),
+        masked((x, t) => when(x > t, lit(1.0d)).otherwise(lit(0.0d))),
+        masked((x, t) => when(x > t, lit(0.0d)).otherwise(x)),
+        masked((x, t) => when(x > t, lit(0.0d)).otherwise(lit(1.0d))))
+      .collect()
+      .map { r =>
+        val key = keyOf(r, keys)
+        val t = thr(key)
+        val Seq(hs, hc, ls, lc) = (o until o + 4).map(r.getSeq[Double])
+        val hi = Array.tabulate(t.length)(i => (if (hc(i) > 0) hs(i) / hc(i) else t(i)).toFloat)
+        val lo = Array.tabulate(t.length)(i => (if (lc(i) > 0) ls(i) / lc(i) else t(i)).toFloat)
+        key -> Seq(t, lo.map(_.toDouble), hi.map(_.toDouble))
+      }.toMap
+  }
+
+  /** The one build of a quantized tier: fit its codec over the source's
+    * non-null vectors — keyed by cell when `perCell` (capped at
+    * [[ResidualCellCap]] cells) — then encode every row with the codec
+    * in one narrow corpus pass, beside the sidecar and the source stamp. */
+  private def buildQuant(q: Quant, store: Store, codingName: String,
+      source: String, column: String, perCell: Boolean): QuantParams = {
     val coding = store.loadCoding(codingName)
     val listing = store.sourceListing(source)
     if (perCell)
       require(coding.numCells <= ResidualCellCap,
-        s"per-cell SQ8 supports codings up to $ResidualCellCap cells (the " +
-          s"param set is numCells×dim×2 floats); coding '$codingName' has " +
-          s"${coding.numCells}. Build with perCell = false.")
+        s"per-cell ${q.name} supports codings up to $ResidualCellCap cells (the " +
+          s"param set is numCells×dim×${q.fields.length} values); coding " +
+          s"'$codingName' has ${coding.numCells}. Build with perCell = false.")
     val df = store.loadTable(source)
-    val vecMin = udaf(graft.coder.VecMinAgg)
-    val vecMax = udaf(graft.coder.VecMaxAgg)
-    // ONE agg pass either way: per-cell just keys the same VecMin/VecMax
-    // agg by the cell id (numCells × (lo, hi) rows collect — bounded by
-    // the cell cap); the global fallback derives from the per-cell
-    // bounds driver-side, no second scan
-    val set: SqParamsSet =
-      if (!perCell) {
-        val stats = df
-          .select(col(column).cast("array<double>").as("__v__"))
-          .filter(col("__v__").isNotNull)
-          .agg(vecMin(col("__v__")).as("lo"), vecMax(col("__v__")).as("hi"))
-          .collect()(0)
-        val lo = stats.getSeq[Double](0).toArray
-        val hi = stats.getSeq[Double](1).toArray
-        require(lo.nonEmpty,
-          s"buildSq: $source.$column has no non-null vectors to quantize")
-        SqParamsSet(fitSqParams(lo, hi))
-      } else {
-        val rows = df
-          .withColumn(CodeCol, assignExpr(col(column), coding))
-          .select(col(CodeCol), col(column).cast("array<double>").as("__v__"))
-          .filter(col("__v__").isNotNull)
-          .groupBy(col(CodeCol))
-          .agg(vecMin(col("__v__")).as("lo"), vecMax(col("__v__")).as("hi"))
-          .collect()
-        require(rows.nonEmpty,
-          s"buildSq: $source.$column has no non-null vectors to quantize")
-        val bounds = rows.map { r =>
-          r.getLong(0) -> (r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray)
-        }
-        val dim = bounds.head._2._1.length
-        val gLo = Array.fill(dim)(Double.MaxValue)
-        val gHi = Array.fill(dim)(Double.MinValue)
-        bounds.foreach { case (_, (lo, hi)) =>
-          var i = 0
-          while (i < dim) {
-            if (lo(i) < gLo(i)) gLo(i) = lo(i)
-            if (hi(i) > gHi(i)) gHi(i) = hi(i)
-            i += 1
-          }
-        }
-        SqParamsSet(fitSqParams(gLo, gHi),
-          bounds.map { case (c, (lo, hi)) => c -> fitSqParams(lo, hi) }.toMap)
-      }
-    Swap.replace(store.fs, new Path(store.sqIndexPath(source, column, codingName))) { image =>
+    val vecs = (if (perCell) df.withColumn(CodeCol, assignExpr(col(column), coding)) else df)
+      .withColumn(VecCol, col(column).cast("array<double>"))
+      .filter(col(VecCol).isNotNull)
+    val blocks = q.fit(vecs, if (perCell) Seq(col(CodeCol)) else Nil)
+    require(blocks.nonEmpty,
+      s"${q.builder}: $source.$column has no non-null vectors to encode")
+    val params = q.layout(blocks)
+    Swap.replace(store.fs, new Path(tierPath(store, codingName, source, column, q.tier))) { image =>
       writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
         .withColumn(CodeCol, assignExpr(col(column), coding))
-        .withColumn(SqCol, quantizeSetCol(col(column), col(CodeCol), set)),
+        .withColumn(q.codes, q.encode(col(column), col(CodeCol), params)),
         coding.numCells, image)
-      store.writeSidecar(sqSidecar(image), sqParamsJson(set).getBytes("UTF-8"))
+      store.writeSidecar(s"$image/${q.sidecarName}", q.toJson(params))
       recordSourceStamp(store, image, listing)
     }
-    set.global
+    params
   }
 
-  private def sqParamsJson(set: SqParamsSet): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val payload = mapper.createObjectNode()
-    def putArr(node: com.fasterxml.jackson.databind.node.ObjectNode,
-        k: String, a: Array[Float]): Unit = {
-      val arr = node.putArray(k); a.foreach(arr.add); ()
+  /** A quantized tier's codec, read once per sidecar write
+    * ([[codecOf]]); refuses a missing index, and a malformed sidecar
+    * ([[Quant.parse]]). */
+  private def quantParams(q: Quant, store: Store, codingName: String,
+      source: String, column: String): QuantParams = {
+    val sidecar = q.sidecar(store, codingName, source, column)
+    codecOf(store, sidecar) {
+      require(store.sidecarExists(sidecar),
+        s"no ${q.name} index for $source.$column under coding '$codingName' — " +
+          s"build it first (${q.builder})")
+      q.parse(sidecar, store.readSidecar(sidecar))
     }
-    putArr(payload, "scales", set.global.scales)
-    putArr(payload, "zeroPoints", set.global.zeroPoints)
-    if (set.perCell) {
-      val cellsNode = payload.putObject("cells")
-      set.cells.toSeq.sortBy(_._1).foreach { case (c, p) =>
-        val n = cellsNode.putObject(c.toString)
-        putArr(n, "scales", p.scales)
-        putArr(n, "zeroPoints", p.zeroPoints)
-      }
-    }
-    mapper.writeValueAsString(payload)
+  }
+
+  /** Whether a quantized tier's sidecar exists and reads: one that does
+    * not (malformed, or from before the tier's current codec) counts as
+    * ABSENT, so exists-then-build flows rebuild it. */
+  private def quantExists(q: Quant, store: Store, codingName: String,
+      source: String, column: String): Boolean =
+    store.sidecarExists(q.sidecar(store, codingName, source, column)) &&
+      scala.util.Try(quantParams(q, store, codingName, source, column)).isSuccess
+
+  /** Whether a stored sidecar holds per-cell blocks — read even from one
+    * whose codec no longer parses, so a rebuild keeps the mode. A sidecar
+    * that is not a JSON object leaves the mode unknown: refused, naming
+    * both builds, rather than rebuilt as a guess. */
+  private def storedPerCell(q: Quant, store: Store, sidecar: String): Boolean =
+    scala.util.Try(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(store.readSidecar(sidecar))).toOption.filter(n => n != null && n.isObject)
+      .map(_.has("cells"))
+      .getOrElse(throw new IllegalStateException(
+        s"unreadable ${q.name} sidecar $sidecar: its per-cell mode is unknown — " +
+          s"rebuild with ${q.builder}(perCell = true) or ${q.builder}(perCell = false)"))
+
+  /** A quantized tier of the [[twoPass]] plan: the exact metric over the
+    * kernel's decode of the codes (the cell's block selected by
+    * `__CODED_ID__`), against the target literal or each query's
+    * full-precision vector. */
+  private def quantTier(q: Quant)(store: Store, codingName: String,
+      source: String, column: String, coding: Coding,
+      metric: Option[String]): Tier = {
+    val params = quantParams(q, store, codingName, source, column)
+    val m = graft.core.Metrics.canonical(metric.getOrElse(coding.config.metric))
+    val decoded = q.decode(col(q.codes), col(CodeCol), params)
+    Tier(q.tier, Some(q.codes), m,
+      (t, _) => {
+        require(t.length == params.dim,
+          s"${q.name} search: target has ${t.length} dims, index has ${params.dim}")
+        vector_distance(decoded, t.lit, m)
+      },
+      (qs, qid, qvec) => (qs.select(col(qid), col(CellCol), col(qvec)),
+        vector_distance(decoded, col(qvec), m)))
+  }
+
+  /** Build the IVF+SQ8 index: the cell-partitioned copy carries an 8-bit
+    * scalar-quantized copy of the vector (d bytes/row vs 4d float bytes —
+    * the memory tier BETWEEN raw vectors and PQ's m bytes, with near-exact
+    * ranking instead of PQ's subspace approximation). Affine params are
+    * PER-DIMENSION ([[fitSqParams]]), so each dimension's dequantized
+    * values have ≤ range_i/510 absolute error — an outlier in one
+    * dimension cannot collapse the others' resolution. `perCell = true`
+    * fits one params block per IVF cell plus the global fallback — the
+    * SemDeDup setting, where heterogeneous clusters have disjoint
+    * per-dimension ranges. Encode is the codegen'd
+    * [[graft.functions.QuantizePerCellDim]]. Returns the global params. */
+  def buildSq(store: Store, codingName: String, source: String,
+      column: String, perCell: Boolean = false): SqParams = {
+    val p = buildQuant(Sq, store, codingName, source, column, perCell)
+    SqParams(p.global("scales").map(_.toFloat), p.global("zeroPoints").map(_.toFloat))
   }
 
   def sqIndexExists(store: Store, codingName: String, source: String,
       column: String): Boolean =
-    store.sidecarExists(sqSidecar(store.sqIndexPath(source, column, codingName))) &&
-      // a sidecar in the legacy single-affine format (or otherwise
-      // unparseable) counts as ABSENT, so exists-then-build flows rebuild
-      // it instead of failing at search time
-      scala.util.Try(loadSqParams(store, codingName, source, column)).isSuccess
-
-  private def loadSqParams(store: Store, codingName: String, source: String,
-      column: String): SqParamsSet = {
-    val sidecar = sqSidecar(store.sqIndexPath(source, column, codingName))
-    codecOf(store, sidecar)(parseSqParams(store.readSidecar(sidecar)))
-  }
-
-  private def parseSqParams(bytes: Array[Byte]): SqParamsSet = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = mapper.readTree(bytes)
-    def arr(node: com.fasterxml.jackson.databind.JsonNode, k: String): Array[Float] = {
-      val a = Option(node.get(k)).filter(_.isArray).getOrElse(
-        throw new IllegalStateException(
-          "malformed or pre-per-dimension SQ sidecar (rebuild with buildSq): " +
-            new String(bytes, "UTF-8").take(200)))
-      Array.tabulate(a.size())(i => a.get(i).floatValue())
-    }
-    val global = SqParams(arr(n, "scales"), arr(n, "zeroPoints"))
-    val cells: Map[Long, SqParams] = Option(n.get("cells")).map { cn =>
-      val b = Map.newBuilder[Long, SqParams]
-      cn.fields().forEachRemaining { e =>
-        b += e.getKey.toLong -> SqParams(arr(e.getValue, "scales"), arr(e.getValue, "zeroPoints"))
-      }
-      b.result()
-    }.getOrElse(Map.empty)
-    SqParamsSet(global, cells)
-  }
+    quantExists(Sq, store, codingName, source, column)
 
   /** Probed IVF+SQ8 search — the [[twoPass]] plan with the coarse score
     * an exact distance over the DEQUANTIZED 8-bit copy: the coarse pass
@@ -1182,277 +1320,46 @@ object Index {
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
       tieBreak: Seq[String] = Nil): DataFrame =
-    twoPass(sqTier, Seq(idCol), store, codingName, source, column, target,
+    twoPass(quantTier(Sq), Seq(idCol), store, codingName, source, column, target,
       k, Some(probes), candidates, idCol, metric, filter, select, tieBreak)
-
-  /** The SQ8 tier: distance over the dequantized codes (per-cell param
-    * blocks selected by `__CODED_ID__`), against the target literal or
-    * each query's full-precision vector. */
-  private def sqTier(store: Store, codingName: String, source: String,
-      column: String, coding: Coding, metric: Option[String]): Tier = {
-    val params = loadSqParams(store, codingName, source, column)
-    val m = graft.core.Metrics.canonical(metric.getOrElse(coding.config.metric))
-    val decoded = dequantizeSetCol(col(SqCol), col(CodeCol), params)
-    Tier("sq", Some(SqCol), m,
-      (t, _) => vector_distance(decoded, t.lit, m),
-      (q, qid, qvec) => (q.select(col(qid), col(CellCol), col(qvec)),
-        vector_distance(decoded, col(qvec), m)))
-  }
-
-  // ——— IVF + BQ (1-bit binary quantization) tier ———
-
-  val BqCol: String = "__BQ__"
-  private def bqSidecar(path: String) = s"$path/_bq_thresholds.json"
-
-  /** BQ sidecar params: per-dimension sign thresholds plus the two
-    * conditional-mean reconstruction levels ([[graft.functions
-    * .DequantizeSignBits]]). Legacy sidecars (thresholds only) load with
-    * empty levels and fall back to symmetric Hamming coarse ranking. */
-  case class BqParams(thresholds: Array[Double], lo: Array[Float],
-      hi: Array[Float]) {
-    def asymmetric: Boolean = lo.nonEmpty
-  }
-
-  /** Global params plus (opt-in, [[buildBq]] `perCell = true`) one block
-    * per IVF cell. Per-cell thresholds are what make the 1-bit tier
-    * usable on CLUSTERED corpora: globally-centered sign bits degenerate
-    * into a cluster id (every member of a cell shares its offset's sign
-    * pattern), while per-cell centering makes the bits encode the
-    * within-cell residual — exactly where a query's true neighbors live. */
-  case class BqParamsSet(global: BqParams, cells: Map[Long, BqParams] = Map.empty) {
-    def perCell: Boolean = cells.nonEmpty
-    /** Flat (cells + trailing global fallback) blocks, sorted by cell. */
-    def flat: (IndexedSeq[Long], IndexedSeq[Double], IndexedSeq[Float], IndexedSeq[Float]) = {
-      val cs = cells.keys.toIndexedSeq.sorted
-      val blocks = cs.map(cells) :+ global
-      (cs, blocks.flatMap(_.thresholds.toIndexedSeq),
-        blocks.flatMap(_.lo.toIndexedSeq), blocks.flatMap(_.hi.toIndexedSeq))
-    }
-  }
-
-  private def packSignBitsSetCol(vec: Column, cell: Column, set: BqParamsSet): Column =
-    if (!set.perCell) packSignBitsCol(vec, set.global.thresholds)
-    else {
-      val (cs, thr, _, _) = set.flat
-      org.apache.spark.sql.GraftShims.column(graft.functions.PackSignBitsPerCell(
-        org.apache.spark.sql.GraftShims.expression(vec),
-        org.apache.spark.sql.GraftShims.expression(cell), cs, thr))
-    }
-
-  private def dequantizeSignBitsSetCol(codes: Column, cell: Column,
-      set: BqParamsSet): Column =
-    if (!set.perCell) dequantizeSignBitsCol(codes, set.global)
-    else {
-      val (cs, _, lo, hi) = set.flat
-      org.apache.spark.sql.GraftShims.column(graft.functions.DequantizeSignBitsPerCell(
-        org.apache.spark.sql.GraftShims.expression(codes),
-        org.apache.spark.sql.GraftShims.expression(cell), cs, lo, hi))
-    }
 
   /** Build the IVF+BQ index: the cell-partitioned copy carries a 1-bit
     * sign code per dimension (`ceil(d/8)` bytes/row — 32× smaller than
     * float32, 8× smaller than SQ8; the coarsest memory tier). Each
     * dimension is binarized around its MEAN, and the sidecar also
     * records each side's CONDITIONAL MEAN — the optimal 1-bit scalar
-    * dequantizer levels — so the coarse pass can rank ASYMMETRICALLY:
+    * dequantizer levels — so the coarse pass ranks ASYMMETRICALLY:
     * `vector_distance(reconstruction, query)` keeps the query at full
-    * float precision and per-dimension magnitudes in the ranking
-    * (measured at 1M × 256-d: recall@10@4k 0.59 symmetric-Hamming →
-    * asymmetric well above; the scan still reads only the packed bits).
-    * Two map-side-combined agg passes (mean, then per-side sums keyed by
-    * the sign mask); encode is the codegen'd
-    * [[graft.functions.PackSignBits]] — one narrow corpus pass.
+    * float precision and per-dimension magnitudes in the ranking while
+    * the scan still reads only the packed bits. `perCell = true` centers
+    * each cell's bits at its own means (residual codes — the config for
+    * clustered corpora, where global sign bits degenerate into a cluster
+    * id). Encode is the codegen'd [[graft.functions.PackSignBitsPerCell]].
     *
     * The tier's contract matches SQ8's: the 1-bit score is COARSE
     * ranking only; [[searchBq]] always reranks the `candidates`
     * survivors with the exact metric over the float vectors, so full
-    * probes + candidates is exact. Returns the per-dim thresholds. */
+    * probes + candidates is exact. Returns the global per-dim
+    * thresholds. */
   def buildBq(store: Store, codingName: String, source: String,
-      column: String, perCell: Boolean = false): Array[Double] = {
-    val coding = store.loadCoding(codingName)
-    val listing = store.sourceListing(source)
-    if (perCell)
-      require(coding.numCells <= ResidualCellCap,
-        s"per-cell BQ supports codings up to $ResidualCellCap cells (the " +
-          s"param set is numCells×dim×3 values); coding '$codingName' has " +
-          s"${coding.numCells}. Build with perCell = false.")
-    val df = store.loadTable(source)
-    val vecSum = udaf(graft.coder.VecSumAgg)
-    val vecs = df
-      .select(col(column).cast("array<double>").as("__v__"))
-      .filter(col("__v__").isNotNull)
-
-    /** (thresholds, lo, hi) from a vector frame under GIVEN thresholds:
-      * one agg of four element-masked VecSum columns. */
-    def condLevels(frame: DataFrame, thr: Array[Double]): (Array[Float], Array[Float]) = {
-      val thrLit = typedLit(thr.toSeq)
-      val cond = frame.select(
-          zip_with(col("__v__"), thrLit, (x, t) => when(x > t, x).otherwise(lit(0.0d))).as("hs"),
-          zip_with(col("__v__"), thrLit, (x, t) => when(x > t, lit(1.0d)).otherwise(lit(0.0d))).as("hc"),
-          zip_with(col("__v__"), thrLit, (x, t) => when(x > t, lit(0.0d)).otherwise(x)).as("ls"),
-          zip_with(col("__v__"), thrLit, (x, t) => when(x > t, lit(0.0d)).otherwise(lit(1.0d))).as("lc"))
-        .agg(vecSum(col("hs")).as("hs"), vecSum(col("hc")).as("hc"),
-          vecSum(col("ls")).as("ls"), vecSum(col("lc")).as("lc"))
-        .collect()(0)
-      val (hs, hc, ls, lc) = (cond.getSeq[Double](0), cond.getSeq[Double](1),
-        cond.getSeq[Double](2), cond.getSeq[Double](3))
-      // an empty side (constant dimension) reconstructs to the threshold
-      val hi = Array.tabulate(thr.length)(i =>
-        (if (hc(i) > 0) hs(i) / hc(i) else thr(i)).toFloat)
-      val lo = Array.tabulate(thr.length)(i =>
-        (if (lc(i) > 0) ls(i) / lc(i) else thr(i)).toFloat)
-      (lo, hi)
-    }
-
-    val stats = vecs
-      .agg(vecSum(col("__v__")).as("s"), count(lit(1)).as("n"))
-      .collect()(0)
-    require(!stats.isNullAt(0) && stats.getSeq[Double](0).nonEmpty,
-      s"buildBq: $source.$column has no non-null vectors to binarize")
-    val n = stats.getLong(1).toDouble
-    val thresholds = stats.getSeq[Double](0).map(_ / n).toArray
-    val (gLo, gHi) = condLevels(vecs, thresholds)
-    val global = BqParams(thresholds, gLo, gHi)
-
-    val set: BqParamsSet =
-      if (!perCell) BqParamsSet(global)
-      else {
-        val keyed = df
-          .withColumn(CodeCol, assignExpr(col(column), coding))
-          .select(col(CodeCol), col(column).cast("array<double>").as("__v__"))
-          .filter(col("__v__").isNotNull)
-        // per-cell means: ONE keyed sum/count agg (numCells×dim doubles
-        // collect — bounded by the cell cap)
-        val sums = keyed.groupBy(col(CodeCol))
-          .agg(vecSum(col("__v__")).as("s"), count(lit(1)).as("n"))
-          .collect()
-        val cellThr: Map[Long, Array[Double]] = sums.map { r =>
-          val cn = r.getLong(2).toDouble
-          r.getLong(0) -> r.getSeq[Double](1).map(_ / cn).toArray
-        }.toMap
-        // per-cell conditional levels: the per-row threshold block joins
-        // in via a broadcast of the tiny (cell, thresholds) table, then
-        // the same four masked VecSums — keyed this time
-        import df.sparkSession.implicits._
-        val thrDf = broadcast(cellThr.toSeq.map { case (c, t) => (c, t.toSeq) }
-          .toDF(CodeCol, "__thr__"))
-        val cond = keyed.join(thrDf, CodeCol)
-          .select(col(CodeCol),
-            zip_with(col("__v__"), col("__thr__"), (x, t) => when(x > t, x).otherwise(lit(0.0d))).as("hs"),
-            zip_with(col("__v__"), col("__thr__"), (x, t) => when(x > t, lit(1.0d)).otherwise(lit(0.0d))).as("hc"),
-            zip_with(col("__v__"), col("__thr__"), (x, t) => when(x > t, lit(0.0d)).otherwise(x)).as("ls"),
-            zip_with(col("__v__"), col("__thr__"), (x, t) => when(x > t, lit(0.0d)).otherwise(lit(1.0d))).as("lc"))
-          .groupBy(col(CodeCol))
-          .agg(vecSum(col("hs")).as("hs"), vecSum(col("hc")).as("hc"),
-            vecSum(col("ls")).as("ls"), vecSum(col("lc")).as("lc"))
-          .collect()
-        val cells = cond.map { r =>
-          val c = r.getLong(0)
-          val thr = cellThr(c)
-          val (hs, hc, ls, lc) = (r.getSeq[Double](1), r.getSeq[Double](2),
-            r.getSeq[Double](3), r.getSeq[Double](4))
-          val hi = Array.tabulate(thr.length)(i =>
-            (if (hc(i) > 0) hs(i) / hc(i) else thr(i)).toFloat)
-          val lo = Array.tabulate(thr.length)(i =>
-            (if (lc(i) > 0) ls(i) / lc(i) else thr(i)).toFloat)
-          c -> BqParams(thr, lo, hi)
-        }.toMap
-        BqParamsSet(global, cells)
-      }
-
-    Swap.replace(store.fs, new Path(store.bqIndexPath(source, column, codingName))) { image =>
-      writeCells(df.withColumn(SrcFileCol, col("_metadata.file_name"))
-        .withColumn(CodeCol, assignExpr(col(column), coding))
-        .withColumn(BqCol, packSignBitsSetCol(col(column), col(CodeCol), set)),
-        coding.numCells, image)
-      store.writeSidecar(bqSidecar(image), bqParamsJson(set).getBytes("UTF-8"))
-      recordSourceStamp(store, image, listing)
-    }
-    thresholds
-  }
-
-  private def bqParamsJson(set: BqParamsSet): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def block(node: com.fasterxml.jackson.databind.node.ObjectNode, p: BqParams): Unit = {
-      node.set[com.fasterxml.jackson.databind.JsonNode](
-        "thresholds", mapper.valueToTree(p.thresholds))
-      node.set[com.fasterxml.jackson.databind.JsonNode]("lo", mapper.valueToTree(p.lo))
-      node.set[com.fasterxml.jackson.databind.JsonNode]("hi", mapper.valueToTree(p.hi))
-    }
-    val payload = mapper.createObjectNode()
-    block(payload, set.global)
-    if (set.perCell) {
-      val cn = payload.putObject("cells")
-      set.cells.toSeq.sortBy(_._1).foreach { case (c, p) =>
-        block(cn.putObject(c.toString), p)
-      }
-    }
-    mapper.writeValueAsString(payload)
-  }
-
-  private def packSignBitsCol(vec: Column, thresholds: Array[Double]): Column =
-    org.apache.spark.sql.GraftShims.column(graft.functions.PackSignBits(
-      org.apache.spark.sql.GraftShims.expression(vec), thresholds.toIndexedSeq))
-
-  private def dequantizeSignBitsCol(codes: Column, p: BqParams): Column =
-    org.apache.spark.sql.GraftShims.column(graft.functions.DequantizeSignBits(
-      org.apache.spark.sql.GraftShims.expression(codes),
-      p.lo.toIndexedSeq, p.hi.toIndexedSeq))
+      column: String, perCell: Boolean = false): Array[Double] =
+    buildQuant(Bq, store, codingName, source, column, perCell).global("thresholds")
 
   def bqIndexExists(store: Store, codingName: String, source: String,
       column: String): Boolean =
-    store.sidecarExists(bqSidecar(store.bqIndexPath(source, column, codingName))) &&
-      scala.util.Try(loadBqThresholds(store, codingName, source, column)).isSuccess
-
-  private def loadBqParams(store: Store, codingName: String,
-      source: String, column: String): BqParamsSet = {
-    val sidecar = bqSidecar(store.bqIndexPath(source, column, codingName))
-    codecOf(store, sidecar) {
-      require(store.sidecarExists(sidecar),
-        s"no BQ index for $source.$column under coding '$codingName' — " +
-          "build it first (buildBq)")
-      parseBqParams(store.readSidecar(sidecar))
-    }
-  }
-
-  private def parseBqParams(bytes: Array[Byte]): BqParamsSet = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-    def block(n: com.fasterxml.jackson.databind.JsonNode): BqParams = {
-      def dbl(name: String): Array[Double] = Option(n.get(name)).map { a =>
-        Array.tabulate(a.size())(i => a.get(i).asDouble())
-      }.getOrElse(Array.empty)
-      def flt(name: String): Array[Float] = Option(n.get(name)).map { a =>
-        Array.tabulate(a.size())(i => a.get(i).asDouble().toFloat)
-      }.getOrElse(Array.empty)
-      BqParams(dbl("thresholds"), flt("lo"), flt("hi"))
-    }
-    val cells: Map[Long, BqParams] = Option(root.get("cells")).map { cn =>
-      val b = Map.newBuilder[Long, BqParams]
-      cn.properties().forEach { e => b += e.getKey.toLong -> block(e.getValue) }
-      b.result()
-    }.getOrElse(Map.empty)
-    BqParamsSet(block(root), cells)
-  }
-
-  private def loadBqThresholds(store: Store, codingName: String,
-      source: String, column: String): Array[Double] =
-    loadBqParams(store, codingName, source, column).global.thresholds
+    quantExists(Bq, store, codingName, source, column)
 
   /** Probed IVF+BQ search — the [[twoPass]] plan at the 1-bit tier: the
     * coarse pass reads (idCol, ceil(d/8)-byte codes) over pruned
     * partitions only and ranks ASYMMETRICALLY —
     * `vector_distance(dequantize_sign_bits(codes), target, metric)`,
     * the codegen'd conditional-mean reconstruction fused with the
-    * distance in one projection — so the full-precision query and
-    * per-dimension magnitudes stay in the ranking while the scan reads
-    * only the packed bits (legacy thresholds-only sidecars fall back to
-    * symmetric [[graft.functions.HammingDistance]] popcount). The float
-    * vectors are read back just for the `candidates` survivors and
-    * scored exactly under `metric`. With probes = numCells and
-    * candidates ≥ corpus this is exact (the oracle contract); at
-    * bounded budgets the 1-bit coarse scan is 8× smaller than SQ8's and
-    * 32× smaller than raw. Coarse ties break by `idCol`, so candidate
-    * selection is deterministic. */
+    * distance in one projection. The float vectors are read back just
+    * for the `candidates` survivors and scored exactly under `metric`.
+    * With probes = numCells and candidates ≥ corpus this is exact (the
+    * oracle contract); at bounded budgets the 1-bit coarse scan is 8×
+    * smaller than SQ8's and 32× smaller than raw. Coarse ties break by
+    * `idCol`, so candidate selection is deterministic. */
   def searchBq(
       store: Store,
       codingName: String,
@@ -1467,51 +1374,22 @@ object Index {
       filter: Option[Column] = None,
       select: Option[Seq[String]] = None,
       tieBreak: Seq[String] = Nil): DataFrame =
-    twoPass(bqTier, Seq(idCol), store, codingName, source, column, target,
+    twoPass(quantTier(Bq), Seq(idCol), store, codingName, source, column, target,
       k, Some(probes), candidates, idCol, metric, filter, select, tieBreak)
 
-  /** The BQ tier: asymmetric distance over the conditional-mean
-    * reconstruction of the sign bits; a legacy thresholds-only sidecar
-    * ranks by symmetric Hamming distance to the query's own code, packed
-    * under the stored thresholds (driver-side for one target, on the
-    * broadcast side for a batch). */
-  private def bqTier(store: Store, codingName: String, source: String,
-      column: String, coding: Coding, metric: Option[String]): Tier = {
-    val params = loadBqParams(store, codingName, source, column)
-    val thresholds = params.global.thresholds
-    val m = graft.core.Metrics.canonical(metric.getOrElse(coding.config.metric))
-    def requireDims(t: graft.api.TargetVector): Unit =
-      require(t.length == thresholds.length,
-        s"searchBq: target has ${t.length} dims, index has ${thresholds.length}")
-    if (params.perCell || params.global.asymmetric) {
-      val decoded = dequantizeSignBitsSetCol(col(BqCol), col(CodeCol), params)
-      Tier("bq", Some(BqCol), m,
-        (t, _) => { requireDims(t); vector_distance(decoded, t.lit, m) },
-        (q, qid, qvec) => (q.select(col(qid), col(CellCol), col(qvec)),
-          vector_distance(decoded, col(qvec), m)))
-    } else Tier("bq", Some(BqCol), m,
-      (t, _) => {
-        requireDims(t)
-        val v = t.doubles
-        val code = new Array[Byte]((v.length + 7) / 8)
-        var i = 0
-        while (i < v.length) {
-          if (v(i) > thresholds(i)) code(i >> 3) = (code(i >> 3) | (0x80 >> (i & 7))).toByte
-          i += 1
-        }
-        org.apache.spark.sql.GraftShims.column(
-          graft.functions.HammingDistance(
-            org.apache.spark.sql.GraftShims.expression(col(BqCol)),
-            code.toIndexedSeq)).cast("double")
-      },
-      (q, qid, qvec) => (
-        q.select(col(qid), col(CellCol),
-          packSignBitsCol(col(qvec), thresholds).as("__QBQ__")),
-        org.apache.spark.sql.GraftShims.column(
-          graft.functions.HammingDistancePair(
-            org.apache.spark.sql.GraftShims.expression(col(BqCol)),
-            org.apache.spark.sql.GraftShims.expression(col("__QBQ__"))))
-          .cast("double")))
+  /** The (modification time, length) stamp of a candidate tier's codec
+    * sidecar (sq | bq | pq), as measured advice records it: only a build
+    * writes the sidecar, so the stamp moves with a rebuild and with
+    * nothing else. None for the rerank tier, which has no codec, or a
+    * tier never built. */
+  private[graft] def codecStamp(store: Store, codingName: String,
+      source: String, column: String, tier: String): Option[String] = {
+    val sidecar = tier match {
+      case "sq" | "bq" => Some(quantOf(tier).sidecar(store, codingName, source, column))
+      case "pq" => Some(pqSidecar(tierPath(store, codingName, source, column, tier)))
+      case _ => None
+    }
+    sidecar.flatMap(store.fileStamp).map { case (t, n) => s"$t:$n" }
   }
 
   /** A k^n-capped probe union is still a planning hazard as an IN-SET
@@ -1724,16 +1602,14 @@ object Index {
       metric: Option[String] = None,
       tieBreak: Seq[String] = Nil,
       broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame =
-    candidateJoin(sqTier, store, codingName, source, column, queries,
+    candidateJoin(quantTier(Sq), store, codingName, source, column, queries,
       queryIdCol, queryVecCol, k, probes, candidates, idCol, metric,
       tieBreak, broadcastCapBytes)
 
   /** Batch k-NN join over the BQ index: the [[candidateJoin]] plan with
     * [[searchBq]]'s coarse score — the per-cell join carries (id, cell,
     * ceil(d/8)-byte sign codes), 32× less data than raw floats, and
-    * ranks asymmetrically against each query's full-precision vector
-    * (legacy sidecars: Hamming against the query's code, packed on the
-    * broadcast side under the stored thresholds). */
+    * ranks asymmetrically against each query's full-precision vector. */
   def bqKnnJoin(
       store: Store,
       codingName: String,
@@ -1749,7 +1625,7 @@ object Index {
       metric: Option[String] = None,
       tieBreak: Seq[String] = Nil,
       broadcastCapBytes: Long = Search.QueryBroadcastCap): DataFrame =
-    candidateJoin(bqTier, store, codingName, source, column, queries,
+    candidateJoin(quantTier(Bq), store, codingName, source, column, queries,
       queryIdCol, queryVecCol, k, probes, candidates, idCol, metric,
       tieBreak, broadcastCapBytes)
 

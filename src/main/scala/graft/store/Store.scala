@@ -120,7 +120,7 @@ class Store(val spark: SparkSession, val root: String) {
   private[graft] def memo[A](path: String, markers: Seq[String] = Nil)(
       open: => A): A = {
     val key = (path +: markers).mkString("\u0000")
-    val stamp = (path +: markers.map(m => s"$path/$m")).map(statOf)
+    val stamp = (path +: markers.map(m => s"$path/$m")).map(fileStamp)
     memos.get(key) match {
       case (`stamp`, v) => v.asInstanceOf[A]
       case _ =>
@@ -206,7 +206,8 @@ class Store(val spark: SparkSession, val root: String) {
     }
   }
 
-  private def statOf(path: String): Option[(Long, Long)] =
+  /** The (modification time, length) of `path`; None when it is missing. */
+  private[graft] def fileStamp(path: String): Option[(Long, Long)] =
     try {
       val s = fs.getFileStatus(new Path(path))
       Some((s.getModificationTime, s.getLen))
@@ -527,7 +528,7 @@ class Store(val spark: SparkSession, val root: String) {
   /** What a measurement of `coding` starts from: the (modification time,
     * length) of its `centroids/_SUCCESS`, None when there is no coding. */
   def codingStamp(coding: String): Option[(Long, Long)] =
-    statOf(s"${codingPath(coding)}/centroids/_SUCCESS")
+    fileStamp(s"${codingPath(coding)}/centroids/_SUCCESS")
 
   /** Installs advice `key` of `coding` ([[Swap.install]] of that one
     * entry), refused if the coding was retrained or dropped since

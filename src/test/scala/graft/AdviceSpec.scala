@@ -10,8 +10,9 @@ import graft.server.GraftServer
 
 /** Persisted advice is an artifact of its coding: a retrain or a drop of
   * the coding takes it along, advice keys of different codings never
-  * share a file, and every engine over the root serves what was last
-  * written, on its next call. */
+  * share a file, every engine over the root serves what was last
+  * written, on its next call, and candidate advice refuses once its
+  * tier's codec was rebuilt. */
 class AdviceSpec extends SparkSuite {
   import spark.implicits._
 
@@ -145,5 +146,31 @@ class AdviceSpec extends SparkSuite {
     intercept[IllegalStateException] {
       e.store.saveAdvice("c9", "probes", "{}".getBytes("UTF-8"), e.store.codingStamp("c9"))
     }
+  }
+
+  test("sq candidate advice is refused once its tier is rebuilt with other " +
+      "params, and survives compaction and an in-place repair") {
+    val e = engineWithTable()
+    e.makeIndex("c1", "v", "vec", cells16)
+    e.makeSqIndex("c1", "v", "vec")
+    val a = e.adviseCandidates("c1", "v", "vec", "id", "sq", probes = 16,
+      k = 5, targetRecall = 1.0, sampleQueries = 8, maxCandidates = 200)
+    def advisedSearch() = e.searchSq("v", "vec", target, "c1", probes = 16,
+      candidates = Engine.Advised, idCol = "id", k = 5)
+    // neither maintenance step writes the codec: the advice still serves
+    e.compactIndex("c1", "v", "vec", maxFilesPerCell = 1, tier = "sq")
+    assert(!e.repairIndex("c1", "v", "vec", tier = "sq").fullRebuild)
+    assert(e.resolveAdvisedCandidates("c1", "sq", 16, "v", "vec", 5, None) ==
+      a.advice.candidates)
+    assert(advisedSearch().count() == 5)
+    // rebuilt per cell over the unchanged source: other params, other codes
+    e.makeSqIndex("c1", "v", "vec", perCell = true)
+    val x = intercept[IllegalStateException](advisedSearch())
+    assert(x.getMessage.contains("STALE") && x.getMessage.contains("adviseCandidates"),
+      x.getMessage)
+    withServer(e) { server =>
+      assert(send(server, "GET", "/advise/candidates/c1?tier=sq&probes=16") == 409)
+    }
+    assert(a.toJson.contains("\"codecStamp\""), s"no codec stamp recorded: ${a.toJson}")
   }
 }

@@ -26,7 +26,30 @@ class BqSpec extends SparkSuite {
   private def naiveHamming(a: Array[Byte], b: Array[Byte]): Int =
     a.zip(b).map { case (x, y) => Integer.bitCount((x ^ y) & 0xff) }.sum
 
-  test("PackSignBits and HammingDistance match naive Scala, codegen and interpreted") {
+  private def kernel(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+    org.apache.spark.sql.GraftShims.column(e)
+  private def ex(c: org.apache.spark.sql.Column) =
+    org.apache.spark.sql.GraftShims.expression(c)
+
+  /** `run` under whole-stage codegen, then interpreted. */
+  private def codegenAndInterpreted[A](run: => A): (A, A) = {
+    val codegen = run
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val interpreted = try run finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    }
+    (codegen, interpreted)
+  }
+
+  /** The sign-pack kernel with no cells: one threshold block for every
+    * row. */
+  private def packGlobal(vec: org.apache.spark.sql.Column, thr: IndexedSeq[Double]) =
+    kernel(graft.functions.PackSignBitsPerCell(ex(vec), ex(lit(0L)), IndexedSeq.empty, thr))
+
+  test("sign-pack kernel with no cells and hamming_distance match naive Scala, " +
+      "codegen and interpreted") {
     val rnd = new scala.util.Random(41)
     val d = 19 // deliberately not a multiple of 8: partial last byte
     val thr = IndexedSeq.fill(d)(rnd.nextDouble() * 2 - 1)
@@ -36,23 +59,13 @@ class BqSpec extends SparkSuite {
     val q = naivePack(rows(7)._2, thr)
 
     def run(): Seq[(Long, Array[Byte], Int)] = df
-      .withColumn("code", org.apache.spark.sql.GraftShims.column(
-        graft.functions.PackSignBits(
-          org.apache.spark.sql.GraftShims.expression(col("vec")), thr)))
-      .withColumn("ham", org.apache.spark.sql.GraftShims.column(
-        graft.functions.HammingDistance(
-          org.apache.spark.sql.GraftShims.expression(col("code")),
-          q.toIndexedSeq)))
+      .withColumn("code", packGlobal(col("vec"), thr))
+      .withColumn("ham", kernel(graft.functions.HammingDistancePair(
+        ex(col("code")), ex(lit(q)))))
       .orderBy("id").select("id", "code", "ham")
       .collect().toSeq.map(r => (r.getLong(0), r.getAs[Array[Byte]](1), r.getInt(2)))
 
-    val codegen = run()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interpreted = try run() finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    val (codegen, interpreted) = codegenAndInterpreted(run())
     codegen.zip(interpreted).zip(rows).foreach { case (((id, code, ham), (_, icode, iham)), (_, v)) =>
       val want = naivePack(v, thr)
       assert(java.util.Arrays.equals(code, want), s"pack mismatch id $id")
@@ -62,14 +75,84 @@ class BqSpec extends SparkSuite {
     }
     // float-input path packs identically
     val f = df.select(col("id"), col("vec").cast("array<float>").as("vec"))
-      .withColumn("code", org.apache.spark.sql.GraftShims.column(
-        graft.functions.PackSignBits(
-          org.apache.spark.sql.GraftShims.expression(col("vec")), thr)))
+      .withColumn("code", packGlobal(col("vec"), thr))
       .orderBy("id").select("code").collect()
     f.zip(rows).foreach { case (r, (_, v)) =>
       assert(java.util.Arrays.equals(r.getAs[Array[Byte]](0),
         naivePack(v.map(_.toFloat.toDouble), thr)))
     }
+  }
+
+  test("quantizer kernels with no cells equal the naive per-dimension formulas, " +
+      "codegen and interpreted; a cell missing from `cells` reads the global block") {
+    import graft.functions.{DequantizePerCellDim, DequantizeSignBitsPerCell,
+      PackSignBitsPerCell, QuantizePerCellDim}
+    val rnd = new scala.util.Random(61)
+    val d = 13 // not a multiple of 8: a partial last sign byte
+    // rows in cells 0, 3, 6 and 9; the per-cell params know 3 and 9 only
+    val rows = Seq.tabulate(60)(i =>
+      (i.toLong, (i % 4) * 3L, Seq.fill(d)(rnd.nextDouble() * 8 - 4)))
+    val fitted = IndexedSeq(3L, 9L)
+    val blocks = fitted.length + 1 // the global block last
+    def draw(lo: Double, hi: Double): IndexedSeq[Double] =
+      IndexedSeq.fill(blocks * d)(lo + rnd.nextDouble() * (hi - lo))
+    val scales = draw(0.02, 0.06).map(_.toFloat)
+    val zps = draw(100, 150).map(_.toFloat)
+    val thr = draw(-0.5, 0.5)
+    val lo = draw(-3, -1).map(_.toFloat)
+    val hi = draw(1, 3).map(_.toFloat)
+    def block[T](a: IndexedSeq[T], b: Int): IndexedSeq[T] = a.slice(b * d, (b + 1) * d)
+    val global = blocks - 1
+    for (cells <- Seq(IndexedSeq.empty[Long], fitted);
+         vecType <- Seq("array<double>", "array<float>")) {
+      // the zero-cell kernels get the global block alone
+      def flat[T](a: IndexedSeq[T]): IndexedSeq[T] = if (cells.isEmpty) block(a, global) else a
+      def blockOf(cell: Long): Int = cells.indexOf(cell) match {
+        case -1 => global
+        case b => b
+      }
+      val df = rows.toDF("id", "cell", "vec").withColumn("vec", col("vec").cast(vecType))
+      val c = ex(col("cell"))
+      def run() = df
+        .select(col("id"), col("cell"), col("vec").cast("array<double>").as("x"),
+          kernel(QuantizePerCellDim(ex(col("vec")), c, cells, flat(scales), flat(zps))).as("q"),
+          kernel(PackSignBitsPerCell(ex(col("vec")), c, cells, flat(thr))).as("p"))
+        .select(col("*"),
+          kernel(DequantizePerCellDim(ex(col("q")), c, cells, flat(scales), flat(zps))).as("dq"),
+          kernel(DequantizeSignBitsPerCell(ex(col("p")), c, cells, flat(lo), flat(hi))).as("r"))
+        .orderBy("id").collect().toSeq
+        .map(r => (r.getLong(1), r.getSeq[Double](2), r.getAs[Array[Byte]](3).toSeq,
+          r.getAs[Array[Byte]](4).toSeq, r.getSeq[Float](5), r.getSeq[Float](6)))
+      val (codegen, interpreted) = codegenAndInterpreted(run())
+      val what = s"$vecType, ${cells.length} cells"
+      assert(codegen == interpreted, s"$what: codegen/interpreted divergence")
+      codegen.foreach { case (cell, x, q, p, dq, r) =>
+        val b = blockOf(cell)
+        val (s, z, t, l, h) =
+          (block(scales, b), block(zps, b), block(thr, b), block(lo, b), block(hi, b))
+        assert(q == x.indices.map(i =>
+          math.max(0L, math.min(255L, math.round(x(i) / s(i) + z(i)))).toByte),
+          s"$what: quantize, cell $cell")
+        assert(dq == q.indices.map(i => s(i) * ((q(i) & 0xFF) - z(i))),
+          s"$what: dequantize, cell $cell")
+        assert(p == naivePack(x, t).toSeq, s"$what: sign pack, cell $cell")
+        assert(r == x.indices.map(i => if (x(i) > t(i)) h(i) else l(i)),
+          s"$what: sign decode, cell $cell")
+      }
+    }
+  }
+
+  test("SQL pack_sign_bits keeps its column name and its error wording") {
+    Graft.register(spark)
+    Seq((1L, Seq(0.5, -1.0, 2.0))).toDF("id", "v").createOrReplaceTempView("psb")
+    val df = spark.sql("SELECT pack_sign_bits(v, 3) FROM psb")
+    assert(df.columns.toSeq == Seq("graft_pack_sign_bits(v)"))
+    assert(df.head().getAs[Array[Byte]](0).toSeq == Seq(0xa0.toByte))
+    val x = intercept[Exception](spark.sql("SELECT pack_sign_bits(v, 4) FROM psb").collect())
+    val messages = Iterator.iterate[Throwable](x)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(messages.exists(_.contains(
+      "graft_pack_sign_bits: vector has 3 dims but thresholds have 4")), messages.mkString("\n"))
   }
 
   test("ivf+bq: exact at full budgets, codes-only coarse scan, sane bounded recall") {
@@ -181,10 +264,18 @@ class BqSpec extends SparkSuite {
     // never shuffles by id (only the per-query windows exchange)
     assertNoCorpusIdShuffle(
       joined.queryExecution.executedPlan.toString)
+    // a per-cell tier joins exactly too: each corpus row decodes under
+    // its own cell's block
+    engine.makeBqIndex("bc", "bj", "vec", perCell = true)
+    val perCell = engine.knnJoinBq("bc", "bj", "vec", queries, "q_id",
+      "q_vec", k = 5, probes = 4, candidates = 1 << 20, idCol = "id",
+      metric = Some("l2"), tieBreak = Seq("id"))
+    assert(perCell.select("q_id", "id").as[(Long, Long)].collect().toSet == brute,
+      "full-budget per-cell bq join must equal the brute join")
     engine.remove()
   }
 
-  test("DequantizeSignBits reconstructs conditional means; codegen == interpreted") {
+  test("sign decode with no cells reconstructs conditional means; codegen == interpreted") {
     val rnd = new scala.util.Random(47)
     val d = 11
     val thr = IndexedSeq.fill(d)(0.0)
@@ -193,21 +284,12 @@ class BqSpec extends SparkSuite {
     val rows = Seq.tabulate(40)(i => (i.toLong, Seq.fill(d)(rnd.nextDouble() * 2 - 1)))
     val df = rows.toDF("id", "vec")
     def run(): Seq[(Long, Seq[Float])] = df
-      .withColumn("code", org.apache.spark.sql.GraftShims.column(
-        graft.functions.PackSignBits(
-          org.apache.spark.sql.GraftShims.expression(col("vec")), thr)))
-      .withColumn("rec", org.apache.spark.sql.GraftShims.column(
-        graft.functions.DequantizeSignBits(
-          org.apache.spark.sql.GraftShims.expression(col("code")), lo, hi)))
+      .withColumn("code", packGlobal(col("vec"), thr))
+      .withColumn("rec", kernel(graft.functions.DequantizeSignBitsPerCell(
+        ex(col("code")), ex(lit(0L)), IndexedSeq.empty, lo, hi)))
       .orderBy("id").select("id", "rec")
       .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Float](1)))
-    val codegen = run()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interpreted = try run() finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    val (codegen, interpreted) = codegenAndInterpreted(run())
     assert(codegen == interpreted, "codegen/interpreted divergence")
     codegen.zip(rows).foreach { case ((id, rec), (_, v)) =>
       val want = v.indices.map(i => if (v(i) > 0.0) hi(i) else lo(i))
@@ -215,11 +297,12 @@ class BqSpec extends SparkSuite {
     }
   }
 
-  test("asymmetric coarse ranking beats legacy symmetric Hamming at a tight budget") {
+  test("asymmetric coarse ranking holds its recall floor at a tight budget") {
     val rnd = new scala.util.Random(59)
-    // one diffuse cloud: with d=32 the symmetric code has only 32 bits of
-    // resolution (heavy ties at a 30-candidate budget); the asymmetric
-    // score keeps magnitudes, so it ranks within the tie classes
+    // one diffuse cloud: with d=32 a symmetric (Hamming) code has only
+    // 32 bits of resolution (heavy ties at a 100-candidate budget); the
+    // asymmetric score keeps magnitudes, so it ranks within the tie
+    // classes
     val rows = Seq.tabulate(3000)(i =>
       (i.toLong, Seq.fill(32)((rnd.nextGaussian() * 2).toFloat)))
     val df = rows.toDF("id", "vec")
@@ -246,20 +329,10 @@ class BqSpec extends SparkSuite {
       per.sum / per.length
     }
     val asym = recallOf()
-    // strip the reconstruction levels from the sidecar → legacy symmetric
-    val path = engine.store.bqIndexPath("av", "vec", "ac")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(engine.store.readSidecar(s"$path/_bq_thresholds.json"))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.remove("lo"); node.remove("hi")
-    engine.store.writeSidecar(s"$path/_bq_thresholds.json",
-      mapper.writeValueAsBytes(node))
-    val sym = recallOf()
-    assert(asym > sym,
-      s"asymmetric recall $asym must beat symmetric $sym at a tight budget")
     // a structure-free 32-d gaussian cloud at a 3% budget is the hardest
-    // setting for any 1-bit code; the point here is the ORDERING — the
-    // 1M × 256-d absolute numbers live in bench_summary.json quality
+    // setting for any 1-bit code; the 1M × 256-d absolute numbers live in
+    // bench_summary.json quality. (A sidecar without the levels is
+    // refused: see the legacy-sidecar test.)
     assert(asym >= 0.55, s"asymmetric recall $asym unexpectedly low")
     engine.remove()
   }
@@ -352,6 +425,127 @@ class BqSpec extends SparkSuite {
       .select("id").as[Long].collect().toSeq
     assert(got == brute, s"post-sync full-budget mismatch: $got vs $brute")
     assert(thr.length == thr2.length)
+    engine.remove()
+  }
+
+  /** A root with table `t` (clustered 8-d vectors, ids 0..159) and a
+    * 4-cell coding `c`. */
+  private def quantizedRoot(name: String): Engine = {
+    val rnd = new scala.util.Random(83)
+    val centers = Seq.fill(4)(Array.fill(8)(rnd.nextDouble() * 20 - 10))
+    val engine = new Engine(spark, Files.createTempDirectory(name).toString)
+    engine.makeTable("t", (0 until 160).map { i =>
+      (i.toLong, centers(i % 4).map(x => (x + rnd.nextGaussian()).toFloat).toSeq)
+    }.toDF("id", "vec"))
+    engine.makeCoder("c", "t", "vec", CoderConfig(metric = "l2",
+      codebookSize = 2, numCodebooks = 2, batchSize = 64, numEpochs = 2))
+    engine
+  }
+
+  /** Rewrites a sidecar as JSON with `edit` applied to its top level and
+    * to every cell block. */
+  private def editSidecar(engine: Engine, path: String)(
+      edit: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = mapper.readTree(engine.store.readSidecar(path))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    edit(root)
+    Option(root.get("cells")).foreach(_.elements().forEachRemaining(c =>
+      edit(c.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])))
+    engine.store.writeSidecar(path, mapper.writeValueAsBytes(root))
+  }
+
+  private def hasCells(engine: Engine, path: String): Boolean =
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(engine.store.readSidecar(path)).has("cells")
+
+  test("a BQ sidecar without reconstruction levels reads as absent, is " +
+      "refused by search and join, and repair rebuilds it per-cell or global as it was") {
+    val engine = quantizedRoot("graft-bq-legacy")
+    val target = Array.fill(8)(0.5)
+    val sidecar = s"${engine.store.bqIndexPath("t", "vec", "c")}/_bq_thresholds.json"
+    val queries = engine.readTable(Seq("t")).filter(col("id") < 3)
+      .select(col("id").as("q_id"), col("vec").cast("array<double>").as("q_vec"))
+    val brute = graft.api.Search.knn(engine.readTable(Seq("t")), "vec",
+        Seq(Tuple1(target.toSeq)).toDF("t"), "l2", k = 5, tieBreak = Seq("id"))
+      .select("id").as[Long].collect().toSeq
+    def search() = engine.searchBq("t", "vec", target, coding = "c", probes = 4,
+      candidates = 1 << 20, idCol = "id", k = 5, metric = Some("l2"),
+      tieBreak = Seq("id")).select("id").as[Long].collect().toSeq
+    for (perCell <- Seq(false, true)) {
+      engine.makeBqIndex("c", "t", "vec", perCell = perCell)
+      editSidecar(engine, sidecar) { n => n.remove("lo"); n.remove("hi") }
+      assert(!Index.bqIndexExists(engine.store, "c", "t", "vec"), s"perCell=$perCell")
+      val x = intercept[IllegalStateException](search())
+      assert(x.getMessage.contains("'lo'") && x.getMessage.contains("rebuild with buildBq"),
+        x.getMessage)
+      intercept[IllegalStateException] {
+        engine.knnJoinBq("c", "t", "vec", queries, "q_id", "q_vec", k = 5,
+          probes = 4, candidates = 1 << 20, idCol = "id").collect()
+      }
+      // a sync has nothing to encode under: it refuses too
+      intercept[IllegalStateException](engine.syncBqIndex("c", "t", "vec", "id"))
+      val stats = engine.repairIndex("c", "t", "vec", tier = "bq")
+      assert(stats.fullRebuild, s"perCell=$perCell: $stats")
+      assert(Index.bqIndexExists(engine.store, "c", "t", "vec"))
+      assert(hasCells(engine, sidecar) == perCell, s"perCell=$perCell: mode lost")
+      assert(search() == brute, s"perCell=$perCell: rebuilt tier is not exact")
+    }
+    engine.remove()
+  }
+
+  test("a corrupt SQ8 or BQ codec sidecar refuses as state (409), naming the " +
+      "tier, field and builder, and its tier reads as absent; repair of a " +
+      "truncated one refuses") {
+    val engine = quantizedRoot("graft-quant-corrupt")
+    val server = new graft.server.GraftServer(engine).start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def post(body: String): Int = client.send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:${server.boundPort}/api/search"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
+        .header("Content-Type", "application/json").build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+    def search(tier: String): Unit = {
+      val t = Array.fill(8)(0.5)
+      (if (tier == "sq") engine.searchSq("t", "vec", t, coding = "c", probes = 2,
+        candidates = 40, idCol = "id", k = 5)
+      else engine.searchBq("t", "vec", t, coding = "c", probes = 2,
+        candidates = 40, idCol = "id", k = 5)).collect()
+      ()
+    }
+    def exists(tier: String): Boolean =
+      if (tier == "sq") Index.sqIndexExists(engine.store, "c", "t", "vec")
+      else Index.bqIndexExists(engine.store, "c", "t", "vec")
+    try {
+      engine.makeSqIndex("c", "t", "vec")
+      engine.makeBqIndex("c", "t", "vec", perCell = true)
+      val sq = s"${engine.store.sqIndexPath("t", "vec", "c")}/_sq_params.json"
+      val bq = s"${engine.store.bqIndexPath("t", "vec", "c")}/_bq_thresholds.json"
+      def refused(tier: String, names: String*): Unit = {
+        assert(!exists(tier), s"$tier: a corrupt sidecar must read as absent")
+        val x = intercept[IllegalStateException](search(tier))
+        names.foreach(n => assert(x.getMessage.contains(n), s"$tier: ${x.getMessage}"))
+        assert(post(s"""{"sources":["t"],"column":"vec","target":[0,0,0,0,0,0,0,0],
+            "coding":"c","probes":2,"candidates":40,"idCol":"id","$tier":true,
+            "k":5}""") == 409, s"$tier: a corrupt sidecar is no bad request")
+      }
+      // truncated mid-write
+      for ((tier, path, name, builder) <- Seq(("sq", sq, "SQ8", "buildSq"),
+          ("bq", bq, "BQ", "buildBq"))) {
+        val whole = engine.store.readSidecar(path)
+        engine.store.writeSidecar(path, whole.take(whole.length / 2))
+        refused(tier, name, builder)
+        // the per-cell mode is unreadable too: repair refuses, not guesses
+        val x = intercept[IllegalStateException](engine.repairIndex("c", "t", "vec", tier = tier))
+        assert(x.getMessage.contains(s"$builder(perCell = true)"), s"$tier: ${x.getMessage}")
+        engine.store.writeSidecar(path, whole)
+        assert(exists(tier), s"$tier: the restored sidecar must read again")
+      }
+      // a per-cell BQ sidecar whose blocks have no levels
+      editSidecar(engine, bq) { n => n.remove("lo"); n.remove("hi") }
+      refused("bq", "BQ", "'lo'", "buildBq")
+    } finally server.stop()
     engine.remove()
   }
 }

@@ -84,6 +84,19 @@ class GraphSpec extends SparkSuite {
     }
   }
 
+  test("seeded PageRank refuses a damping factor outside [0, 1000] per mille") {
+    // past 1000 the seeds' teleport base goes negative; below 0 the
+    // propagated mass does
+    val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
+    for (damp <- Seq(-1L, 1001L)) {
+      val e = intercept[IllegalArgumentException] {
+        Graph.pageRankSeeded(edges, "src", "dst", Seq("a").toDF("v"), "v", 2,
+          dampPerMille = damp)
+      }
+      assert(e.getMessage.contains("dampPerMille must be in [0, 1000]"), e.getMessage)
+    }
+  }
+
   test("connectedComponents labels disjoint chains with their min node") {
     val edges = Seq(("b", "c"), ("a", "b"), ("x", "y")).toDF("src", "dst")
     val got = Graph.connectedComponents(edges, "src", "dst")

@@ -727,13 +727,13 @@ class SqSpec extends SparkSuite {
     val hi = Array.tabulate(4)(d => rows.map(_._2(d).toDouble).max)
     val p = Index.fitSqParams(lo, hi)
     assert(p.scales(2) == 1f && p.zeroPoints(2) == -3.5f) // constant dim
+    // the SQ8 kernels with no cells: the one (global) params block
+    import org.apache.spark.sql.GraftShims.{column => kernel, expression => ex}
+    def quantize(v: org.apache.spark.sql.Column) = kernel(graft.functions.QuantizePerCellDim(
+      ex(v), ex(lit(0L)), IndexedSeq.empty, p.scales.toIndexedSeq, p.zeroPoints.toIndexedSeq))
     val back = df.select(col("vec"),
-      org.apache.spark.sql.GraftShims.column(graft.functions.DequantizePerDim(
-        org.apache.spark.sql.GraftShims.expression(
-          org.apache.spark.sql.GraftShims.column(graft.functions.QuantizePerDim(
-            org.apache.spark.sql.GraftShims.expression(col("vec")),
-            p.scales.toIndexedSeq, p.zeroPoints.toIndexedSeq))),
-        p.scales.toIndexedSeq, p.zeroPoints.toIndexedSeq)).as("rt"))
+      kernel(graft.functions.DequantizePerCellDim(ex(quantize(col("vec"))), ex(lit(0L)),
+        IndexedSeq.empty, p.scales.toIndexedSeq, p.zeroPoints.toIndexedSeq)).as("rt"))
       .as[(Seq[Float], Seq[Float])].collect()
     back.foreach { case (v, rt) =>
       for (d <- 0 until 4) {
@@ -746,10 +746,7 @@ class SqSpec extends SparkSuite {
     // dimension mismatch is refused, not silently mis-encoded
     val bad = Seq((1L, Seq(1.0f, 2.0f))).toDF("id", "vec")
     val e = intercept[Throwable] {
-      bad.select(org.apache.spark.sql.GraftShims.column(
-        graft.functions.QuantizePerDim(
-          org.apache.spark.sql.GraftShims.expression(col("vec")),
-          p.scales.toIndexedSeq, p.zeroPoints.toIndexedSeq))).collect()
+      bad.select(quantize(col("vec"))).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
@@ -946,6 +943,15 @@ class SqKnnJoinSpec extends SparkSuite {
     // ids — the corpus itself must never shuffle by id (only the
     // per-query windows exchange, on q_id)
     assertNoCorpusIdShuffle(planStr)
+
+    // a per-cell tier joins exactly too: each corpus row dequantizes
+    // under its own cell's block
+    engine.makeSqIndex("kc", "kv", "vec", perCell = true)
+    val perCell = Index.sqKnnJoin(engine.store, "kc", "kv", "vec", queries,
+        "q_id", "q_vec", k = 3, probes = 4, candidates = 1 << 20,
+        idCol = "id", metric = Some("l2"), tieBreak = Seq("id"))
+      .select("q_id", "id").as[(Long, Long)].collect().toSet
+    assert(perCell == brute, s"full-budget per-cell sq knn join != brute:\n$perCell\nvs $brute")
     engine.remove()
   }
 }
