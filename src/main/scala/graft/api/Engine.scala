@@ -467,7 +467,7 @@ class Engine(val spark: SparkSession, val root: String) {
     * [[compactFuzzyIndex]] coalesces sync-fragmented buckets. */
   def buildFuzzyIndex(source: String, idCol: String, textCol: String,
       maxDist: Int = 2, buckets: Int = 64): Unit = {
-    require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
+    graft.ext.Dedup.edFamily(maxDist, "buildFuzzyIndex") // refuses before any write
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     buildText(fuzzyTier(source, textCol), TextMeta(buckets,
         maxDist = Some(maxDist), idCol = Some(idCol), layout = Some(2)),

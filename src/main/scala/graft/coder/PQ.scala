@@ -340,29 +340,45 @@ object PQ {
     mapper.writeValueAsBytes(payload)
   }
 
-  def fromJsonBytes(bytes: Array[Byte]): PQCodebooks = {
+  def fromJsonBytes(bytes: Array[Byte]): PQCodebooks = parse("(bytes)", bytes)
+
+  /** Reads codebooks back; malformed ones (truncated, a field missing or
+    * mistyped) refuse as state, naming `path`, the field and the builder. */
+  private[graft] def parse(path: String, bytes: Array[Byte]): PQCodebooks = {
+    import com.fasterxml.jackson.databind.JsonNode
+    def refuse(what: String): Nothing = throw new IllegalStateException(
+      s"malformed PQ sidecar $path: $what — rebuild with buildPq")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val n = mapper.readTree(bytes)
-    val cfg = PQConfig(
-      numSubspaces = n.get("numSubspaces").asInt(),
-      codebookSize = n.get("codebookSize").asInt(),
-      metric = n.get("metric").asText(),
-      sampleSize = n.get("sampleSize").asInt(),
-      iters = n.get("iters").asInt(),
-      seed = n.get("seed").asLong(),
-      opqIters = Option(n.get("opqIters")).map(_.asInt()).getOrElse(0))
-    val cents = mapper.treeToValue(n.get("centroids"), classOf[Array[Array[Array[Double]]]])
-    val residual = Option(n.get("residual")).exists(_.asBoolean(false))
-    val rotation = Option(n.get("rotation"))
-      .map(r => mapper.treeToValue(r, classOf[Array[Double]]))
-    val anchors: Map[Long, Array[Double]] = Option(n.get("anchors")).map { an =>
-      val b = Map.newBuilder[Long, Array[Double]]
-      an.fields().forEachRemaining { e =>
-        b += e.getKey.toLong -> mapper.treeToValue(e.getValue, classOf[Array[Double]])
-      }
-      b.result()
-    }.getOrElse(Map.empty)
-    PQCodebooks(cfg, n.get("dim").asInt(), cents, residual, anchors, rotation)
+    val n = try mapper.readTree(bytes)
+      catch { case e: java.io.IOException => refuse(s"unreadable JSON (${e.getMessage})") }
+    def opt(f: String): Option[JsonNode] = Option(n).flatMap(x => Option(x.get(f)))
+    def field(f: String, ok: JsonNode => Boolean): JsonNode =
+      opt(f).filter(ok).getOrElse(refuse(s"no valid '$f'"))
+    def int(f: String): Int = field(f, _.isIntegralNumber).asInt()
+    try {
+      val cfg = PQConfig(numSubspaces = int("numSubspaces"),
+        codebookSize = int("codebookSize"),
+        metric = field("metric", _.isTextual).asText(),
+        sampleSize = int("sampleSize"), iters = int("iters"),
+        seed = field("seed", _.isIntegralNumber).asLong(),
+        opqIters = opt("opqIters").map(_.asInt()).getOrElse(0))
+      val cents = mapper.treeToValue(field("centroids", _.isArray),
+        classOf[Array[Array[Array[Double]]]])
+      val residual = opt("residual").exists(_.asBoolean(false))
+      val rotation = opt("rotation").map(mapper.treeToValue(_, classOf[Array[Double]]))
+      val anchors: Map[Long, Array[Double]] = opt("anchors").map { an =>
+        val b = Map.newBuilder[Long, Array[Double]]
+        an.fields().forEachRemaining { e =>
+          b += e.getKey.toLongOption.getOrElse(refuse(s"anchor cell '${e.getKey}'")) ->
+            mapper.treeToValue(e.getValue, classOf[Array[Double]])
+        }
+        b.result()
+      }.getOrElse(Map.empty)
+      PQCodebooks(cfg, int("dim"), cents, residual, anchors, rotation)
+    } catch {
+      // a non-numeric array, or values the codebooks reject
+      case e @ (_: IllegalArgumentException | _: java.io.IOException) => refuse(e.getMessage)
+    }
   }
 
   /** Local-file save/load so repeated Verify/Bench runs skip retraining. */
@@ -374,7 +390,7 @@ object PQ {
   }
 
   def load(path: String): PQCodebooks =
-    fromJsonBytes(Files.readAllBytes(Paths.get(path)))
+    parse(path, Files.readAllBytes(Paths.get(path)))
 
   /** Load iff the cached codebooks were trained under `cfg` (codebookSize
     * may have been reduced to the sample size at training time); a stale

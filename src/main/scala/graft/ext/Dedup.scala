@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.functions.vector_distance
@@ -8,7 +8,7 @@ import graft.functions.functions.vector_distance
 /** One Jaro-Winkler blocking element: frequency rank, the character, and
   * its occurrence index within the record — (c, occ) turns set
   * intersection into MULTISET overlap. Field ORDER is load-bearing
-  * (`jwGuard`'s worst-element printer reads positions 1 and 2).
+  * (`jwFamily`'s worst-key renderer reads positions 1 and 2).
   *
   * TOP-LEVEL (not nested in [[Dedup]]) on purpose: as an object-private
   * nested class, Janino could not compile the generated serializer for
@@ -797,46 +797,285 @@ object Dedup {
         "large tables, or pass a larger maxRows to opt in explicitly.")
   }
 
+  // ——— String-similarity joins: one filter–verify skeleton ———
+
+  /** A family's verify half, all its exact baseline needs: `base` maps
+    * an input to (id, t, len) rows, null texts dropped; `value` scores
+    * two texts as column `score`, kept where `keep` holds; `exactFilter`
+    * (over the two lengths) is a free pre-filter of the exact path. */
+  private[graft] final case class Verify(score: String,
+      base: (DataFrame, String, String) => DataFrame,
+      value: (Column, Column) => Column, keep: Column => Column,
+      exactFilter: Option[(Column, Column) => Column] = None)
+
+  /** The family's words in its candidate-volume refusal ([[refusal]]). */
+  private[graft] final case class Wording(key: String, collide: String,
+      worst: String, remedy: String)
+
+  /** A string-similarity family (DESIGN §13): an invariant every true
+    * pair keeps, a pigeonhole key it implies, a guard on the key join's
+    * volume. `keys` maps the bases of a join's sides (one for a
+    * self-join; query side then corpus side for a cross join) to each
+    * side's (index, probe) frames of (id, `keyCols`…, and `len` where
+    * the `band` predicate over a candidate's two lengths needs it). The
+    * skeleton reads two properties: `symmetric` (index and probe frames
+    * are one frame: one key direction, c·(c−1)/2 self-join pairs per
+    * key) and `materialized` ([[withKeys]]). `op` names the public
+    * operator in refusals. */
+  private[graft] final case class Family(op: String, verify: Verify,
+      keyCols: Seq[String], keys: Seq[DataFrame] => Seq[(DataFrame, DataFrame)],
+      symmetric: Boolean, materialized: Boolean,
+      band: Option[(Column, Column) => Column],
+      wording: Wording, worstKey: Row => String)
+
+  /** The exact all-pairs baseline: guard, spread, verify every id_a < id_b. */
+  private def exactPairs(v: Verify, op: String, scalePath: String,
+      df: DataFrame, idCol: String, textCol: String, maxRows: Long): DataFrame = {
+    // counted with nulls dropped, whatever else the family's base drops
+    guardAllPairs(df.filter(col(textCol).isNotNull), op, maxRows, scalePath)
+    // the nested-loop join STREAMS its left side as partitioned — often
+    // ONE task for a small scan; a tiny shuffle buys full parallelism
+    val parts = df.sparkSession.sparkContext.defaultParallelism
+    val base = v.base(df, idCol, textCol)
+    val pairs = texts(base, "a").repartition(parts)
+      .join(texts(base, "b"), col("id_a") < col("id_b"))
+    verified(v, v.exactFilter.fold(pairs)(f =>
+      pairs.filter(f(length(col("__ta")), length(col("__tb"))))))
+  }
+
+  /** Self-join: keys, guard, candidates, distinct, verify. A symmetric
+    * key join sees each pair both ways (kept as id_a < id_b); an
+    * asymmetric one once per matching direction (least/greatest). */
+  private def selfJoin(f: Family, df: DataFrame, idCol: String,
+      textCol: String, maxCandidates: Long): DataFrame = {
+    require(maxCandidates >= 1, "maxCandidates must be >= 1")
+    val base = f.verify.base(df, idCol, textCol)
+    withKeys(f, f.keys(Seq(base))) { case Seq((idx, probe)) =>
+      refuseOver(f, maxCandidates, selfPairs(f, idx, probe))
+      val joined = keyJoin(f, side(idx, "a"), side(probe, "b"))
+      val cand =
+        if (f.symmetric) joined.filter(col("id_a") < col("id_b")).select("id_a", "id_b")
+        else joined.filter(col("id_a") =!= col("id_b"))
+          .select(least(col("id_a"), col("id_b")).as("id_a"),
+            greatest(col("id_a"), col("id_b")).as("id_b"))
+      verified(f.verify, cand.distinct().join(texts(base, "a"), Seq("id_a"))
+        .join(texts(base, "b"), Seq("id_b")))
+    }
+  }
+
+  /** Cross join of two tables; both sides' keys are built together (a
+    * family may derive them from both, as Jaro-Winkler's rank map). */
+  private def crossTables(f: Family, left: DataFrame, leftId: String,
+      leftText: String, right: DataFrame, rightId: String, rightText: String,
+      maxCandidates: Long): DataFrame = {
+    val lb = f.verify.base(left, leftId, leftText)
+    val rb = f.verify.base(right, rightId, rightText)
+    val Seq(lKeys, rKeys) = f.keys(Seq(lb, rb))
+    crossJoin(f, lb, rb, lKeys, rKeys, maxCandidates)
+  }
+
+  /** How loose a proven volume bound may be for the broadcast-left join
+    * to rely on its Observation guard alone: within this multiple of
+    * `maxCandidates`, a refusal has paid a bounded materialization;
+    * looser (or no bound), the counts-frame guard refuses first. */
+  private[graft] val EdObservedGuardSlack = 4.0
+
+  /** Cross join: (id_a = left id, id_b = right id, score). A symmetric
+    * family's keys meet in one direction; an asymmetric family indexes
+    * the shorter side of a pair, so left index × right probes and left
+    * probes × right index both run, their candidates unioned before ONE
+    * distinct and verify. Right key frames may carry `id_b` already.
+    * Serving options: the right side's precomputed key counts (aliases
+    * ns/np), so the guard scales with the left side; `broadcastLeft`
+    * for a small left side; a caller-proven `provenVolumeBound`. */
+  private def crossJoin(f: Family, lb: DataFrame, rb: DataFrame,
+      lKeys: (DataFrame, DataFrame), rKeys: (DataFrame, DataFrame),
+      maxCandidates: Long, rIndexCounts: Option[DataFrame] = None,
+      rProbeCounts: Option[DataFrame] = None, broadcastLeft: Boolean = false,
+      provenVolumeBound: Option[Double] = None): DataFrame = {
+    require(maxCandidates >= 1, "maxCandidates must be >= 1")
+    // broadcast left key frames make the candidate joins map-side: the
+    // corpus-side frames stream once instead of shuffling
+    def hint(df: DataFrame): DataFrame =
+      if (broadcastLeft) broadcast(df) else df
+    withKeys(f, Seq(lKeys, rKeys)) { case Seq((li, lp), (ri, rp)) =>
+      val (lIdx, lProbe) = (hint(side(li, "a")), hint(side(lp, "a")))
+      val (rIdx, rProbe) = (side(ri, "b"), side(rp, "b"))
+      val rawPairs = (if (f.symmetric) Seq((lIdx, rIdx))
+        else Seq((lIdx, rProbe), (lProbe, rIdx)))
+        .map { case (a, b) => keyJoin(f, a, b).select("id_a", "id_b") }
+        .reduce(_ union _)
+      def guard(): Unit = crossGuard(f, maxCandidates, lIdx, lProbe,
+        rIdx, rProbe, rIndexCounts, rProbeCounts)
+      // a proven bound at or below the cap needs no guard pass (a looser
+      // one proves nothing and falls through to the guards)
+      val cand = if (provenVolumeBound.exists(_ <= maxCandidates.toDouble))
+        rawPairs.distinct()
+      else if (broadcastLeft) {
+        // OBSERVE the raw pair stream inside the distinct pass: the
+        // map-side joins feed the distinct's partial aggregate in ONE
+        // scan, the Observation counts the exact volume for free, and
+        // the checkpoint lets the verify reuse the distinct pairs. It
+        // refuses only after the pass, so unless the bound proves the
+        // volume within EdObservedGuardSlack× the cap, the counts-frame
+        // guard (no pair materialized) runs first.
+        if (!provenVolumeBound.exists(
+            _ <= maxCandidates.toDouble * EdObservedGuardSlack)) guard()
+        val obs = new org.apache.spark.sql.Observation()
+        val ckpt = rawPairs.observe(obs, count(lit(1)).as("raw"))
+          .distinct().localCheckpoint(true)
+        val vol = Option(obs.get("raw")).map(_.asInstanceOf[Long]).getOrElse(0L)
+        if (vol > maxCandidates) {
+          org.apache.spark.sql.GraftShims.releaseCheckpoint(ckpt)
+          throw new IllegalArgumentException(
+            refusal(f, maxCandidates, s"= $vol", None))
+        }
+        ckpt
+      } else {
+        guard()
+        rawPairs.distinct()
+      }
+      verified(f.verify, cand.join(hint(texts(lb, "a")), Seq("id_a"))
+        .join(texts(rb, "b"), Seq("id_b")))
+    }
+  }
+
+  /** Runs a join body over key frames. A materialized family's frames are
+    * checkpointed (their construction is the expensive pass, read by guard
+    * and join), then released once the result is materialized, so a
+    * long-lived server's requests do not pin executor storage. */
+  private def withKeys(f: Family, frames: Seq[(DataFrame, DataFrame)])(
+      body: Seq[(DataFrame, DataFrame)] => DataFrame): DataFrame =
+    if (!f.materialized) body(frames)
+    else {
+      val pinned = frames.map { case (idx, probe) =>
+        val i = idx.localCheckpoint()
+        (i, if (f.symmetric) i else probe.localCheckpoint())
+      }
+      try body(pinned).localCheckpoint(true)
+      finally pinned.flatMap { case (i, p) => Seq(i, p) }.distinct
+        .foreach(org.apache.spark.sql.GraftShims.releaseCheckpoint)
+    }
+
+  private def side(keys: DataFrame, s: String): DataFrame =
+    keys.withColumnRenamed("id", s"id_$s").withColumnRenamed("len", s"__l$s")
+
+  private def texts(base: DataFrame, s: String): DataFrame =
+    base.select(col("id").as(s"id_$s"), col("t").as(s"__t$s"))
+
+  private def keyJoin(f: Family, a: DataFrame, b: DataFrame): DataFrame = {
+    val joined = a.join(b, f.keyCols)
+    f.band.fold(joined)(p => joined.filter(p(col("__la"), col("__lb"))))
+  }
+
+  private def verified(v: Verify, pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+        v.value(col("__ta"), col("__tb")).as(v.score))
+      .filter(v.keep(col(v.score)))
+
+  private def keyCounts(keys: Seq[String], frame: DataFrame,
+      alias: String): DataFrame =
+    frame.groupBy(keys.map(col): _*).agg(count(lit(1)).cast("double").as(alias))
+
+  /** Per-key pair volume of two count frames (aliases na, nb). */
+  private def keyPairs(f: Family, na: DataFrame, nb: DataFrame): DataFrame =
+    na.join(nb, f.keyCols)
+      .select(f.keyCols.map(col) :+ (col("na") * col("nb")).as("pairs"): _*)
+
+  /** A self-join's per-key pair volume: c·(c−1)/2 for a symmetric family,
+    * index count × probe count otherwise. */
+  private def selfPairs(f: Family, idx: DataFrame, probe: DataFrame): DataFrame = {
+    val na = keyCounts(f.keyCols, idx, "na")
+    if (f.symmetric)
+      na.select(f.keyCols.map(col) :+ (col("na") * (col("na") - 1) / 2).as("pairs"): _*)
+    else keyPairs(f, na, keyCounts(f.keyCols, probe, "nb"))
+  }
+
+  /** One side's per-key index AND probe counts (<p>ns, <p>np) in ONE
+    * aggregation over the 0/1-tagged union — one exchange, not two; a
+    * key absent from one frame counts 0. A symmetric family counts its
+    * one frame once, as <p>ns. */
+  private def sideCounts(f: Family, idx: DataFrame, probe: DataFrame,
+      p: String): DataFrame =
+    if (f.symmetric) keyCounts(f.keyCols, idx, s"${p}ns")
+    else {
+      val keys = f.keyCols.map(col)
+      idx.select(keys :+ lit(1L).as("__s__"): _*)
+        .unionAll(probe.select(keys :+ lit(0L).as("__s__"): _*))
+        .groupBy(keys: _*)
+        .agg(sum(col("__s__")).cast("double").as(s"${p}ns"),
+          (count(lit(1)) - sum(col("__s__"))).cast("double").as(s"${p}np"))
+    }
+
+  /** Every cross-join direction's volume in ONE action (guide §2.6). The
+    * right counts are the precomputed frames (joined full-outer: a key
+    * may be index-only or probe-only) or one [[sideCounts]]. Only a
+    * refusal pays a second pass, for the direction's worst keys. */
+  private def crossGuard(f: Family, maxCandidates: Long, lIdx: DataFrame,
+      lProbe: DataFrame, rIdx: DataFrame, rProbe: DataFrame,
+      rIndexCounts: Option[DataFrame], rProbeCounts: Option[DataFrame]): Unit = {
+    val rNs = rIndexCounts.getOrElse(keyCounts(f.keyCols, rIdx, "ns"))
+    val rNp = rProbeCounts.getOrElse(keyCounts(f.keyCols, rProbe, "np"))
+    val rCounts =
+      if (rIndexCounts.isEmpty && rProbeCounts.isEmpty)
+        sideCounts(f, rIdx, rProbe, "r")
+      else rNs.withColumnRenamed("ns", "rns")
+        .join(rNp.withColumnRenamed("np", "rnp"), f.keyCols, "full_outer")
+    val dirs = if (f.symmetric) Seq("ns" -> "ns") else Seq("ns" -> "np", "np" -> "ns")
+    val row = sideCounts(f, lIdx, lProbe, "l").join(rCounts, f.keyCols)
+      .select(dirs.map { case (a, b) =>
+        sum(col(s"l$a") * coalesce(col(s"r$b"), lit(0.0))) }: _*).head()
+    dirs.zipWithIndex.foreach { case ((a, b), d) =>
+      if (!row.isNullAt(d) && row.getDouble(d) > maxCandidates.toDouble)
+        refuseOver(f, maxCandidates, keyPairs(f,
+          keyCounts(f.keyCols, if (a == "ns") lIdx else lProbe, "na"),
+          (if (b == "ns") rNs else rNp).withColumnRenamed(b, "nb")))
+    }
+  }
+
+  /** Candidate-volume guard over (keys…, pairs): Σ pairs IS the key
+    * join's output size; refusal names the worst keys by pair volume —
+    * the TF-IDF-guard discipline, fail-don't-degrade. */
+  private def refuseOver(f: Family, maxCandidates: Long, keyed: DataFrame): Unit = {
+    val vol = volume(keyed)
+    if (vol > maxCandidates.toDouble) {
+      val worst = keyed.orderBy(col("pairs").desc).limit(3).collect()
+        .map(r => s"${f.worstKey(r)} -> ${r.getDouble(r.length - 1).toLong}")
+        .mkString("; ")
+      throw new IllegalArgumentException(
+        refusal(f, maxCandidates, f"≈ $vol%.3g", Some(worst)))
+    }
+  }
+
+  private def volume(keyed: DataFrame): Double = {
+    val row = keyed.agg(sum(col("pairs"))).head()
+    if (row.isNullAt(0)) 0.0 else row.getDouble(0)
+  }
+
+  /** An estimated volume names the worst keys; one observed on the pair
+    * stream (a broadcast query batch) names none. */
+  private def refusal(f: Family, maxCandidates: Long, vol: String,
+      worst: Option[String]): String = {
+    val w = f.wording
+    s"${f.op}: ${w.key} candidate volume $vol pairs exceeds " +
+      s"maxCandidates=$maxCandidates — ${w.collide} collide pathologically" +
+      worst.fold(". Shrink the query batch")(k => s" (worst ${w.worst}: $k). ${w.remedy}") +
+      ", dedup boilerplate first, or raise maxCandidates deliberately."
+  }
+
   // ——— Edit-distance (Levenshtein) near-dup ———
 
   /** Exact edit-distance all-pairs baseline: every unordered pair with
     * levenshtein(a, b) ≤ `maxDist`, with the distance. O(n²) pairs ×
     * O(len²) per distance — the ORACLE, guarded like the other exact
-    * baselines; [[editDistancePairsBlocked]] produces the identical
-    * pair set through pigeonhole segment blocking and is the variant
-    * to run at scale. `dist` is long for cross-engine schema parity. */
+    * baselines, and the plan for a `maxDist` above [[EdMaxKeyedDist]];
+    * [[editDistancePairsBlocked]] produces the identical pair set
+    * through pigeonhole segment blocking and is the variant to run at
+    * scale. `dist` is long for cross-engine schema parity. */
   def editDistancePairsExact(df: DataFrame, idCol: String, textCol: String,
-      maxDist: Int, maxRows: Long = 100000L): DataFrame = {
-    require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    val base = df.filter(col(textCol).isNotNull)
-    guardAllPairs(base, "editDistancePairsExact", maxRows,
-      "editDistancePairsBlocked")
-    // the broadcast-nested-loop join STREAMS the left side with its
-    // input partitioning — a small filtered scan is often ONE task, so
-    // the whole O(n²) verify would run single-threaded; spreading the
-    // (guarded, bounded) left side costs one tiny shuffle and buys full
-    // parallelism on the quadratic work
-    val parts = df.sparkSession.sparkContext.defaultParallelism
-    val a = base.select(col(idCol).as("id_a"), col(textCol).as("__ta"))
-      .repartition(parts)
-    val b = base.select(col(idCol).as("id_b"), col(textCol).as("__tb"))
-    a.join(b, col("id_a") < col("id_b"))
-      // ed ≥ |length difference|: free pre-filter, result-identical
-      .filter(abs(length(col("__ta")) - length(col("__tb"))) <= maxDist)
-      .select(col("id_a"), col("id_b"),
-        // thresholded three-arg form: O((2k+1)·n) banded DP with early
-        // exit instead of the full O(n²) table; −1 (= over threshold)
-        // rows are dropped by the same filter, output identical
-        levenshtein(col("__ta"), col("__tb"), maxDist)
-          .cast("long").as("dist"))
-      .filter(col("dist") >= 0L && col("dist") <= maxDist.toLong)
-  }
-
-  /** Segment i (0-based, of maxDist+1) of a length-`l` string starts at
-    * ⌊i·l/(k+1)⌋ — the fixed even-partition scheme BOTH sides of the
-    * blocked join derive boundaries from, for every partner length. */
-  private def segPos(i: Column, l: Column, k: Int): Column =
-    floor(i.cast("double") * l / (k + 1)).cast("int")
+      maxDist: Int, maxRows: Long = 100000L): DataFrame =
+    exactPairs(edVerify(maxDist), "editDistancePairsExact",
+      "editDistancePairsBlocked", df, idCol, textCol, maxRows)
 
   /** Edit-distance near-dup pairs at scale — PassJoin-style pigeonhole
     * segment blocking (Li, Deng, Feng: "PASS-JOIN: A Partition-based
@@ -867,18 +1106,61 @@ object Dedup {
     * (Σ_key ns·np from two bounded aggs), naming the worst keys — the
     * TF-IDF-guard discipline. Zero-length segments (strings shorter
     * than k+1) degrade to length-bucket blocking and stay correct. */
-  /** Shared frames of the PassJoin machinery: the null-filtered
-    * (id, t, len) base, the INDEX-side (id, l, i, g) segments, and the
-    * PROBE-side (id, l, i, g) shifted substrings — see
-    * [[editDistancePairsBlocked]] for the completeness argument. */
-  /** Public aliases of the PassJoin frame builders for callers that
-    * materialize the corpus side once (the streaming gate): */
+  def editDistancePairsBlocked(df: DataFrame, idCol: String, textCol: String,
+      maxDist: Int, maxCandidates: Long = 50000000L): DataFrame =
+    selfJoin(edFamily(maxDist, "editDistancePairsBlocked"), df, idCol,
+      textCol, maxCandidates)
+
+  /** Cross-TABLE edit-distance join (entity resolution / fuzzy-key
+    * join / ingest gate): every (left row, right row) pair with
+    * levenshtein ≤ `maxDist`, same PassJoin machinery as
+    * [[editDistancePairsBlocked]]. The pigeonhole argument indexes the
+    * SHORTER side of a pair, so both directions run — left segments ×
+    * right probes catches |l| ≤ |r|, right segments × left probes the
+    * rest — and the union of candidates dedupes before ONE verify.
+    * Output: (id_a = left id, id_b = right id, dist); a left row
+    * absent from the output has no right match (the gate decision). */
+  def editDistanceJoin(left: DataFrame, leftId: String, leftText: String,
+      right: DataFrame, rightId: String, rightText: String,
+      maxDist: Int, maxCandidates: Long = 50000000L): DataFrame =
+    crossTables(edFamily(maxDist, "editDistanceJoin"), left, leftId,
+      leftText, right, rightId, rightText, maxCandidates)
+
+  /** [[editDistanceJoin]] against PRE-BUILT right-side frames — the
+    * streaming-gate / persisted-artifact shape: `rb` is the right
+    * side's (id, t, len) base, `rSegs`/`rProbes` its segment and probe
+    * frames with the id renamed to `id_b` (exactly what
+    * [[Streams.editDistGateForEachBatch]] materializes ONCE so a
+    * long-running gate never re-derives the corpus per micro-batch).
+    * Per call, only the LEFT side's frames are derived. The serving
+    * options (precomputed right counts, `broadcastLeft`,
+    * `provenVolumeBound`) are the cross join's ([[crossJoin]]). */
+  def editDistanceJoinAgainstFrames(left: DataFrame, leftId: String,
+      leftText: String, rb: DataFrame, rSegs: DataFrame, rProbes: DataFrame,
+      maxDist: Int, maxCandidates: Long = 50000000L,
+      rSegCounts: Option[DataFrame] = None,
+      rProbeCounts: Option[DataFrame] = None,
+      broadcastLeft: Boolean = false,
+      provenVolumeBound: Option[Double] = None): DataFrame = {
+    val f = edFamily(maxDist, "editDistanceJoin")
+    val lb = edBase(left, leftId, leftText)
+    crossJoin(f, lb, rb, f.keys(Seq(lb)).head, (rSegs, rProbes), maxCandidates,
+      rSegCounts, rProbeCounts, broadcastLeft, provenVolumeBound)
+  }
+
+  /** The PassJoin frames for callers that materialize the corpus side
+    * once (the streaming gate, the fuzzy index): the (id, t, len) base,
+    * the (id, l, i, g) segments and probes. */
   def editDistanceBase(df: DataFrame, idCol: String, textCol: String): DataFrame =
     edBase(df, idCol, textCol)
-  def editDistanceSegments(base: DataFrame, maxDist: Int): DataFrame =
+  def editDistanceSegments(base: DataFrame, maxDist: Int): DataFrame = {
+    edFamily(maxDist, "editDistanceSegments")
     edSegs(base, maxDist)
-  def editDistanceProbes(base: DataFrame, maxDist: Int): DataFrame =
+  }
+  def editDistanceProbes(base: DataFrame, maxDist: Int): DataFrame = {
+    edFamily(maxDist, "editDistanceProbes")
     edProbes(base, maxDist)
+  }
 
   /** Driver-side mirrors of one QUERY string's PassJoin keys — the
     * persisted-index lookup path needs them BEFORE any job runs (they
@@ -898,6 +1180,7 @@ object Dedup {
     * l ∈ [len−k, len], each segment index, each ±k shift — the exact
     * key set [[editDistanceProbes]] would emit for this one string. */
   def queryProbeKeys(q: String, k: Int): Seq[(Int, Int, String)] = {
+    edFamily(k, "queryProbeKeys")
     val m = q.length
     (for { dl <- 0 to k; i <- 0 to k; sh <- -k to k } yield {
       val l = m - dl
@@ -911,6 +1194,50 @@ object Dedup {
       }
     }).flatten.distinct
   }
+
+  /** Per-(l, i, g) row counts of a segment/probe frame — the bounded
+    * key-statistics frame the guard consumes. Public so a pipeline (or
+    * the streaming gate) can compute a long-lived side's counts ONCE
+    * instead of re-aggregating it per call. */
+  def editDistanceKeyCounts(frame: DataFrame, alias: String): DataFrame =
+    keyCounts(Seq("l", "i", "g"), frame, alias)
+
+  /** The largest `maxDist` PassJoin keys are built for. Every string
+    * expands into (k+1)²(2k+1) probe variants, plan literals of a frame
+    * and driver work for a query string: 225 at k = 4, 9,537 at k = 16,
+    * ~2.0e9 at k = 1000. Analyzing a blocked self-join's key join took
+    * 0.12 s at k = 4, 0.46 s at k = 8 and 3.2 s at k = 16 (the probes
+    * alone 11.6 s at k = 24) on 4 cores. Past it, the exact baseline. */
+  private[graft] val EdMaxKeyedDist = 16
+
+  /** levenshtein ≤ k with an early-exit threshold; on the exact path
+    * |len diff| ≤ k (ed ≥ length difference) ahead of it. */
+  private def edVerify(k: Int): Verify = {
+    require(k >= 0, s"maxDist must be >= 0, got $k")
+    Verify("dist", edBase, (a, b) => levenshtein(a, b, k).cast("long"),
+      d => d >= 0L && d <= k.toLong,
+      exactFilter = Some((la, lb) => abs(la - lb) <= k))
+  }
+
+  /** PassJoin segments (index) and shifted substrings (probe), keyed
+    * (l, i, g): asymmetric, lazy. Refuses a k past [[EdMaxKeyedDist]]
+    * before any frame or job exists. */
+  private[graft] def edFamily(k: Int, op: String): Family = {
+    val v = edVerify(k)
+    require(k <= EdMaxKeyedDist, s"$op: maxDist=$k is above $EdMaxKeyedDist, " +
+      "the largest PassJoin builds keys for ((k+1)²(2k+1) probe variants a " +
+      "string). Use editDistancePairsExact, the guarded all-pairs baseline.")
+    Family(op, v, Seq("l", "i", "g"), _.map(b => (edSegs(b, k), edProbes(b, k))),
+      symmetric = false, materialized = false, band = None,
+      Wording("segment-key", "segment contents", "keys", "Shrink the corpus slice"),
+      r => s"(l=${r.get(0)}, i=${r.get(1)}, '${String.valueOf(r.get(2)).take(30)}')")
+  }
+
+  /** Segment i (0-based, of maxDist+1) of a length-`l` string starts at
+    * ⌊i·l/(k+1)⌋ — the fixed even-partition scheme BOTH sides of the
+    * blocked join derive boundaries from, for every partner length. */
+  private def segPos(i: Column, l: Column, k: Int): Column =
+    floor(i.cast("double") * l / (k + 1)).cast("int")
 
   private def edBase(df: DataFrame, idCol: String, textCol: String) =
     df.filter(col(textCol).isNotNull)
@@ -943,252 +1270,6 @@ object Dedup {
       .distinct() // shifts often extract the same substring
   }
 
-  /** Per-(l, i, g) row counts of a segment/probe frame — the bounded
-    * key-statistics frame the guard consumes. Public so a pipeline (or
-    * the streaming gate) can compute a long-lived side's counts ONCE
-    * instead of re-aggregating it per call. */
-  def editDistanceKeyCounts(frame: DataFrame, alias: String): DataFrame =
-    frame.groupBy("l", "i", "g").agg(count(lit(1)).cast("double").as(alias))
-
-  /** Candidate-volume guard for a segment-key equi-join: Σ_key ns·np IS
-    * the join's output size; refusal names the worst keys by their PAIR
-    * volume — the TF-IDF-guard discipline. Takes pre-aggregated count
-    * frames (aliases ns / np) so a precomputed side costs nothing. */
-  /** How loose a persisted volume bound may be before the broadcast-left
-    * join's exact Observation guard must be preceded by the cheap
-    * counts-frame pre-guard: a bound within this multiple of
-    * `maxCandidates` caps the materialization a worst-case refusal can
-    * have already paid, so the single-scan plan stays safe; anything
-    * looser (or no bound at all) refuses map-side BEFORE the pair
-    * shuffle runs. */
-  private[graft] val EdObservedGuardSlack = 4.0
-
-  private def edGuard(segCounts: DataFrame, probeCounts: DataFrame,
-      op: String, maxCandidates: Long): Unit = {
-    val keyed = segCounts.join(probeCounts, Seq("l", "i", "g"))
-      .select(col("l"), col("i"), col("g"),
-        (col("ns") * col("np")).as("pairs"))
-    val row = keyed.agg(sum(col("pairs"))).head()
-    val vol = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-    if (vol > maxCandidates.toDouble) {
-      val worst = keyed.orderBy(col("pairs").desc).limit(3).collect()
-        .map(r => s"(l=${r.get(0)}, i=${r.get(1)}, " +
-          s"'${String.valueOf(r.get(2)).take(30)}') -> " +
-          s"${r.getDouble(3).toLong}")
-        .mkString("; ")
-      throw new IllegalArgumentException(
-        f"$op: segment-key candidate volume ≈ $vol%.3g pairs exceeds " +
-          s"maxCandidates=$maxCandidates — segment contents collide " +
-          s"pathologically (worst keys: $worst). Shrink the corpus " +
-          "slice, dedup boilerplate first, or raise maxCandidates " +
-          "deliberately.")
-    }
-  }
-
-  /** Per-key segment AND probe counts of one side in a SINGLE
-    * aggregation: the two frames union with a 0/1 tag and one
-    * groupBy(l, i, g) emits both counts — one exchange where
-    * [[editDistanceKeyCounts]] twice cost two. A key absent from one
-    * frame carries an explicit 0 (never null). */
-  private def edPairCounts(segs: DataFrame, probes: DataFrame,
-      nsAlias: String, npAlias: String): DataFrame =
-    segs.select(col("l"), col("i"), col("g"), lit(1L).as("__s__"))
-      .unionAll(probes.select(col("l"), col("i"), col("g"),
-        lit(0L).as("__s__")))
-      .groupBy("l", "i", "g")
-      .agg(sum(col("__s__")).cast("double").as(nsAlias),
-        (count(lit(1)) - sum(col("__s__"))).cast("double").as(npAlias))
-
-  /** BOTH cross-table guard directions (left segs × right probes, right
-    * segs × left probes) in ONE action — the r20 gate ran four count
-    * aggregations and two join+sum jobs per call (guide §2.6: fold the
-    * per-round checks into one action). The left side's counts come
-    * from [[edPairCounts]] (one exchange instead of two); `rCounts`
-    * carries (l, i, g, rns, rnp) with nulls where a key is
-    * segment-only / probe-only. On refusal the matching per-direction
-    * [[edGuard]] re-runs so the refusal MESSAGE (worst keys included)
-    * is byte-identical to the old path — only the exceptional path
-    * pays the extra pass. */
-  private def edGuardBoth(lSegs: DataFrame, lProbes: DataFrame,
-      rCounts: DataFrame, rnsForMsg: => DataFrame, rnpForMsg: => DataFrame,
-      op: String, maxCandidates: Long): Unit = {
-    val lCounts = edPairCounts(lSegs, lProbes, "lns", "lnp")
-    val row = lCounts.join(rCounts, Seq("l", "i", "g"))
-      .agg(
-        sum(col("lns") * coalesce(col("rnp"), lit(0.0))).as("v1"),
-        sum(col("lnp") * coalesce(col("rns"), lit(0.0))).as("v2")).head()
-    def volOf(i: Int) = if (row.isNullAt(i)) 0.0 else row.getDouble(i)
-    if (volOf(0) > maxCandidates.toDouble)
-      edGuard(editDistanceKeyCounts(lSegs, "ns"), rnpForMsg,
-        op, maxCandidates)
-    if (volOf(1) > maxCandidates.toDouble)
-      edGuard(rnsForMsg, editDistanceKeyCounts(lProbes, "np"),
-        op, maxCandidates)
-  }
-
-  def editDistancePairsBlocked(df: DataFrame, idCol: String, textCol: String,
-      maxDist: Int, maxCandidates: Long = 50000000L): DataFrame = {
-    require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    require(maxCandidates >= 1, "maxCandidates must be >= 1")
-    val k = maxDist
-    val base = edBase(df, idCol, textCol)
-    val segs = edSegs(base, k).withColumnRenamed("id", "id_a")
-    val probes = edProbes(base, k).withColumnRenamed("id", "id_b")
-    edGuard(editDistanceKeyCounts(segs, "ns"),
-      editDistanceKeyCounts(probes, "np"),
-      "editDistancePairsBlocked", maxCandidates)
-    val cand = segs.join(probes, Seq("l", "i", "g"))
-      .filter(col("id_a") =!= col("id_b"))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .distinct()
-    val ta = base.select(col("id").as("id_a"), col("t").as("__ta"))
-    val tb = base.select(col("id").as("id_b"), col("t").as("__tb"))
-    cand.join(ta, Seq("id_a")).join(tb, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        levenshtein(col("__ta"), col("__tb"), k).cast("long").as("dist"))
-      .filter(col("dist") >= 0L && col("dist") <= k.toLong)
-  }
-
-  /** Cross-TABLE edit-distance join (entity resolution / fuzzy-key
-    * join / ingest gate): every (left row, right row) pair with
-    * levenshtein ≤ `maxDist`, same PassJoin machinery as
-    * [[editDistancePairsBlocked]]. The pigeonhole argument indexes the
-    * SHORTER side of a pair, so both directions run — left segments ×
-    * right probes catches |l| ≤ |r|, right segments × left probes the
-    * rest — and the union of candidates dedupes before ONE verify.
-    * Output: (id_a = left id, id_b = right id, dist); a left row
-    * absent from the output has no right match (the gate decision). */
-  def editDistanceJoin(left: DataFrame, leftId: String, leftText: String,
-      right: DataFrame, rightId: String, rightText: String,
-      maxDist: Int, maxCandidates: Long = 50000000L): DataFrame = {
-    require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    require(maxCandidates >= 1, "maxCandidates must be >= 1")
-    val rb = edBase(right, rightId, rightText)
-    editDistanceJoinAgainstFrames(left, leftId, leftText, rb,
-      edSegs(rb, maxDist).withColumnRenamed("id", "id_b"),
-      edProbes(rb, maxDist).withColumnRenamed("id", "id_b"),
-      maxDist, maxCandidates)
-  }
-
-  /** [[editDistanceJoin]] against PRE-BUILT right-side frames — the
-    * streaming-gate / persisted-artifact shape: `rb` is the right
-    * side's (id, t, len) base, `rSegs`/`rProbes` its segment and probe
-    * frames with the id renamed to `id_b` (exactly what
-    * [[Streams.editDistGateForEachBatch]] materializes ONCE so a
-    * long-running gate never re-derives the corpus per micro-batch).
-    * Per call, only the LEFT side's frames are derived. */
-  def editDistanceJoinAgainstFrames(left: DataFrame, leftId: String,
-      leftText: String, rb: DataFrame, rSegs: DataFrame, rProbes: DataFrame,
-      maxDist: Int, maxCandidates: Long = 50000000L,
-      rSegCounts: Option[DataFrame] = None,
-      rProbeCounts: Option[DataFrame] = None,
-      broadcastLeft: Boolean = false,
-      provenVolumeBound: Option[Double] = None): DataFrame = {
-    require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    require(maxCandidates >= 1, "maxCandidates must be >= 1")
-    val k = maxDist
-    val lb = edBase(left, leftId, leftText)
-    // `broadcastLeft` flips the candidate joins from shuffling the
-    // CORPUS-side key frames (rProbes is ~(k+1)²(2k+1) rows per stored
-    // doc — hundreds of millions at the 10M tier, and its shuffle+sort
-    // dominated the batch join end to end) to map-side hash joins
-    // streaming those frames once, with the left key frames broadcast.
-    // Only the caller knows the left side is small enough (the serving
-    // batch shape); the dedup-scale symmetric path keeps the shuffle.
-    def hint(df: DataFrame): DataFrame =
-      if (broadcastLeft) broadcast(df) else df
-    val lSegs = hint(edSegs(lb, k).withColumnRenamed("id", "id_a"))
-    val lProbes = hint(edProbes(lb, k).withColumnRenamed("id", "id_a"))
-    // right-side counts for the one-action combined guard: precomputed
-    // count frames join full-outer (a key may be segment-only or
-    // probe-only — either direction still needs it); when neither is
-    // precomputed (the ad-hoc gate shape), ONE union-tagged aggregation
-    // over the raw frames replaces the two separate count aggs
-    lazy val rCountsBoth: DataFrame =
-      if (rSegCounts.isEmpty && rProbeCounts.isEmpty)
-        edPairCounts(rSegs, rProbes, "rns", "rnp")
-      else rSegCounts.getOrElse(editDistanceKeyCounts(rSegs, "ns"))
-        .withColumnRenamed("ns", "rns")
-        .join(rProbeCounts.getOrElse(editDistanceKeyCounts(rProbes, "np"))
-            .withColumnRenamed("np", "rnp"),
-          Seq("l", "i", "g"), "full_outer")
-    val rawPairs = lSegs.join(rProbes, Seq("l", "i", "g"))
-      .select("id_a", "id_b")
-      .union(lProbes.join(rSegs, Seq("l", "i", "g")).select("id_a", "id_b"))
-    val cand = if (provenVolumeBound.exists(_ <= maxCandidates.toDouble)) {
-      // the caller PROVED the volume safe from persisted per-key
-      // frequency bounds (maxNs·|left probes| + maxNp·|left segs|, all
-      // driver-side factors) — no guard pass at all; the join reads
-      // the corpus frames exactly once. A bound ABOVE the cap proves
-      // nothing (it is loose), so that case falls through to the exact
-      // guards below rather than throwing.
-      rawPairs.distinct()
-    } else if (broadcastLeft) {
-      // guard by OBSERVING the raw (pre-distinct) pair stream inside
-      // the distinct pass itself: under the broadcast hint the
-      // candidate joins are map-side, so the distinct's partial
-      // aggregate consumes the raw stream in ONE pruned artifact scan
-      // — the Observation counts it for free (the exact Σ ns·np the
-      // counts-frame guard estimates, without touching the corpus
-      // counts artifact), and the localCheckpoint lets the verify join
-      // below REUSE the distinct pairs instead of re-reading the
-      // frames (previously: one scan for a count-only guard pass, a
-      // second for the real join). The raw volume is known only after
-      // the pass completes, but the distinct is spill-safe (partial
-      // aggregation collapses duplicates map-side, the shuffle carries
-      // distinct pairs only) and the guard still refuses before any
-      // verify work runs.
-      //
-      // The Observation alone, though, refuses only AFTER a
-      // pathological volume has been shuffled and materialized — so
-      // unless the persisted frequency bound proves the raw volume
-      // sits within [[EdObservedGuardSlack]]× the cap, the cheap
-      // counts-frame pre-guard (map-side Σ ns·np over the key COUNTS,
-      // zero pair materialization) runs first and refuses before any
-      // pair work starts. The pre-guard's second (counts-artifact)
-      // scan is the price of cluster protection in the unproven case;
-      // the proven-near-cap case keeps the single-scan plan.
-      val provenNearCap = provenVolumeBound.exists(
-        _ <= maxCandidates.toDouble * EdObservedGuardSlack)
-      if (!provenNearCap) {
-        edGuardBoth(lSegs, lProbes, rCountsBoth,
-          rSegCounts.getOrElse(editDistanceKeyCounts(rSegs, "ns")),
-          rProbeCounts.getOrElse(editDistanceKeyCounts(rProbes, "np")),
-          "editDistanceJoin", maxCandidates)
-      }
-      val obs = new org.apache.spark.sql.Observation()
-      val ckpt = rawPairs.observe(obs, count(lit(1)).as("raw"))
-        .distinct().localCheckpoint(true)
-      val vol = Option(obs.get("raw")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (vol > maxCandidates) {
-        org.apache.spark.sql.GraftShims.releaseCheckpoint(ckpt)
-        throw new IllegalArgumentException(
-          s"editDistanceJoin: segment-key candidate volume = $vol " +
-            s"pairs exceeds maxCandidates=$maxCandidates — segment " +
-            "contents collide pathologically. Shrink the query batch, " +
-            "dedup boilerplate first, or raise maxCandidates " +
-            "deliberately.")
-      }
-      ckpt
-    } else {
-      // symmetric/dedup shape: precomputed right-side counts (the gate
-      // checkpoints them once) make the per-call guard cost scale with
-      // the LEFT side only; both directions check in ONE action
-      edGuardBoth(lSegs, lProbes, rCountsBoth,
-        rSegCounts.getOrElse(editDistanceKeyCounts(rSegs, "ns")),
-        rProbeCounts.getOrElse(editDistanceKeyCounts(rProbes, "np")),
-        "editDistanceJoin", maxCandidates)
-      rawPairs.distinct()
-    }
-    val ta = hint(lb.select(col("id").as("id_a"), col("t").as("__ta")))
-    val tb = rb.select(col("id").as("id_b"), col("t").as("__tb"))
-    cand.join(ta, Seq("id_a")).join(tb, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        levenshtein(col("__ta"), col("__tb"), k).cast("long").as("dist"))
-      .filter(col("dist") >= 0L && col("dist") <= k.toLong)
-  }
-
   // ——— Jaro-Winkler near-dup ———
 
   /** Exact Jaro-Winkler all-pairs baseline: every unordered pair with
@@ -1199,27 +1280,126 @@ object Dedup {
     * see the regime note on [[jaroWinklerPairsBlocked]], which
     * produces the identical pair set through sound blocking). */
   def jaroWinklerPairsExact(df: DataFrame, idCol: String, textCol: String,
-      minSim: Double, maxRows: Long = 100000L): DataFrame = {
+      minSim: Double, maxRows: Long = 100000L): DataFrame =
+    exactPairs(jwVerify(minSim), "jaroWinklerPairsExact",
+      "jaroWinklerPairsBlocked", df, idCol, textCol, maxRows)
+
+  /** Jaro-Winkler near-dup pairs through sound length-band +
+    * positional-character PREFIX-FILTER blocking, identical output to
+    * [[jaroWinklerPairsExact]].
+    *
+    * WHEN TO USE WHICH (measured both ways): blocking's candidate
+    * volume is Θ(Σ_e c_e²) over element frequencies, so it wins iff the
+    * alphabet offers many more tail symbols than 2p² (p the prefix
+    * length). At 1M CJK-style Zipfian names ([[graft.JwSoak]],
+    * jw_soak_1m.json) candidates were 0.41% of n²/2 with recall 1.0, and
+    * blocked ran 11.7× faster than exact on a 40k slice. On a SMALL
+    * uniform alphabet (lowercase prose) Σ c_e² can exceed n²/2: the
+    * guard refuses, and [[jaroWinklerPairsExact]] (a shuffle-free
+    * broadcast nested loop, sub-microsecond per short pair) is the plan.
+    * Character granularity is the SHARPEST SOUND invariant Jaro admits
+    * (matches reorder within half-length windows, so q-grams do not
+    * survive); beyond both regimes use an edit-distance threshold
+    * ([[editDistancePairsBlocked]]) or a deliberately unsound blocker.
+    *
+    * The soundness chain for jw ≥ t > 0.8:
+    *
+    *  1. Jaro floor. jw = J + 0.1·p·(1−J) with prefix p ≤ 4, applied
+    *     only when J > 0.7 ⇒ jw ≤ 0.6·J + 0.4; with no boost jw = J.
+    *     Either way jw ≥ t ⇒ J ≥ j0 = (t − 0.4)/0.6.
+    *  2. Length band. With m ≤ min(|a|,|b|) matches and |a| ≤ |b|,
+    *     J ≤ (1 + |a|/|b| + 1)/3 ⇒ min ≥ β·max, β = 3·j0 − 2 (> 0 for
+    *     t > 0.8 — below that the band is vacuous, hence the floor on
+    *     `minSim`).
+    *  3. Match floor. J ≤ (m/|a| + m/|b| + 1)/3 ⇒
+    *     m ≥ (3j0 − 1)·|a||b|/(|a|+|b|); minimized over partner lengths
+    *     in the band (the product term is increasing, so the infimum
+    *     sits at |b| = β·|a|): o(s) = ⌈(3j0 − 1)·β/(1+β)·s⌉ ≥ 1.
+    *  4. Every Jaro match pairs EQUAL characters one-to-one, so the
+    *     multiset character overlap of the two strings is ≥ m ≥ the
+    *     pair's o bound. Prefix filtering over the rank-sorted
+    *     (char, occurrence#) element multisets (Chaudhuri/Ganti/Kaushik
+    *     ICDE 2006; Bayardo/Ma/Srikant WWW 2007): overlap ≥ o implies
+    *     the first len − o + 1 sorted elements of BOTH strings share an
+    *     element — per-record o(s) bounds only lengthen the prefixes,
+    *     preserving the guarantee. Every true pair collides on a
+    *     blocking key.
+    *
+    * The global element order is CORPUS-FREQUENCY ASCENDING
+    * ([[jwRankMap]]) — prefixes hold each string's RAREST characters, so
+    * blocking keys collide orders of magnitude less than under
+    * code-point order, where every prefix fills with the commonest
+    * characters.
+    *
+    * Scale shape: the shuffle carries (id, len, element) rows — single
+    * characters, not documents; candidates come only from element
+    * collisions inside the length band; one jaro_winkler per DISTINCT
+    * candidate. A corpus that defeats it (long uniform-alphabet strings)
+    * is REFUSED via the Σ c·(c−1)/2 estimate naming the worst elements.
+    * Matching is per UTF-16 code unit, so like the expression itself
+    * the guarantee is stated for BMP text. */
+  def jaroWinklerPairsBlocked(df: DataFrame, idCol: String, textCol: String,
+      minSim: Double, maxCandidates: Long = 50000000L): DataFrame =
+    selfJoin(jwFamily(minSim, "jaroWinklerPairsBlocked"), df, idCol,
+      textCol, maxCandidates)
+
+  /** Cross-TABLE Jaro-Winkler join (entity resolution / fuzzy-name
+    * join / ingest gate): every (left row, right row) pair with
+    * jaro_winkler ≥ `minSim`, same blocking machinery and soundness
+    * chain as [[jaroWinklerPairsBlocked]] — ONE frequency order is
+    * computed over the UNION alphabet so both prefix frames sort
+    * identically (the prefix-filter guarantee needs a shared total
+    * order). Output: (id_a = left id, id_b = right id, jw); a left row
+    * absent from the output has no right match (the gate decision). */
+  def jaroWinklerJoin(left: DataFrame, leftId: String, leftText: String,
+      right: DataFrame, rightId: String, rightText: String,
+      minSim: Double, maxCandidates: Long = 50000000L): DataFrame =
+    crossTables(jwFamily(minSim, "jaroWinklerJoin"), left, leftId, leftText,
+      right, rightId, rightText, maxCandidates)
+
+  /** The blocking-candidate volume estimate Σ_e c·(c−1)/2 that
+    * [[jaroWinklerPairsBlocked]]'s guard consults, exposed so an
+    * operator (or a soak) can MEASURE the regime before committing:
+    * compare it against n·(n−1)/2 — blocking only beats the guarded
+    * exact nested loop when this comes out well below the quadratic.
+    * One element-construction pass + one bounded agg. */
+  def jaroWinklerCandidateVolume(df: DataFrame, idCol: String,
+      textCol: String, minSim: Double): Double = {
+    val f = jwFamily(minSim, "jaroWinklerCandidateVolume")
+    val Seq((block, _)) = f.keys(Seq(f.verify.base(df, idCol, textCol)))
+    volume(selfPairs(f, block, block))
+  }
+
+  /** The Jaro-Winkler verify: jaro_winkler_min skips the match loops of
+    * a pair whose lengths alone bound it below `minSim`, and returns the
+    * exact similarity of every pair it keeps. */
+  private def jwVerify(minSim: Double): Verify = {
     require(minSim > 0.0 && minSim <= 1.0,
       s"minSim must be in (0, 1], got $minSim")
-    val base = df.filter(col(textCol).isNotNull)
-    guardAllPairs(base, "jaroWinklerPairsExact", maxRows,
-      "jaroWinklerPairsBlocked")
-    // spread the streamed side of the nested-loop join — see
-    // [[editDistancePairsExact]]: without it the O(n²) verify runs in
-    // as few tasks as the filtered scan produced
-    val parts = df.sparkSession.sparkContext.defaultParallelism
-    val a = base.select(col(idCol).as("id_a"), col(textCol).as("__ta"))
-      .repartition(parts)
-    val b = base.select(col(idCol).as("id_b"), col(textCol).as("__tb"))
-    // jaro_winkler_min: pairs whose lengths alone bound the similarity
-    // below minSim skip the match loops inside the kernel (the exact
-    // path has no upstream length band — the blocked variants do)
-    a.join(b, col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.functions.jaro_winkler_min(
-          col("__ta"), col("__tb"), minSim).as("jw"))
-      .filter(col("jw") >= minSim)
+    Verify("jw", jwBase,
+      (a, b) => graft.functions.functions.jaro_winkler_min(a, b, minSim),
+      _ >= minSim)
+  }
+
+  /** The Jaro-Winkler family: one (id, len, element) prefix frame per
+    * side, its index and probe frames alike (symmetric), ranked by ONE
+    * order over every side's alphabet and checkpointed (materialized);
+    * candidates inside the length band. */
+  private def jwFamily(minSim: Double, op: String): Family = {
+    val (beta, coef) = jwBounds(minSim, op)
+    Family(op, jwVerify(minSim), Seq("e"), sides => {
+        val ranks = jwRankMap(sides)
+        // only the corpus side (the last) spreads: a query batch's
+        // exchange costs more than its element pass (see jwPrefixFrame)
+        sides.zipWithIndex.map { case (b, i) =>
+          val block = jwPrefixFrame(b, coef, ranks, spread = i == sides.size - 1)
+          (block, block)
+        }
+      }, symmetric = true, materialized = true,
+      // the length band as a REAL inequality — no rounding slack
+      band = Some((la, lb) => least(la, lb).cast("double") >= lit(beta) * greatest(la, lb)),
+      Wording("blocking-element", "prefix characters", "elements", "Raise minSim"),
+      r => s"'${r.getStruct(0).getString(1)}'#${r.getStruct(0).getInt(2)}")
   }
 
   /** The Jaro floor implied by jw ≥ t: boost adds at most 0.4·(1−J)
@@ -1243,9 +1423,6 @@ object Dedup {
       .select(col(idCol).as("id"), col(textCol).as("t"),
         length(col(textCol)).as("len"))
 
-  private def jwChars: Column =
-    transform(sequence(lit(1), col("len")), i => col("t").substr(i, lit(1)))
-
   /** Rarest-first global character rank over the union alphabet of
     * `frames` — one bounded alphabet-sized aggregate, ties by char.
     * Every side of a blocking join MUST use the SAME order (any fixed
@@ -1255,7 +1432,8 @@ object Dedup {
     * the char itself breaks the tie). */
   private def jwRankMap(frames: Seq[DataFrame]): Map[String, Int] = {
     val alphabetCap = 65536
-    val freqRows = frames.map(_.select(explode(jwChars).as("c")))
+    val freqRows = frames.map(_.select(explode(transform(sequence(lit(1),
+        col("len")), i => col("t").substr(i, lit(1)))).as("c")))
       .reduce(_ unionAll _)
       .groupBy("c").agg(count(lit(1)).as("f"))
       .limit(alphabetCap + 1).collect()
@@ -1309,208 +1487,6 @@ object Dedup {
     // replans (the round-20 bench gate flagged exactly that)
     (if (spread) graft.core.Par.spread(base) else base)
       .select(col("id"), col("len"), explode(elems(col("t"))).as("e"))
-  }
-
-  /** Candidate-volume guard for a blocking-element equi-join: Σ_e na·nb
-    * (or Σ_e c·(c−1)/2 when both sides are the same frame) IS the
-    * join's worst-case output; refusal names the heaviest elements —
-    * the TF-IDF-guard discipline, fail-don't-degrade. */
-  private def jwGuard(blockA: DataFrame, blockB: Option[DataFrame],
-      op: String, maxCandidates: Long): Unit = {
-    val na = blockA.groupBy("e").agg(count(lit(1)).cast("double").as("na"))
-    val keyed = blockB match {
-      case Some(b) =>
-        val nb = b.groupBy("e").agg(count(lit(1)).cast("double").as("nb"))
-        na.join(nb, Seq("e")).select(col("e"),
-          (col("na") * col("nb")).as("pairs"))
-      case None =>
-        na.select(col("e"), (col("na") * (col("na") - 1) / 2).as("pairs"))
-    }
-    val volRow = keyed.agg(sum(col("pairs"))).head()
-    val vol = if (volRow.isNullAt(0)) 0.0 else volRow.getDouble(0)
-    if (vol > maxCandidates.toDouble) {
-      val worst = keyed.orderBy(col("pairs").desc).limit(3).collect()
-        .map(r => s"'${r.getStruct(0).getString(1)}'#${r.getStruct(0).getInt(2)}" +
-          s" -> ${r.getDouble(1).toLong}")
-        .mkString("; ")
-      throw new IllegalArgumentException(
-        f"$op: blocking-element candidate volume ≈ $vol%.3g pairs " +
-          s"exceeds maxCandidates=$maxCandidates — prefix characters " +
-          s"collide pathologically (worst elements: $worst). Raise " +
-          "minSim, dedup boilerplate first, or raise maxCandidates " +
-          "deliberately.")
-    }
-  }
-
-  /** Jaro-Winkler near-dup pairs through sound length-band +
-    * positional-character PREFIX-FILTER blocking, identical output to
-    * [[jaroWinklerPairsExact]].
-    *
-    * WHEN TO USE WHICH (measured both ways, not assumed): blocking's
-    * candidate volume is Θ(Σ_e c_e²) over element frequencies; with
-    * prefix length p its even-spread floor is ≈ (p·n)²/E over E
-    * effective elements, so it wins iff the alphabet offers E ≫ 2p²
-    * tail symbols. MEASURED at 1M rows on CJK-style Zipfian names
-    * ([[graft.JwSoak]], jw_soak_1m.json): candidate volume 0.41% of
-    * n²/2 (242× reduction), recall exactly 1.0 vs evaluated truth,
-    * blocked == exact on a 40k slice with blocked already 11.7×
-    * faster — at 1M the exact loop extrapolates to days, blocking to
-    * minutes. Conversely, on a SMALL uniform alphabet (plain lowercase
-    * prose, E ~ 10²) at moderate n, Σ c_e² can exceed n²/2 — the
-    * guard refuses (measured: a 30k syllable-name probe), and the
-    * right plan is [[jaroWinklerPairsExact]]: a shuffle-free broadcast
-    * nested loop whose per-pair JW is sub-microsecond on short strings
-    * (compute-bound and embarrassingly parallel up to ~10⁵ rows). Past
-    * both regimes, character-granularity blocking is the SHARPEST SOUND
-    * invariant Jaro admits (matches reorder freely within half-length
-    * windows, so q-grams/segments do not survive); corpora beyond it
-    * need an edit-distance threshold ([[editDistancePairsBlocked]],
-    * whose PassJoin segment keys are sharp) or an unsound phonetic/
-    * q-gram blocker chosen deliberately.
-    *
-    * The soundness chain for jw ≥ t > 0.8:
-    *
-    *  1. Jaro floor. jw = J + 0.1·p·(1−J) with prefix p ≤ 4, applied
-    *     only when J > 0.7 ⇒ jw ≤ 0.6·J + 0.4; with no boost jw = J.
-    *     Either way jw ≥ t ⇒ J ≥ j0 = (t − 0.4)/0.6.
-    *  2. Length band. With m ≤ min(|a|,|b|) matches and |a| ≤ |b|,
-    *     J ≤ (1 + |a|/|b| + 1)/3 ⇒ min ≥ β·max, β = 3·j0 − 2 (> 0 for
-    *     t > 0.8 — below that the band is vacuous, hence the floor on
-    *     `minSim`).
-    *  3. Match floor. J ≤ (m/|a| + m/|b| + 1)/3 ⇒
-    *     m ≥ (3j0 − 1)·|a||b|/(|a|+|b|); minimized over partner lengths
-    *     in the band (the product term is increasing, so the infimum
-    *     sits at |b| = β·|a|): o(s) = ⌈(3j0 − 1)·β/(1+β)·s⌉ ≥ 1.
-    *  4. Every Jaro match pairs EQUAL characters one-to-one, so the
-    *     multiset character overlap of the two strings is ≥ m ≥ the
-    *     pair's o bound. Prefix filtering over the rank-sorted
-    *     (char, occurrence#) element multisets (Chaudhuri/Ganti/Kaushik
-    *     ICDE 2006; Bayardo/Ma/Srikant WWW 2007): overlap ≥ o implies
-    *     the first len − o + 1 sorted elements of BOTH strings share an
-    *     element — per-record o(s) bounds only lengthen the prefixes,
-    *     preserving the guarantee. Every true pair collides on a
-    *     blocking key.
-    *
-    * The global element order is CORPUS-FREQUENCY ASCENDING
-    * ([[jwRankMap]]) — prefixes hold each string's RAREST characters, so
-    * blocking keys collide orders of magnitude less than under
-    * code-point order, where every prefix fills with the commonest
-    * characters.
-    *
-    * Scale shape: the shuffle carries (id, len, element) rows — single
-    * characters, not documents; candidates come only from exact
-    * element collisions inside the length band; the quadratic work is
-    * one jaro_winkler per surviving DISTINCT candidate. Character-
-    * granularity blocking is selective on skewed alphabets and high
-    * thresholds (the record-linkage name-matching shape); a corpus
-    * that defeats it (long uniform-alphabet strings, where even rare
-    * elements appear in a constant fraction of rows) is REFUSED via
-    * the Σ c·(c−1)/2 candidate estimate naming the worst elements —
-    * the TF-IDF-guard discipline, fail-don't-degrade. Character
-    * comparison is by code point: on non-BMP text (UTF-16 surrogates)
-    * the match floor is conservative-in-the-wrong-direction, so like
-    * the expression itself the guarantee is stated for BMP text. */
-  /** The blocking-candidate volume estimate Σ_e c·(c−1)/2 that
-    * [[jaroWinklerPairsBlocked]]'s guard consults, exposed so an
-    * operator (or a soak) can MEASURE the regime before committing:
-    * compare it against n·(n−1)/2 — blocking only beats the guarded
-    * exact nested loop when this comes out well below the quadratic.
-    * One element-construction pass + one bounded agg. */
-  def jaroWinklerCandidateVolume(df: DataFrame, idCol: String,
-      textCol: String, minSim: Double): Double = {
-    val (_, coef) = jwBounds(minSim, "jaroWinklerCandidateVolume")
-    val base = jwBase(df, idCol, textCol)
-    val block = jwPrefixFrame(base, coef, jwRankMap(Seq(base)))
-    val row = block.groupBy("e").agg(count(lit(1)).cast("double").as("na"))
-      .agg(sum(col("na") * (col("na") - 1) / 2)).head()
-    if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-  }
-
-  def jaroWinklerPairsBlocked(df: DataFrame, idCol: String, textCol: String,
-      minSim: Double, maxCandidates: Long = 50000000L): DataFrame = {
-    require(maxCandidates >= 1, "maxCandidates must be >= 1")
-    val (beta, coef) = jwBounds(minSim, "jaroWinklerPairsBlocked")
-    val base = jwBase(df, idCol, textCol)
-    // localCheckpoint: the element construction (one per-row sort in
-    // jwPrefixFrame) is the expensive pass and the frame is read THREE
-    // times (guard + both self-join sides); the slim (id, len, element)
-    // rows materialize it once — the minhash `banded` discipline
-    val block = jwPrefixFrame(base, coef, jwRankMap(Seq(base)))
-      .localCheckpoint()
-    // the blocking frame's checkpoint blocks are RELEASED before
-    // returning (result materialized first): in a long-lived server,
-    // per-request checkpoints would otherwise pin executor storage until
-    // an eventual GC. The returned frame is the (threshold-filtered,
-    // small) RESULT's own checkpoint — freed by the ContextCleaner when
-    // the caller's reference dies.
-    try {
-      jwGuard(block, None, "jaroWinklerPairsBlocked", maxCandidates)
-      val x = block.select(col("id").as("id_a"), col("len").as("__la"), col("e"))
-      val y = block.select(col("id").as("id_b"), col("len").as("__lb"), col("e"))
-      val cand = x.join(y, Seq("e"))
-        .filter(col("id_a") < col("id_b") &&
-          // the length band as a REAL inequality — no rounding slack
-          least(col("__la"), col("__lb")).cast("double") >=
-            lit(beta) * greatest(col("__la"), col("__lb")))
-        .select("id_a", "id_b").distinct()
-      val ta = base.select(col("id").as("id_a"), col("t").as("__ta"))
-      val tb = base.select(col("id").as("id_b"), col("t").as("__tb"))
-      cand.join(ta, Seq("id_a")).join(tb, Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          graft.functions.functions.jaro_winkler(col("__ta"), col("__tb"))
-            .as("jw"))
-        .filter(col("jw") >= minSim)
-        .localCheckpoint(true)
-    } finally org.apache.spark.sql.GraftShims.releaseCheckpoint(block)
-  }
-
-  /** Cross-TABLE Jaro-Winkler join (entity resolution / fuzzy-name
-    * join / ingest gate): every (left row, right row) pair with
-    * jaro_winkler ≥ `minSim`, same blocking machinery and soundness
-    * chain as [[jaroWinklerPairsBlocked]] — ONE frequency order is
-    * computed over the UNION alphabet so both prefix frames sort
-    * identically (the prefix-filter guarantee needs a shared total
-    * order). Output: (id_a = left id, id_b = right id, jw); a left row
-    * absent from the output has no right match (the gate decision). */
-  def jaroWinklerJoin(left: DataFrame, leftId: String, leftText: String,
-      right: DataFrame, rightId: String, rightText: String,
-      minSim: Double, maxCandidates: Long = 50000000L): DataFrame = {
-    require(maxCandidates >= 1, "maxCandidates must be >= 1")
-    val (beta, coef) = jwBounds(minSim, "jaroWinklerJoin")
-    val lb = jwBase(left, leftId, leftText)
-    val rb = jwBase(right, rightId, rightText)
-    val rank = jwRankMap(Seq(lb, rb))
-    // each side's element construction runs ONCE (read by the guard and
-    // the join) — see the pairs variant for the checkpoint rationale
-    // the left (arrivals/query) side is serving-batch-shaped: spreading
-    // it costs more than its element pass (see jwPrefixFrame)
-    val lBlock = jwPrefixFrame(lb, coef, rank, spread = false)
-      .select(col("id").as("id_a"), col("len").as("__la"), col("e"))
-      .localCheckpoint()
-    val rBlock = jwPrefixFrame(rb, coef, rank)
-      .select(col("id").as("id_b"), col("len").as("__lb"), col("e"))
-      .localCheckpoint()
-    // blocking-frame checkpoints released before returning — see the
-    // pairs variant; the result is materialized first so the returned
-    // plan no longer references them
-    try {
-      jwGuard(lBlock, Some(rBlock), "jaroWinklerJoin", maxCandidates)
-      val cand = lBlock.join(rBlock, Seq("e"))
-        .filter(least(col("__la"), col("__lb")).cast("double") >=
-          lit(beta) * greatest(col("__la"), col("__lb")))
-        .select("id_a", "id_b").distinct()
-      val ta = lb.select(col("id").as("id_a"), col("t").as("__ta"))
-      val tb = rb.select(col("id").as("id_b"), col("t").as("__tb"))
-      cand.join(ta, Seq("id_a")).join(tb, Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          graft.functions.functions.jaro_winkler(col("__ta"), col("__tb"))
-            .as("jw"))
-        .filter(col("jw") >= minSim)
-        .localCheckpoint(true)
-    } finally {
-      org.apache.spark.sql.GraftShims.releaseCheckpoint(lBlock)
-      org.apache.spark.sql.GraftShims.releaseCheckpoint(rBlock)
-    }
   }
 
   // ——— SimHash ———

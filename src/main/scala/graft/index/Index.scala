@@ -210,7 +210,8 @@ object Index {
                 .withColumn(PqCol, graft.coder.PQ.encodeExpr(col("__RES__"), cb))
                 .drop("__RES__", ResBase)
             },
-          () => buildPq(store, codingName, source, column, cb.config, cb.residual))
+          () => buildPq(store, codingName, source, column, cb.config, cb.residual),
+          readable = () => scala.util.Try(cb).isSuccess)
     }
   }
 
@@ -862,13 +863,15 @@ object Index {
       df.withColumn(ResBase, col(column).cast("array<double>"))
     else graft.functions.functions.withUnitNormalized(df, col(column), ResBase)
 
+  /** Whether the PQ codebooks exist and read (else ABSENT, as [[quantExists]]). */
   def pqIndexExists(store: Store, codingName: String, source: String, column: String): Boolean =
-    store.sidecarExists(pqSidecar(store.pqIndexPath(source, column, codingName)))
+    store.sidecarExists(pqSidecar(store.pqIndexPath(source, column, codingName))) &&
+      scala.util.Try(loadPqCodebooks(store, codingName, source, column)).isSuccess
 
   def loadPqCodebooks(store: Store, codingName: String, source: String,
       column: String): graft.coder.PQ.PQCodebooks = {
     val sidecar = pqSidecar(store.pqIndexPath(source, column, codingName))
-    codecOf(store, sidecar)(graft.coder.PQ.fromJsonBytes(store.readSidecar(sidecar)))
+    codecOf(store, sidecar)(graft.coder.PQ.parse(sidecar, store.readSidecar(sidecar)))
   }
 
   /** A tier's codec sidecar, [[Store.memo]]ized; a miss runs the tier's

@@ -827,6 +827,9 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * full-text character distance). */
   private def postEditDistance(r: Req): Reply = {
     val k = r.int("maxDist", 2)
+    // a keyed call refuses a k past the PassJoin bound before any table read
+    if (r.has("corpus")) graft.ext.Dedup.edFamily(k, "editDistanceJoin")
+    else if (r.bool("blocked", true)) graft.ext.Dedup.edFamily(k, "editDistancePairsBlocked")
     fuzzyPairs(r,
       graft.ext.Dedup.editDistanceJoin(_, _, _, _, _, _, k),
       graft.ext.Dedup.editDistancePairsBlocked(_, _, _, k),

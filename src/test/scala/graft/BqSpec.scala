@@ -548,4 +548,56 @@ class BqSpec extends SparkSuite {
     } finally server.stop()
     engine.remove()
   }
+
+  test("a corrupt PQ codec sidecar refuses as state (409), naming the field " +
+      "and buildPq; its tier reads as absent, and sync and repair refuse") {
+    val engine = quantizedRoot("graft-pq-corrupt")
+    val server = new graft.server.GraftServer(engine).start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    def post(body: String): Int = client.send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:${server.boundPort}/api/search"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
+        .header("Content-Type", "application/json").build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+    try {
+      engine.makePqIndex("c", "t", "vec",
+        graft.coder.PQ.PQConfig(numSubspaces = 2, codebookSize = 4, metric = "l2"))
+      val sidecar = s"${engine.store.pqIndexPath("t", "vec", "c")}/_pq_codebooks.json"
+      val whole = engine.store.readSidecar(sidecar)
+      def search(): Unit = engine.searchPq("t", "vec", Array.fill(8)(0.5), coding = "c",
+        probes = 2, candidates = 40, idCol = "id", k = 5).collect()
+      val corruptions = Seq(
+        // truncated mid-write
+        (() => engine.store.writeSidecar(sidecar, whole.take(whole.length / 2)),
+          "unreadable JSON"),
+        // a field missing
+        (() => editSidecar(engine, sidecar)(_.remove("numSubspaces")), "'numSubspaces'"))
+      // over the wire each is a state conflict: no bad request, no server fault
+      val statuses = corruptions.map { case (corrupt, _) =>
+        corrupt()
+        try post("""{"sources":["t"],"column":"vec","target":[0,0,0,0,0,0,0,0],
+            "coding":"c","probes":2,"candidates":40,"idCol":"id","k":5}""")
+        finally engine.store.writeSidecar(sidecar, whole)
+      }
+      assert(statuses == Seq(409, 409), s"statuses $statuses")
+      for ((corrupt, field) <- corruptions) {
+        corrupt()
+        assert(!Index.pqIndexExists(engine.store, "c", "t", "vec"),
+          s"$field: a corrupt sidecar must read as absent")
+        val x = intercept[IllegalStateException](search())
+        for (n <- Seq("malformed PQ sidecar", field, "rebuild with buildPq"))
+          assert(x.getMessage.contains(n), x.getMessage)
+        // no config to encode or rebuild under: both refuse, naming the builder
+        intercept[IllegalStateException](engine.syncPqIndex("c", "t", "vec", "id"))
+        val r = intercept[IllegalStateException](engine.repairIndex("c", "t", "vec", tier = "pq"))
+        assert(r.getMessage.contains("rebuild with buildPq"), r.getMessage)
+        engine.store.writeSidecar(sidecar, whole)
+        assert(Index.pqIndexExists(engine.store, "c", "t", "vec"),
+          s"$field: the restored sidecar must read again")
+        search()
+      }
+    } finally server.stop()
+    engine.remove()
+  }
 }

@@ -64,6 +64,17 @@ class ToolingSpec extends AnyFunSuite {
     assert(found.isEmpty, s"a private swap scheme is back: $found")
   }
 
+  test("the string joins run one filter–verify skeleton: no retired " +
+      "per-family guard helper comes back in src/main") {
+    val main = root.resolve("src/main/scala")
+    val retired = Seq("edGuard", "edGuardBoth", "edPairCounts", "jwGuard")
+    val found = for {
+      f <- sources("src/main/scala")
+      name <- retired if s"\\b$name\\b".r.findFirstIn(Files.readString(f)).isDefined
+    } yield s"${main.relativize(f)}: $name"
+    assert(found.isEmpty, s"a per-family guard is back: $found")
+  }
+
   test("src/test builds a SparkSession only in *Spec.scala fixtures") {
     val outside = buildersIn("src/test/scala").filterNot(_.endsWith("Spec.scala"))
     assert(outside.isEmpty, s"session builders outside spec fixtures: $outside")
