@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, ResidentScan, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.coder.{CoderConfig, Coding}
@@ -1239,18 +1239,19 @@ class Engine(val spark: SparkSession, val root: String) {
     * keep the `tieBreak` columns through `select` so the merge can
     * order on them; the projection is applied after the merge. Over
     * resident sources the merge finishes on the driver
-    * ([[GraftShims.localTopK]]). */
+    * ([[ResidentScan.finish]]). */
   private def unionTopK(sources: Seq[String], k: Int,
       select: Option[Seq[String]], tieBreak: Seq[String])(
       perSource: (String, Option[Seq[String]]) => DataFrame): DataFrame =
     if (sources.size == 1) perSource(sources.head, select)
     else {
       val wide = select.map(cols => (cols ++ tieBreak).distinct)
-      val top = GraftShims.localTopK(sources.map(perSource(_, wide))
+      val top = sources.map(perSource(_, wide))
         .reduce(_ unionByName _)
         .orderBy(col(Search.DistCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
-        .limit(k))
-      select.fold(top)(cols => top.select((cols :+ Search.DistCol).map(col): _*))
+        .limit(k)
+      ResidentScan.finish(
+        select.fold(top)(cols => top.select((cols :+ Search.DistCol).map(col): _*)))
     }
 
   /** Probed IVF+SQ8 search ([[Index.searchSq]]): coarse pass over the

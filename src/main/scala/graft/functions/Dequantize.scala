@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -312,7 +312,8 @@ case class DequantizePerCellDim(child: Expression, cell: Expression,
       out(i) = scalesArr(base + i) * ((bytes(i) & 0xFF) - zpArr(base + i))
       i += 1
     }
-    new GenericArrayData(out)
+    // the floats as they are: a generic array would box each one
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -333,7 +334,8 @@ case class DequantizePerCellDim(child: Expression, cell: Expression,
          |for (int $i = 0; $i < $b.length; $i++) {
          |  $out[$i] = $s[$base + $i] * (($b[$i] & 0xFF) - $z[$base + $i]);
          |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+         |  .fromPrimitiveArray($out);
        """.stripMargin
     })
 

@@ -4,7 +4,7 @@ import scala.collection.immutable.ArraySeq
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, ResidentScan, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -542,8 +542,9 @@ object Index {
 
   /** The leaf of a probed search over `tier` (ivf | sq | bq | pq): the
     * rows of the probed `cells`, from the driver when the tier is
-    * resident ([[residentTier]]), otherwise the parquet relation pruned
-    * to those cells. Like [[pruneToCells]], a full probe also keeps the
+    * resident ([[residentTier]]: a [[ResidentScan]], which no Catalyst
+    * rule walks row by row), otherwise the parquet relation pruned to
+    * those cells. Like [[pruneToCells]], a full probe also keeps the
     * rows with no cell (a null vector). */
   private[graft] def probedLeaf(store: Store, codingName: String,
       source: String, column: String, tier: String, cells: Array[Long],
@@ -552,7 +553,7 @@ object Index {
     t.cells.fold(pruneToCells(t.frame, cells, numCells)) { byCell =>
       val keys = cells.toSeq.map(Option(_)) ++
         (if (cells.length >= numCells) Seq(None) else Nil)
-      GraftShims.localFrame(t.frame, keys.flatMap(byCell.get).flatten)
+      ResidentScan.frame(t.frame, keys.flatMap(byCell.get).flatten.toArray)
     }
   }
 
@@ -574,11 +575,11 @@ object Index {
   /** The shared tail of every single-target search: optional
     * projection (the distance column always kept), then top-k by
     * distance and `tieBreak`, finished on the driver over a resident
-    * leaf ([[GraftShims.localTopK]]). A null distance (a row with no
+    * leaf ([[ResidentScan.finish]]). A null distance (a row with no
     * vector) sorts last. */
   private def topK(scored: DataFrame, k: Int, select: Option[Seq[String]],
       tieBreak: Seq[String]): DataFrame =
-    GraftShims.localTopK(
+    ResidentScan.finish(
       select.fold(scored)(cols => scored.select((cols :+ Search.DistCol).map(col): _*))
         .orderBy(col(Search.DistCol).asc_nulls_last +: tieBreak.map(col(_).asc): _*)
         .limit(k))
@@ -610,9 +611,8 @@ object Index {
 
   /** The one body of a probed IVF search over either leaf of
     * [[probedLeaf]]: filter, exact distance, top-k. Over a resident
-    * leaf the optimizer folds the filter and distance into the local
-    * rows and [[GraftShims.localTopK]] finishes the top-k, so the
-    * frame it returns runs no job. */
+    * leaf [[ResidentScan.finish]] evaluates all three on the driver, so
+    * the frame it returns holds the k rows and runs no job. */
   private[graft] def probedQuery(leaf: DataFrame, column: String,
       target: graft.api.TargetVector, k: Int, metric: String,
       filter: Option[Column], select: Option[Seq[String]],
@@ -664,11 +664,13 @@ object Index {
     * on qualifying rows only; score the (id, cell, codes) projection and
     * keep the best `candidates` ids (TakeOrdered, no full sort; a null
     * score sorts last), ties broken on `coarseTies`; join those ids back
-    * against the same probed rows ([[GraftShims.joinOnIds]]: a broadcast
-    * join over parquet, an id filter over resident rows); score them
-    * exactly and take the top-k. Over a resident leaf both top-ks finish
-    * on the driver ([[GraftShims.localTopK]]) and the frame runs no job.
-    * `idCol` must be unique per row. */
+    * against the same probed rows (a broadcast join over parquet; over
+    * resident rows [[ResidentScan.survivors]], the probed rows with a
+    * surviving id); score them exactly and take the top-k. Over a
+    * resident leaf both top-ks finish on the driver
+    * ([[ResidentScan.finish]]) and the frame runs no job. `idCol` must be
+    * unique per row, so a probed row with a surviving id passed the
+    * filter. */
   private def twoPass(tierOf: TierOf, coarseTies: Seq[String],
       store: Store, codingName: String, source: String, column: String,
       target: graft.api.TargetVector, k: Int, probes: Option[Int],
@@ -684,13 +686,13 @@ object Index {
     val probed = probedLeaf(store, codingName, source, column, tier.name,
       cells, coding.numCells)
     val pruned = filter.fold(probed)(probed.filter)
-    val coarseIds = GraftShims.localTopK(pruned
+    val coarse = ResidentScan.finish(pruned
       .select((Seq(idCol, CodeCol) ++ tier.codes ++ coarseTies).distinct.map(col): _*)
       .withColumn(CoarseCol, tier.score(target, cells))
       .orderBy(col(CoarseCol).asc_nulls_last +: coarseTies.map(col(_).asc): _*)
       .limit(candidates))
-      .select(idCol)
-    val reranked = GraftShims.joinOnIds(pruned, coarseIds, idCol)
+    val reranked = ResidentScan.survivors(probed, coarse, idCol)
+      .getOrElse(pruned.join(broadcast(coarse.select(idCol)), Seq(idCol)))
       .withColumn(Search.DistCol,
         vector_distance(col(column), target.lit, tier.metric))
     topK(tier.codes.fold(reranked)(reranked.drop), k, select, tieBreak)

@@ -269,7 +269,8 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * nested arrays/structs/timestamps), run on the driver
     * ([[GraftShims.jsonRows]]: the bytes `toJSON` gives, without its
     * job, so a local frame renders with none); bounded by
-    * [[maxResponseRows]].
+    * [[maxResponseRows]] (a finished search within it renders from
+    * its rows, with no further plan).
     * `extraFields` is a pre-rendered `"k":v,` run (trailing comma, or
     * empty) placed before `rows` — the advised-serving marker's hook.
     * Frees any localCheckpoint backing the frame (curate/dedup/graph
@@ -281,7 +282,7 @@ class GraftServer(engine: Engine, host: String = "127.0.0.1", port: Int = 0) {
     * checkpointed frames across requests (every handler builds its
     * frame from stored tables), so the blocks are provably unread. */
   private def rowsJson(df: DataFrame, extraFields: String): String =
-    try GraftShims.jsonRows(df.limit(maxResponseRows))
+    try GraftShims.jsonRows(df, Some(maxResponseRows))
       .mkString(s"""{$extraFields"rows":[""", ",", "]}")
     finally GraftShims.releaseCheckpoint(df)
 

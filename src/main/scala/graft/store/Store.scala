@@ -3,7 +3,7 @@ package graft.store
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, ResidentScan, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
@@ -37,6 +37,10 @@ import graft.coder.{Coder, CoderConfig, Coding}
 class Store(val spark: SparkSession, val root: String) {
   private[graft] def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  // a search over a resident tier's rows that is not finished on the
+  // driver still plans: its leaf is a local table scan
+  ResidentScan.register(spark)
 
   /** Every table/coding/column/model name becomes a filesystem path
     * segment — reject anything outside `[A-Za-z0-9._-]` (and `.`/`..`

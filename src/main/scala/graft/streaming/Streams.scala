@@ -264,6 +264,8 @@ object Streams {
       s"editDistGateForEachBatch: stream idCol '$idCol' collides with " +
         "the fixed output columns (ref_id, dist) or the join's internal " +
         "id_b; rename it apart first")
+    // a maxDist PassJoin builds no keys for refuses before the corpus pass
+    graft.ext.Dedup.edFamily(maxDist, "editDistanceSegments")
     // The corpus pass runs ONCE, at gate construction: base text,
     // segment and probe frames are materialized (localCheckpoint) so a
     // long-running query joins each micro-batch against pinned frames

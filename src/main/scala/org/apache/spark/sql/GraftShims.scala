@@ -27,9 +27,16 @@ object GraftShims {
   /** The frame's rows as JSON objects, byte for byte what `toJSON`
     * gives: Spark's own `JacksonGenerator` under the `JSONOptions`
     * `toJSON` uses, run on the driver over [[collectInternal]]'s rows,
-    * so rendering a local frame runs no job. */
-  def jsonRows(df: Dataset[_]): Array[String] = {
-    val rows = collectInternal(df)
+    * so rendering a local frame runs no job; at most `limit` of them.
+    * A finished frame (a bare `LocalRelation`, what a resident search
+    * returns) within the limit is rendered from its rows as they are,
+    * with no plan built. */
+  def jsonRows(df: Dataset[_], limit: Option[Int] = None): Array[String] = {
+    val rows = df.queryExecution.analyzed match {
+      case r: catalyst.plans.logical.LocalRelation
+          if !r.isStreaming && limit.forall(r.data.length <= _) => r.data.toArray
+      case _ => collectInternal(limit.fold[Dataset[_]](df)(df.limit))
+    }
     val out = new java.io.CharArrayWriter()
     val gen = new catalyst.json.JacksonGenerator(df.schema, out,
       new catalyst.json.JSONOptions(Map.empty[String, String],
@@ -42,92 +49,6 @@ object GraftShims {
       json
     } finally gen.close()
   }
-
-  /** A frame over `rows` (in `like`'s row layout) with `like`'s
-    * schema under fresh attributes: a `LocalRelation`, which the
-    * optimizer folds filters and projections into on the driver. */
-  def localFrame(like: Dataset[_], rows: Seq[catalyst.InternalRow]): DataFrame =
-    ofRows(like, catalyst.plans.logical.LocalRelation(
-      catalyst.types.DataTypeUtils.toAttributes(like.schema), rows))
-
-  private def ofRows(like: Dataset[_],
-      plan: catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(
-      classic.ClassicConversions.castToImpl(like.sparkSession), plan)
-
-  /** A top-k over a [[localFrame]] finished on the driver. The
-    * optimizer folds filters and projections into a `LocalRelation`
-    * but not a sort: `GlobalLimit(LocalLimit(Sort(LocalRelation)))`
-    * plans as `TakeOrderedAndProjectExec`, one job. When `df`'s
-    * optimized plan is that shape — the limit may be gone (the rows
-    * fit in it), projections may sit above or below it, and the sort
-    * may be over a `Union` of local relations (a multi-source merge) —
-    * its rows are sorted here with the `LazilyGeneratedOrdering` over
-    * the same `SortOrder`s `TakeOrderedAndProjectExec` uses (a stable
-    * sort), and the result is a frame over the first k. Any other shape
-    * is returned as is. */
-  def localTopK(df: DataFrame): DataFrame = {
-    import catalyst.expressions.IntegerLiteral
-    import catalyst.plans.logical._
-    def rows(p: LogicalPlan): Option[Seq[catalyst.InternalRow]] = p match {
-      case LocalRelation(_, data, false, _) => Some(data)
-      case Union(children, _, _) =>
-        val each = children.map(rows)
-        if (each.forall(_.isDefined)) Some(each.flatten.flatten) else None
-      case _ => None
-    }
-    def sorted(s: Sort, limit: Option[Int]): Option[LogicalPlan] =
-      if (!s.global) None
-      else rows(s.child).map { data =>
-        val all = data.toArray.sorted(
-          new catalyst.expressions.codegen.LazilyGeneratedOrdering(s.order, s.child.output))
-        LocalRelation(s.child.output, limit.fold(all)(all.take).toSeq)
-      }
-    // a projection commutes with the limit (it drops the sort keys the
-    // caller did not select)
-    def topK(p: LogicalPlan, limit: Option[Int]): Option[LogicalPlan] = p match {
-      case GlobalLimit(IntegerLiteral(k), LocalLimit(IntegerLiteral(l), child))
-          if k == l && limit.isEmpty => topK(child, Some(k))
-      case s: Sort => sorted(s, limit)
-      case Project(list, child) => topK(child, limit).map(Project(list, _))
-      case _ => None
-    }
-    if (!isLocal(df)) df
-    else topK(df.queryExecution.optimizedPlan, None).fold(df)(ofRows(df, _))
-  }
-
-  /** `df.join(broadcast(ids), Seq(idCol))`, where `ids` has the one
-    * column `idCol` and `idCol` is unique in `df`. Over local frames
-    * the ids are collected ([[collectInternal]]: no job) and the result
-    * is a local relation of `df`'s rows whose `idCol` is among them,
-    * `idCol` moved first — the inner join's rows and columns, since a
-    * unique key matches at most once and a null key never. Later plans
-    * over it then carry only the survivors: every analyzer and
-    * optimizer rule walks a `LocalRelation`'s rows. */
-  def joinOnIds(df: DataFrame, ids: DataFrame, idCol: String): DataFrame =
-    if (!isLocal(df) || !isLocal(ids)) df.join(functions.broadcast(ids), Seq(idCol))
-    else {
-      import catalyst.expressions.{BoundReference, InSet}
-      import catalyst.plans.logical.{LocalRelation, Project}
-      val out = df.queryExecution.analyzed.output
-      val resolver = df.sparkSession.sessionState.conf.resolver
-      val (key, rest) = out.partition(a => resolver(a.name, idCol))
-      val inIds = InSet(
-        BoundReference(out.indexOf(key.head), key.head.dataType, key.head.nullable),
-        collectInternal(ids).map(_.get(0, key.head.dataType)).toSet)
-      // a bare leaf's rows need no optimizer pass to read
-      val rows = df.queryExecution.analyzed match {
-        case LocalRelation(_, data, _, _) => data
-        case _ => collectInternal(df).toSeq
-      }
-      ofRows(df, Project(key ++ rest,
-        LocalRelation(out, rows.filter(r => inIds.eval(r) == true))))
-    }
-
-  /** Whether every leaf of `df` is a `LocalRelation`. */
-  private def isLocal(df: Dataset[_]): Boolean =
-    df.queryExecution.analyzed.collectLeaves()
-      .forall(_.isInstanceOf[catalyst.plans.logical.LocalRelation])
 
   /** Release the executor-storage blocks behind a `localCheckpoint`ed
     * (or `checkpoint`ed) DataFrame.

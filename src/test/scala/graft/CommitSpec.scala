@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -200,12 +201,40 @@ class CommitSpec extends SparkSuite {
 
   private def engineAt(dir: Path) = new Engine(spark, s"${FaultFs.Scheme}:$dir")
 
-  /** Waits for tasks of a failed job still running: a straggler must not
-    * write once the fault is disarmed. */
+  /** Task attempts started and not yet ended, as the listener bus
+    * delivered their events. */
+  private val running = java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()
+  private val tasks = new SparkListener {
+    override def onTaskStart(e: SparkListenerTaskStart): Unit = running.add(e.taskInfo.taskId)
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = running.remove(e.taskInfo.taskId)
+  }
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    spark.sparkContext.addSparkListener(tasks)
+  }
+
+  override def afterAll(): Unit =
+    try spark.sparkContext.removeSparkListener(tasks) finally super.afterAll()
+
+  /** Waits until every task attempt started so far has ended: a
+    * straggler of a failed job must not write once the fault is
+    * disarmed, nor remove its attempt directory while the crash state is
+    * copied. The scheduler posts a task's start before the failure of
+    * its job reaches the caller, and its end once the task (its abort
+    * included) is over; draining the listener bus after each check makes
+    * [[running]] hold exactly the tasks not yet over. */
   private def drain(): Unit = {
-    val deadline = System.currentTimeMillis() + 30000
-    while (spark.sparkContext.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(20)
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    def delivered(): Unit = bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+    delivered()
+    while (!running.isEmpty) {
+      assert(System.nanoTime() < deadline, s"tasks that never ended: $running")
+      Thread.sleep(10)
+      delivered()
+    }
   }
 
   test("a quantized tier's sync sweeps first: after a rebuild cut short " +

@@ -4,9 +4,8 @@ import java.nio.file.Files
 
 import scala.util.Try
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, ResidentScan, Row}
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions.col
 
 import graft.api.{Engine, Search}
@@ -208,7 +207,7 @@ class StoreMemoSpec extends SparkSuite {
     def resident(coding: String, column: String, cells: Array[Long]) = {
       val leaf = Index.probedLeaf(e.store, coding, "t", column, "ivf", cells, 16)
       assert(leaf.queryExecution.analyzed.collectLeaves()
-        .forall(_.isInstanceOf[LocalRelation]), s"$coding: the tier is resident")
+        .forall(_.isInstanceOf[ResidentScan]), s"$coding: the tier is resident")
       leaf
     }
     def parquet(coding: String, column: String, cells: Array[Long]) =
@@ -336,7 +335,7 @@ class StoreMemoSpec extends SparkSuite {
     cases.foreach(c => run(c._2())) // reads each tier once
     for ((coding, column) <- Seq("cf" -> "vf", "cd" -> "vd"); tier <- Seq("ivf", "sq", "bq", "pq"))
       assert(Index.probedLeaf(e.store, coding, "t", column, tier, Array(0L), 16)
-        .queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]),
+        .queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[ResidentScan]),
         s"$coding $tier is resident")
     // both passes over resident tiers finish on the driver
     val resident = cases.map { case (what, search, _) =>

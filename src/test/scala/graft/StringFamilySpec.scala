@@ -222,4 +222,19 @@ class PassJoinBoundSpec extends SparkSuite {
     } finally server.stop()
     e.remove()
   }
+
+  test("the fuzzy stream gate refuses a maxDist past the bound before its corpus pass") {
+    val k = Dedup.EdMaxKeyedDist + 1
+    val corpus = Seq((1L, "abc"), (2L, "abd"), (3L, "xyz")).toDF("id", "t")
+    var refusal: IllegalArgumentException = null
+    assert(jobsDuring {
+      refusal = intercept[IllegalArgumentException](
+        graft.streaming.Streams.editDistGateForEachBatch(corpus, "id", "t", "doc",
+          "text", maxDist = k, sink = _ => ()))
+    } == 0, "the corpus was read before the refusal")
+    assert(refusal.getMessage == s"requirement failed: editDistanceSegments: maxDist=$k " +
+      s"is above ${Dedup.EdMaxKeyedDist}, the largest PassJoin builds keys for " +
+      "((k+1)²(2k+1) probe variants a string). Use editDistancePairsExact, the " +
+      "guarded all-pairs baseline.", refusal.getMessage)
+  }
 }

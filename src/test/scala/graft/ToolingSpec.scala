@@ -75,6 +75,25 @@ class ToolingSpec extends AnyFunSuite {
     assert(found.isEmpty, s"a per-family guard is back: $found")
   }
 
+  test("a resident search finishes in one evaluator: the retired local " +
+      "helpers stay gone and only its file builds a LocalRelation") {
+    val main = root.resolve("src/main/scala")
+    val retired = Seq("localFrame", "localTopK", "joinOnIds")
+    val found = for {
+      f <- sources("src/main/scala")
+      name <- retired if s"\\b$name\\b".r.findFirstIn(Files.readString(f)).isDefined
+    } yield s"${main.relativize(f)}: $name"
+    assert(found.isEmpty, s"a retired local-frame helper is back: $found")
+    // a construction or a companion factory call; a type or extractor
+    // pattern (`case r: LocalRelation`, `case LocalRelation(...)`) reads one
+    val builds = """(?<!case )\bLocalRelation\s*[.(]""".r
+    val building = sources("src/main/scala")
+      .filter(f => builds.findFirstIn(Files.readString(f)).isDefined)
+      .map(f => main.relativize(f).toString)
+    assert(building == Seq("org/apache/spark/sql/ResidentScan.scala"),
+      s"a LocalRelation built outside the resident evaluator: $building")
+  }
+
   test("src/test builds a SparkSession only in *Spec.scala fixtures") {
     val outside = buildersIn("src/test/scala").filterNot(_.endsWith("Spec.scala"))
     assert(outside.isEmpty, s"session builders outside spec fixtures: $outside")
